@@ -561,6 +561,7 @@ def lsh_multiprobe_topk(
             tbl, ", ".join(f"'{b}'" for b in buckets)
         )
         for tbl, buckets in enumerate(per_table)
+        if buckets  # `bucket IN ()` does not parse
     )
     candidates = idx.filter(cond)
     if exclude_ids:

@@ -1,31 +1,43 @@
-"""Byte-pair-encoding merge training, relational (round 9).
+"""Byte-pair-encoding merge training.
 
 The inner loop of BPE tokenizer training (Sennrich et al. 2016) is
 "count adjacent symbol pairs over the weighted vocabulary, merge the
-most frequent, repeat". Libraries do this sequentially over a word
-list; at corpus scale the honest distributed spelling is relational —
-the symbol state is a (word, pos, sym) table, pair counting is one
-map-combined aggregate, and applying a merge is a window pass. This
-module unrolls the first BPE_STEPS merges, each step:
+most frequent, repeat". The design splits it by what scales:
 
-1. **pair counts**: lead(sym) over each word, SUM(word_count) per
-   (sym, next) — one keyed aggregate over the VOCABULARY relation
-   (distinct words × their counts), corpus-size independent after the
-   initial word count;
-2. **winner**: max count, ties (left, right) lexicographic — a 1-row
-   relation CROSS JOINed (broadcast) into the apply step, so the loop
-   is fully declarative (no driver fetch feeds the next stage);
-3. **greedy leftmost application**, the subtle part: merging pair
-   (x, y) with x ≠ y can never overlap itself, but x == y (a run of
-   identical symbols) must merge at even offsets within each maximal
-   run — BPE's leftmost-first rule. Runs are found with the
-   pos − running-count-of-x constant-group idiom, offsets checked
-   even, consumed rows (the y of a merged pair) dropped, positions
-   renumbered dense for the next round.
+1. **Word count, distributed.** The corpus is split on spaces and
+   counted per word: one map-combined aggregate, the only corpus-sized
+   work. Each word is then split into characters with the same
+   ``F.split(word, "")`` as before.
+2. **Merges, one executor task.** The vocabulary (distinct words ×
+   counts, heavy-tailed: millions of rows at 100 TB, not the corpus)
+   is coalesced to a single ``mapInPandas`` task that runs all
+   BPE_STEPS merges in :func:`bpe_train`, a pure-Python loop. Its size
+   is set by the vocabulary, independent of corpus size, and it costs
+   O(BPE_STEPS × vocabulary symbols): per step one pair count and one
+   greedy-leftmost rewrite of every word.
 
-Exactness: pair counts are integer word-count sums; winner selection
-is a deterministic total order; application is positional logic — the
-unrolled DuckDB oracle replays every step value-for-value.
+Why a task and not a relational unrolling or a driver loop: each merge
+depends on the previous winner, so a relational spelling needs one
+eager job per winner and per symbol state (six jobs, each a window
+pass, for three steps), all sequenced by the driver. Running the loop
+on the driver instead would ship the whole vocabulary through the
+collect edge and back. One task keeps the data on the executor and
+leaves the query a single lazy plan with no jobs at build time. The
+trade is one more Python stage in the plan (``exec.python_nodes`` on
+the pipelines benchmark goes from 1 to 2), which ROADMAP Direction 4
+otherwise pulls down.
+
+Merge rules: the winner is the pair with the highest word-count-
+weighted frequency, ties broken by left then right symbol (byte order,
+the same in Spark, Python and DuckDB). Application is greedy leftmost:
+a pair (x, y) with x ≠ y never overlaps itself, while in a run of one
+symbol x == y merges fall at even offsets of the run. Once no word has
+a pair left, training stops and only the steps that had a winner are
+reported.
+
+Exactness: pair counts are integer sums and the winner order is total,
+so the DuckDB oracle below, an unrolled relational spelling of the same
+steps, replays every step value-for-value as an independent check.
 
 Reference grounding: tokenizer training is the canonical corpus job
 of the LLM-data pipeline this engine targets (brief §"training-data
@@ -34,14 +46,16 @@ pipeline"); the reference has no corpus operators at all.
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..registry import register
 from .relational import t
 
-#: Unrolled merge steps. Three steps exercise every code path (the
+#: Merge steps trained. Three steps exercise every code path (the
 #: x == y run logic fires whenever a doubled character wins).
 BPE_STEPS = 3
 
@@ -115,111 +129,96 @@ def _bpe_oracle() -> str:
     """
 
 
-# Memoized fixed expression trees (r17): every column in the BPE merge
-# passes derives from fixed names, so the trees build once per process
-# instead of per step per DataFrame build (same construction code,
-# cached — plans and results identical). WindowSpecs are immutable and
-# reusable exactly like Columns.
-from functools import lru_cache as _lru_cache
+def bpe_train(words, steps: int = BPE_STEPS, final_state: bool = True):
+    """Greedy BPE training over ``words``, a list of (symbols, count).
+
+    Returns ``(merges, states)``: ``merges`` holds one (left, right,
+    pair_count) per step that had a winner; ``states`` holds each
+    word's symbols after the last merge, in input order. When training
+    runs out of pairs before ``steps`` merges, ``states`` is empty, as
+    in the relational spelling the oracles use (a cross join with an
+    empty winner leaves no symbol rows). With ``final_state=False`` the
+    last merge is not applied and ``states`` is None: only the merges
+    are wanted, and the last rewrite feeds nothing.
+
+    References no module globals: Spark ships it to executor workers by
+    value (see :func:`bpe_trainer`)."""
+    states = [list(syms) for syms, _ in words]
+    counts = [int(c) for _, c in words]
+    merges = []
+    for k in range(steps):
+        pairs = {}
+        for syms, c in zip(states, counts):
+            for pair in zip(syms, syms[1:]):
+                pairs[pair] = pairs.get(pair, 0) + c
+        if not pairs:
+            return merges, [] if final_state else None
+        (x, y), cnt = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((x, y, cnt))
+        if k == steps - 1 and not final_state:
+            return merges, None
+        xy = x + y
+        for i, syms in enumerate(states):
+            out, j, n = [], 0, len(syms)
+            while j < n:
+                if j + 1 < n and syms[j] == x and syms[j + 1] == y:
+                    out.append(xy)
+                    j += 2
+                else:
+                    out.append(syms[j])
+                    j += 1
+            states[i] = out
+    return merges, states
 
 
-@_lru_cache(maxsize=None)
-def _w_word():
-    return Window.partitionBy("word").orderBy("pos")
+MERGES_SCHEMA = "step long, left_sym string, right_sym string, pair_count long"
+WORDS_SCHEMA = "word string, syms array<string>"
 
 
-@_lru_cache(maxsize=None)
-def _winner_lead_cols():
-    return ("sym", "wcount", F.lead("sym").over(_w_word()).alias("nxt"))
+def bpe_trainer(vocab: DataFrame, words: bool = False) -> DataFrame:
+    """Run :func:`bpe_train` over a ``(word, wcount)`` vocabulary in ONE
+    executor task. Returns the merges (MERGES_SCHEMA, in step order) or,
+    with ``words=True``, each word's final symbols (WORDS_SCHEMA)."""
+    # workers may lack this package on their path: ship bpe_train by value
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
+    def train(batches):
+        import pandas as pd
 
-@_lru_cache(maxsize=None)
-def _winner_out_cols():
-    return (F.col("sym").alias("x"), F.col("nxt").alias("y"), F.col("cnt"))
+        names, rows = [], []
+        for b in batches:
+            names.extend(b["word"])
+            rows.extend(zip(b["syms"], b["wcount"]))
+        merges, states = bpe_train(rows, final_state=words)
+        if words:
+            out = pd.DataFrame({"word": names if states else [], "syms": states})
+        else:
+            out = pd.DataFrame(
+                [(k, x, y, c) for k, (x, y, c) in enumerate(merges, 1)],
+                columns=["step", "left_sym", "right_sym", "pair_count"],
+            )
+        if len(out):  # an empty frame's dtypes do not convert to the schema
+            yield out
 
-
-def bpe_pair_winner(s: DataFrame) -> DataFrame:
-    """The 1-row winning adjacent pair (x, y, cnt) of one BPE merge
-    round over a (word, wcount, pos, sym) symbol state."""
-    pairs = (
-        s.select(*_winner_lead_cols())
-        .filter(F.col("nxt").isNotNull())
-        .groupBy("sym", "nxt")
-        .agg(F.sum("wcount").cast("long").alias("cnt"))
-    )
     return (
-        pairs.orderBy(F.desc("cnt"), "sym", "nxt")
-        .limit(1)
-        .select(*_winner_out_cols())
+        vocab.select("word", "wcount", F.split("word", "").alias("syms"))
+        .coalesce(1)
+        .mapInPandas(train, WORDS_SCHEMA if words else MERGES_SCHEMA)
     )
 
 
-def bpe_merge_step(s: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """One BPE merge over a (word, wcount, pos, sym) symbol state:
-    returns (winner, next_state). Fully declarative — the 1-row winner
-    broadcasts into the apply pass, so chaining steps builds one plan.
-    (r16: split into :func:`bpe_pair_winner` + :func:`bpe_merge_step_apply`
-    so callers that materialize the winner can avoid recomputing its
-    window+aggregate subtree in each consumer.)"""
-    top = bpe_pair_winner(s)
-    return top, bpe_merge_step_apply(s, top)
-
-
-@_lru_cache(maxsize=None)
-def _apply_m_cols():
-    w_word = _w_word()
-    return (
-        "word",
-        "wcount",
-        "pos",
-        "sym",
-        "x",
-        "y",
-        F.lead("sym").over(w_word).alias("nxt"),
-        F.when(
-            F.col("sym") == F.col("x"),
-            F.col("pos")
-            - F.sum((F.col("sym") == F.col("x")).cast("int")).over(w_word),
-        ).alias("grp"),
+def corpus_words(docs: DataFrame, *keep: str) -> DataFrame:
+    """One row per non-empty space-separated word of ``docs.text``,
+    with the ``keep`` columns alongside."""
+    return docs.select(*keep, F.explode(F.split("text", " ")).alias("word")).filter(
+        F.col("word") != ""
     )
 
 
-@_lru_cache(maxsize=None)
-def _apply_merged_col():
-    w_run = Window.partitionBy("word", "grp")
-    return F.coalesce(
-        (F.col("sym") == F.col("x")) & (F.col("nxt") == F.col("y")),
-        F.lit(False),
-    ) & (
-        (F.col("x") != F.col("y"))
-        | ((F.col("pos") - F.min("pos").over(w_run)) % 2 == 0)
-    )
-
-
-@_lru_cache(maxsize=None)
-def _apply_consumed_col():
-    return F.coalesce(F.lag("merged").over(_w_word()), F.lit(False))
-
-
-@_lru_cache(maxsize=None)
-def _apply_next_state_cols():
-    return (
-        "word",
-        "wcount",
-        F.row_number().over(_w_word()).alias("pos"),
-        F.when(F.col("merged"), F.concat(F.col("sym"), F.col("nxt")))
-        .otherwise(F.col("sym"))
-        .alias("sym"),
-    )
-
-
-def bpe_merge_step_apply(s: DataFrame, top: DataFrame) -> DataFrame:
-    """Apply a (possibly materialized) 1-row winner to the symbol
-    state — the greedy-leftmost merge pass of :func:`bpe_merge_step`."""
-    m = s.crossJoin(F.broadcast(top)).select(*_apply_m_cols())
-    m2 = m.withColumn("merged", _apply_merged_col())
-    m3 = m2.withColumn("consumed", _apply_consumed_col())
-    return m3.filter(~F.col("consumed")).select(*_apply_next_state_cols())
+def vocabulary(words: DataFrame) -> DataFrame:
+    """``(word, wcount)``: the corpus word count, a map-combined aggregate
+    and the only corpus-sized step of training."""
+    return words.groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("wcount"))
 
 
 @register(
@@ -228,59 +227,15 @@ def bpe_merge_step_apply(s: DataFrame, top: DataFrame) -> DataFrame:
     survey_ids=("X4", "W2", "A1", "O4"),
 )
 def x4_bpe_merge_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The first BPE_STEPS merges of BPE tokenizer training over the corpus
-    vocabulary — the canonical tokenizer-training job, spelled
-    relationally (see module docstring): per step, the winning
-    adjacent symbol pair and its weighted frequency.
+    """The first BPE_STEPS merges of BPE tokenizer training over the
+    corpus vocabulary: per step, the winning adjacent symbol pair and
+    its weighted frequency, in step order.
 
-    Scale: after the one corpus-keyed word count, EVERYTHING operates
-    on the vocabulary relation (distinct words × counts — at 100 TB
-    this is the classic heavy-tail vocab, millions of rows, not the
-    corpus); each step is one word-keyed window pass + one
-    map-combined pair aggregate + a 1-row broadcast. The greedy
-    leftmost rule — including the x == y run-parity case BPE
-    implementations get wrong first — is pinned by closed-form pytest
-    anchors and the unrolled oracle."""
+    Scale: one corpus-keyed word count, then one task over the
+    vocabulary (see module docstring); the build runs no Spark job.
+    The single task emits the steps in order, so no sort follows it.
+    The greedy leftmost rule, including the x == y run-parity case BPE
+    implementations get wrong first, is pinned by closed-form pytest
+    anchors and by the unrolled oracle."""
     docs = t(spark, sf_dir, "documents")
-    vocab = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("wcount"))
-    )
-    state = vocab.select(
-        "word",
-        "wcount",
-        F.posexplode(F.split("word", "")).alias("pos", "sym"),
-    )
-    tops = []
-    for k in range(1, BPE_STEPS + 1):
-        # r16 (guide §2.4): materialize the 1-row winner BEFORE the
-        # apply pass. The winner subtree (a window pass + pair
-        # aggregate over the whole symbol state) feeds BOTH the apply
-        # pass's broadcast and the final per-step output row; the r9
-        # spelling recomputed it in each consumer, costing one extra
-        # full window+aggregate pass per step.
-        top = bpe_pair_winner(state).localCheckpoint(eager=True)
-        if k < BPE_STEPS:
-            # r17: the state after the LAST winner is never consumed —
-            # only `tops` feeds the output — so the final apply pass
-            # (a full vocabulary window job) is skipped outright.
-            # Measured in-process A/B: min 1.93 -> 1.52 s, identical
-            # rows. Lazy checkpoints measured no better (1.50).
-            state = bpe_merge_step_apply(state, top)
-            # localCheckpoint: cut the per-step plan growth (the
-            # iterative operator discipline) — state is vocabulary-sized
-            state = state.localCheckpoint(eager=True)
-        tops.append(
-            top.select(
-                F.lit(k).cast("long").alias("step"),
-                F.col("x").alias("left_sym"),
-                F.col("y").alias("right_sym"),
-                F.col("cnt").alias("pair_count"),
-            )
-        )
-    out = tops[0]
-    for tdf in tops[1:]:
-        out = out.unionByName(tdf)
-    return out.orderBy("step")
+    return bpe_trainer(vocabulary(corpus_words(docs)))

@@ -118,6 +118,18 @@ def _hits_oracle() -> str:
     """
 
 
+def _hits_normalize(raw: DataFrame, key: str) -> DataFrame:
+    """Floor-normalize a materialized ``(key, raw)`` score vector to an
+    L1 total of HITS_SCALE, with the total fetched to the driver and
+    inlined as a literal. An empty graph has a NULL total and no rows
+    to scale: its scores stay typed as long instead of becoming
+    ``div None`` text that cannot parse."""
+    tot = raw.agg(F.sum("raw").cast("long")).first()[0]
+    if tot is None:
+        return raw.select(key, F.lit(None).cast("long").alias("score"))
+    return raw.select(key, F.expr(f"raw * {HITS_SCALE} div {tot}").alias("score"))
+
+
 @register(
     "g_hits_bipartite",
     oracle=_hits_oracle(),
@@ -178,16 +190,14 @@ def g_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("score").cast("long").alias("raw"))
             .localCheckpoint(eager=True)
         )
-        a_tot = ar.agg(F.sum("raw").cast("long")).first()[0]
-        a = ar.select("p", F.expr(f"raw * {HITS_SCALE} div {a_tot}").alias("score"))
+        a = _hits_normalize(ar, "p")
         hr = (
             bip.join(a, "p")
             .groupBy("c")
             .agg(F.sum("score").cast("long").alias("raw"))
             .localCheckpoint(eager=True)
         )
-        h_tot = hr.agg(F.sum("raw").cast("long")).first()[0]
-        h = hr.select("c", F.expr(f"raw * {HITS_SCALE} div {h_tot}").alias("score"))
+        h = _hits_normalize(hr, "c")
     top_a = (
         a.orderBy(F.desc("score"), "p")
         .limit(10)

@@ -24,6 +24,7 @@ without the half-way ambiguity ROUND has.
 from __future__ import annotations
 
 import hashlib
+import math
 from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -118,9 +119,19 @@ def lit_double_array(values) -> Column:
     return _lit_double_array(tuple(float(x) for x in values))
 
 
+def _double_sql(v: float) -> str:
+    """SQL text for one double: ``<repr>D`` when finite; NaN and the
+    infinities have no literal form (``nanD`` does not parse), so they
+    are spelled as casts from their string names."""
+    if math.isfinite(v):
+        return f"{v!r}D"
+    name = "NaN" if v != v else ("-Infinity" if v < 0 else "Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
 @lru_cache(maxsize=512)
 def _lit_double_array(values: tuple) -> Column:
-    return F.expr("array(" + ", ".join(f"{v!r}D" for v in values) + ")")
+    return F.expr("array(" + ", ".join(map(_double_sql, values)) + ")")
 
 
 @lru_cache(maxsize=512)

@@ -19,7 +19,7 @@ embedding QA, retrieval evaluation, tokenizer application.
   (per-doc query-term hit count): the retrieval-eval closing piece
   over the existing BM25 scorer.
 - BPE tokenizer APPLICATION: the corpus encoded with the merges the
-  relational trainer (bpe.py) learned — per-source encoded token
+  trainer (bpe.py) learned — per-source encoded token
   counts and compression, the serving half of tokenizer training.
 """
 
@@ -31,7 +31,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from .analytics_ext import global_row_number
-from .bpe import BPE_STEPS, _bpe_step_sql, bpe_merge_step
+from .bpe import BPE_STEPS, _bpe_step_sql, bpe_trainer, corpus_words, vocabulary
 from .relational import t
 from .retrieval import BM25_B, BM25_K1, BM25_QUERY_TERMS
 from .textops import STOPWORDS_EN
@@ -507,7 +507,7 @@ def _bpe_encode_oracle() -> str:
 )
 def x4_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer APPLICATION: encode the corpus with the merges the
-    relational BPE trainer learned (``x4_bpe_merge_steps`` — same
+    BPE trainer learned (``x4_bpe_merge_steps`` — same
     vocabulary, same 3 merge rounds) and report per-source encoded
     token counts and compression (chars per BPE token, e6) — the
     serving half of tokenizer training, and the number a data-mixture
@@ -515,31 +515,17 @@ def x4_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer, not whitespace estimates).
 
     Scale: merges train on the VOCABULARY relation (distinct words —
-    heavy-tailed, corpus-size independent); encoding never touches
-    character state again — each corpus word occurrence joins the
-    |vocab|-keyed ``(word, n_syms)`` relation, so the corpus-sized
-    path is one join + one map-combined rollup. The word-keyed join is
-    the standard vocabulary-broadcast shape at scale."""
-    docs = t(spark, sf_dir, "documents")
-    docword = docs.select(
-        "source", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
-    vocab = docword.groupBy("word").agg(
-        F.count(F.lit(1)).cast("long").alias("wcount")
-    )
-    state = vocab.select(
-        "word",
-        "wcount",
-        F.posexplode(F.split("word", "")).alias("pos", "sym"),
-    )
-    for _ in range(BPE_STEPS):
-        _top, state = bpe_merge_step(state)
-        state = state.localCheckpoint(eager=True)
-    enc = state.groupBy("word").agg(
-        F.count(F.lit(1)).cast("long").alias("n_syms")
+    heavy-tailed, corpus-size independent) in the one-task trainer of
+    ``bpe.py``, which also returns each word's final symbols; encoding
+    never touches character state again — each corpus word occurrence
+    joins the |vocab|-keyed ``(word, n_syms)`` relation, so the
+    corpus-sized path is one broadcast join + one map-combined rollup."""
+    docword = corpus_words(t(spark, sf_dir, "documents"), "source")
+    enc = bpe_trainer(vocabulary(docword), words=True).select(
+        "word", F.size("syms").cast("long").alias("n_syms")
     )
     return (
-        docword.join(enc, "word")
+        docword.join(F.broadcast(enc), "word")
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),

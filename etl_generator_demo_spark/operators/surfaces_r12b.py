@@ -842,8 +842,7 @@ def x5_keyframe_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     the earliest frame.
 
     Plan: one scan -> per-clip lag + running-sum windows (bounded:
-    CLIP_FRAMES rows per partition, the `x4_bpe_merge_steps` per-word
-    window argument) -> segment rollup -> argmax via a max-norm
+    CLIP_FRAMES rows per partition) -> segment rollup -> argmax via a max-norm
     equi-join back (deterministic, no engine-specific arg_max). At
     100 TB clips hash across executors; every stage is linear."""
     w = Window.partitionBy("clip_id").orderBy("frame_idx")

@@ -123,7 +123,7 @@ def _part_staging_prefix(path: str) -> str:
     return f".staging_part_{os.path.basename(os.path.abspath(path))}_"
 
 
-def _staged_overwrite(spark: SparkSession, path: str, df) -> int:
+def _staged_overwrite(path: str, df) -> None:
     """Write df to a staging dir, then swap into `path`.
 
     The swap is two renames, so there is a small non-atomic window
@@ -137,7 +137,6 @@ def _staged_overwrite(spark: SparkSession, path: str, df) -> int:
     staging = tempfile.mkdtemp(prefix=".staging_", dir=parent)
     try:
         df.write.mode("overwrite").parquet(staging)
-        n = spark.read.parquet(staging).count()
     except Exception:
         shutil.rmtree(staging, ignore_errors=True)
         raise
@@ -146,7 +145,6 @@ def _staged_overwrite(spark: SparkSession, path: str, df) -> int:
     os.rename(path, old)
     os.rename(staging, path)
     _rm(old)
-    return n
 
 
 def update_parquet(
@@ -164,7 +162,7 @@ def update_parquet(
             if col not in df.columns:
                 raise ValueError(f"unknown column in UPDATE: {col!r}")
             out = out.withColumn(col, F.when(cond, F.expr(expr)).otherwise(F.col(col)))
-        _staged_overwrite(spark, path, out)
+        _staged_overwrite(path, out)
         return n_matched
 
 
@@ -180,7 +178,7 @@ def delete_parquet(spark: SparkSession, path: str, predicate: str) -> int:
         df = spark.read.parquet(path)
         cond = F.coalesce(F.expr(predicate), F.lit(False))
         n_deleted = df.filter(cond).count()
-        _staged_overwrite(spark, path, df.filter(~cond))
+        _staged_overwrite(path, df.filter(~cond))
         return n_deleted
 
 
@@ -215,27 +213,25 @@ def merge_parquet(
             raise ValueError(
                 f"merge source columns {sorted(source.columns)} != target {sorted(target.columns)}"
             )
-        # Duplicate source keys would make the upsert non-deterministic
-        # (which copy wins?) — reject, like ANSI MERGE's cardinality error.
-        n_src = source.count()
-        if source.select(*key_cols).distinct().count() != n_src:
-            raise ValueError("merge source has duplicate keys")
-        # count matched TARGET KEYS, not matched target rows: a target
-        # holding duplicate keys (prior appends) collapses to the single
-        # source row per key — n_updated must agree with the rows actually
-        # replaced-by-key or the caller's bookkeeping drifts from the
-        # table's row count (duplicate-target collapse is the documented
-        # upsert semantic; the cardinality error guards the SOURCE side)
-        n_updated = (
-            target.select(*key_cols)
-            .distinct()
-            .join(source, key_cols, "left_semi")
-            .count()
+        # One aggregate over source LEFT JOIN distinct target keys: source
+        # rows, distinct source keys (NULL fields count once, as DISTINCT
+        # does) and matched rows. Duplicate source keys make the upsert non-
+        # deterministic — reject, like ANSI MERGE's cardinality error.
+        # Unique source keys make matched rows = matched TARGET KEYS, so
+        # duplicate target keys (prior appends) collapse to one update.
+        matched = target.select(*key_cols).distinct().withColumn("_m", F.lit(1))
+        n_src, n_keys, n_updated = (
+            source.select(*key_cols)
+            .join(matched, key_cols, "left")
+            .agg(F.count(F.lit(1)), F.count_distinct(F.struct(*key_cols)), F.count("_m"))
+            .first()
         )
+        if n_keys != n_src:
+            raise ValueError("merge source has duplicate keys")
         merged = target.join(source, key_cols, "left_anti").unionByName(
             source.select(*target.columns)
         )
-        _staged_overwrite(spark, path, merged)
+        _staged_overwrite(path, merged)
         return n_updated, n_src - n_updated
 
 
@@ -263,7 +259,7 @@ def compact_parquet(
         total_bytes = sum(os.path.getsize(p) for p in set(parts_before))
         n_target = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))  # ceil
         df = spark.read.parquet(path).repartition(int(n_target))
-        _staged_overwrite(spark, path, df)
+        _staged_overwrite(path, df)
         n_after = len(
             set(
                 glob.glob(os.path.join(path, "*.parquet"))
@@ -679,7 +675,7 @@ def _zorder_rewrite_locked(
         .sortWithinPartitions("_z")
         .drop("_z", "_ka_d", "_kb_d", "_ra_d", "_rb_d")
     )
-    _staged_overwrite(spark, path, out)
+    _staged_overwrite(path, out)
 
 
 class AuditFailure(Exception):

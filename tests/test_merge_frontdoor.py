@@ -50,6 +50,12 @@ MERGE_SQL = """
 """
 
 
+#: Jobs one front-door MERGE of MERGE_SQL may start: 9 measured with
+#: the one-aggregate bookkeeping, 16 with three source counts and a
+#: read-back count (TestMergeBookkeeping.test_merge_job_count).
+MERGE_MAX_JOBS = 9
+
+
 class TestParser:
     def test_star_form_parses(self):
         spec = parse_merge(MERGE_SQL)
@@ -182,3 +188,81 @@ class TestFrontDoor:
         assert wr_engine.execute(MERGE_SQL).success
         got = spark.sql("SELECT count(*) AS n FROM nation WHERE n_name='NEWLAND'").collect()
         assert got[0]["n"] == 1
+
+
+def _tree_bytes(path):
+    import hashlib
+    import os
+
+    out = {}
+    for root, _, files in os.walk(path):
+        for f in files:
+            with open(os.path.join(root, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(root, f), path)] = hashlib.sha256(
+                    fh.read()
+                ).hexdigest()
+    return out
+
+
+class TestMergeBookkeeping:
+    """merge_parquet's counts come from one aggregate over source LEFT
+    JOIN distinct target keys; these pin its NULL and duplicate rules."""
+
+    SCHEMA = "k long, v string"
+
+    def _target(self, spark, tmp_path, rows):
+        path = str(tmp_path / "t")
+        spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.parquet(path)
+        return path
+
+    def test_null_source_key_once_is_not_a_duplicate(self, spark, tmp_path):
+        from etl_generator_demo_spark.sources.mutations import merge_parquet
+
+        path = self._target(spark, tmp_path, [(1, "a"), (None, "n")])
+        src = spark.createDataFrame([(1, "A"), (None, "N")], self.SCHEMA)
+        # a NULL key never matches (equi-join), so the NULL row inserts
+        assert merge_parquet(spark, path, src, ["k"]) == (1, 1)
+        assert spark.read.parquet(path).count() == 3
+
+    def test_null_source_key_twice_is_a_duplicate(self, spark, tmp_path):
+        from etl_generator_demo_spark.sources.mutations import merge_parquet
+
+        path = self._target(spark, tmp_path, [(1, "a")])
+        src = spark.createDataFrame([(None, "x"), (None, "y")], self.SCHEMA)
+        with pytest.raises(ValueError, match="duplicate keys"):
+            merge_parquet(spark, path, src, ["k"])
+
+    def test_duplicate_target_keys_collapse(self, spark, tmp_path):
+        from etl_generator_demo_spark.sources.mutations import merge_parquet
+
+        path = self._target(spark, tmp_path, [(1, "a"), (1, "b"), (2, "c")])
+        src = spark.createDataFrame([(1, "A"), (3, "C")], self.SCHEMA)
+        # n_updated counts matched KEYS: the two k=1 rows become one
+        assert merge_parquet(spark, path, src, ["k"]) == (1, 1)
+        got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+        assert got == [(1, "A"), (2, "c"), (3, "C")]
+
+    def test_duplicate_source_keys_leave_target_byte_identical(self, spark, tmp_path):
+        from etl_generator_demo_spark.sources.mutations import merge_parquet
+
+        path = self._target(spark, tmp_path, [(1, "a"), (2, "b")])
+        before = _tree_bytes(path)
+        src = spark.createDataFrame([(2, "x"), (2, "y"), (5, "z")], self.SCHEMA)
+        with pytest.raises(ValueError, match="duplicate keys"):
+            merge_parquet(spark, path, src, ["k"])
+        assert _tree_bytes(path) == before
+        assert not [p for p in tmp_path.iterdir() if p.name.startswith(".staging_")]
+
+    def test_merge_job_count(self, spark, wr_engine):
+        """Spark jobs per front-door MERGE, counted as the delta of the
+        highest job id, stay at or under the measured budget."""
+        tracker = spark.sparkContext.statusTracker()
+
+        def top():
+            return max(tracker.getJobIdsForGroup(None) or [-1])
+
+        assert wr_engine.execute(MERGE_SQL).success  # warm the session
+        j0 = top()
+        res = wr_engine.execute(MERGE_SQL)
+        assert res.success and res.rows == [{"n_updated": 4, "n_inserted": 0}]
+        assert top() - j0 <= MERGE_MAX_JOBS, top() - j0

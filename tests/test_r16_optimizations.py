@@ -93,28 +93,34 @@ def test_jaccard_sweep_single_pass_matches_brute_recount(spark, tmp_path):
 
 
 def test_bpe_winner_materialization_matches_wrapper(spark):
-    """bpe_pair_winner + bpe_merge_step_apply (the r16 split that lets
-    the trainer checkpoint the 1-row winner) must equal the one-shot
-    bpe_merge_step on both the winner row and the next state —
-    including the x == y run-parity path."""
-    from etl_generator_demo_spark.operators.bpe import (
-        bpe_merge_step,
-        bpe_merge_step_apply,
-        bpe_pair_winner,
-    )
+    """The one-task mapInPandas trainer must equal the pure-Python
+    trainer it wraps, on both the winner rows and the final symbol
+    state — including the x == y run-parity path."""
+    from etl_generator_demo_spark.operators.bpe import bpe_train, bpe_trainer
 
-    vocab = spark.createDataFrame(
-        [("aaab", 3), ("abab", 2)], "word string, wcount long"
-    )
-    state = vocab.select(
-        "word", "wcount", F.posexplode(F.split("word", "")).alias("pos", "sym")
-    )
-    top_w, nxt_w = bpe_merge_step(state)
-    top_s = bpe_pair_winner(state).localCheckpoint(eager=True)
-    nxt_s = bpe_merge_step_apply(state, top_s)
-    assert top_w.collect() == top_s.collect()
-    key = lambda r: (r["word"], r["pos"])  # noqa: E731
-    assert sorted(nxt_w.collect(), key=key) == sorted(nxt_s.collect(), key=key)
+    words = [("aaab", 3), ("abab", 2)]
+    vocab = spark.createDataFrame(words, "word string, wcount long")
+    merges, states = bpe_train([(list(w), c) for w, c in words])
+    got = bpe_trainer(vocab).collect()
+    assert [tuple(r) for r in got] == [(k, *m) for k, m in enumerate(merges, 1)]
+    got_words = bpe_trainer(vocab, words=True).collect()
+    assert {r.word: list(r.syms) for r in got_words} == {
+        w: s for (w, _), s in zip(words, states)
+    }
+
+
+def test_bpe_training_resumes_from_materialized_state():
+    """Training k + 1 steps at once equals training k steps, keeping the
+    state, and training one more step from it: a winner depends only on
+    the state it is counted over."""
+    from etl_generator_demo_spark.operators.bpe import bpe_train
+
+    words = [(list("aaab"), 3), (list("abab"), 2), (list("aabaa"), 1)]
+    both, final = bpe_train(words, 2)
+    first, mid = bpe_train(words, 1)
+    second, final2 = bpe_train([(s, c) for s, (_, c) in zip(mid, words)], 1)
+    assert both == first + second
+    assert final == final2
 
 
 def test_matryoshka_cascade_prefix_sums_bit_exact(spark):

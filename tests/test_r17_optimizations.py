@@ -201,45 +201,37 @@ def test_memoized_expression_trees_reusable_across_frames(spark):
 
 
 def test_bpe_last_apply_skipped_rows_identical(spark):
-    """r17: x4_bpe_merge_steps skips the dead final apply pass (the
-    state after the last winner feeds nothing). The winner sequence
-    must match the step-by-step reference on a corpus where merges
-    cascade (the step-2 winner only exists after step 1 applied)."""
+    """x4_bpe_merge_steps skips the dead final apply (the state after the
+    last winner feeds nothing). Its winner rows must match the trainer
+    that applies every step, on a corpus where merges cascade (the
+    step-2 winner only exists after step 1 applied)."""
     from etl_generator_demo_spark.operators.bpe import (
         BPE_STEPS,
-        bpe_merge_step,
+        bpe_train,
+        bpe_trainer,
+        corpus_words,
+        vocabulary,
     )
 
     docs = spark.createDataFrame(
         [(i, "abab abc abab cab") for i in range(3)], "doc_id long, text string"
     )
-    # the registered query reads fixtures (tools/oracle_check.py covers
-    # it end-to-end); here pin the helper-level invariant: skipping the
-    # apply pass after the LAST winner never changes the winner rows.
-    vocab = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("wcount"))
-    )
-    state = vocab.select(
-        "word", "wcount", F.posexplode(F.split("word", "")).alias("pos", "sym")
-    )
-    winners_with_last_apply = []
-    s = state
-    for _ in range(BPE_STEPS):
-        top, s = bpe_merge_step(s)
-        winners_with_last_apply.append(tuple(top.first()))
-    winners_skip_last = []
-    s = state
-    for k in range(1, BPE_STEPS + 1):
-        from etl_generator_demo_spark.operators.bpe import (
-            bpe_merge_step_apply,
-            bpe_pair_winner,
-        )
+    vocab = vocabulary(corpus_words(docs))
+    words = [(list(r.word), r.wcount) for r in vocab.collect()]
+    with_last_apply, _ = bpe_train(words, BPE_STEPS)
+    assert len(with_last_apply) == BPE_STEPS
+    got = bpe_trainer(vocab).collect()
+    assert [tuple(r) for r in got] == [
+        (k, *m) for k, m in enumerate(with_last_apply, 1)
+    ]
 
-        top = bpe_pair_winner(s).localCheckpoint(eager=True)
-        if k < BPE_STEPS:
-            s = bpe_merge_step_apply(s, top).localCheckpoint(eager=True)
-        winners_skip_last.append(tuple(top.first()))
-    assert winners_skip_last == winners_with_last_apply
+
+def test_bpe_last_apply_skipped_pure():
+    """The same invariant on the pure-Python trainer."""
+    from etl_generator_demo_spark.operators.bpe import BPE_STEPS, bpe_train
+
+    words = [(list("abab"), 6), (list("abc"), 3), (list("cab"), 3)]
+    skipped, none = bpe_train(words, BPE_STEPS, final_state=False)
+    applied, states = bpe_train(words, BPE_STEPS)
+    assert none is None and states
+    assert skipped == applied

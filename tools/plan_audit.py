@@ -713,9 +713,9 @@ EXPECTATIONS: dict[str, dict] = {
     # PCA: Gram partials collected (bounded model fetch); the returned
     # relation is the driver-iterated 64-row loading vector
     "x3_pca_power_iteration": {"max_exchanges": 0},
-    # BPE: per-step shuffles behind localCheckpoint; visible tail is
-    # the final pair aggregate + 1-row tops union
-    "x4_bpe_merge_steps": {"max_exchanges": 6},
+    # BPE: the word count is the only shuffle; the merges run in one
+    # coalesced mapInPandas task over the vocabulary
+    "x4_bpe_merge_steps": {"max_exchanges": 1},
     # spans pipeline + two broadcast doc->source joins + bounded rollup
     "x2_exact_substr_cross_source": {"max_exchanges": 10, "min_broadcast": 7},
     # both pair pipelines + pair-relation full outer (SMJ over pairs,
@@ -765,7 +765,8 @@ EXPECTATIONS: dict[str, dict] = {
     "x3_vector_norm_audit": {"max_exchanges": 2},
     # BM25 chain + relevance join + two bounded rank windows + scalar cross
     "x4_ndcg_eval": {"max_exchanges": 12, "min_broadcast": 3},
-    # merges behind localCheckpoint; visible: vocab join + source rollup
+    # word count feeding the one-task trainer; broadcast vocab join +
+    # source rollup + ordered output
     "x4_bpe_encode_corpus": {"max_exchanges": 3, "min_broadcast": 1},
     # signature groupBy behind localCheckpoint; 4 config self-joins +
     # distinct + 1-row aggregates unioned
