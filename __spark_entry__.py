@@ -91,6 +91,19 @@ _REWRITTEN_SINCE_GREEN = (
     # verdict item 1) — warm small-SF plan is unchanged (broadcast
     # tier), but the code is new since the r13 green
     "x2_neardup_verified",
+    # graph family moved into operators/graph.py with shared edge,
+    # degree, triangle, wedge and hub-source builders
+    "g_triangle_count",
+    "g_clustering_coefficient",
+    "g_degree_assortativity",
+    "g_adamic_adar_topk",
+    "g_jaccard_link_prediction",
+    "g_community_sizes",
+    "g_modularity_lpa",
+    "g_kcore_membership",
+    "g_bfs_hop_histogram",
+    "g_personalized_pagerank",
+    "g_sssp_weighted",
 )
 
 

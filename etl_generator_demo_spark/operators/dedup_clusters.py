@@ -5,25 +5,12 @@ closure (A~B, B~C ⇒ {A,B,C} are one group) and a canonical survivor
 per group. This module finishes the X2 pipeline (SURVEY.md §2.12; no
 reference counterpart — the reference has no dedup at all):
 
-- ``connected_components``: iterative min-label propagation WITH
-  pointer doubling, pure DataFrame ops. Every vertex starts labeled
-  with its own id; each round every vertex takes the min of its own
-  and its neighbors' labels, then compresses through its current
-  label (label <- label-of-label); fixpoint = component ids (the min
-  doc_id of the component). The compression step halves the
-  remaining label-chain length every round, so convergence is
-  O(log n) even on adversarial long chains (a 300-doc path converges
-  in ~8 rounds; pure propagation would need 300) — the same bound
-  the large-star/small-star formulation gives. Each round is two
-  narrow joins + one groupBy; lineage is cut per round with
-  ``localCheckpoint`` so the plan stays O(1) deep instead of growing
-  per iteration.
+- ``connected_components`` (``graph.py``): min-label propagation with
+  pointer doubling, O(log n) rounds to a proven fixpoint; the
+  component id is the minimum doc_id of the component.
 - ``dedup_corpus``: attach cluster_id to the corpus and mark the
   minimum id of each cluster as the canonical keeper. Downstream,
   training pipelines ``filter(is_keep)``.
-
-Convergence is detected by the label-sum fixpoint: labels only ever
-decrease, so an unchanged SUM(label) means no label moved.
 """
 
 from __future__ import annotations
@@ -39,64 +26,9 @@ from etl_generator_demo_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
 )
+from etl_generator_demo_spark.operators.graph import connected_components
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.registry import register
-
-
-def connected_components(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """(id_col, cluster_id) for every node, where cluster_id is the
-    smallest node id reachable through `pairs`. Singletons keep their
-    own id. Raises if `max_iter` rounds don't reach the fixpoint
-    (diameter > max_iter — not a silent wrong answer)."""
-    half = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    edges = half.union(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-
-    labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("label"))
-    prev_sum = None
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        labels = labels.join(nbr_min, labels["id"] == nbr_min["src"], "left").select(
-            "id",
-            F.least(F.col("label"), F.coalesce("nbr_min", "label")).alias("label"),
-        )
-        # pointer doubling (label <- label-of-label): propagation alone
-        # moves the min ONE hop per round (O(diameter) rounds — a
-        # 300-doc near-dup chain would blow max_iter); compressing
-        # through the current label halves the remaining distance each
-        # round, giving O(log n) convergence — the same guarantee the
-        # large-star/small-star formulation buys, with one extra narrow
-        # self-join per round.
-        lbl2 = labels.select(
-            F.col("id").alias("l_id"), F.col("label").alias("l_label")
-        )
-        labels = (
-            labels.join(lbl2, labels["label"] == lbl2["l_id"], "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("l_label", "label")).alias("label"),
-            )
-            .localCheckpoint(eager=True)  # cut lineage: O(1)-deep plan per round
-        )
-        # labels are monotonically non-increasing, so an unchanged sum
-        # is a fixpoint proof (one cheap global agg per round).
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
-        prev_sum = cur_sum
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
 def dedup_corpus(

@@ -10,9 +10,9 @@ deterministic tree over ``customer``: parent(c) = c DIV 10 (NULL when
 every SF, closed under the table (every parent id exists).
 
 Both traversals are ITERATIVE pointer-doubling DataFrame loops, not
-per-row recursion — O(log depth) rounds, each a narrow join +
-``localCheckpoint`` to cut lineage (same discipline as
-``dedup_clusters.connected_components``):
+per-row recursion — O(log depth) rounds, each a narrow join run to a
+proven fixpoint by ``graph.fixpoint`` (per-round ``localCheckpoint``,
+raise on non-convergence):
 
 - ``ancestor_walk``: (id, root_id, depth) — each round composes the
   current "known ancestor at distance d" with THAT ancestor's state,
@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_generator_demo_spark.operators.graph import fixpoint
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.registry import register
 
@@ -60,27 +61,21 @@ def ancestor_walk(
         F.coalesce(F.col(parent_col), F.col(id_col)).alias("anc"),
         F.when(F.col(parent_col).isNull(), F.lit(0)).otherwise(F.lit(1)).alias("depth"),
     ).localCheckpoint(eager=True)
-    prev_sum = None
-    for _ in range(max_iter):
+
+    def step(state: DataFrame) -> DataFrame:
         hop = state.select(
             F.col("id").alias("h_id"),
             F.col("anc").alias("h_anc"),
             F.col("depth").alias("h_depth"),
         )
-        state = (
-            state.join(hop, state["anc"] == hop["h_id"])
-            .select(
-                "id",
-                F.col("h_anc").alias("anc"),
-                (F.col("depth") + F.col("h_depth")).alias("depth"),
-            )
-            .localCheckpoint(eager=True)
+        return state.join(hop, state["anc"] == hop["h_id"]).select(
+            "id",
+            F.col("h_anc").alias("anc"),
+            (F.col("depth") + F.col("h_depth")).alias("depth"),
         )
-        cur_sum = state.agg(F.sum("depth")).first()[0]
-        if cur_sum == prev_sum:
-            return state.select("id", F.col("anc").alias("root_id"), "depth")
-        prev_sum = cur_sum
-    raise RuntimeError(f"ancestor_walk did not converge in {max_iter} rounds")
+
+    state = fixpoint(state, step, [F.sum("depth")], max_iter, "ancestor_walk")
+    return state.select("id", F.col("anc").alias("root_id"), "depth")
 
 
 def ancestor_pairs(
@@ -104,8 +99,8 @@ def ancestor_pairs(
         )
         .localCheckpoint(eager=True)
     )
-    prev_n = None
-    for _ in range(max_iter):
+
+    def step(pairs: DataFrame) -> DataFrame:
         up = pairs.select(
             F.col("id").alias("u_id"),
             F.col("anc_id").alias("u_anc"),
@@ -114,12 +109,9 @@ def ancestor_pairs(
         composed = pairs.join(up, pairs["anc_id"] == up["u_id"]).select(
             "id", F.col("u_anc").alias("anc_id"), (F.col("dist") + F.col("u_dist")).alias("dist")
         )
-        pairs = pairs.unionByName(composed).distinct().localCheckpoint(eager=True)
-        cur_n = pairs.count()
-        if cur_n == prev_n:
-            return pairs
-        prev_n = cur_n
-    raise RuntimeError(f"ancestor_pairs did not converge in {max_iter} rounds")
+        return pairs.unionByName(composed).distinct()
+
+    return fixpoint(pairs, step, [F.count(F.lit(1))], max_iter, "ancestor_pairs")
 
 
 def _customer_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,15 +187,12 @@ def _pagerank_oracle() -> str:
     out-degree 1; root (dangling) mass is NOT redistributed — the
     'lossy' PageRank variant, identical on both engines.
 
-    r14 exactness rewrite: ranks are EXACT BIGINTs in units of
-    rank·n/20³ (d = 0.85 = 17/20, so after k ≤ 3 iterations every
-    value is an integer multiple of 20^(3-k) in that scale — each
-    `(17·Σchild) // 20` divides exactly; proof in g_pagerank_tree's
-    docstring). The old float spelling floored rank·n at an e6
-    boundary and a reseeded fixture landed one node within 1 ulp of
-    a boundary (Spark 1.424999 vs DuckDB 1.425) — summation-order
-    float drift, the exact failure class the repo's integer-scaling
-    discipline exists to kill."""
+    Ranks are EXACT BIGINTs in units of rank·n/20³ (d = 0.85 = 17/20,
+    so after k ≤ 3 iterations every value is an integer multiple of
+    20^(3-k) in that scale — each `(17·Σchild) // 20` divides exactly;
+    proof in g_pagerank_tree's docstring). A float spelling floored at
+    an e6 boundary can land within 1 ulp of it and flip between
+    engines on summation order."""
     iters = PAGERANK_ITERS
     sql = """
     WITH nodes AS (
@@ -248,9 +237,7 @@ def g_pagerank_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     redistributed — the lossy variant, mirrored exactly by the
     unrolled-CTE oracle; ranks are reported scaled by N (≈1.0).
 
-    r14 exactness rewrite (a reseeded fixture landed one rank 1 ulp
-    from an e6 floor boundary — Spark 1.424999 vs DuckDB 1.425):
-    ranks are EXACT BIGINTs in units of rank·n/20³. With
+    Ranks are EXACT BIGINTs in units of rank·n/20³. With
     d = 0.85 = 17/20 the update is R_k = 1200 + (17·Σ_child R_{k-1})/20
     (1200 = 0.15·20³), and induction gives R_k ≡ 0 (mod 20^(3-k)):
     R₀ = 20³, a sum of multiples of 20^(4-k) divided by 20 is a
@@ -284,210 +271,6 @@ def g_pagerank_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id",
         ((F.col("r") * 125).cast("double") / 1_000_000).alias("rank_scaled"),
     ).orderBy("id")
-
-
-def copurchase_edges(lineitem: DataFrame) -> DataFrame:
-    """Undirected distinct co-purchase edges (pa < pb): two parts are
-    linked when some order contains both. The self-join is co-keyed on
-    l_orderkey (no shuffle beyond the key repartition); per-order line
-    counts are small and bounded, so the pair explosion is ~C(k,2) per
-    order, never corpus-quadratic."""
-    li = lineitem.select("l_orderkey", "l_partkey")
-    return (
-        li.alias("a")
-        .join(li.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
-        )
-        .distinct()
-    )
-
-
-def triangle_stats(edges: DataFrame) -> DataFrame:
-    """Global triangle census of an undirected graph via DEGREE-ORDERED
-    orientation (the node-iterator++ of Schank & Wagner / Cohen's
-    MapReduce formulation): orient each edge from its lower-(deg, id)
-    endpoint to the higher one, enumerate wedges only at each edge's
-    source, and close them against the undirected edge set. Orientation
-    caps out-degree at O(sqrt(m)), so the wedge relation — the only
-    super-linear intermediate — is sum(outdeg²) = O(m^1.5) worst case
-    instead of sum(deg²), which is what makes the plan survive hub
-    nodes at 100 TB. Returns one row:
-    (n_nodes, n_edges, n_wedges, n_triangles, gcc_ppm)."""
-    deg = (
-        edges.select(F.col("pa").alias("node"))
-        .unionAll(edges.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    da = deg.select(F.col("node").alias("pa"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("pb"), F.col("deg").alias("deg_b"))
-    ranked = edges.join(da, "pa").join(db, "pb")
-    # orientation order: (deg, id) — ties broken by id, total order
-    a_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("pa") < F.col("pb"))
-    )
-    oriented = ranked.select(
-        F.when(a_first, F.col("pa")).otherwise(F.col("pb")).alias("src"),
-        F.when(a_first, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
-    )
-    wedges = (
-        oriented.alias("e1")
-        .join(oriented.alias("e2"), "src")
-        .filter(F.col("e1.dst") < F.col("e2.dst"))
-        .select(F.col("e1.dst").alias("v"), F.col("e2.dst").alias("w"))
-    )
-    closing = edges.select(F.col("pa").alias("v"), F.col("pb").alias("w"))
-    # semi join on the (min,max)-keyed undirected edge set: each
-    # triangle closes exactly once, at its orientation-minimal vertex
-    n_tri = wedges.join(closing, ["v", "w"], "left_semi").count()
-    totals = (
-        deg.agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            (F.sum(F.col("deg") * (F.col("deg") - 1)) / 2).cast("long").alias("n_wedges"),
-        )
-        .crossJoin(edges.agg(F.count(F.lit(1)).alias("n_edges")))
-    )
-    return totals.select(
-        "n_nodes",
-        F.col("n_edges").cast("long").alias("n_edges"),
-        "n_wedges",
-        F.lit(n_tri).cast("long").alias("n_triangles"),
-        F.expr(
-            f"CAST({3 * n_tri * 1_000_000}L DIV n_wedges AS BIGINT)"
-        ).alias("gcc_ppm"),
-    )
-
-
-@register(
-    "g_triangle_count",
-    oracle="""
-    WITH e AS (
-        SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lineitem a
-        JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    deg AS (
-        SELECT node, COUNT(*) AS deg FROM (
-            SELECT pa AS node FROM e UNION ALL SELECT pb AS node FROM e
-        ) GROUP BY node
-    ),
-    tri AS (
-        SELECT COUNT(*) AS n_triangles
-        FROM e e1
-        JOIN e e2 ON e2.pa = e1.pb
-        JOIN e e3 ON e3.pa = e1.pa AND e3.pb = e2.pb
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM deg)       AS n_nodes,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM e)         AS n_edges,
-           (SELECT CAST(SUM(deg * (deg - 1)) AS BIGINT) // 2 FROM deg) AS n_wedges,
-           CAST(n_triangles AS BIGINT)                      AS n_triangles,
-           -- BIGINT // BIGINT: exact floor. The old spelling divided
-           -- by SUM(..)/2 — a DOUBLE in DuckDB — and a reseeded
-           -- fixture landed gcc within 1 ulp of an integer (38246
-           -- exact vs 38247 float); the Spark side's integer DIV was
-           -- already exact.
-           CAST((3 * n_triangles * 1000000)
-                // (SELECT CAST(SUM(deg * (deg - 1)) AS BIGINT) // 2 FROM deg)
-                AS BIGINT) AS gcc_ppm
-    FROM tri
-    """,
-    survey_ids=("J3", "A2"),
-)
-def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle census + global clustering coefficient of the part
-    co-purchase graph (market-basket structure: how cliquish are
-    baskets). The oracle closes triangles with the naive a<b<c 3-way
-    self-join; the engine uses degree-ordered orientation — hash
-    equality proves the oriented enumeration exact, triangle for
-    triangle."""
-    edges = copurchase_edges(t(spark, sf_dir, "lineitem"))
-    return triangle_stats(edges)
-
-
-MINSUP_PAIRS = 3
-
-
-@register(
-    "x4_association_rules",
-    oracle=f"""
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    n AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM op),
-    item AS (SELECT l_partkey, COUNT(*) AS sup FROM op GROUP BY l_partkey),
-    pairs AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS sup_ab
-        FROM op a JOIN op b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING COUNT(*) >= {MINSUP_PAIRS}
-    )
-    SELECT pa, pb,
-           CAST(p.sup_ab AS BIGINT) AS sup_ab,
-           CAST(ia.sup AS BIGINT) AS sup_a,
-           CAST(ib.sup AS BIGINT) AS sup_b,
-           CAST(FLOOR(p.sup_ab * 1000000.0 / ia.sup) AS BIGINT) AS conf_a_to_b_e6,
-           CAST(FLOOR(p.sup_ab * 1000000.0 * n.n_orders
-                      / (ia.sup * ib.sup)) AS BIGINT) AS lift_e6
-    FROM pairs p
-    JOIN item ia ON ia.l_partkey = p.pa
-    JOIN item ib ON ib.l_partkey = p.pb
-    CROSS JOIN n
-    ORDER BY pa, pb
-    """,
-    survey_ids=("X4", "A1", "J3"),
-)
-def x4_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket association rules over co-purchased parts: pair
-    support ≥ {MINSUP_PAIRS} with confidence(a→b) and lift in exact
-    e6 fixed-point (integer counts through one float division both
-    engines compute identically). The A-priori first level — at 100 TB
-    the co-keyed per-order pair generation (bounded C(k,2) per basket)
-    + map-combined support counting is exactly how FP-growth's
-    frequent-pair seed set is mined; item supports broadcast back onto
-    the surviving pairs."""
-    op = (
-        t(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    n_orders = op.select("l_orderkey").distinct().count()
-    item = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("sup"))
-    pairs = (
-        op.alias("a")
-        .join(op.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
-        )
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).alias("sup_ab"))
-        .filter(F.col("sup_ab") >= MINSUP_PAIRS)
-    )
-    ia = item.select(F.col("l_partkey").alias("pa"), F.col("sup").alias("sup_a"))
-    ib = item.select(F.col("l_partkey").alias("pb"), F.col("sup").alias("sup_b"))
-    return (
-        pairs.join(F.broadcast(ia), "pa")
-        .join(F.broadcast(ib), "pb")
-        .select(
-            "pa",
-            "pb",
-            F.col("sup_ab").cast("long").alias("sup_ab"),
-            F.col("sup_a").cast("long").alias("sup_a"),
-            F.col("sup_b").cast("long").alias("sup_b"),
-            F.floor(F.col("sup_ab") * 1_000_000.0 / F.col("sup_a"))
-            .cast("long")
-            .alias("conf_a_to_b_e6"),
-            F.floor(
-                F.col("sup_ab") * 1_000_000.0 * n_orders
-                / (F.col("sup_a") * F.col("sup_b"))
-            )
-            .cast("long")
-            .alias("lift_e6"),
-        )
-        .orderBy("pa", "pb")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -530,105 +313,3 @@ def u_recursive_cte_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Catalog(spark, sf_dir).register_views(("customer",))
     return spark.sql(_RECURSIVE_TREE_SQL.format(div="DIV"))
-
-
-@register(
-    "g_clustering_coefficient",
-    oracle="""
-    WITH e AS (
-        SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lineitem a
-        JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    sym AS (
-        SELECT pa AS u, pb AS v FROM e
-        UNION ALL
-        SELECT pb AS u, pa AS v FROM e
-    ),
-    deg AS (SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS deg
-            FROM sym GROUP BY u),
-    tri AS (
-        SELECT u, CAST(COUNT(*) AS BIGINT) AS tri
-        FROM (
-            SELECT s1.u, s1.v AS a, s2.v AS b
-            FROM sym s1
-            JOIN sym s2 ON s1.u = s2.u AND s1.v < s2.v
-            JOIN e ON e.pa = s1.v AND e.pb = s2.v
-        )
-        GROUP BY u
-    )
-    SELECT d.node, d.deg, COALESCE(t.tri, 0) AS tri,
-           CAST((2 * COALESCE(t.tri, 0) * 1000000)
-                // (d.deg * (d.deg - 1)) AS BIGINT) AS lcc_e6
-    FROM deg d
-    LEFT JOIN tri t ON t.u = d.node
-    WHERE d.deg >= 3
-    ORDER BY lcc_e6 DESC, d.node
-    LIMIT 20
-    """,
-    survey_ids=("J3", "A1", "O4"),
-)
-def g_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LOCAL clustering coefficient per node — 2·tri(v)/(deg(v)·
-    (deg(v)−1)), the per-node counterpart of `g_triangle_count`'s
-    global census: which parts sit inside cliquish co-purchase
-    neighborhoods (community seeds) vs hub-and-spoke ones. The
-    per-node triangle counts reuse the degree-ordered orientation:
-    wedges enumerate only at each edge's lower-(deg,id) endpoint —
-    O(m^1.5) worst case, hub-safe — and every closed triangle
-    (src, v, w) credits its THREE corners via one explode, so the
-    per-node credit relation is 3·|triangles| rows. Exact integers
-    end to end (e6 via integer division); the oracle closes triangles
-    with the naive symmetric 3-way self-join — hash equality proves
-    the oriented enumeration exact, corner for corner."""
-    edges = copurchase_edges(t(spark, sf_dir, "lineitem"))
-    deg = (
-        edges.select(F.col("pa").alias("node"))
-        .unionAll(edges.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
-    da = deg.select(F.col("node").alias("pa"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("pb"), F.col("deg").alias("deg_b"))
-    ranked = edges.join(da, "pa").join(db, "pb")
-    a_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("pa") < F.col("pb"))
-    )
-    oriented = ranked.select(
-        F.when(a_first, F.col("pa")).otherwise(F.col("pb")).alias("src"),
-        F.when(a_first, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
-    )
-    wedges = (
-        oriented.alias("e1")
-        .join(oriented.alias("e2"), "src")
-        .filter(F.col("e1.dst") < F.col("e2.dst"))
-        .select("src", F.col("e1.dst").alias("v"), F.col("e2.dst").alias("w"))
-    )
-    closing = edges.select(F.col("pa").alias("v"), F.col("pb").alias("w"))
-    triangles = wedges.join(closing, ["v", "w"], "left_semi")
-    corner_credit = triangles.select(
-        F.explode(F.array("src", "v", "w")).alias("node")
-    )
-    tri = corner_credit.groupBy("node").agg(
-        F.count(F.lit(1)).cast("long").alias("tri")
-    )
-    return (
-        deg.filter(F.col("deg") >= 3)
-        .join(tri, "node", "left")
-        .select(
-            "node",
-            "deg",
-            F.coalesce(F.col("tri"), F.lit(0)).cast("long").alias("tri"),
-        )
-        .select(
-            "node",
-            "deg",
-            "tri",
-            F.expr("CAST((2 * tri * 1000000) DIV (deg * (deg - 1)) AS LONG)").alias(
-                "lcc_e6"
-            ),
-        )
-        .orderBy(F.col("lcc_e6").desc(), "node")
-        .limit(20)
-    )

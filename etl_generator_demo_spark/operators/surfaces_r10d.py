@@ -1,4 +1,4 @@
-"""Round-10 batch 4: verbatim SQL-surface pins and personalized PageRank.
+"""Round-10 batch 4: verbatim SQL-surface pins.
 
 - RANGE BETWEEN INTERVAL window frame, ONE SQL text verbatim on Spark
   and DuckDB (the ``a_group_by_all_revenue`` discipline): pins that
@@ -10,10 +10,6 @@
 - VALUES inline table, same text verbatim: the seed-a-dim-inline
   surface every migration script uses (tier thresholds, code lookups)
   — joined as a range-bucketing dimension.
-- Personalized PageRank from the co-purchase hub: the
-  query-time-teleport variant of `g_pagerank_tree` — the similarity
-  score RecSys serves ("parts related to THIS part"), 3 unrolled
-  power-iteration rounds in exact e9 fixed point.
 """
 
 from __future__ import annotations
@@ -103,152 +99,6 @@ def u_values_inline_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup after."""
     t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(_VALUES_SQL)
-
-
-#: PPR iterations (unrolled in the oracle) and fixed-point scale.
-PPR_ROUNDS = 3
-PPR_SCALE = 10**9
-PPR_ALPHA_NUM, PPR_ALPHA_DEN = 85, 100  # damping 0.85 as an exact ratio
-
-_PPR_EDGES_SQL = """
-    e AS (
-        SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lineitem a
-        JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    sym AS (
-        SELECT pa AS u, pb AS v FROM e
-        UNION ALL
-        SELECT pb AS u, pa AS v FROM e
-    ),
-    deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY u),
-    src AS (SELECT u AS s FROM deg ORDER BY d DESC, u LIMIT 1)
-"""
-
-
-def _ppr_oracle() -> str:
-    steps = []
-    for k in range(1, PPR_ROUNDS + 1):
-        steps.append(f"""
-    r{k} AS MATERIALIZED (
-        SELECT n.id,
-               COALESCE(m.mass, 0)
-                 + CASE WHEN n.id = (SELECT s FROM src)
-                        THEN (CAST({PPR_ALPHA_DEN - PPR_ALPHA_NUM} AS BIGINT)
-                              * {PPR_SCALE}) // {PPR_ALPHA_DEN}
-                        ELSE 0 END AS score
-        FROM nodes n
-        LEFT JOIN (
-            SELECT s.v AS id,
-                   CAST(SUM((r.score * {PPR_ALPHA_NUM}) // (d.d * {PPR_ALPHA_DEN}))
-                        AS BIGINT) AS mass
-            FROM r{k - 1} r
-            JOIN sym s ON s.u = r.id
-            JOIN deg d ON d.u = r.id
-            GROUP BY s.v
-        ) m ON m.id = n.id
-    )""")
-    return f"""
-    WITH {_PPR_EDGES_SQL},
-    nodes AS (SELECT DISTINCT u AS id FROM sym),
-    r0 AS (
-        SELECT id, CASE WHEN id = (SELECT s FROM src)
-                        THEN CAST({PPR_SCALE} AS BIGINT)
-                        ELSE CAST(0 AS BIGINT) END AS score
-        FROM nodes
-    ),
-    {",".join(steps)}
-    SELECT CAST(id AS BIGINT) AS part_id, CAST(score AS BIGINT) AS ppr_e9
-    FROM r{PPR_ROUNDS}
-    WHERE score > 0
-    ORDER BY ppr_e9 DESC, part_id
-    LIMIT 20
-    """
-
-
-@register(
-    "g_personalized_pagerank",
-    oracle=_ppr_oracle(),
-    survey_ids=("J3", "A1", "O4", "X4"),
-)
-def g_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank from the co-purchase hub part (teleport
-    mass returns to THE SOURCE, not uniformly — the 'parts related to
-    this part' similarity RecSys serves, vs `g_pagerank_tree`'s global
-    variant). Three synchronous power-iteration rounds in exact e9
-    fixed point: per-edge contribution ``(r·85) // (deg·100)`` (floor
-    once per edge — deterministic mass leak, identical in the oracle),
-    teleport ``0.15·SCALE`` re-injected at the source each round.
-    Top-20 reachable parts by score.
-
-    Scale: each round is one aggregate-join (rank relation ⋈ edges ⋈
-    degrees, map-combined per-target sum) + the |nodes|-keyed teleport
-    left join; per-round localCheckpoint (the LPA/WCC discipline).
-    Scores total ≤ SCALE so int64 carries every product (r·85 ≤
-    8.5e10)."""
-    li = t(spark, sf_dir, "lineitem")
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("pa") < F.col("pb"))
-        .select("pa", "pb")
-        .distinct()
-    )
-    sym = e.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionAll(
-        e.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
-    ).localCheckpoint(eager=True)
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    src = int(deg.orderBy(F.desc("d"), "u").first()["u"])  # hub scalar
-    nodes = sym.select(F.col("u").alias("id")).distinct().localCheckpoint(
-        eager=True
-    )
-    teleport = ((PPR_ALPHA_DEN - PPR_ALPHA_NUM) * PPR_SCALE) // PPR_ALPHA_DEN
-    r = nodes.select(
-        "id",
-        F.when(F.col("id") == src, F.lit(PPR_SCALE))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("score"),
-    )
-    for _ in range(PPR_ROUNDS):
-        mass = (
-            r.join(sym, r["id"] == sym["u"])
-            .join(deg, sym["u"] == deg["u"])
-            .select(
-                F.col("v").alias("id"),
-                F.expr(
-                    f"(score * {PPR_ALPHA_NUM}) div (d * {PPR_ALPHA_DEN})"
-                ).alias("m"),
-            )
-            .groupBy("id")
-            .agg(F.sum("m").cast("long").alias("mass"))
-        )
-        r = (
-            nodes.join(mass, "id", "left")
-            .select(
-                "id",
-                (
-                    F.coalesce("mass", F.lit(0))
-                    + F.when(F.col("id") == src, F.lit(teleport)).otherwise(
-                        F.lit(0)
-                    )
-                )
-                .cast("long")
-                .alias("score"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return (
-        r.filter(F.col("score") > 0)
-        .orderBy(F.desc("score"), "id")
-        .limit(20)
-        .select(
-            F.col("id").cast("long").alias("part_id"),
-            F.col("score").cast("long").alias("ppr_e9"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -14,7 +14,6 @@ join graph) but that Spark either spells differently or must rewrite:
 - calendar interval arithmetic (end-of-month clamping);
 - nearest as-of join (backward + forward pick-closest);
 - OLS regression slope in overflow-safe fixed point;
-- Jaccard link prediction completing the graph family;
 - Jensen-Shannon source divergence on the documents table.
 
 All scores integer fixed-point or exact integer sums (e9-floored-log
@@ -30,16 +29,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from .asof import asof_join, asof_join_forward
-from .graph_ext import _EDGES_SQL, _sym
-from .hierarchy import copurchase_edges
 from .relational import t
-
-#: Hub cap for the Jaccard wedge enumeration — same rationale and value
-#: as the Adamic-Adar cap (graph_ext.AA_CENTER_CAP): the wedge relation
-#: is the only super-linear intermediate, and capping the CENTER degree
-#: bounds it at cap²·n. The oracle applies the identical cap, so the
-#: check stays exact (the semantic is "hub-capped Jaccard").
-JACCARD_CENTER_CAP = 64
 
 
 @register(
@@ -424,95 +414,6 @@ def a_regr_slope_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("slope_cents_per_day_e6"),
         F.floor(sy.cast("double") / n.cast("double")).cast("long").alias("mean_daily_cents"),
         F.floor(sx.cast("double") / n.cast("double")).cast("long").alias("mean_day_index"),
-    )
-
-
-@register(
-    "g_jaccard_link_prediction",
-    oracle=f"""
-    WITH {_EDGES_SQL},
-    deg AS (SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS deg
-            FROM sym GROUP BY u),
-    centers AS (
-        SELECT node FROM deg WHERE deg BETWEEN 2 AND {JACCARD_CENTER_CAP}
-    ),
-    wedges AS (
-        SELECT s1.v AS a, s2.v AS b
-        FROM sym s1
-        JOIN sym s2 ON s1.u = s2.u AND s1.v < s2.v
-        JOIN centers c ON c.node = s1.u
-    ),
-    common AS (
-        SELECT a, b, CAST(COUNT(*) AS BIGINT) AS cn
-        FROM wedges GROUP BY a, b
-    ),
-    scored AS (
-        SELECT c.a, c.b, c.cn,
-               CAST(FLOOR(c.cn * 1000000.0 / (da.deg + db.deg - c.cn))
-                    AS BIGINT) AS jaccard_e6
-        FROM common c
-        JOIN deg da ON da.node = c.a
-        JOIN deg db ON db.node = c.b
-    )
-    SELECT s.a AS node_a, s.b AS node_b, s.cn AS common_neighbors,
-           s.jaccard_e6
-    FROM scored s
-    LEFT JOIN e ON e.pa = s.a AND e.pb = s.b
-    WHERE e.pa IS NULL
-    ORDER BY s.jaccard_e6 DESC, s.a, s.b
-    LIMIT 25
-    """,
-    survey_ids=("J3", "J5", "A1", "O4"),
-)
-def g_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jaccard-coefficient link prediction over the part co-purchase
-    graph: for unlinked pairs, |N(a)∩N(b)| / |N(a)∪N(b)| with the
-    union expanded as deg(a)+deg(b)−common (no set materialization).
-    Same hub-capped wedge enumeration as Adamic-Adar — the CENTER
-    degree cap bounds the only super-linear relation at cap²·n, and
-    the oracle applies the identical cap, so hash-exactness carries
-    the semantics. Score is a FLOOR-scaled ratio of exact integers;
-    anti-join excludes existing edges (prediction, not description)."""
-    edges = copurchase_edges(t(spark, sf_dir, "lineitem")).localCheckpoint(eager=True)
-    sym = _sym(edges)
-    deg = sym.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    )
-    centers = deg.filter((F.col("deg") >= 2) & (F.col("deg") <= JACCARD_CENTER_CAP))
-    wedges = (
-        sym.alias("s1")
-        .join(sym.alias("s2"), "u")
-        .filter(F.col("s1.v") < F.col("s2.v"))
-        .join(centers.select("node").withColumnRenamed("node", "u"), "u", "left_semi")
-        .select(F.col("s1.v").alias("a"), F.col("s2.v").alias("b"))
-    )
-    common = wedges.groupBy("a", "b").agg(F.count(F.lit(1)).cast("long").alias("cn"))
-    scored = (
-        common.join(deg.select(F.col("node").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("db")), "b")
-        .select(
-            "a",
-            "b",
-            "cn",
-            F.floor(F.col("cn") * 1_000_000.0 / (F.col("da") + F.col("db") - F.col("cn")))
-            .cast("long")
-            .alias("jaccard_e6"),
-        )
-    )
-    unlinked = scored.join(
-        edges,
-        (scored["a"] == edges["pa"]) & (scored["b"] == edges["pb"]),
-        "left_anti",
-    )
-    return (
-        unlinked.select(
-            F.col("a").alias("node_a"),
-            F.col("b").alias("node_b"),
-            F.col("cn").alias("common_neighbors"),
-            "jaccard_e6",
-        )
-        .orderBy(F.col("jaccard_e6").desc(), "node_a", "node_b")
-        .limit(25)
     )
 
 

@@ -16,7 +16,7 @@ The algorithm, re-expressed as bounded relational passes:
    cost(tok) = floor(UNI_SCALE · ln(total_weight / weight(tok))) —
    the e6-floored negative log-probability, so path comparison is an
    INTEGER sum (order-free, hash-exact; the only float is the ln
-   before the floor, the AA_CENTER_CAP discipline that has held
+   before the floor, the Adamic-Adar discipline that has held
    hash-exact across engines since round 7). M-step: re-estimate
    weights from Viterbi token counts with add-one smoothing over the
    fixed vocabulary (no ln(0); classic fixed-vocab EM — SentencePiece

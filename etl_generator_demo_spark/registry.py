@@ -66,7 +66,7 @@ def load_all() -> dict[str, RegisteredQuery]:
     import etl_generator_demo_spark.operators.ann_index  # noqa: F401
     import etl_generator_demo_spark.operators.setsim  # noqa: F401
     import etl_generator_demo_spark.operators.tpch_ext  # noqa: F401
-    import etl_generator_demo_spark.operators.graph_ext  # noqa: F401
+    import etl_generator_demo_spark.operators.graph  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r8  # noqa: F401
     import etl_generator_demo_spark.operators.stats_r8  # noqa: F401
     import etl_generator_demo_spark.operators.robust_r8  # noqa: F401
@@ -79,8 +79,7 @@ def load_all() -> dict[str, RegisteredQuery]:
     import etl_generator_demo_spark.operators.surfaces_r10b  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r10c  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r10d  # noqa: F401
-    import etl_generator_demo_spark.operators.graph_r10  # noqa: F401
-    import etl_generator_demo_spark.operators.forecast_r10  # noqa: F401
+    import etl_generator_demo_spark.operators.timeseries  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r11  # noqa: F401
     import etl_generator_demo_spark.operators.unigram_lm  # noqa: F401
     import etl_generator_demo_spark.streaming.cdc  # noqa: F401

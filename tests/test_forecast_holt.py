@@ -4,7 +4,7 @@ import datetime
 
 import duckdb
 
-from etl_generator_demo_spark.operators.forecast_r10 import (
+from etl_generator_demo_spark.operators.timeseries import (
     holt_linear,
     x4_holt_linear_forecast,
 )

@@ -114,21 +114,3 @@ def test_pagerank_tree_mass_and_monotonicity(spark, sf_dir):
     assert leaves and all(abs(ranks[l] - floor_val) < 1e-4 for l in leaves)
     # any parent outranks any leaf
     assert min(ranks[p] for p in children) > max(ranks[l] for l in leaves)
-
-
-def test_triangle_stats_on_planted_graphs(spark):
-    """K4 (4 triangles), one pendant edge, and a star hub (0 triangles):
-    exercises degree-ordered orientation incl. ties and hub nodes."""
-    from etl_generator_demo_spark.operators.hierarchy import triangle_stats
-
-    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
-    pendant = [(4, 5)]
-    star = [(10, 11), (10, 12), (10, 13), (10, 14)]
-    edges = spark.createDataFrame(k4 + pendant + star, "pa long, pb long")
-    row = triangle_stats(edges).collect()[0]
-    assert row.n_triangles == 4
-    assert row.n_nodes == 10
-    assert row.n_edges == 11
-    # wedges: K4 deg(1,2,3)=3,deg4=4 -> 3+3+3+6=15; node5:0; star hub C(4,2)=6
-    assert row.n_wedges == 15 + 6
-    assert row.gcc_ppm == (3 * 4 * 1_000_000) // 21

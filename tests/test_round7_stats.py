@@ -3,7 +3,7 @@
 The DuckDB oracle proves Spark ≡ DuckDB; these tests prove both equal
 the MATH, on constructed inputs whose answers are known in closed
 form (identical-ranking Spearman = +1, clockwork burstiness = −1,
-equal-length Gini = 0, complete-graph clustering coefficient = 1, …).
+equal-length Gini = 0, …).
 A shared implementation bug that fooled both engines identically
 would pass the differential gate but fails here.
 """
@@ -11,8 +11,6 @@ would pass the differential gate but fails here.
 from __future__ import annotations
 
 import datetime
-
-from pyspark.sql import functions as F
 
 
 def _write(df, tmp_path, table, sub=None):
@@ -130,38 +128,6 @@ def test_mode_tie_breaks_to_smallest_value(spark, tmp_path):
     )
     got = {r["status"]: (r["mode_priority"], r["mode_count"]) for r in a_mode_orderpriority(spark, d).collect()}
     assert got == {"O": ("1-URGENT", 3), "F": ("5-LOW", 2)}
-
-
-def test_clustering_coefficient_complete_graph(spark, tmp_path):
-    """K4 (every order pairs all 4 parts) → every node: deg 3, 3
-    triangles, lcc = 1.0; a star (hub + 3 leaves, no leaf-leaf edges)
-    → hub lcc = 0."""
-    from etl_generator_demo_spark.operators.hierarchy import g_clustering_coefficient
-
-    rows = [(1, p) for p in (1, 2, 3, 4)]          # one order carrying K4
-    rows += [(2, p) for p in (10, 11)]              # star spokes via 3 orders
-    rows += [(3, p) for p in (10, 12)]
-    rows += [(4, p) for p in (10, 13)]
-    df = spark.createDataFrame(rows, "l_orderkey long, l_partkey long").select(
-        "l_orderkey",
-        "l_partkey",
-        F.lit(1).alias("l_linenumber"),
-        F.lit(1.0).alias("l_quantity"),
-        F.lit(1.0).alias("l_extendedprice"),
-        F.lit(0.0).alias("l_discount"),
-        F.lit(0.0).alias("l_tax"),
-        F.lit(1).cast("long").alias("l_suppkey"),
-        F.lit("N").alias("l_returnflag"),
-        F.lit("O").alias("l_linestatus"),
-        F.lit(datetime.datetime(2024, 1, 1)).alias("l_shipdate"),
-    )
-    d = _write(df, tmp_path, "lineitem")
-    got = {r["node"]: r for r in g_clustering_coefficient(spark, d).collect()}
-    for p in (1, 2, 3, 4):
-        assert got[p]["deg"] == 3 and got[p]["tri"] == 3 and got[p]["lcc_e6"] == 1_000_000
-    assert got[10]["deg"] == 3 and got[10]["tri"] == 0 and got[10]["lcc_e6"] == 0
-    # leaves have deg 1 < 3: excluded from the report
-    assert 11 not in got and 12 not in got and 13 not in got
 
 
 def test_coverage_curve_monotone_and_saturating(spark, sf_dir):

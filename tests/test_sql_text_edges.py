@@ -1,6 +1,6 @@
-"""Driver-built SQL text on edge inputs: an empty HITS graph,
-non-finite literal vectors and empty multi-probe bucket lists must not
-produce text Spark cannot parse."""
+"""Driver-built SQL text on edge inputs: non-finite literal vectors and
+empty multi-probe bucket lists must not produce text Spark cannot
+parse (the empty-HITS case lives in test_graph.py)."""
 
 from __future__ import annotations
 
@@ -8,23 +8,6 @@ import math
 import struct
 
 from pyspark.sql import functions as F
-
-
-def test_hits_empty_bipartite_returns_typed_empty_frame(spark, sf_dir, tmp_path):
-    from etl_generator_demo_spark.operators.graph_r10 import g_hits_bipartite
-
-    for name in ("orders", "lineitem"):
-        spark.read.parquet(f"{sf_dir}/{name}.parquet").limit(0).write.parquet(
-            str(tmp_path / f"{name}.parquet")
-        )
-    out = g_hits_bipartite(spark, str(tmp_path))
-    assert out.collect() == []
-    assert out.dtypes == [
-        ("kind", "string"),
-        ("node_id", "bigint"),
-        ("score_e9", "bigint"),
-        ("rnk", "bigint"),
-    ]
 
 
 def test_lit_double_array_finite_matches_f_lit(spark):

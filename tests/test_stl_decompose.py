@@ -9,7 +9,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
-from etl_generator_demo_spark.operators.graph_ext import STL_HALF, stl_decompose
+from etl_generator_demo_spark.operators.timeseries import STL_HALF, stl_decompose
 
 WIDTH = 2 * STL_HALF + 1
 

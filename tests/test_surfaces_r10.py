@@ -1,8 +1,5 @@
 """Anchors and invariants for the round-10 operator batch."""
 
-import pytest
-import datetime
-
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.operators.surfaces_r10 import (
@@ -21,10 +18,6 @@ from etl_generator_demo_spark.operators.surfaces_r10b import (
 from etl_generator_demo_spark.operators.surfaces_r10c import (
     LSH_CONFIGS,
     x2_lsh_band_tuning_curve,
-)
-from etl_generator_demo_spark.operators.graph_r10 import (
-    g_hits_bipartite,
-    g_sssp_weighted,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -123,61 +116,6 @@ def test_item_item_recs_invariants(spark):
         assert ranks == list(range(1, len(rows) + 1))
         scores = [r["score_e6"] for r in sorted(rows, key=lambda r: r["rnk"])]
         assert scores == sorted(scores, reverse=True)
-
-
-# ---------------------------------------------------------------------------
-# HITS
-# ---------------------------------------------------------------------------
-
-@pytest.mark.slow
-def test_hits_star_hub(spark, tmp_path):
-    """Customer 1 buys every part; others buy one each -> customer 1 is
-    the top hub, and the part bought by EVERYONE is the top authority."""
-    orders, lines = [], []
-    ok = 0
-    for p in range(1, 6):  # hub customer 1 buys parts 1..5
-        ok += 1
-        orders.append((ok, 1, "F", 10.0, datetime.date(2024, 1, 1), "1-URGENT"))
-        lines.append((ok, p))
-    for c in range(2, 5):  # customers 2..4 each buy part 1 only
-        ok += 1
-        orders.append((ok, c, "F", 10.0, datetime.date(2024, 1, 2), "1-URGENT"))
-        lines.append((ok, 1))
-    spark.createDataFrame(
-        orders,
-        "o_orderkey long, o_custkey long, o_orderstatus string, "
-        "o_totalprice double, o_orderdate date, o_orderpriority string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
-    spark.createDataFrame(
-        [
-            (ok, pk, 1, 1, 1.0, 10.0, 0.0, 0.0, "N", "O", datetime.date(2024, 1, 3))
-            for ok, pk in lines
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber long, "
-        "l_quantity double, l_extendedprice double, l_discount double, "
-        "l_tax double, l_returnflag string, l_linestatus string, l_shipdate date",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
-
-    rows = g_hits_bipartite(spark, str(tmp_path)).collect()
-    top_auth = [r for r in rows if r["kind"] == "authority" and r["rnk"] == 1][0]
-    top_hub = [r for r in rows if r["kind"] == "hub" and r["rnk"] == 1][0]
-    assert top_auth["node_id"] == 1  # the universally-bought part
-    assert top_hub["node_id"] == 1  # the buy-everything customer
-
-
-# ---------------------------------------------------------------------------
-# SSSP
-# ---------------------------------------------------------------------------
-
-def test_sssp_histogram_invariants(spark):
-    out = g_sssp_weighted(spark, SF).collect()
-    assert out, "hub reaches neighbors within 4 rounds"
-    # bucket 0 contains the source (dist 0)
-    b0 = [r for r in out if r["dist_bucket"] == 0]
-    assert b0 and b0[0]["min_dist_e6"] == 0
-    for r in out:
-        assert r["min_dist_e6"] <= r["max_dist_e6"]
-        assert r["dist_bucket"] == r["min_dist_e6"] // 250_000
 
 
 # ---------------------------------------------------------------------------
@@ -328,30 +266,3 @@ def test_vector_norm_audit_empty_array_is_null(spark, tmp_path):
         r = out[lbl]
         assert r["n_zero_vecs"] == n_zero
         assert r["min_qnorm2"] == mn
-
-
-def test_sssp_edge_build_hub_caps_mega_baskets(spark):
-    """Planted hot basket: an order with SSSP_BASKET_CAP+1 distinct
-    parts contributes ZERO pairs to the co-purchase edge list (the
-    per-key C(k,2) blowup is excluded in both engines), while normal
-    baskets pair as usual."""
-    from etl_generator_demo_spark.operators.graph_r10 import (
-        SSSP_BASKET_CAP,
-        sssp_copurchase_edges,
-    )
-
-    hot = [(1, p) for p in range(SSSP_BASKET_CAP + 1)]  # mega-basket
-    normal = [(2, 900), (2, 901), (3, 900), (3, 901), (3, 902)]
-    li = spark.createDataFrame(
-        hot + normal, "l_orderkey long, l_partkey long"
-    )
-    edges = sssp_copurchase_edges(li).collect()
-    got = {(r["pa"], r["pb"]): r["cnt"] for r in edges}
-    # no pair involves a hot-basket-only part (0..CAP-1 below 900)
-    assert all(pa >= 900 and pb >= 900 for pa, pb in got)
-    assert got == {(900, 901): 2, (900, 902): 1, (901, 902): 1}
-    # exactly at the cap is still included
-    at_cap = [(5, p) for p in range(SSSP_BASKET_CAP)]
-    li2 = spark.createDataFrame(at_cap, "l_orderkey long, l_partkey long")
-    n = sssp_copurchase_edges(li2).count()
-    assert n == SSSP_BASKET_CAP * (SSSP_BASKET_CAP - 1) // 2

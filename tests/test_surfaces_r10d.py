@@ -1,13 +1,9 @@
-"""Anchors for the round-10 batch-4 surfaces (verbatim SQL pins, PPR)."""
+"""Anchors for the round-10 batch-4 surfaces (verbatim SQL pins)."""
 
 import datetime
 
-from pyspark.sql import functions as F
-
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.operators.surfaces_r10d import (
-    PPR_SCALE,
-    g_personalized_pagerank,
     u_values_inline_table,
     w_range_interval_verbatim,
 )
@@ -47,28 +43,6 @@ def test_values_inline_tiers_partition_customers(spark):
     n_cust = t(spark, SF, "customer").count()
     # the tier ranges cover [-100000, 100000): every fixture balance
     assert total == n_cust
-
-
-def test_ppr_source_dominates_and_mass_bounded(spark):
-    out = g_personalized_pagerank(spark, SF).collect()
-    assert out and len(out) <= 20
-    scores = [r["ppr_e9"] for r in out]
-    assert scores == sorted(scores, reverse=True)
-    # teleport re-injection makes the source the top-ranked node
-    li = t(spark, SF, "lineitem")
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
-    e = a.join(b, "ok").filter(F.col("pa") < F.col("pb")).select("pa", "pb").distinct()
-    sym = e.select(F.col("pa").alias("u")).unionAll(e.select(F.col("pb").alias("u")))
-    hub = (
-        sym.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .orderBy(F.desc("d"), "u")
-        .first()["u"]
-    )
-    assert out[0]["part_id"] == hub
-    # per-edge flooring only leaks mass: total never exceeds SCALE
-    assert sum(scores) <= PPR_SCALE
 
 
 def test_ivf_nprobe_sweep_monotone_and_exhaustive(spark):

@@ -608,7 +608,7 @@ EXPECTATIONS: dict[str, dict] = {
     # Round-8 graph family. LPA/k-core localCheckpoint per round, so
     # the visible plan is the post-iteration tail only (like
     # x2_dedup_clusters); the per-round budget is two keyed shuffles
-    # (count + arg-max) documented in graph_ext.py.
+    # (count + arg-max) documented in graph.py.
     "g_label_propagation": {"max_exchanges": 1},
     "g_community_sizes": {"max_exchanges": 7, "min_broadcast": 1},
     "g_modularity_lpa": {"max_exchanges": 11, "min_broadcast": 3},
