@@ -104,6 +104,26 @@ _REWRITTEN_SINCE_GREEN = (
     "g_bfs_hop_histogram",
     "g_personalized_pagerank",
     "g_sssp_weighted",
+    # near-dup pair family on one overlap kernel (dedup.overlap_pairs),
+    # LSH pairs through pairs_from_banded / doc_lsh_pairs, sweeps moved
+    # into dedup.py and textops.py
+    "x2_ngram_jaccard_pairs",
+    "x2_lsh_precision_report",
+    "x2_minhash_estimate_error",
+    "x2_minhash_k_sweep",
+    "x2_dedup_qa_sample",
+    "x2_jaccard_threshold_sweep",
+    "x2_lsh_band_tuning_curve",
+    "x2_simhash_neardup_pairs",
+    "x2_source_overlap_matrix",
+    "x2_token_overlap_join",
+    "x2_edit_distance_pairs",
+    "x2_shingle_containment_pairs",
+    "x2_bbit_minhash_estimates",
+    "x2_dedup_methods_agreement",
+    "x4_corpus_pipeline",
+    "x4_pipeline_attrition",
+    "x4_quality_threshold_sweep",
 )
 
 

@@ -142,21 +142,11 @@ class ETLPipelineExecutor:
             # — the full MinHash-LSH -> connected-components pipeline as
             # one ETL step: only the canonical doc of each near-dup
             # cluster survives. Shapes documented in SCALE.md §Dedup.
-            from etl_generator_demo_spark.operators.dedup import (
-                doc_shingles,
-                lsh_candidate_pairs,
-                minhash_signatures,
-            )
+            from etl_generator_demo_spark.operators.dedup import doc_lsh_pairs
             from etl_generator_demo_spark.operators.dedup_clusters import dedup_corpus
 
             id_col = step.get("id_col", "doc_id")
-            text_col = step.get("text_col", "text")
-            pairs = lsh_candidate_pairs(
-                minhash_signatures(
-                    doc_shingles(df, id_col=id_col, text_col=text_col, distinct=False),
-                    id_col=id_col,
-                )
-            )
+            pairs = doc_lsh_pairs(df, id_col=id_col, text_col=step.get("text_col", "text"))
             return (
                 dedup_corpus(df, pairs, id_col=id_col)
                 .filter(F.col("is_keep"))

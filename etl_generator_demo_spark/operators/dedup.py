@@ -14,6 +14,14 @@ whole-stage-codegen; no Python UDFs anywhere):
 - SimHash:        sign-of-sum fingerprints (16-bit demo groups; 64-bit
                   4x16-band Manku-setting hamming<=3 pairs)
 
+Every exact pair scorer (Jaccard, containment, the estimator checks,
+the threshold sweep, setsim's token join) reads ONE overlap kernel,
+`overlap_pairs`; every MinHash candidate set comes from
+`pairs_from_banded`. The oracles mirror both: `_duck_bands` spells the
+band layout from NUM_HASHES/BANDS, `_DUCK_LSH` and `_duck_overlap` sit
+on top of it. The tuning sweeps (band factorizations, Jaccard
+thresholds, signature size k) live here beside the operators they tune.
+
 Determinism: all hashing is md5 (identical semantics in Spark and
 DuckDB), so every operator here has an exact SQL oracle. MinHash uses
 the *lexicographic min of hex digests* per seed — engine-portable, no
@@ -27,6 +35,8 @@ scale, not on the full corpus.
 """
 
 from __future__ import annotations
+
+from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -190,6 +200,16 @@ def pairs_from_banded(
     )
 
 
+def doc_lsh_pairs(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)`` MinHash-LSH candidate pairs of a
+    ``(id, text)`` relation: shingles (duplicates kept — min() does not
+    need the distinct shuffle) → signatures → banded self-join."""
+    sh = doc_shingles(docs, id_col=id_col, text_col=text_col, distinct=False)
+    return lsh_candidate_pairs(minhash_signatures(sh, id_col=id_col), id_col=id_col)
+
+
 def corpus_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs for the FULL documents corpus, served from
     the persisted band index (`ensure_full_band_index` — ingest-time
@@ -210,10 +230,7 @@ def corpus_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return pairs_from_banded(keyed)
     except Exception as exc:
         _warn_fallback_once("corpus_candidate_pairs", exc)
-        docs = t(spark, sf_dir, "documents")
-        return lsh_candidate_pairs(
-            minhash_signatures(doc_shingles(docs, distinct=False))
-        )
+        return doc_lsh_pairs(t(spark, sf_dir, "documents"))
 
 
 def corpus_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,40 +283,67 @@ def corpus_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         return doc_shingles(t(spark, sf_dir, "documents"))
 
 
-def ngram_jaccard_pairs(
-    shingles: DataFrame, id_col: str = "doc_id", threshold: float = 0.5
-) -> DataFrame:
-    """Exact shingle-set Jaccard via inverted-index join: only pairs
-    sharing >=1 shingle are scored. `jaccard` is an int/int IEEE
-    division — bit-identical across engines, no rounding needed.
-
-    The per-doc cardinality relation is joined on BOTH endpoints, so
-    as two plan subtrees it is computed once only when AQE's exchange
-    reuse wins a best-effort stage-cache race — the r15/r16 plan-audit
-    WARNs (4 shuffles vs 3, +1 codegen stage, broadcasts unchanged)
-    were that race losing under box contention. Materializing it once
-    with an eager localCheckpoint (n_docs × 16 B — tiny) makes the
-    single computation DETERMINISTIC and drops both aggregate subtrees
-    from the visible plan (guide §2.4: two consumers, one exchange)."""
-    card = (
-        shingles.groupBy(id_col)
+def set_cardinalities(sets: DataFrame) -> DataFrame:
+    """``(doc_id, card)`` of a ``(doc_id, elem)`` set relation. Every
+    consumer joins it on both pair endpoints; as two plan subtrees it
+    would be computed once only when AQE's exchange reuse wins a
+    best-effort stage-cache race, so it is materialized once with an
+    eager localCheckpoint (n_docs × 16 B) and both aggregate subtrees
+    leave the visible plan."""
+    return (
+        sets.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("card"))
         .localCheckpoint(eager=True)
     )
-    a, b = shingles.alias("a"), shingles.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
+
+
+def pair_intersections(
+    sets: DataFrame, elem: str, candidates: DataFrame | None = None
+) -> DataFrame:
+    """``(doc_a, doc_b, inter)`` for every pair of sets in a
+    ``(doc_id, elem)`` relation (each row once) sharing at least one
+    element: the inverted-index self-join on ``elem``, ``doc_a <
+    doc_b``, counted per pair. Pairs sharing nothing never
+    materialize. ``candidates`` — a ``(doc_a, doc_b)`` relation such
+    as LSH pairs — semi-joins the pair stream before the count, so
+    only those pairs are counted; a caller sizing that join hints the
+    relation it passes."""
+    a, b = sets.alias("a"), sets.alias("b")
+    pairs = (
+        a.join(b, elem)
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
     )
-    ca = card.select(F.col(id_col).alias("doc_a"), F.col("card").alias("card_a"))
-    cb = card.select(F.col(id_col).alias("doc_b"), F.col("card").alias("card_b"))
+    if candidates is not None:
+        pairs = pairs.join(candidates, ["doc_a", "doc_b"], "left_semi")
+    return pairs.groupBy("doc_a", "doc_b").agg(F.count(F.lit(1)).alias("inter"))
+
+
+def overlap_pairs(
+    sets: DataFrame, elem: str, candidates: DataFrame | None = None
+) -> DataFrame:
+    """``(doc_a, doc_b, inter, card_a, card_b)``: the
+    :func:`pair_intersections` of ``sets`` with the
+    :func:`set_cardinalities` of both endpoints. Callers apply their
+    Jaccard, containment or estimate test to the integer columns
+    (cross-multiplication, no float threshold)."""
+    card = set_cardinalities(sets)
+    ca = card.select(F.col("doc_id").alias("doc_a"), F.col("card").alias("card_a"))
+    cb = card.select(F.col("doc_id").alias("doc_b"), F.col("card").alias("card_b"))
     return (
-        inter.join(ca, "doc_a")
+        pair_intersections(sets, elem, candidates)
+        .join(ca, "doc_a")
         .join(cb, "doc_b")
+        .select("doc_a", "doc_b", "inter", "card_a", "card_b")
+    )
+
+
+def ngram_jaccard_pairs(shingles: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Exact shingle-set Jaccard via the overlap kernel: only pairs
+    sharing >=1 shingle are scored. `jaccard` is an int/int IEEE
+    division — bit-identical across engines, no rounding needed."""
+    return (
+        overlap_pairs(shingles, "shingle")
         .withColumn(
             "jaccard",
             F.col("inter").cast("double")
@@ -362,6 +406,82 @@ _DUCK_SHINGLES = """
 """
 
 
+def _duck_minhash_cols() -> str:
+    # mirror of minhash_signatures: 4 slices of 8 hex chars per digest
+    return ",\n           ".join(
+        f"MIN(SUBSTR(MD5('s{i // 4}|' || shingle), {8 * (i % 4) + 1}, 8)) AS mh{i}"
+        for i in range(NUM_HASHES)
+    )
+
+
+def _duck_band_key(b: int, slot: str = "mh", bands: int = BANDS) -> str:
+    # band b's key: its rows-per-band signature slots concatenated
+    rows = NUM_HASHES // bands
+    return " || ".join(f"{slot}{i}" for i in range(b * rows, (b + 1) * rows))
+
+
+def _duck_bands(src: str, bands: int = BANDS) -> str:
+    """SQL mirror of :func:`banded_keys`: one ``(doc_id, band_id,
+    band_key)`` row per band per doc of the signature relation
+    ``src``."""
+    return "\n        UNION ALL\n        ".join(
+        f"SELECT doc_id, {b} AS band_id, {_duck_band_key(b, bands=bands)} AS band_key"
+        f" FROM {src}"
+        for b in range(bands)
+    )
+
+
+def _duck_band_pairs(bands: str) -> str:
+    # mirror of pairs_from_banded over a (doc_id, band_id, band_key) relation
+    return f"""SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM {bands} a JOIN {bands} b
+          ON a.band_id = b.band_id AND a.band_key = b.band_key
+             AND a.doc_id < b.doc_id"""
+
+
+#: SQL mirror of :func:`lsh_candidate_pairs` over a ``shingles`` CTE:
+#: signatures ``sigs``, their band rows ``bands`` and the distinct
+#: candidate pairs ``cand(doc_a, doc_b)``.
+_DUCK_LSH = f"""
+    sigs AS (
+        SELECT doc_id, {_duck_minhash_cols()}
+        FROM shingles GROUP BY doc_id
+    ),
+    bands AS (
+        {_duck_bands("sigs")}
+    ),
+    cand AS (
+        {_duck_band_pairs("bands")}
+    )"""
+
+
+def _duck_overlap(
+    sets: str = "shingles", elem: str = "shingle", candidates: str | None = None
+) -> str:
+    """SQL mirror of :func:`overlap_pairs`: CTEs ``card`` and
+    ``overlap(doc_a, doc_b, inter, card_a, card_b)`` over the set
+    relation ``sets(doc_id, elem)``; ``candidates`` names a
+    ``(doc_a, doc_b)`` CTE that restricts the counted pairs."""
+    keep = (
+        f"\n              AND (a.doc_id, b.doc_id) IN (SELECT (doc_a, doc_b) FROM {candidates})"
+        if candidates
+        else ""
+    )
+    return f"""
+    card AS (SELECT doc_id, COUNT(*) AS card FROM {sets} GROUP BY doc_id),
+    overlap AS (
+        SELECT i.doc_a, i.doc_b, i.inter, ca.card AS card_a, cb.card AS card_b
+        FROM (
+            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
+            FROM {sets} a JOIN {sets} b
+              ON a.{elem} = b.{elem} AND a.doc_id < b.doc_id{keep}
+            GROUP BY a.doc_id, b.doc_id
+        ) i
+        JOIN card ca ON ca.doc_id = i.doc_a
+        JOIN card cb ON cb.doc_id = i.doc_b
+    )"""
+
+
 @register(
     "x1_dedup_exact",
     oracle="""
@@ -385,31 +505,11 @@ def x1_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _duck_minhash_cols() -> str:
-    # mirror of minhash_signatures: 4 slices of 8 hex chars per digest
-    return ",\n           ".join(
-        f"MIN(SUBSTR(MD5('s{i // 4}|' || shingle), {8 * (i % 4) + 1}, 8)) AS mh{i}"
-        for i in range(NUM_HASHES)
-    )
-
-
 @register(
     "x2_minhash_lsh_pairs",
     oracle=f"""
-    {_DUCK_SHINGLES},
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    band0 AS (SELECT doc_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs),
-    band1 AS (SELECT doc_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM sigs)
-    SELECT DISTINCT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM band0 a JOIN band0 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        UNION ALL
-        SELECT a.doc_id, b.doc_id
-        FROM band1 a JOIN band1 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-    )
+    {_DUCK_SHINGLES},{_DUCK_LSH}
+    SELECT doc_a, doc_b FROM cand
     ORDER BY doc_a, doc_b
     """,
     survey_ids=("X2",),
@@ -427,20 +527,11 @@ def x2_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "x2_ngram_jaccard_pairs",
     oracle=f"""
-    {_DUCK_SHINGLES},
-    card AS (SELECT doc_id, COUNT(*) AS card FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
+    {_DUCK_SHINGLES},{_duck_overlap()}
     SELECT doc_a, doc_b,
-           CAST(inter AS DOUBLE) / (ca.card + cb.card - inter) AS jaccard
-    FROM inter
-    JOIN card ca ON ca.doc_id = doc_a
-    JOIN card cb ON cb.doc_id = doc_b
-    WHERE CAST(inter AS DOUBLE) / (ca.card + cb.card - inter) >= 0.5
+           CAST(inter AS DOUBLE) / (card_a + card_b - inter) AS jaccard
+    FROM overlap
+    WHERE CAST(inter AS DOUBLE) / (card_a + card_b - inter) >= 0.5
     ORDER BY doc_a, doc_b
     """,
     survey_ids=("X2",),
@@ -496,7 +587,6 @@ BROADCAST_CANDIDATES_MAX_ROWS = 2_000_000
 
 def verified_neardup_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
     threshold: float = 0.5,
     broadcast_candidates: bool | None = None,
 ) -> DataFrame:
@@ -516,39 +606,28 @@ def verified_neardup_pairs(
     static size stats cannot silently re-broadcast), which is the
     dup-heavy 100 TB shape. Pass ``broadcast_candidates`` to force
     either plan."""
-    cand = lsh_candidate_pairs(
-        minhash_signatures(doc_shingles(docs, id_col=id_col, distinct=False), id_col=id_col)
-    ).localCheckpoint(eager=True)  # consumed twice (doc prune + pair filter):
-    # materialize the candidate pairs once instead of re-running the
-    # whole shingle->minhash->band pipeline per consumer
+    cand = doc_lsh_pairs(docs).localCheckpoint(eager=True)  # consumed
+    # twice (doc prune + pair filter): materialize the candidate pairs
+    # once instead of re-running the whole shingle->minhash->band
+    # pipeline per consumer
     if broadcast_candidates is None:
         # count of an eagerly-checkpointed relation: no recompute
         broadcast_candidates = cand.count() <= BROADCAST_CANDIDATES_MAX_ROWS
     _side = F.broadcast if broadcast_candidates else (lambda df: df.hint("merge"))
     cand_docs = (
-        cand.select(F.col("doc_a").alias(id_col))
-        .union(cand.select(F.col("doc_b").alias(id_col)))
+        cand.select(F.col("doc_a").alias("doc_id"))
+        .union(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    sh = doc_shingles(docs, id_col=id_col).join(
-        _side(cand_docs), id_col, "left_semi"
-    )
-    card = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("card"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .join(_side(cand), ["doc_a", "doc_b"], "left_semi")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    ca = card.select(F.col(id_col).alias("doc_a"), F.col("card").alias("card_a"))
-    cb = card.select(F.col(id_col).alias("doc_b"), F.col("card").alias("card_b"))
+    sh = doc_shingles(docs).join(_side(cand_docs), "doc_id", "left_semi")
+    # the cardinality rejoins stream candidate-sized pairs, so they take
+    # the candidate sizing too (overlap_pairs leaves them to Catalyst)
+    card = set_cardinalities(sh)
+    ca = card.select(F.col("doc_id").alias("doc_a"), F.col("card").alias("card_a"))
+    cb = card.select(F.col("doc_id").alias("doc_b"), F.col("card").alias("card_b"))
     return (
-        inter.join(_side(ca), "doc_a")
+        pair_intersections(sh, "shingle", candidates=_side(cand))
+        .join(_side(ca), "doc_a")
         .join(_side(cb), "doc_b")
         .withColumn(
             "jaccard",
@@ -560,44 +639,16 @@ def verified_neardup_pairs(
     )
 
 
-_DUCK_VERIFIED = f"""
-    {_DUCK_SHINGLES},
-    sigs AS (
-        SELECT doc_id, {{minhash_cols}}
-        FROM shingles GROUP BY doc_id
-    ),
-    band0 AS (SELECT doc_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs),
-    band1 AS (SELECT doc_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM sigs),
-    cand AS (
-        SELECT DISTINCT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band0 a JOIN band0 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-            UNION ALL
-            SELECT a.doc_id, b.doc_id
-            FROM band1 a JOIN band1 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        )
-    ),
-    card AS (SELECT doc_id, COUNT(*) AS card FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        WHERE (a.doc_id, b.doc_id) IN (SELECT (doc_a, doc_b) FROM cand)
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT doc_a, doc_b,
-           CAST(inter AS DOUBLE) / (ca.card + cb.card - inter) AS jaccard
-    FROM inter
-    JOIN card ca ON ca.doc_id = doc_a
-    JOIN card cb ON cb.doc_id = doc_b
-    WHERE CAST(inter AS DOUBLE) / (ca.card + cb.card - inter) >= 0.5
-    ORDER BY doc_a, doc_b
-    """
-
-
 @register(
     "x2_neardup_verified",
-    oracle=_DUCK_VERIFIED.format(minhash_cols=_duck_minhash_cols()),
+    oracle=f"""
+    {_DUCK_SHINGLES},{_DUCK_LSH},{_duck_overlap(candidates="cand")}
+    SELECT doc_a, doc_b,
+           CAST(inter AS DOUBLE) / (card_a + card_b - inter) AS jaccard
+    FROM overlap
+    WHERE CAST(inter AS DOUBLE) / (card_a + card_b - inter) >= 0.5
+    ORDER BY doc_a, doc_b
+    """,
     survey_ids=("X2",),
 )
 def x2_neardup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -639,20 +690,11 @@ def x1_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "x2_minhash_lsh_pairs_guarded",
     oracle=f"""
-    {_DUCK_SHINGLES},
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    keyed AS (
-        SELECT doc_id, 0 AS band_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs
-        UNION ALL
-        SELECT doc_id, 1 AS band_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM sigs
-    ),
+    {_DUCK_SHINGLES},{_DUCK_LSH},
     sized AS (
         SELECT doc_id, band_id, band_key,
                COUNT(*) OVER (PARTITION BY band_id, band_key) AS bucket_n
-        FROM keyed
+        FROM bands
     ),
     guarded AS (SELECT * FROM sized WHERE bucket_n <= 2)
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -812,14 +854,7 @@ def x2_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.substring("simhash", 1 + k * band_w, band_w).alias("band_key"),
         )
         bands = b if bands is None else bands.unionByName(b)
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
-    cand = (
-        a.join(b, ["band_id", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = pairs_from_banded(bands)
     fa = fp.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"))
     fb = fp.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"))
     hamming = sum(
@@ -836,49 +871,98 @@ def x2_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+
+
 # ---------------------------------------------------------------------------
-# LSH tuning diagnostic: precision of the candidate tier by band votes
+# Estimator checks over scored candidate pairs
 # ---------------------------------------------------------------------------
+
+
+def scored_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus's LSH candidate pairs with both endpoints' signature
+    slots (``a0``… and ``b0``…) and the exact shingle Jaccard
+    floor-scaled to micro-units, ``true_j_e6`` (0 for a pair that
+    collides on a band without sharing a shingle) — the relation the
+    MinHash estimator checks read.
+
+    Scale: signatures join the narrow candidate pair relation (2 ids +
+    k 8-char slots); the exact tier is candidate-restricted (shingles
+    semi-pruned to candidate docs before the overlap kernel), because
+    only candidate pairs reach the output."""
+    sh = corpus_shingles(spark, sf_dir)
+    sigs = minhash_signatures(sh)
+    pairs = lsh_candidate_pairs(sigs).localCheckpoint(eager=True)
+    cand_docs = (
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+    )
+    ov = overlap_pairs(sh.join(cand_docs, "doc_id", "left_semi"), "shingle")
+    slots = range(NUM_HASHES)
+    sa = sigs.select(
+        F.col("doc_id").alias("doc_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in slots]
+    )
+    sb = sigs.select(
+        F.col("doc_id").alias("doc_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in slots]
+    )
+    true_j = F.floor(
+        F.col("inter") * 1000000.0 / (F.col("card_a") + F.col("card_b") - F.col("inter"))
+    ).cast("long")
+    return (
+        pairs.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .join(ov, ["doc_a", "doc_b"], "left")
+        .select(
+            "doc_a",
+            "doc_b",
+            *[f"a{i}" for i in slots],
+            *[f"b{i}" for i in slots],
+            F.coalesce(true_j, F.lit(0)).alias("true_j_e6"),
+        )
+    )
+
+
+def _slot_matches(k: int) -> Column:
+    # signature slots 0..k-1 on which the two endpoints agree
+    return sum(F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(k))
+
+
+#: SQL mirror of :func:`scored_lsh_pairs` (without the candidate
+#: restriction: the left join makes the rows identical).
+_DUCK_SCORED = f"""
+    {_DUCK_SHINGLES},{_DUCK_LSH},{_duck_overlap()},
+    scored AS (
+        SELECT c.doc_a, c.doc_b,
+               {", ".join(f"sa.mh{i} AS a{i}" for i in range(NUM_HASHES))},
+               {", ".join(f"sb.mh{i} AS b{i}" for i in range(NUM_HASHES))},
+               COALESCE(CAST(FLOOR(o.inter * 1000000.0
+                   / (o.card_a + o.card_b - o.inter)) AS BIGINT), 0) AS true_j_e6
+        FROM cand c
+        JOIN sigs sa ON sa.doc_id = c.doc_a
+        JOIN sigs sb ON sb.doc_id = c.doc_b
+        LEFT JOIN overlap o ON o.doc_a = c.doc_a AND o.doc_b = c.doc_b
+    )"""
+
+
+def _duck_slot_matches(k: int) -> str:
+    return " + ".join(f"(CASE WHEN a{i} = b{i} THEN 1 ELSE 0 END)" for i in range(k))
+
+
 @register(
     "x2_lsh_precision_report",
     oracle=f"""
-    {_DUCK_SHINGLES},
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    band0 AS (SELECT doc_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs),
-    band1 AS (SELECT doc_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM sigs),
-    cand AS (
-        SELECT doc_a, doc_b, CAST(COUNT(*) AS BIGINT) AS bands_matched FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band0 a JOIN band0 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-            UNION ALL
-            SELECT a.doc_id, b.doc_id
-            FROM band1 a JOIN band1 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        ) GROUP BY doc_a, doc_b
-    ),
-    card AS (SELECT doc_id, COUNT(*) AS card FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    j AS (
-        SELECT c.bands_matched,
-               COALESCE(CAST(FLOOR(i.inter * 1000000.0
-                   / (ca.card + cb.card - i.inter)) AS BIGINT), 0) AS j_e6
-        FROM cand c
-        LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-        LEFT JOIN card ca ON ca.doc_id = c.doc_a
-        LEFT JOIN card cb ON cb.doc_id = c.doc_b
-    )
+    {_DUCK_SCORED}
     SELECT bands_matched,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(CASE WHEN j_e6 >= 500000 THEN 1 ELSE 0 END) AS BIGINT) AS n_true_dups,
-           CAST(FLOOR(CAST(SUM(j_e6) AS DOUBLE) / COUNT(*)) AS BIGINT) AS avg_jaccard_e6
-    FROM j GROUP BY bands_matched ORDER BY bands_matched
+           CAST(SUM(CASE WHEN true_j_e6 >= 500000 THEN 1 ELSE 0 END) AS BIGINT) AS n_true_dups,
+           CAST(FLOOR(CAST(SUM(true_j_e6) AS DOUBLE) / COUNT(*)) AS BIGINT) AS avg_jaccard_e6
+    FROM (
+        SELECT CAST({" + ".join(
+            f"(CASE WHEN {_duck_band_key(b, 'a')} = {_duck_band_key(b, 'b')} THEN 1 ELSE 0 END)"
+            for b in range(BANDS)
+        )} AS BIGINT) AS bands_matched, true_j_e6
+        FROM scored
+    ) GROUP BY bands_matched ORDER BY bands_matched
     """,
     survey_ids=("X2",),
 )
@@ -890,67 +974,29 @@ def x2_lsh_precision_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hashes, bands) operating point on the S-curve: 2-band votes
     should be near-pure, 1-band votes show the false-positive tail.
 
-    Per-pair Jaccard floor-scales to BIGINT micro-units BEFORE the
-    bucket mean (SUM(int)/count — order-independent); pairs that
-    collide on a band without sharing any shingle verify to 0. The
-    verification tier is CANDIDATE-RESTRICTED (shingles semi-pruned to
-    candidate docs before the inverted-index self-join, the
-    `x2_neardup_verified` discipline) — the report only ever reads
-    candidate pairs, so the all-pairs intersection would be paid-for
-    work thrown away. The oracle keeps the mechanical full chain; the
-    left join makes the outputs identical."""
-    sh = corpus_shingles(spark, sf_dir)
-    sigs = minhash_signatures(sh)
-    keyed = banded_keys(sigs)
-    a, b = keyed.alias("a"), keyed.alias("b")
-    cand = (
-        a.join(b, ["band_id", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("bands_matched"))
-        .localCheckpoint()  # narrow; feeds the semi-prune AND the report join
-    )
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh_c = sh.join(cand_docs, "doc_id", "left_semi")
-    card = sh_c.groupBy("doc_id").agg(F.count(F.lit(1)).alias("card"))
-    sa, sb = sh_c.alias("sa"), sh_c.alias("sb")
-    inter = (
-        sa.join(sb, "shingle")
-        .filter(F.col("sa.doc_id") < F.col("sb.doc_id"))
-        .groupBy(F.col("sa.doc_id").alias("doc_a"), F.col("sb.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    ca = card.select(F.col("doc_id").alias("doc_a"), F.col("card").alias("card_a"))
-    cb = card.select(F.col("doc_id").alias("doc_b"), F.col("card").alias("card_b"))
-    j = (
-        cand.join(inter, ["doc_a", "doc_b"], "left")
-        .join(ca, "doc_a", "left")
-        .join(cb, "doc_b", "left")
-        .select(
-            "bands_matched",
-            F.coalesce(
-                F.floor(
-                    F.col("inter") * 1000000.0
-                    / (F.col("card_a") + F.col("card_b") - F.col("inter"))
-                ).cast("long"),
-                F.lit(0),
-            ).alias("j_e6"),
-        )
+    A band votes when its concatenated slots agree on both endpoints
+    (the `banded_keys` key). Per-pair Jaccard floor-scales to BIGINT
+    micro-units BEFORE the bucket mean (SUM(int)/count —
+    order-independent)."""
+    rows = NUM_HASHES // BANDS
+    votes = sum(
+        F.when(
+            F.concat(*[F.col(f"a{i}") for i in range(b * rows, (b + 1) * rows)])
+            == F.concat(*[F.col(f"b{i}") for i in range(b * rows, (b + 1) * rows)]),
+            1,
+        ).otherwise(0)
+        for b in range(BANDS)
     )
     return (
-        j.groupBy("bands_matched")
+        scored_lsh_pairs(spark, sf_dir)
+        .select(votes.cast("long").alias("bands_matched"), "true_j_e6")
+        .groupBy("bands_matched")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs"),
-            F.sum(F.when(F.col("j_e6") >= 500000, 1).otherwise(0))
+            F.sum(F.when(F.col("true_j_e6") >= 500000, 1).otherwise(0))
             .cast("long")
             .alias("n_true_dups"),
-            F.floor(F.sum("j_e6").cast("double") / F.count(F.lit(1)))
+            F.floor(F.sum("true_j_e6").cast("double") / F.count(F.lit(1)))
             .cast("long")
             .alias("avg_jaccard_e6"),
         )
@@ -959,24 +1005,125 @@ def x2_lsh_precision_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
+    "x2_minhash_estimate_error",
+    oracle=f"""
+    {_DUCK_SCORED}
+    SELECT doc_a, doc_b, n_hash_matches,
+           CAST(FLOOR(n_hash_matches * 1000000 / {NUM_HASHES}) AS BIGINT) AS est_j_e6,
+           true_j_e6,
+           ABS(CAST(FLOOR(n_hash_matches * 1000000 / {NUM_HASHES}) AS BIGINT) - true_j_e6)
+               AS abs_err_e6
+    FROM (
+        SELECT doc_a, doc_b, true_j_e6,
+               CAST({_duck_slot_matches(NUM_HASHES)} AS BIGINT) AS n_hash_matches
+        FROM scored
+    )
+    ORDER BY doc_a, doc_b
+    """,
+    survey_ids=("X2",),
+)
+def x2_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash estimator validation per candidate pair: the classic
+    P[minhash match] = Jaccard estimator (matching signature slots /
+    k) against the exact shingle-set Jaccard, with the absolute error
+    — the empirical check behind choosing k={NUM_HASHES}. Every column
+    is integer arithmetic (the estimate is a rational with fixed
+    denominator, the truth floor-scales before differencing), so the
+    error surface itself hashes exactly."""
+    est = F.floor(F.col("n_hash_matches") * 1000000 / NUM_HASHES).cast("long")
+    return (
+        scored_lsh_pairs(spark, sf_dir)
+        .withColumn("n_hash_matches", _slot_matches(NUM_HASHES).cast("long"))
+        .select(
+            "doc_a",
+            "doc_b",
+            "n_hash_matches",
+            est.alias("est_j_e6"),
+            "true_j_e6",
+            F.abs(est - F.col("true_j_e6")).alias("abs_err_e6"),
+        )
+        .orderBy("doc_a", "doc_b")
+    )
+
+
+#: Signature sizes swept: estimates use the FIRST k slots of the one
+#: 8-slot signature (prefixes — never one signature pass per size), so
+#: the sweep measures the estimator, not fresh hashes.
+MINHASH_K_SWEEP = (2, 4, 8)
+
+
+def _minhash_k_sweep_oracle() -> str:
+    ks = ", ".join(f"({k})" for k in MINHASH_K_SWEEP)
+    mk = " ".join(f"WHEN {k} THEN m{k}" for k in MINHASH_K_SWEEP)
+    return f"""
+    {_DUCK_SCORED},
+    matched AS (
+        SELECT {", ".join(f"CAST({_duck_slot_matches(k)} AS BIGINT) AS m{k}" for k in MINHASH_K_SWEEP)},
+               true_j_e6
+        FROM scored
+    ),
+    errs AS (
+        SELECT t.k,
+               ABS(CAST(FLOOR((CASE t.k {mk} END) * 1000000.0 / t.k)
+                        AS BIGINT) - true_j_e6) AS err
+        FROM matched CROSS JOIN (VALUES {ks}) AS t(k)
+    )
+    SELECT CAST(k AS BIGINT) AS k,
+           CAST(COUNT(*) AS BIGINT) AS n_pairs,
+           CAST(SUM(err) // COUNT(*) AS BIGINT) AS mean_abs_err_e6,
+           CAST(MAX(err) AS BIGINT) AS max_abs_err_e6,
+           CAST(SUM(err * err) // COUNT(*) AS BIGINT) AS mse_e12
+    FROM errs GROUP BY k ORDER BY k
+    """
+
+
+@register(
+    "x2_minhash_k_sweep",
+    oracle=_minhash_k_sweep_oracle(),
+    survey_ids=("X2", "A1", "F6"),
+)
+def x2_minhash_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MinHash estimator's tuning curve: Jaccard-estimate error vs
+    signature size k ∈ {2,4,8} over the real LSH candidate pairs,
+    against the exact shingle Jaccard — the empirical 1/√k error
+    decay behind choosing NUM_HASHES (the sweep sibling of
+    `x2_minhash_estimate_error`, which validates the chosen k
+    per-pair). Each k's estimate uses the FIRST k slots of the one
+    8-slot signature, so the sweep costs one scored-pair build read
+    three times. Integer throughout: estimates are fixed-denominator
+    rationals, MSE stays in int64 for any pair count < ~9·10⁶
+    (err² ≤ 10¹²; beyond that the mean would shard-partial first)."""
+    scored = scored_lsh_pairs(spark, sf_dir).select(
+        *[_slot_matches(k).cast("long").alias(f"m{k}") for k in MINHASH_K_SWEEP],
+        "true_j_e6",
+    )
+    stack = ", ".join(f"{k}L, m{k}" for k in MINHASH_K_SWEEP)
+    errs = scored.select(
+        F.expr(f"stack({len(MINHASH_K_SWEEP)}, {stack}) AS (k, mk)"),
+        "true_j_e6",
+    ).select(
+        "k",
+        F.abs(
+            F.floor(F.col("mk") * 1000000.0 / F.col("k")).cast("long")
+            - F.col("true_j_e6")
+        ).alias("err"),
+    )
+    return (
+        errs.groupBy("k")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_pairs"),
+            F.expr("sum(err) div count(1)").cast("long").alias("mean_abs_err_e6"),
+            F.max("err").cast("long").alias("max_abs_err_e6"),
+            F.expr("sum(err * err) div count(1)").cast("long").alias("mse_e12"),
+        )
+        .orderBy("k")
+    )
+
+
+@register(
     "x2_source_overlap_matrix",
     oracle=f"""
-    {_DUCK_SHINGLES},
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    band0 AS (SELECT doc_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs),
-    band1 AS (SELECT doc_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM sigs),
-    cand AS (
-        SELECT DISTINCT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band0 a JOIN band0 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-            UNION ALL
-            SELECT a.doc_id, b.doc_id
-            FROM band1 a JOIN band1 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        )
-    )
+    {_DUCK_SHINGLES},{_DUCK_LSH}
     SELECT LEAST(da.source, db.source)    AS source_x,
            GREATEST(da.source, db.source) AS source_y,
            CAST(COUNT(*) AS BIGINT)       AS n_pairs
@@ -996,9 +1143,7 @@ def x2_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (two ids), normalized with least/greatest so (A,B) and
     (B,A) collapse; one count groupBy on a pairs-sized relation."""
     docs = t(spark, sf_dir, "documents")
-    pairs = lsh_candidate_pairs(
-        minhash_signatures(doc_shingles(docs, distinct=False))
-    )
+    pairs = doc_lsh_pairs(docs)
     src = docs.select("doc_id", "source")
     sa = src.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("source_a"))
     sb = src.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("source_b"))
@@ -1014,151 +1159,19 @@ def x2_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "x2_minhash_estimate_error",
-    oracle=f"""
-    {_DUCK_SHINGLES},
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    band0 AS (SELECT doc_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs),
-    band1 AS (SELECT doc_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM sigs),
-    cand AS (
-        SELECT DISTINCT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band0 a JOIN band0 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-            UNION ALL
-            SELECT a.doc_id, b.doc_id
-            FROM band1 a JOIN band1 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        )
-    ),
-    card AS (SELECT doc_id, COUNT(*) AS card FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    scored AS (
-        SELECT c.doc_a, c.doc_b,
-               CAST({" + ".join(f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)" for i in range(NUM_HASHES))} AS BIGINT) AS n_hash_matches,
-               COALESCE(CAST(FLOOR(i.inter * 1000000.0
-                   / (ca.card + cb.card - i.inter)) AS BIGINT), 0) AS true_j_e6
-        FROM cand c
-        JOIN sigs sa ON sa.doc_id = c.doc_a
-        JOIN sigs sb ON sb.doc_id = c.doc_b
-        LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-        LEFT JOIN card ca ON ca.doc_id = c.doc_a
-        LEFT JOIN card cb ON cb.doc_id = c.doc_b
-    )
-    SELECT doc_a, doc_b, n_hash_matches,
-           CAST(FLOOR(n_hash_matches * 1000000 / {NUM_HASHES}) AS BIGINT) AS est_j_e6,
-           true_j_e6,
-           ABS(CAST(FLOOR(n_hash_matches * 1000000 / {NUM_HASHES}) AS BIGINT) - true_j_e6)
-               AS abs_err_e6
-    FROM scored
-    ORDER BY doc_a, doc_b
-    """,
-    survey_ids=("X2",),
-)
-def x2_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash estimator validation per candidate pair: the classic
-    P[minhash match] = Jaccard estimator (matching signature slots /
-    k) against the exact shingle-set Jaccard, with the absolute error
-    — the empirical check behind choosing k={NUM_HASHES}. Every column
-    is integer arithmetic (the estimate is a rational with fixed
-    denominator, the truth floor-scales before differencing), so the
-    error surface itself hashes exactly.
-
-    Scale: signatures join the narrow candidate pair relation
-    (2 ids + k 8-char slots); the exact tier's inverted index is
-    candidate-restricted (shingles semi-pruned to candidate docs — the
-    `x2_neardup_verified` discipline)."""
-    sh = corpus_shingles(spark, sf_dir)
-    sigs = minhash_signatures(sh)
-    pairs = lsh_candidate_pairs(sigs).localCheckpoint()  # narrow; reused 3x
-    cand_docs = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # candidate-restrict the exact tier (x2_neardup_verified
-    # discipline): only candidate pairs reach the output, so the
-    # all-pairs intersection would be discarded work
-    sh = sh.join(cand_docs, "doc_id", "left_semi")
-    n_hashes = len([c for c in sigs.columns if c.startswith("mh")])
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(n_hashes)]
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(n_hashes)]
-    )
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(n_hashes)
-    )
-    card = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("card"))
-    s1, s2 = sh.alias("s1"), sh.alias("s2")
-    inter = (
-        s1.join(s2, "shingle")
-        .filter(F.col("s1.doc_id") < F.col("s2.doc_id"))
-        .groupBy(F.col("s1.doc_id").alias("doc_a"), F.col("s2.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    ca = card.select(F.col("doc_id").alias("doc_a"), F.col("card").alias("card_a"))
-    cb = card.select(F.col("doc_id").alias("doc_b"), F.col("card").alias("card_b"))
-    est = F.floor(F.col("n_hash_matches") * 1000000 / n_hashes).cast("long")
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_hash_matches", matches.cast("long"))
-        .join(inter, ["doc_a", "doc_b"], "left")
-        .join(ca, "doc_a", "left")
-        .join(cb, "doc_b", "left")
-        .withColumn(
-            "true_j_e6",
-            F.coalesce(
-                F.floor(
-                    F.col("inter") * 1000000.0
-                    / (F.col("card_a") + F.col("card_b") - F.col("inter"))
-                ).cast("long"),
-                F.lit(0),
-            ),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_hash_matches",
-            est.alias("est_j_e6"),
-            "true_j_e6",
-            F.abs(est - F.col("true_j_e6")).alias("abs_err_e6"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
-
-
 QA_PER_BAND = 2
 
 
 @register(
     "x2_dedup_qa_sample",
     oracle=f"""
-    {_DUCK_SHINGLES},
-    card AS (SELECT doc_id, COUNT(*) AS card FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
+    {_DUCK_SHINGLES},{_duck_overlap()},
     scored AS (
         SELECT doc_a, doc_b,
-               CAST(i * 10 // (ca.card + cb.card - i) AS BIGINT) AS jac_band,
-               CAST(i * 1000000 // (ca.card + cb.card - i) AS BIGINT) AS jac_e6
-        FROM inter
-        JOIN card ca ON ca.doc_id = doc_a
-        JOIN card cb ON cb.doc_id = doc_b
-        WHERE 2 * i >= ca.card + cb.card - i  -- jaccard >= 0.5
+               CAST(inter * 10 // (card_a + card_b - inter) AS BIGINT) AS jac_band,
+               CAST(inter * 1000000 // (card_a + card_b - inter) AS BIGINT) AS jac_e6
+        FROM overlap
+        WHERE 2 * inter >= card_a + card_b - inter  -- jaccard >= 0.5
     ),
     ranked AS (
         SELECT doc_a, doc_b, jac_band, jac_e6,
@@ -1188,37 +1201,23 @@ def x2_dedup_qa_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-reviewing the obvious 0.9s. Integer band/score arithmetic end
     to end."""
     sh = corpus_shingles(spark, sf_dir).localCheckpoint(eager=True)
-    card = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("card"))
-    inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    ca = card.select(F.col("doc_id").alias("doc_a"), F.col("card").alias("card_a"))
-    cb = card.select(F.col("doc_id").alias("doc_b"), F.col("card").alias("card_b"))
-    un = F.col("card_a") + F.col("card_b") - F.col("i")
+    un = F.col("card_a") + F.col("card_b") - F.col("inter")
     scored = (
-        inter.join(F.broadcast(ca), "doc_a")
-        .join(F.broadcast(cb), "doc_b")
-        .filter(2 * F.col("i") >= un)
+        overlap_pairs(sh, "shingle")
+        .filter(2 * F.col("inter") >= un)
         .select(
             "doc_a",
             "doc_b",
-            F.expr("CAST(i * 10 DIV (card_a + card_b - i) AS BIGINT)").alias(
+            F.expr("CAST(inter * 10 DIV (card_a + card_b - inter) AS BIGINT)").alias(
                 "jac_band"
             ),
-            F.expr("CAST(i * 1000000 DIV (card_a + card_b - i) AS BIGINT)").alias(
+            F.expr("CAST(inter * 1000000 DIV (card_a + card_b - inter) AS BIGINT)").alias(
                 "jac_e6"
             ),
         )
     )
-    from pyspark.sql import Window as W
-
     rk = F.row_number().over(
-        W.partitionBy("jac_band").orderBy(
+        Window.partitionBy("jac_band").orderBy(
             F.md5(
                 F.concat(
                     F.lit("qa|"),
@@ -1236,4 +1235,195 @@ def x2_dedup_qa_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= QA_PER_BAND)
         .select("jac_band", "doc_a", "doc_b", "jac_e6")
         .orderBy("jac_band", "doc_a", "doc_b")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Tuning curves: LSH band factorizations, Jaccard keep thresholds
+# ---------------------------------------------------------------------------
+
+#: Every factorization of the 8-hash signature: (bands, rows/band).
+LSH_CONFIGS = ((1, 8), (2, 4), (4, 2), (8, 1))
+
+
+def _tuning_oracle() -> str:
+    per_cfg = [
+        f"""
+    SELECT CAST({bands} AS BIGINT) AS bands,
+           CAST({rows} AS BIGINT) AS rows_per_band,
+           CAST(COUNT(*) AS BIGINT) AS n_candidate_pairs,
+           CAST(COUNT(DISTINCT doc_a) + COUNT(DISTINCT doc_b) AS BIGINT)
+               AS n_endpoint_slots
+    FROM ({_duck_band_pairs(f"({_duck_bands('sigs', bands)})")})"""
+        for bands, rows in LSH_CONFIGS
+    ]
+    return f"""
+    {_DUCK_SHINGLES},
+    sigs AS MATERIALIZED (
+        SELECT doc_id, {_duck_minhash_cols()}
+        FROM shingles GROUP BY doc_id
+    )
+    SELECT * FROM ({" UNION ALL ".join(per_cfg)})
+    ORDER BY bands
+    """
+
+
+@register(
+    "x2_lsh_band_tuning_curve",
+    oracle=_tuning_oracle(),
+    survey_ids=("X2", "J3", "A3", "U2"),
+)
+def x2_lsh_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Candidate-pair counts for every (bands, rows-per-band)
+    factorization of the 8-value MinHash signature — the empirical LSH
+    tuning curve. One row per config: distinct candidate pairs and
+    distinct endpoint slots. Read before committing a corpus dedup
+    pass: (8,1) is the high-recall/high-cost end (any single matching
+    minhash pairs two docs), (1,8) the high-precision end.
+
+    Scale: signatures are computed ONCE (map-combined min per doc — 8
+    values per doc in the shuffle, never shingles) and
+    localCheckpointed; each config is then a band-key self-join on the
+    signature relation. The single-row-band configs are where hot
+    buckets appear at 100 TB — the guarded production path
+    (``x2_minhash_lsh_pairs_guarded``) caps bucket width; this curve
+    is the |configs|-bounded diagnostic that justifies the cap."""
+    docs = t(spark, sf_dir, "documents")
+    sigs = minhash_signatures(doc_shingles(docs, distinct=False)).localCheckpoint(
+        eager=True
+    )
+    out = None
+    for bands, rows in LSH_CONFIGS:
+        pairs = pairs_from_banded(banded_keys(sigs, bands=bands))
+        counts = pairs.agg(
+            F.count(F.lit(1)).cast("long").alias("n_candidate_pairs"),
+            (F.count_distinct("doc_a") + F.count_distinct("doc_b"))
+            .cast("long")
+            .alias("n_endpoint_slots"),
+        ).select(
+            F.lit(bands).cast("long").alias("bands"),
+            F.lit(rows).cast("long").alias("rows_per_band"),
+            "n_candidate_pairs",
+            "n_endpoint_slots",
+        )
+        out = counts if out is None else out.unionByName(counts)
+    return out.orderBy("bands")
+
+
+#: Thresholds swept, as exact (num, den) ratios so the comparison is an
+#: integer cross-multiplication in both engines.
+JACCARD_SWEEP = ((30, 100), (50, 100), (70, 100), (90, 100))
+
+
+# Fixed expression lists for the sweep: every column derives from
+# JACCARD_SWEEP constants and fixed names, so the trees build once per
+# process instead of per DataFrame construction.
+@lru_cache(maxsize=None)
+def _sweep_flag_cols():
+    return tuple(
+        (
+            den * F.col("inter")
+            >= num * (F.col("card_a") + F.col("card_b") - F.col("inter"))
+        ).alias(f"f{num}")
+        for num, den in JACCARD_SWEEP
+    )
+
+
+@lru_cache(maxsize=None)
+def _sweep_pair_count_cols():
+    return tuple(
+        F.coalesce(F.sum(F.col(f"f{num}").cast("long")), F.lit(0))
+        .cast("long")
+        .alias(f"np{num}")
+        for num, _ in JACCARD_SWEEP
+    )
+
+
+@lru_cache(maxsize=None)
+def _sweep_doc_count_cols():
+    return tuple(
+        F.coalesce(F.sum(F.col(f"f{num}").cast("long")), F.lit(0))
+        .cast("long")
+        .alias(f"nd{num}")
+        for num, _ in JACCARD_SWEEP
+    )
+
+
+@lru_cache(maxsize=None)
+def _sweep_reshape_col():
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(num).cast("long").alias("tau_e2"),
+                    F.col(f"np{num}").alias("n_pairs"),
+                    F.col(f"nd{num}").alias("n_docs_in_pairs"),
+                )
+                for num, _ in JACCARD_SWEEP
+            ]
+        )
+    )
+
+
+def _jaccard_sweep_oracle() -> str:
+    rows = []
+    for num, den in JACCARD_SWEEP:
+        keep = f"{den} * inter >= {num} * (card_a + card_b - inter)"
+        rows.append(f"""
+    SELECT CAST({num} AS BIGINT) AS tau_e2,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM overlap WHERE {keep})
+               AS n_pairs,
+           (SELECT CAST(COUNT(DISTINCT d) AS BIGINT) FROM (
+                SELECT doc_a AS d FROM overlap WHERE {keep}
+                UNION
+                SELECT doc_b FROM overlap WHERE {keep}
+            )) AS n_docs_in_pairs""")
+    return f"""
+    {_DUCK_SHINGLES},{_duck_overlap()}
+    SELECT * FROM ({" UNION ALL ".join(rows)})
+    ORDER BY tau_e2
+    """
+
+
+@register(
+    "x2_jaccard_threshold_sweep",
+    oracle=_jaccard_sweep_oracle(),
+    survey_ids=("X2", "J3", "A1", "U2"),
+)
+def x2_jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pair and affected-doc counts at Jaccard thresholds
+    0.3/0.5/0.7/0.9 — the verification-threshold tuning curve beside
+    the LSH band curve (`x2_lsh_band_tuning_curve` sizes the CANDIDATE
+    stage; this sizes the KEEP decision: how many docs a 0.7 cut
+    removes vs a 0.9 cut, before committing a corpus pass). The
+    committed production setting is `x2_ngram_jaccard_pairs`' 0.5.
+
+    Exactness: every threshold test is an integer cross-multiplication
+    ``den·inter ≥ num·(|a|+|b|−inter)`` — no float division anywhere.
+    Scale: the overlap relation is computed once and localCheckpointed;
+    the four thresholds are boolean flag columns of one projection, so
+    the sweep is two aggregates over it — a conditional-sum pass for
+    pair counts and an exploded-endpoint groupBy for docs-in-pairs
+    (max(flag) per doc, then conditional sum) — and the four output
+    rows are an inline reshape of the joined 1-row results."""
+    pairs = overlap_pairs(corpus_shingles(spark, sf_dir), "shingle").localCheckpoint(
+        eager=True
+    )
+    nums = [num for num, _ in JACCARD_SWEEP]
+    flagged = pairs.select("doc_a", "doc_b", *_sweep_flag_cols())
+    pair_counts = flagged.agg(*_sweep_pair_count_cols())
+    doc_counts = (
+        flagged.select(
+            F.explode(F.array("doc_a", "doc_b")).alias("d"),
+            *[F.col(f"f{num}") for num in nums],
+        )
+        .groupBy("d")
+        .agg(*[F.max(f"f{num}").alias(f"f{num}") for num in nums])
+        .agg(*_sweep_doc_count_cols())
+    )
+    return (
+        pair_counts.crossJoin(doc_counts)
+        .select(_sweep_reshape_col().alias("r"))
+        .select("r.tau_e2", "r.n_pairs", "r.n_docs_in_pairs")
+        .orderBy("tau_e2")
     )

@@ -19,12 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.operators.dedup import (
+    _DUCK_LSH,
     _DUCK_SHINGLES,
-    _duck_minhash_cols,
     corpus_candidate_pairs,
-    doc_shingles,
-    lsh_candidate_pairs,
-    minhash_signatures,
 )
 from etl_generator_demo_spark.operators.graph import connected_components
 from etl_generator_demo_spark.operators.relational import t
@@ -47,26 +44,11 @@ def dedup_corpus(
 # ===========================================================================
 
 _CLUSTER_ORACLE = f"""
-    {_DUCK_SHINGLES.replace("WITH tok", "WITH RECURSIVE tok", 1)},
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    band0 AS (SELECT doc_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs),
-    band1 AS (SELECT doc_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM sigs),
-    pairs AS (
-        SELECT DISTINCT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band0 a JOIN band0 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-            UNION ALL
-            SELECT a.doc_id, b.doc_id
-            FROM band1 a JOIN band1 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        )
-    ),
+    {_DUCK_SHINGLES.replace("WITH tok", "WITH RECURSIVE tok", 1)},{_DUCK_LSH},
     edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
+        SELECT doc_a AS src, doc_b AS dst FROM cand
         UNION
-        SELECT doc_b, doc_a FROM pairs
+        SELECT doc_b, doc_a FROM cand
     ),
     reach(src, dst) AS (
         SELECT doc_id, doc_id FROM documents

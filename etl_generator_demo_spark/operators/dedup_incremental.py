@@ -35,7 +35,6 @@ from etl_generator_demo_spark.operators.ann_index import (
     INDEX_ROOT,
 )
 from etl_generator_demo_spark.operators.dedup import (
-    BANDS,
     banded_keys,
     doc_shingles,
     minhash_signatures,
@@ -197,25 +196,11 @@ def admit_batch_to_index(
 # Driver-checkable query
 # ===========================================================================
 
-def _duck_bands_cols(prefix: str = "") -> str:
-    # mirror of banded_keys over the 8-col signature: 2 bands x 4 rows
-    return (
-        f"SELECT doc_id, 0 AS band_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM {prefix}sigs"
-        f" UNION ALL "
-        f"SELECT doc_id, 1 AS band_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM {prefix}sigs"
-    )
-
-
 def _incremental_oracle() -> str:
-    from etl_generator_demo_spark.operators.dedup import _DUCK_SHINGLES, _duck_minhash_cols
+    from etl_generator_demo_spark.operators.dedup import _DUCK_LSH, _DUCK_SHINGLES
 
     return f"""
-    {_DUCK_SHINGLES},
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    bands AS ({_duck_bands_cols()}),
+    {_DUCK_SHINGLES},{_DUCK_LSH},
     hits AS (
         SELECT b.doc_id, MIN(c.doc_id) AS dup_of
         FROM bands b

@@ -196,7 +196,7 @@ def x4_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pipeline_chain_sql() -> str:
-    from etl_generator_demo_spark.operators.dedup import _duck_minhash_cols
+    from etl_generator_demo_spark.operators.dedup import _DUCK_LSH
 
     # identical staged discipline as the Spark plan; shingles/sigs are
     # computed over quality+exact-dedup SURVIVORS (stage order matters
@@ -229,22 +229,8 @@ def _pipeline_chain_sql() -> str:
                   || '_' || LEAD(tk, 3) OVER w || '_' || LEAD(tk, 4) OVER w AS shingle
         FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
     ),
-    shingles AS (SELECT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    band0 AS (SELECT doc_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs),
-    band1 AS (SELECT doc_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM sigs),
-    dropped AS (
-        SELECT DISTINCT doc_b AS doc_id FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band0 a JOIN band0 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-            UNION ALL
-            SELECT a.doc_id, b.doc_id
-            FROM band1 a JOIN band1 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        )
-    ),
+    shingles AS (SELECT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),{_DUCK_LSH},
+    dropped AS (SELECT DISTINCT doc_b AS doc_id FROM cand),
     kept AS (
         SELECT e.doc_id, e.source, e.n_tokens
         FROM exact e
@@ -274,11 +260,7 @@ def corpus_survivor_stages(spark: SparkSession, sf_dir: str):
     ``x4_pipeline_attrition`` so the two registered views of the same
     pipeline can never drift apart. Stage semantics documented on
     ``x4_corpus_pipeline``."""
-    from etl_generator_demo_spark.operators.dedup import (
-        doc_shingles,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    from etl_generator_demo_spark.operators.dedup import doc_lsh_pairs
 
     docs = t(spark, sf_dir, "documents")
     toks = F.split("text", " ")
@@ -297,10 +279,7 @@ def corpus_survivor_stages(spark: SparkSession, sf_dir: str):
         keep,
         (F.md5(qual["text"]) == keep["h"]) & (qual["doc_id"] == keep["keep_id"]),
     ).select("doc_id", "source", "text", "n_tokens")
-    pairs = lsh_candidate_pairs(
-        minhash_signatures(doc_shingles(exact, distinct=False))
-    )
-    dropped = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    dropped = doc_lsh_pairs(exact).select(F.col("doc_b").alias("doc_id")).distinct()
     kept = exact.join(dropped, "doc_id", "left_anti").select(
         "doc_id", "source", "n_tokens"
     )

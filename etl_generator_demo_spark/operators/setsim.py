@@ -37,11 +37,13 @@ from pyspark.sql import functions as F
 from etl_generator_demo_spark.operators.dedup import (
     corpus_candidate_pairs,
     corpus_shingles,
-    doc_shingles,
+    doc_lsh_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
+    overlap_pairs,
+    _DUCK_LSH,
     _DUCK_SHINGLES,
-    _duck_minhash_cols,
+    _duck_overlap,
 )
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.registry import register
@@ -61,87 +63,59 @@ def doc_tokens(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
 
 
 def token_overlap_join(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num: int = JACCARD_NUM,
-    den: int = JACCARD_DEN,
+    docs: DataFrame, num: int = JACCARD_NUM, den: int = JACCARD_DEN
 ) -> DataFrame:
     """All pairs with distinct-token Jaccard ≥ num/den via prefix
     filtering. Returns (doc_a, doc_b, overlap, union_size, jaccard).
 
     Plan shape: tokens → df counts (vocab-sized, map-combined) →
     per-doc rank window → prefix self-join (candidates) → exact
-    overlap restricted to candidates. No all-pairs stage anywhere.
+    overlap restricted to candidates (the overlap kernel with the
+    prefix pairs as ``candidates``). No all-pairs stage anywhere.
     The distinct token relation feeds four consumers (cardinalities,
     document frequencies, the rank window, and both sides of the exact
     overlap join) — materialize it once instead of re-running the
     explode+distinct per branch."""
-    tok = doc_tokens(docs, id_col, text_col).localCheckpoint(eager=True)
-    card = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("card"))
+    tok = doc_tokens(docs).localCheckpoint(eager=True)
+    card = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("card"))
     df_rel = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
 
     # prefix_len = card - ceil(num*card/den) + 1, all-integer
     ranked = (
         tok.join(df_rel, "token")
-        .join(card, id_col)
+        .join(card, "doc_id")
         .withColumn(
             "rk",
             F.row_number().over(
-                Window.partitionBy(id_col).orderBy(F.col("df").asc(), F.col("token").asc())
+                Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("token").asc())
             ),
         )
     )
     prefix = ranked.filter(
         F.col("rk")
         <= F.col("card") - F.floor((num * F.col("card") + num) / den).cast("long") + 1
-    ).select(id_col, "token")
+    ).select("doc_id", "token")
 
     cand = (
         prefix.alias("a")
         .join(prefix.alias("b"), "token")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
 
-    a, b = tok.alias("a"), tok.alias("b")
-    ov = (
-        a.join(b, "token")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .join(cand, ["doc_a", "doc_b"], "left_semi")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("overlap"))
-    )
-    ca = card.select(F.col(id_col).alias("doc_a"), F.col("card").alias("card_a"))
-    cb = card.select(F.col(id_col).alias("doc_b"), F.col("card").alias("card_b"))
-    union_size = F.col("card_a") + F.col("card_b") - F.col("overlap")
+    union_size = F.col("card_a") + F.col("card_b") - F.col("inter")
     return (
-        ov.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .filter(den * F.col("overlap") >= num * union_size)
+        overlap_pairs(tok, "token", candidates=cand)
+        .filter(den * F.col("inter") >= num * union_size)
         .select(
             "doc_a",
             "doc_b",
-            F.col("overlap").cast("long").alias("overlap"),
+            F.col("inter").cast("long").alias("overlap"),
             union_size.cast("long").alias("union_size"),
-            (F.col("overlap").cast("double") / union_size).alias("jaccard"),
+            (F.col("inter").cast("double") / union_size).alias("jaccard"),
         )
     )
-
-
-_DUCK_TOKENS = """
-    WITH tok AS (
-        SELECT DISTINCT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS token
-        FROM documents
-    ),
-    card AS (SELECT doc_id, COUNT(*) AS card FROM tok GROUP BY doc_id)
-"""
 
 
 @register(
@@ -149,21 +123,16 @@ _DUCK_TOKENS = """
     # Deliberately brute-force (no prefix filter): hash equality proves
     # the Spark-side pruning drops no qualifying pair.
     oracle=f"""
-    {_DUCK_TOKENS},
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS overlap
-        FROM tok a JOIN tok b ON a.token = b.token AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    WITH tok AS (
+        SELECT DISTINCT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS token
+        FROM documents
+    ),{_duck_overlap("tok", "token")}
     SELECT doc_a, doc_b,
-           CAST(overlap AS BIGINT) AS overlap,
-           CAST(ca.card + cb.card - overlap AS BIGINT) AS union_size,
-           CAST(overlap AS DOUBLE) / (ca.card + cb.card - overlap) AS jaccard
-    FROM inter
-    JOIN card ca ON ca.doc_id = doc_a
-    JOIN card cb ON cb.doc_id = doc_b
-    WHERE {JACCARD_DEN} * overlap
-          >= {JACCARD_NUM} * (ca.card + cb.card - overlap)
+           CAST(inter AS BIGINT) AS overlap,
+           CAST(card_a + card_b - inter AS BIGINT) AS union_size,
+           CAST(inter AS DOUBLE) / (card_a + card_b - inter) AS jaccard
+    FROM overlap
+    WHERE {JACCARD_DEN} * inter >= {JACCARD_NUM} * (card_a + card_b - inter)
     ORDER BY doc_a, doc_b
     """,
     survey_ids=("X2",),
@@ -182,9 +151,7 @@ def edit_distance_pairs(
     candidate pairs. Texts join back to the narrow candidate relation
     co-keyed; the quadratic-in-length distance runs once per candidate,
     never per corpus pair."""
-    cand = lsh_candidate_pairs(
-        minhash_signatures(doc_shingles(docs, id_col=id_col, distinct=False), id_col=id_col)
-    )
+    cand = doc_lsh_pairs(docs, id_col=id_col, text_col=text_col)
     ta = docs.select(F.col(id_col).alias("doc_a"), F.col(text_col).alias("text_a"))
     tb = docs.select(F.col(id_col).alias("doc_b"), F.col(text_col).alias("text_b"))
     dist = F.levenshtein("text_a", "text_b")
@@ -207,24 +174,7 @@ def edit_distance_pairs(
 @register(
     "x2_edit_distance_pairs",
     oracle=f"""
-    {_DUCK_SHINGLES},
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    band0 AS (SELECT doc_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs),
-    band1 AS (SELECT doc_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM sigs),
-    cand AS (
-        SELECT DISTINCT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band0 a JOIN band0 b
-              ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-            UNION ALL
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band1 a JOIN band1 b
-              ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        )
-    )
+    {_DUCK_SHINGLES},{_DUCK_LSH}
     SELECT doc_a, doc_b,
            CAST(LEVENSHTEIN(da.text, db.text) AS BIGINT) AS edit_distance,
            CAST(FLOOR(10000 * (1 - CAST(LEVENSHTEIN(da.text, db.text) AS DOUBLE)
@@ -250,22 +200,15 @@ CONTAIN_DEN = 10
 @register(
     "x2_shingle_containment_pairs",
     oracle=f"""
-    {_DUCK_SHINGLES},
-    card AS (SELECT doc_id, COUNT(*) AS card FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
+    {_DUCK_SHINGLES},{_duck_overlap()},
     directed AS (
         SELECT doc_a AS contained, doc_b AS container, inter,
-               ca.card AS card_contained
-        FROM inter JOIN card ca ON ca.doc_id = doc_a
+               card_a AS card_contained
+        FROM overlap
         UNION ALL
         SELECT doc_b AS contained, doc_a AS container, inter,
-               cb.card AS card_contained
-        FROM inter JOIN card cb ON cb.doc_id = doc_b
+               card_b AS card_contained
+        FROM overlap
     )
     SELECT contained, container,
            CAST(inter AS BIGINT) AS inter,
@@ -291,18 +234,7 @@ def x2_shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingles (persisted store) feed cardinalities + both sides of
     # the inverted-index join — materialize once
     sh = corpus_shingles(spark, sf_dir).localCheckpoint(eager=True)
-    card = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("card"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    ca = card.select(F.col("doc_id").alias("doc_a"), F.col("card").alias("card_a"))
-    cb = card.select(F.col("doc_id").alias("doc_b"), F.col("card").alias("card_b"))
-    both = inter.join(ca, "doc_a").join(cb, "doc_b")
+    both = overlap_pairs(sh, "shingle")
     directed = both.select(
         F.col("doc_a").alias("contained"),
         F.col("doc_b").alias("container"),
@@ -336,24 +268,8 @@ def x2_shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "x4_contrastive_triplets",
     oracle=f"""
-    {_DUCK_SHINGLES},
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    band0 AS (SELECT doc_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs),
-    band1 AS (SELECT doc_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM sigs),
-    pos AS (
-        SELECT DISTINCT doc_a AS anchor, doc_b AS positive FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band0 a JOIN band0 b
-              ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-            UNION ALL
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band1 a JOIN band1 b
-              ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        )
-    ),
+    {_DUCK_SHINGLES},{_DUCK_LSH},
+    pos AS (SELECT doc_a AS anchor, doc_b AS positive FROM cand),
     pool AS (
         SELECT doc_id FROM documents
         ORDER BY MD5('pool|' || CAST(doc_id AS VARCHAR)), doc_id
@@ -473,48 +389,22 @@ def _duck_bbit_match() -> str:
 @register(
     "x2_bbit_minhash_estimates",
     oracle=f"""
-    {_DUCK_SHINGLES},
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    band0 AS (SELECT doc_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs),
-    band1 AS (SELECT doc_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM sigs),
-    cand AS (
-        SELECT DISTINCT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band0 a JOIN band0 b
-              ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-            UNION ALL
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band1 a JOIN band1 b
-              ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        )
-    ),
+    {_DUCK_SHINGLES},{_DUCK_LSH},{_duck_overlap(candidates="cand")},
     matched AS (
         SELECT c.doc_a, c.doc_b, {_duck_bbit_match()} AS m
         FROM cand c
         JOIN sigs sa ON sa.doc_id = c.doc_a
         JOIN sigs sb ON sb.doc_id = c.doc_b
-    ),
-    card AS (SELECT doc_id, COUNT(*) AS card FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
     )
     SELECT m.doc_a, m.doc_b,
            CAST(m.m AS BIGINT) AS n_matching_nibbles,
            CAST(GREATEST(16 * m.m - 8, 0) * 1000000 // 120 AS BIGINT)
                AS j_bbit_e6,
-           CAST(COALESCE(i.i, 0) * 1000000
-                // (ca.card + cb.card - COALESCE(i.i, 0)) AS BIGINT)
+           COALESCE(CAST(o.inter * 1000000
+                // (o.card_a + o.card_b - o.inter) AS BIGINT), 0)
                AS j_exact_e6
     FROM matched m
-    JOIN card ca ON ca.doc_id = m.doc_a
-    JOIN card cb ON cb.doc_id = m.doc_b
-    LEFT JOIN inter i ON i.doc_a = m.doc_a AND i.doc_b = m.doc_b
+    LEFT JOIN overlap o ON o.doc_a = m.doc_a AND o.doc_b = m.doc_b
     ORDER BY m.doc_a, m.doc_b
     """,
     survey_ids=("X2",),
@@ -550,23 +440,8 @@ def x2_bbit_minhash_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched = (
         cand.join(sa, "doc_a").join(sb, "doc_b").select("doc_a", "doc_b", m.alias("m"))
     )
-    card = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("card"))
-    inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .join(cand, ["doc_a", "doc_b"], "left_semi")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    ca = card.select(F.col("doc_id").alias("doc_a"), F.col("card").alias("card_a"))
-    cb = card.select(F.col("doc_id").alias("doc_b"), F.col("card").alias("card_b"))
-    i0 = F.coalesce(F.col("i"), F.lit(0))
     return (
-        matched.join(inter, ["doc_a", "doc_b"], "left")
-        .join(F.broadcast(ca), "doc_a")
-        .join(F.broadcast(cb), "doc_b")
+        matched.join(overlap_pairs(sh, "shingle", cand), ["doc_a", "doc_b"], "left")
         .select(
             "doc_a",
             "doc_b",
@@ -575,8 +450,7 @@ def x2_bbit_minhash_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "j_bbit_e6"
             ),
             F.expr(
-                "CAST(COALESCE(i, 0) * 1000000 DIV "
-                "(card_a + card_b - COALESCE(i, 0)) AS BIGINT)"
+                "COALESCE(CAST(inter * 1000000 DIV (card_a + card_b - inter) AS BIGINT), 0)"
             ).alias("j_exact_e6"),
         )
         .orderBy("doc_a", "doc_b")

@@ -1194,200 +1194,6 @@ def j_bloom_fpr_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MinHash signature-size sweep
-# ---------------------------------------------------------------------------
-
-#: Signature sizes swept: estimates use the FIRST k slots of the one
-#: persisted 8-slot signature (prefixes — never one signature pass
-#: per size), so the sweep measures the estimator, not fresh hashes.
-MINHASH_K_SWEEP = (2, 4, 8)
-
-
-def _minhash_k_sweep_oracle() -> str:
-    from .dedup import _DUCK_SHINGLES, _duck_minhash_cols, NUM_HASHES
-
-    def m(k: int) -> str:
-        return " + ".join(
-            f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
-            for i in range(k)
-        )
-
-    ks = ", ".join(f"({k})" for k in MINHASH_K_SWEEP)
-    mk = " ".join(
-        f"WHEN {k} THEN m{k}" for k in MINHASH_K_SWEEP
-    )
-    return f"""
-    {_DUCK_SHINGLES},
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    band0 AS (SELECT doc_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs),
-    band1 AS (SELECT doc_id, mh4 || mh5 || mh6 || mh7 AS band_key FROM sigs),
-    cand AS (
-        SELECT DISTINCT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM band0 a JOIN band0 b
-              ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-            UNION ALL
-            SELECT a.doc_id, b.doc_id
-            FROM band1 a JOIN band1 b
-              ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        )
-    ),
-    card AS (SELECT doc_id, COUNT(*) AS card FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    scored AS (
-        SELECT c.doc_a, c.doc_b,
-               {", ".join(f"CAST({m(k)} AS BIGINT) AS m{k}" for k in MINHASH_K_SWEEP)},
-               COALESCE(CAST(FLOOR(i.inter * 1000000.0
-                   / (ca.card + cb.card - i.inter)) AS BIGINT), 0)
-                   AS true_j_e6
-        FROM cand c
-        JOIN sigs sa ON sa.doc_id = c.doc_a
-        JOIN sigs sb ON sb.doc_id = c.doc_b
-        LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-        LEFT JOIN card ca ON ca.doc_id = c.doc_a
-        LEFT JOIN card cb ON cb.doc_id = c.doc_b
-    ),
-    errs AS (
-        SELECT t.k,
-               ABS(CAST(FLOOR((CASE t.k {mk} END) * 1000000.0 / t.k)
-                        AS BIGINT) - true_j_e6) AS err
-        FROM scored CROSS JOIN (VALUES {ks}) AS t(k)
-    )
-    SELECT CAST(k AS BIGINT) AS k,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(err) // COUNT(*) AS BIGINT) AS mean_abs_err_e6,
-           CAST(MAX(err) AS BIGINT) AS max_abs_err_e6,
-           CAST(SUM(err * err) // COUNT(*) AS BIGINT) AS mse_e12
-    FROM errs GROUP BY k ORDER BY k
-    """
-
-
-@register(
-    "x2_minhash_k_sweep",
-    oracle=_minhash_k_sweep_oracle(),
-    survey_ids=("X2", "A1", "F6"),
-)
-def x2_minhash_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MinHash estimator's tuning curve: Jaccard-estimate error vs
-    signature size k ∈ {2,4,8} over the real LSH candidate pairs,
-    against the exact shingle Jaccard — the empirical 1/√k error
-    decay behind choosing NUM_HASHES (the sweep sibling of
-    `x2_minhash_estimate_error`, which validates the chosen k
-    per-pair). Each k's estimate uses the FIRST k slots of the ONE
-    persisted 8-slot signature (prefix views — never a fresh hash
-    pass per size), so the sweep costs one pair join read three
-    times. Integer throughout: estimates are fixed-denominator
-    rationals, MSE stays in int64 for any pair count < ~9·10⁶
-    (err² ≤ 10¹²; beyond that the mean would shard-partial first)."""
-    from .dedup import (
-        corpus_shingles,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    sh = corpus_shingles(spark, sf_dir)
-    sigs = minhash_signatures(sh)
-    pairs = lsh_candidate_pairs(sigs).localCheckpoint(eager=True)
-    cand_docs = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh = sh.join(cand_docs, "doc_id", "left_semi")
-    n_hashes = len([c for c in sigs.columns if c.startswith("mh")])
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(n_hashes)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(n_hashes)],
-    )
-    card = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("card"))
-    s1, s2 = sh.alias("s1"), sh.alias("s2")
-    inter = (
-        s1.join(s2, "shingle")
-        .filter(F.col("s1.doc_id") < F.col("s2.doc_id"))
-        .groupBy(
-            F.col("s1.doc_id").alias("doc_a"),
-            F.col("s2.doc_id").alias("doc_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    scored = (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .join(inter, ["doc_a", "doc_b"], "left")
-        .join(
-            card.select(
-                F.col("doc_id").alias("doc_a"), F.col("card").alias("card_a")
-            ),
-            "doc_a",
-            "left",
-        )
-        .join(
-            card.select(
-                F.col("doc_id").alias("doc_b"), F.col("card").alias("card_b")
-            ),
-            "doc_b",
-            "left",
-        )
-        .select(
-            *[
-                sum(
-                    F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-                    for i in range(k)
-                )
-                .cast("long")
-                .alias(f"m{k}")
-                for k in MINHASH_K_SWEEP
-            ],
-            F.coalesce(
-                F.floor(
-                    F.col("inter")
-                    * 1000000.0
-                    / (F.col("card_a") + F.col("card_b") - F.col("inter"))
-                ).cast("long"),
-                F.lit(0),
-            ).alias("true_j_e6"),
-        )
-    )
-    stack = ", ".join(f"{k}L, m{k}" for k in MINHASH_K_SWEEP)
-    errs = scored.select(
-        F.expr(f"stack({len(MINHASH_K_SWEEP)}, {stack}) AS (k, mk)"),
-        "true_j_e6",
-    ).select(
-        "k",
-        F.abs(
-            F.floor(F.col("mk") * 1000000.0 / F.col("k")).cast("long")
-            - F.col("true_j_e6")
-        ).alias("err"),
-    )
-    return (
-        errs.groupBy("k")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_pairs"),
-            F.expr("sum(err) div count(1)")
-            .cast("long")
-            .alias("mean_abs_err_e6"),
-            F.max("err").cast("long").alias("max_abs_err_e6"),
-            F.expr("sum(err * err) div count(1)")
-            .cast("long")
-            .alias("mse_e12"),
-        )
-        .orderBy("k")
-    )
-
-
-# ---------------------------------------------------------------------------
 # query-likelihood retrieval (Dirichlet smoothing)
 # ---------------------------------------------------------------------------
 

@@ -635,7 +635,7 @@ FUZZY_DECONTAM_TAU = 0.5
 
 
 def _fuzzy_decontam_oracle() -> str:
-    from .dedup import _DUCK_SHINGLES, _duck_minhash_cols
+    from .dedup import _DUCK_SHINGLES, _duck_bands, _duck_minhash_cols
     from .textops import DECONTAM_MOD, DECONTAM_REMAINDER
 
     is_eval = f"doc_id % {DECONTAM_MOD} = {DECONTAM_REMAINDER}"
@@ -646,9 +646,7 @@ def _fuzzy_decontam_oracle() -> str:
         FROM shingles GROUP BY doc_id
     ),
     bands AS (
-        SELECT doc_id, 0 AS band_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs
-        UNION ALL
-        SELECT doc_id, 1, mh4 || mh5 || mh6 || mh7 FROM sigs
+        {_duck_bands("sigs")}
     ),
     cand AS (
         SELECT DISTINCT tr.doc_id AS train_doc, ev.doc_id AS eval_doc

@@ -235,6 +235,7 @@ def x3_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _decontam_funnel_oracle() -> str:
     from etl_generator_demo_spark.operators.dedup import (
         _DUCK_SHINGLES,
+        _duck_bands,
         _duck_minhash_cols,
     )
     from etl_generator_demo_spark.operators.surfaces_r12b import (
@@ -262,9 +263,7 @@ def _decontam_funnel_oracle() -> str:
         FROM shingles GROUP BY doc_id
     ),
     bands AS (
-        SELECT doc_id, 0 AS band_id, mh0 || mh1 || mh2 || mh3 AS band_key FROM sigs
-        UNION ALL
-        SELECT doc_id, 1, mh4 || mh5 || mh6 || mh7 FROM sigs
+        {_duck_bands("sigs")}
     ),
     cand AS (
         SELECT DISTINCT tr.doc_id AS train_doc, ev.doc_id AS eval_doc

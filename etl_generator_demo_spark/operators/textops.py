@@ -818,6 +818,84 @@ def x4_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+#: Quality-gate thresholds swept (mean bigram log-prob; the committed
+#: production flag in x4_bigram_lm_quality cuts at -3.9).
+QUALITY_SWEEP_TAUS = (-3.5, -3.9, -4.3)
+
+
+def _quality_sweep_oracle() -> str:
+    rows = []
+    for tau in QUALITY_SWEEP_TAUS:
+        rows.append(f"""
+    SELECT CAST({int(tau * 10)} AS BIGINT) AS tau_e1,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM per_doc) AS n_scored,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM per_doc
+            WHERE avg_logprob >= {tau}) AS n_kept,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM per_doc
+            WHERE avg_logprob >= {tau}) * 1000000
+             // (SELECT COUNT(*) FROM per_doc) AS keep_rate_e6""")
+    return f"""
+    WITH {_BIGRAM_PERDOC_CHAIN}
+    SELECT * FROM ({" UNION ALL ".join(rows)})
+    ORDER BY tau_e1 DESC
+    """
+
+
+@register(
+    "x4_quality_threshold_sweep",
+    oracle=_quality_sweep_oracle(),
+    survey_ids=("X4", "A2", "P6"),
+)
+def x4_quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus keep-rate at LM quality-gate thresholds -3.5/-3.9/-4.3
+    (mean bigram log-prob) — the tuning curve for the cheapest quality
+    cut, beside the band/Jaccard/n_probe/decontamination sweeps: each
+    pipeline knob ships with a measured curve, not a folklore constant.
+    The committed production flag (`x4_bigram_lm_quality`) cuts at
+    -3.9 — this shows what loosening/tightening by 0.4 nats releases.
+
+    Exactness: scores are on the scorer's 1e-4 floor grid and the
+    threshold literals parse to identical doubles in both engines (the
+    established `low_quality` comparison); keep rates are integer
+    floor ratios, NULL on an empty corpus (nothing scored). Scale: the
+    score relation is computed once (localCheckpoint) and the whole
+    sweep is ONE aggregate over docs — a count plus one conditional
+    count per threshold — unpivoted into a row per threshold."""
+    per_doc = (
+        x4_bigram_lm_quality(spark, sf_dir)
+        .select("doc_id", "avg_logprob")
+        .localCheckpoint(eager=True)
+    )
+    counts = per_doc.agg(
+        F.count(F.lit(1)).alias("n_scored"),
+        *[
+            F.count(F.when(F.col("avg_logprob") >= tau, 1)).alias(f"k{i}")
+            for i, tau in enumerate(QUALITY_SWEEP_TAUS)
+        ],
+    )
+    rows = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(int(tau * 10)).cast("long").alias("tau_e1"),
+                    F.col(f"k{i}").alias("n_kept"),
+                )
+                for i, tau in enumerate(QUALITY_SWEEP_TAUS)
+            ]
+        )
+    )
+    return (
+        counts.select("n_scored", rows.alias("r"))
+        .select(
+            "r.tau_e1",
+            "n_scored",
+            "r.n_kept",
+            F.expr("r.n_kept * 1000000 div nullif(n_scored, 0)").alias("keep_rate_e6"),
+        )
+        .orderBy(F.desc("tau_e1"))
+    )
+
+
 WINNOW_K, WINNOW_W = 5, 4  # k-gram size, winnowing window
 
 

@@ -77,7 +77,6 @@ def load_all() -> dict[str, RegisteredQuery]:
     import etl_generator_demo_spark.operators.bpe  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r10  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r10b  # noqa: F401
-    import etl_generator_demo_spark.operators.surfaces_r10c  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r10d  # noqa: F401
     import etl_generator_demo_spark.operators.timeseries  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r11  # noqa: F401

@@ -53,3 +53,59 @@ def catalog(spark, sf_dir):
     cat = Catalog(spark, sf_dir)
     cat.register_views()
     return cat
+
+
+@pytest.fixture
+def replace_table(sf_dir, tmp_path):
+    """``build(name, frame) -> dir``: a fixture directory under
+    ``tmp_path`` whose tables are symlinks into ``sf_dir``, except
+    ``name``, which is written from ``frame`` (the degenerate-input
+    fixtures: one table cut down, the rest untouched)."""
+
+    def build(name, frame):
+        from etl_generator_demo_spark.catalog import TABLES
+
+        for other in TABLES:
+            if other != name:
+                os.symlink(f"{sf_dir}/{other}.parquet", f"{tmp_path}/{other}.parquet")
+        frame.coalesce(1).write.parquet(f"{tmp_path}/{name}.parquet")
+        return str(tmp_path)
+
+    return build
+
+
+@pytest.fixture(scope="session")
+def oracle_mismatches(spark):
+    """``check(fixture_dir, names) -> {name: (spark_rows, duckdb_rows)}``:
+    every named registered query run on ``fixture_dir`` and compared
+    with its DuckDB oracle over the same files, the driver's way
+    (``tools/oracle_check.canon``). A Spark error counts as a mismatch
+    (its first line stands in for the rows), so one call reports every
+    failing query, not just the first."""
+    import duckdb
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+    from oracle_check import canon
+
+    from etl_generator_demo_spark.catalog import TABLES
+    from etl_generator_demo_spark.registry import load_all
+
+    def check(fixture_dir, names):
+        con = duckdb.connect()
+        for name in TABLES:
+            path = f"{fixture_dir}/{name}.parquet"
+            src = f"{path}/*.parquet" if os.path.isdir(path) else path
+            con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{src}')")
+        reg = load_all()
+        bad = {}
+        for name in names:
+            expect = canon(con.execute(reg[name].oracle).fetchdf())
+            try:
+                got = canon(reg[name].fn(spark, fixture_dir).toPandas())
+            except Exception as exc:
+                got = repr(exc).splitlines()[0]
+            if got != expect:
+                bad[name] = (got, expect)
+        return bad
+
+    return check

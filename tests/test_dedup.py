@@ -413,3 +413,221 @@ def test_verified_neardup_candidate_joins_are_sized(spark, sf_dir):
     assert [key(r) for r in got_bc] == [key(r) for r in got_sh]
     for x, y in zip(got_bc, got_sh):
         assert abs(x["jaccard"] - y["jaccard"]) < 1e-12
+
+
+# ---------------------------------------------------------------------------
+# overlap kernel
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("with_candidates", [False, True])
+def test_overlap_pairs_matches_brute_force(spark, with_candidates):
+    """``overlap_pairs`` equals a pure-Python set intersection over
+    every pair on a seeded random corpus: pairs sharing nothing are
+    absent, cardinalities are the full set sizes, and ``candidates``
+    keeps exactly the listed pairs (including listed pairs that share
+    nothing, which stay absent)."""
+    import itertools
+    import random
+
+    from etl_generator_demo_spark.operators.dedup import overlap_pairs
+
+    rng = random.Random(11)
+    sets = {d: set(rng.sample(range(12), rng.randint(1, 6))) for d in range(14)}
+    rel = spark.createDataFrame(
+        [(d, e) for d, s in sets.items() for e in s], "doc_id long, elem long"
+    )
+    pairs = list(itertools.combinations(sorted(sets), 2))
+    cand = set(rng.sample(pairs, 30)) if with_candidates else set(pairs)
+    want = {
+        (a, b, len(sets[a] & sets[b]), len(sets[a]), len(sets[b]))
+        for a, b in cand
+        if sets[a] & sets[b]
+    }
+    candidates = (
+        spark.createDataFrame(sorted(cand), "doc_a long, doc_b long")
+        if with_candidates
+        else None
+    )
+    got = {tuple(r) for r in overlap_pairs(rel, "elem", candidates).collect()}
+    assert got == want
+
+
+def test_ngram_jaccard_card_checkpoint_same_rows(spark, tmp_path):
+    """The localCheckpointed cardinality relation (a deterministic
+    single computation instead of a best-effort AQE exchange-reuse
+    race) must keep ngram_jaccard_pairs row-identical, including the
+    sub-threshold pair being dropped."""
+    rows = [
+        (0, "a b c d e f g h i j"),   # 6 5-gram shingles
+        (1, "a b c d e f g h i j"),   # exact dup of 0 -> jaccard 1.0
+        (2, "a b c d e f g h i x"),   # near dup -> shares 5 of 7
+        (3, "z y x w v u t s r q"),   # disjoint -> no pair
+    ]
+    sh = doc_shingles(_docs(spark, rows))
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in ngram_jaccard_pairs(sh).collect()
+    }
+    assert got[(0, 1)] == 1.0
+    assert (0, 2) in got and 0.5 <= got[(0, 2)] < 1.0
+    assert got[(0, 2)] == got[(1, 2)]
+    assert all(3 not in k for k in got)
+
+
+def test_ngram_jaccard_card_computed_once_in_plan(spark, sf_dir):
+    """The registered query's visible plan must not contain the per-doc
+    cardinality aggregate twice: with the checkpoint the aggregate
+    subtrees are gone from the final plan entirely (the two endpoint
+    joins read the materialized relation), so a reuse race can never
+    re-introduce a 4th exchange."""
+    from etl_generator_demo_spark.operators.dedup import x2_ngram_jaccard_pairs
+
+    df = x2_ngram_jaccard_pairs(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    # both card sides must be scans of the one checkpointed RDD, not
+    # re-derived aggregates over the shingle relation
+    assert plan.count("LogicalRDD") >= 2
+
+
+# ---------------------------------------------------------------------------
+# tuning sweeps
+# ---------------------------------------------------------------------------
+
+
+def test_lsh_tuning_curve_monotone(spark, sf_dir):
+    """Nested band subdivisions: a candidate under (1,8) survives every
+    finer config, so counts are monotone in the band count."""
+    from etl_generator_demo_spark.operators.dedup import (
+        LSH_CONFIGS,
+        x2_lsh_band_tuning_curve,
+    )
+
+    out = {r["bands"]: r for r in x2_lsh_band_tuning_curve(spark, sf_dir).collect()}
+    assert set(out) == {b for b, _ in LSH_CONFIGS}
+    assert (
+        out[1]["n_candidate_pairs"]
+        <= out[2]["n_candidate_pairs"]
+        <= out[4]["n_candidate_pairs"]
+        <= out[8]["n_candidate_pairs"]
+    )
+
+
+def test_jaccard_sweep_monotone_in_tau(spark, sf_dir):
+    """Raising the threshold can only shrink the kept pair set."""
+    from etl_generator_demo_spark.operators.dedup import x2_jaccard_threshold_sweep
+
+    rows = x2_jaccard_threshold_sweep(spark, sf_dir).collect()
+    pairs = [r["n_pairs"] for r in rows]  # ordered by tau asc
+    docs = [r["n_docs_in_pairs"] for r in rows]
+    assert pairs == sorted(pairs, reverse=True)
+    assert docs == sorted(docs, reverse=True)
+
+
+def test_jaccard_sweep_single_pass_matches_brute_recount(spark, tmp_path):
+    """The conditional-aggregation sweep (one flag projection, two
+    aggregates) must equal a per-threshold recount — including a
+    threshold bucket with ZERO qualifying pairs (the sum-over-empty ->
+    0, never NULL, edge)."""
+    from etl_generator_demo_spark.operators.dedup import (
+        JACCARD_SWEEP,
+        x2_jaccard_threshold_sweep,
+    )
+    from etl_generator_demo_spark.operators.relational import t
+
+    spark.createDataFrame(
+        [
+            (0, "a b c d e f g h", "en", "srcT", 15),
+            (1, "a b c d e f g z", "en", "srcT", 15),   # high overlap with doc0
+            (2, "p q r s t u v w", "en", "srcT", 15),   # no overlap
+        ],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.parquet(f"{tmp_path}/documents.parquet")
+    got = {
+        r["tau_e2"]: r
+        for r in x2_jaccard_threshold_sweep(spark, str(tmp_path)).collect()
+    }
+    # brute recount per threshold from first principles
+    sh = doc_shingles(t(spark, str(tmp_path), "documents"))
+    sets = {
+        r["doc_id"]: set(r["s"])
+        for r in sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("s")).collect()
+    }
+    ids = sorted(sets)
+    for num, den in JACCARD_SWEEP:
+        pairs = [
+            (a, b)
+            for i, a in enumerate(ids)
+            for b in ids[i + 1 :]
+            if len(sets[a] & sets[b]) * den
+            >= num * len(sets[a] | sets[b])
+            and len(sets[a] & sets[b]) > 0
+        ]
+        docs = {d for p in pairs for d in p}
+        assert got[num]["n_pairs"] == len(pairs), (num, pairs)
+        assert got[num]["n_docs_in_pairs"] == len(docs), (num, docs)
+    # the planted corpus must actually exercise the empty bucket
+    assert got[90]["n_pairs"] == 0 and got[90]["n_docs_in_pairs"] == 0
+
+
+def test_minhash_k_sweep_error_decays(spark, sf_dir):
+    """The estimator's contract on the fixture: worst-case error
+    decays monotonically in k (each added slot can only refine the
+    k-slot estimate's granularity: the estimate grid is 1/k, so the
+    max error shrinks), and the largest signature beats the smallest
+    on MSE. Mean error is NOT asserted monotone — LSH-selected
+    candidate pairs are a small, band-match-biased sample, and the
+    1/sqrt(k) law is an expectation, not a per-sample guarantee (k=4
+    measured slightly above k=2 at sf0.001)."""
+    from etl_generator_demo_spark.operators.dedup import (
+        MINHASH_K_SWEEP,
+        x2_minhash_k_sweep,
+    )
+
+    rows = {r["k"]: r for r in x2_minhash_k_sweep(spark, sf_dir).collect()}
+    assert set(rows) == set(MINHASH_K_SWEEP)
+    n_pairs = {r["n_pairs"] for r in rows.values()}
+    assert len(n_pairs) == 1  # same pair relation at every k
+    prev_max = None
+    for k in sorted(rows):
+        r = rows[k]
+        assert 0 <= r["mean_abs_err_e6"] <= r["max_abs_err_e6"] <= 1_000_000
+        assert r["mse_e12"] <= 10**12
+        if prev_max is not None:
+            assert r["max_abs_err_e6"] <= prev_max
+        prev_max = r["max_abs_err_e6"]
+    lo, hi = min(MINHASH_K_SWEEP), max(MINHASH_K_SWEEP)
+    assert rows[hi]["mse_e12"] <= rows[lo]["mse_e12"]
+
+
+# ---------------------------------------------------------------------------
+# Degenerate corpora: every near-dup family query against its DuckDB
+# oracle on the sf0.001 fixture with `documents` replaced by no rows,
+# one document, or three documents shorter than one shingle.
+# ---------------------------------------------------------------------------
+
+_FAMILY_MODULES = ("dedup", "setsim", "dedup_clusters", "dedup_incremental")
+
+
+def _degenerate_documents(spark, sf_dir, shape):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").orderBy("doc_id")
+    if shape == "empty":
+        return docs.limit(0)
+    if shape == "one_doc":
+        return docs.limit(1)
+    return docs.limit(3).withColumn("text", F.lit("a b"))  # short_docs
+
+
+@pytest.mark.parametrize("shape", ["empty", "one_doc", "short_docs"])
+def test_degenerate_corpus_matches_oracle(
+    spark, sf_dir, replace_table, oracle_mismatches, shape
+):
+    from etl_generator_demo_spark.registry import load_all
+
+    d = replace_table("documents", _degenerate_documents(spark, sf_dir, shape))
+    family = {f"etl_generator_demo_spark.operators.{m}" for m in _FAMILY_MODULES}
+    names = [n for n, rq in load_all().items() if rq.fn.__module__ in family]
+    names.append("x4_quality_threshold_sweep")
+    assert len(names) == 26
+    bad = oracle_mismatches(d, names)
+    assert not bad, bad

@@ -331,6 +331,25 @@ class TestNearDedupStep:
         kept = sorted(r["doc_id"] for r in spark.table("nd_out").collect())
         assert kept == [10, 12]
 
+    def test_near_dedup_honours_id_and_text_columns(self, executor, spark):
+        """The step's ``id_col``/``text_col`` reach every stage of the
+        pair chain, the band join included."""
+        base = "the quick brown fox jumps over the lazy dog again and again today"
+        spark.createDataFrame(
+            [(10, base), (11, base + " extra"), (12, " ".join(f"t{i}" for i in range(16)))],
+            "pid long, body string",
+        ).createOrReplaceTempView("nd_docs_cols")
+        spec = {
+            "extract": {"sql": "SELECT * FROM nd_docs_cols"},
+            "transform": {
+                "steps": [{"op": "near_dedup", "id_col": "pid", "text_col": "body"}]
+            },
+            "load": {"target_table": "nd_out_cols", "write_mode": "overwrite"},
+        }
+        executor.run(spec)
+        kept = sorted(r["pid"] for r in spark.table("nd_out_cols").collect())
+        assert kept == [10, 12]
+
 
 class TestCallableProvider:
     """The bring-your-own-LLM hook exercises the LIVE code path

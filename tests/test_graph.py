@@ -5,7 +5,6 @@ the DuckDB oracle, and the ``fixpoint`` loop contract."""
 from __future__ import annotations
 
 import datetime
-import os
 from collections import Counter, deque
 
 import pytest
@@ -272,12 +271,7 @@ def test_ppr_source_dominates_and_mass_bounded(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _degenerate_fixture(spark, sf_dir, root, n_parts):
-    from etl_generator_demo_spark.catalog import TABLES
-
-    for name in TABLES:
-        if name != "lineitem":
-            os.symlink(f"{sf_dir}/{name}.parquet", f"{root}/{name}.parquet")
+def _one_order_lineitem(spark, sf_dir, n_parts):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     ok = (
         li.groupBy("l_orderkey")
@@ -288,48 +282,25 @@ def _degenerate_fixture(spark, sf_dir, root, n_parts):
     )
     # both lines clear the WCC/BFS quantity threshold, so every graph
     # query sees the same one-order graph
-    (
+    return (
         li.filter(F.col("l_orderkey") == ok)
         .dropDuplicates(["l_partkey"])
         .orderBy("l_partkey")
         .limit(n_parts)
         .withColumn("l_quantity", F.lit(WCC_HIGH_QTY).cast(dict(li.dtypes)["l_quantity"]))
-        .coalesce(1)
-        .write.parquet(f"{root}/lineitem.parquet")
     )
-    return str(root)
 
 
 @pytest.mark.parametrize("shape,n_parts", [("edgeless", 1), ("one_edge", 2)])
-def test_degenerate_graph_matches_oracle(spark, sf_dir, tmp_path, shape, n_parts):
-    import sys
-
-    import duckdb
-
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
-    from oracle_check import canon
-
-    from etl_generator_demo_spark.catalog import TABLES
+def test_degenerate_graph_matches_oracle(
+    spark, sf_dir, replace_table, oracle_mismatches, shape, n_parts
+):
     from etl_generator_demo_spark.registry import load_all
 
-    d = _degenerate_fixture(spark, sf_dir, tmp_path, n_parts)
-    con = duckdb.connect()
-    for name in TABLES:
-        path = f"{d}/{name}.parquet"
-        src = f"{path}/*.parquet" if os.path.isdir(path) else path
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{src}')")
+    d = replace_table("lineitem", _one_order_lineitem(spark, sf_dir, n_parts))
     names = [n for n, rq in load_all().items() if rq.fn.__module__ == graph.__name__]
     assert len(names) == 17
-    bad = {}
-    for name in names:
-        rq = load_all()[name]
-        expect = canon(con.execute(rq.oracle).fetchdf())
-        try:
-            got = canon(rq.fn(spark, d).toPandas())
-        except Exception as exc:  # report every query, not just the first
-            got = repr(exc).splitlines()[0]
-        if got != expect:
-            bad[name] = (got, expect)
+    bad = oracle_mismatches(d, names)
     assert not bad, bad
 
 

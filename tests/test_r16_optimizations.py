@@ -44,54 +44,6 @@ def test_rematerialize_fully_removed_doc_is_null(spark, tmp_path):
     assert rows[2]["kept_text"] == "u1 u2 u3" and rows[2]["n_kept_tokens"] == 3
 
 
-def test_jaccard_sweep_single_pass_matches_brute_recount(spark, tmp_path):
-    """The conditional-aggregation sweep (r16: one flag projection, two
-    aggregates) must equal the per-threshold recount it replaced —
-    including a threshold bucket with ZERO qualifying pairs (the
-    sum-over-empty -> 0, never NULL, edge)."""
-    from etl_generator_demo_spark.operators.surfaces_r10c import (
-        JACCARD_SWEEP,
-        x2_jaccard_threshold_sweep,
-    )
-    from etl_generator_demo_spark.operators.dedup import doc_shingles
-    from etl_generator_demo_spark.operators.relational import t
-
-    _write_documents(
-        spark,
-        str(tmp_path),
-        [
-            ("a b c d e f g h", "en"),
-            ("a b c d e f g z", "en"),   # high overlap with doc0
-            ("p q r s t u v w", "en"),   # no overlap
-        ],
-    )
-    got = {
-        r["tau_e2"]: r
-        for r in x2_jaccard_threshold_sweep(spark, str(tmp_path)).collect()
-    }
-    # brute recount per threshold from first principles
-    sh = doc_shingles(t(spark, str(tmp_path), "documents"))
-    sets = {
-        r["doc_id"]: set(r["s"])
-        for r in sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("s")).collect()
-    }
-    ids = sorted(sets)
-    for num, den in JACCARD_SWEEP:
-        pairs = [
-            (a, b)
-            for i, a in enumerate(ids)
-            for b in ids[i + 1 :]
-            if len(sets[a] & sets[b]) * den
-            >= num * len(sets[a] | sets[b])
-            and len(sets[a] & sets[b]) > 0
-        ]
-        docs = {d for p in pairs for d in p}
-        assert got[num]["n_pairs"] == len(pairs), (num, pairs)
-        assert got[num]["n_docs_in_pairs"] == len(docs), (num, docs)
-    # the planted corpus must actually exercise the empty bucket
-    assert got[90]["n_pairs"] == 0 and got[90]["n_docs_in_pairs"] == 0
-
-
 def test_bpe_winner_materialization_matches_wrapper(spark):
     """The one-task mapInPandas trainer must equal the pure-Python
     trainer it wraps, on both the winner rows and the final symbol

@@ -1,6 +1,6 @@
 """Focused pins for the round-17 optimization changes: the session
-conf parameterisation fixes (r16 ADVICE) and the deterministic
-single-computation of the ngram-Jaccard cardinality relation."""
+conf parameterisation fixes (r16 ADVICE). The ngram-Jaccard
+cardinality pins live with the overlap kernel in tests/test_dedup.py."""
 
 from __future__ import annotations
 
@@ -36,34 +36,6 @@ def test_sparkconf_passthrough_double_underscore_escape(monkeypatch):
     conf = _default_conf()
     assert conf["spark.hadoop.my_vendor_key"] == "7"
     assert conf["spark.sql.join.preferSortMergeJoin"] == "false"
-
-
-def test_ngram_jaccard_card_checkpoint_same_rows(spark, tmp_path):
-    """The localCheckpointed cardinality relation (r17: deterministic
-    single computation instead of a best-effort AQE exchange-reuse
-    race) must keep ngram_jaccard_pairs row-identical, including the
-    sub-threshold pair being dropped."""
-    from etl_generator_demo_spark.operators.dedup import (
-        doc_shingles,
-        ngram_jaccard_pairs,
-    )
-
-    rows = [
-        (0, "a b c d e f g h i j"),   # 6 5-gram shingles
-        (1, "a b c d e f g h i j"),   # exact dup of 0 -> jaccard 1.0
-        (2, "a b c d e f g h i x"),   # near dup -> shares 5 of 7
-        (3, "z y x w v u t s r q"),   # disjoint -> no pair
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = doc_shingles(docs)
-    got = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(sh).collect()
-    }
-    assert got[(0, 1)] == 1.0
-    assert (0, 2) in got and 0.5 <= got[(0, 2)] < 1.0
-    assert got[(0, 2)] == got[(1, 2)]
-    assert all(3 not in k for k in got)
 
 
 def test_neardup_dedup_placement_row_identical(spark, sf_dir):
@@ -121,21 +93,6 @@ def test_schema_memo_serves_and_invalidates(spark, tmp_path):
     c = read_parquet_known(spark, p)
     assert dict(c.dtypes)["v"] == "string" and "extra" in c.columns
     assert c.count() == 3
-
-
-def test_ngram_jaccard_card_computed_once_in_plan(spark, sf_dir):
-    """The registered query's visible plan must not contain the per-doc
-    cardinality aggregate twice: after the r17 checkpoint the aggregate
-    subtrees are gone from the final plan entirely (the two endpoint
-    joins read the materialized relation), so a reuse race can never
-    re-introduce a 4th exchange."""
-    from etl_generator_demo_spark.operators.dedup import x2_ngram_jaccard_pairs
-
-    df = x2_ngram_jaccard_pairs(spark, sf_dir)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    # both card sides must be scans of the one checkpointed RDD, not
-    # re-derived aggregates over the shingle relation
-    assert plan.count("LogicalRDD") >= 2
 
 
 def test_lit_double_array_bit_exact(spark):

@@ -15,10 +15,6 @@ from etl_generator_demo_spark.operators.surfaces_r10b import (
     x4_curriculum_shards,
     x4_ndcg_eval,
 )
-from etl_generator_demo_spark.operators.surfaces_r10c import (
-    LSH_CONFIGS,
-    x2_lsh_band_tuning_curve,
-)
 
 SF = "/root/testdata/sf0.001"
 
@@ -169,23 +165,6 @@ def test_bpe_encode_compresses(spark):
         # merges only shrink: chars >= bpe tokens >= words
         assert r["n_chars"] >= r["n_bpe_tokens"] >= r["n_words"]
         assert r["chars_per_token_e6"] >= 1_000_000
-
-
-# ---------------------------------------------------------------------------
-# LSH tuning curve
-# ---------------------------------------------------------------------------
-
-def test_lsh_tuning_curve_monotone(spark):
-    """Nested band subdivisions: a candidate under (1,8) survives every
-    finer config, so counts are monotone in the band count."""
-    out = {r["bands"]: r for r in x2_lsh_band_tuning_curve(spark, SF).collect()}
-    assert set(out) == {b for b, _ in LSH_CONFIGS}
-    assert (
-        out[1]["n_candidate_pairs"]
-        <= out[2]["n_candidate_pairs"]
-        <= out[4]["n_candidate_pairs"]
-        <= out[8]["n_candidate_pairs"]
-    )
 
 
 # ---------------------------------------------------------------------------

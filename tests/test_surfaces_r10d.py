@@ -111,30 +111,3 @@ def test_decontam_sweep_monotone_in_n(spark):
     assert mass == sorted(mass, reverse=True)
     assert len({r["n_eval_docs"] for r in rows}) == 1  # same split per n
 
-
-def test_jaccard_sweep_monotone_in_tau(spark):
-    """Raising the threshold can only shrink the kept pair set."""
-    from etl_generator_demo_spark.operators.surfaces_r10c import (
-        x2_jaccard_threshold_sweep,
-    )
-
-    rows = x2_jaccard_threshold_sweep(spark, SF).collect()
-    pairs = [r["n_pairs"] for r in rows]  # ordered by tau asc
-    docs = [r["n_docs_in_pairs"] for r in rows]
-    assert pairs == sorted(pairs, reverse=True)
-    assert docs == sorted(docs, reverse=True)
-
-
-def test_quality_sweep_monotone_in_tau(spark):
-    """Loosening the quality gate can only keep more docs; keep rate
-    is the exact floor ratio of the counts."""
-    from etl_generator_demo_spark.operators.surfaces_r10c import (
-        x4_quality_threshold_sweep,
-    )
-
-    rows = x4_quality_threshold_sweep(spark, SF).collect()  # tau desc
-    kept = [r["n_kept"] for r in rows]
-    assert kept == sorted(kept)
-    for r in rows:
-        assert r["keep_rate_e6"] == r["n_kept"] * 1_000_000 // r["n_scored"]
-        assert r["n_kept"] <= r["n_scored"]

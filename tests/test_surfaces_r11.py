@@ -375,36 +375,6 @@ def test_cdc_randomized_against_python_fold(spark):
     assert got == expected
 
 
-def test_minhash_k_sweep_error_decays(spark):
-    """The estimator's contract on the fixture: worst-case error
-    decays monotonically in k (each added slot can only refine the
-    k-slot estimate's granularity: the estimate grid is 1/k, so the
-    max error shrinks), and the largest signature beats the smallest
-    on MSE. Mean error is NOT asserted monotone — LSH-selected
-    candidate pairs are a small, band-match-biased sample, and the
-    1/sqrt(k) law is an expectation, not a per-sample guarantee (k=4
-    measured slightly above k=2 at sf0.001)."""
-    from etl_generator_demo_spark.operators.surfaces_r11 import (
-        MINHASH_K_SWEEP,
-        x2_minhash_k_sweep,
-    )
-
-    rows = {r["k"]: r for r in x2_minhash_k_sweep(spark, SF).collect()}
-    assert set(rows) == set(MINHASH_K_SWEEP)
-    n_pairs = {r["n_pairs"] for r in rows.values()}
-    assert len(n_pairs) == 1  # same pair relation at every k
-    prev_max = None
-    for k in sorted(rows):
-        r = rows[k]
-        assert 0 <= r["mean_abs_err_e6"] <= r["max_abs_err_e6"] <= 1_000_000
-        assert r["mse_e12"] <= 10**12
-        if prev_max is not None:
-            assert r["max_abs_err_e6"] <= prev_max
-        prev_max = r["max_abs_err_e6"]
-    lo, hi = min(MINHASH_K_SWEEP), max(MINHASH_K_SWEEP)
-    assert rows[hi]["mse_e12"] <= rows[lo]["mse_e12"]
-
-
 def test_query_likelihood_closed_form(spark):
     """QL recomputed in plain Python over the collected corpus (same
     mu, same e6 floors) must match the operator's top-k exactly, and

@@ -381,3 +381,16 @@ def test_corpus_report_card_consistency(spark, sf_dir):
 
     assert 0 <= row.lang_entropy_e6 <= int(math.log(row.n_langs) * 1e6) + row.n_langs
     assert row.mean_tokens_e2 == row.total_tokens * 100 // row.n_docs
+
+
+def test_quality_sweep_monotone_in_tau(spark, sf_dir):
+    """Loosening the quality gate can only keep more docs; keep rate
+    is the exact floor ratio of the counts."""
+    from etl_generator_demo_spark.operators.textops import x4_quality_threshold_sweep
+
+    rows = x4_quality_threshold_sweep(spark, sf_dir).collect()  # tau desc
+    kept = [r["n_kept"] for r in rows]
+    assert kept == sorted(kept)
+    for r in rows:
+        assert r["keep_rate_e6"] == r["n_kept"] * 1_000_000 // r["n_scored"]
+        assert r["n_kept"] <= r["n_scored"]

@@ -849,8 +849,9 @@ EXPECTATIONS: dict[str, dict] = {
     # from 12 exchanges / 4 crossJoin broadcasts to 3 shuffles + the
     # single 1-row crossJoin of the two aggregate rows
     "x2_jaccard_threshold_sweep": {"max_exchanges": 4, "min_broadcast": 1},
-    # score relation behind localCheckpoint; per-tau one aggregate
-    "x4_quality_threshold_sweep": {"max_exchanges": 3},
+    # score relation behind localCheckpoint; the whole sweep is one
+    # global aggregate (count + one conditional count per tau)
+    "x4_quality_threshold_sweep": {"max_exchanges": 1},
     # --- round 12 ---
     # kgram groupBy(h) + join-back + position explode distinct + anti
     # join + per-doc rebuild agg; dims of the rebuild all broadcast
