@@ -124,6 +124,18 @@ _REWRITTEN_SINCE_GREEN = (
     "x4_corpus_pipeline",
     "x4_pipeline_attrition",
     "x4_quality_threshold_sweep",
+    # decontamination family moved into operators/decontam.py: one flag
+    # builder per tier, one rollup, funnel and tier lattice composed
+    # from them; the cosine index builds on an empty corpus
+    "x4_decontaminate",
+    "x4_decontam_ngram_sweep",
+    "x4_fuzzy_decontam",
+    "x3_semantic_decontam",
+    "x3_semantic_decontam_indexed",
+    "x3_semantic_decontam_recall",
+    "x3_semantic_decontam_fixed_eval",
+    "x4_decontam_funnel",
+    "x4_decontam_tier_overlap",
 )
 
 

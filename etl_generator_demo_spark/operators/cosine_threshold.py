@@ -1,15 +1,13 @@
-"""Exact cosine-threshold retrieval over a ball-bounded IVF index —
-the round-14 scale rewrite of semantic decontamination (VERDICT r13
-item 1, "What's wrong" 1).
+"""Exact cosine-threshold retrieval over a ball-bounded IVF index.
 
-The r13 semantic tier scored train x eval with a brute-force
-``crossJoin``: correct, but the single most expensive pass of the
-decontamination funnel, and the one spelling in the repo that grows
-with |corpus| x |eval| unconditionally. The verdict asked for an
-IVF-probed tier with a measured recall floor. This module does one
-better: the probe is **exact** — recall is provably 1.0 — so the
-funnel can switch tiers with zero semantic change and the DuckDB
-oracle stays the brute-force SQL verbatim.
+`cosine_threshold_join` returns every (corpus vector, query) pair at
+or above a floor-e6 cosine threshold, like a brute-force crossJoin,
+but reads only the index lists that can hold a hit. The probe is
+**exact** — recall is provably 1.0 — so a caller can switch from the
+brute spelling with zero semantic change and keep the brute-force SQL
+as its DuckDB oracle. The semantic decontamination tier
+(`operators/decontam.py`) and the radius searches below are served
+this way.
 
 How: a *ball-bound* radius search (the classic metric-tree pruning
 rule applied to an IVF layout). The corpus is k-means-partitioned in
@@ -115,9 +113,6 @@ def ensure_cosine_ivf_index(
     callable, not a DataFrame, so a warm call never even constructs
     the derivation plan. The cache key still carries the fixture
     fingerprint, so reseeds rebuild derived indexes too."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     tag = f"l{n_lists}" + (f"_{variant}" if variant else "")
     path = _index_dir(sf_dir, "cosivf", tag)
     cj = os.path.join(path, "_CENTROIDS.json")
@@ -134,6 +129,34 @@ def ensure_cosine_ivf_index(
     nrm = _norm(v)
     vhat = F.transform(v, lambda x: F.coalesce(F.try_divide(x, nrm), F.lit(0.0)))
     nemb = emb.withColumn("_vhat", vhat)
+    if nemb.isEmpty():
+        # k-means cannot fit zero points: every list is empty, so every
+        # radius is EMPTY_LIST_RADIUS and no query qualifies any list.
+        # Written unpartitioned — an empty partitioned write leaves no
+        # file to read the schema back from.
+        centroids = [[] for _ in range(n_lists)]
+        radii = [EMPTY_LIST_RADIUS] * n_lists
+        nemb.drop("_vhat").withColumn("ivf_list", F.lit(0)).write.mode(
+            "overwrite"
+        ).parquet(path)
+    else:
+        centroids, radii = _write_lists(nemb, n_lists, seed, path)
+    with open(cj, "w") as fh:
+        json.dump(centroids, fh)
+    with open(rj, "w") as fh:
+        json.dump(radii, fh)
+    return path, centroids, radii
+
+
+def _write_lists(
+    nemb: DataFrame, n_lists: int, seed: int, path: str
+) -> tuple[list[list[float]], list[float]]:
+    """Fit the k-means lists over the unit vectors ``_vhat`` of a
+    non-empty corpus, write the corpus partitioned by ``ivf_list`` to
+    ``path``, and return (centroids, per-list ball radii)."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
     ml_df = nemb.withColumn("_features", array_to_vector(F.col("_vhat")))
     model = KMeans(
         k=n_lists, seed=seed, featuresCol="_features", predictionCol="ivf_list"
@@ -169,11 +192,7 @@ def ensure_cosine_ivf_index(
         .partitionBy("ivf_list")
         .parquet(path)
     )
-    with open(cj, "w") as fh:
-        json.dump(centroids, fh)
-    with open(rj, "w") as fh:
-        json.dump(radii, fh)
-    return path, centroids, radii
+    return centroids, radii
 
 
 def qualify_lists_driver_side(
@@ -330,162 +349,6 @@ def cosine_threshold_join(
 # ---------------------------------------------------------------------------
 
 
-def _decontam_eval_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The eval split as a query relation (fixtures align
-    vec_id == doc_id; eval = vec_id % DECONTAM_MOD == REMAINDER)."""
-    from etl_generator_demo_spark.operators.textops import (
-        DECONTAM_MOD,
-        DECONTAM_REMAINDER,
-    )
-
-    emb = t(spark, sf_dir, "embeddings")
-    return emb.filter(
-        F.col("vec_id") % DECONTAM_MOD == DECONTAM_REMAINDER
-    ).select(F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qv"))
-
-
-def semantic_decontam_flags_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-doc flag relation of the INDEXED semantic tier — the
-    serving spelling `x4_decontam_funnel` / `x4_decontam_tier_overlap`
-    compose (exact, so interchangeable with the brute audit tier
-    `x3_semantic_decontam`)."""
-    from etl_generator_demo_spark.operators.surfaces_r13 import (
-        SEMANTIC_DECONTAM_TAU_E6,
-    )
-    from etl_generator_demo_spark.operators.textops import (
-        DECONTAM_MOD,
-        DECONTAM_REMAINDER,
-    )
-
-    pairs = cosine_threshold_join(
-        spark,
-        sf_dir,
-        _decontam_eval_queries(spark, sf_dir),
-        SEMANTIC_DECONTAM_TAU_E6,
-        corpus_filter=~(F.col("vec_id") % DECONTAM_MOD == DECONTAM_REMAINDER),
-    )
-    return pairs.select(F.col("vec_id").alias("train_doc"), "cos_e6")
-
-
-def _indexed_decontam_oracle() -> str:
-    from etl_generator_demo_spark.operators.surfaces_r13 import (
-        _semantic_decontam_oracle,
-    )
-
-    # The indexed tier is EXACT (ball-bound pruning drops no hit), so
-    # the oracle is the brute-force SQL verbatim.
-    return _semantic_decontam_oracle()
-
-
-@register(
-    "x3_semantic_decontam_indexed",
-    oracle=_indexed_decontam_oracle(),
-    survey_ids=("X3", "X4"),
-)
-def x3_semantic_decontam_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic eval decontamination served from the ball-bounded IVF
-    index (VERDICT r13 item 1) — same output contract as the brute
-    audit tier `x3_semantic_decontam`: flagged train doc -> eval-hit
-    count + worst cosine. EXACT by construction (module docstring has
-    the bound), so DuckDB value-verifies it against the brute-force
-    SQL — no recall floor needed.
-
-    100 TB: cost = qualified (list, query) pairs only; the scan opens
-    only qualified list directories (dynamic partition pruning,
-    plan-audited), and per-pair scoring reuses precomputed per-side
-    norms (measured 2x over the per-pair-norms brute spelling)."""
-    return (
-        semantic_decontam_flags_indexed(spark, sf_dir)
-        .groupBy("train_doc")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_eval_neardups"),
-            F.max("cos_e6").cast("long").alias("max_cos_e6"),
-        )
-        .orderBy("train_doc")
-    )
-
-
-def _recall_oracle() -> str:
-    """Both flag sets from the SAME brute CTE — legitimate because the
-    indexed tier is provably exact; the row the verdict asked to see
-    (`recall-vs-brute-force`) is a measured 1.0, not an assumption:
-    Spark computes the two sets through the two different plans and
-    counts the actual intersection."""
-    from etl_generator_demo_spark.operators.surfaces_r13 import (
-        SEMANTIC_DECONTAM_TAU_E6,
-    )
-    from etl_generator_demo_spark.operators.textops import (
-        DECONTAM_MOD,
-        DECONTAM_REMAINDER,
-    )
-
-    return f"""
-    WITH e AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-    ),
-    ev AS (SELECT vec_id, v FROM e WHERE vec_id % {DECONTAM_MOD} = {DECONTAM_REMAINDER}),
-    tr AS (SELECT vec_id, v FROM e WHERE vec_id % {DECONTAM_MOD} <> {DECONTAM_REMAINDER}),
-    hits AS (
-        SELECT DISTINCT tr.vec_id AS train_doc
-        FROM tr CROSS JOIN ev
-        WHERE CAST(FLOOR(LIST_DOT_PRODUCT(tr.v, ev.v)
-                   / (SQRT(LIST_DOT_PRODUCT(tr.v, tr.v))
-                      * SQRT(LIST_DOT_PRODUCT(ev.v, ev.v)))
-                   * 1000000) AS BIGINT) >= {SEMANTIC_DECONTAM_TAU_E6}
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_flagged_indexed,
-           CAST(COUNT(*) AS BIGINT) AS n_flagged_exact,
-           CAST(COUNT(*) AS BIGINT) AS n_overlap,
-           CAST(FLOOR(COUNT(*) * 1000000.0 / COUNT(*)) AS BIGINT) AS recall_e6
-    FROM hits
-    """
-
-
-@register(
-    "x3_semantic_decontam_recall",
-    oracle=_recall_oracle(),
-    survey_ids=("X3", "A2", "J1"),
-)
-def x3_semantic_decontam_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measured recall of the indexed semantic tier against the brute
-    audit tier (VERDICT r13 item 1's 'measured recall-vs-brute-force
-    row'): both flag sets are computed through their REAL plans (the
-    DPP-pruned index join vs the broadcast crossJoin) and intersected.
-    The ball bound guarantees — and this row measures — recall_e6 =
-    1000000 with identical set sizes; the oracle derives all four
-    numbers from the brute set alone, so any pruning bug that dropped
-    a hit would hash-mismatch here AND on every indexed-tier row."""
-    from etl_generator_demo_spark.operators.surfaces_r13 import (
-        x3_semantic_decontam,
-    )
-
-    idx_flags = (
-        semantic_decontam_flags_indexed(spark, sf_dir)
-        .select("train_doc")
-        .distinct()
-    )
-    ex_flags = x3_semantic_decontam(spark, sf_dir).select("train_doc")
-    a = idx_flags.agg(F.count(F.lit(1)).cast("long").alias("n_flagged_indexed"))
-    b = ex_flags.agg(F.count(F.lit(1)).cast("long").alias("n_flagged_exact"))
-    c = idx_flags.join(ex_flags, "train_doc").agg(
-        F.count(F.lit(1)).cast("long").alias("n_overlap")
-    )
-    return (
-        a.crossJoin(b)
-        .crossJoin(c)
-        .select(
-            "n_flagged_indexed",
-            "n_flagged_exact",
-            "n_overlap",
-            F.floor(
-                F.try_divide(F.col("n_overlap") * F.lit(1_000_000.0), F.col("n_flagged_exact"))
-            )
-            .cast("long")
-            .alias("recall_e6"),
-        )
-    )
-
-
 #: Radius-search acceptance threshold (e6): chosen so the fixture's
 #: uniform-random vectors yield a small-but-nonempty neighborhood of
 #: vec 0 at every SF (cosines concentrate near 0 at dim 64).
@@ -534,78 +397,6 @@ def x3_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_filter=F.col("vec_id") != 0,
     )
     return pairs.select("vec_id", "cos_e6").orderBy("vec_id")
-
-
-#: Fixed-size eval split for the PROBE variant: the registered
-#: decontam queries use the fixtures' proportional eval split
-#: (vec_id % 20 == 7), which SCALES with the corpus — their probe
-#: slopes therefore measure |corpus| x |eval| data-shape growth, not
-#: the plan. This variant pins eval to the first 50 vec_ids (present
-#: at every probe tier), so its slope isolates the plan's
-#: corpus-scaling: one broadcast of a constant-size eval set against a
-#: linear corpus scan — expected ~linear.
-FIXED_EVAL_N = 50
-
-
-@register(
-    "x3_semantic_decontam_fixed_eval",
-    oracle=f"""
-    WITH e AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-    ),
-    ev AS (SELECT vec_id, v FROM e WHERE vec_id < {FIXED_EVAL_N}),
-    tr AS (SELECT vec_id, v FROM e WHERE vec_id >= {FIXED_EVAL_N}),
-    sc AS (
-        SELECT tr.vec_id AS train_doc,
-               CAST(FLOOR(LIST_DOT_PRODUCT(tr.v, ev.v)
-                    / (SQRT(LIST_DOT_PRODUCT(tr.v, tr.v))
-                       * SQRT(LIST_DOT_PRODUCT(ev.v, ev.v)))
-                    * 1000000) AS BIGINT) AS cos_e6
-        FROM tr CROSS JOIN ev
-    )
-    SELECT train_doc,
-           CAST(COUNT(*) AS BIGINT) AS n_eval_neardups,
-           CAST(MAX(cos_e6) AS BIGINT) AS max_cos_e6
-    FROM sc
-    WHERE cos_e6 >= 350000
-    GROUP BY train_doc
-    ORDER BY train_doc
-    """,
-    survey_ids=("X3", "X4"),
-)
-def x3_semantic_decontam_fixed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic decontamination against a FIXED-SIZE eval suite (the
-    first {FIXED_EVAL_N} vec_ids) through the exact ball-bounded index
-    — the PROBE variant whose scaling slope measures the PLAN (linear
-    corpus scan under a constant broadcast) instead of the fixtures'
-    proportional eval split (see tools/scaling_probe.py: the
-    registered %-split decontam queries grow |corpus| x |eval| by data
-    shape; real eval suites are fixed-size benchmark sets, which this
-    variant models faithfully)."""
-    from etl_generator_demo_spark.operators.surfaces_r13 import (
-        SEMANTIC_DECONTAM_TAU_E6,
-    )
-
-    emb = t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < FIXED_EVAL_N).select(
-        F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qv")
-    )
-    pairs = cosine_threshold_join(
-        spark,
-        sf_dir,
-        q,
-        SEMANTIC_DECONTAM_TAU_E6,
-        corpus_filter=F.col("vec_id") >= FIXED_EVAL_N,
-    )
-    return (
-        pairs.select(F.col("vec_id").alias("train_doc"), "cos_e6")
-        .groupBy("train_doc")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_eval_neardups"),
-            F.max("cos_e6").cast("long").alias("max_cos_e6"),
-        )
-        .orderBy("train_doc")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -20,7 +20,9 @@ the threshold sweep, setsim's token join) reads ONE overlap kernel,
 `pairs_from_banded`. The oracles mirror both: `_duck_bands` spells the
 band layout from NUM_HASHES/BANDS, `_DUCK_LSH` and `_duck_overlap` sit
 on top of it. The tuning sweeps (band factorizations, Jaccard
-thresholds, signature size k) live here beside the operators they tune.
+thresholds, signature size k) live here beside the operators they tune,
+and so do the keep policies beyond min-id (SoftDeDup weighting,
+keep-best).
 
 Determinism: all hashing is md5 (identical semantics in Spark and
 DuckDB), so every operator here has an exact SQL oracle. MinHash uses
@@ -683,6 +685,118 @@ def x1_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.groupBy(norm.alias("norm_hash"))
         .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
+        .orderBy("keep_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup keep-policies beyond min-id: soft weighting and keep-best
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "x2_softdedup_weights",
+    oracle="""
+    WITH d AS (
+        SELECT doc_id, MD5(text) AS h,
+               CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens
+        FROM documents
+    ),
+    g AS (SELECT h, CAST(COUNT(*) AS BIGINT) AS n_copies FROM d GROUP BY h)
+    SELECT d.doc_id, g.n_copies,
+           CAST(1000000 // g.n_copies AS BIGINT) AS weight_e6,
+           d.n_tokens
+    FROM d JOIN g USING (h)
+    ORDER BY d.doc_id
+    """,
+    survey_ids=("X1", "X4", "A1", "J1"),
+)
+def x2_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SoftDeDup — keep every duplicate but DOWNWEIGHT it: each doc's
+    sampling weight is 1/n_copies of its exact-content group, so a
+    family of k byte-identical copies contributes one document's worth
+    of expected tokens instead of k (the reweight-don't-delete policy:
+    preserves long-tail coverage the hard-removal tier destroys while
+    still flattening the duplicated-content spike). Output: doc →
+    multiplicity, e6 weight, token count — the columns a weighted
+    sampler joins on.
+
+    Plan: one content-hash groupBy (map-combined) + one co-keyed join
+    back on the hash — the `x1_dedup_exact` shuffle plus a join that
+    reuses the same key partitioning. Θ(corpus) output by definition
+    (it annotates the corpus)."""
+    docs = t(spark, sf_dir, "documents")
+    d = docs.select(
+        "doc_id",
+        F.md5("text").alias("h"),
+        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+    )
+    g = d.groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("n_copies"))
+    return (
+        d.join(g, "h")
+        .select(
+            "doc_id",
+            "n_copies",
+            F.expr("CAST(1000000 div n_copies AS LONG)").alias("weight_e6"),
+            "n_tokens",
+        )
+        .orderBy("doc_id")
+    )
+
+
+@register(
+    "x1_dedup_keep_best",
+    oracle="""
+    WITH d AS (
+        SELECT doc_id, n_chars,
+               MD5(LOWER(REGEXP_REPLACE(TRIM(text), '\\s+', ' ', 'g'))) AS h
+        FROM documents
+    ),
+    r AS (
+        SELECT h, doc_id, n_chars,
+               ROW_NUMBER() OVER (PARTITION BY h
+                                  ORDER BY n_chars DESC, doc_id) AS rn,
+               COUNT(*) OVER (PARTITION BY h) AS n_copies
+        FROM d
+    )
+    SELECT h AS norm_hash, doc_id AS keep_id,
+           CAST(n_chars AS BIGINT) AS keep_n_chars,
+           CAST(n_copies AS BIGINT) AS n_copies
+    FROM r WHERE rn = 1
+    ORDER BY keep_id
+    """,
+    survey_ids=("X1", "W1"),
+)
+def x1_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact dedup with a QUALITY keep-policy: within each
+    normalized-content group (the `x1_dedup_normalized` key: casefold,
+    trim, collapse whitespace) keep the RICHEST raw variant — max
+    n_chars, doc_id tiebreak — instead of the arbitrary min-id. The
+    policy production dedup actually ships (keep the longest/
+    best-formatted copy; the whitespace-mangled mirrors lose), and the
+    normalized key is what makes the choice non-degenerate: raw texts
+    in one group genuinely differ.
+
+    Plan: one scan; the selection is a hash-PARTITIONED row_number
+    (parallel by group — never a global window) over the same single
+    shuffle `x1_dedup_normalized` pays."""
+    docs = t(spark, sf_dir, "documents")
+    norm = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
+    w = Window.partitionBy("h").orderBy(F.desc("n_chars"), "doc_id")
+    return (
+        docs.select("doc_id", "n_chars", norm.alias("h"))
+        .withColumn("rn", F.row_number().over(w))
+        .withColumn(
+            "n_copies",
+            F.count(F.lit(1)).over(Window.partitionBy("h")).cast("long"),
+        )
+        .filter(F.col("rn") == 1)
+        .select(
+            F.col("h").alias("norm_hash"),
+            F.col("doc_id").alias("keep_id"),
+            F.col("n_chars").cast("long").alias("keep_n_chars"),
+            "n_copies",
+        )
         .orderBy("keep_id")
     )
 

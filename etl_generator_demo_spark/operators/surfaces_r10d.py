@@ -272,120 +272,3 @@ def f_time_bucket_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("bucket_start")
         .limit(100)
     )
-
-
-# ---------------------------------------------------------------------------
-# decontamination n-gram sensitivity sweep
-# ---------------------------------------------------------------------------
-
-#: n-gram sizes swept (field practice ranges from 8-grams [PaLM] to
-#: 13-grams [GPT-3]; the fixture's short texts use a scaled-down grid).
-DECONTAM_SWEEP_NS = (3, 5, 8)
-
-
-def _decontam_sweep_oracle() -> str:
-    from .textops import DECONTAM_MOD, DECONTAM_REMAINDER
-
-    per_n = []
-    for n in DECONTAM_SWEEP_NS:
-        leads = " || '_' || ".join(
-            ["tk"] + [f"LEAD(tk, {i}) OVER w" for i in range(1, n)]
-        )
-        per_n.append(f"""
-    sh{n} AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-            SELECT doc_id, {leads} AS shingle
-            FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE shingle IS NOT NULL
-    ),
-    hits{n} AS (
-        SELECT c.doc_id, CAST(COUNT(*) AS BIGINT) AS shared
-        FROM sh{n} c
-        WHERE c.doc_id % {DECONTAM_MOD} <> {DECONTAM_REMAINDER}
-          AND c.shingle IN (SELECT shingle FROM sh{n} b
-                            WHERE b.doc_id % {DECONTAM_MOD} = {DECONTAM_REMAINDER})
-        GROUP BY c.doc_id
-    ),
-    row{n} AS (
-        SELECT CAST({n} AS BIGINT) AS ngram_n,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM documents
-                WHERE doc_id % {DECONTAM_MOD} = {DECONTAM_REMAINDER})
-                   AS n_eval_docs,
-               CAST(COUNT(*) AS BIGINT) AS n_flagged_train_docs,
-               CAST(COALESCE(SUM(shared), 0) AS BIGINT) AS sum_shared_ngrams
-        FROM hits{n}
-    )""")
-    union = " UNION ALL ".join(f"SELECT * FROM row{n}" for n in DECONTAM_SWEEP_NS)
-    return f"""
-    WITH tok AS (
-        SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
-    ),
-    {",".join(per_n)}
-    SELECT * FROM ({union}) ORDER BY ngram_n
-    """
-
-
-@register(
-    "x4_decontam_ngram_sweep",
-    oracle=_decontam_sweep_oracle(),
-    survey_ids=("X4", "X2", "J5", "A1"),
-)
-def x4_decontam_ngram_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decontamination sensitivity to the n-gram size — the
-    methodology knob the field never agreed on (GPT-3 filtered on
-    13-grams, PaLM on 8-grams): for each n in the sweep, how many
-    training docs share at least one n-gram with the held-out eval
-    split, and the total shared-shingle mass. Because an n-gram match
-    implies all its sub-(n-1)-gram matches, flagged-doc counts are
-    monotone NON-INCREASING in n — the sweep shows exactly how much
-    contamination surface each tightening step releases, which is what
-    sizes the filter before a 100 TB decontamination pass
-    (``x4_decontaminate`` is the committed single-n production op).
-
-    Scale: per n, one explode + distinct, one eval-side semi-filtered
-    aggregate with the eval shingle set as the broadcast side (the
-    benchmark split is corpus-fraction-bounded); configs are
-    independent scans that AQE schedules in one job each."""
-    from .dedup import _shingle_expr
-    from .textops import DECONTAM_MOD, DECONTAM_REMAINDER
-
-    docs = t(spark, sf_dir, "documents")
-    n_eval = docs.filter(
-        F.col("doc_id") % DECONTAM_MOD == DECONTAM_REMAINDER
-    ).count()  # split-size scalar (bounded metadata fetch)
-    outs = []
-    for n in DECONTAM_SWEEP_NS:
-        sh = (
-            docs.select(
-                "doc_id", F.explode(_shingle_expr("text", n)).alias("shingle")
-            )
-            .distinct()
-        )
-        ev = sh.filter(F.col("doc_id") % DECONTAM_MOD == DECONTAM_REMAINDER)
-        tr = sh.filter(F.col("doc_id") % DECONTAM_MOD != DECONTAM_REMAINDER)
-        hits = (
-            tr.join(
-                F.broadcast(ev.select("shingle").distinct()), "shingle", "semi"
-            )
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("shared"))
-        )
-        outs.append(
-            hits.agg(
-                F.count(F.lit(1)).cast("long").alias("n_flagged_train_docs"),
-                F.coalesce(F.sum("shared"), F.lit(0))
-                .cast("long")
-                .alias("sum_shared_ngrams"),
-            ).select(
-                F.lit(n).cast("long").alias("ngram_n"),
-                F.lit(n_eval).cast("long").alias("n_eval_docs"),
-                "n_flagged_train_docs",
-                "sum_shared_ngrams",
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.orderBy("ngram_n")

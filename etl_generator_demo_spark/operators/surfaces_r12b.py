@@ -626,160 +626,6 @@ def j_range_bin_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# fuzzy (near-dup) eval decontamination — the X2xX4 composition
-# ---------------------------------------------------------------------------
-
-#: Jaccard acceptance for a train-eval contamination hit (the
-#: `x2_neardup_verified` precision threshold).
-FUZZY_DECONTAM_TAU = 0.5
-
-
-def _fuzzy_decontam_oracle() -> str:
-    from .dedup import _DUCK_SHINGLES, _duck_bands, _duck_minhash_cols
-    from .textops import DECONTAM_MOD, DECONTAM_REMAINDER
-
-    is_eval = f"doc_id % {DECONTAM_MOD} = {DECONTAM_REMAINDER}"
-    return f"""
-    {_DUCK_SHINGLES},
-    sigs AS (
-        SELECT doc_id, {_duck_minhash_cols()}
-        FROM shingles GROUP BY doc_id
-    ),
-    bands AS (
-        {_duck_bands("sigs")}
-    ),
-    cand AS (
-        SELECT DISTINCT tr.doc_id AS train_doc, ev.doc_id AS eval_doc
-        FROM bands tr
-        JOIN bands ev
-          ON ev.band_id = tr.band_id AND ev.band_key = tr.band_key
-        WHERE NOT (tr.{is_eval}) AND ev.{is_eval}
-    ),
-    card AS (SELECT doc_id, COUNT(*) AS card FROM shingles GROUP BY doc_id),
-    inter AS (
-        SELECT tr.doc_id AS train_doc, ev.doc_id AS eval_doc,
-               COUNT(*) AS inter
-        FROM shingles tr JOIN shingles ev ON ev.shingle = tr.shingle
-        WHERE (tr.doc_id, ev.doc_id) IN (SELECT (train_doc, eval_doc) FROM cand)
-        GROUP BY tr.doc_id, ev.doc_id
-    ),
-    hits AS (
-        SELECT i.train_doc, i.eval_doc,
-               CAST(FLOOR(CAST(i.inter AS DOUBLE)
-                    / (ct.card + ce.card - i.inter) * 1000000) AS BIGINT)
-                   AS j_e6
-        FROM inter i
-        JOIN card ct ON ct.doc_id = i.train_doc
-        JOIN card ce ON ce.doc_id = i.eval_doc
-        WHERE CAST(i.inter AS DOUBLE) / (ct.card + ce.card - i.inter)
-              >= {FUZZY_DECONTAM_TAU}
-    )
-    SELECT train_doc,
-           CAST(COUNT(*) AS BIGINT) AS n_eval_neardups,
-           CAST(MAX(j_e6) AS BIGINT) AS max_j_e6
-    FROM hits GROUP BY train_doc ORDER BY train_doc
-    """
-
-
-@register(
-    "x4_fuzzy_decontam",
-    oracle=_fuzzy_decontam_oracle(),
-    survey_ids=("X4", "X2", "J1", "A1"),
-)
-def x4_fuzzy_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup eval decontamination — the fuzzy tier next to the
-    exact-shingle gate `x4_decontaminate` (same eval split): a training
-    doc is contaminated if it is MinHash-LSH-near some eval doc at
-    Jaccard >= 0.5, which catches the paraphrased/reformatted benchmark
-    copies the exact 5-gram check misses (the Llama/GPT-3 style fuzzy
-    decontamination pass). Output: contaminated train doc -> eval
-    near-dup count + worst Jaccard (e6).
-
-    Plan shape is the 100 TB one: the EVAL side is tiny next to the
-    corpus, so its band relation BROADCASTS against the train bands
-    (no corpus self-join at all — cheaper than `x2_neardup_verified`,
-    which this otherwise mirrors), and the exact-Jaccard verify runs
-    only over candidate (train, eval) pairs, with both shingle sides
-    semi-pruned to candidate docs first.
-
-    r16 (guide §2.4): the band and shingle relations are served from
-    the PERSISTED ingest-time indexes (`corpus_bands` /
-    `corpus_shingles` — the artifacts the other x2 queries already
-    probe), with the eval split applied after the scan; both are
-    row-identical to the inline pipelines, so the oracle hash is
-    unchanged. This removes three Arrow `MapInPandas` text passes +
-    two signature groupBys from the query-time plan."""
-    from .dedup import corpus_bands, corpus_shingles
-    from .textops import DECONTAM_MOD, DECONTAM_REMAINDER
-
-    is_eval = F.col("doc_id") % DECONTAM_MOD == DECONTAM_REMAINDER
-    bands = corpus_bands(spark, sf_dir)
-    bt = bands.filter(~is_eval).select(
-        F.col("doc_id").alias("train_doc"), "band_id", "band_key"
-    )
-    be = bands.filter(is_eval).select(
-        F.col("doc_id").alias("eval_doc"), "band_id", "band_key"
-    )
-    cand = (
-        bt.join(F.broadcast(be), ["band_id", "band_key"])
-        .select("train_doc", "eval_doc")
-        .distinct()
-        .localCheckpoint(eager=True)  # consumed three times (two doc
-        # prunes + the pair filter): materialize once
-    )
-    sh = corpus_shingles(spark, sf_dir)
-    sh_t = sh.join(
-        F.broadcast(cand.select(F.col("train_doc").alias("doc_id")).distinct()),
-        "doc_id",
-        "left_semi",
-    ).select(F.col("doc_id").alias("train_doc"), "shingle")
-    sh_e = sh.join(
-        F.broadcast(cand.select(F.col("eval_doc").alias("doc_id")).distinct()),
-        "doc_id",
-        "left_semi",
-    ).select(F.col("doc_id").alias("eval_doc_id"), "shingle")
-    inter = (
-        sh_t.join(sh_e, sh_t["shingle"] == sh_e["shingle"])
-        .select("train_doc", F.col("eval_doc_id").alias("eval_doc"))
-        .join(F.broadcast(cand), ["train_doc", "eval_doc"], "left_semi")
-        .groupBy("train_doc", "eval_doc")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    # cardinalities stay a ONE-scan full-corpus aggregate (map-combined,
-    # doc-count-sized shuffle) broadcast to both join sides. The
-    # tempting "aggregate the pruned sh_t/sh_e instead" was tried r16
-    # and reverted: those subtrees are map-side-only (scan + broadcast
-    # semi), so a second consumer re-reads the index — 4 scans replace
-    # 3 and the warm plan grows a shuffle.
-    card = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("card"))
-    ct = card.select(F.col("doc_id").alias("train_doc"), F.col("card").alias("card_t"))
-    ce = card.select(F.col("doc_id").alias("eval_doc"), F.col("card").alias("card_e"))
-    j = (
-        inter.join(F.broadcast(ct), "train_doc")
-        .join(F.broadcast(ce), "eval_doc")
-        .withColumn(
-            "jac",
-            F.col("inter").cast("double")
-            / (F.col("card_t") + F.col("card_e") - F.col("inter")),
-        )
-        .filter(F.col("jac") >= FUZZY_DECONTAM_TAU)
-        .select(
-            "train_doc",
-            "eval_doc",
-            F.floor(F.col("jac") * 1_000_000).cast("long").alias("j_e6"),
-        )
-    )
-    return (
-        j.groupBy("train_doc")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_eval_neardups"),
-            F.max("j_e6").cast("long").alias("max_j_e6"),
-        )
-        .orderBy("train_doc")
-    )
-
-
-# ---------------------------------------------------------------------------
 # keyframe selection per scene segment (the downstream of scene cuts)
 # ---------------------------------------------------------------------------
 
@@ -1717,157 +1563,6 @@ def x5_media_curation_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(stage(4, "after_clip_gate", s4))
         .orderBy("stage_no")
     )
-
-
-# ---------------------------------------------------------------------------
-# filtered vector search: the post-filter multiplier sweep
-# ---------------------------------------------------------------------------
-
-#: Over-fetch multipliers swept for post-filtering.
-POSTFILTER_MULT_SWEEP = (1, 2, 4)
-PF_NQ = 5
-PF_TOPK = 10
-
-
-def _postfilter_oracle() -> str:
-    arms = []
-    for m in POSTFILTER_MULT_SWEEP:
-        arms.append(f"""
-        SELECT CAST({m} AS BIGINT) AS multiplier,
-               CAST(SUM(CASE WHEN tr.vec_id IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT) AS recall10_sum,
-               CAST(COUNT(*) AS BIGINT) AS n_candidates_kept
-        FROM (
-            SELECT query_id, vec_id FROM (
-                SELECT query_id, vec_id, query_label, label,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY query_id
-                           ORDER BY CASE WHEN label = query_label
-                                         THEN 1 ELSE 2 END,
-                                    grk) AS fr
-                FROM g0 WHERE grk <= {PF_TOPK} * {m}
-            ) WHERE fr <= {PF_TOPK} AND label = query_label
-        ) pf
-        LEFT JOIN truth tr
-          ON tr.query_id = pf.query_id AND tr.vec_id = pf.vec_id""")
-    union = "\n        UNION ALL\n".join(arms)
-    return f"""
-    WITH e AS (
-        SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
-    ),
-    q AS (
-        SELECT vec_id AS query_id, label AS query_label, v AS qv
-        FROM e WHERE vec_id < {PF_NQ}
-    ),
-    g0 AS (
-        SELECT query_id, query_label, vec_id, label, grk FROM (
-            SELECT q.query_id, q.query_label, e.vec_id, e.label,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY FLOOR(LIST_DOT_PRODUCT(e.v, q.qv) * 1000000)
-                                DESC, e.vec_id) AS grk
-            FROM e CROSS JOIN q
-        ) WHERE grk <= {PF_TOPK} * {max(POSTFILTER_MULT_SWEEP)}
-    ),
-    truth AS (
-        SELECT query_id, vec_id FROM (
-            SELECT q.query_id, e.vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY FLOOR(LIST_DOT_PRODUCT(e.v, q.qv) * 1000000)
-                                DESC, e.vec_id) AS rk
-            FROM e JOIN q ON e.label = q.query_label
-        ) WHERE rk <= {PF_TOPK}
-    )
-    SELECT * FROM ({union}) ORDER BY multiplier
-    """
-
-
-@register(
-    "x3_filtered_topk_postfilter_sweep",
-    oracle=_postfilter_oracle(),
-    survey_ids=("X3", "W1", "A1"),
-)
-def x3_filtered_topk_postfilter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filtered vector search, the post-filter pitfall measured: when
-    a top-k query carries a predicate (here: same label as the
-    anchor), the cheap strategy over-fetches k*m UNFILTERED neighbors
-    and filters after — and silently loses recall when the filter is
-    selective (the classic filtered-ANN failure every vector store
-    documents). Per multiplier m = 1/2/4: recall@10 against the exact
-    PRE-filtered ground truth, plus how many of the k*m survivors the
-    filter kept. With ~8 labels, m=1 keeps ~1/8 of the fetch — the
-    curve shows what m buys back and what only true pre-filtering
-    (`x3_hard_negative_mining`'s filter-before-rank shape) can
-    guarantee.
-
-    One global ranking serves every m (each arm is a prefix view —
-    the `x2_minhash_k_sweep` discipline); the truth tier ranks the
-    label-pruned corpus. All windows are {PF_NQ}-anchor row_number."""
-    emb = t(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "label", _as_double("embedding").alias("v"))
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < PF_NQ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("query_label"),
-            F.col("v").alias("qv"),
-        )
-    )
-    score = F.floor(_dot(F.col("v"), F.col("qv")) * 1_000_000).cast("long")
-    gw = Window.partitionBy("query_id").orderBy(F.desc("score_e6"), F.asc("vec_id"))
-    glob = (
-        e.crossJoin(q)
-        .select("query_id", "query_label", "vec_id", "label", score.alias("score_e6"))
-        .withColumn("grk", F.row_number().over(gw))
-        .filter(F.col("grk") <= PF_TOPK * max(POSTFILTER_MULT_SWEEP))
-        .localCheckpoint(eager=True)  # one ranking serves all arms + truth join
-    )
-    truth = (
-        e.crossJoin(q)
-        .filter(F.col("label") == F.col("query_label"))
-        .select("query_id", "vec_id", score.alias("score_e6"))
-        .withColumn("rk", F.row_number().over(
-            Window.partitionBy("query_id").orderBy(F.desc("score_e6"), F.asc("vec_id"))
-        ))
-        .filter(F.col("rk") <= PF_TOPK)
-        .select("query_id", F.col("vec_id").alias("t_vec"))
-    )
-    parts = []
-    for m in POSTFILTER_MULT_SWEEP:
-        fw = Window.partitionBy("query_id").orderBy(
-            F.when(F.col("label") == F.col("query_label"), 1).otherwise(2),
-            F.asc("grk"),
-        )
-        pf = (
-            glob.filter(F.col("grk") <= PF_TOPK * m)
-            .withColumn("fr", F.row_number().over(fw))
-            .filter(
-                (F.col("fr") <= PF_TOPK)
-                & (F.col("label") == F.col("query_label"))
-            )
-            .select("query_id", "vec_id")
-        )
-        # mirror the oracle's post-filter spelling: rank filtered-first
-        # then cut to k, keeping only rows that pass the filter
-        parts.append(
-            pf.join(
-                truth,
-                (pf["query_id"] == truth["query_id"])
-                & (pf["vec_id"] == truth["t_vec"]),
-                "left",
-            )
-            .agg(
-                F.lit(m).cast("long").alias("multiplier"),
-                F.sum(F.when(F.col("t_vec").isNotNull(), 1).otherwise(0))
-                .cast("long")
-                .alias("recall10_sum"),
-                F.count(F.lit(1)).cast("long").alias("n_candidates_kept"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("multiplier")
 
 
 # ---------------------------------------------------------------------------

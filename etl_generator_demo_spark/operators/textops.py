@@ -339,71 +339,6 @@ def x4_quality_and_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-#: Deterministic benchmark split for the decontamination query: every
-#: 20th doc (remainder 7) plays the held-out eval set (~5%).
-DECONTAM_MOD, DECONTAM_REMAINDER = 20, 7
-
-
-@register(
-    "x4_decontaminate",
-    oracle=f"""
-    WITH tok AS (
-        SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id,
-               tk || '_' || LEAD(tk, 1) OVER w || '_' || LEAD(tk, 2) OVER w
-                  || '_' || LEAD(tk, 3) OVER w || '_' || LEAD(tk, 4) OVER w AS shingle
-        FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-    ),
-    shingles AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE shingle IS NOT NULL)
-    SELECT c.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shared_shingles
-    FROM shingles c
-    WHERE c.doc_id % {DECONTAM_MOD} <> {DECONTAM_REMAINDER}
-      AND c.shingle IN (SELECT shingle FROM shingles b
-                        WHERE b.doc_id % {DECONTAM_MOD} = {DECONTAM_REMAINDER})
-    GROUP BY c.doc_id
-    ORDER BY c.doc_id
-    """,
-    survey_ids=("X4", "X2"),
-)
-def x4_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination — flag training docs that share any
-    5-token shingle with a held-out eval set (the standard n-gram
-    overlap check run before every pretraining cut; here every 20th
-    doc plays the benchmark). Output: contaminated doc → count of
-    distinct shared shingles.
-
-    100 TB shape: eval suites are tiny next to the corpus, so the
-    benchmark's distinct shingle set BROADCASTS; the corpus side is
-    one shingle scan + broadcast-hash semi-match, and the only
-    shuffle is the per-doc count aggregation (map-combined). No
-    corpus self-join anywhere.
-
-    r16 (guide §2.4): both shingle relations are served from the
-    PERSISTED shingle index (`corpus_shingles` — the same ingest-time
-    artifact every other exact-tier shingle consumer reads), filtered
-    by the eval split AFTER the scan; shingling is per-doc, so
-    filtering before or after the text pass is row-identical and the
-    oracle hash is unchanged. This removes two Arrow `MapInPandas`
-    text passes (and the doc scan feeding them) from the query-time
-    plan — it is now two parquet scans of the index."""
-    from .dedup import corpus_shingles
-
-    sh = corpus_shingles(spark, sf_dir)
-    is_bench = F.col("doc_id") % DECONTAM_MOD == DECONTAM_REMAINDER
-    bench_shingles = sh.filter(is_bench).select("shingle").distinct()
-    train_shingles = sh.filter(~is_bench)  # distinct per doc
-    return (
-        train_shingles.join(F.broadcast(bench_shingles), "shingle")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_shared_shingles"))
-        .orderBy("doc_id")
-    )
-
-
 #: PII patterns shared by the Spark expression and the DuckDB oracle —
 #: restricted to syntax Java regex and RE2 interpret identically.
 PII_PATTERNS: dict[str, str] = {

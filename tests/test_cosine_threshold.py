@@ -213,48 +213,6 @@ def test_static_path_plan_has_literal_partition_filter(spark, tmp_path):
     assert "ivf_list" in plan.split("PartitionFilters", 1)[1][:400]
 
 
-def test_indexed_decontam_matches_brute_on_planted_corpus(spark, tmp_path):
-    """End-to-end: the indexed decontam rollup equals the brute audit
-    tier row-for-row on a planted corpus with hits."""
-    from etl_generator_demo_spark.operators.cosine_threshold import (
-        x3_semantic_decontam_indexed,
-    )
-    from etl_generator_demo_spark.operators.surfaces_r13 import (
-        x3_semantic_decontam,
-    )
-
-    rows = []
-    for i in range(30):
-        if i % 20 == 7:  # eval
-            rows.append((i, [1.0, 0.0, 0.0], 0))
-        elif i % 3 == 0:  # near eval axis
-            rows.append((i, [5.0, 1.0, 0.0], 0))
-        else:
-            rows.append((i, [0.0, 0.0, float(i + 1)], 1))
-    _write_embeddings(spark, str(tmp_path), rows)
-    idx = [tuple(r) for r in x3_semantic_decontam_indexed(spark, str(tmp_path)).collect()]
-    brute = [tuple(r) for r in x3_semantic_decontam(spark, str(tmp_path)).collect()]
-    assert idx == brute
-    assert len(idx) >= 5
-
-
-def test_recall_row_is_one(spark, tmp_path):
-    from etl_generator_demo_spark.operators.cosine_threshold import (
-        x3_semantic_decontam_recall,
-    )
-
-    rows = []
-    for i in range(30):
-        if i % 20 == 7:
-            rows.append((i, [1.0, 1.0, 0.0], 0))
-        else:
-            rows.append((i, [1.0, float(i % 5), 0.0], 1))
-    _write_embeddings(spark, str(tmp_path), rows)
-    (row,) = x3_semantic_decontam_recall(spark, str(tmp_path)).collect()
-    assert row["n_flagged_indexed"] == row["n_flagged_exact"] == row["n_overlap"]
-    assert row["recall_e6"] == 1_000_000
-
-
 def test_exact_topk_indexed_matches_brute_and_prunes(spark, tmp_path):
     """Two-phase ball-bound top-k: bitwise brute-force answer on a
     clustered corpus, AND phase 2 provably skips lists there (the

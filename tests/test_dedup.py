@@ -20,6 +20,14 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _write_docs(spark, path, rows):
+    """rows: list of (doc_id, text). lang/source/n_chars derived."""
+    spark.createDataFrame(
+        [(i, t, "en", "srcT", len(t)) for i, t in rows],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/documents.parquet")
+
+
 def test_exact_dedup_keeps_one_per_key(spark):
     df = _docs(spark, [(1, "a b c"), (2, "a b c"), (3, "x y z")])
     out = exact_dedup(df, ["text"])
@@ -600,6 +608,48 @@ def test_minhash_k_sweep_error_decays(spark, sf_dir):
     assert rows[hi]["mse_e12"] <= rows[lo]["mse_e12"]
 
 
+def test_softdedup_weights_flatten_duplicates(spark, tmp_path):
+    """Three copies of text A (weight 333333 each), one unique text B
+    (weight 1000000). Sum of weights ~= number of DISTINCT texts (the
+    SoftDeDup invariant, up to the floor loss: 3*333333 = 999999)."""
+    from etl_generator_demo_spark.operators.dedup import x2_softdedup_weights
+
+    rows = [(0, "a b c"), (1, "a b c"), (2, "a b c"), (3, "x y z w")]
+    _write_docs(spark, str(tmp_path), rows)
+    got = {r["doc_id"]: r for r in x2_softdedup_weights(spark, str(tmp_path)).collect()}
+    assert {got[i]["n_copies"] for i in (0, 1, 2)} == {3}
+    assert {got[i]["weight_e6"] for i in (0, 1, 2)} == {333_333}
+    assert got[3]["n_copies"] == 1 and got[3]["weight_e6"] == 1_000_000
+    assert got[0]["n_tokens"] == 3 and got[3]["n_tokens"] == 4
+    total_weight = sum(r["weight_e6"] for r in got.values())
+    assert total_weight == 999_999 + 1_000_000
+
+
+def test_keep_best_selects_richest_variant(spark, tmp_path):
+    """Docs 0/1/2 normalize to the same text; doc 1 is the raw-richest
+    variant (extra whitespace -> more chars). Keep-best must pick doc 1
+    where min-id dedup would pick doc 0."""
+    from etl_generator_demo_spark.operators.dedup import (
+        x1_dedup_keep_best,
+        x1_dedup_normalized,
+    )
+
+    rows = [
+        (0, "Hello World Foo"),
+        (1, "hello   world    foo"),  # same normalized text, most chars
+        (2, "hello world foo"),
+        (3, "other text"),
+    ]
+    _write_docs(spark, str(tmp_path), rows)
+    best = {r["keep_id"]: r for r in x1_dedup_keep_best(spark, str(tmp_path)).collect()}
+    assert set(best) == {1, 3}
+    assert best[1]["n_copies"] == 3
+    assert best[1]["keep_n_chars"] == len("hello   world    foo")
+    # contrast: the min-id policy keeps doc 0 for the same group
+    minid = {r["keep_id"] for r in x1_dedup_normalized(spark, str(tmp_path)).collect()}
+    assert 0 in minid and 1 not in minid
+
+
 # ---------------------------------------------------------------------------
 # Degenerate corpora: every near-dup family query against its DuckDB
 # oracle on the sf0.001 fixture with `documents` replaced by no rows,
@@ -628,6 +678,6 @@ def test_degenerate_corpus_matches_oracle(
     family = {f"etl_generator_demo_spark.operators.{m}" for m in _FAMILY_MODULES}
     names = [n for n, rq in load_all().items() if rq.fn.__module__ in family]
     names.append("x4_quality_threshold_sweep")
-    assert len(names) == 26
+    assert len(names) == 28
     bad = oracle_mismatches(d, names)
     assert not bad, bad

@@ -334,3 +334,35 @@ def test_ann_recall_curve_shape(spark, sf_dir):
     # the probe must find SOMETHING at k=20 on the fixture (planted
     # near-dups share buckets with the query's neighborhood)
     assert rows[-1].n_hits > 0
+
+
+def test_prefilter_where_reaches_the_pruned_scan(spark, sf_dir):
+    """The pre-filter contract at plan level: with `where` set, the
+    IVF probe's scan line carries BOTH the ivf_list partition filter
+    and the label pushed filter (the property plan_audit pins for the
+    registered query, asserted here against the probe function
+    directly so a refactor can't silently drop the pushdown)."""
+    from etl_generator_demo_spark.operators.ann_index import ivf_probe_topk
+    from etl_generator_demo_spark.operators.relational import t
+
+    emb = t(spark, sf_dir, "embeddings")
+    qv = [
+        float(x)
+        for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()[
+            "embedding"
+        ]
+    ]
+    df = ivf_probe_topk(spark, sf_dir, qv, k=5, n_probe=2, where="label = 3")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scan_lines = [
+        ln
+        for ln in plan.splitlines()
+        if "PartitionFilters" in ln and "ivf_list" in ln
+    ]
+    assert scan_lines, plan
+    assert any(
+        "PushedFilters" in ln and "label" in ln.split("PushedFilters")[1][:120]
+        for ln in scan_lines
+    ), scan_lines
+    rows = df.collect()
+    assert rows and all(r["label"] == 3 for r in rows)

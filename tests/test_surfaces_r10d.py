@@ -95,19 +95,3 @@ def test_time_bucket_alignment_and_totals(spark):
         ts = r["bucket_start"]
         assert ts.minute % 15 == 0 and ts.second == 0 and ts.microsecond == 0
     assert all(r["n_purchases"] >= 1 for r in rows)
-
-
-def test_decontam_sweep_monotone_in_n(spark):
-    """An n-gram match implies all sub-(n-1)-gram matches, so flagged
-    docs and shared mass are monotone non-increasing as n grows."""
-    from etl_generator_demo_spark.operators.surfaces_r10d import (
-        x4_decontam_ngram_sweep,
-    )
-
-    rows = x4_decontam_ngram_sweep(spark, SF).collect()
-    flagged = [r["n_flagged_train_docs"] for r in rows]
-    mass = [r["sum_shared_ngrams"] for r in rows]
-    assert flagged == sorted(flagged, reverse=True)
-    assert mass == sorted(mass, reverse=True)
-    assert len({r["n_eval_docs"] for r in rows}) == 1  # same split per n
-

@@ -148,39 +148,6 @@ def test_bin_width_sweep_true_pairs_invariant(spark, tmp_path):
     )
 
 
-@pytest.mark.slow
-def test_fuzzy_decontam_flags_planted_neardup(spark, tmp_path):
-    """Doc 7 is the eval doc (7 % 20 == 7). Train doc 1 is the same
-    text plus one appended token — shingle Jaccard 36/37 (~0.973),
-    far above tau and guaranteed LSH-candidate at that similarity.
-    Every other train doc shares nothing. Exact expected hit:
-    max_j_e6 = floor(36/37 * 1e6)."""
-    from etl_generator_demo_spark.operators.surfaces_r12b import (
-        x4_fuzzy_decontam,
-    )
-
-    bench = " ".join(f"q{i}" for i in range(40))  # 40 tokens, 36 shingles
-    rows = []
-    for i in range(10):
-        if i == 7:
-            rows.append((bench, "en"))
-        elif i == 1:
-            rows.append((bench + " ztail", "en"))
-        else:
-            rows.append((" ".join(f"d{i}w{j}" for j in range(8)), "en"))
-    _write_documents(spark, str(tmp_path), len(rows))
-    spark.createDataFrame(
-        [(i, text, lang, "srcT", len(text)) for i, (text, lang) in enumerate(rows)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
-    got = {
-        r["train_doc"]: r for r in x4_fuzzy_decontam(spark, str(tmp_path)).collect()
-    }
-    assert set(got) == {1}
-    assert got[1]["n_eval_neardups"] == 1
-    assert got[1]["max_j_e6"] == 36 * 1_000_000 // 37
-
-
 def test_keyframe_selection_planted_clip(spark, tmp_path):
     """Frames [1,0],[2,0],[0,1],[0,3]: cut only at frame 2 (cosine 0),
     so segments {0,1} and {2,3}; keyframes are the max-norm frames
@@ -419,7 +386,7 @@ def test_postfilter_sweep_planted_selectivity(spark, tmp_path):
     recall must be non-decreasing in the multiplier, candidates kept
     never exceed k*m, and every kept candidate passes the filter
     (recall10_sum <= n_candidates_kept <= true filtered top-k)."""
-    from etl_generator_demo_spark.operators.surfaces_r12b import (
+    from etl_generator_demo_spark.operators.ann_index import (
         x3_filtered_topk_postfilter_sweep,
     )
 

@@ -142,34 +142,6 @@ class TestRepetitionScores:
         assert got == {1: True, 2: False}
 
 
-class TestDecontaminate:
-    def test_planted_overlap_flagged_and_broadcast(self, spark, tmp_path):
-        """A corpus doc copying a 5-token span from a benchmark doc is
-        flagged with the exact distinct-shingle overlap count; disjoint
-        docs stay clean; the benchmark shingle set is broadcast."""
-        from etl_generator_demo_spark.operators.textops import x4_decontaminate
-
-        bench_text = "alpha beta gamma delta epsilon zeta eta theta"
-        docs = spark.createDataFrame(
-            [
-                # doc 7 = benchmark (7 % 20 == 7)
-                (7, bench_text, "en", "wiki", len(bench_text)),
-                # doc 33 (33 % 20 = 13 -> corpus) copies tokens 3..8 of the
-                # benchmark doc -> shares 2 distinct 5-shingles
-                (33, "x y gamma delta epsilon zeta eta theta q r", "en", "web", 10),
-                # doc 3 disjoint
-                (3, "one two three four five six seven eight", "en", "web", 10),
-            ],
-            "doc_id long, text string, lang string, source string, n_chars long",
-        )
-        docs.write.parquet(str(tmp_path / "documents.parquet"))
-        out = x4_decontaminate(spark, str(tmp_path))
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-        rows = [(r["doc_id"], r["n_shared_shingles"]) for r in out.collect()]
-        assert rows == [(33, 2)]
-
-
 def test_bigram_lm_quality_invariants(spark, sf_dir):
     """MLE bigram log-probs are <= 0 (cb <= cp by construction), every
     doc with >= 2 tokens is scored, and n_bigrams = token_count - 1."""

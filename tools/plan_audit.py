@@ -82,12 +82,10 @@ EXPECTATIONS: dict[str, dict] = {
     "st_session_windows_salted": {"max_exchanges": 4},
     "f_json_struct_agg": {"max_exchanges": 2},
     "sq_correlated_above_nation_avg": {"max_exchanges": 3},
-    # benchmark shingle set must broadcast; shuffles = benchmark
-    # distinct + per-doc count + output ordering
-    # r16: served from the persisted shingle index — warm is two
-    # index scans + broadcast semi + per-doc agg (3 shuffles); cold
-    # falls back to the inline Arrow shingle pipeline (one extra
-    # distinct shuffle)
+    # the eval shingle set must broadcast; warm is two scans of the
+    # persisted shingle index + broadcast match + per-doc agg (shuffles = eval distinct + per-doc count +
+    # output ordering); cold falls back to the inline Arrow shingle
+    # pipeline (one extra distinct shuffle)
     "x4_decontaminate": {"max_exchanges": 3, "max_exchanges_cold": 4,
                          "min_broadcast": 1},
     # query batch broadcasts; one narrow shuffle into the per-query
@@ -927,11 +925,10 @@ EXPECTATIONS: dict[str, dict] = {
     # empty-side-batch fix) + two bounded theta joins against the
     # broadcast |batches|-row watermark relation
     "st_join_state_ledger": {"max_exchanges": 10, "min_broadcast": 4},
-    # minhash/band pipeline + broadcast eval bands + candidate-pruned
-    # shingle join + per-train rollup
-    # r16: bands + shingles served from the persisted indexes — the
-    # three inline Arrow text passes and two signature groupBys drop
-    # out of the warm plan (10 -> 6 shuffles); cold runs them inline
+    # decontam.fuzzy_hits: broadcast eval bands + candidate-pruned
+    # shingle join, then the per-train rollup; bands + shingles come
+    # from the persisted indexes (warm 6 shuffles; cold runs the
+    # inline Arrow text passes and signature groupBys, 9)
     "x4_fuzzy_decontam": {"max_exchanges": 6, "max_exchanges_cold": 9,
                           "min_broadcast": 5},
     # one scan -> bounded per-clip windows -> segment rollup + argmax
@@ -1047,14 +1044,13 @@ EXPECTATIONS: dict[str, dict] = {
         "partition_pruned_on": "ivf_list",
         "pushed": True,
     },
-    # three contamination tiers + anti-join chain + 4 stage aggregates;
-    # eval sides broadcast inside every component
-    # r16: exact+fuzzy tiers index-served (see those entries) — warm
-    # funnel 18 -> 14 shuffles; cold = the old inline shape
+    # decontam._tiers (three flag sets, eval sides broadcast inside
+    # each) + anti-join chain + 4 stage aggregates; exact and fuzzy
+    # tiers index-served (see those entries), cold = the inline shape
     "x4_decontam_funnel": {"max_exchanges": 14, "max_exchanges_cold": 18,
                            "min_broadcast": 8},
-    # same three tiers left-joined onto the train population + the
-    # <=7-cell membership groupBy
+    # the same decontam._tiers left-joined onto the train population
+    # + the <=7-cell membership groupBy
     "x4_decontam_tier_overlap": {"max_exchanges": 11,
                                  "max_exchanges_cold": 15,
                                  "min_broadcast": 8},
