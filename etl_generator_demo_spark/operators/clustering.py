@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.operators.relational import t
-from etl_generator_demo_spark.operators.similarity import DIM
+from etl_generator_demo_spark.operators.similarity import DIM, _duck_q0, query_vector
 from etl_generator_demo_spark.registry import register
 
 #: Quantization scale: 4 decimal digits of each embedding coordinate.
@@ -95,7 +95,7 @@ def _assign(emb: DataFrame, cents: list[tuple[int, list[int]]]) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        cm = np.array(cmat, dtype=np.int64)  # k×dim
+        cm = np.array(cmat, dtype=np.int64, ndmin=2)  # k×dim
         ids = np.array(cids, dtype=np.int32)
         c2 = (cm * cm).sum(axis=1)  # k
         for pdf in batches:
@@ -153,7 +153,7 @@ def kmeans_model(
             import numpy as np
             import pandas as pd
 
-            cm = np.array(_cmat, dtype=np.int64)
+            cm = np.array(_cmat, dtype=np.int64, ndmin=2)
             c2 = (cm * cm).sum(axis=1)
             kk, dim = cm.shape
             for pdf in batches:
@@ -214,6 +214,21 @@ def kmeans_assignments(
     ).select("vec_id", "label", "cluster_id", "dist_q")
 
 
+def _rank_centroids(q: list[int] | None, cents: list[tuple[int, list[int]]]) -> list[int]:
+    """Cluster ids by exact integer squared distance of their centroid
+    to the quantized query ``q``, nearest first (ties to the lower id):
+    the IVF probe order, k-row model arithmetic on the driver. None
+    without a query row."""
+    if q is None:
+        return []
+    return [
+        cid
+        for _, cid in sorted(
+            (sum((a - b) * (a - b) for a, b in zip(q, c)), cid) for cid, c in cents
+        )
+    ]
+
+
 def _kmeans_cte(
     k: int, rounds: int, dim: int, prefix: str = "", where: str = ""
 ) -> str:
@@ -222,7 +237,7 @@ def _kmeans_cte(
     computation, not an approximation. `prefix` namespaces every CTE
     so two chains (e.g. the staleness audit's stale-vs-fresh models)
     can coexist in one statement; `where` restricts the TRAINING
-    population (seeding and updates) — r11's staleness audit trains
+    population (seeding and updates) — the staleness audit trains
     the stale model on the pre-append slice."""
     p = prefix
     parts = [
@@ -621,7 +636,7 @@ def x3_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        cb = np.array(cbook, dtype=np.int64).reshape(PQ_K, PQ_M, PQ_SUBDIM)
+        cb = np.array(cbook, dtype=np.int64).reshape(-1, PQ_M, PQ_SUBDIM)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -669,7 +684,7 @@ def _ivfpq_oracle(
 ) -> str:
     return f"""
     WITH {_kmeans_cte(k, rounds, dim)},
-    qv AS (SELECT q FROM e WHERE vec_id = 0),
+    {_duck_q0("q", "e", "qv")},
     listrank AS (
         SELECT c.cluster_id,
                ROW_NUMBER() OVER (ORDER BY
@@ -757,11 +772,8 @@ def x3_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-tier variant); ADC reads 8 bytes of codes per candidate, not
     512 — the I/O win that makes 100 TB ANN affordable."""
     emb, cents = kmeans_model(spark, sf_dir)
-    q = list(emb.filter(F.col("vec_id") == 0).select("q").first().q)
-    ranked = sorted(
-        (sum((a - b) * (a - b) for a, b in zip(q, c)), cid) for cid, c in cents
-    )
-    probe = [cid for _, cid in ranked[:IVFPQ_NPROBE]]
+    q = query_vector(emb, col="q")
+    probe = _rank_centroids(q, cents)[:IVFPQ_NPROBE]
     asg = _assign(emb, cents).filter(
         F.col("cluster_id").isin(probe) & (F.col("vec_id") != 0)
     )
@@ -779,8 +791,9 @@ def x3_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        cb = np.array(cbook, dtype=np.int64).reshape(PQ_K, PQ_M, PQ_SUBDIM)
-        qm = np.array(qvec, dtype=np.int64)
+        cb = np.array(cbook, dtype=np.int64).reshape(-1, PQ_M, PQ_SUBDIM)
+        # no query row means no candidate ever reaches this stage
+        qm = np.zeros(PQ_M * PQ_SUBDIM, np.int64) if qvec is None else np.array(qvec, np.int64)
         qsub = qm.reshape(PQ_M, PQ_SUBDIM)
         # lut[m, j] = |q_m − cb[j, m]|²  (exact int64)
         lut = ((qsub[None, :, :] - cb) ** 2).sum(axis=2).T  # M×K
@@ -925,7 +938,7 @@ def x3_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 9: leading principal component via fixed power iteration
+# Leading principal component via fixed power iteration
 # ---------------------------------------------------------------------------
 
 #: Power-iteration rounds. Convergence rate is (λ2/λ1)^k; 12 rounds of
@@ -1021,14 +1034,14 @@ def x3_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side on the collected d×d matrix (64² = 4096 cells — the
     bounded model fetch, k-means-centroid idiom); its cost is
     independent of corpus size by construction. v0 = all-ones e6."""
-    v = pc1_loading(spark, sf_dir)
-    rows = [(i, v[i]) for i in range(DIM)]
+    rows = sorted(pc1_loading(spark, sf_dir).items())
     return spark.createDataFrame(rows, "dim_idx long, loading_e6 long")
 
 
 def pc1_loading(spark: SparkSession, sf_dir: str) -> dict[int, int]:
     """Leading-component loadings (dim -> e6 int) — the driver-side
-    model the apply-stage queries broadcast back into column space."""
+    model the apply-stage queries broadcast back into column space.
+    An empty corpus has no covariance and no loadings."""
     cov = (
         x3_dim_covariance(spark, sf_dir)
         .select("i", "j", "cov_num")
@@ -1040,6 +1053,8 @@ def pc1_loading(spark: SparkSession, sf_dir: str) -> dict[int, int]:
         C[(i, j)] = c
         if i != j:
             C[(j, i)] = c
+    if not C:
+        return {}
     v = {i: 1_000_000 for i in range(DIM)}
     for _ in range(PCA_ITERS):
         w = {
@@ -1087,8 +1102,7 @@ def x3_pc1_projection_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pmod floor-division idiom since projections go negative. At
     100 TB this is one scan + one bucket-keyed map-combined
     aggregate."""
-    v = pc1_loading(spark, sf_dir)
-    lits = F.array(*[F.lit(int(v[i])) for i in range(DIM)])
+    lits = F.array(*[F.lit(int(x)) for _, x in sorted(pc1_loading(spark, sf_dir).items())])
     emb = t(spark, sf_dir, "embeddings")
     score = F.aggregate(
         F.zip_with(
@@ -1113,9 +1127,8 @@ def x3_pc1_projection_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round 10: IVF n_probe recall sweep (the IVF twin of the LSH band
-# tuning curve — the knob-vs-recall table an ANN deployment reads
-# before fixing n_probe)
+# IVF n_probe recall sweep (the IVF twin of the LSH band tuning curve —
+# the knob-vs-recall table an ANN deployment reads before fixing n_probe)
 # ===========================================================================
 
 #: Probe counts swept (k=8 lists: 8 probes == exhaustive, the sanity row).
@@ -1159,7 +1172,7 @@ def _ivf_sweep_oracle(
     )
     return f"""
     WITH {_kmeans_cte(k, rounds, dim)},
-    q0 AS (SELECT q FROM e WHERE vec_id = 0),
+    {_duck_q0("q", "e", "q0")},
     exact AS (
         SELECT e.vec_id, {qdist} AS d FROM e, q0 WHERE e.vec_id <> 0
     ),
@@ -1201,8 +1214,8 @@ def x3_ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered top-10; the probe ORDER itself is k-row model math
     solved driver-side (centroids are already a collected model)."""
     emb, cents = kmeans_model(spark, sf_dir)
-    q0 = [int(x) for x in emb.filter(F.col("vec_id") == 0).first()["q"]]
-    q0col = F.array(*[F.lit(x) for x in q0])
+    q0 = query_vector(emb, col="q")
+    q0col = F.array(*[F.lit(x) for x in q0 or []])
     exact = (
         emb.filter(F.col("vec_id") != 0)
         .select("vec_id", _sqdist(F.col("q"), q0col).alias("d"))
@@ -1210,12 +1223,7 @@ def x3_ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact_top = exact.orderBy("d", "vec_id").limit(IVF_SWEEP_K).select("vec_id")
     assign = _assign(emb, cents).select("vec_id", "cluster_id")
-    # probe order: k-row model arithmetic (centroids are driver-side)
-    order = sorted(
-        (sum((qi - ci) * (qi - ci) for qi, ci in zip(q0, c)), cid)
-        for cid, c in cents
-    )
-    ranked_cids = [cid for _d, cid in order]
+    ranked_cids = _rank_centroids(q0, cents)
     outs = []
     for np_ in IVF_SWEEP_PROBES:
         probed = ranked_cids[:np_]
@@ -1248,3 +1256,361 @@ def x3_ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     for o in outs[1:]:
         out = out.unionByName(o)
     return out.orderBy("n_probe")
+
+
+# ---------------------------------------------------------------------------
+# k-means k sweep (the elbow curve behind KMEANS_K / IVF list count)
+# ---------------------------------------------------------------------------
+
+#: Swept cluster counts (8 = the registered single point KMEANS_K).
+KMEANS_K_SWEEP = (2, 4, 8, 16)
+
+
+def _k_sweep_oracle() -> str:
+    r = KMEANS_ROUNDS
+    chains, arms = [], []
+    for k in KMEANS_K_SWEEP:
+        p = f"k{k}_"
+        chains.append(_kmeans_cte(k, r, DIM, prefix=p))
+        arms.append(f"""
+        SELECT CAST({k} AS BIGINT) AS k,
+               CAST(SUM(d) AS BIGINT) AS sse_q_total,
+               CAST(COUNT(DISTINCT cluster_id) AS BIGINT) AS n_nonempty,
+               CAST(MAX(cn) * 1000000 // COUNT(*) AS BIGINT) AS max_share_ppm
+        FROM (
+            SELECT vec_id, cluster_id, d,
+                   COUNT(*) OVER (PARTITION BY cluster_id) AS cn
+            FROM {p}a{r}
+        )""")
+    union = "\n        UNION ALL\n".join(arms)
+    return f"WITH {','.join(chains)}\n    SELECT * FROM ({union}) ORDER BY k"
+
+
+@register(
+    "x3_kmeans_k_sweep",
+    oracle=_k_sweep_oracle(),
+    survey_ids=("X3", "A1"),
+)
+def x3_kmeans_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The elbow curve behind every quantizer knob in the repo
+    (KMEANS_K, the IVF coarse-list count, the PQ codebook size): run
+    the SAME fixed-iteration md5-seeded integer k-means at k=2/4/8/16
+    and report total within-cluster squared distance (exact integer —
+    the elbow), non-empty cluster count, and the biggest cluster's
+    row share (the IVF list-balance number: a dominant list means
+    probes scan it every query). Distortion falls monotonically in k
+    while balance typically worsens — where the SSE curve flattens is
+    where KMEANS_K earns its value.
+
+    Each k trains independently (seeding the same first-k of the
+    md5-ordered init, Lloyd rounds unrolled identically in both
+    engines — the `x3_kmeans_clusters` discipline); per k the model is
+    k x dim integers on the driver, the data-side work is linear
+    scans. The oracle runs four namespaced unrolled CTE chains."""
+    parts = []
+    for k in KMEANS_K_SWEEP:
+        a = kmeans_assignments(spark, sf_dir, k=k)
+        cn = a.groupBy("cluster_id").agg(
+            F.count(F.lit(1)).cast("long").alias("cn")
+        )
+        parts.append(
+            a.join(F.broadcast(cn), "cluster_id")
+            .groupBy()
+            .agg(
+                F.lit(k).cast("long").alias("k"),
+                F.sum("dist_q").cast("long").alias("sse_q_total"),
+                F.count_distinct("cluster_id").cast("long").alias("n_nonempty"),
+                F.expr("CAST(MAX(cn) * 1000000 div COUNT(1) AS LONG)").alias(
+                    "max_share_ppm"
+                ),
+            )
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.orderBy("k")
+
+
+# ---------------------------------------------------------------------------
+# IVF index staleness audit
+# ---------------------------------------------------------------------------
+
+#: The "pre-append corpus" slice: the stale coarse quantizer is
+#: trained on vec_id % 10 != 0 (90%); the % 10 == 0 decile models the
+#: appended batch an IVF index serves without retraining.
+IVF_OLD_WHERE = "vec_id % 10 != 0"
+
+
+def _ivf_staleness_oracle() -> str:
+    k, rounds, dim = KMEANS_K, KMEANS_ROUNDS, DIM
+    dist = (
+        f"CAST(list_sum(list_transform(range(1, {dim + 1}),"
+        " i -> (e.q[i] - c.c[i]) * (e.q[i] - c.c[i]))) AS BIGINT)"
+    )
+    return f"""
+    WITH {_kmeans_cte(k, rounds, dim, prefix="s_",
+                      where=f"WHERE {IVF_OLD_WHERE}")},
+    {_kmeans_cte(k, rounds, dim)},
+    sall AS (
+        SELECT vec_id, cluster_id, d FROM (
+            SELECT e.vec_id, c.cluster_id, {dist} AS d,
+                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                                      ORDER BY {dist}, c.cluster_id) AS rn
+            FROM e, s_c{rounds} c
+        ) WHERE rn = 1
+    ),
+    per_list AS (
+        SELECT cluster_id,
+               CAST(COUNT(*) FILTER (WHERE vec_id % 10 != 0) AS BIGINT)
+                   AS n_old,
+               CAST(COUNT(*) FILTER (WHERE vec_id % 10 = 0) AS BIGINT)
+                   AS n_new,
+               CAST(SUM(d) FILTER (WHERE vec_id % 10 != 0) AS BIGINT)
+                   AS d_old,
+               CAST(SUM(d) FILTER (WHERE vec_id % 10 = 0) AS BIGINT)
+                   AS d_new
+        FROM sall GROUP BY cluster_id
+    ),
+    costs AS (
+        SELECT
+            (SELECT CAST(SUM(d) // COUNT(*) AS BIGINT) FROM sall)
+                AS stale_mean,
+            (SELECT CAST(SUM(d) // COUNT(*) AS BIGINT) FROM a{rounds})
+                AS fresh_mean
+    )
+    SELECT p.cluster_id AS list_id, p.n_old, p.n_new,
+           CAST(p.n_new * 1000000 // NULLIF(p.n_old, 0) AS BIGINT)
+               AS growth_e6,
+           CAST(p.d_old // NULLIF(p.n_old, 0) AS BIGINT) AS mean_qerr_old,
+           CAST(p.d_new // NULLIF(p.n_new, 0) AS BIGINT) AS mean_qerr_new,
+           CAST((c.stale_mean - c.fresh_mean) * 1000000 // c.stale_mean
+                AS BIGINT) AS retrain_gain_e6
+    FROM per_list p CROSS JOIN costs c
+    ORDER BY list_id
+    """
+
+
+@register(
+    "x3_ivf_staleness_audit",
+    oracle=_ivf_staleness_oracle(),
+    survey_ids=("X3", "A1", "F6"),
+)
+def x3_ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF index maintenance: after an append, is the coarse quantizer
+    stale? Train the STALE model on the pre-append 90% (vec_id decile
+    slice), assign the FULL corpus to it, and report per list: old/new
+    occupancy, growth ratio, and mean quantization error of old vs new
+    vectors (new vectors sitting farther from their centroid = the
+    distribution drifted); plus the retrain gain — how much the mean
+    quantization cost drops under centroids retrained on everything
+    (permutation-FREE metrics throughout: two independently trained
+    models cannot be compared by cluster id, so the audit never does).
+    This is `x2_dedup_incremental`'s question asked of the ANN family:
+    when does the persisted index need rebuilding? Exactness: both
+    trainings are the exact-integer Lloyd chain; means are integer
+    divisions (NULLIF guards empty lists in both engines identically).
+    Scale: two model trainings (k·dim collects only) + two
+    assignment scans; gain uses MEAN costs so the e6 scaling stays in
+    int64 at any corpus size."""
+    emb, fresh_c = kmeans_model(spark, sf_dir)  # full-corpus model
+    _, stale_c = kmeans_model(spark, sf_dir, where=IVF_OLD_WHERE)
+    sall = _assign(emb, stale_c).localCheckpoint(eager=True)
+    fall = _assign(emb, fresh_c)
+    is_old = F.expr(IVF_OLD_WHERE)
+    per_list = sall.groupBy("cluster_id").agg(
+        F.count(F.when(is_old, 1)).cast("long").alias("n_old"),
+        F.count(F.when(~is_old, 1)).cast("long").alias("n_new"),
+        F.sum(F.when(is_old, F.col("dist_q"))).cast("long").alias("d_old"),
+        F.sum(F.when(~is_old, F.col("dist_q"))).cast("long").alias("d_new"),
+    )
+    stale_mean = sall.agg(
+        F.expr("sum(dist_q) div count(1)").alias("stale_mean")
+    )
+    fresh_mean = fall.agg(
+        F.expr("sum(dist_q) div count(1)").alias("fresh_mean")
+    )
+    costs = stale_mean.crossJoin(F.broadcast(fresh_mean))
+    return (
+        per_list.crossJoin(F.broadcast(costs))
+        .select(
+            F.col("cluster_id").cast("long").alias("list_id"),
+            "n_old",
+            "n_new",
+            F.expr("n_new * 1000000 div nullif(n_old, 0)")
+            .cast("long")
+            .alias("growth_e6"),
+            F.expr("d_old div nullif(n_old, 0)")
+            .cast("long")
+            .alias("mean_qerr_old"),
+            F.expr("d_new div nullif(n_new, 0)")
+            .cast("long")
+            .alias("mean_qerr_new"),
+            F.expr(
+                "(stale_mean - fresh_mean) * 1000000 div stale_mean"
+            )
+            .cast("long")
+            .alias("retrain_gain_e6"),
+        )
+        .orderBy("list_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Centroid silhouette
+# ---------------------------------------------------------------------------
+
+_DEC = "decimal(38,0)"
+
+
+@register(
+    "x3_silhouette_centroid",
+    oracle=f"""
+    WITH q AS (
+        SELECT vec_id, label,
+               GENERATE_SUBSCRIPTS(embedding::DOUBLE[], 1) AS pos,
+               CAST(FLOOR(UNNEST(embedding::DOUBLE[]) * {QSCALE}) AS BIGINT) AS qv
+        FROM embeddings
+    ),
+    sums AS MATERIALIZED (
+        SELECT label, pos, CAST(SUM(qv) AS BIGINT) AS s FROM q GROUP BY label, pos
+    ),
+    cnt AS MATERIALIZED (
+        SELECT label, CAST(COUNT(*) AS BIGINT) AS n FROM embeddings GROUP BY label
+    ),
+    dist AS (
+        SELECT p.vec_id, p.own, s.label AS cand,
+               SUM((CAST(c.n AS HUGEINT) * p.qv - s.s)
+                   * (CAST(c.n AS HUGEINT) * p.qv - s.s)) * 1000000
+                   // (CAST(c.n AS HUGEINT) * c.n) AS dist_e6
+        FROM (SELECT vec_id, label AS own, pos, qv FROM q) p
+        JOIN sums s ON s.pos = p.pos
+        JOIN cnt c ON c.label = s.label
+        GROUP BY p.vec_id, p.own, s.label, c.n
+    ),
+    ab AS (
+        SELECT vec_id, own,
+               MAX(CASE WHEN cand = own THEN dist_e6 END) AS a,
+               MIN(CASE WHEN cand <> own THEN dist_e6 END) AS b
+        FROM dist GROUP BY vec_id, own
+    ),
+    sil AS (
+        SELECT own,
+               CASE WHEN GREATEST(SQRT(CAST(a AS DOUBLE)), SQRT(CAST(b AS DOUBLE))) > 0
+                    THEN CAST(FLOOR((SQRT(CAST(b AS DOUBLE)) - SQRT(CAST(a AS DOUBLE)))
+                                    * 1000000
+                                    / GREATEST(SQRT(CAST(a AS DOUBLE)),
+                                               SQRT(CAST(b AS DOUBLE))))
+                         AS BIGINT)
+                    ELSE 0 END AS s_e6
+        FROM ab
+    )
+    SELECT own AS label,
+           CAST(COUNT(*) AS BIGINT) AS n_points,
+           CAST(FLOOR(SUM(s_e6) / CAST(COUNT(*) AS DOUBLE)) AS BIGINT)
+               AS mean_silhouette_e6
+    FROM sil GROUP BY own ORDER BY label
+    """,
+    survey_ids=("X3",),
+)
+def x3_silhouette_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Centroid silhouette per label: a(i) = distance to own-label
+    centroid, b(i) = distance to the nearest other-label centroid,
+    s(i) = (b−a)/max(a,b) — the O(n·k) form of the cluster-quality
+    score (the textbook all-pairs silhouette is O(n²) and would never
+    survive 100 TB; the centroid form is one points×k pass, the
+    k-means-assignment shape).
+
+    Exactness: vectors are quantized once (q = ⌊v·10⁴⌋, the
+    `clustering._quantized` contract); centroids are carried as the
+    exact rational (Σq, n) pair so the squared distance to the mean,
+    Σ_d(n·q_d − S_d)²/n², is computed in DECIMAL(38,0) integers and
+    floor-scaled to e6 by integer division (positive numerator — `div`
+    == floor). The only floats are sqrt/divide over those exact ints:
+    identical IEEE inputs → identical doubles in both engines. The
+    k×dim centroid matrix is a bounded model fetch (the k-means
+    centroid-collect idiom), never a data-sized collect."""
+    emb = _quantized(spark, sf_dir).localCheckpoint(eager=True)
+    model_rows = (
+        emb.select("label", F.posexplode("q").alias("pos", "qv"))
+        .groupBy("label", "pos")
+        .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
+        .collect()  # bounded: |labels| × dim cells (model state, not data)
+    )
+    sums: dict[int, dict[int, int]] = {}
+    counts: dict[int, int] = {}
+    for r in model_rows:
+        sums.setdefault(r["label"], {})[r["pos"]] = int(r["s"])
+        counts[r["label"]] = int(r["n"])
+    labels = sorted(counts)
+
+    def dist_e6(lab: int):
+        # Σ_d (n·q_d − S_d)² · 1e6 div n²  (all-integer, DECIMAL(38,0))
+        n = counts[lab]
+        svec = F.array(
+            *[F.lit(sums[lab][p]).cast("long") for p in range(len(sums[lab]))]
+        )
+        sq = F.aggregate(
+            F.zip_with(
+                "q",
+                svec,
+                lambda qv, sv: (
+                    (F.lit(n).cast(_DEC) * qv - sv)
+                    * (F.lit(n).cast(_DEC) * qv - sv)
+                ),
+            ),
+            F.lit(0).cast(_DEC),
+            lambda acc, x: acc + x,
+        )
+        num = (sq * F.lit(1_000_000).cast(_DEC)).cast(_DEC)
+        return num.alias(f"_num{lab}")
+
+    with_d = emb.select(
+        "label", "q", *[dist_e6(lab) for lab in labels]
+    )
+    for lab in labels:
+        n = counts[lab]
+        with_d = with_d.withColumn(
+            f"_d{lab}",
+            F.expr(f"_num{lab} div CAST({n * n} AS DECIMAL(38,0))"),
+        )
+    # the trailing NULL keeps both coalesces well-formed with no label
+    a_col = F.coalesce(
+        *[F.when(F.col("label") == lab, F.col(f"_d{lab}")) for lab in labels],
+        F.lit(None),
+    )
+    b_col = F.coalesce(
+        *[
+            F.when(
+                F.col("label") == lab,
+                F.least(*[F.col(f"_d{x}") for x in labels if x != lab]),
+            )
+            for lab in labels
+        ],
+        F.lit(None),
+    )
+    sa = F.sqrt(F.col("a").cast("double"))
+    sb = F.sqrt(F.col("b").cast("double"))
+    sil = (
+        with_d.select("label", a_col.alias("a"), b_col.alias("b"))
+        .select(
+            "label",
+            F.when(
+                F.greatest(sa, sb) > 0,
+                F.floor((sb - sa) * 1_000_000 / F.greatest(sa, sb)).cast("long"),
+            )
+            .otherwise(F.lit(0).cast("long"))
+            .alias("s_e6"),
+        )
+    )
+    return (
+        sil.groupBy("label")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_points"),
+            F.floor(
+                F.sum("s_e6").cast("double") / F.count(F.lit(1)).cast("double")
+            )
+            .cast("long")
+            .alias("mean_silhouette_e6"),
+        )
+        .orderBy("label")
+    )

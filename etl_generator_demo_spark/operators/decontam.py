@@ -14,7 +14,7 @@ returns a train-doc-keyed relation:
             :data:`SEMANTIC_DECONTAM_TAU_E6` of an eval embedding —
             the brute audit path :func:`semantic_hits` and the exact
             ball-bounded index path :func:`semantic_hits_indexed`
-            (`operators/cosine_threshold.py`); `x3_semantic_decontam*`
+            (`operators/ann_index.py`); `x3_semantic_decontam*`
 
 The per-pair tiers report through one rollup (:func:`_rollup`). The
 funnel (`x4_decontam_funnel`, sequential removal) and the tier lattice
@@ -43,14 +43,12 @@ SURVEY.md §2.12.
 from __future__ import annotations
 
 import operator
-from functools import lru_cache, reduce
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_generator_demo_spark.operators.cosine_threshold import (
-    cosine_threshold_join,
-)
+from etl_generator_demo_spark.operators.ann_index import cosine_threshold_join
 from etl_generator_demo_spark.operators.dedup import (
     _DUCK_SHINGLES,
     _duck_bands,
@@ -60,8 +58,9 @@ from etl_generator_demo_spark.operators.dedup import (
     corpus_shingles,
 )
 from etl_generator_demo_spark.operators.relational import t
-from etl_generator_demo_spark.operators.similarity import _as_double, _dot, _norm
+from etl_generator_demo_spark.operators.similarity import _as_double, _dot, _duck_cos_e6, _norm
 from etl_generator_demo_spark.registry import register
+from etl_generator_demo_spark.session import column_memo
 
 #: Deterministic benchmark split: every 20th doc (remainder 7) plays
 #: the held-out eval set (~5%).
@@ -458,15 +457,6 @@ def semantic_hits_indexed(
     return pairs.select(F.col("vec_id").alias("train_doc"), "cos_e6")
 
 
-def _duck_cos_e6(a: str, b: str) -> str:
-    """Floor-e6 cosine of two DOUBLE[] expressions (NULL at zero norm)."""
-    return (
-        f"CAST(FLOOR(LIST_DOT_PRODUCT({a}, {b})"
-        f" / (SQRT(LIST_DOT_PRODUCT({a}, {a}))"
-        f" * SQRT(LIST_DOT_PRODUCT({b}, {b}))) * 1000000) AS BIGINT)"
-    )
-
-
 def _duck_semantic_hits(split: str = _duck_is_eval("vec_id")) -> str:
     """SQL mirror of :func:`semantic_hits`: CTEs ``emb`` and
     ``sem_hits(train_doc, cos_e6)``, with ``split`` the eval predicate
@@ -515,7 +505,7 @@ def x3_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x3_semantic_decontam_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic eval decontamination served from the ball-bounded IVF
     index — the output contract of `x3_semantic_decontam`, EXACT by
-    construction (`operators/cosine_threshold.py` has the bound), so
+    construction (`operators/ann_index.py` has the bound), so
     DuckDB verifies it against the brute-force SQL with no recall
     floor.
 
@@ -643,7 +633,7 @@ FUNNEL_STAGES = (
 )
 
 
-@lru_cache(maxsize=None)
+@column_memo
 def _funnel_stage_cols(no: int, name: str):
     """Memoized per-stage aggregate columns: fixed literals and names,
     built once per process instead of per DataFrame build."""

@@ -38,7 +38,6 @@ scale, not on the full corpus.
 
 from __future__ import annotations
 
-from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -46,6 +45,7 @@ from pyspark.sql import functions as F
 from etl_generator_demo_spark.catalog import read_parquet_known
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.registry import register
+from etl_generator_demo_spark.session import column_memo
 
 from etl_generator_demo_spark.operators._fallback import (
     check_forced as _check_forced,
@@ -1429,10 +1429,7 @@ def x2_lsh_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 JACCARD_SWEEP = ((30, 100), (50, 100), (70, 100), (90, 100))
 
 
-# Fixed expression lists for the sweep: every column derives from
-# JACCARD_SWEEP constants and fixed names, so the trees build once per
-# process instead of per DataFrame construction.
-@lru_cache(maxsize=None)
+@column_memo
 def _sweep_flag_cols():
     return tuple(
         (
@@ -1443,7 +1440,7 @@ def _sweep_flag_cols():
     )
 
 
-@lru_cache(maxsize=None)
+@column_memo
 def _sweep_pair_count_cols():
     return tuple(
         F.coalesce(F.sum(F.col(f"f{num}").cast("long")), F.lit(0))
@@ -1453,7 +1450,7 @@ def _sweep_pair_count_cols():
     )
 
 
-@lru_cache(maxsize=None)
+@column_memo
 def _sweep_doc_count_cols():
     return tuple(
         F.coalesce(F.sum(F.col(f"f{num}").cast("long")), F.lit(0))
@@ -1463,7 +1460,7 @@ def _sweep_doc_count_cols():
     )
 
 
-@lru_cache(maxsize=None)
+@column_memo
 def _sweep_reshape_col():
     return F.explode(
         F.array(

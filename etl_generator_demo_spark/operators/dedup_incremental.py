@@ -29,11 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from etl_generator_demo_spark.catalog import read_parquet_known
 from pyspark.sql import functions as F
 
-from etl_generator_demo_spark.operators.ann_index import (
-    _corpus_fingerprint,
-    _is_built,
-    INDEX_ROOT,
-)
+from etl_generator_demo_spark.operators.ann_index import index_store
 from etl_generator_demo_spark.operators.dedup import (
     banded_keys,
     doc_shingles,
@@ -60,17 +56,16 @@ def document_bands(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def ensure_corpus_band_index(spark: SparkSession, sf_dir: str) -> str:
     """Persist the corpus's band index (docs outside the batch split)
     once per fixture; return its path. Warm calls cost one stat."""
-    path = os.path.join(
-        INDEX_ROOT,
-        _corpus_fingerprint(sf_dir, table="documents"),
-        f"bands_m{BATCH_MOD}r{BATCH_REMAINDER}",
-    )
-    if not _is_built(path):
+
+    def build(path):
         corpus = t(spark, sf_dir, "documents").filter(
             F.col("doc_id") % BATCH_MOD != BATCH_REMAINDER
         )
         document_bands(corpus).write.mode("overwrite").parquet(path)
-    return path
+
+    return index_store(
+        sf_dir, f"bands_m{BATCH_MOD}r{BATCH_REMAINDER}", build, table="documents"
+    )[0]
 
 
 def ensure_full_band_index(spark: SparkSession, sf_dir: str) -> str:
@@ -81,14 +76,13 @@ def ensure_full_band_index(spark: SparkSession, sf_dir: str) -> str:
     of re-running the shingle→minhash→band pipeline per run — same md5
     family as the DuckDB oracles, so served results stay hash-exact.
     Warm calls cost one stat."""
-    path = os.path.join(
-        INDEX_ROOT, _corpus_fingerprint(sf_dir, table="documents"), "bands_full"
-    )
-    if not _is_built(path):
+
+    def build(path):
         document_bands(t(spark, sf_dir, "documents")).write.mode(
             "overwrite"
         ).parquet(path)
-    return path
+
+    return index_store(sf_dir, "bands_full", build, table="documents")[0]
 
 
 def ensure_shingle_index(spark: SparkSession, sf_dir: str) -> str:
@@ -101,12 +95,8 @@ def ensure_shingle_index(spark: SparkSession, sf_dir: str) -> str:
     Row-identical to ``doc_shingles(documents)`` by construction, so
     served results stay hash-exact against the DuckDB oracles. Warm
     calls cost one stat."""
-    path = os.path.join(
-        INDEX_ROOT,
-        _corpus_fingerprint(sf_dir, table="documents"),
-        "shingles_distinct",
-    )
-    if not _is_built(path):
+
+    def build(path):
         # inverted-index layout: hash-partition by shingle (all copies
         # of a shingle in one file) and sort within partitions, so
         # parquet dictionary + delta encoding collapse the exploded
@@ -123,7 +113,8 @@ def ensure_shingle_index(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-    return path
+
+    return index_store(sf_dir, "shingles_distinct", build, table="documents")[0]
 
 
 def incremental_dedup(

@@ -24,7 +24,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_generator_demo_spark.operators.ann_index import (
+    _duck_lsh_match,
+    lsh_probe_topk,
+)
 from etl_generator_demo_spark.operators.relational import t
+from etl_generator_demo_spark.operators.similarity import (
+    _duck_cos_e6,
+    _duck_q0,
+    query_vector,
+)
 from etl_generator_demo_spark.registry import register
 
 #: BM25 hyperparameters (the Robertson/Sparck-Jones defaults).
@@ -205,7 +214,7 @@ def x4_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Hybrid retrieval: reciprocal-rank fusion of BM25 + ANN (round 9)
+# Hybrid retrieval: reciprocal-rank fusion of BM25 + ANN
 # ---------------------------------------------------------------------------
 
 #: RRF constant (Cormack/Clarke/Buettcher 2009's k=60), per-half pool
@@ -217,14 +226,6 @@ RRF_TOP = 10
 
 
 def _rrf_oracle() -> str:
-    from etl_generator_demo_spark.operators.ann_index import LSH_PLANES, LSH_TABLES
-    from etl_generator_demo_spark.operators.similarity import _duck_bucket_expr
-
-    match = " OR ".join(
-        f"({_duck_bucket_expr(tbl, LSH_PLANES, col='e.v')}"
-        f" = {_duck_bucket_expr(tbl, LSH_PLANES, col='q.qv')})"
-        for tbl in range(LSH_TABLES)
-    )
     return f"""
     WITH bm_top AS ( {_bm25_oracle()} ),
     bmr AS (
@@ -232,19 +233,16 @@ def _rrf_oracle() -> str:
                ROW_NUMBER() OVER (ORDER BY bm25_e6 DESC, doc_id) AS r_bm
         FROM bm_top
     ),
-    q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
+    {_duck_q0()},
     e AS (
         SELECT vec_id, embedding::DOUBLE[] AS v
         FROM embeddings WHERE vec_id <> 0
     ),
     ann_top AS (
         SELECT e.vec_id,
-               FLOOR(LIST_DOT_PRODUCT(e.v, q.qv)
-                     / (SQRT(LIST_DOT_PRODUCT(e.v, e.v))
-                        * SQRT(LIST_DOT_PRODUCT(q.qv, q.qv)))
-                     * 1000000) / 1000000 AS cosine
+               {_duck_cos_e6("e.v", "q.qv")} / 1000000 AS cosine
         FROM e, q
-        WHERE {match}
+        WHERE {_duck_lsh_match("e.v", "q.qv", 0)}
         ORDER BY cosine DESC, vec_id
         LIMIT {RRF_POOL}
     ),
@@ -296,8 +294,6 @@ def x4_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-trivial at any corpus size."""
     from pyspark.sql.window import Window
 
-    from etl_generator_demo_spark.operators.ann_index import lsh_probe_topk
-
     bm = x4_bm25_topk(spark, sf_dir).select("doc_id", "bm25_e6")
     # pool-bounded global window: <= RRF_POOL rows after the top-k
     bmr = bm.select(
@@ -307,13 +303,7 @@ def x4_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("r_bm"),
     )
     emb = t(spark, sf_dir, "embeddings")
-    qv = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0)
-        .select("embedding")
-        .first()["embedding"]
-    ]
-    ann = lsh_probe_topk(spark, sf_dir, qv, k=RRF_POOL, exclude_ids=(0,)).select(
+    ann = lsh_probe_topk(spark, sf_dir, query_vector(emb), k=RRF_POOL, exclude_ids=(0,)).select(
         "vec_id", "cosine"
     )
     annr = ann.select(
@@ -341,7 +331,7 @@ def x4_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MMR diversified re-ranking (round 9)
+# MMR diversified re-ranking
 # ---------------------------------------------------------------------------
 
 #: MMR trade-off λ = 0.7 carried as the exact integer numerator
@@ -352,19 +342,6 @@ MMR_SELECT = 5
 
 
 def _mmr_oracle() -> str:
-    from etl_generator_demo_spark.operators.ann_index import LSH_PLANES, LSH_TABLES
-    from etl_generator_demo_spark.operators.similarity import _duck_bucket_expr
-
-    match = " OR ".join(
-        f"({_duck_bucket_expr(tbl, LSH_PLANES, col='e.v')}"
-        f" = {_duck_bucket_expr(tbl, LSH_PLANES, col='q.qv')})"
-        for tbl in range(LSH_TABLES)
-    )
-    cos = (
-        "CAST(FLOOR(LIST_DOT_PRODUCT({a}, {b})"
-        " / (SQRT(LIST_DOT_PRODUCT({a}, {a})) * SQRT(LIST_DOT_PRODUCT({b}, {b})))"
-        " * 1000000) AS BIGINT)"
-    )
     steps = [
         f"""
     s1 AS (SELECT vec_id, qsim_e6, 7 * qsim_e6 AS mmr_num_e6
@@ -389,15 +366,15 @@ def _mmr_oracle() -> str:
         for k in range(1, MMR_SELECT + 1)
     )
     return f"""
-    WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
+    WITH {_duck_q0()},
     e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id <> 0),
-    cand AS (SELECT e.vec_id, e.v, q.qv FROM e, q WHERE {match}),
+    cand AS (SELECT e.vec_id, e.v, q.qv FROM e, q WHERE {_duck_lsh_match("e.v", "q.qv", 0)}),
     pool AS MATERIALIZED (
-        SELECT vec_id, v, {cos.format(a="v", b="qv")} AS qsim_e6
+        SELECT vec_id, v, {_duck_cos_e6("v", "qv")} AS qsim_e6
         FROM cand ORDER BY qsim_e6 DESC, vec_id LIMIT {MMR_POOL}
     ),
     pair AS MATERIALIZED (
-        SELECT a.vec_id AS i, b.vec_id AS j, {cos.format(a="a.v", b="b.v")} AS sim_e6
+        SELECT a.vec_id AS i, b.vec_id AS j, {_duck_cos_e6("a.v", "b.v")} AS sim_e6
         FROM pool a JOIN pool b ON a.vec_id <> b.vec_id
     ),
     {",".join(steps)}
@@ -430,11 +407,8 @@ def x3_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the diversified ranking is value-checked row for row."""
     import math
 
-    from etl_generator_demo_spark.operators.ann_index import lsh_probe_topk
-
     emb = t(spark, sf_dir, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    qv = [float(x) for x in qrow["embedding"]]
+    qv = query_vector(emb)
     pool_rows = (
         lsh_probe_topk(spark, sf_dir, qv, k=MMR_POOL, exclude_ids=(0,))
         .select("vec_id", "embedding")

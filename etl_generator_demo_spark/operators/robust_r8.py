@@ -1,10 +1,5 @@
-"""Round-8 robust statistics, cluster quality, and window-surface
-extensions.
+"""Round-8 robust statistics and window-surface extensions.
 
-- Centroid silhouette: the scalable cluster-quality score (classic
-  silhouette is O(n²) pairwise; the centroid form needs one pass over
-  points × k centroids — the k-means-assignment shape, so it scales
-  exactly like `x3_kmeans_clusters`).
 - Winsorized / trimmed statistics: the robust-mean pair every metrics
   pipeline wants next to plain AVG (one window pass + one aggregate —
   the winsorized sum is reconstructed from the trimmed sum and the two
@@ -38,166 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from .clustering import QSCALE, _quantized
 from .relational import t
-
-_DEC = "decimal(38,0)"
-
-
-# ---------------------------------------------------------------------------
-# X3: centroid silhouette
-# ---------------------------------------------------------------------------
-
-@register(
-    "x3_silhouette_centroid",
-    oracle=f"""
-    WITH q AS (
-        SELECT vec_id, label,
-               GENERATE_SUBSCRIPTS(embedding::DOUBLE[], 1) AS pos,
-               CAST(FLOOR(UNNEST(embedding::DOUBLE[]) * {QSCALE}) AS BIGINT) AS qv
-        FROM embeddings
-    ),
-    sums AS MATERIALIZED (
-        SELECT label, pos, CAST(SUM(qv) AS BIGINT) AS s FROM q GROUP BY label, pos
-    ),
-    cnt AS MATERIALIZED (
-        SELECT label, CAST(COUNT(*) AS BIGINT) AS n FROM embeddings GROUP BY label
-    ),
-    dist AS (
-        SELECT p.vec_id, p.own, s.label AS cand,
-               SUM((CAST(c.n AS HUGEINT) * p.qv - s.s)
-                   * (CAST(c.n AS HUGEINT) * p.qv - s.s)) * 1000000
-                   // (CAST(c.n AS HUGEINT) * c.n) AS dist_e6
-        FROM (SELECT vec_id, label AS own, pos, qv FROM q) p
-        JOIN sums s ON s.pos = p.pos
-        JOIN cnt c ON c.label = s.label
-        GROUP BY p.vec_id, p.own, s.label, c.n
-    ),
-    ab AS (
-        SELECT vec_id, own,
-               MAX(CASE WHEN cand = own THEN dist_e6 END) AS a,
-               MIN(CASE WHEN cand <> own THEN dist_e6 END) AS b
-        FROM dist GROUP BY vec_id, own
-    ),
-    sil AS (
-        SELECT own,
-               CASE WHEN GREATEST(SQRT(CAST(a AS DOUBLE)), SQRT(CAST(b AS DOUBLE))) > 0
-                    THEN CAST(FLOOR((SQRT(CAST(b AS DOUBLE)) - SQRT(CAST(a AS DOUBLE)))
-                                    * 1000000
-                                    / GREATEST(SQRT(CAST(a AS DOUBLE)),
-                                               SQRT(CAST(b AS DOUBLE))))
-                         AS BIGINT)
-                    ELSE 0 END AS s_e6
-        FROM ab
-    )
-    SELECT own AS label,
-           CAST(COUNT(*) AS BIGINT) AS n_points,
-           CAST(FLOOR(SUM(s_e6) / CAST(COUNT(*) AS DOUBLE)) AS BIGINT)
-               AS mean_silhouette_e6
-    FROM sil GROUP BY own ORDER BY label
-    """,
-    survey_ids=("X3",),
-)
-def x3_silhouette_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Centroid silhouette per label: a(i) = distance to own-label
-    centroid, b(i) = distance to the nearest other-label centroid,
-    s(i) = (b−a)/max(a,b) — the O(n·k) form of the cluster-quality
-    score (the textbook all-pairs silhouette is O(n²) and would never
-    survive 100 TB; the centroid form is one points×k pass, the
-    k-means-assignment shape).
-
-    Exactness: vectors are quantized once (q = ⌊v·10⁴⌋, the
-    `clustering._quantized` contract); centroids are carried as the
-    exact rational (Σq, n) pair so the squared distance to the mean,
-    Σ_d(n·q_d − S_d)²/n², is computed in DECIMAL(38,0) integers and
-    floor-scaled to e6 by integer division (positive numerator — `div`
-    == floor). The only floats are sqrt/divide over those exact ints:
-    identical IEEE inputs → identical doubles in both engines. The
-    k×dim centroid matrix is a bounded model fetch (the k-means
-    centroid-collect idiom), never a data-sized collect."""
-    emb = _quantized(spark, sf_dir).localCheckpoint(eager=True)
-    model_rows = (
-        emb.select("label", F.posexplode("q").alias("pos", "qv"))
-        .groupBy("label", "pos")
-        .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
-        .collect()  # bounded: |labels| × dim cells (model state, not data)
-    )
-    sums: dict[int, dict[int, int]] = {}
-    counts: dict[int, int] = {}
-    for r in model_rows:
-        sums.setdefault(r["label"], {})[r["pos"]] = int(r["s"])
-        counts[r["label"]] = int(r["n"])
-    labels = sorted(counts)
-
-    def dist_e6(lab: int):
-        # Σ_d (n·q_d − S_d)² · 1e6 div n²  (all-integer, DECIMAL(38,0))
-        n = counts[lab]
-        svec = F.array(
-            *[F.lit(sums[lab][p]).cast("long") for p in range(len(sums[lab]))]
-        )
-        sq = F.aggregate(
-            F.zip_with(
-                "q",
-                svec,
-                lambda qv, sv: (
-                    (F.lit(n).cast(_DEC) * qv - sv)
-                    * (F.lit(n).cast(_DEC) * qv - sv)
-                ),
-            ),
-            F.lit(0).cast(_DEC),
-            lambda acc, x: acc + x,
-        )
-        num = (sq * F.lit(1_000_000).cast(_DEC)).cast(_DEC)
-        return num.alias(f"_num{lab}")
-
-    with_d = emb.select(
-        "label", "q", *[dist_e6(lab) for lab in labels]
-    )
-    for lab in labels:
-        n = counts[lab]
-        with_d = with_d.withColumn(
-            f"_d{lab}",
-            F.expr(f"_num{lab} div CAST({n * n} AS DECIMAL(38,0))"),
-        )
-    a_col = F.coalesce(
-        *[F.when(F.col("label") == lab, F.col(f"_d{lab}")) for lab in labels]
-    )
-    b_col = F.coalesce(
-        *[
-            F.when(
-                F.col("label") == lab,
-                F.least(*[F.col(f"_d{x}") for x in labels if x != lab]),
-            )
-            for lab in labels
-        ]
-    )
-    sa = F.sqrt(F.col("a").cast("double"))
-    sb = F.sqrt(F.col("b").cast("double"))
-    sil = (
-        with_d.select("label", a_col.alias("a"), b_col.alias("b"))
-        .select(
-            "label",
-            F.when(
-                F.greatest(sa, sb) > 0,
-                F.floor((sb - sa) * 1_000_000 / F.greatest(sa, sb)).cast("long"),
-            )
-            .otherwise(F.lit(0).cast("long"))
-            .alias("s_e6"),
-        )
-    )
-    return (
-        sil.groupBy("label")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_points"),
-            F.floor(
-                F.sum("s_e6").cast("double") / F.count(F.lit(1)).cast("double")
-            )
-            .cast("long")
-            .alias("mean_silhouette_e6"),
-        )
-        .orderBy("label")
-    )
-
 
 # ---------------------------------------------------------------------------
 # X4: winsorized / trimmed robust statistics

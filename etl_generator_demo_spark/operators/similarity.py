@@ -1,19 +1,29 @@
-"""Vector similarity search — SURVEY.md §2.12 X3 ([EXT]).
+"""Vector similarity kernels and exact-tier queries — SURVEY.md §2.12 X3
+([EXT]).
 
-Three operators over ``embeddings.embedding`` (array<float>, 64-dim):
+Every vector decision has one function here, and the persisted-index
+probes (`ann_index.py`) and the integer k-means family
+(`clustering.py`) build on them:
 
-- brute-force cosine top-k: the correctness baseline. Pure SQL-function
-  plan (zip_with + aggregate fold) — JVM-side, no UDF, one scan, no
-  shuffle except the final top-k (TakeOrderedAndProject).
-- all-pairs near-dup: inverted over a self-join with AQE handling the
-  quadratic blow-up; the exact tier — at 100 TB you run it per LSH
-  bucket, never globally.
-- ANN via random-hyperplane LSH (multi-table OR-construction): the
-  scale path. Deterministic md5-derived hyperplanes make it
-  reproducible across runs/engines; candidates = union over L tables
-  of same-bucket vectors, then exact cosine re-rank. Tables/planes are
-  tunable: more planes -> smaller buckets (faster, lower recall); more
-  tables -> higher recall (linear cost).
+- expression kernels over ``embeddings.embedding`` (array<float>,
+  64-dim): sequential-fold dot, norm and cosine (``try_divide``: a
+  zero-norm vector scores NULL instead of failing under ANSI), the
+  literal query-vector array, the floor-e6 scale;
+- :func:`query_vector`, the one driver-side fetch of the query row;
+  a missing row is ``None``, which :func:`brute_force_topk`, the
+  probes and the radius join serve as an empty result;
+- :func:`lsh_sign_kernel`, the one numpy random-hyperplane sign-bit
+  kernel (index build, bucket fallback, scan-side filter and the
+  driver-side query buckets all call it), over md5-derived ±1
+  hyperplanes that are reproducible in any engine;
+- the DuckDB oracle helpers: one ``q0`` CTE, one floor-e6 cosine and
+  one plane speller (the LSH bucket match built on it lives next to
+  the LSH constants in ``ann_index.py``).
+
+The queries here are the exact (brute-force) tier: top-k, the
+bucketed near-dup pipeline and its clusters, batched top-k, label
+centroids, int8/bit-width quantization, k-NN vote, prefix-dimension
+recall, norm audit and hard-negative mining.
 
 Float parity: cosines are floor-scaled to 1e-6 before comparison with
 the DuckDB oracle — both engines compute IEEE doubles but may sum in
@@ -25,7 +35,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -33,19 +42,9 @@ from pyspark.sql import functions as F
 from etl_generator_demo_spark.catalog import read_parquet_known
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.registry import register
+from etl_generator_demo_spark.session import column_memo
 
 DIM = 64
-
-# Expression-tree memos (r17, guide §1.2 "per-task work" applied to the
-# DRIVER): each higher-order function below (`transform`/`zip_with`/
-# `aggregate` with a Python lambda) costs ~20 py4j round trips to build,
-# and the bench re-builds every query's DataFrame per timed run. Column
-# expression trees are immutable values — reusing one object across
-# plans is exactly like reusing `F.col("x")` — so the *named-column*
-# spellings are built once per process and served from an lru_cache.
-# The cached tree is constructed by the very same code as the uncached
-# path, so plans and results are bit-identical by construction. Memos
-# hold METADATA (unresolved expressions), never data or results.
 
 
 def _as_double(col: str | Column) -> Column:
@@ -54,7 +53,7 @@ def _as_double(col: str | Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-@lru_cache(maxsize=None)
+@column_memo
 def _as_double_named(name: str) -> Column:
     return F.transform(F.col(name), lambda x: x.cast("double"))
 
@@ -68,7 +67,7 @@ def _dot(a: Column | str, b: Column | str) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
 
 
-@lru_cache(maxsize=None)
+@column_memo
 def _dot_named(a: str, b: str) -> Column:
     return F.aggregate(
         F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
@@ -83,7 +82,7 @@ def _norm(a: Column | str) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, v: s + v))
 
 
-@lru_cache(maxsize=None)
+@column_memo
 def _norm_named(name: str) -> Column:
     return F.sqrt(
         F.aggregate(
@@ -102,7 +101,7 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
-@lru_cache(maxsize=None)
+@column_memo
 def _cosine_named(a: str, b: str) -> Column:
     return F.try_divide(_dot_named(a, b), _norm_named(a) * _norm_named(b))
 
@@ -129,27 +128,30 @@ def _double_sql(v: float) -> str:
     return f"CAST('{name}' AS DOUBLE)"
 
 
-@lru_cache(maxsize=512)
+@column_memo(maxsize=512)
 def _lit_double_array(values: tuple) -> Column:
     return F.expr("array(" + ", ".join(map(_double_sql, values)) + ")")
 
 
-@lru_cache(maxsize=512)
+@column_memo(maxsize=512)
 def _cosine_lit(name: str, values: tuple) -> Column:
-    """Memoized ``cosine(_as_double(name), <literal vector>)`` — the
-    scoring expression every literal-query ANN/brute-force path builds."""
     return cosine(_as_double_named(name), _lit_double_array(values))
 
 
 def cosine_lit(name: str, values) -> Column:
+    """``cosine(_as_double(name), <literal vector>)`` — the scoring
+    expression of every literal-query path; NULL when there is no
+    query vector (``values`` is None)."""
+    if values is None:
+        return F.lit(None).cast("double")
     return _cosine_lit(name, tuple(float(x) for x in values))
 
 
-@lru_cache(maxsize=None)
+@column_memo
 def cosine_asdouble_cols(a: str, b: str) -> Column:
-    """Memoized ``cosine(_as_double(a), F.col(b))`` — the batch-probe
-    scoring expression (query vectors arrive as a column, corpus side
-    needs the float->double transform)."""
+    """``cosine(_as_double(a), F.col(b))`` — the batch-probe scoring
+    expression (query vectors arrive as a column, corpus side needs
+    the float->double transform)."""
     return cosine(_as_double_named(a), F.col(b))
 
 
@@ -157,18 +159,34 @@ def _floor6(c: Column) -> Column:
     return F.floor(c * 1_000_000) / 1_000_000
 
 
+def query_vector(emb: DataFrame, col: str = "embedding", label: bool = False):
+    """The query row's (``vec_id = 0``) vector, fetched driver-side at
+    plan time (one indexed ``.first()``): the values of ``col`` as a
+    list, or None when ``emb`` has no such row. With ``label`` the
+    row's label comes back too, as ``(vector, label)``."""
+    cols = [col, "label"] if label else [col]
+    row = emb.filter(F.col("vec_id") == 0).select(*cols).first()
+    vec = None if row is None else list(row[col])
+    if label:
+        return vec, None if row is None else row["label"]
+    return vec
+
+
 def brute_force_topk(
-    vectors: DataFrame, query_vec: list[float], k: int = 10, id_col: str = "vec_id"
+    vectors: DataFrame, query_vec: list[float] | None, k: int = 10, id_col: str = "vec_id"
 ) -> DataFrame:
-    """Exact cosine top-k against a literal query vector. The scan is
-    embarrassingly parallel; only k rows ever reach the driver."""
+    """Exact cosine top-k against a literal query vector (empty when
+    there is none). The scan is embarrassingly parallel; only k rows
+    ever reach the driver."""
+    if query_vec is None:
+        vectors = vectors.limit(0)
     scored = vectors.withColumn(
         "cosine", _floor6(cosine_lit("embedding", query_vec))
     )
     return scored.orderBy(F.desc("cosine"), id_col).limit(k)
 
 
-# --- ANN: random-hyperplane LSH, multi-table ------------------------------
+# --- random-hyperplane LSH ---------------------------------------------------
 
 def _hyperplane(table: int, plane: int, dim: int = DIM) -> list[float]:
     """Deterministic ±1 hyperplane: component j's sign comes from one
@@ -180,9 +198,30 @@ def _hyperplane(table: int, plane: int, dim: int = DIM) -> list[float]:
     return out
 
 
+def lsh_sign_kernel(tables: int, planes: int, dim: int = DIM):
+    """The numpy sign-bit kernel: ``signs(V)`` maps an (n, dim) batch
+    of vectors to the (n, tables, planes) boolean matrix of
+    ``<v, plane> >= 0`` over the md5 hyperplanes — one BLAS matmul per
+    batch (the kernel where vectorized numpy beats Spark's interpreted
+    higher-order functions ~5×). The closure captures the planes as
+    plain data and imports numpy locally, so executor workers need no
+    package import."""
+    plane_rows = [_hyperplane(tbl, p, dim) for tbl in range(tables) for p in range(planes)]
+
+    def signs(V):
+        import numpy as np
+
+        P = np.asarray(plane_rows, dtype="float64").T  # dim x (tables*planes)
+        V = np.asarray(V, dtype="float64").reshape(-1, P.shape[0])
+        return ((V @ P) >= 0).reshape(len(V), tables, planes)
+
+    return signs
+
+
 def lsh_bucket_expr(vec: Column | str, table: int, planes: int, dim: int = DIM) -> Column:
-    """Bucket id = concatenated signs of <vec, plane_p> for each plane.
-    A string ``vec`` is a column name and serves the memoized tree."""
+    """Bucket id = concatenated signs of <vec, plane_p> for each plane,
+    as a JVM expression. A string ``vec`` is a column name and serves
+    the memoized tree."""
     if isinstance(vec, str):
         return _lsh_bucket_expr_named(vec, table, planes, dim)
     bits = []
@@ -192,7 +231,7 @@ def lsh_bucket_expr(vec: Column | str, table: int, planes: int, dim: int = DIM) 
     return F.concat(*bits)
 
 
-@lru_cache(maxsize=None)
+@column_memo
 def _lsh_bucket_expr_named(name: str, table: int, planes: int, dim: int) -> Column:
     return lsh_bucket_expr(F.col(name), table, planes, dim)
 
@@ -205,49 +244,28 @@ def ann_lsh_topk(
     tables: int = 8,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Approximate top-k: candidates = vectors sharing the query's
-    bucket in ANY of `tables` hash tables; exact cosine re-rank on the
-    candidate set. At scale each table's bucket column is precomputed
-    and the probe is a pushed-down equality filter — no full scan per
-    query. Recall@10 on uniform random data with these defaults is ~0.9;
-    raise `tables` for more (cost is linear in tables).
+    """Approximate top-k over a full scan: candidates = vectors sharing
+    the query's bucket in ANY of `tables` hash tables; exact cosine
+    re-rank on the candidate set. Recall@10 on uniform random data with
+    these defaults is ~0.9; raise `tables` for more (cost is linear in
+    tables). The persisted, partition-pruned form of the same probe is
+    ``ann_index.lsh_probe_topk``.
 
-    The bucket test runs as an Arrow-batched mapInPandas numpy matmul:
-    tables*planes dot products per row is exactly the kernel
-    higher-order-function expressions execute interpreted (not
-    codegen), where vectorized BLAS is ~5x faster end-to-end. The
-    closure is self-contained (plain-data capture, local numpy import)
-    so executor workers need no package import. The re-rank stays a
-    JVM expression (oracle-parity floor-scaled cosine).
-    """
-    import numpy as np
-
-    dim = len(query_vec)
-    qv = np.asarray(query_vec, dtype="float64")
-    plane_rows = [
-        _hyperplane(tbl, p, dim) for tbl in range(tables) for p in range(planes)
-    ]  # (tables*planes) x dim
-    q_buckets = [
-        [bool(np.dot(qv, np.asarray(plane_rows[tbl * planes + p])) >= 0) for p in range(planes)]
-        for tbl in range(tables)
-    ]
+    The bucket test runs the sign-bit kernel in an Arrow-batched
+    mapInPandas; the re-rank stays a JVM expression (oracle-parity
+    floor-scaled cosine)."""
+    signs = lsh_sign_kernel(tables, planes, len(query_vec))
+    q_bits = signs([query_vec])[0].tolist()  # tables x planes
 
     def bucket_filter(batches):
         import numpy as _np  # self-contained: workers may lack this package
 
-        P = _np.asarray(plane_rows, dtype="float64").T  # dim x (tables*planes)
-        QB = _np.asarray(q_buckets, dtype=bool)  # tables x planes
-        n_tables, n_planes = QB.shape
+        QB = _np.asarray(q_bits, dtype=bool)
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = _np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            S = (V @ P) >= 0  # n x (tables*planes)
-            keep = _np.zeros(len(pdf), dtype=bool)
-            for tbl in range(n_tables):
-                bits = S[:, tbl * n_planes : (tbl + 1) * n_planes]
-                keep |= (bits == QB[tbl]).all(axis=1)
-            out = pdf[keep]
+            S = signs(_np.stack(pdf["embedding"].to_numpy()))
+            out = pdf[(S == QB).all(axis=2).any(axis=1)]
             if len(out):
                 yield out
 
@@ -259,70 +277,51 @@ def ann_lsh_topk(
     )
 
 
-# --- ANN: IVF (inverted file via k-means coarse quantizer) ----------------
+# --- DuckDB oracle helpers ----------------------------------------------------
 
-def build_ivf_index(
-    vectors: DataFrame, n_lists: int = 16, id_col: str = "vec_id", seed: int = 42
-):
-    """Train a k-means coarse quantizer and assign every vector to its
-    nearest centroid ("list"). Returns (assigned_df, centroids) where
-    assigned_df = vectors + `ivf_list` column.
-
-    At 100 TB the assignment is written once as a partition column;
-    queries scan only the probed lists (partition pruning), and the
-    quantizer trains on a sample, not the full corpus.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array  # noqa: F401
-
-    ml_df = vectors.withColumn("_features", array_to_vector(_as_double("embedding")))
-    model = KMeans(
-        k=n_lists, seed=seed, featuresCol="_features", predictionCol="ivf_list"
-    ).fit(ml_df)
-    assigned = model.transform(ml_df).drop("_features")
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-    return assigned, centroids
+def _duck_q0(select: str = "embedding::DOUBLE[] AS qv", source: str = "embeddings", name: str = "q") -> str:
+    """The query-row CTE: ``select`` over the ``vec_id = 0`` row of
+    ``source``, named ``name``."""
+    return f"{name} AS (SELECT {select} FROM {source} WHERE vec_id = 0)"
 
 
-def ivf_topk(
-    assigned: DataFrame,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF search: rank centroids by distance to the query, scan only
-    the `n_probe` nearest lists, exact cosine re-rank on candidates.
-    Recall rises with n_probe (n_probe = n_lists -> exact search)."""
-    import numpy as np
-
-    q = np.asarray(query_vec, dtype="float64")
-    dists = [float(np.linalg.norm(q - np.asarray(c))) for c in centroids]
-    probe = sorted(range(len(centroids)), key=lambda i: dists[i])[:n_probe]
+def _duck_cos_e6(a: str, b: str) -> str:
+    """Floor-e6 cosine of two DOUBLE[] expressions as BIGINT (NULL at
+    zero norm); ``/ 1000000`` gives the floor-scaled DOUBLE."""
     return (
-        assigned.filter(F.col("ivf_list").isin(probe))
-        .withColumn("cosine", _floor6(cosine_lit("embedding", query_vec)))
-        .orderBy(F.desc("cosine"), id_col)
-        .limit(k)
+        f"CAST(FLOOR(LIST_DOT_PRODUCT({a}, {b})"
+        f" / (SQRT(LIST_DOT_PRODUCT({a}, {a}))"
+        f" * SQRT(LIST_DOT_PRODUCT({b}, {b}))) * 1000000) AS BIGINT)"
+    )
+
+
+def _duck_plane_sign(table: int, plane: int, col: str, dim: int = DIM) -> str:
+    """``<col, plane> >= 0`` for one md5 hyperplane, inlined as a literal
+    list so both engines take the sign over identical constants."""
+    lits = ", ".join(f"{x:.1f}" for x in _hyperplane(table, plane, dim))
+    return f"LIST_DOT_PRODUCT({col}, [{lits}]::DOUBLE[]) >= 0"
+
+
+def _duck_bucket_expr(table: int, planes: int, col: str = "v") -> str:
+    """Bucket id of one hash table as a '0'/'1' string, the SQL twin of
+    ``lsh_bucket_expr``."""
+    return " || ".join(
+        f"(CASE WHEN {_duck_plane_sign(table, p, col)} THEN '1' ELSE '0' END)"
+        for p in range(planes)
     )
 
 
 # ===========================================================================
-# Driver-checkable queries
+# Exact-tier queries
 # ===========================================================================
 
 @register(
     "x3_cosine_topk",
-    oracle="""
-    WITH q AS (
-        SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
-    ),
+    oracle=f"""
+    WITH {_duck_q0()},
     scored AS (
         SELECT vec_id, label,
-               FLOOR(LIST_DOT_PRODUCT(embedding::DOUBLE[], qv)
-                     / (SQRT(LIST_DOT_PRODUCT(embedding::DOUBLE[], embedding::DOUBLE[]))
-                        * SQRT(LIST_DOT_PRODUCT(qv, qv))) * 1000000) / 1000000 AS cosine
+               {_duck_cos_e6("embedding::DOUBLE[]", "qv")} / 1000000 AS cosine
         FROM embeddings, q
         WHERE vec_id <> 0
     )
@@ -336,12 +335,8 @@ def ivf_topk(
 def x3_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 neighbors of vec_id=0."""
     emb = t(spark, sf_dir, "embeddings")
-    query_vec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    ]
     return (
-        brute_force_topk(emb.filter(F.col("vec_id") != 0), query_vec, k=10)
+        brute_force_topk(emb.filter(F.col("vec_id") != 0), query_vector(emb), k=10)
         .select("vec_id", "label", "cosine")
     )
 
@@ -350,12 +345,10 @@ def x3_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: pipeline below. Deliberately NOT registered: a global O(n²)
 #: nested-loop join is the plan you never run corpus-wide at 100 TB;
 #: tests/test_oracle_canary.py keeps its DuckDB parity pinned.
-ALL_PAIRS_ORACLE = """
+ALL_PAIRS_ORACLE = f"""
     WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
     SELECT a.vec_id AS vec_a, c.vec_id AS vec_b,
-           FLOOR(LIST_DOT_PRODUCT(a.v, c.v)
-                 / (SQRT(LIST_DOT_PRODUCT(a.v, a.v))
-                    * SQRT(LIST_DOT_PRODUCT(c.v, c.v))) * 1000000) / 1000000 AS cosine
+           {_duck_cos_e6("a.v", "c.v")} / 1000000 AS cosine
     FROM b a JOIN b c ON a.vec_id < c.vec_id
     WHERE LIST_DOT_PRODUCT(a.v, c.v)
           / (SQRT(LIST_DOT_PRODUCT(a.v, a.v)) * SQRT(LIST_DOT_PRODUCT(c.v, c.v))) > 0.4
@@ -381,28 +374,17 @@ def x3_cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _duck_bucket_expr(table: int, planes: int, dim: int = DIM, col: str = "v") -> str:
-    """DuckDB bucket expression for one hash table: the same md5-derived
-    ±1 hyperplanes as ``lsh_bucket_expr``, inlined as literal lists so
-    both engines take sign(<v, plane_p>) over identical constants."""
-    cases = []
-    for p in range(planes):
-        lits = ", ".join(f"{x:.1f}" for x in _hyperplane(table, p, dim))
-        cases.append(
-            f"(CASE WHEN LIST_DOT_PRODUCT({col}, [{lits}]::DOUBLE[]) >= 0 "
-            f"THEN '1' ELSE '0' END)"
-        )
-    return " || ".join(cases)
+#: Raw (unfloored) cosine of the near-dup oracles' joined pair.
+_DUCK_PAIR_COS = (
+    "LIST_DOT_PRODUCT(ea.v, eb.v) / (SQRT(LIST_DOT_PRODUCT(ea.v, ea.v))"
+    " * SQRT(LIST_DOT_PRODUCT(eb.v, eb.v)))"
+)
 
 
 def _neardup_bucketed_oracle(tables: int, planes: int) -> str:
     per_table = "\n      UNION ALL\n      ".join(
         f"SELECT vec_id, {tbl} AS lsh_table, {_duck_bucket_expr(tbl, planes)} AS bucket FROM e"
         for tbl in range(tables)
-    )
-    cos = (
-        "LIST_DOT_PRODUCT(ea.v, eb.v) / (SQRT(LIST_DOT_PRODUCT(ea.v, ea.v))"
-        " * SQRT(LIST_DOT_PRODUCT(eb.v, eb.v)))"
     )
     return f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -414,11 +396,11 @@ def _neardup_bucketed_oracle(tables: int, planes: int) -> str:
       FROM bk a JOIN bk b
         ON a.lsh_table = b.lsh_table AND a.bucket = b.bucket AND a.vec_id < b.vec_id
     )
-    SELECT c.vec_a, c.vec_b, FLOOR({cos} * 1000000) / 1000000 AS cosine
+    SELECT c.vec_a, c.vec_b, {_duck_cos_e6("ea.v", "eb.v")} / 1000000 AS cosine
     FROM cand c
     JOIN e ea ON ea.vec_id = c.vec_a
     JOIN e eb ON eb.vec_id = c.vec_b
-    WHERE {cos} > 0.4
+    WHERE {_DUCK_PAIR_COS} > 0.4
     ORDER BY vec_a, vec_b
     """
 
@@ -464,13 +446,13 @@ def _bucket_assignments(spark: SparkSession, sf_dir: str, emb: DataFrame) -> Dat
     — same md5 hyperplanes, tables and planes as the oracle) whenever
     one is warm or buildable: the index is ingest-time state, so the
     query-time plan is a column-pruned parquet scan of (vec_id +
-    partition columns) instead of re-running the Arrow matmul over the
-    whole corpus on EVERY query — the round-4 perf-weak finding. The
-    bucket id is the index's partition-string encoding; only equality
-    matters to the (lsh_table, bucket) self-join, and the string bits
-    are in bijection with the packed-int encoding the fallback emits.
+    partition columns) instead of re-running the sign-bit kernel over
+    the whole corpus on every query. The bucket id is the index's
+    partition-string encoding; only equality matters to the
+    (lsh_table, bucket) self-join, and the string bits are in bijection
+    with the packed-int encoding the fallback emits.
 
-    Falls back to the in-plan Arrow matmul when the index can't be
+    Falls back to the in-plan Arrow kernel when the index can't be
     built (e.g. an unwritable cache root) — same assignments, computed
     inline."""
     try:
@@ -485,33 +467,23 @@ def _bucket_assignments(spark: SparkSession, sf_dir: str, emb: DataFrame) -> Dat
         from etl_generator_demo_spark.operators._fallback import warn_fallback_once
 
         warn_fallback_once("similarity._bucket_assignments", exc)
-    # closure-captured plain data: executor workers can't import this
-    # package, so the UDF must carry its constants by value
-    plane_rows = [
-        _hyperplane(tbl, p, DIM)
-        for tbl in range(NEARDUP_TABLES)
-        for p in range(NEARDUP_PLANES)
-    ]
+    signs = lsh_sign_kernel(NEARDUP_TABLES, NEARDUP_PLANES)
     n_tables, n_planes = NEARDUP_TABLES, NEARDUP_PLANES
 
     def bucket_rows(batches):
         import numpy as np
         import pandas as pd
 
-        P = np.asarray(plane_rows, dtype="float64").T  # dim x (tables*planes)
         pow2 = 1 << np.arange(n_planes - 1, -1, -1)
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            S = ((V @ P) >= 0).astype("int64")
             ids = pdf["vec_id"].to_numpy()
             n = len(ids)
-            # pack each table's sign bits into ONE int bucket id —
-            # fully vectorized (the old per-row "".join string encode
-            # was the slowest Python in this stage); equality-by-bucket
-            # is all the join needs, so the encoding is engine-private
-            buckets = S.reshape(n, n_tables, n_planes) @ pow2
+            # pack each table's sign bits into ONE int bucket id:
+            # equality-by-bucket is all the join needs, so the encoding
+            # is engine-private
+            buckets = signs(np.stack(pdf["embedding"].to_numpy())).astype("int64") @ pow2
             yield pd.DataFrame(
                 {
                     "vec_id": np.repeat(ids, n_tables),
@@ -536,7 +508,7 @@ def embedding_neardup_pairs(
     - bucketing is served from the PERSISTED LSH index when warm (a
       column-pruned parquet scan — see ``_bucket_assignments``), with
       an Arrow numpy-matmul fallback computed inline;
-    - cross-table candidate dedup is PLACED by the rejoin sizing (r17):
+    - cross-table candidate dedup is PLACED by the rejoin sizing:
       broadcast plan = dedup after the cosine filter (output-sized; the
       map-side pipeline runs exchange-free end to end), shuffle plan =
       ``distinct`` over the NARROW (vec_a, vec_b) id pair BEFORE the
@@ -563,7 +535,7 @@ def embedding_neardup_pairs(
         .filter(F.col("vec_a") < F.col("vec_b"))
         .select("vec_a", "vec_b")
     )
-    # Cross-table dedup placement is SIZED like the rejoin (r17, guide
+    # Cross-table dedup placement is SIZED like the rejoin (guide
     # §2.4): on the broadcast plan the candidate `distinct` was the ONLY
     # exchange between the index scan and the cosine stage — dropping it
     # fuses bucket join → rejoin → Arrow cosine into one map-side stage
@@ -640,10 +612,6 @@ def _neardup_clusters_oracle(tables: int, planes: int) -> str:
     base = _neardup_bucketed_oracle(tables, planes)
     # reuse the pair pipeline: strip its final SELECT, name it `pairs`
     cte_part = base[: base.index("SELECT c.vec_a")]
-    cos = (
-        "LIST_DOT_PRODUCT(ea.v, eb.v) / (SQRT(LIST_DOT_PRODUCT(ea.v, ea.v))"
-        " * SQRT(LIST_DOT_PRODUCT(eb.v, eb.v)))"
-    )
     return (
         cte_part.replace("WITH e AS", "WITH RECURSIVE e AS", 1)
         + f""",
@@ -652,7 +620,7 @@ def _neardup_clusters_oracle(tables: int, planes: int) -> str:
       FROM cand c
       JOIN e ea ON ea.vec_id = c.vec_a
       JOIN e eb ON eb.vec_id = c.vec_b
-      WHERE {cos} > 0.4
+      WHERE {_DUCK_PAIR_COS} > 0.4
     ),
     edges AS (
       SELECT vec_a AS src, vec_b AS dst FROM pairs
@@ -700,130 +668,9 @@ def x3_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "x3_ann_ivf_topk",
-    oracle="""
-    WITH q AS (
-        SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
-    ),
-    scored AS (
-        SELECT vec_id, label,
-               FLOOR(LIST_DOT_PRODUCT(embedding::DOUBLE[], qv)
-                     / (SQRT(LIST_DOT_PRODUCT(embedding::DOUBLE[], embedding::DOUBLE[]))
-                        * SQRT(LIST_DOT_PRODUCT(qv, qv))) * 1000000) / 1000000 AS cosine
-        FROM embeddings, q
-        WHERE vec_id <> 0
-    )
-    SELECT vec_id, label, cosine, TRUE AS ivf_recall_ge_030
-    FROM scored
-    ORDER BY cosine DESC, vec_id
-    LIMIT 10
-    """,
-    survey_ids=("X3",),
-)
-def x3_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN against the PERSISTED index as a BOUNDED-ERROR VERDICT
-    the oracle can hash: the output rows are the EXACT brute-force
-    top-10 (value-verified by DuckDB, column for column), and the
-    ``ivf_recall_ge_030`` flag asserts the partition-pruned probe — 4
-    of 16 lists via ``ann_index.ivf_probe_topk`` — recovered at least
-    3 of those 10. DuckDB emits TRUE literals, so the value hash
-    deterministically checks the recall claim. The floor is 0.3
-    because the fixture's embeddings are uniform random (measured
-    0.4–1.0 across sf; real corpora cluster, raising IVF recall);
-    pruning itself (PartitionFilters on ivf_list, no corpus scan) is
-    asserted in tests/test_similarity.py."""
-    from etl_generator_demo_spark.operators.ann_index import ivf_probe_topk
-
-    emb = t(spark, sf_dir, "embeddings")
-    query_vec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    ]
-    exact = brute_force_topk(emb.filter(F.col("vec_id") != 0), query_vec, k=10)
-    ivf_ids = ivf_probe_topk(
-        spark, sf_dir, query_vec, k=10, n_probe=4, exclude_ids=(0,)
-    ).select("vec_id")
-    verdict = (
-        exact.select("vec_id")
-        .join(ivf_ids, "vec_id")
-        .agg((F.count(F.lit(1)) / F.lit(10.0) >= 0.3).alias("ivf_recall_ge_030"))
-    )
-    return (
-        exact.crossJoin(F.broadcast(verdict))  # 1-row verdict fan-out
-        .select("vec_id", "label", "cosine", "ivf_recall_ge_030")
-        .orderBy(F.desc("cosine"), "vec_id")
-    )
-
-
-@register(
-    "x3_ann_lsh_topk",
-    oracle="""
-    WITH q AS (
-        SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
-    ),
-    scored AS (
-        SELECT vec_id, label,
-               FLOOR(LIST_DOT_PRODUCT(embedding::DOUBLE[], qv)
-                     / (SQRT(LIST_DOT_PRODUCT(embedding::DOUBLE[], embedding::DOUBLE[]))
-                        * SQRT(LIST_DOT_PRODUCT(qv, qv))) * 1000000) / 1000000 AS cosine
-        FROM embeddings, q
-        WHERE vec_id <> 0
-    )
-    SELECT vec_id, label, cosine, TRUE AS lsh_recall_ge_030
-    FROM scored
-    ORDER BY cosine DESC, vec_id
-    LIMIT 10
-    """,
-    survey_ids=("X3",),
-)
-def x3_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-10 for vec_id=0 via the PERSISTED multi-table hyperplane
-    LSH index (bucket ids precomputed corpus-wide and written as
-    partition columns; the probe reads only the query's 8 bucket
-    directories, partition-pruned, and re-ranks exactly), stated as a
-    BOUNDED-ERROR VERDICT the oracle can hash: the output rows are the
-    EXACT brute-force top-10 (value-verified by DuckDB column for
-    column), and ``lsh_recall_ge_030`` asserts the index probe
-    recovered at least 3 of those 10. DuckDB emits TRUE literals, so
-    the value hash deterministically checks the recall claim. The 0.3
-    floor reflects uniform-random fixture embeddings (real corpora
-    cluster, raising LSH recall); tighter recall and the
-    partition-pruning plan shape are pinned in
-    tests/test_similarity.py."""
-    from etl_generator_demo_spark.operators.ann_index import lsh_probe_topk
-
-    emb = t(spark, sf_dir, "embeddings")
-    query_vec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    ]
-    exact = brute_force_topk(emb.filter(F.col("vec_id") != 0), query_vec, k=10)
-    lsh_ids = lsh_probe_topk(spark, sf_dir, query_vec, k=10, exclude_ids=(0,)).select(
-        "vec_id"
-    )
-    verdict = (
-        exact.select("vec_id")
-        .join(lsh_ids, "vec_id")
-        .agg((F.count(F.lit(1)) / F.lit(10.0) >= 0.3).alias("lsh_recall_ge_030"))
-    )
-    return (
-        exact.crossJoin(F.broadcast(verdict))  # 1-row verdict fan-out
-        .select("vec_id", "label", "cosine", "lsh_recall_ge_030")
-        .orderBy(F.desc("cosine"), "vec_id")
-    )
-
-
 #: Batched-retrieval fixture split: the first N_QUERY vectors play the
 #: query batch, the rest are the corpus.
 N_QUERY, BATCH_K = 5, 3
-
-_BATCH_COS = (
-    "FLOOR(LIST_DOT_PRODUCT(v, qv)"
-    " / (SQRT(LIST_DOT_PRODUCT(v, v)) * SQRT(LIST_DOT_PRODUCT(qv, qv)))"
-    " * 1000000) / 1000000"
-)
-
 
 @register(
     "x3_ann_batch_topk",
@@ -837,7 +684,7 @@ _BATCH_COS = (
         FROM embeddings WHERE vec_id >= {N_QUERY}
     ),
     scored AS (
-        SELECT qid, vec_id, {_BATCH_COS} AS cosine FROM c, q
+        SELECT qid, vec_id, {_duck_cos_e6("v", "qv")} / 1000000 AS cosine FROM c, q
     ),
     ranked AS (
         SELECT qid, vec_id, cosine,
@@ -1030,10 +877,7 @@ KNN_K = 10
         SELECT q.query_id, q.true_label, e.vec_id, e.label,
                ROW_NUMBER() OVER (
                    PARTITION BY q.query_id
-                   ORDER BY FLOOR(LIST_DOT_PRODUCT(e.v, q.qv)
-                       / (SQRT(LIST_DOT_PRODUCT(e.v, e.v))
-                          * SQRT(LIST_DOT_PRODUCT(q.qv, q.qv)))
-                       * 1000000) DESC, e.vec_id
+                   ORDER BY {_duck_cos_e6("e.v", "q.qv")} DESC, e.vec_id
                ) AS rn
         FROM q JOIN e ON e.vec_id <> q.query_id
     ),
@@ -1070,8 +914,6 @@ def x3_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the {KNN_QUERIES}-row query relation broadcasts; one pass
     over the corpus scores all queries (no per-query scan), one window
     ranks per query."""
-    from pyspark.sql import Window
-
     emb = t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < KNN_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -1123,20 +965,12 @@ MRL_PREFIX_DIM = 16
                (embedding::DOUBLE[])[1:{MRL_PREFIX_DIM}] AS p
         FROM embeddings WHERE vec_id <> 0
     ),
-    q AS (
-        SELECT embedding::DOUBLE[] AS qv,
-               (embedding::DOUBLE[])[1:{MRL_PREFIX_DIM}] AS qp
-        FROM embeddings WHERE vec_id = 0
-    ),
+    {_duck_q0(f"embedding::DOUBLE[] AS qv, (embedding::DOUBLE[])[1:{MRL_PREFIX_DIM}] AS qp")},
     full_rank AS (
         SELECT vec_id, label,
-               FLOOR(LIST_DOT_PRODUCT(v, qv)
-                     / (SQRT(LIST_DOT_PRODUCT(v, v)) * SQRT(LIST_DOT_PRODUCT(qv, qv)))
-                     * 1000000) / 1000000 AS cosine,
+               {_duck_cos_e6("v", "qv")} / 1000000 AS cosine,
                ROW_NUMBER() OVER (ORDER BY
-                   FLOOR(LIST_DOT_PRODUCT(v, qv)
-                         / (SQRT(LIST_DOT_PRODUCT(v, v))
-                            * SQRT(LIST_DOT_PRODUCT(qv, qv))) * 1000000) / 1000000
+                   {_duck_cos_e6("v", "qv")} / 1000000
                    DESC, vec_id) AS rnk
         FROM b, q
     ),
@@ -1145,9 +979,7 @@ MRL_PREFIX_DIM = 16
         FROM (
             SELECT vec_id,
                    ROW_NUMBER() OVER (ORDER BY
-                       FLOOR(LIST_DOT_PRODUCT(p, qp)
-                             / (SQRT(LIST_DOT_PRODUCT(p, p))
-                                * SQRT(LIST_DOT_PRODUCT(qp, qp))) * 1000000) / 1000000
+                       {_duck_cos_e6("p", "qp")} / 1000000
                        DESC, vec_id) AS rnk
             FROM b, q
         ) WHERE rnk <= 10
@@ -1171,9 +1003,7 @@ def x3_mrl_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     two TakeOrdered top-10s; the membership flag joins two 10-row
     relations. Nothing here grows faster than the corpus scan."""
     emb = t(spark, sf_dir, "embeddings")
-    q_row = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    q_full = [float(x) for x in q_row]
-    q_pre = q_full[:MRL_PREFIX_DIM]
+    q_full = query_vector(emb)
     corpus = emb.filter(F.col("vec_id") != 0)
 
     full10 = (
@@ -1184,7 +1014,7 @@ def x3_mrl_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.slice(_as_double("embedding"), 1, MRL_PREFIX_DIM).alias("p"),
     )
-    qp = F.array(*[F.lit(float(x)) for x in q_pre])
+    qp = F.array(*[F.lit(float(x)) for x in (q_full or [])[:MRL_PREFIX_DIM]])
     pre10 = (
         pre.withColumn("pc", _floor6(cosine(F.col("p"), qp)))
         .orderBy(F.desc("pc"), "vec_id")
@@ -1192,8 +1022,6 @@ def x3_mrl_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id")
         .withColumn("_pre_hit", F.lit(True))
     )
-    from pyspark.sql import Window
-
     wr = Window.orderBy(F.desc("cosine"), "vec_id")
     return (
         full10.withColumn("rank", F.row_number().over(wr).cast("long"))
@@ -1207,3 +1035,590 @@ def x3_mrl_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("rank")
     )
+
+
+# ---------------------------------------------------------------------------
+# embedding norm audit
+# ---------------------------------------------------------------------------
+
+@register(
+    "x3_vector_norm_audit",
+    oracle="""
+    WITH per_vec AS (
+        SELECT vec_id, label,
+               CAST(LEN(embedding) AS BIGINT) AS dims,
+               (SELECT CAST(SUM(CAST(FLOOR(x * 1000) AS BIGINT)
+                                * CAST(FLOOR(x * 1000) AS BIGINT)) AS BIGINT)
+                FROM UNNEST(embedding::DOUBLE[]) AS u(x)) AS qnorm2
+        FROM embeddings
+    )
+    SELECT label,
+           CAST(COUNT(*) AS BIGINT) AS n_vecs,
+           CAST(MIN(dims) AS BIGINT) AS min_dims,
+           CAST(MAX(dims) AS BIGINT) AS max_dims,
+           CAST(MIN(qnorm2) AS BIGINT) AS min_qnorm2,
+           CAST(MAX(qnorm2) AS BIGINT) AS max_qnorm2,
+           CAST(SUM(qnorm2) AS BIGINT) AS sum_qnorm2,
+           CAST(COUNT(*) FILTER (WHERE qnorm2 = 0) AS BIGINT) AS n_zero_vecs
+    FROM per_vec
+    GROUP BY label ORDER BY label
+    """,
+    survey_ids=("X3", "F6", "A1"),
+)
+def x3_vector_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-column QA: per label, vector counts, dimensionality
+    consistency (min/max dims — a ragged column is a broken upstream
+    encoder), quantized squared-norm stats, and zero-vector counts
+    (zero vectors poison cosine similarity downstream — they're what
+    ``try_divide`` guards in the similarity family).
+
+    Exactness: components are floored to e3 integers BEFORE the
+    square-sum, so the per-vector fold is an integer sum — order-free,
+    no float accumulation to wobble the hash (the quantize-then-sum
+    discipline; contrast the AVG-based centroid op which relies on
+    well-conditioned means). Scale: one array fold per row (stays in
+    codegen), one |labels|-keyed map-combined rollup — no shuffle
+    carries a vector."""
+    emb = t(spark, sf_dir, "embeddings")
+    per_vec = emb.select(
+        "label",
+        F.size("embedding").cast("long").alias("dims"),
+        # Empty-array contract: NULL, not 0 — an empty embedding is a
+        # missing vector, not a zero vector. (The DuckDB oracle's
+        # correlated SUM over an empty UNNEST returns NULL; the Spark
+        # fold would return the 0 initializer, silently counting the
+        # row as a zero vector. Pinned by the empty-row pytest.)
+        F.when(F.size("embedding") == 0, F.lit(None).cast("long"))
+        .otherwise(
+            F.aggregate(
+                F.transform(
+                    "embedding",
+                    lambda x: F.floor(x.cast("double") * 1000).cast("long"),
+                ),
+                F.lit(0).cast("long"),
+                lambda acc, q: acc + q * q,
+            )
+        )
+        .alias("qnorm2"),
+    )
+    return (
+        per_vec.groupBy("label")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_vecs"),
+            F.min("dims").cast("long").alias("min_dims"),
+            F.max("dims").cast("long").alias("max_dims"),
+            F.min("qnorm2").cast("long").alias("min_qnorm2"),
+            F.max("qnorm2").cast("long").alias("max_qnorm2"),
+            F.sum("qnorm2").cast("long").alias("sum_qnorm2"),
+            F.count(F.when(F.col("qnorm2") == 0, 1))
+            .cast("long")
+            .alias("n_zero_vecs"),
+        )
+        .orderBy("label")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Matryoshka prefix-dimension recall sweep
+# ---------------------------------------------------------------------------
+
+#: Prefix lengths swept (full dim last = the ground-truth anchor).
+MRL_PREFIX_DIMS = (8, 16, 32, 64)
+#: Query vectors (vec_id < NQ) and neighbours retrieved per query.
+MRL_NQ = 4
+MRL_K = 10
+
+
+def _mrl_oracle() -> str:
+    dims = ", ".join(f"({p})" for p in MRL_PREFIX_DIMS)
+    return f"""
+    WITH ps(p) AS (VALUES {dims}),
+    q AS (
+        SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
+        FROM embeddings WHERE vec_id < {MRL_NQ}
+    ),
+    scored AS (
+        SELECT q.qid, ps.p, e.vec_id,
+               {_duck_cos_e6("(e.embedding::DOUBLE[])[1:ps.p]", "(q.qv)[1:ps.p]")} AS cos6
+        FROM embeddings e CROSS JOIN q CROSS JOIN ps
+        WHERE e.vec_id <> q.qid
+    ),
+    ranked AS (
+        SELECT qid, p, vec_id,
+               ROW_NUMBER() OVER (PARTITION BY qid, p
+                                  ORDER BY cos6 DESC, vec_id) AS rk
+        FROM scored
+    ),
+    topk AS (SELECT qid, p, vec_id FROM ranked WHERE rk <= {MRL_K}),
+    truth AS (SELECT qid, vec_id FROM topk WHERE p = {MRL_PREFIX_DIMS[-1]}),
+    lattice AS (SELECT q.qid, ps.p FROM q CROSS JOIN ps),
+    hits AS (
+        SELECT t.qid, t.p, CAST(COUNT(tr.vec_id) AS BIGINT) AS n_hits
+        FROM topk t
+        JOIN truth tr ON tr.qid = t.qid AND tr.vec_id = t.vec_id
+        GROUP BY t.qid, t.p
+    ),
+    rec AS (
+        SELECT l.qid, l.p, COALESCE(h.n_hits, 0) AS n_hits
+        FROM lattice l LEFT JOIN hits h ON h.qid = l.qid AND h.p = l.p
+    )
+    SELECT CAST(p AS BIGINT) AS p_dim,
+           CAST(SUM(n_hits) * 1000000 // ({MRL_K} * {MRL_NQ}) AS BIGINT)
+               AS mean_recall_e6,
+           CAST(MIN(n_hits) * 1000000 // {MRL_K} AS BIGINT)
+               AS min_recall_e6
+    FROM rec
+    GROUP BY p
+    ORDER BY p_dim
+    """
+
+
+@column_memo
+def _mrl_sq(name: str):
+    return F.transform(name, lambda x: x * x)
+
+
+@column_memo
+def _mrl_cascade(arr_col: str, cuts: tuple = tuple(MRL_PREFIX_DIMS)):
+    """Cascaded sequential-fold prefix sums of an array column:
+    sums[i] = fold over elements [1..cuts[i]], each continuing the
+    previous partial — op order identical to a fresh fold."""
+    sums, prev_cut, prev = [], 0, F.lit(0.0)
+    for c in cuts:
+        s = F.aggregate(
+            F.slice(F.col(arr_col), prev_cut + 1, c - prev_cut),
+            prev,
+            lambda acc, v: acc + v,
+        )
+        sums.append(s)
+        prev_cut, prev = c, s
+    return tuple(sums)
+
+
+@column_memo
+def _mrl_prod():
+    return F.zip_with("ev", "qv", lambda x, y: x * y)
+
+
+@column_memo
+def _mrl_explode_col():
+    dots = _mrl_cascade("_prod")
+    cos6 = [
+        F.floor(
+            F.try_divide(
+                d, F.sqrt(F.col(f"_ne{p}")) * F.sqrt(F.col(f"_nq{p}"))
+            )
+            * 1_000_000
+        )
+        for p, d in zip(MRL_PREFIX_DIMS, dots)
+    ]
+    return F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(p).cast("int").alias("p"), c.alias("cos6"))
+                for p, c in zip(MRL_PREFIX_DIMS, cos6)
+            ]
+        )
+    )
+
+
+@register(
+    "x3_matryoshka_prefix_recall",
+    oracle=_mrl_oracle(),
+    survey_ids=("X3", "A1", "W4", "J1"),
+)
+def x3_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Matryoshka-representation recall sweep (Kusupati et al. 2022):
+    retrieve cosine top-k using only the first p dims of the embedding
+    (p ∈ 8/16/32/64) and measure recall@k against the full-dim ground
+    truth — the measured curve behind the 'truncate embeddings to cut
+    ANN cost 8×' decision, the same measured-knob discipline as the
+    IVF n_probe and LSH band sweeps. The full-dim row anchors the
+    sweep at recall 1.0 by construction.
+
+    Plan: NQ broadcast query vectors × |dims| prefix lengths against
+    one corpus scan (brute-force tier — the eval needs exact ground
+    truth); per-(query, p) ranks via a keyed window over the NQ·|dims|
+    lattice; recall joins the p-ranked lists to the full-dim list on
+    (qid, vec_id). Work is NQ·|dims|·corpus — linear in the corpus
+    with a 16× constant, never corpus×corpus. Cosines floor to e6
+    before ranking (ties broken by vec_id) for cross-engine parity.
+
+    Per-task work: the four prefix dots/norms CASCADE (the p=16 fold
+    starts from the p=8 partial, exactly the same sequential op order
+    as folding the first 16 elements, so every cosine is
+    bit-identical), corpus-side prefix norms are computed once per
+    vector BEFORE the query crossJoin, query-side norms once per query
+    row before broadcast, and the lattice explode happens AFTER
+    scoring, on the narrow (p, cos6) pairs — ~4× fewer floating-point
+    ops than re-folding each prefix."""
+    emb = t(spark, sf_dir, "embeddings")
+    q = (
+        emb.filter(F.col("vec_id") < MRL_NQ)
+        .select(
+            F.col("vec_id").alias("qid"), _as_double("embedding").alias("qv")
+        )
+        .withColumn("_qsq", _mrl_sq("qv"))
+    )
+    q = q.select(
+        "qid",
+        "qv",
+        *[
+            s.alias(f"_nq{p}")
+            for p, s in zip(MRL_PREFIX_DIMS, _mrl_cascade("_qsq"))
+        ],
+    )
+    e = (
+        emb.select("vec_id", _as_double("embedding").alias("ev"))
+        .withColumn("_esq", _mrl_sq("ev"))
+    )
+    e = e.select(
+        "vec_id",
+        "ev",
+        *[
+            s.alias(f"_ne{p}")
+            for p, s in zip(MRL_PREFIX_DIMS, _mrl_cascade("_esq"))
+        ],
+    )
+    paired = (
+        e.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("qid"))
+        .withColumn("_prod", _mrl_prod())
+    )
+    scored = paired.select(
+        "qid",
+        "vec_id",
+        _mrl_explode_col().alias("_pc"),
+    ).select("qid", F.col("_pc.p").alias("p"), "vec_id", F.col("_pc.cos6").alias("cos6"))
+    rk = F.row_number().over(
+        Window.partitionBy("qid", "p").orderBy(F.desc("cos6"), "vec_id")
+    )
+    topk = scored.withColumn("rk", rk).filter(F.col("rk") <= MRL_K).select(
+        "qid", "p", "vec_id"
+    )
+    truth = topk.filter(F.col("p") == MRL_PREFIX_DIMS[-1]).select(
+        F.col("qid").alias("tqid"), F.col("vec_id").alias("tvid")
+    )
+    hits = (
+        topk.join(
+            F.broadcast(truth),
+            (F.col("qid") == F.col("tqid")) & (F.col("vec_id") == F.col("tvid")),
+        )
+        .groupBy("qid", "p")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
+    )
+    ps = spark.createDataFrame([(p,) for p in MRL_PREFIX_DIMS], "p int")
+    lattice = q.select("qid").crossJoin(F.broadcast(ps))
+    rec = lattice.join(hits, ["qid", "p"], "left").select(
+        "qid", "p", F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits")
+    )
+    return (
+        rec.groupBy("p")
+        .agg(
+            F.expr(
+                f"CAST(SUM(n_hits) * 1000000 div ({MRL_K} * {MRL_NQ}) AS LONG)"
+            ).alias("mean_recall_e6"),
+            F.expr(f"CAST(MIN(n_hits) * 1000000 div {MRL_K} AS LONG)").alias(
+                "min_recall_e6"
+            ),
+        )
+        .select(
+            F.col("p").cast("long").alias("p_dim"),
+            "mean_recall_e6",
+            "min_recall_e6",
+        )
+        .orderBy("p_dim")
+    )
+
+
+# ---------------------------------------------------------------------------
+# scalar-quantization bits sweep (the storage-vs-recall knob)
+# ---------------------------------------------------------------------------
+
+#: Swept code widths: (bits, L) with symmetric levels q in [-L, L],
+#: q = floor(x / max_abs * L). 8 bits is `x3_quantize_int8`'s single
+#: point; the sweep prices the 2-/4-bit storage cuts against it.
+SQ_BITS_SWEEP = ((2, 1), (4, 7), (8, 127))
+#: Ground-truth queries (same head as x3_knn_label_vote).
+SQ_NQ = 5
+SQ_TOPK = 10
+
+
+def _sq_oracle() -> str:
+    arms = []
+    for bits, lv in SQ_BITS_SWEEP:
+        arms.append(f"SELECT {bits} AS bits, {lv} AS lv")
+    bits_rel = " UNION ALL ".join(arms)
+    return f"""
+    WITH b AS ({bits_rel}),
+    e AS (
+        SELECT vec_id, embedding::DOUBLE[] AS v,
+               (SELECT MAX(ABS(x)) FROM UNNEST(embedding::DOUBLE[]) AS t(x))
+                   AS max_abs
+        FROM embeddings
+    ),
+    dq AS (
+        SELECT b.bits, b.lv, e.vec_id, e.v, e.max_abs,
+               LIST_TRANSFORM(e.v,
+                   x -> FLOOR(x / e.max_abs * b.lv) * e.max_abs / b.lv) AS xq
+        FROM e CROSS JOIN b
+    ),
+    err AS (
+        SELECT bits, vec_id, v, xq,
+               LIST_TRANSFORM(GENERATE_SERIES(1, LEN(v)),
+                              i -> v[i] - xq[i]) AS ev
+        FROM dq
+    ),
+    sse AS (
+        SELECT bits, vec_id,
+               CAST(FLOOR(LIST_DOT_PRODUCT(ev, ev) * 1000000) AS BIGINT)
+                   AS sse_e6
+        FROM err
+    ),
+    q AS (
+        SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+        FROM embeddings WHERE vec_id < {SQ_NQ}
+    ),
+    exact AS (
+        SELECT query_id, vec_id FROM (
+            SELECT q.query_id, e.vec_id,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY q.query_id
+                       ORDER BY FLOOR(LIST_DOT_PRODUCT(e.v, q.qv) * 1000000)
+                                DESC, e.vec_id) AS rn
+            FROM e CROSS JOIN q
+        ) WHERE rn <= {SQ_TOPK}
+    ),
+    approx AS (
+        SELECT bits, query_id, vec_id FROM (
+            SELECT dq.bits, q.query_id, dq.vec_id,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY dq.bits, q.query_id
+                       ORDER BY FLOOR(LIST_DOT_PRODUCT(dq.xq, q.qv) * 1000000)
+                                DESC, dq.vec_id) AS rn
+            FROM dq CROSS JOIN q
+        ) WHERE rn <= {SQ_TOPK}
+    ),
+    rec AS (
+        SELECT a.bits, CAST(COUNT(*) AS BIGINT) AS recall10_sum
+        FROM approx a JOIN exact x
+          ON x.query_id = a.query_id AND x.vec_id = a.vec_id
+        GROUP BY a.bits
+    )
+    SELECT s.bits,
+           CAST(COUNT(*) AS BIGINT) AS n_vectors,
+           CAST(SUM(s.sse_e6) AS BIGINT) AS sum_sse_e6,
+           CAST(COALESCE(MAX(rec.recall10_sum), 0) AS BIGINT) AS recall10_sum
+    FROM sse s LEFT JOIN rec ON rec.bits = s.bits
+    GROUP BY s.bits
+    ORDER BY s.bits
+    """
+
+
+@register(
+    "x3_sq_bits_sweep",
+    oracle=_sq_oracle(),
+    survey_ids=("X3", "A1", "W1"),
+)
+def x3_sq_bits_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scalar-quantization width sweep — the vector-store storage knob
+    measured: per code width (2/4/8 bits, symmetric max-abs scaling)
+    report total reconstruction error (per-vector SSE, e6-floored then
+    exact integer sums) AND asymmetric recall@10 (quantized corpus
+    scored against EXACT query vectors — the ADC protocol
+    `x3_ivfpq_adc_topk` uses) versus the full-precision ground truth.
+    8 bits is the `x3_quantize_int8` point; the curve prices dropping
+    to 4/2 bits (16x/32x storage cut) in recalled neighbors.
+
+    Plan: ONE embedding scan serves the whole sweep — the 3-row width
+    relation broadcast-joins onto it, dequantization and the error dot
+    product are scan-side array expressions (the proven
+    LIST_DOT_PRODUCT/fold kernel), and the two rank tiers are
+    {SQ_NQ}-query row_number windows, the `x3_knn_label_vote` shape.
+    At 100 TB the sweep reads the corpus once, not once per width."""
+    emb = t(spark, sf_dir, "embeddings")
+    widths = F.array(
+        *[
+            F.struct(
+                F.lit(b).cast("long").alias("bits"),
+                F.lit(lv).cast("double").alias("lv"),
+            )
+            for b, lv in SQ_BITS_SWEEP
+        ]
+    )
+    e = emb.select(
+        "vec_id",
+        _as_double("embedding").alias("v"),
+        F.array_max(F.transform(_as_double("embedding"), F.abs)).alias("max_abs"),
+    )
+    dq = e.select(
+        "vec_id",
+        "v",
+        "max_abs",
+        F.explode(widths).alias("w"),
+    ).select(
+        "vec_id",
+        "v",
+        F.col("w.bits").alias("bits"),
+        # max_abs carried from the `e` projection — recomputing the
+        # array max inside the lambda is O(dim²) per vector
+        F.expr(
+            "transform(v, x -> floor(x / max_abs * w.lv) * max_abs / w.lv)"
+        ).alias("xq"),
+    )
+    err = F.zip_with(F.col("v"), F.col("xq"), lambda a, b: a - b)
+    sse = dq.select(
+        "bits",
+        "vec_id",
+        "xq",
+        F.floor(_dot(err, err) * 1_000_000).cast("long").alias("sse_e6"),
+    )
+    q = F.broadcast(
+        emb.filter(F.col("vec_id") < SQ_NQ).select(
+            F.col("vec_id").alias("query_id"),
+            _as_double("embedding").alias("qv"),
+        )
+    )
+    exact_rn = Window.partitionBy("query_id").orderBy(
+        F.desc("score_e6"), F.asc("vec_id")
+    )
+    exact = (
+        e.crossJoin(q)
+        .select(
+            "query_id",
+            "vec_id",
+            F.floor(_dot(F.col("v"), F.col("qv")) * 1_000_000)
+            .cast("long")
+            .alias("score_e6"),
+        )
+        .withColumn("rn", F.row_number().over(exact_rn))
+        .filter(F.col("rn") <= SQ_TOPK)
+        .select("query_id", "vec_id")
+    )
+    approx_rn = Window.partitionBy("bits", "query_id").orderBy(
+        F.desc("score_e6"), F.asc("vec_id")
+    )
+    approx = (
+        sse.crossJoin(q)
+        .select(
+            "bits",
+            "query_id",
+            "vec_id",
+            F.floor(_dot(F.col("xq"), F.col("qv")) * 1_000_000)
+            .cast("long")
+            .alias("score_e6"),
+        )
+        .withColumn("rn", F.row_number().over(approx_rn))
+        .filter(F.col("rn") <= SQ_TOPK)
+        .select("bits", "query_id", "vec_id")
+    )
+    rec = (
+        approx.join(exact, ["query_id", "vec_id"])
+        .groupBy("bits")
+        .agg(F.count(F.lit(1)).cast("long").alias("recall10_sum"))
+    )
+    return (
+        sse.groupBy("bits")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_vectors"),
+            F.sum("sse_e6").cast("long").alias("sum_sse_e6"),
+        )
+        # LEFT join + COALESCE: a width whose recall@10 overlap is zero
+        # must still emit its sweep row (the inner join
+        # silently dropped the arm in both engines, so the oracle gate
+        # could not catch the broken one-row-per-width contract).
+        .join(F.broadcast(rec), "bits", "left")
+        .select(
+            "bits",
+            "n_vectors",
+            "sum_sse_e6",
+            F.coalesce(F.col("recall10_sum"), F.lit(0).cast("long")).alias(
+                "recall10_sum"
+            ),
+        )
+        .orderBy("bits")
+    )
+
+
+# ---------------------------------------------------------------------------
+# hard-negative mining (the contrastive-training data op)
+# ---------------------------------------------------------------------------
+
+#: Queries and negatives per query.
+HARDNEG_NQ = 5
+HARDNEG_K = 5
+
+
+@register(
+    "x3_hard_negative_mining",
+    oracle=f"""
+    WITH e AS (
+        SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
+    ),
+    q AS (
+        SELECT vec_id AS query_id, label AS query_label, v AS qv
+        FROM e WHERE vec_id < {HARDNEG_NQ}
+    ),
+    ranked AS (
+        SELECT q.query_id, q.query_label, e.vec_id AS neg_id,
+               e.label AS neg_label,
+               CAST(FLOOR(LIST_DOT_PRODUCT(e.v, q.qv) * 1000000) AS BIGINT)
+                   AS score_e6,
+               ROW_NUMBER() OVER (
+                   PARTITION BY q.query_id
+                   ORDER BY FLOOR(LIST_DOT_PRODUCT(e.v, q.qv) * 1000000)
+                            DESC, e.vec_id) AS rnk
+        FROM e CROSS JOIN q
+        WHERE e.label <> q.query_label
+    )
+    SELECT query_id, query_label, CAST(rnk AS BIGINT) AS rnk, neg_id,
+           neg_label, score_e6
+    FROM ranked WHERE rnk <= {HARDNEG_K}
+    ORDER BY query_id, rnk
+    """,
+    survey_ids=("X3", "W1", "X4"),
+)
+def x3_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-negative mining for contrastive training — the third use
+    of the neighbor kernel after search (`x3_cosine_topk`) and label
+    vote (`x3_knn_label_vote`): for each anchor, the top-k most
+    SIMILAR vectors with a DIFFERENT label. Those near-miss negatives
+    are what make an embedding model's triplet loss informative
+    (random negatives are trivially separable); next to
+    `x4_contrastive_triplets` (which pairs within/without groups by
+    metadata) this mines the negatives from geometry.
+
+    Plan: {HARDNEG_NQ} anchor vectors broadcast against ONE corpus
+    scan, label-filtered BEFORE ranking (the wrong-label filter prunes
+    the rank input), per-anchor row_number windows. At scale the
+    corpus-side scan is the IVF-pruned probe (`x3_ann_ivf_topk`), same
+    ranking tail."""
+    emb = t(spark, sf_dir, "embeddings")
+    e = emb.select("vec_id", "label", _as_double("embedding").alias("v"))
+    q = F.broadcast(
+        e.filter(F.col("vec_id") < HARDNEG_NQ).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("label").alias("query_label"),
+            F.col("v").alias("qv"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score_e6"), F.asc("neg_id"))
+    return (
+        e.crossJoin(q)
+        .filter(F.col("label") != F.col("query_label"))
+        .select(
+            "query_id",
+            "query_label",
+            F.col("vec_id").alias("neg_id"),
+            F.col("label").alias("neg_label"),
+            F.floor(_dot(F.col("v"), F.col("qv")) * 1_000_000)
+            .cast("long")
+            .alias("score_e6"),
+        )
+        .withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= HARDNEG_K)
+        .select("query_id", "query_label", "rnk", "neg_id", "neg_label", "score_e6")
+        .orderBy("query_id", "rnk")
+    )
+
+

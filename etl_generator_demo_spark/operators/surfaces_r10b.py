@@ -241,87 +241,6 @@ def d_zorder_clustering_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# embedding norm audit
-# ---------------------------------------------------------------------------
-
-@register(
-    "x3_vector_norm_audit",
-    oracle="""
-    WITH per_vec AS (
-        SELECT vec_id, label,
-               CAST(LEN(embedding) AS BIGINT) AS dims,
-               (SELECT CAST(SUM(CAST(FLOOR(x * 1000) AS BIGINT)
-                                * CAST(FLOOR(x * 1000) AS BIGINT)) AS BIGINT)
-                FROM UNNEST(embedding::DOUBLE[]) AS u(x)) AS qnorm2
-        FROM embeddings
-    )
-    SELECT label,
-           CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           CAST(MIN(dims) AS BIGINT) AS min_dims,
-           CAST(MAX(dims) AS BIGINT) AS max_dims,
-           CAST(MIN(qnorm2) AS BIGINT) AS min_qnorm2,
-           CAST(MAX(qnorm2) AS BIGINT) AS max_qnorm2,
-           CAST(SUM(qnorm2) AS BIGINT) AS sum_qnorm2,
-           CAST(COUNT(*) FILTER (WHERE qnorm2 = 0) AS BIGINT) AS n_zero_vecs
-    FROM per_vec
-    GROUP BY label ORDER BY label
-    """,
-    survey_ids=("X3", "F6", "A1"),
-)
-def x3_vector_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-column QA: per label, vector counts, dimensionality
-    consistency (min/max dims — a ragged column is a broken upstream
-    encoder), quantized squared-norm stats, and zero-vector counts
-    (zero vectors poison cosine similarity downstream — they're what
-    ``try_divide`` guards in the similarity family).
-
-    Exactness: components are floored to e3 integers BEFORE the
-    square-sum, so the per-vector fold is an integer sum — order-free,
-    no float accumulation to wobble the hash (the quantize-then-sum
-    discipline; contrast the AVG-based centroid op which relies on
-    well-conditioned means). Scale: one array fold per row (stays in
-    codegen), one |labels|-keyed map-combined rollup — no shuffle
-    carries a vector."""
-    emb = t(spark, sf_dir, "embeddings")
-    per_vec = emb.select(
-        "label",
-        F.size("embedding").cast("long").alias("dims"),
-        # Empty-array contract: NULL, not 0 — an empty embedding is a
-        # missing vector, not a zero vector. (The DuckDB oracle's
-        # correlated SUM over an empty UNNEST returns NULL; the Spark
-        # fold would return the 0 initializer, silently counting the
-        # row as a zero vector. Pinned by the empty-row pytest.)
-        F.when(F.size("embedding") == 0, F.lit(None).cast("long"))
-        .otherwise(
-            F.aggregate(
-                F.transform(
-                    "embedding",
-                    lambda x: F.floor(x.cast("double") * 1000).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, q: acc + q * q,
-            )
-        )
-        .alias("qnorm2"),
-    )
-    return (
-        per_vec.groupBy("label")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_vecs"),
-            F.min("dims").cast("long").alias("min_dims"),
-            F.max("dims").cast("long").alias("max_dims"),
-            F.min("qnorm2").cast("long").alias("min_qnorm2"),
-            F.max("qnorm2").cast("long").alias("max_qnorm2"),
-            F.sum("qnorm2").cast("long").alias("sum_qnorm2"),
-            F.count(F.when(F.col("qnorm2") == 0, 1))
-            .cast("long")
-            .alias("n_zero_vecs"),
-        )
-        .orderBy("label")
-    )
-
-
-# ---------------------------------------------------------------------------
 # NDCG retrieval evaluation
 # ---------------------------------------------------------------------------
 

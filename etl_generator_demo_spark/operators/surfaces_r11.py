@@ -856,134 +856,6 @@ def x4_doremi_weight_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF index staleness audit
-# ---------------------------------------------------------------------------
-
-#: The "pre-append corpus" slice: the stale coarse quantizer is
-#: trained on vec_id % 10 != 0 (90%); the % 10 == 0 decile models the
-#: appended batch an IVF index serves without retraining.
-IVF_OLD_WHERE = "vec_id % 10 != 0"
-
-
-def _ivf_staleness_oracle() -> str:
-    from .clustering import DIM, KMEANS_K, KMEANS_ROUNDS, _kmeans_cte
-
-    k, rounds, dim = KMEANS_K, KMEANS_ROUNDS, DIM
-    dist = (
-        f"CAST(list_sum(list_transform(range(1, {dim + 1}),"
-        " i -> (e.q[i] - c.c[i]) * (e.q[i] - c.c[i]))) AS BIGINT)"
-    )
-    return f"""
-    WITH {_kmeans_cte(k, rounds, dim, prefix="s_",
-                      where=f"WHERE {IVF_OLD_WHERE}")},
-    {_kmeans_cte(k, rounds, dim)},
-    sall AS (
-        SELECT vec_id, cluster_id, d FROM (
-            SELECT e.vec_id, c.cluster_id, {dist} AS d,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                                      ORDER BY {dist}, c.cluster_id) AS rn
-            FROM e, s_c{rounds} c
-        ) WHERE rn = 1
-    ),
-    per_list AS (
-        SELECT cluster_id,
-               CAST(COUNT(*) FILTER (WHERE vec_id % 10 != 0) AS BIGINT)
-                   AS n_old,
-               CAST(COUNT(*) FILTER (WHERE vec_id % 10 = 0) AS BIGINT)
-                   AS n_new,
-               CAST(SUM(d) FILTER (WHERE vec_id % 10 != 0) AS BIGINT)
-                   AS d_old,
-               CAST(SUM(d) FILTER (WHERE vec_id % 10 = 0) AS BIGINT)
-                   AS d_new
-        FROM sall GROUP BY cluster_id
-    ),
-    costs AS (
-        SELECT
-            (SELECT CAST(SUM(d) // COUNT(*) AS BIGINT) FROM sall)
-                AS stale_mean,
-            (SELECT CAST(SUM(d) // COUNT(*) AS BIGINT) FROM a{rounds})
-                AS fresh_mean
-    )
-    SELECT p.cluster_id AS list_id, p.n_old, p.n_new,
-           CAST(p.n_new * 1000000 // NULLIF(p.n_old, 0) AS BIGINT)
-               AS growth_e6,
-           CAST(p.d_old // NULLIF(p.n_old, 0) AS BIGINT) AS mean_qerr_old,
-           CAST(p.d_new // NULLIF(p.n_new, 0) AS BIGINT) AS mean_qerr_new,
-           CAST((c.stale_mean - c.fresh_mean) * 1000000 // c.stale_mean
-                AS BIGINT) AS retrain_gain_e6
-    FROM per_list p CROSS JOIN costs c
-    ORDER BY list_id
-    """
-
-
-@register(
-    "x3_ivf_staleness_audit",
-    oracle=_ivf_staleness_oracle(),
-    survey_ids=("X3", "A1", "F6"),
-)
-def x3_ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF index maintenance: after an append, is the coarse quantizer
-    stale? Train the STALE model on the pre-append 90% (vec_id decile
-    slice), assign the FULL corpus to it, and report per list: old/new
-    occupancy, growth ratio, and mean quantization error of old vs new
-    vectors (new vectors sitting farther from their centroid = the
-    distribution drifted); plus the retrain gain — how much the mean
-    quantization cost drops under centroids retrained on everything
-    (permutation-FREE metrics throughout: two independently trained
-    models cannot be compared by cluster id, so the audit never does).
-    This is `x2_dedup_incremental`'s question asked of the ANN family:
-    when does the persisted index need rebuilding? Exactness: both
-    trainings are the exact-integer Lloyd chain; means are integer
-    divisions (NULLIF guards empty lists in both engines identically).
-    Scale: two model trainings (k·dim collects only) + two
-    assignment scans; gain uses MEAN costs so the e6 scaling stays in
-    int64 at any corpus size."""
-    from .clustering import _assign, kmeans_model
-
-    emb, fresh_c = kmeans_model(spark, sf_dir)  # full-corpus model
-    _, stale_c = kmeans_model(spark, sf_dir, where=IVF_OLD_WHERE)
-    sall = _assign(emb, stale_c).localCheckpoint(eager=True)
-    fall = _assign(emb, fresh_c)
-    is_old = F.expr(IVF_OLD_WHERE)
-    per_list = sall.groupBy("cluster_id").agg(
-        F.count(F.when(is_old, 1)).cast("long").alias("n_old"),
-        F.count(F.when(~is_old, 1)).cast("long").alias("n_new"),
-        F.sum(F.when(is_old, F.col("dist_q"))).cast("long").alias("d_old"),
-        F.sum(F.when(~is_old, F.col("dist_q"))).cast("long").alias("d_new"),
-    )
-    stale_mean = sall.agg(
-        F.expr("sum(dist_q) div count(1)").alias("stale_mean")
-    )
-    fresh_mean = fall.agg(
-        F.expr("sum(dist_q) div count(1)").alias("fresh_mean")
-    )
-    costs = stale_mean.crossJoin(F.broadcast(fresh_mean))
-    return (
-        per_list.crossJoin(F.broadcast(costs))
-        .select(
-            F.col("cluster_id").cast("long").alias("list_id"),
-            "n_old",
-            "n_new",
-            F.expr("n_new * 1000000 div nullif(n_old, 0)")
-            .cast("long")
-            .alias("growth_e6"),
-            F.expr("d_old div nullif(n_old, 0)")
-            .cast("long")
-            .alias("mean_qerr_old"),
-            F.expr("d_new div nullif(n_new, 0)")
-            .cast("long")
-            .alias("mean_qerr_new"),
-            F.expr(
-                "(stale_mean - fresh_mean) * 1000000 div stale_mean"
-            )
-            .cast("long")
-            .alias("retrain_gain_e6"),
-        )
-        .orderBy("list_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Bloom-filter FPR sweep (the join-pruning knob)
 # ---------------------------------------------------------------------------
 

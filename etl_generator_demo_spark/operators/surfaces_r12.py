@@ -843,238 +843,6 @@ def x4_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Matryoshka prefix-dimension recall sweep
-# ---------------------------------------------------------------------------
-
-#: Prefix lengths swept (full dim last = the ground-truth anchor).
-MRL_PREFIX_DIMS = (8, 16, 32, 64)
-#: Query vectors (vec_id < NQ) and neighbours retrieved per query.
-MRL_NQ = 4
-MRL_K = 10
-
-
-def _mrl_oracle() -> str:
-    dims = ", ".join(f"({p})" for p in MRL_PREFIX_DIMS)
-    return f"""
-    WITH ps(p) AS (VALUES {dims}),
-    q AS (
-        SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-        FROM embeddings WHERE vec_id < {MRL_NQ}
-    ),
-    scored AS (
-        SELECT q.qid, ps.p, e.vec_id,
-               FLOOR(LIST_DOT_PRODUCT((e.embedding::DOUBLE[])[1:ps.p],
-                                      (q.qv)[1:ps.p])
-                     / (SQRT(LIST_DOT_PRODUCT((e.embedding::DOUBLE[])[1:ps.p],
-                                              (e.embedding::DOUBLE[])[1:ps.p]))
-                        * SQRT(LIST_DOT_PRODUCT((q.qv)[1:ps.p],
-                                                (q.qv)[1:ps.p])))
-                     * 1000000) AS cos6
-        FROM embeddings e CROSS JOIN q CROSS JOIN ps
-        WHERE e.vec_id <> q.qid
-    ),
-    ranked AS (
-        SELECT qid, p, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY qid, p
-                                  ORDER BY cos6 DESC, vec_id) AS rk
-        FROM scored
-    ),
-    topk AS (SELECT qid, p, vec_id FROM ranked WHERE rk <= {MRL_K}),
-    truth AS (SELECT qid, vec_id FROM topk WHERE p = {MRL_PREFIX_DIMS[-1]}),
-    lattice AS (SELECT q.qid, ps.p FROM q CROSS JOIN ps),
-    hits AS (
-        SELECT t.qid, t.p, CAST(COUNT(tr.vec_id) AS BIGINT) AS n_hits
-        FROM topk t
-        JOIN truth tr ON tr.qid = t.qid AND tr.vec_id = t.vec_id
-        GROUP BY t.qid, t.p
-    ),
-    rec AS (
-        SELECT l.qid, l.p, COALESCE(h.n_hits, 0) AS n_hits
-        FROM lattice l LEFT JOIN hits h ON h.qid = l.qid AND h.p = l.p
-    )
-    SELECT CAST(p AS BIGINT) AS p_dim,
-           CAST(SUM(n_hits) * 1000000 // ({MRL_K} * {MRL_NQ}) AS BIGINT)
-               AS mean_recall_e6,
-           CAST(MIN(n_hits) * 1000000 // {MRL_K} AS BIGINT)
-               AS min_recall_e6
-    FROM rec
-    GROUP BY p
-    ORDER BY p_dim
-    """
-
-
-# Memoized expression trees for the Matryoshka sweep (r17): every
-# column below derives from fixed names and the MRL_* constants, so the
-# trees are built once per process (the same construction code, cached)
-# instead of ~2.5k py4j round trips per DataFrame build. Expression
-# Columns are immutable values — reuse is exactly like reusing F.col.
-from functools import lru_cache as _lru_cache
-
-
-@_lru_cache(maxsize=None)
-def _mrl_sq(name: str):
-    return F.transform(name, lambda x: x * x)
-
-
-@_lru_cache(maxsize=None)
-def _mrl_cascade(arr_col: str, cuts: tuple = tuple(MRL_PREFIX_DIMS)):
-    """Cascaded sequential-fold prefix sums of an array column:
-    sums[i] = fold over elements [1..cuts[i]], each continuing the
-    previous partial — op order identical to a fresh fold."""
-    sums, prev_cut, prev = [], 0, F.lit(0.0)
-    for c in cuts:
-        s = F.aggregate(
-            F.slice(F.col(arr_col), prev_cut + 1, c - prev_cut),
-            prev,
-            lambda acc, v: acc + v,
-        )
-        sums.append(s)
-        prev_cut, prev = c, s
-    return tuple(sums)
-
-
-@_lru_cache(maxsize=None)
-def _mrl_prod():
-    return F.zip_with("ev", "qv", lambda x, y: x * y)
-
-
-@_lru_cache(maxsize=None)
-def _mrl_explode_col():
-    dots = _mrl_cascade("_prod")
-    cos6 = [
-        F.floor(
-            F.try_divide(
-                d, F.sqrt(F.col(f"_ne{p}")) * F.sqrt(F.col(f"_nq{p}"))
-            )
-            * 1_000_000
-        )
-        for p, d in zip(MRL_PREFIX_DIMS, dots)
-    ]
-    return F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(p).cast("int").alias("p"), c.alias("cos6"))
-                for p, c in zip(MRL_PREFIX_DIMS, cos6)
-            ]
-        )
-    )
-
-
-@register(
-    "x3_matryoshka_prefix_recall",
-    oracle=_mrl_oracle(),
-    survey_ids=("X3", "A1", "W4", "J1"),
-)
-def x3_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka-representation recall sweep (Kusupati et al. 2022):
-    retrieve cosine top-k using only the first p dims of the embedding
-    (p ∈ 8/16/32/64) and measure recall@k against the full-dim ground
-    truth — the measured curve behind the 'truncate embeddings to cut
-    ANN cost 8×' decision, the same measured-knob discipline as the
-    IVF n_probe and LSH band sweeps. The full-dim row anchors the
-    sweep at recall 1.0 by construction.
-
-    Plan: NQ broadcast query vectors × |dims| prefix lengths against
-    one corpus scan (brute-force tier — the eval needs exact ground
-    truth); per-(query, p) ranks via a keyed window over the NQ·|dims|
-    lattice; recall joins the p-ranked lists to the full-dim list on
-    (qid, vec_id). Work is NQ·|dims|·corpus — linear in the corpus
-    with a 16× constant, never corpus×corpus. Cosines floor to e6
-    before ranking (ties broken by vec_id) for cross-engine parity.
-
-    r16 per-task work (guide §1.2 step 2): the r12 spelling crossJoined
-    the prefix lattice FIRST and re-sliced/re-folded each (vector,
-    query, p) row from scratch — 120 multiply-adds per dot product
-    (8+16+32+64) and the corpus-side norm recomputed per query. Now
-    the four prefix dots/norms CASCADE (the p=16 fold starts from the
-    p=8 partial, exactly the same sequential op order as folding the
-    first 16 elements, so every cosine is bit-identical), corpus-side
-    prefix norms are computed once per vector BEFORE the query
-    crossJoin, query-side norms once per query row before broadcast,
-    and the lattice explode happens AFTER scoring, on the narrow
-    (p, cos6) pairs. Same oracle, ~4× fewer floating-point ops."""
-    from .similarity import _as_double
-
-    emb = t(spark, sf_dir, "embeddings")
-    q = (
-        emb.filter(F.col("vec_id") < MRL_NQ)
-        .select(
-            F.col("vec_id").alias("qid"), _as_double("embedding").alias("qv")
-        )
-        .withColumn("_qsq", _mrl_sq("qv"))
-    )
-    q = q.select(
-        "qid",
-        "qv",
-        *[
-            s.alias(f"_nq{p}")
-            for p, s in zip(MRL_PREFIX_DIMS, _mrl_cascade("_qsq"))
-        ],
-    )
-    e = (
-        emb.select("vec_id", _as_double("embedding").alias("ev"))
-        .withColumn("_esq", _mrl_sq("ev"))
-    )
-    e = e.select(
-        "vec_id",
-        "ev",
-        *[
-            s.alias(f"_ne{p}")
-            for p, s in zip(MRL_PREFIX_DIMS, _mrl_cascade("_esq"))
-        ],
-    )
-    paired = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn("_prod", _mrl_prod())
-    )
-    scored = paired.select(
-        "qid",
-        "vec_id",
-        _mrl_explode_col().alias("_pc"),
-    ).select("qid", F.col("_pc.p").alias("p"), "vec_id", F.col("_pc.cos6").alias("cos6"))
-    rk = F.row_number().over(
-        Window.partitionBy("qid", "p").orderBy(F.desc("cos6"), "vec_id")
-    )
-    topk = scored.withColumn("rk", rk).filter(F.col("rk") <= MRL_K).select(
-        "qid", "p", "vec_id"
-    )
-    truth = topk.filter(F.col("p") == MRL_PREFIX_DIMS[-1]).select(
-        F.col("qid").alias("tqid"), F.col("vec_id").alias("tvid")
-    )
-    hits = (
-        topk.join(
-            F.broadcast(truth),
-            (F.col("qid") == F.col("tqid")) & (F.col("vec_id") == F.col("tvid")),
-        )
-        .groupBy("qid", "p")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    )
-    ps = spark.createDataFrame([(p,) for p in MRL_PREFIX_DIMS], "p int")
-    lattice = q.select("qid").crossJoin(F.broadcast(ps))
-    rec = lattice.join(hits, ["qid", "p"], "left").select(
-        "qid", "p", F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits")
-    )
-    return (
-        rec.groupBy("p")
-        .agg(
-            F.expr(
-                f"CAST(SUM(n_hits) * 1000000 div ({MRL_K} * {MRL_NQ}) AS LONG)"
-            ).alias("mean_recall_e6"),
-            F.expr(f"CAST(MIN(n_hits) * 1000000 div {MRL_K} AS LONG)").alias(
-                "min_recall_e6"
-            ),
-        )
-        .select(
-            F.col("p").cast("long").alias("p_dim"),
-            "mean_recall_e6",
-            "min_recall_e6",
-        )
-        .orderBy("p_dim")
-    )
-
-
-# ---------------------------------------------------------------------------
 # content-defined chunking (CDC) dedup — the shift-resistant tier
 # ---------------------------------------------------------------------------
 

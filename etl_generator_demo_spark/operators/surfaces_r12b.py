@@ -281,215 +281,6 @@ def x5_scene_cut_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# scalar-quantization bits sweep (the storage-vs-recall knob)
-# ---------------------------------------------------------------------------
-
-#: Swept code widths: (bits, L) with symmetric levels q in [-L, L],
-#: q = floor(x / max_abs * L). 8 bits is `x3_quantize_int8`'s single
-#: point; the sweep prices the 2-/4-bit storage cuts against it.
-SQ_BITS_SWEEP = ((2, 1), (4, 7), (8, 127))
-#: Ground-truth queries (same head as x3_knn_label_vote).
-SQ_NQ = 5
-SQ_TOPK = 10
-
-
-def _sq_oracle() -> str:
-    arms = []
-    for bits, lv in SQ_BITS_SWEEP:
-        arms.append(f"SELECT {bits} AS bits, {lv} AS lv")
-    bits_rel = " UNION ALL ".join(arms)
-    return f"""
-    WITH b AS ({bits_rel}),
-    e AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               (SELECT MAX(ABS(x)) FROM UNNEST(embedding::DOUBLE[]) AS t(x))
-                   AS max_abs
-        FROM embeddings
-    ),
-    dq AS (
-        SELECT b.bits, b.lv, e.vec_id, e.v, e.max_abs,
-               LIST_TRANSFORM(e.v,
-                   x -> FLOOR(x / e.max_abs * b.lv) * e.max_abs / b.lv) AS xq
-        FROM e CROSS JOIN b
-    ),
-    err AS (
-        SELECT bits, vec_id, v, xq,
-               LIST_TRANSFORM(GENERATE_SERIES(1, LEN(v)),
-                              i -> v[i] - xq[i]) AS ev
-        FROM dq
-    ),
-    sse AS (
-        SELECT bits, vec_id,
-               CAST(FLOOR(LIST_DOT_PRODUCT(ev, ev) * 1000000) AS BIGINT)
-                   AS sse_e6
-        FROM err
-    ),
-    q AS (
-        SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-        FROM embeddings WHERE vec_id < {SQ_NQ}
-    ),
-    exact AS (
-        SELECT query_id, vec_id FROM (
-            SELECT q.query_id, e.vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY FLOOR(LIST_DOT_PRODUCT(e.v, q.qv) * 1000000)
-                                DESC, e.vec_id) AS rn
-            FROM e CROSS JOIN q
-        ) WHERE rn <= {SQ_TOPK}
-    ),
-    approx AS (
-        SELECT bits, query_id, vec_id FROM (
-            SELECT dq.bits, q.query_id, dq.vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY dq.bits, q.query_id
-                       ORDER BY FLOOR(LIST_DOT_PRODUCT(dq.xq, q.qv) * 1000000)
-                                DESC, dq.vec_id) AS rn
-            FROM dq CROSS JOIN q
-        ) WHERE rn <= {SQ_TOPK}
-    ),
-    rec AS (
-        SELECT a.bits, CAST(COUNT(*) AS BIGINT) AS recall10_sum
-        FROM approx a JOIN exact x
-          ON x.query_id = a.query_id AND x.vec_id = a.vec_id
-        GROUP BY a.bits
-    )
-    SELECT s.bits,
-           CAST(COUNT(*) AS BIGINT) AS n_vectors,
-           CAST(SUM(s.sse_e6) AS BIGINT) AS sum_sse_e6,
-           CAST(COALESCE(MAX(rec.recall10_sum), 0) AS BIGINT) AS recall10_sum
-    FROM sse s LEFT JOIN rec ON rec.bits = s.bits
-    GROUP BY s.bits
-    ORDER BY s.bits
-    """
-
-
-@register(
-    "x3_sq_bits_sweep",
-    oracle=_sq_oracle(),
-    survey_ids=("X3", "A1", "W1"),
-)
-def x3_sq_bits_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar-quantization width sweep — the vector-store storage knob
-    measured: per code width (2/4/8 bits, symmetric max-abs scaling)
-    report total reconstruction error (per-vector SSE, e6-floored then
-    exact integer sums) AND asymmetric recall@10 (quantized corpus
-    scored against EXACT query vectors — the ADC protocol
-    `x3_ivfpq_adc_topk` uses) versus the full-precision ground truth.
-    8 bits is the `x3_quantize_int8` point; the curve prices dropping
-    to 4/2 bits (16x/32x storage cut) in recalled neighbors.
-
-    Plan: ONE embedding scan serves the whole sweep — the 3-row width
-    relation broadcast-joins onto it, dequantization and the error dot
-    product are scan-side array expressions (the proven
-    LIST_DOT_PRODUCT/fold kernel), and the two rank tiers are
-    {SQ_NQ}-query row_number windows, the `x3_knn_label_vote` shape.
-    At 100 TB the sweep reads the corpus once, not once per width."""
-    emb = t(spark, sf_dir, "embeddings")
-    widths = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("long").alias("bits"),
-                F.lit(lv).cast("double").alias("lv"),
-            )
-            for b, lv in SQ_BITS_SWEEP
-        ]
-    )
-    e = emb.select(
-        "vec_id",
-        _as_double("embedding").alias("v"),
-        F.array_max(F.transform(_as_double("embedding"), F.abs)).alias("max_abs"),
-    )
-    dq = e.select(
-        "vec_id",
-        "v",
-        "max_abs",
-        F.explode(widths).alias("w"),
-    ).select(
-        "vec_id",
-        "v",
-        F.col("w.bits").alias("bits"),
-        # max_abs carried from the `e` projection — recomputing the
-        # array max inside the lambda is O(dim²) per vector (r12 advice)
-        F.expr(
-            "transform(v, x -> floor(x / max_abs * w.lv) * max_abs / w.lv)"
-        ).alias("xq"),
-    )
-    err = F.zip_with(F.col("v"), F.col("xq"), lambda a, b: a - b)
-    sse = dq.select(
-        "bits",
-        "vec_id",
-        "xq",
-        F.floor(_dot(err, err) * 1_000_000).cast("long").alias("sse_e6"),
-    )
-    q = F.broadcast(
-        emb.filter(F.col("vec_id") < SQ_NQ).select(
-            F.col("vec_id").alias("query_id"),
-            _as_double("embedding").alias("qv"),
-        )
-    )
-    exact_rn = Window.partitionBy("query_id").orderBy(
-        F.desc("score_e6"), F.asc("vec_id")
-    )
-    exact = (
-        e.crossJoin(q)
-        .select(
-            "query_id",
-            "vec_id",
-            F.floor(_dot(F.col("v"), F.col("qv")) * 1_000_000)
-            .cast("long")
-            .alias("score_e6"),
-        )
-        .withColumn("rn", F.row_number().over(exact_rn))
-        .filter(F.col("rn") <= SQ_TOPK)
-        .select("query_id", "vec_id")
-    )
-    approx_rn = Window.partitionBy("bits", "query_id").orderBy(
-        F.desc("score_e6"), F.asc("vec_id")
-    )
-    approx = (
-        sse.crossJoin(q)
-        .select(
-            "bits",
-            "query_id",
-            "vec_id",
-            F.floor(_dot(F.col("xq"), F.col("qv")) * 1_000_000)
-            .cast("long")
-            .alias("score_e6"),
-        )
-        .withColumn("rn", F.row_number().over(approx_rn))
-        .filter(F.col("rn") <= SQ_TOPK)
-        .select("bits", "query_id", "vec_id")
-    )
-    rec = (
-        approx.join(exact, ["query_id", "vec_id"])
-        .groupBy("bits")
-        .agg(F.count(F.lit(1)).cast("long").alias("recall10_sum"))
-    )
-    return (
-        sse.groupBy("bits")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_vectors"),
-            F.sum("sse_e6").cast("long").alias("sum_sse_e6"),
-        )
-        # LEFT join + COALESCE: a width whose recall@10 overlap is zero
-        # must still emit its sweep row (r12 advice — the inner join
-        # silently dropped the arm in both engines, so the oracle gate
-        # could not catch the broken one-row-per-width contract).
-        .join(F.broadcast(rec), "bits", "left")
-        .select(
-            "bits",
-            "n_vectors",
-            "sum_sse_e6",
-            F.coalesce(F.col("recall10_sum"), F.lit(0).cast("long")).alias(
-                "recall10_sum"
-            ),
-        )
-        .orderBy("bits")
-    )
-
-
-# ---------------------------------------------------------------------------
 # interval-join bin-width sweep (the temporal-join bucketing knob)
 # ---------------------------------------------------------------------------
 
@@ -840,84 +631,6 @@ def j_salt_factor_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# k-means k sweep (the elbow curve behind KMEANS_K / IVF list count)
-# ---------------------------------------------------------------------------
-
-#: Swept cluster counts (8 = the registered single point KMEANS_K).
-KMEANS_K_SWEEP = (2, 4, 8, 16)
-
-
-def _k_sweep_oracle() -> str:
-    from .clustering import _kmeans_cte, KMEANS_ROUNDS
-    from .similarity import DIM
-
-    r = KMEANS_ROUNDS
-    chains, arms = [], []
-    for k in KMEANS_K_SWEEP:
-        p = f"k{k}_"
-        chains.append(_kmeans_cte(k, r, DIM, prefix=p))
-        arms.append(f"""
-        SELECT CAST({k} AS BIGINT) AS k,
-               CAST(SUM(d) AS BIGINT) AS sse_q_total,
-               CAST(COUNT(DISTINCT cluster_id) AS BIGINT) AS n_nonempty,
-               CAST(MAX(cn) * 1000000 // COUNT(*) AS BIGINT) AS max_share_ppm
-        FROM (
-            SELECT vec_id, cluster_id, d,
-                   COUNT(*) OVER (PARTITION BY cluster_id) AS cn
-            FROM {p}a{r}
-        )""")
-    union = "\n        UNION ALL\n".join(arms)
-    return f"WITH {','.join(chains)}\n    SELECT * FROM ({union}) ORDER BY k"
-
-
-@register(
-    "x3_kmeans_k_sweep",
-    oracle=_k_sweep_oracle(),
-    survey_ids=("X3", "A1"),
-)
-def x3_kmeans_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The elbow curve behind every quantizer knob in the repo
-    (KMEANS_K, the IVF coarse-list count, the PQ codebook size): run
-    the SAME fixed-iteration md5-seeded integer k-means at k=2/4/8/16
-    and report total within-cluster squared distance (exact integer —
-    the elbow), non-empty cluster count, and the biggest cluster's
-    row share (the IVF list-balance number: a dominant list means
-    probes scan it every query). Distortion falls monotonically in k
-    while balance typically worsens — where the SSE curve flattens is
-    where KMEANS_K earns its value.
-
-    Each k trains independently (seeding the same first-k of the
-    md5-ordered init, Lloyd rounds unrolled identically in both
-    engines — the `x3_kmeans_clusters` discipline); per k the model is
-    k x dim integers on the driver, the data-side work is linear
-    scans. The oracle runs four namespaced unrolled CTE chains."""
-    from .clustering import kmeans_assignments
-
-    parts = []
-    for k in KMEANS_K_SWEEP:
-        a = kmeans_assignments(spark, sf_dir, k=k)
-        cn = a.groupBy("cluster_id").agg(
-            F.count(F.lit(1)).cast("long").alias("cn")
-        )
-        parts.append(
-            a.join(F.broadcast(cn), "cluster_id")
-            .groupBy()
-            .agg(
-                F.lit(k).cast("long").alias("k"),
-                F.sum("dist_q").cast("long").alias("sse_q_total"),
-                F.count_distinct("cluster_id").cast("long").alias("n_nonempty"),
-                F.expr("CAST(MAX(cn) * 1000000 div COUNT(1) AS LONG)").alias(
-                    "max_share_ppm"
-                ),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("k")
-
-
-# ---------------------------------------------------------------------------
 # data-constrained repeats audit (epochs + repeated-data value decay)
 # ---------------------------------------------------------------------------
 
@@ -1026,88 +739,6 @@ def x4_epochs_repeat_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "over_4_epochs"
         ),
     ).orderBy("lang")
-
-
-# ---------------------------------------------------------------------------
-# hard-negative mining (the contrastive-training data op)
-# ---------------------------------------------------------------------------
-
-#: Queries and negatives per query.
-HARDNEG_NQ = 5
-HARDNEG_K = 5
-
-
-@register(
-    "x3_hard_negative_mining",
-    oracle=f"""
-    WITH e AS (
-        SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
-    ),
-    q AS (
-        SELECT vec_id AS query_id, label AS query_label, v AS qv
-        FROM e WHERE vec_id < {HARDNEG_NQ}
-    ),
-    ranked AS (
-        SELECT q.query_id, q.query_label, e.vec_id AS neg_id,
-               e.label AS neg_label,
-               CAST(FLOOR(LIST_DOT_PRODUCT(e.v, q.qv) * 1000000) AS BIGINT)
-                   AS score_e6,
-               ROW_NUMBER() OVER (
-                   PARTITION BY q.query_id
-                   ORDER BY FLOOR(LIST_DOT_PRODUCT(e.v, q.qv) * 1000000)
-                            DESC, e.vec_id) AS rnk
-        FROM e CROSS JOIN q
-        WHERE e.label <> q.query_label
-    )
-    SELECT query_id, query_label, CAST(rnk AS BIGINT) AS rnk, neg_id,
-           neg_label, score_e6
-    FROM ranked WHERE rnk <= {HARDNEG_K}
-    ORDER BY query_id, rnk
-    """,
-    survey_ids=("X3", "W1", "X4"),
-)
-def x3_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining for contrastive training — the third use
-    of the neighbor kernel after search (`x3_cosine_topk`) and label
-    vote (`x3_knn_label_vote`): for each anchor, the top-k most
-    SIMILAR vectors with a DIFFERENT label. Those near-miss negatives
-    are what make an embedding model's triplet loss informative
-    (random negatives are trivially separable); next to
-    `x4_contrastive_triplets` (which pairs within/without groups by
-    metadata) this mines the negatives from geometry.
-
-    Plan: {HARDNEG_NQ} anchor vectors broadcast against ONE corpus
-    scan, label-filtered BEFORE ranking (the wrong-label filter prunes
-    the rank input), per-anchor row_number windows. At scale the
-    corpus-side scan is the IVF-pruned probe (`x3_ann_ivf_topk`), same
-    ranking tail."""
-    emb = t(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "label", _as_double("embedding").alias("v"))
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < HARDNEG_NQ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("query_label"),
-            F.col("v").alias("qv"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_e6"), F.asc("neg_id"))
-    return (
-        e.crossJoin(q)
-        .filter(F.col("label") != F.col("query_label"))
-        .select(
-            "query_id",
-            "query_label",
-            F.col("vec_id").alias("neg_id"),
-            F.col("label").alias("neg_label"),
-            F.floor(_dot(F.col("v"), F.col("qv")) * 1_000_000)
-            .cast("long")
-            .alias("score_e6"),
-        )
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= HARDNEG_K)
-        .select("query_id", "query_label", "rnk", "neg_id", "neg_label", "score_e6")
-        .orderBy("query_id", "rnk")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -84,7 +84,6 @@ def load_all() -> dict[str, RegisteredQuery]:
     import etl_generator_demo_spark.streaming.cdc  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r12  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r12b  # noqa: F401
-    import etl_generator_demo_spark.operators.cosine_threshold  # noqa: F401
     import etl_generator_demo_spark.operators.decontam  # noqa: F401
     import etl_generator_demo_spark.sources.txlog  # noqa: F401
 

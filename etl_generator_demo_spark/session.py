@@ -28,6 +28,7 @@ PARAMETERISED instead of constants —
 from __future__ import annotations
 
 import os
+from functools import lru_cache
 
 from pyspark.sql import SparkSession
 
@@ -84,6 +85,31 @@ def _default_conf() -> dict[str, str]:
 #: Materialized once at import for introspection/tests; get_spark()
 #: re-reads the environment so test fixtures can override per-process.
 DEFAULT_CONF: dict[str, str] = _default_conf()
+
+
+def column_memo(fn=None, *, maxsize=None):
+    """Memoize a function that builds a Column expression tree.
+
+    A higher-order-function expression (``transform``/``zip_with``/
+    ``aggregate`` with a Python lambda) costs ~20 py4j round trips to
+    build, and each query builds its DataFrame afresh. A Column is an
+    immutable value, so a tree built from fixed names and constants can
+    be reused across plans exactly like ``F.col("x")``: the memo runs
+    the same construction code once and serves that object afterwards,
+    so plans and results are identical to the unmemoized build. Memos
+    hold expression metadata, never data or results.
+
+    The memoized trees are handles into one JVM: they stay valid for
+    the life of the process under the one-SparkSession-per-process rule
+    above. A process that stops its SparkContext and starts another
+    must not reuse them.
+
+    ``@column_memo`` keeps every tree (keys are fixed names);
+    ``@column_memo(maxsize=512)`` bounds memos keyed by values, such
+    as literal query vectors."""
+    if fn is None:
+        return lru_cache(maxsize=maxsize)
+    return lru_cache(maxsize=maxsize)(fn)
 
 
 def get_spark(app_name: str = "etl-generator-demo-spark") -> SparkSession:

@@ -5,7 +5,9 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -56,11 +58,16 @@ def catalog(spark, sf_dir):
 
 
 @pytest.fixture
-def replace_table(sf_dir, tmp_path):
+def replace_table(sf_dir, tmp_path, monkeypatch):
     """``build(name, frame) -> dir``: a fixture directory under
     ``tmp_path`` whose tables are symlinks into ``sf_dir``, except
     ``name``, which is written from ``frame`` (the degenerate-input
-    fixtures: one table cut down, the rest untouched)."""
+    fixtures: one table cut down, the rest untouched). Each such
+    directory is a new corpus fingerprint, so the indexes built over it
+    go to a cache under ``tmp_path`` and are deleted with it."""
+    from etl_generator_demo_spark.operators import ann_index
+
+    monkeypatch.setattr(ann_index, "INDEX_ROOT", str(tmp_path / ".index_cache"))
 
     def build(name, frame):
         from etl_generator_demo_spark.catalog import TABLES

@@ -1,5 +1,6 @@
-"""Planted pins for the ball-bounded exact cosine-threshold index
-(operators/cosine_threshold.py, round 14).
+"""Planted pins for the persisted ANN indexes (operators/ann_index.py):
+the ball-bounded exact cosine-threshold index and the filtered-search
+sweep.
 
 The oracle gate proves indexed == brute-force on the fixtures; these
 tests prove (a) the ball bound's EXACTNESS invariant on data where
@@ -69,7 +70,7 @@ def _brute_pairs(spark, path, queries, tau_e6, exclude_ids=()):
 def test_exactness_on_clustered_corpus_list_path(spark, tmp_path):
     """List-queries (static pruning) path returns exactly the brute
     hit set on a clustered corpus where pruning fires."""
-    from etl_generator_demo_spark.operators.cosine_threshold import (
+    from etl_generator_demo_spark.operators.ann_index import (
         cosine_threshold_join,
         ensure_cosine_ivf_index,
     )
@@ -108,7 +109,7 @@ def test_exactness_on_clustered_corpus_list_path(spark, tmp_path):
 def test_exactness_dataframe_path_matches_list_path(spark, tmp_path):
     """DataFrame-queries (DPP) path and list-queries (static) path
     return identical pair sets — and both equal brute force."""
-    from etl_generator_demo_spark.operators.cosine_threshold import (
+    from etl_generator_demo_spark.operators.ann_index import (
         cosine_threshold_join,
     )
 
@@ -143,7 +144,7 @@ def test_exactness_dataframe_path_matches_list_path(spark, tmp_path):
 def test_radii_cover_every_member(spark, tmp_path):
     """Index invariant the exactness proof rests on: every vector's
     normalized distance to its list centroid is <= the stored radius."""
-    from etl_generator_demo_spark.operators.cosine_threshold import (
+    from etl_generator_demo_spark.operators.ann_index import (
         ensure_cosine_ivf_index,
     )
 
@@ -163,7 +164,7 @@ def test_radii_cover_every_member(spark, tmp_path):
 def test_zero_norm_vectors_never_hit(spark, tmp_path):
     """A zero vector in the corpus (NULL cosine under try_divide) is
     dropped by the hit filter, exactly as the brute tier drops it."""
-    from etl_generator_demo_spark.operators.cosine_threshold import (
+    from etl_generator_demo_spark.operators.ann_index import (
         cosine_threshold_join,
     )
 
@@ -179,7 +180,7 @@ def test_empty_qualification_returns_empty(spark, tmp_path):
     """A query orthogonal to every cluster at an unreachable tau
     qualifies no list on a tight corpus — static path must return an
     empty (not failing) relation."""
-    from etl_generator_demo_spark.operators.cosine_threshold import (
+    from etl_generator_demo_spark.operators.ann_index import (
         cosine_threshold_join,
     )
 
@@ -196,7 +197,7 @@ def test_empty_qualification_returns_empty(spark, tmp_path):
 def test_static_path_plan_has_literal_partition_filter(spark, tmp_path):
     """The list-queries path prunes with a LITERAL ivf_list IN (...)
     partition filter (no corpus-wide scan, no DPP dependency)."""
-    from etl_generator_demo_spark.operators.cosine_threshold import (
+    from etl_generator_demo_spark.operators.ann_index import (
         cosine_threshold_join,
     )
 
@@ -220,7 +221,7 @@ def test_exact_topk_indexed_matches_brute_and_prunes(spark, tmp_path):
     clusters' balls)."""
     import numpy as np
 
-    from etl_generator_demo_spark.operators.cosine_threshold import (
+    from etl_generator_demo_spark.operators.ann_index import (
         ensure_cosine_ivf_index,
         exact_topk_indexed,
     )
@@ -255,7 +256,7 @@ def test_exact_topk_indexed_matches_brute_and_prunes(spark, tmp_path):
 def test_exact_topk_indexed_small_head_falls_back_exact(spark, tmp_path):
     """k larger than the nearest list: phase 1 underfills, s drops to
     -1, phase 2 scans all qualified lists — still the exact answer."""
-    from etl_generator_demo_spark.operators.cosine_threshold import (
+    from etl_generator_demo_spark.operators.ann_index import (
         exact_topk_indexed,
     )
     from etl_generator_demo_spark.operators.similarity import brute_force_topk
@@ -287,7 +288,7 @@ def test_randomized_differential_exactness(spark, tmp_path):
     gate sees it."""
     import random
 
-    from etl_generator_demo_spark.operators.cosine_threshold import (
+    from etl_generator_demo_spark.operators.ann_index import (
         cosine_threshold_join,
     )
 
@@ -332,11 +333,10 @@ def test_randomized_differential_exactness(spark, tmp_path):
 
 def test_clustered_radius_search_prunes_and_matches_brute(spark, sf_dir):
     """Ball-bound pruning must actually FIRE on the derived clustered
-    corpus (lists_read < lists_total — the r15 probe-only evidence,
-    now in-plan) and the pruned hit set must equal the brute-force
+    corpus (lists_read < lists_total) and the pruned hit set must equal the brute-force
     answer over the same derived corpus exactly (pruning is provably
     lossless)."""
-    from etl_generator_demo_spark.operators.cosine_threshold import (
+    from etl_generator_demo_spark.operators.ann_index import (
         CLUSTERED_TAU_E6,
         clustered_corpus,
         ensure_cosine_ivf_index,
@@ -383,3 +383,26 @@ def test_clustered_radius_search_prunes_and_matches_brute(spark, sf_dir):
         .collect()
     }
     assert {(r["vec_id"], r["cos_e6"]) for r in got} == brute
+
+
+def test_postfilter_sweep_planted_selectivity(spark, tmp_path):
+    """8 vectors, 2 labels interleaved by similarity to the anchors:
+    recall must be non-decreasing in the multiplier, candidates kept
+    never exceed k*m, and every kept candidate passes the filter
+    (recall10_sum <= n_candidates_kept <= true filtered top-k)."""
+    from etl_generator_demo_spark.operators.ann_index import (
+        x3_filtered_topk_postfilter_sweep,
+    )
+
+    rows = [(i, [1.0 - i * 0.1, i * 0.1], i % 2) for i in range(8)]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
+    out = {r["multiplier"]: r for r in x3_filtered_topk_postfilter_sweep(spark, str(tmp_path)).collect()}
+    assert set(out) == {1, 2, 4}
+    last = -1
+    for m in (1, 2, 4):
+        r = out[m]
+        assert r["recall10_sum"] >= last
+        last = r["recall10_sum"]
+        assert r["recall10_sum"] <= r["n_candidates_kept"]

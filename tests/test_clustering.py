@@ -201,3 +201,88 @@ def test_dim_covariance_exactness_and_psd_diag(spark, sf_dir):
             assert cov_num >= 0
     d = M.shape[1]
     assert len(got) == d * (d + 1) // 2
+
+
+def test_ivf_staleness_audit_consistency(spark, sf_dir):
+    """Contracts: occupancy partitions the corpus (sum n_old+n_new ==
+    |vectors|), retrain gain is non-negative (centroids trained on
+    everything cannot have higher mean cost than centroids trained on
+    a subset — Lloyd monotonicity doesn't guarantee this in general,
+    but with shared seeding and the full population it holds on the
+    fixture and is the number the audit exists to watch), and the
+    deciles are sized 9:1."""
+    from etl_generator_demo_spark.operators.relational import t
+    from etl_generator_demo_spark.operators.clustering import (
+        x3_ivf_staleness_audit,
+    )
+
+    rows = x3_ivf_staleness_audit(spark, sf_dir).collect()
+    assert rows
+    n_all = t(spark, sf_dir, "embeddings").count()
+    assert sum(r["n_old"] + r["n_new"] for r in rows) == n_all
+    n_new_total = sum(r["n_new"] for r in rows)
+    assert abs(n_new_total - n_all // 10) <= 1
+    gains = {r["retrain_gain_e6"] for r in rows}
+    assert len(gains) == 1  # constant column
+    for r in rows:
+        if r["n_old"] and r["n_new"]:
+            assert r["growth_e6"] == r["n_new"] * 1_000_000 // r["n_old"]
+        assert r["mean_qerr_old"] is None or r["mean_qerr_old"] >= 0
+
+@pytest.mark.slow
+def test_kmeans_k_sweep_planted_elbow(spark, tmp_path):
+    """8 distinct points: SSE is non-increasing in k, hits EXACTLY 0
+    once k >= n (every point seeds its own cluster), and the non-empty
+    count saturates at n."""
+    from etl_generator_demo_spark.operators.clustering import (
+        x3_kmeans_k_sweep,
+    )
+
+    rows = [
+        (0, [100.0, 0.0], 0),
+        (1, [101.0, 1.0], 0),
+        (2, [99.0, 2.0], 0),
+        (3, [102.0, 0.5], 0),
+        (4, [0.0, 100.0], 1),
+        (5, [1.0, 101.0], 1),
+        (6, [2.0, 99.0], 1),
+        (7, [0.5, 102.0], 1),
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
+    out = {r["k"]: r for r in x3_kmeans_k_sweep(spark, str(tmp_path)).collect()}
+    assert set(out) == {2, 4, 8, 16}
+    sses = [out[k]["sse_q_total"] for k in (2, 4, 8, 16)]
+    assert sses == sorted(sses, reverse=True)
+    assert out[8]["sse_q_total"] == 0 and out[16]["sse_q_total"] == 0
+    assert out[8]["n_nonempty"] == 8 and out[16]["n_nonempty"] == 8
+    assert out[2]["n_nonempty"] == 2
+
+def test_pq_seed_vectors_self_encode(spark, sf_dir):
+    """Each codebook seed vector must encode to its own code in every
+    subspace with zero reconstruction error."""
+    import etl_generator_demo_spark.operators.clustering as cl
+    from etl_generator_demo_spark.registry import load_all
+
+    emb = cl._quantized(spark, sf_dir)
+    seed = (
+        emb.withColumn("h", F.md5(F.col("vec_id").cast("string")))
+        .orderBy("h", "vec_id")
+        .limit(cl.PQ_K)
+        .collect()
+    )
+    out = {
+        r.vec_id: r
+        for r in load_all()["x3_pq_codes"].fn(spark, sf_dir).collect()
+    }
+    for j, s in enumerate(seed):
+        row = out[s.vec_id]
+        assert row.recon_err == 0, s.vec_id
+        assert row.codes_csv == ",".join([str(j)] * cl.PQ_M)
+    # every code in range, errors non-negative
+    for r in out.values():
+        codes = [int(c) for c in r.codes_csv.split(",")]
+        assert len(codes) == cl.PQ_M
+        assert all(0 <= c < cl.PQ_K for c in codes)
+        assert r.recon_err >= 0

@@ -5,7 +5,11 @@ tools/oracle_check.py and the driver's gate)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CANARIES = [
     "q1_pricing_summary",        # scan + grouped agg
@@ -50,7 +54,7 @@ def duck(sf_dir):
 def test_oracle_parity(name, spark, sf_dir, duck):
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from oracle_check import canon  # driver-faithful: dtype-exact, rejects arrays
 
     from etl_generator_demo_spark.registry import load_all

@@ -11,10 +11,12 @@ been flagged before the reseed caught it.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 import oracle_lint as OL
 
@@ -111,7 +113,7 @@ def test_suggestions_steer_to_scaled_bigint(monkeypatch):
     exact respelling)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from oracle_lint import scan_oracle, suggest_rewrite
 
     (s,) = scan_oracle("SELECT ROUND(SUM(a * (1 - b)), 2) AS r FROM t", set())

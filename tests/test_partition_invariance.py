@@ -22,9 +22,6 @@ def _sample() -> list[str]:
     """Every current-round registration (pulled from the probe
     contract so the list cannot go stale) + this round's rewrites +
     one standing representative per execution shape."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.scaling_probe import ROUND_REGISTRATIONS
 
     current = ROUND_REGISTRATIONS[max(ROUND_REGISTRATIONS)]

@@ -9,9 +9,12 @@ disambiguate.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 from plan_audit import _window_is_partitioned, unbounded_global_windows
 

@@ -5,35 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def test_pq_seed_vectors_self_encode(spark, sf_dir):
-    """Each codebook seed vector must encode to its own code in every
-    subspace with zero reconstruction error."""
-    import etl_generator_demo_spark.operators.clustering as cl
-    from etl_generator_demo_spark.registry import load_all
-
-    emb = cl._quantized(spark, sf_dir)
-    seed = (
-        emb.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(cl.PQ_K)
-        .collect()
-    )
-    out = {
-        r.vec_id: r
-        for r in load_all()["x3_pq_codes"].fn(spark, sf_dir).collect()
-    }
-    for j, s in enumerate(seed):
-        row = out[s.vec_id]
-        assert row.recon_err == 0, s.vec_id
-        assert row.codes_csv == ",".join([str(j)] * cl.PQ_M)
-    # every code in range, errors non-negative
-    for r in out.values():
-        codes = [int(c) for c in r.codes_csv.split(",")]
-        assert len(codes) == cl.PQ_M
-        assert all(0 <= c < cl.PQ_K for c in codes)
-        assert r.recon_err >= 0
-
-
 def test_containment_detects_embedded_document(spark):
     """A short doc fully quoted inside a long one: containment ~1 in one
     direction only, Jaccard small."""

@@ -5,8 +5,6 @@ cases the rewrites touch)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 
 def _write_documents(spark, path, rows):
     spark.createDataFrame(
@@ -75,43 +73,3 @@ def test_bpe_training_resumes_from_materialized_state():
     assert final == final2
 
 
-def test_matryoshka_cascade_prefix_sums_bit_exact(spark):
-    """The cascaded prefix folds (r16: the p=16 dot continues the p=8
-    partial) must be BIT-identical to fresh sequential folds over each
-    prefix — same op order, so the committed e6-floored hashes cannot
-    move."""
-    from etl_generator_demo_spark.operators.similarity import _dot
-
-    import random
-
-    rng = random.Random(7)
-    a = [rng.uniform(-1, 1) for _ in range(64)]
-    b = [rng.uniform(-1, 1) for _ in range(64)]
-    df = spark.createDataFrame(
-        [(a, b)], "va array<double>, vb array<double>"
-    )
-    prod = F.zip_with("va", "vb", lambda x, y: x * y)
-    df = df.withColumn("_p", prod)
-    # fresh folds
-    fresh = df.select(
-        *[
-            F.aggregate(
-                F.slice("_p", 1, c), F.lit(0.0), lambda s, v: s + v
-            ).alias(f"f{c}")
-            for c in (8, 16, 32, 64)
-        ]
-    ).first()
-    # cascaded folds (the query's spelling)
-    prev, prev_cut, cols = F.lit(0.0), 0, []
-    for c in (8, 16, 32, 64):
-        s = F.aggregate(
-            F.slice("_p", prev_cut + 1, c - prev_cut), prev, lambda s_, v: s_ + v
-        )
-        cols.append(s.alias(f"c{c}"))
-        prev, prev_cut = s, c
-    casc = df.select(*cols).first()
-    for c in (8, 16, 32, 64):
-        assert fresh[f"f{c}"] == casc[f"c{c}"]  # bit-exact, not approx
-    # and both equal the engine's canonical _dot on the full vector
-    full = df.select(_dot(F.col("va"), F.col("vb")).alias("d")).first()["d"]
-    assert full == casc["c64"]

@@ -1,10 +1,9 @@
 """Focused pins for the round-17 optimization changes: the session
 conf parameterisation fixes (r16 ADVICE). The ngram-Jaccard
-cardinality pins live with the overlap kernel in tests/test_dedup.py."""
+cardinality pins live with the overlap kernel in tests/test_dedup.py,
+the vector-family pins in tests/test_similarity.py."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 
 def test_shuffle_partitions_core_derived_when_env_unset(monkeypatch):
@@ -38,31 +37,6 @@ def test_sparkconf_passthrough_double_underscore_escape(monkeypatch):
     assert conf["spark.sql.join.preferSortMergeJoin"] == "false"
 
 
-def test_neardup_dedup_placement_row_identical(spark, sf_dir):
-    """r17 moved the cross-table candidate dedup AFTER the cosine
-    filter on the broadcast rejoin plan (output-sized distinct; the
-    shuffle plan keeps distinct-first). Duplicate pairs from different
-    LSH tables carry bit-identical cosines, so the two placements must
-    agree row-for-row — including the duplicate factor being fully
-    collapsed (no (vec_a, vec_b) appears twice)."""
-    from etl_generator_demo_spark.operators.similarity import (
-        embedding_neardup_pairs,
-    )
-
-    bc = sorted(
-        map(tuple, embedding_neardup_pairs(
-            spark, sf_dir, broadcast_vectors=True
-        ).collect())
-    )
-    sh = sorted(
-        map(tuple, embedding_neardup_pairs(
-            spark, sf_dir, broadcast_vectors=False
-        ).collect())
-    )
-    assert bc == sh and len(bc) > 0
-    assert len({(a, b) for a, b, _ in bc}) == len(bc)
-
-
 def test_schema_memo_serves_and_invalidates(spark, tmp_path):
     """r17 schema memo: the second read of an unchanged parquet path is
     served from the memo with an IDENTICAL schema; rewriting the path
@@ -93,68 +67,6 @@ def test_schema_memo_serves_and_invalidates(spark, tmp_path):
     c = read_parquet_known(spark, p)
     assert dict(c.dtypes)["v"] == "string" and "extra" in c.columns
     assert c.count() == 3
-
-
-def test_lit_double_array_bit_exact(spark):
-    """`lit_double_array` (one parsed `F.expr` round trip) must be
-    bit-identical to the per-element `F.lit` spelling for arbitrary
-    doubles, including denormals/extremes: Python repr round-trips the
-    IEEE value and Spark's `<text>D` literal parses correctly-rounded."""
-    import random
-    import struct
-
-    from etl_generator_demo_spark.operators.similarity import lit_double_array
-
-    rng = random.Random(17)
-    vals = [rng.uniform(-1e6, 1e6) for _ in range(64)] + [
-        0.1, -0.0, 1e-09, 5e-324, 1.7976931348623157e308, -3.141592653589793,
-    ]
-    row = (
-        spark.range(1)
-        .select(
-            F.array(*[F.lit(float(v)) for v in vals]).alias("a"),
-            lit_double_array(vals).alias("b"),
-        )
-        .first()
-    )
-    assert [struct.pack("d", x) for x in row.a] == [
-        struct.pack("d", x) for x in row.b
-    ]
-
-
-def test_memoized_expression_trees_reusable_across_frames(spark):
-    """The lru-cached named expression trees (_dot/_norm/cosine/
-    lsh_bucket_expr) are immutable values: the SAME cached Column must
-    produce identical results when bound to two different DataFrames,
-    and equal results to a freshly-built uncached tree."""
-    from etl_generator_demo_spark.operators.similarity import (
-        _dot,
-        _norm,
-        cosine,
-    )
-
-    df1 = spark.createDataFrame(
-        [(1, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0])], "id long, v array<double>, w array<double>"
-    )
-    df2 = spark.createDataFrame(
-        [(2, [0.5, -1.0, 2.5], [1.5, 0.0, -2.0])], "id long, v array<double>, w array<double>"
-    )
-    cached = cosine("v", "w")  # named -> cached tree
-    assert cached is cosine("v", "w")  # the memo actually serves
-    for df in (df1, df2):
-        a = df.select(cached.alias("c")).first()["c"]
-        b = df.select(
-            cosine(F.col("v"), F.col("w")).alias("c")
-        ).first()["c"]
-        assert a == b
-    # dot/norm named == column spellings
-    r = df1.select(
-        _dot("v", "w").alias("d1"),
-        _dot(F.col("v"), F.col("w")).alias("d2"),
-        _norm("v").alias("n1"),
-        _norm(F.col("v")).alias("n2"),
-    ).first()
-    assert r.d1 == r.d2 and r.n1 == r.n2
 
 
 def test_bpe_last_apply_skipped_rows_identical(spark):

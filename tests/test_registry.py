@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_registry_surface_does_not_shrink():
     """A lost module import would silently drop registered queries —
@@ -34,9 +38,6 @@ def test_driver_order_prioritizes_unproven_oracle_queries():
     (50 of 107 in r2). The ordering must put oracle-backed queries
     without a prior green CORRECTNESS row first and rows-only queries
     last, so every sampled slot produces a meaningful green row."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as ep
     from etl_generator_demo_spark.registry import load_all
 
@@ -63,13 +64,10 @@ def test_never_green_queries_form_the_sample_prefix():
     record so an ordering regression fails HERE, not a round later."""
     import glob
     import json
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as ep
 
     green: set[str] = set()
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for f in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         with open(f) as fh:
             for name, row in json.load(fh).items():
                 if (
@@ -107,11 +105,10 @@ def test_doc_counts_match_reality():
     import re
     import sys
 
-    sys.path.insert(0, "/root/repo")
     import bench
     from etl_generator_demo_spark.registry import load_all
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     import plan_audit
 
     reg = load_all()
@@ -136,7 +133,7 @@ def test_doc_counts_match_reality():
         )
 
     for doc in ("README.md", "COVERAGE.md", "SCALE.md"):
-        text = open(f"/root/repo/{doc}").read()
+        text = open(os.path.join(ROOT, doc)).read()
         for m in re.finditer(r"(\d+) headline quer", text):
             assert int(m.group(1)) == len(bench.HEADLINE), (
                 f"{doc} says '{m.group(0)}' but HEADLINE has "
@@ -163,9 +160,6 @@ def test_probe_covers_round_registrations():
     import json
     import os
     import re
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from etl_generator_demo_spark.registry import load_all
     from tools.scaling_probe import (
         PROBE_EXCLUDED,
@@ -239,9 +233,6 @@ def test_rewritten_queries_reenter_driver_sample():
     """A green driver row certifies the spelling that earned it: when
     an implementation is rewritten, the query must re-enter the 50-slot
     sample (bucket 4) so the NEW spelling earns a fresh row."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as ep
     from etl_generator_demo_spark.registry import load_all
 
@@ -287,16 +278,13 @@ def test_green_tier_samples_stalest_rounds_first():
     query re-earns a green within ~6 rounds of continuous code churn."""
     import glob
     import json
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as ep
     from etl_generator_demo_spark.registry import load_all
 
     reg = load_all()
     order = ep._driver_priority_order(reg)
     latest_round: dict[str, int] = {}
-    for rnd, path in enumerate(sorted(glob.glob("/root/repo/CORRECTNESS_r*.json"))):
+    for rnd, path in enumerate(sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")))):
         for name in json.load(open(path)):
             latest_round[name] = rnd
     rewritten = set(ep._REWRITTEN_SINCE_GREEN)
@@ -337,3 +325,37 @@ def test_round_named_operator_modules_only_shrink():
     )
     found = {os.path.basename(p) for p in glob.glob(os.path.join(ops, "*_r[0-9]*.py"))}
     assert found <= ROUND_NAMED_MODULES, sorted(found - ROUND_NAMED_MODULES)
+
+
+def test_no_hardcoded_checkout_path():
+    """Every script, test and the driver contract derives the checkout
+    from its own ``__file__``: a string literal naming an absolute
+    checkout of this project makes a second checkout (an A/B copy of
+    the parent commit) silently import and test the first one's
+    package."""
+    import ast
+    import glob
+
+    def names_checkout(literal: str) -> bool:
+        parts = literal.split("/")
+        return any(
+            os.path.isfile(os.path.join("/".join(parts[:i]), "__spark_entry__.py"))
+            for i in range(2, len(parts) + 1)
+        )
+
+    files = [os.path.join(ROOT, "__spark_entry__.py")] + sorted(
+        glob.glob(os.path.join(ROOT, "tests", "*.py"))
+        + glob.glob(os.path.join(ROOT, "tools", "*.py"))
+    )
+    offenders = sorted(
+        {
+            (os.path.relpath(f, ROOT), node.value)
+            for f in files
+            for node in ast.walk(ast.parse(open(f, encoding="utf-8").read()))
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and node.value.startswith("/")
+            and names_checkout(node.value)
+        }
+    )
+    assert not offenders, offenders

@@ -61,26 +61,6 @@ def test_ann_subset_of_bruteforce_with_exact_scores(spark, sf_dir):
         assert r["cosine"] == exact[r["vec_id"]]
 
 
-def test_ivf_recall_and_exactness_at_full_probe(spark, sf_dir):
-    """IVF: probing ALL lists must equal brute force exactly; probing 4
-    of 16 keeps decent recall on uniform-random data."""
-    from pyspark.sql import functions as F
-
-    from etl_generator_demo_spark.operators.relational import t
-    from etl_generator_demo_spark.operators.similarity import build_ivf_index, ivf_topk
-
-    emb = t(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    base = emb.filter(F.col("vec_id") != 0)
-    assigned, centroids = build_ivf_index(base, n_lists=16)
-    truth = [r["vec_id"] for r in brute_force_topk(base, qv, k=10).collect()]
-    exact = [r["vec_id"] for r in ivf_topk(assigned, centroids, qv, k=10, n_probe=16).collect()]
-    assert exact == truth  # full probe == exact search
-    approx = {r["vec_id"] for r in ivf_topk(assigned, centroids, qv, k=10, n_probe=4).collect()}
-    recall = len(set(truth) & approx) / 10
-    assert recall >= 0.2, f"IVF recall@10 = {recall} (uniform data, 4/16 lists)"
-
-
 @pytest.mark.slow
 def test_allpairs_anchor_oracle_parity_and_bucketed_recall(spark, sf_dir):
     """The global all-pairs near-dup is deliberately NOT registered (its
@@ -366,3 +346,309 @@ def test_prefilter_where_reaches_the_pruned_scan(spark, sf_dir):
     ), scan_lines
     rows = df.collect()
     assert rows and all(r["label"] == 3 for r in rows)
+
+
+def test_vector_norm_audit_consistent_dims(spark, sf_dir):
+    from etl_generator_demo_spark.operators.similarity import x3_vector_norm_audit
+
+    out = x3_vector_norm_audit(spark, sf_dir).collect()
+    assert out
+    for r in out:
+        assert r["min_dims"] == r["max_dims"]  # fixture embeddings uniform
+        assert 0 <= r["min_qnorm2"] <= r["max_qnorm2"]
+        assert r["n_zero_vecs"] >= 0
+
+def test_vector_norm_audit_empty_array_is_null(spark, tmp_path):
+    """Empty-array contract: an empty embedding yields qnorm2 NULL (a
+    missing vector), never 0 (a zero vector) — pinned cross-engine
+    against the DuckDB oracle on the same degenerate fixture."""
+    import duckdb
+
+    from etl_generator_demo_spark.operators.similarity import x3_vector_norm_audit
+    from etl_generator_demo_spark.registry import load_all
+
+    rows = [
+        (1, [1.0, 2.0], 7),
+        (2, [], 7),
+        (3, [0.0, 0.0], 8),
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+    path = str(tmp_path / "embeddings.parquet")
+    df.write.mode("overwrite").parquet(path)
+    out = {
+        r["label"]: r
+        for r in x3_vector_norm_audit(spark, str(tmp_path)).collect()
+    }
+    a = out[7]
+    assert a["n_vecs"] == 2
+    assert a["n_zero_vecs"] == 0  # empty is NOT a zero vector
+    assert a["min_qnorm2"] == a["max_qnorm2"] == 1000**2 + 2000**2
+    assert (a["min_dims"], a["max_dims"]) == (0, 2)
+    b = out[8]
+    assert b["n_zero_vecs"] == 1 and b["min_qnorm2"] == 0
+    # cross-engine parity on the degenerate fixture
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS "
+        f"SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    sql = load_all()["x3_vector_norm_audit"].oracle
+    for lbl, n_zero, mn in con.execute(
+        f"SELECT label, n_zero_vecs, min_qnorm2 FROM ({sql}) ORDER BY label"
+    ).fetchall():
+        r = out[lbl]
+        assert r["n_zero_vecs"] == n_zero
+        assert r["min_qnorm2"] == mn
+
+def test_sq_bits_sweep_closed_form_and_monotone(spark, tmp_path):
+    """Hand-computable corpus: v=[1.0, 0.5], max_abs=1. bits=2 (L=1):
+    q=[1,0] -> dq=[1.0,0.0] -> SSE=0.25 exactly (sum_sse_e6=250000).
+    More bits must never increase distortion or decrease recall."""
+    from etl_generator_demo_spark.operators.similarity import (
+        x3_sq_bits_sweep,
+    )
+
+    rows = [
+        (0, [1.0, 0.5], 0),
+        (1, [0.5, 1.0], 0),
+        (2, [-1.0, 0.25], 1),
+        (3, [0.25, -1.0], 1),
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
+    out = {r["bits"]: r for r in x3_sq_bits_sweep(spark, str(tmp_path)).collect()}
+    assert set(out) == {2, 4, 8}
+    assert out[2]["n_vectors"] == 4
+    # vec 0: err [0, .5] -> .25; vec 1 symmetric -> .25;
+    # vec 2: q=floor([-1, .25])=[-1, 0] -> err [0, .25] -> .0625; vec 3 same
+    assert out[2]["sum_sse_e6"] == 250_000 * 2 + 62_500 * 2
+    assert out[2]["sum_sse_e6"] >= out[4]["sum_sse_e6"] >= out[8]["sum_sse_e6"]
+    assert out[2]["recall10_sum"] <= out[4]["recall10_sum"] <= out[8]["recall10_sum"]
+
+def test_hard_negative_mining_planted_geometry(spark, tmp_path):
+    """Query 0 (label 0): wrong-label vectors ranked by dot — [0.75,
+    0.25] before [0.5, 0.5]; the same-label [0, 1] never appears.
+    (Values chosen exactly float32-representable.)"""
+    from etl_generator_demo_spark.operators.similarity import (
+        x3_hard_negative_mining,
+    )
+
+    rows = [
+        (0, [1.0, 0.0], 0),
+        (1, [0.75, 0.25], 1),
+        (2, [0.5, 0.5], 1),
+        (3, [0.0, 1.0], 0),
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
+    got = [
+        (r["rnk"], r["neg_id"], r["neg_label"], r["score_e6"])
+        for r in x3_hard_negative_mining(spark, str(tmp_path)).collect()
+        if r["query_id"] == 0
+    ]
+    assert got == [(1, 1, 1, 750_000), (2, 2, 1, 500_000)]
+
+def test_matryoshka_cascade_prefix_sums_bit_exact(spark):
+    """The cascaded prefix folds of the Matryoshka sweep (the p=16 dot
+    continues the p=8 partial) must be BIT-identical to fresh sequential folds over each
+    prefix — same op order, so the committed e6-floored hashes cannot
+    move."""
+    from etl_generator_demo_spark.operators.similarity import _dot
+
+    import random
+
+    rng = random.Random(7)
+    a = [rng.uniform(-1, 1) for _ in range(64)]
+    b = [rng.uniform(-1, 1) for _ in range(64)]
+    df = spark.createDataFrame(
+        [(a, b)], "va array<double>, vb array<double>"
+    )
+    prod = F.zip_with("va", "vb", lambda x, y: x * y)
+    df = df.withColumn("_p", prod)
+    # fresh folds
+    fresh = df.select(
+        *[
+            F.aggregate(
+                F.slice("_p", 1, c), F.lit(0.0), lambda s, v: s + v
+            ).alias(f"f{c}")
+            for c in (8, 16, 32, 64)
+        ]
+    ).first()
+    # cascaded folds (the query's spelling)
+    prev, prev_cut, cols = F.lit(0.0), 0, []
+    for c in (8, 16, 32, 64):
+        s = F.aggregate(
+            F.slice("_p", prev_cut + 1, c - prev_cut), prev, lambda s_, v: s_ + v
+        )
+        cols.append(s.alias(f"c{c}"))
+        prev, prev_cut = s, c
+    casc = df.select(*cols).first()
+    for c in (8, 16, 32, 64):
+        assert fresh[f"f{c}"] == casc[f"c{c}"]  # bit-exact, not approx
+    # and both equal the engine's canonical _dot on the full vector
+    full = df.select(_dot(F.col("va"), F.col("vb")).alias("d")).first()["d"]
+    assert full == casc["c64"]
+
+def test_neardup_dedup_placement_row_identical(spark, sf_dir):
+    """The cross-table candidate dedup runs AFTER the cosine filter on
+    the broadcast rejoin plan (output-sized distinct; the shuffle plan
+    keeps distinct-first). Duplicate pairs from different
+    LSH tables carry bit-identical cosines, so the two placements must
+    agree row-for-row — including the duplicate factor being fully
+    collapsed (no (vec_a, vec_b) appears twice)."""
+    from etl_generator_demo_spark.operators.similarity import (
+        embedding_neardup_pairs,
+    )
+
+    bc = sorted(
+        map(tuple, embedding_neardup_pairs(
+            spark, sf_dir, broadcast_vectors=True
+        ).collect())
+    )
+    sh = sorted(
+        map(tuple, embedding_neardup_pairs(
+            spark, sf_dir, broadcast_vectors=False
+        ).collect())
+    )
+    assert bc == sh and len(bc) > 0
+    assert len({(a, b) for a, b, _ in bc}) == len(bc)
+
+def test_lit_double_array_bit_exact(spark):
+    """`lit_double_array` (one parsed `F.expr` round trip) must be
+    bit-identical to the per-element `F.lit` spelling for arbitrary
+    doubles, including denormals/extremes: Python repr round-trips the
+    IEEE value and Spark's `<text>D` literal parses correctly-rounded."""
+    import random
+    import struct
+
+    from etl_generator_demo_spark.operators.similarity import lit_double_array
+
+    rng = random.Random(17)
+    vals = [rng.uniform(-1e6, 1e6) for _ in range(64)] + [
+        0.1, -0.0, 1e-09, 5e-324, 1.7976931348623157e308, -3.141592653589793,
+    ]
+    row = (
+        spark.range(1)
+        .select(
+            F.array(*[F.lit(float(v)) for v in vals]).alias("a"),
+            lit_double_array(vals).alias("b"),
+        )
+        .first()
+    )
+    assert [struct.pack("d", x) for x in row.a] == [
+        struct.pack("d", x) for x in row.b
+    ]
+
+def test_memoized_expression_trees_reusable_across_frames(spark):
+    """The column_memo'd named expression trees (_dot/_norm/cosine/
+    lsh_bucket_expr) are immutable values: the SAME cached Column must
+    produce identical results when bound to two different DataFrames,
+    and equal results to a freshly-built uncached tree."""
+    from etl_generator_demo_spark.operators.similarity import (
+        _dot,
+        _norm,
+        cosine,
+    )
+
+    df1 = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0])], "id long, v array<double>, w array<double>"
+    )
+    df2 = spark.createDataFrame(
+        [(2, [0.5, -1.0, 2.5], [1.5, 0.0, -2.0])], "id long, v array<double>, w array<double>"
+    )
+    cached = cosine("v", "w")  # named -> cached tree
+    assert cached is cosine("v", "w")  # the memo actually serves
+    for df in (df1, df2):
+        a = df.select(cached.alias("c")).first()["c"]
+        b = df.select(
+            cosine(F.col("v"), F.col("w")).alias("c")
+        ).first()["c"]
+        assert a == b
+    # dot/norm named == column spellings
+    r = df1.select(
+        _dot("v", "w").alias("d1"),
+        _dot(F.col("v"), F.col("w")).alias("d2"),
+        _norm("v").alias("n1"),
+        _norm(F.col("v")).alias("n2"),
+    ).first()
+    assert r.d1 == r.d2 and r.n1 == r.n2
+
+
+# ---------------------------------------------------------------------------
+# Degenerate input: every registered query that reads `embeddings`, on the
+# sf0.001 fixture with that table cut to zero rows, against its oracle.
+# ---------------------------------------------------------------------------
+
+EMBEDDINGS_QUERIES = (
+    "x3_ann_batch_probe",
+    "x3_ann_batch_topk",
+    "x3_ann_ivf_topk",
+    "x3_ann_lsh_multiprobe",
+    "x3_ann_lsh_probe",
+    "x3_ann_lsh_topk",
+    "x3_ann_recall_curve",
+    "x3_cosine_topk",
+    "x3_dim_covariance",
+    "x3_exact_topk_indexed",
+    "x3_filtered_topk_postfilter_sweep",
+    "x3_filtered_topk_prefilter",
+    "x3_hard_negative_mining",
+    "x3_ivf_nprobe_recall_sweep",
+    "x3_ivf_staleness_audit",
+    "x3_ivfpq_adc_topk",
+    "x3_kmeans_clusters",
+    "x3_kmeans_k_sweep",
+    "x3_knn_label_vote",
+    "x3_label_centroids",
+    "x3_label_purity",
+    "x3_matryoshka_prefix_recall",
+    "x3_mmr_diversified_topk",
+    "x3_mrl_prefix_recall",
+    "x3_neardup_clusters",
+    "x3_neardup_lsh_bucketed",
+    "x3_pc1_projection_histogram",
+    "x3_pca_power_iteration",
+    "x3_pq_codes",
+    "x3_prefilter_selectivity_sweep",
+    "x3_quantize_int8",
+    "x3_radius_search",
+    "x3_radius_search_clustered",
+    "x3_random_projection",
+    "x3_semantic_decontam",
+    "x3_semantic_decontam_fixed_eval",
+    "x3_semantic_decontam_indexed",
+    "x3_semantic_decontam_recall",
+    "x3_semdedup_keep",
+    "x3_silhouette_centroid",
+    "x3_sq_bits_sweep",
+    "x3_vector_norm_audit",
+    "x4_decontam_funnel",
+    "x4_decontam_tier_overlap",
+    "x4_rrf_hybrid_topk",
+    "x5_av_segment_alignment",
+    "x5_crossmodal_clip_gate",
+    "x5_keyframe_selection",
+    "x5_media_curation_attrition",
+    "x5_scene_cut_detection",
+)
+
+
+def test_embeddings_query_list_is_complete():
+    from etl_generator_demo_spark.registry import load_all
+
+    readers = {n for n, rq in load_all().items() if "embeddings" in rq.oracle}
+    assert readers == set(EMBEDDINGS_QUERIES)
+
+
+@pytest.mark.parametrize("name", EMBEDDINGS_QUERIES)
+def test_empty_embeddings_match_oracle(
+    spark, sf_dir, replace_table, oracle_mismatches, name
+):
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    d = replace_table("embeddings", emb.limit(0))
+    bad = oracle_mismatches(d, [name])
+    assert not bad, bad

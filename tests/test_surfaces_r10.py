@@ -10,7 +10,6 @@ from etl_generator_demo_spark.operators.surfaces_r10 import (
 )
 from etl_generator_demo_spark.operators.surfaces_r10b import (
     _morton_expr,
-    x3_vector_norm_audit,
     x4_bpe_encode_corpus,
     x4_curriculum_shards,
     x4_ndcg_eval,
@@ -134,15 +133,6 @@ def test_curriculum_shards_balanced(spark):
 # vector norm audit
 # ---------------------------------------------------------------------------
 
-def test_vector_norm_audit_consistent_dims(spark):
-    out = x3_vector_norm_audit(spark, SF).collect()
-    assert out
-    for r in out:
-        assert r["min_dims"] == r["max_dims"]  # fixture embeddings uniform
-        assert 0 <= r["min_qnorm2"] <= r["max_qnorm2"]
-        assert r["n_zero_vecs"] >= 0
-
-
 # ---------------------------------------------------------------------------
 # NDCG
 # ---------------------------------------------------------------------------
@@ -203,45 +193,3 @@ def test_morton_is_injective_on_the_grid(px, py):
     assert 0 <= z <= 65535
 
 
-def test_vector_norm_audit_empty_array_is_null(spark, tmp_path):
-    """Empty-array contract: an empty embedding yields qnorm2 NULL (a
-    missing vector), never 0 (a zero vector) — pinned cross-engine
-    against the DuckDB oracle on the same degenerate fixture."""
-    import duckdb
-
-    from etl_generator_demo_spark.registry import load_all
-
-    rows = [
-        (1, [1.0, 2.0], 7),
-        (2, [], 7),
-        (3, [0.0, 0.0], 8),
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    path = str(tmp_path / "embeddings.parquet")
-    df.write.mode("overwrite").parquet(path)
-    out = {
-        r["label"]: r
-        for r in x3_vector_norm_audit(spark, str(tmp_path)).collect()
-    }
-    a = out[7]
-    assert a["n_vecs"] == 2
-    assert a["n_zero_vecs"] == 0  # empty is NOT a zero vector
-    assert a["min_qnorm2"] == a["max_qnorm2"] == 1000**2 + 2000**2
-    assert (a["min_dims"], a["max_dims"]) == (0, 2)
-    b = out[8]
-    assert b["n_zero_vecs"] == 1 and b["min_qnorm2"] == 0
-    # cross-engine parity on the degenerate fixture
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS "
-        f"SELECT * FROM read_parquet('{path}/*.parquet')"
-    )
-    sql = load_all()["x3_vector_norm_audit"].oracle
-    for lbl, n_zero, mn in con.execute(
-        f"SELECT label, n_zero_vecs, min_qnorm2 FROM ({sql}) ORDER BY label"
-    ).fetchall():
-        r = out[lbl]
-        assert r["n_zero_vecs"] == n_zero
-        assert r["min_qnorm2"] == mn

@@ -275,33 +275,6 @@ def test_doremi_weights_sum_exact_and_monotone(spark):
             assert r["new_w_e6"] > DOREMI_SCALE // n - 1
 
 
-def test_ivf_staleness_audit_consistency(spark):
-    """Contracts: occupancy partitions the corpus (sum n_old+n_new ==
-    |vectors|), retrain gain is non-negative (centroids trained on
-    everything cannot have higher mean cost than centroids trained on
-    a subset — Lloyd monotonicity doesn't guarantee this in general,
-    but with shared seeding and the full population it holds on the
-    fixture and is the number the audit exists to watch), and the
-    deciles are sized 9:1."""
-    from etl_generator_demo_spark.operators.relational import t
-    from etl_generator_demo_spark.operators.surfaces_r11 import (
-        x3_ivf_staleness_audit,
-    )
-
-    rows = x3_ivf_staleness_audit(spark, SF).collect()
-    assert rows
-    n_all = t(spark, SF, "embeddings").count()
-    assert sum(r["n_old"] + r["n_new"] for r in rows) == n_all
-    n_new_total = sum(r["n_new"] for r in rows)
-    assert abs(n_new_total - n_all // 10) <= 1
-    gains = {r["retrain_gain_e6"] for r in rows}
-    assert len(gains) == 1  # constant column
-    for r in rows:
-        if r["n_old"] and r["n_new"]:
-            assert r["growth_e6"] == r["n_new"] * 1_000_000 // r["n_old"]
-        assert r["mean_qerr_old"] is None or r["mean_qerr_old"] >= 0
-
-
 def test_bloom_fpr_sweep_monotone_and_sound(spark):
     """A Bloom filter can only over-admit: zero false negatives at
     every width; false positives shrink (weakly) as m grows; pass set

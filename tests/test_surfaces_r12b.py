@@ -82,33 +82,6 @@ def test_scene_cut_segments_planted_clip(spark, tmp_path):
     ) == (0, 3, 1, 2, 0, 2_000_000)
 
 
-def test_sq_bits_sweep_closed_form_and_monotone(spark, tmp_path):
-    """Hand-computable corpus: v=[1.0, 0.5], max_abs=1. bits=2 (L=1):
-    q=[1,0] -> dq=[1.0,0.0] -> SSE=0.25 exactly (sum_sse_e6=250000).
-    More bits must never increase distortion or decrease recall."""
-    from etl_generator_demo_spark.operators.surfaces_r12b import (
-        x3_sq_bits_sweep,
-    )
-
-    rows = [
-        (0, [1.0, 0.5], 0),
-        (1, [0.5, 1.0], 0),
-        (2, [-1.0, 0.25], 1),
-        (3, [0.25, -1.0], 1),
-    ]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-    out = {r["bits"]: r for r in x3_sq_bits_sweep(spark, str(tmp_path)).collect()}
-    assert set(out) == {2, 4, 8}
-    assert out[2]["n_vectors"] == 4
-    # vec 0: err [0, .5] -> .25; vec 1 symmetric -> .25;
-    # vec 2: q=floor([-1, .25])=[-1, 0] -> err [0, .25] -> .0625; vec 3 same
-    assert out[2]["sum_sse_e6"] == 250_000 * 2 + 62_500 * 2
-    assert out[2]["sum_sse_e6"] >= out[4]["sum_sse_e6"] >= out[8]["sum_sse_e6"]
-    assert out[2]["recall10_sum"] <= out[4]["recall10_sum"] <= out[8]["recall10_sum"]
-
-
 @pytest.mark.slow
 def test_bin_width_sweep_true_pairs_invariant(spark, tmp_path):
     """3 events for one user at t=0s, 30min, 90min: within-1h ordered
@@ -208,37 +181,6 @@ def test_salt_factor_sweep_closed_form(spark, tmp_path):
         assert out[s]["replication_rows"] == 2 * s
 
 
-@pytest.mark.slow
-def test_kmeans_k_sweep_planted_elbow(spark, tmp_path):
-    """8 distinct points: SSE is non-increasing in k, hits EXACTLY 0
-    once k >= n (every point seeds its own cluster), and the non-empty
-    count saturates at n."""
-    from etl_generator_demo_spark.operators.surfaces_r12b import (
-        x3_kmeans_k_sweep,
-    )
-
-    rows = [
-        (0, [100.0, 0.0], 0),
-        (1, [101.0, 1.0], 0),
-        (2, [99.0, 2.0], 0),
-        (3, [102.0, 0.5], 0),
-        (4, [0.0, 100.0], 1),
-        (5, [1.0, 101.0], 1),
-        (6, [2.0, 99.0], 1),
-        (7, [0.5, 102.0], 1),
-    ]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-    out = {r["k"]: r for r in x3_kmeans_k_sweep(spark, str(tmp_path)).collect()}
-    assert set(out) == {2, 4, 8, 16}
-    sses = [out[k]["sse_q_total"] for k in (2, 4, 8, 16)]
-    assert sses == sorted(sses, reverse=True)
-    assert out[8]["sse_q_total"] == 0 and out[16]["sse_q_total"] == 0
-    assert out[8]["n_nonempty"] == 8 and out[16]["n_nonempty"] == 8
-    assert out[2]["n_nonempty"] == 2
-
-
 def test_epochs_repeat_audit_closed_form(spark, tmp_path):
     """One lang with supply 10 tokens: en weight 0.5 x budget 80000
     -> alloc 40000 -> epochs 4000x, flagged; effective epochs saturate
@@ -261,31 +203,6 @@ def test_epochs_repeat_audit_closed_form(spark, tmp_path):
     # decay saturation: eff -> 1 + R*
     assert r["eff_epochs_e6"] == (1 + EPOCHS_R_STAR) * 1_000_000
     assert r["effective_tokens"] == 10 * (1 + EPOCHS_R_STAR)
-
-
-def test_hard_negative_mining_planted_geometry(spark, tmp_path):
-    """Query 0 (label 0): wrong-label vectors ranked by dot — [0.75,
-    0.25] before [0.5, 0.5]; the same-label [0, 1] never appears.
-    (Values chosen exactly float32-representable.)"""
-    from etl_generator_demo_spark.operators.surfaces_r12b import (
-        x3_hard_negative_mining,
-    )
-
-    rows = [
-        (0, [1.0, 0.0], 0),
-        (1, [0.75, 0.25], 1),
-        (2, [0.5, 0.5], 1),
-        (3, [0.0, 1.0], 0),
-    ]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-    got = [
-        (r["rnk"], r["neg_id"], r["neg_label"], r["score_e6"])
-        for r in x3_hard_negative_mining(spark, str(tmp_path)).collect()
-        if r["query_id"] == 0
-    ]
-    assert got == [(1, 1, 1, 750_000), (2, 2, 1, 500_000)]
 
 
 @pytest.mark.slow
@@ -379,29 +296,6 @@ def test_media_attrition_planted_funnel(spark, tmp_path):
         for r in x5_media_curation_attrition(spark, str(tmp_path)).collect()
     ]
     assert got == [(1, 14), (2, 12), (3, 10), (4, 10)]
-
-
-def test_postfilter_sweep_planted_selectivity(spark, tmp_path):
-    """8 vectors, 2 labels interleaved by similarity to the anchors:
-    recall must be non-decreasing in the multiplier, candidates kept
-    never exceed k*m, and every kept candidate passes the filter
-    (recall10_sum <= n_candidates_kept <= true filtered top-k)."""
-    from etl_generator_demo_spark.operators.ann_index import (
-        x3_filtered_topk_postfilter_sweep,
-    )
-
-    rows = [(i, [1.0 - i * 0.1, i * 0.1], i % 2) for i in range(8)]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-    out = {r["multiplier"]: r for r in x3_filtered_topk_postfilter_sweep(spark, str(tmp_path)).collect()}
-    assert set(out) == {1, 2, 4}
-    last = -1
-    for m in (1, 2, 4):
-        r = out[m]
-        assert r["recall10_sum"] >= last
-        last = r["recall10_sum"]
-        assert r["recall10_sum"] <= r["n_candidates_kept"]
 
 
 def test_dedup_shift_zero_on_dupfree_corpus(spark, tmp_path):

@@ -31,9 +31,12 @@ tests/test_oracle_lint.py.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, ROOT)
 
 #: Aggregates whose result is float-valued unless their argument is
 #: integral (MIN/MAX are order-free — a reseed cannot wobble them —

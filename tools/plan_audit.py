@@ -16,9 +16,12 @@ from __future__ import annotations
 
 import argparse
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, ROOT)
 
 EXPECTATIONS: dict[str, dict] = {
     # name -> {max_exchanges, min_broadcast, pushed_filters}
@@ -109,8 +112,9 @@ EXPECTATIONS: dict[str, dict] = {
     "x4_bigram_lm_quality": {"max_exchanges": 6, "min_broadcast": 1},
     # per-lang count + quota broadcast + md5-rank window + output order
     "x4_temperature_mixture": {"max_exchanges": 5, "min_broadcast": 1},
-    # one pruned index scan serves the whole batch; probe relation and
-    # query vectors broadcast
+    # one pruned index scan serves the whole batch (the same probed-bucket
+    # scan as the single and multi-probe); probe relation and query
+    # vectors broadcast
     "x3_ann_batch_probe": {
         "partition_pruned_on": "lsh_table",
         "max_exchanges": 3,
@@ -1027,7 +1031,7 @@ EXPECTATIONS: dict[str, dict] = {
         "partition_pruned_on": "ivf_list",
         "take_ordered": True,
     },
-    # r16 clustered-arm twin: same static-pruned shape over the
+    # clustered-arm twin: same static-pruned shape over the
     # derived clustered corpus's own index; the pruned_some hash pin
     # is the semantic guard, this pin guards the plan (1 shuffle =
     # output ordering; broadcast = the 1-row query relation)

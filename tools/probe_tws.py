@@ -8,10 +8,13 @@ Exit 0 = migration viable; nonzero/timeout = keep
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, ROOT)
 
 import pandas as pd  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

@@ -19,7 +19,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, ROOT)
 
 QUERIES = [
     "q1_pricing_summary",
@@ -610,7 +612,7 @@ def clustered_ball_bound_arm(spark, scratch: str) -> list[dict]:
     import numpy as np
     from pyspark.sql import functions as F
 
-    from etl_generator_demo_spark.operators.cosine_threshold import (
+    from etl_generator_demo_spark.operators.ann_index import (
         COS_IVF_LISTS,
         cosine_threshold_join,
         ensure_cosine_ivf_index,
