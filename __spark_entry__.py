@@ -30,65 +30,17 @@ def entry(spark: SparkSession) -> DataFrame:
     return q2_revenue_by_segment(spark, SMOKE_SF_DIR)
 
 
-#: Queries the round-3 record left without a green row despite r1-r3
-#: prioritization (CORRECTNESS_r03 was exactly the 50-prefix of the
-#: then-111-query ordering; these sat at positions 51+). Fixed head of
-#: the sample so the backlog clears before new queries take slots.
-_R3_BACKLOG = (
-    "f_array_ops",
-    "w_share_of_total",
-    "x4_event_transitions",
-    "x4_funnel_conversion",
-    "x4_value_outliers",
-    "x4_cohort_retention",
-    "d_snapshot_diff",
-    "x4_rolling_7d_user_spend",
-    "x5_decode_features",
-)
-
-
-#: One representative per round-4 operator family (decision support,
-#: recursion, governance, IVM, statistics suite, multimodal export,
-#: streaming, sketches, embedding analytics): sampled right after the
-#: backlog so the record demonstrates the round's breadth instead of
-#: exhausting its 50 slots inside two families.
-_R4_MARQUEE = (
-    "q8_market_share",
-    "q13_customer_distribution",
-    "q17_small_quantity_revenue",
-    "q22_dormant_accounts",
-    "u_recursive_cte_depth",
-    "d_gdpr_erasure_audit",
-    "d_incremental_agg_maintenance",
-    "x3_dim_covariance",
-    "x3_mrl_prefix_recall",
-    "x4_multitouch_attribution",
-    "x4_journey_signatures",
-    "x4_k_anonymity_ladder",
-    "x4_chi2_lang_source",
-    "x4_ks_source_drift",
-    "x4_kaplan_meier_conversion",
-    "x4_ab_test_lift",
-    "x4_capped_running_balance",
-    "x5_image_tiling_plan",
-    "x5_shard_manifest",
-    "st_session_dynamic_gap",
-    "a_hll_shard_merge",
-    "x4_quantile_normalize_scores",
-)
-
-
 #: Queries whose implementing code was REWRITTEN after their newest
 #: green driver row (git history isn't available to the entry point,
-#: so this list is maintained by hand each round; remove entries once
-#: the post-rewrite spelling earns a fresh green row). Round-10's
-#: advice fixes touched three r8/r9 queries whose only greens predate
-#: the fix; round 11 rewrote three r10 queries. These re-enter the
-#: driver's 50-slot sample just below never-green queries — a green
-#: row for code that has since changed is not a regression guard.
+#: so this list is maintained by hand; remove entries once the
+#: post-rewrite spelling earns a fresh green row). These re-enter the
+#: driver's 50-slot sample just below red queries — a green row for
+#: code that has since changed is not a regression guard. The list
+#: holds one entry per changed shared kernel: an entry may leave when
+#: another listed query exercises the same changed kernel and its own
+#: plan (``tools/plan_dump.py``) is identical to the pre-rewrite plan,
+#: modulo ids.
 _REWRITTEN_SINCE_GREEN = (
-    # r15's txlog rewrite (d_txlog_time_travel) re-greened in
-    # CORRECTNESS_r15 — cleared.
     # r16: candidate-join size gate in verified_neardup_pairs (r15
     # verdict item 1) — warm small-SF plan is unchanged (broadcast
     # tier), but the code is new since the r13 green
@@ -128,22 +80,22 @@ _REWRITTEN_SINCE_GREEN = (
     "x4_quality_threshold_sweep",
     # decontamination family moved into operators/decontam.py: one flag
     # builder per tier, one rollup, funnel and tier lattice composed
-    # from them; the cosine index builds on an empty corpus
+    # from them; the cosine index builds on an empty corpus (the recall
+    # and fixed-eval variants share x3_semantic_decontam_indexed's
+    # kernel, the tier lattice the funnel's; their plans are unchanged)
     "x4_decontaminate",
     "x4_decontam_ngram_sweep",
     "x4_fuzzy_decontam",
     "x3_semantic_decontam",
     "x3_semantic_decontam_indexed",
-    "x3_semantic_decontam_recall",
-    "x3_semantic_decontam_fixed_eval",
     "x4_decontam_funnel",
-    "x4_decontam_tier_overlap",
     # vectors/ANN family on one set of kernels (query_vector, the LSH
     # sign-bit kernel, index_store, one LSH probe over a bucket list):
     # one query per changed plan or Python stage (x3_kmeans_clusters
-    # stands for the four other queries on the same Lloyd stage). The
-    # family's other respelled queries keep their plans and stay out:
-    # the 50-slot sample head is full.
+    # stands for the four other queries on the same Lloyd stage,
+    # x3_pca_power_iteration for x3_pc1_projection_histogram on the
+    # same pc1_loading). The family's other respelled queries keep
+    # their plans and stay out.
     "x3_ann_batch_probe",
     "x3_prefilter_selectivity_sweep",
     "x3_ann_recall_curve",
@@ -153,9 +105,15 @@ _REWRITTEN_SINCE_GREEN = (
     "x3_pq_codes",
     "x3_kmeans_clusters",
     "x3_pca_power_iteration",
-    "x3_pc1_projection_histogram",
     "x3_ann_lsh_multiprobe",
     "x3_exact_topk_indexed",
+    # driver scalars read off the checkpoint's own job
+    # (session.checkpoint_with; fixpoint is covered by
+    # g_bfs_hop_histogram above), the version rollup in one union +
+    # groupBy, and the report card's nullif-guarded rates
+    "g_hits_bipartite",
+    "d_txlog_time_travel",
+    "x4_corpus_report_card",
 )
 
 
@@ -171,15 +129,12 @@ def _driver_priority_order(reg) -> list[str]:
        ``CORRECTNESS_r*.json`` round order is red — including a
        post-rewrite red for a rewritten-since-green entry) — clearing
        the record's failures outranks everything;
-    1. the r03 never-sampled backlog (fixed list above);
-    2. the round-4 marquee list (one per new operator family);
-    3. other never-green oracle-backed queries, registration order
-       (new operators accumulate rows round by round);
-    4. rewritten-since-last-green queries (_REWRITTEN_SINCE_GREEN) —
+    1. rewritten-since-last-green queries (_REWRITTEN_SINCE_GREEN) —
        their old green rows certify code that no longer exists, so
        the post-rewrite spelling re-enters the sample;
-    5. queries already proven green (regression guard);
-    6. rows-only queries last — since round 4 the registry has none
+    2. every other query, stalest driver row first (a query with no
+       row yet counts as stalest);
+    3. rows-only queries last — since round 4 the registry has none
        (every registered query is oracle-backed; the floor is pinned
        in tests/test_registry.py).
 
@@ -209,14 +164,12 @@ def _driver_priority_order(reg) -> list[str]:
                     latest_round[name] = rnd
         except (OSError, ValueError):
             continue
-    backlog = {n: i for i, n in enumerate(_R3_BACKLOG)}
-    marquee = {n: i for i, n in enumerate(_R4_MARQUEE)}
     rewritten = {n: i for i, n in enumerate(_REWRITTEN_SINCE_GREEN)}
     names = list(reg)
 
     def rank(name):
         if reg[name].oracle is None:
-            return (6, 0)
+            return (3, 0)
         if latest.get(name) is False:
             # newest driver row is RED — including a post-rewrite red
             # for a _REWRITTEN_SINCE_GREEN entry; failures first
@@ -224,19 +177,12 @@ def _driver_priority_order(reg) -> list[str]:
         if name in rewritten:
             # latest row is green, but for a spelling that has since
             # been rewritten — re-enter the sample below fresh reds
-            return (4, rewritten[name])
-        if name in latest:
-            # newest row green, code unchanged — STALENESS tier (r13,
-            # verdict item 3): with no reds left, spend the driver's
-            # 50-slot sample re-earning the OLDEST greens first (259 of
-            # 388 queries' newest green predates r09 while code keeps
-            # moving), so every query re-greens within ~6 rounds.
-            return (5, latest_round.get(name, 0))
-        if name in backlog:
-            return (1, backlog[name])
-        if name in marquee:
-            return (2, marquee[name])
-        return (3, 0)
+            return (1, rewritten[name])
+        # newest row green, code unchanged — STALENESS tier (r13,
+        # verdict item 3): spend the driver's 50-slot sample
+        # re-earning the OLDEST greens first, so every query re-greens
+        # within a few rounds while code keeps moving.
+        return (2, latest_round.get(name, -1))
 
     return sorted(names, key=rank)  # stable: keeps reg order within ties
 

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from etl_generator_demo_spark.catalog import read_parquet_known
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.registry import register
-from etl_generator_demo_spark.session import column_memo
+from etl_generator_demo_spark.session import checkpoint_with, column_memo
 
 from etl_generator_demo_spark.operators._fallback import (
     check_forced as _check_forced,
@@ -600,21 +600,20 @@ def verified_neardup_pairs(
     non-candidate pair is ever materialized.
 
     The candidate-side join strategy is SIZED, not hard-coded (the
-    similarity.py rejoin discipline): the pair relation is already
-    materialized by the localCheckpoint, so its EXACT row count is one
-    cheap job, and the broadcast hints are only applied under
+    similarity.py rejoin discipline): the pair relation is
+    materialized once, and its EXACT row count comes from that
+    checkpoint's own job; the broadcast hints are only applied under
     ``BROADCAST_CANDIDATES_MAX_ROWS`` — above that every candidate
     join runs as a keyed shuffle join (hint("merge"), so Catalyst's
     static size stats cannot silently re-broadcast), which is the
     dup-heavy 100 TB shape. Pass ``broadcast_candidates`` to force
     either plan."""
-    cand = doc_lsh_pairs(docs).localCheckpoint(eager=True)  # consumed
-    # twice (doc prune + pair filter): materialize the candidate pairs
-    # once instead of re-running the whole shingle->minhash->band
-    # pipeline per consumer
+    # consumed twice (doc prune + pair filter): materialize the
+    # candidate pairs once instead of re-running the whole
+    # shingle->minhash->band pipeline per consumer
+    cand, (n_cand,) = checkpoint_with(doc_lsh_pairs(docs), F.count(F.lit(1)))
     if broadcast_candidates is None:
-        # count of an eagerly-checkpointed relation: no recompute
-        broadcast_candidates = cand.count() <= BROADCAST_CANDIDATES_MAX_ROWS
+        broadcast_candidates = n_cand <= BROADCAST_CANDIDATES_MAX_ROWS
     _side = F.broadcast if broadcast_candidates else (lambda df: df.hint("merge"))
     cand_docs = (
         cand.select(F.col("doc_a").alias("doc_id"))

@@ -39,7 +39,9 @@ Discipline:
   convergence per run through ``fixpoint`` and raise instead of
   returning a partial result;
 - ``localCheckpoint(eager=True)`` per round keeps the plan one round
-  deep;
+  deep, and a scalar the driver needs from a round (a convergence
+  signature, a HITS total) rides that checkpoint's own job
+  (``session.checkpoint_with``);
 - scores are integer fixed point (e6/e9) or FLOOR-scaled ratios of
   exact integer sums, so nothing can wobble between engines; a ratio
   whose denominator is zero on a degenerate graph is NULL, as in the
@@ -53,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
+from ..session import checkpoint_with
 from .relational import t
 
 #: Synchronous label-propagation rounds. Fixed (not run-to-convergence):
@@ -149,16 +152,15 @@ def fixpoint(
     """Iterate ``state = step(state)`` until its signature repeats.
 
     Each round checkpoints the new state eagerly (cutting lineage, so
-    the plan stays one round deep) and fetches one row of
-    ``signature`` aggregates from it. The caller picks a signature
-    that moves monotonically until the fixpoint (labels only fall,
-    distances only fall, pairs only grow), so an unchanged row proves
+    the plan stays one round deep); the same job yields one row of
+    ``signature`` aggregates (``checkpoint_with``). The caller picks a
+    signature that moves monotonically until the fixpoint (labels only
+    fall, distances only fall, pairs only grow), so an unchanged row proves
     convergence. Raises ``RuntimeError`` naming ``name`` after
     ``max_iter`` rounds without a repeat — never a partial result."""
     prev = None
     for _ in range(max_iter):
-        state = step(state).localCheckpoint(eager=True)
-        cur = tuple(state.agg(*signature).first())
+        state, cur = checkpoint_with(step(state), *signature)
         if cur == prev:
             return state
         prev = cur
@@ -1403,7 +1405,7 @@ def g_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return (
         d.groupBy(
-            F.expr(f"dist div {SSSP_BUCKET_E6}").alias("dist_bucket")
+            F.call_function("div", "dist", F.lit(SSSP_BUCKET_E6)).alias("dist_bucket")
         )
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_nodes"),
@@ -1590,15 +1592,12 @@ def _hits_oracle() -> str:
 
 
 def _hits_normalize(raw: DataFrame, key: str) -> DataFrame:
-    """Floor-normalize a materialized ``(key, raw)`` score vector to an
-    L1 total of HITS_SCALE, with the total fetched to the driver and
-    inlined as a literal. An empty graph has a NULL total and no rows
-    to scale: its scores stay typed as long instead of becoming
-    ``div None`` text that cannot parse."""
-    tot = raw.agg(F.sum("raw").cast("long")).first()[0]
-    if tot is None:
-        return raw.select(key, F.lit(None).cast("long").alias("score"))
-    return raw.select(key, F.expr(f"raw * {HITS_SCALE} div {tot}").alias("score"))
+    """Checkpoint a ``(key, raw)`` score vector and floor-normalize it
+    to an L1 total of HITS_SCALE, the total read off the checkpoint's
+    job. An empty graph's NULL total leaves its scores NULL, as long."""
+    raw, (tot,) = checkpoint_with(raw, F.sum("raw").cast("long"))
+    score = F.call_function("div", F.col("raw") * HITS_SCALE, F.lit(tot).cast("long"))
+    return raw.select(key, score.alias("score"))
 
 
 @register(
@@ -1618,10 +1617,10 @@ def g_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each half-sweep is ONE keyed aggregate-join — edges join
     the current score vector on its key, partial-aggregate map-side —
-    checkpointed as the raw (key, raw) vector; the 1-row L1 total is
-    then fetched from the materialized checkpoint and inlined into the
-    lazy normalize projection, so no half-sweep builds a broadcast of
-    its own total. Nothing node-sized ever reaches the driver;
+    checkpointed as the raw (key, raw) vector, one job that also
+    yields the L1 total; the total is inlined into the lazy normalize
+    projection, so no half-sweep builds a broadcast of its own total.
+    Nothing node-sized ever reaches the driver;
     normalized scores are ≤ SCALE so int64 carries them (the
     pre-normalization sums get DECIMAL(38,0) at 100 TB)."""
     o = t(spark, sf_dir, "orders").select(
@@ -1636,22 +1635,11 @@ def g_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = bip.select("c").distinct().select(
         "c", F.lit(1).cast("long").alias("score")
     )
+    raw = F.sum("score").cast("long").alias("raw")
     a = None
     for _ in range(HITS_ITERS):
-        ar = (
-            bip.join(h, "c")
-            .groupBy("p")
-            .agg(F.sum("score").cast("long").alias("raw"))
-            .localCheckpoint(eager=True)
-        )
-        a = _hits_normalize(ar, "p")
-        hr = (
-            bip.join(a, "p")
-            .groupBy("c")
-            .agg(F.sum("score").cast("long").alias("raw"))
-            .localCheckpoint(eager=True)
-        )
-        h = _hits_normalize(hr, "c")
+        a = _hits_normalize(bip.join(h, "c").groupBy("p").agg(raw), "p")
+        h = _hits_normalize(bip.join(a, "p").groupBy("c").agg(raw), "c")
     top_a = (
         a.orderBy(F.desc("score"), "p")
         .limit(10)

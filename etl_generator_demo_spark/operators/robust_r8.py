@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
+from ..session import checkpoint_with
 from .relational import t
 
 # ---------------------------------------------------------------------------
@@ -204,7 +205,7 @@ def x4_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the honest spelling; pinned by
     tests/test_robust_stats.py::test_theil_sen_empty_case_contract."""
     ev = t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    daily = (
+    daily, (n_days,) = checkpoint_with(  # |days| rows: bounded lattice
         ev.groupBy(F.col("ts").cast("date").alias("day"))
         .agg(F.sum(F.floor("value").cast("long")).cast("long").alias("rev"))
         .select(
@@ -212,8 +213,8 @@ def x4_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("d_e"),
             "rev",
-        )
-        .localCheckpoint(eager=True)  # |days| rows: bounded lattice
+        ),
+        F.count(F.lit(1)),
     )
     a = daily.select(F.col("d_e").alias("d1"), F.col("rev").alias("r1"))
     b = daily.select(F.col("d_e").alias("d2"), F.col("rev").alias("r2"))
@@ -228,7 +229,6 @@ def x4_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d2",
         F.expr("(num - pmod(num, den)) div den").alias("slope_e6"),
     )
-    n_days = daily.count()  # bounded-lattice scalar (day count)
     schema = "n_days long, n_pairs long, theil_sen_slope_e6 long"
     # localCheckpoint pins the sampled range boundaries and partition
     # ids so the count job and the selection job see the same layout

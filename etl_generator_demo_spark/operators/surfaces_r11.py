@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
+from ..session import checkpoint_with
 from .relational import t
 
 #: Deterministic event_type -> CDC op mapping: signup is the row
@@ -963,7 +964,9 @@ def j_bloom_fpr_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey")
         .distinct()
     )
-    fact_keys = orders.select("o_custkey").distinct()
+    fact_keys, (n_fact,) = checkpoint_with(
+        orders.select("o_custkey").distinct(), F.count(F.lit(1))
+    )
 
     def pos4(col: str, src: DataFrame, out: str) -> DataFrame:
         structs = F.array(
@@ -1013,11 +1016,14 @@ def j_bloom_fpr_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey", "h")
         .localCheckpoint(eager=True)
     )
-    match_keys = fact_keys.join(
-        dim.withColumnRenamed("c_custkey", "o_custkey"),
-        "o_custkey",
-        "left_semi",
-    ).localCheckpoint(eager=True)
+    match_keys, (n_match,) = checkpoint_with(
+        fact_keys.join(
+            dim.withColumnRenamed("c_custkey", "o_custkey"),
+            "o_custkey",
+            "left_semi",
+        ),
+        F.count(F.lit(1)),
+    )
     fp = hits.join(match_keys, "o_custkey", "left_anti")
     missed = (
         match_keys.crossJoin(F.broadcast(hh))
@@ -1025,8 +1031,6 @@ def j_bloom_fpr_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("n_missed"))
     )
-    n_fact = fact_keys.count()
-    n_match = match_keys.count()
     per_h = (
         hh.join(
             bits.groupBy("h").agg(
@@ -1058,7 +1062,7 @@ def j_bloom_fpr_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("n_false_pos"), F.lit(0))
         .cast("long")
         .alias("n_false_pos"),
-        F.expr(f"coalesce(n_false_pos, 0) * 1000000 div {denom}")
+        F.call_function("div", F.coalesce("n_false_pos", F.lit(0)) * 1_000_000, F.lit(denom))
         .cast("long")
         .alias("fp_ppm"),
         F.col("n_missed").isNull().alias("zero_false_neg"),

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from etl_generator_demo_spark.operators.dedup import doc_shingles
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.registry import register
+from etl_generator_demo_spark.session import checkpoint_with
 
 #: Tiny per-language stopword profiles for the n-gram/stopword
 #: heuristic language identifier. Deliberately small: lang-ID at scale
@@ -1832,21 +1833,25 @@ def x4_corpus_report_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy (nats, e6 fixed-point — per-language terms floored BEFORE
     the sum, so the float ln never crosses an aggregation boundary),
     exact-dup rate, PII (email) document rate, and mean length. Every
-    rate is integer-division fixed-point over exact counts.
+    rate is integer-division fixed-point over exact counts; over an
+    empty corpus the rates are NULL (``div`` by ``nullif(count, 0)``),
+    as in the oracle.
 
     The whole card is ONE pass over the corpus feeding scalar
     aggregates plus a lang-sized rollup — at 100 TB this is the query
     you run after every pipeline stage and diff against the previous
     card."""
     docs = t(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id",
-        "text",
-        "lang",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-        (F.regexp_count("text", F.lit(PII_PATTERNS["email"])) > 0).alias("has_email"),
-    ).localCheckpoint(eager=True)
-    n_docs = base.count()
+    base, (n_docs,) = checkpoint_with(
+        docs.select(
+            "doc_id",
+            "text",
+            "lang",
+            F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+            (F.regexp_count("text", F.lit(PII_PATTERNS["email"])) > 0).alias("has_email"),
+        ),
+        F.count(F.lit(1)),
+    )
     ent = (
         base.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1859,19 +1864,18 @@ def x4_corpus_report_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum("term_e6").alias("entropy_e6"))
     )
+    n = F.count(F.lit(1))
+
+    def per_doc(num: Column, name: str) -> Column:
+        return F.call_function("div", num, F.nullif(n, F.lit(0))).cast("long").alias(name)
+
     card = base.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        n.cast("long").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("total_tokens"),
         F.countDistinct("lang").cast("long").alias("n_langs"),
-        F.expr(
-            "CAST((COUNT(1) - COUNT(DISTINCT md5(text))) * 1000000 DIV COUNT(1) AS BIGINT)"
-        ).alias("exact_dup_rate_e6"),
-        F.expr(
-            "CAST(SUM(CASE WHEN has_email THEN 1 ELSE 0 END) * 1000000 DIV COUNT(1) AS BIGINT)"
-        ).alias("email_doc_rate_e6"),
-        F.expr("CAST(SUM(n_tokens) * 100 DIV COUNT(1) AS BIGINT)").alias(
-            "mean_tokens_e2"
-        ),
+        per_doc((n - F.countDistinct(F.md5("text"))) * 1_000_000, "exact_dup_rate_e6"),
+        per_doc(F.sum(F.when(F.col("has_email"), 1).otherwise(0)) * 1_000_000, "email_doc_rate_e6"),
+        per_doc(F.sum("n_tokens") * 100, "mean_tokens_e2"),
     )
     return card.crossJoin(ent).select(
         "n_docs",

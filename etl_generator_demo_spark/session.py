@@ -30,7 +30,7 @@ from __future__ import annotations
 import os
 from functools import lru_cache
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def _shuffle_partitions(cpus: str) -> str:
@@ -110,6 +110,20 @@ def column_memo(fn=None, *, maxsize=None):
     if fn is None:
         return lru_cache(maxsize=maxsize)
     return lru_cache(maxsize=maxsize)(fn)
+
+
+def checkpoint_with(df: DataFrame, *aggs: Column) -> tuple[DataFrame, tuple]:
+    """Eagerly checkpoint ``df``; return it with ``aggs`` evaluated over
+    it, in argument order, by the checkpoint's own job (an observation,
+    where ``.agg().first()`` or ``.count()`` afterwards is one more job,
+    two under AQE). Over an empty frame, zero partitions included,
+    ``sum``/``min``/``max`` are NULL and ``count`` is 0. DISTINCT
+    aggregates cannot be observed."""
+    obs = Observation()
+    named = [a.alias(f"v{i}") for i, a in enumerate(aggs)]
+    out = df.observe(obs, *named).localCheckpoint(eager=True)
+    got = obs.get
+    return out, tuple(got[f"v{i}"] for i in range(len(aggs)))
 
 
 def get_spark(app_name: str = "etl-generator-demo-spark") -> SparkSession:

@@ -65,6 +65,7 @@ actually serves.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -679,19 +680,33 @@ def _txlog_oracle() -> str:
     """
 
 
-def _version_rollup(snap: DataFrame, price_col: str = "o_totalprice"):
-    """(n_rows, sum of floor-to-cents prices) for one snapshot —
-    floor per row BEFORE the integer sum, so summation order cannot
-    flip the hash (exact-integer rule, SCALE.md reseed triage)."""
-    row = snap.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.coalesce(
-            F.sum(F.floor(F.col(price_col) * 100).cast("long")), F.lit(0)
+def rollup_by_version(
+    snaps: dict[int, DataFrame], col: str = "o_totalprice"
+) -> dict[int, tuple[int, int, int]]:
+    """``{version: (n_rows, non-NULL count of col, sum of floor(col *
+    100))}`` from ONE union of the version-tagged snapshots, grouped by
+    version. Floor per row BEFORE the integer sum, so summation order
+    cannot flip the hash. A snapshot without ``col`` (read before the
+    column was added) reads it as NULL; an empty one reads (0, 0, 0)."""
+    tagged = [
+        df.select(
+            F.lit(v).cast("long").alias("version"),
+            (F.col(col) if col in df.columns else F.lit(None).cast("double")).alias(col),
         )
-        .cast("long")
-        .alias("s"),
-    ).first()
-    return int(row["n"]), int(row["s"])
+        for v, df in snaps.items()
+    ]
+    rows = (
+        functools.reduce(DataFrame.unionByName, tagged)
+        .groupBy("version")
+        .agg(
+            F.count(F.lit(1)),
+            F.count(col),
+            F.coalesce(F.sum(F.floor(F.col(col) * 100).cast("long")), F.lit(0)),
+        )
+        .collect()
+    )
+    got = {r[0]: tuple(map(int, r[1:])) for r in rows}
+    return {v: got.get(v, (0, 0, 0)) for v in snaps}
 
 
 @register(
@@ -708,21 +723,10 @@ def d_txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs. One row per version, op label from the commit log itself —
     the DESCRIBE HISTORY + VERSION AS OF surface lakehouse users run.
 
-    The commits and the five 1-row snapshot rollups are driver work by
-    design (the commit protocol IS the operator; each rollup is one
-    partition-parallel parquet scan over the snapshot's file list);
-    the scratch table is REMOVED before returning (r14 advice: the
-    previous lazy-return spelling leaked ~7 table rewrites under
-    $TMPDIR per invocation across bench/probe repetitions).
-
-    r16 (guide §2.6 overlap independent jobs): the five per-version
-    rollups are independent reads of immutable committed snapshots, so
-    they run from a small thread pool instead of back-to-back — each
-    job's straggler tail back-fills with the next snapshot's tasks.
-    Results are keyed by version and re-sorted, so the output is
-    byte-identical to the sequential spelling."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    The commits are driver work by design (the commit protocol IS the
+    operator); the five snapshots feed one ``rollup_by_version``,
+    collected before the scratch table is removed, so no table
+    outlives the call."""
     from etl_generator_demo_spark.operators.relational import t
 
     o = t(spark, sf_dir, "orders").select(
@@ -744,13 +748,11 @@ def d_txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             ["o_orderkey"],
         )
-
-        def rollup(h: dict):
-            n, s = _version_rollup(tab.read(version=h["version"]))
-            return (h["version"], h["op"], n, s)
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            rows = sorted(pool.map(rollup, tab.history()))
+        history = tab.history()
+        got = rollup_by_version(
+            {h["version"]: tab.read(version=h["version"]) for h in history}
+        )
+        rows = [(h["version"], h["op"], n, s) for h, (n, _, s) in zip(history, got.values())]
     finally:
         shutil.rmtree(path, ignore_errors=True)
     return spark.createDataFrame(rows, _TT_RESULT_DDL).orderBy("version")
@@ -906,10 +908,10 @@ def st_txlog_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         tab = TxTable.create(spark, path, o.filter(F.col("o_orderkey") % 4 == 0))
         for b in (1, 2, 3):
             tab.append(o.filter(F.col("o_orderkey") % 4 == b))
-        rows = []
-        for v in range(tab.latest_version() + 1):
-            n, s = _version_rollup(read_increment(tab, v))
-            rows.append((v, n, s))
+        got = rollup_by_version(
+            {v: read_increment(tab, v) for v in range(tab.latest_version() + 1)}
+        )
+        rows = [(v, n, s) for v, (n, _, s) in got.items()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
     return spark.createDataFrame(
@@ -1316,24 +1318,12 @@ def d_txlog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         tab.update({"discount_pct": "5.0"}, "o_orderkey % 8 = 1")
-        rows = []
-        for h in tab.history():
-            snap = tab.read(version=h["version"])
-            if "discount_pct" in snap.columns:
-                r = snap.agg(
-                    F.count(F.lit(1)).cast("long"),
-                    F.count("discount_pct").cast("long"),
-                    F.coalesce(
-                        F.sum(
-                            F.floor(F.col("discount_pct") * 100).cast("long")
-                        ),
-                        F.lit(0),
-                    ).cast("long"),
-                ).first()
-                rows.append((h["version"], h["op"], int(r[0]), int(r[1]), int(r[2])))
-            else:
-                n = snap.count()
-                rows.append((h["version"], h["op"], n, 0, 0))
+        history = tab.history()
+        got = rollup_by_version(
+            {h["version"]: tab.read(version=h["version"]) for h in history},
+            "discount_pct",
+        )
+        rows = [(h["version"], h["op"], *got[h["version"]]) for h in history]
     finally:
         shutil.rmtree(path, ignore_errors=True)
     return spark.createDataFrame(
@@ -1407,7 +1397,7 @@ def d_txlog_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             datetime.date(1996, 1, 1),
             datetime.date(1996, 3, 31),
         )
-        n, s = _version_rollup(df)
+        n, _, s = rollup_by_version({0: df})[0]
     finally:
         shutil.rmtree(path, ignore_errors=True)
     return spark.createDataFrame(

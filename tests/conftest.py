@@ -58,16 +58,43 @@ def catalog(spark, sf_dir):
 
 
 @pytest.fixture
-def replace_table(sf_dir, tmp_path, monkeypatch):
+def tmp_index_root(tmp_path, monkeypatch):
+    """Persisted indexes go to a cache under ``tmp_path`` for the test.
+    A corpus written under ``tmp_path`` is a new corpus fingerprint on
+    every run, so its indexes would otherwise pile up in the checkout's
+    ``.index_cache``, which nothing evicts."""
+    from etl_generator_demo_spark.operators import ann_index
+
+    root = tmp_path / ".index_cache"
+    monkeypatch.setattr(ann_index, "INDEX_ROOT", str(root))
+    return root
+
+
+@pytest.fixture
+def job_delta(spark):
+    """``count(fn) -> (jobs, fn())``: the Spark jobs started while
+    ``fn()`` runs, as the delta of the highest job id, and its result."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def top():
+        return max(tracker.getJobIdsForGroup(None) or [-1])
+
+    def count(fn):
+        j0 = top()
+        out = fn()
+        return top() - j0, out
+
+    return count
+
+
+@pytest.fixture
+def replace_table(sf_dir, tmp_path, tmp_index_root):
     """``build(name, frame) -> dir``: a fixture directory under
     ``tmp_path`` whose tables are symlinks into ``sf_dir``, except
     ``name``, which is written from ``frame`` (the degenerate-input
     fixtures: one table cut down, the rest untouched). Each such
-    directory is a new corpus fingerprint, so the indexes built over it
-    go to a cache under ``tmp_path`` and are deleted with it."""
-    from etl_generator_demo_spark.operators import ann_index
-
-    monkeypatch.setattr(ann_index, "INDEX_ROOT", str(tmp_path / ".index_cache"))
+    directory is a new corpus fingerprint, so its indexes go to
+    ``tmp_index_root``."""
 
     def build(name, frame):
         from etl_generator_demo_spark.catalog import TABLES

@@ -66,6 +66,7 @@ def _brute_pairs(spark, path, queries, tau_e6, exclude_ids=()):
     return sorted(out)
 
 
+@pytest.mark.usefixtures("tmp_index_root")
 @pytest.mark.slow
 def test_exactness_on_clustered_corpus_list_path(spark, tmp_path):
     """List-queries (static pruning) path returns exactly the brute
@@ -105,6 +106,7 @@ def test_exactness_on_clustered_corpus_list_path(spark, tmp_path):
     assert 0 < len(qualified) < 4
 
 
+@pytest.mark.usefixtures("tmp_index_root")
 @pytest.mark.slow
 def test_exactness_dataframe_path_matches_list_path(spark, tmp_path):
     """DataFrame-queries (DPP) path and list-queries (static) path
@@ -141,6 +143,7 @@ def test_exactness_dataframe_path_matches_list_path(spark, tmp_path):
     assert len(brute) >= 8
 
 
+@pytest.mark.usefixtures("tmp_index_root")
 def test_radii_cover_every_member(spark, tmp_path):
     """Index invariant the exactness proof rests on: every vector's
     normalized distance to its list centroid is <= the stored radius."""
@@ -161,6 +164,7 @@ def test_radii_cover_every_member(spark, tmp_path):
         assert d <= radii[r["ivf_list"]] + 1e-12
 
 
+@pytest.mark.usefixtures("tmp_index_root")
 def test_zero_norm_vectors_never_hit(spark, tmp_path):
     """A zero vector in the corpus (NULL cosine under try_divide) is
     dropped by the hit filter, exactly as the brute tier drops it."""
@@ -176,6 +180,7 @@ def test_zero_norm_vectors_never_hit(spark, tmp_path):
     assert all(r["vec_id"] != 999 for r in got.collect())
 
 
+@pytest.mark.usefixtures("tmp_index_root")
 def test_empty_qualification_returns_empty(spark, tmp_path):
     """A query orthogonal to every cluster at an unreachable tau
     qualifies no list on a tight corpus — static path must return an
@@ -194,6 +199,7 @@ def test_empty_qualification_returns_empty(spark, tmp_path):
     assert got == []
 
 
+@pytest.mark.usefixtures("tmp_index_root")
 def test_static_path_plan_has_literal_partition_filter(spark, tmp_path):
     """The list-queries path prunes with a LITERAL ivf_list IN (...)
     partition filter (no corpus-wide scan, no DPP dependency)."""
@@ -214,6 +220,7 @@ def test_static_path_plan_has_literal_partition_filter(spark, tmp_path):
     assert "ivf_list" in plan.split("PartitionFilters", 1)[1][:400]
 
 
+@pytest.mark.usefixtures("tmp_index_root")
 def test_exact_topk_indexed_matches_brute_and_prunes(spark, tmp_path):
     """Two-phase ball-bound top-k: bitwise brute-force answer on a
     clustered corpus, AND phase 2 provably skips lists there (the
@@ -253,6 +260,7 @@ def test_exact_topk_indexed_matches_brute_and_prunes(spark, tmp_path):
     assert (bounds < s - 1e-6).any()
 
 
+@pytest.mark.usefixtures("tmp_index_root")
 def test_exact_topk_indexed_small_head_falls_back_exact(spark, tmp_path):
     """k larger than the nearest list: phase 1 underfills, s drops to
     -1, phase 2 scans all qualified lists — still the exact answer."""
@@ -277,6 +285,7 @@ def test_exact_topk_indexed_small_head_falls_back_exact(spark, tmp_path):
     assert got == want and len(got) == 9
 
 
+@pytest.mark.usefixtures("tmp_index_root")
 @pytest.mark.slow
 def test_randomized_differential_exactness(spark, tmp_path):
     """Seeded randomized differential: across random corpora (mixed

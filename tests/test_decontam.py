@@ -53,6 +53,7 @@ def _planted_tiers(spark, path):
 
 
 class TestDecontaminate:
+    @pytest.mark.usefixtures("tmp_index_root")
     def test_planted_overlap_flagged_and_broadcast(self, spark, tmp_path):
         """A corpus doc copying a 5-token span from a benchmark doc is
         flagged with the exact distinct-shingle overlap count; disjoint
@@ -142,6 +143,7 @@ def test_semantic_decontam_flags_planted_axis_match(spark, tmp_path):
     assert got[1]["max_cos_e6"] == 1_000_000
 
 
+@pytest.mark.usefixtures("tmp_index_root")
 def test_indexed_decontam_matches_brute_on_planted_corpus(spark, tmp_path):
     """End-to-end: the indexed decontam rollup equals the brute audit
     tier row-for-row on a planted corpus with hits."""
@@ -165,6 +167,7 @@ def test_indexed_decontam_matches_brute_on_planted_corpus(spark, tmp_path):
     assert len(idx) >= 5
 
 
+@pytest.mark.usefixtures("tmp_index_root")
 def test_recall_row_is_one(spark, tmp_path):
     from etl_generator_demo_spark.operators.decontam import (
         x3_semantic_decontam_recall,

@@ -532,6 +532,7 @@ def test_jaccard_sweep_monotone_in_tau(spark, sf_dir):
     assert docs == sorted(docs, reverse=True)
 
 
+@pytest.mark.usefixtures("tmp_index_root")
 def test_jaccard_sweep_single_pass_matches_brute_recount(spark, tmp_path):
     """The conditional-aggregation sweep (one flag projection, two
     aggregates) must equal a per-threshold recount — including a

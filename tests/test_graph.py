@@ -164,10 +164,8 @@ def test_clustering_coefficient_complete_graph(spark, tmp_path):
     assert 11 not in got and 12 not in got and 13 not in got
 
 
-@pytest.mark.slow
-def test_hits_star_hub(spark, tmp_path):
-    """Customer 1 buys every part; others buy one each -> customer 1 is
-    the top hub, and the part bought by EVERYONE is the top authority."""
+def _write_star_hub(spark, tmp_path):
+    """Customer 1 buys parts 1..5; customers 2..4 buy part 1 only."""
     orders, lines = [], []
     ok = 0
     for p in range(1, 6):  # hub customer 1 buys parts 1..5
@@ -185,6 +183,12 @@ def test_hits_star_hub(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
     _write_lineitem(spark, tmp_path, lines)
 
+
+@pytest.mark.slow
+def test_hits_star_hub(spark, tmp_path):
+    """Customer 1 buys every part; others buy one each -> customer 1 is
+    the top hub, and the part bought by EVERYONE is the top authority."""
+    _write_star_hub(spark, tmp_path)
     rows = g_hits_bipartite(spark, str(tmp_path)).collect()
     top_auth = [r for r in rows if r["kind"] == "authority" and r["rnk"] == 1][0]
     top_hub = [r for r in rows if r["kind"] == "hub" and r["rnk"] == 1][0]
@@ -347,12 +351,12 @@ _EMPTY = {
     "g_bfs_hop_histogram": lambda spark, d: g_bfs_hop_histogram(spark, d),
 }
 #: Spark job-id delta of one build of each loop on its fixed input,
-#: measured on the per-loop implementations this helper replaced.
-_PARENT_JOBS = {
-    "connected_components": 41,
-    "ancestor_walk": 31,
-    "ancestor_pairs": 36,
-    "g_bfs_hop_histogram": 35,
+#: with the convergence signature read off each round's checkpoint job.
+_LOOP_JOBS = {
+    "connected_components": 33,
+    "ancestor_walk": 21,
+    "ancestor_pairs": 26,
+    "g_bfs_hop_histogram": 22,
 }
 
 
@@ -376,13 +380,40 @@ def test_fixpoint_loop_empty_input_is_typed_empty(spark, tmp_path, path_graph_di
 
 
 @pytest.mark.parametrize("loop", sorted(_LOOPS))
-def test_fixpoint_loop_job_count_pinned(spark, path_graph_dir, loop):
-    tracker = spark.sparkContext.statusTracker()
-
-    def top():
-        return max(tracker.getJobIdsForGroup(None) or [-1])
-
+def test_fixpoint_loop_job_count_pinned(spark, path_graph_dir, job_delta, loop):
     _LOOPS[loop](spark, path_graph_dir).collect()  # warm the session
-    j0 = top()
-    _LOOPS[loop](spark, path_graph_dir)
-    assert top() - j0 <= _PARENT_JOBS[loop], top() - j0
+    n, _ = job_delta(lambda: _LOOPS[loop](spark, path_graph_dir))
+    assert n <= _LOOP_JOBS[loop], n
+
+
+#: Spark job-id delta of one HITS build on the star-hub graph, each
+#: half-sweep's L1 total read off its checkpoint job.
+_HITS_JOBS = 22
+
+
+def test_hits_job_count_pinned(spark, tmp_path, job_delta):
+    _write_star_hub(spark, tmp_path)
+    g_hits_bipartite(spark, str(tmp_path)).collect()  # warm the session
+    n, _ = job_delta(lambda: g_hits_bipartite(spark, str(tmp_path)))
+    assert n <= _HITS_JOBS, n
+
+
+def test_checkpoint_with_reads_aggregates_off_the_checkpoint_job(spark, job_delta):
+    from etl_generator_demo_spark.session import checkpoint_with
+
+    df = spark.range(100).groupBy((F.col("id") % 7).alias("g")).agg(F.sum("id").alias("s"))
+    bare, _ = job_delta(lambda: df.localCheckpoint(eager=True))
+    n, (cp, values) = job_delta(lambda: checkpoint_with(df, F.sum("s"), F.count(F.lit(1))))
+    assert values == (4950, 7)
+    assert n <= bare, (n, bare)
+    assert sorted(map(tuple, cp.collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_checkpoint_with_empty_zero_partition_frame(spark):
+    from etl_generator_demo_spark.session import checkpoint_with
+
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), "x long")
+    assert empty.rdd.getNumPartitions() == 0
+    cp, values = checkpoint_with(empty, F.sum("x"), F.count(F.lit(1)), F.max("x"))
+    assert values == (None, 0, None)
+    assert cp.collect() == [] and cp.dtypes == [("x", "bigint")]

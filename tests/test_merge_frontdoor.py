@@ -253,16 +253,10 @@ class TestMergeBookkeeping:
         assert _tree_bytes(path) == before
         assert not [p for p in tmp_path.iterdir() if p.name.startswith(".staging_")]
 
-    def test_merge_job_count(self, spark, wr_engine):
-        """Spark jobs per front-door MERGE, counted as the delta of the
-        highest job id, stay at or under the measured budget."""
-        tracker = spark.sparkContext.statusTracker()
-
-        def top():
-            return max(tracker.getJobIdsForGroup(None) or [-1])
-
+    def test_merge_job_count(self, wr_engine, job_delta):
+        """Spark jobs per front-door MERGE stay at or under the measured
+        budget."""
         assert wr_engine.execute(MERGE_SQL).success  # warm the session
-        j0 = top()
-        res = wr_engine.execute(MERGE_SQL)
+        n, res = job_delta(lambda: wr_engine.execute(MERGE_SQL))
         assert res.success and res.rows == [{"n_updated": 4, "n_inserted": 0}]
-        assert top() - j0 <= MERGE_MAX_JOBS, top() - j0
+        assert n <= MERGE_MAX_JOBS, n

@@ -229,6 +229,32 @@ def test_probe_covers_round_registrations():
         assert owed <= set(timings), sorted(owed - set(timings))
 
 
+def test_queries_order_follows_the_driver_record():
+    """Every registered query has a driver row, so ``queries()`` is red
+    rows first, then ``_REWRITTEN_SINCE_GREEN`` in listed order, then
+    the other green rows stalest round first (registration order
+    within a round)."""
+    import glob
+    import json
+    import __spark_entry__ as ep
+    from etl_generator_demo_spark.registry import load_all
+
+    latest: dict[str, tuple[int, bool]] = {}
+    for rnd, path in enumerate(sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")))):
+        with open(path) as fh:
+            for name, row in json.load(fh).items():
+                latest[name] = (rnd, bool(row.get("rows_match") and row.get("hash_match")))
+    reg = load_all()
+    assert set(reg) <= set(latest), sorted(set(reg) - set(latest))
+    red = [n for n in reg if not latest[n][1]]
+    rewritten = [n for n in ep._REWRITTEN_SINCE_GREEN if n not in red]
+    rest = sorted(
+        (n for n in reg if latest[n][1] and n not in rewritten),
+        key=lambda n: latest[n][0],
+    )
+    assert list(ep.queries()) == red + rewritten + rest
+
+
 def test_rewritten_queries_reenter_driver_sample():
     """A green driver row certifies the spelling that earned it: when
     an implementation is rewritten, the query must re-enter the 50-slot
@@ -325,6 +351,34 @@ def test_round_named_operator_modules_only_shrink():
     )
     found = {os.path.basename(p) for p in glob.glob(os.path.join(ops, "*_r[0-9]*.py"))}
     assert found <= ROUND_NAMED_MODULES, sorted(found - ROUND_NAMED_MODULES)
+
+
+#: Calls to ``expr``/``filter``/``where``/``sql``/``selectExpr`` in the
+#: package whose first argument is an f-string: SQL text built on the
+#: driver, parsed per build and unchecked until then. The count may
+#: only fall; convert sites to Column expressions as code moves.
+SQL_TEXT_FSTRING_CALLS = 43
+
+
+def test_driver_built_sql_text_only_shrinks():
+    import ast
+    import glob
+
+    pkg = os.path.join(ROOT, "etl_generator_demo_spark")
+    n = 0
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call) and node.args):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in {"expr", "filter", "where", "sql", "selectExpr"} and isinstance(
+                node.args[0], ast.JoinedStr
+            ):
+                n += 1
+    assert n <= SQL_TEXT_FSTRING_CALLS, n
 
 
 def test_no_hardcoded_checkout_path():

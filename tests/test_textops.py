@@ -366,3 +366,14 @@ def test_quality_sweep_monotone_in_tau(spark, sf_dir):
     for r in rows:
         assert r["keep_rate_e6"] == r["n_kept"] * 1_000_000 // r["n_scored"]
         assert r["n_kept"] <= r["n_scored"]
+
+
+def test_corpus_report_card_on_empty_documents_matches_oracle(
+    spark, sf_dir, replace_table, oracle_mismatches
+):
+    """An empty corpus gives one card row: zero counts and NULL rates
+    (``div`` by ``nullif(count, 0)``), as DuckDB returns; a bare
+    ``DIV COUNT(1)`` raises DIVIDE_BY_ZERO under ANSI."""
+    empty = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(0)
+    d = replace_table("documents", empty)
+    assert oracle_mismatches(d, ["x4_corpus_report_card"]) == {}

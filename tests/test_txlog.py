@@ -180,6 +180,34 @@ def test_registered_query_matches_mutation_layer(spark, sf_dir):
     assert all(r["n_rows"] >= 0 for r in rows)
 
 
+#: Spark job-id delta of one d_txlog_time_travel build on the sf0.001
+#: fixture: the five commits, then one union-and-group rollup of the
+#: five snapshots.
+TIME_TRAVEL_JOBS = 13
+
+
+def test_time_travel_job_count_pinned(spark, sf_dir, job_delta):
+    from etl_generator_demo_spark.sources.txlog import d_txlog_time_travel
+
+    d_txlog_time_travel(spark, sf_dir).collect()  # warm the session
+    n, _ = job_delta(lambda: d_txlog_time_travel(spark, sf_dir))
+    assert n <= TIME_TRAVEL_JOBS, n
+
+
+def test_rollup_by_version_empty_and_columnless_snapshots(spark):
+    from etl_generator_demo_spark.sources.txlog import rollup_by_version
+
+    full = spark.createDataFrame([(1.239,), (2.0,), (None,)], "o_totalprice double")
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), "o_totalprice double")
+    assert rollup_by_version({0: empty, 1: full, 2: full.limit(0)}) == {
+        0: (0, 0, 0),
+        1: (3, 2, 323),
+        2: (0, 0, 0),
+    }
+    no_col = spark.createDataFrame([(1,)], "o_orderkey long")
+    assert rollup_by_version({0: no_col}) == {0: (1, 0, 0)}
+
+
 # --- transactional extensions: txn idempotence, streaming sink, OPTIMIZE ---
 
 
