@@ -82,8 +82,8 @@ _REWRITTEN_SINCE_GREEN = (
     # builder per tier, one rollup, funnel and tier lattice composed
     # from them; the cosine index builds on an empty corpus (the recall
     # and fixed-eval variants share x3_semantic_decontam_indexed's
-    # kernel, the tier lattice the funnel's; their plans are unchanged)
-    "x4_decontaminate",
+    # kernel, the tier lattice and x4_decontaminate the funnel's; their
+    # plans are unchanged)
     "x4_decontam_ngram_sweep",
     "x4_fuzzy_decontam",
     "x3_semantic_decontam",
@@ -114,6 +114,10 @@ _REWRITTEN_SINCE_GREEN = (
     "g_hits_bipartite",
     "d_txlog_time_travel",
     "x4_corpus_report_card",
+    # statistics family on one moments kernel and one spearman, with
+    # one zero-denominator rule (operators/stats.py)
+    "a_corr_matrix_lineitem",
+    "x4_ranker_agreement",
 )
 
 

@@ -2697,15 +2697,16 @@ def x4_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     test data curation uses where Pearson is distorted by heavy tails.
     Ranks are ROW_NUMBER permutations under (metric, user_id) total
     orders — both metrics are exact integers, so unlike ranking a
-    float SUM the order can never flip on summation order — and
-    ρ = 1 − 6·Σd²/(n(n²−1)) is evaluated from exact BIGINT sums with
-    the identical operation sequence in both engines.
+    float SUM the order can never flip on summation order — and ρ
+    comes from ``stats.spearman`` (NULL for a single user).
 
     Scale: the per-user aggregate map-combines; BOTH rankings run
     through the distributed exact ``global_row_number`` (range shuffle
     + per-partition rebase — never a single-partition window); the
     final scalar is one map-combined reduce. The rank join keys on
     user_id, high-cardinality uniform."""
+    from .stats import spearman
+
     ev = t(spark, sf_dir, "events")
     m = ev.groupBy("user_id").agg(
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
@@ -2715,33 +2716,8 @@ def x4_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("b"),
     )
-    ra, _n = global_row_number(
-        m.select("user_id", "a"), [F.col("a").asc(), F.col("user_id").asc()],
-        rn_col="ra",
-    )
-    rb, _n2 = global_row_number(
-        m.select("user_id", "b"), [F.col("b").asc(), F.col("user_id").asc()],
-        rn_col="rb",
-    )
-    d = ra.select("user_id", "ra").join(rb.select("user_id", "rb"), "user_id")
-    dd = (F.col("ra") - F.col("rb")) * (F.col("ra") - F.col("rb"))
-    return d.agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum(dd).cast("long").alias("sum_d2"),
-    ).select(
-        "n_users",
-        "sum_d2",
-        F.floor(
-            (
-                1
-                - 6.0
-                * F.col("sum_d2")
-                / (F.col("n_users") * (F.col("n_users") * F.col("n_users") - 1.0))
-            )
-            * 1_000_000
-        )
-        .cast("long")
-        .alias("rho_e6"),
+    return spearman(m, "user_id", "a", "b").select(
+        F.col("n").alias("n_users"), "sum_d2", "rho_e6"
     )
 
 

@@ -20,12 +20,6 @@ surface parity that a 100 TB engine needs every day.
   navigation with e6 fixed-point growth rates; the month grid is
   lattice-bounded (≤ |months| rows) so the window is never a scale
   risk.
-- Pairwise Pearson correlation matrix from one pass of exact integer
-  moments (n, Σx, Σy, Σx², Σy², Σxy as DECIMAL(38,0)): the classic
-  "corr matrix without k passes" spelling. The final e6 ratio uses
-  IEEE-identical expression trees on exact integer operands in both
-  engines (sqrt/division are correctly rounded, so identical inputs →
-  identical doubles → identical floors).
 
 Reference parity: all reachable analyses for the reference's NL→SQL
 users over its exposed tables (``/root/reference/sample_metadata.py``);
@@ -369,115 +363,3 @@ def f_yoy_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         growth("rev_c2", "yoy_c2").alias("yoy_growth_e6"),
     ).orderBy("month")
 
-
-# ---------------------------------------------------------------------------
-# A2/F6: one-pass Pearson correlation matrix
-
-
-def _corr_pair_sql(x: str, y: str, label: str) -> str:
-    """One pair of the oracle's correlation matrix from the shared
-    integer-moment relation (HUGEINT products, IEEE-identical final
-    expression)."""
-    return f"""
-    SELECT '{label}' AS pair,
-           CAST(FLOOR(1000000.0
-               * (n * s_{x}{y} - s_{x} * s_{y})
-               / (sqrt(CAST(n * s_{x}{x} - s_{x} * s_{x} AS DOUBLE))
-                  * sqrt(CAST(n * s_{y}{y} - s_{y} * s_{y} AS DOUBLE))))
-             AS BIGINT) AS corr_e6
-    FROM m
-    """
-
-
-@register(
-    "a_corr_matrix_lineitem",
-    oracle=f"""
-    WITH m AS (
-        SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-               CAST(SUM(CAST(l_quantity AS BIGINT)) AS HUGEINT) AS s_q,
-               CAST(SUM(CAST(FLOOR(l_extendedprice * 100) AS BIGINT))
-                    AS HUGEINT) AS s_p,
-               CAST(SUM(CAST(FLOOR(l_discount * 100) AS BIGINT))
-                    AS HUGEINT) AS s_d,
-               CAST(SUM(CAST(l_quantity AS BIGINT)
-                        * CAST(l_quantity AS BIGINT)) AS HUGEINT) AS s_qq,
-               CAST(SUM(CAST(FLOOR(l_extendedprice * 100) AS HUGEINT)
-                        * CAST(FLOOR(l_extendedprice * 100) AS HUGEINT))
-                    AS HUGEINT) AS s_pp,
-               CAST(SUM(CAST(FLOOR(l_discount * 100) AS BIGINT)
-                        * CAST(FLOOR(l_discount * 100) AS BIGINT))
-                    AS HUGEINT) AS s_dd,
-               CAST(SUM(CAST(l_quantity AS BIGINT)
-                        * CAST(FLOOR(l_extendedprice * 100) AS BIGINT))
-                    AS HUGEINT) AS s_qp,
-               CAST(SUM(CAST(l_quantity AS BIGINT)
-                        * CAST(FLOOR(l_discount * 100) AS BIGINT))
-                    AS HUGEINT) AS s_qd,
-               CAST(SUM(CAST(FLOOR(l_extendedprice * 100) AS HUGEINT)
-                        * CAST(FLOOR(l_discount * 100) AS HUGEINT))
-                    AS HUGEINT) AS s_pd
-        FROM lineitem
-    )
-    {_corr_pair_sql('q', 'p', 'quantity_price')}
-    UNION ALL {_corr_pair_sql('q', 'd', 'quantity_discount')}
-    UNION ALL {_corr_pair_sql('p', 'd', 'price_discount')}
-    ORDER BY pair
-    """,
-    survey_ids=("A2", "F6", "U2"),
-)
-def a_corr_matrix_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson correlation matrix of (quantity, price cents,
-    discount cents) from ONE pass of exact integer moments — n, Σx,
-    Σx², Σxy carried as DECIMAL(38,0) (HUGEINT in the oracle), so the
-    expensive part never runs k× for k pairs. The e6 ratio is the only
-    float step: an IEEE-identical expression tree (two correctly-
-    rounded sqrts, one multiply, one divide) on exact integer operands
-    in both engines, so the doubles — and their floors — agree bitwise.
-    Product magnitudes at sf0.1 (~6·10⁵ rows × (10⁷)² price-cents²)
-    stay under 10³² ≪ the 38-digit decimal bound; the r7 overflow
-    advice is designed in, not patched in.
-
-    Scale: one map-combined global aggregate (no shuffle of rows at
-    all — partial moments combine associatively), then a 1-row
-    3-output projection; 100 TB changes only the scan time."""
-    li = t(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity").cast("long")
-    p = F.floor(F.col("l_extendedprice") * 100).cast("long")
-    d = F.floor(F.col("l_discount") * 100).cast("long")
-    dec = "decimal(38,0)"
-    m = li.agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum(q).cast(dec).alias("s_q"),
-        F.sum(p).cast(dec).alias("s_p"),
-        F.sum(d).cast(dec).alias("s_d"),
-        F.sum(q * q).cast(dec).alias("s_qq"),
-        F.sum(p.cast(dec) * p.cast(dec)).cast(dec).alias("s_pp"),
-        F.sum(d * d).cast(dec).alias("s_dd"),
-        F.sum(q * p).cast(dec).alias("s_qp"),
-        F.sum(q * d).cast(dec).alias("s_qd"),
-        F.sum(p.cast(dec) * d.cast(dec)).cast(dec).alias("s_pd"),
-    )
-
-    def pair(x: str, y: str, label: str):
-        num = F.col("n") * F.col(f"s_{x}{y}") - F.col(f"s_{x}") * F.col(f"s_{y}")
-        vx = (
-            F.col("n") * F.col(f"s_{x}{x}") - F.col(f"s_{x}") * F.col(f"s_{x}")
-        ).cast("double")
-        vy = (
-            F.col("n") * F.col(f"s_{y}{y}") - F.col(f"s_{y}") * F.col(f"s_{y}")
-        ).cast("double")
-        return m.select(
-            F.lit(label).alias("pair"),
-            F.floor(
-                1000000.0 * num / (F.sqrt(vx) * F.sqrt(vy))
-            )
-            .cast("long")
-            .alias("corr_e6"),
-        )
-
-    return (
-        pair("q", "p", "quantity_price")
-        .unionAll(pair("q", "d", "quantity_discount"))
-        .unionAll(pair("p", "d", "price_discount"))
-        .orderBy("pair")
-    )

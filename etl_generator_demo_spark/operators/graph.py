@@ -57,6 +57,7 @@ from pyspark.sql.window import Window
 from ..registry import register
 from ..session import checkpoint_with
 from .relational import t
+from .stats import comoment, denom, moments
 
 #: Synchronous label-propagation rounds. Fixed (not run-to-convergence):
 #: synchronous LPA can 2-cycle on bipartite structures, so a fixed
@@ -571,9 +572,10 @@ def g_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase with other hubs (r>0, social-network-like) or with
     leaves (r<0, technological/hub-spoke)? Because the symmetrized edge
     list makes the x and y marginals identical, the Pearson quotient
-    needs NO square root: r = (M·Σxy − (Σx)²)/(M·Σx² − (Σx)²), a ratio
-    of exact BIGINT sums FLOOR-scaled once (the raw sums ship in the
-    row so the e6 value is auditable). The ratio is NULL when every
+    needs NO square root: r = (M·Σxy − Σx·Σy)/(M·Σx² − (Σx)²) with
+    Σy = Σx, a ratio of exact BIGINT sums from the ``stats.moments``
+    kernel FLOOR-scaled once (the raw sums ship in the row so the e6
+    value is auditable). The ratio is NULL when every
     endpoint has the same degree (zero variance, e.g. a single edge).
     One degree aggregate + two node-keyed joins + one global sum —
     nothing wider than the edge list ever shuffles."""
@@ -584,23 +586,12 @@ def g_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(deg.select(F.col("node").alias("v"), F.col("deg").alias("y")), "v")
         .select("x", "y")
     )
-    sums = pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("m2"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sx2"),
-    )
-    sx_sq = F.col("sx") * F.col("sx")
-    return sums.select(
-        "m2",
-        "sx",
-        "sxy",
-        "sx2",
-        F.floor(
-            1000000.0
-            * (F.col("m2") * F.col("sxy") - sx_sq)
-            / F.nullif(F.col("m2") * F.col("sx2") - sx_sq, F.lit(0))
-        )
+    return moments(pairs, ["x", "y"], "long").select(
+        F.col("n").alias("m2"),
+        F.col("s_x").alias("sx"),
+        F.col("s_x_y").alias("sxy"),
+        F.col("s_x_x").alias("sx2"),
+        F.floor(1000000.0 * comoment("x", "y") / denom(comoment("x", "x")))
         .cast("long")
         .alias("assortativity_e6"),
     )

@@ -15,9 +15,6 @@ embedding QA, retrieval evaluation, tokenizer application.
   quantize-then-sum discipline (components floored to e3 integers
   BEFORE the square-sum, so the fold is order-free exact — no float
   accumulation).
-- NDCG@k of the BM25 ranking against a deterministic graded relevance
-  (per-doc query-term hit count): the retrieval-eval closing piece
-  over the existing BM25 scorer.
 - BPE tokenizer APPLICATION: the corpus encoded with the merges the
   trainer (bpe.py) learned — per-source encoded token
   counts and compression, the serving half of tokenizer training.
@@ -27,13 +24,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..registry import register
 from .analytics_ext import global_row_number
 from .bpe import BPE_STEPS, _bpe_step_sql, bpe_trainer, corpus_words, vocabulary
 from .relational import t
-from .retrieval import BM25_B, BM25_K1, BM25_QUERY_TERMS
 from .textops import STOPWORDS_EN
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
@@ -44,9 +39,6 @@ N_SHARDS = 8
 #: Z-order grid bits per dimension (256×256 cells) and bucket count.
 Z_BITS = 8
 Z_BUCKETS_SHIFT = 8  # top 8 of the 16 interleaved bits -> 256 buckets
-
-#: NDCG cutoff (matches the BM25 top-k pool).
-NDCG_K = 20
 
 
 # ---------------------------------------------------------------------------
@@ -237,148 +229,6 @@ def d_zorder_clustering_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.max("dd") - F.min("dd")).cast("long").alias("date_span_days"),
         )
         .orderBy("bucket")
-    )
-
-
-# ---------------------------------------------------------------------------
-# NDCG retrieval evaluation
-# ---------------------------------------------------------------------------
-
-def _ndcg_oracle() -> str:
-    terms = ", ".join(f"'{x}'" for x in BM25_QUERY_TERMS)
-    return f"""
-    WITH tok AS (
-        SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS term FROM documents
-    ),
-    rel AS (
-        SELECT doc_id,
-               CAST(COUNT(DISTINCT term) AS BIGINT) AS rel
-        FROM tok WHERE term IN ({terms}) GROUP BY doc_id
-    ),
-    dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok GROUP BY doc_id),
-    stats AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(dl) AS BIGINT) AS total_len
-        FROM dl
-    ),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM tok WHERE term IN ({terms}) GROUP BY doc_id, term
-    ),
-    dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term),
-    scored AS (
-        SELECT tf.doc_id,
-               CAST(FLOOR(
-                   (LN(1 + (stats.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5))
-                    * (tf.tf * {BM25_K1 + 1}))
-                   / (tf.tf + {BM25_K1} * (1 - {BM25_B}
-                      + {BM25_B} * dl.dl / (CAST(stats.total_len AS DOUBLE) / stats.n_docs)))
-                   * 1000000) AS BIGINT) AS term_score_e6
-        FROM tf
-        JOIN dfreq USING (term)
-        JOIN dl USING (doc_id)
-        CROSS JOIN stats
-    ),
-    ranking AS (
-        SELECT doc_id, CAST(SUM(term_score_e6) AS BIGINT) AS bm25_e6
-        FROM scored GROUP BY doc_id
-        ORDER BY bm25_e6 DESC, doc_id LIMIT {NDCG_K}
-    ),
-    sys AS (
-        SELECT r.doc_id, rel.rel,
-               ROW_NUMBER() OVER (ORDER BY r.bm25_e6 DESC, r.doc_id) AS rnk
-        FROM ranking r JOIN rel USING (doc_id)
-    ),
-    dcg AS (
-        SELECT CAST(SUM(CAST(FLOOR(
-                   ((POWER(2, rel) - 1) * 1000000.0) * LN(2.0)
-                   / LN(CAST(rnk + 1 AS DOUBLE))
-               ) AS BIGINT)) AS BIGINT) AS dcg_e6,
-               CAST(COUNT(*) AS BIGINT) AS n_ranked
-        FROM sys
-    ),
-    ideal AS (
-        SELECT rel, ROW_NUMBER() OVER (ORDER BY rel DESC, doc_id) AS rnk
-        FROM rel ORDER BY rel DESC, doc_id LIMIT {NDCG_K}
-    ),
-    idcg AS (
-        SELECT CAST(SUM(CAST(FLOOR(
-                   ((POWER(2, rel) - 1) * 1000000.0) * LN(2.0)
-                   / LN(CAST(rnk + 1 AS DOUBLE))
-               ) AS BIGINT)) AS BIGINT) AS idcg_e6
-        FROM ideal
-    )
-    SELECT dcg.n_ranked, dcg.dcg_e6, idcg.idcg_e6,
-           (dcg.dcg_e6 * 1000000) // idcg.idcg_e6 AS ndcg_e6
-    FROM dcg CROSS JOIN idcg
-    """
-
-
-@register(
-    "x4_ndcg_eval",
-    oracle=_ndcg_oracle(),
-    survey_ids=("X4", "W1", "A2", "O4"),
-)
-def x4_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NDCG@20 of the BM25 ranking (``x4_bm25_topk``'s scorer) against
-    a deterministic graded relevance — rel(doc) = distinct query terms
-    present (0–3). One summary row: ranked count, DCG, ideal DCG, and
-    NDCG in e6 fixed point. This is the eval loop every retrieval
-    pipeline closes: change the scorer, re-run, compare one number.
-
-    Exactness: per-rank gain terms ``(2^rel − 1)·10⁶·ln2 / ln(r+1)``
-    are floored to integers BEFORE summation (the BM25 idiom — SUM of
-    BIGINT is order-free); the final NDCG is an integer floor ratio.
-    Scale (r14 rewrite, caught by the spine-walk window gate): both
-    global row_numbers now run over provably-bounded inputs ON THEIR
-    OWN SPINE — the system ranks are assigned on the ≤NDCG_K BM25
-    relation BEFORE the relevance join (every BM25-scored doc contains
-    a query term, so the inner join drops no ranked row — rank-then-
-    join ≡ join-then-rank here, and the DuckDB oracle hash-pins it),
-    and the ideal ranking bounds `rel` with orderBy().limit(NDCG_K)
-    (TakeOrderedAndProject) before its window. The r10 spelling ran
-    the ideal window over the full hit-doc relation — corpus-sized on
-    a broad query mix — through one task."""
-    from .retrieval import x4_bm25_topk
-
-    docs = t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    rel = (
-        tok.filter(F.col("term").isin(*BM25_QUERY_TERMS))
-        .groupBy("doc_id")
-        .agg(F.count_distinct("term").cast("long").alias("rel"))
-    )
-    ranking = x4_bm25_topk(spark, sf_dir).select("doc_id", "bm25_e6")
-    w_sys = Window.orderBy(F.desc("bm25_e6"), "doc_id")
-    gain = (F.pow(F.lit(2), F.col("rel")) - 1) * 1000000.0
-    term = F.floor(
-        gain * F.log(F.lit(2.0)) / F.log((F.col("rnk") + 1).cast("double"))
-    ).cast("long")
-    sys_rows = (
-        ranking.withColumn("rnk", F.row_number().over(w_sys))
-        .join(rel, "doc_id")
-        .select(term.alias("g"))
-    )
-    dcg = sys_rows.agg(
-        F.sum("g").cast("long").alias("dcg_e6"),
-        F.count(F.lit(1)).cast("long").alias("n_ranked"),
-    )
-    w_ideal = Window.orderBy(F.desc("rel"), "doc_id")
-    ideal = (
-        rel.orderBy(F.desc("rel"), "doc_id")
-        .limit(NDCG_K)
-        .withColumn("rnk", F.row_number().over(w_ideal))
-        .select(term.alias("g"))
-    )
-    idcg = ideal.agg(F.sum("g").cast("long").alias("idcg_e6"))
-    return (
-        dcg.crossJoin(F.broadcast(idcg))
-        .select(
-            "n_ranked",
-            "dcg_e6",
-            "idcg_e6",
-            F.expr("(dcg_e6 * 1000000) div idcg_e6").alias("ndcg_e6"),
-        )
     )
 
 

@@ -1,5 +1,5 @@
-"""Round-11 operators: CDC log apply and the mergeable quantile
-sketch serving tier.
+"""Round-11 operators: CDC log apply, packing and mixture sweeps,
+query-likelihood retrieval and the l-diversity audit.
 
 CDC grounding: the reference's D1 commits arbitrary DML against the
 live database (db_connector.py:244-251 — cursor.execute + commit of
@@ -9,15 +9,6 @@ applying an ordered insert/update/delete stream to produce the
 current snapshot is the at-scale spelling of D1, the consuming
 sibling of `d_scd2_user_state` (which builds history from the same
 feed).
-
-Quantile grounding: `a_percentiles_approx` (aggregates_ext) is the
-exact tier; a 100 TB percentile never sorts globally — it builds
-per-shard mergeable summaries and merges them. The sketch here is an
-HDR-histogram-style decimal bucketing (2 significant digits → ≤5%
-relative error) chosen because the bucket function is pure integer /
-string arithmetic — deterministic in both engines, so the sketch
-merge is hash-exact, unlike float log2 bucketing whose FLOOR can
-straddle an ulp at power-of-two boundaries.
 """
 
 from __future__ import annotations
@@ -27,7 +18,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from ..session import checkpoint_with
 from .relational import t
 
 #: Deterministic event_type -> CDC op mapping: signup is the row
@@ -36,12 +26,6 @@ _CDC_OP_SQL = (
     "CASE event_type WHEN 'signup' THEN 'I' WHEN 'error' THEN 'D' "
     "ELSE 'U' END"
 )
-
-#: Sketch shards: stands in for per-executor partial sketches. 32
-#: matches the local test parallelism; at 100 TB it is "one partial
-#: sketch per input partition" and the merge moves <= |buckets| rows
-#: per shard instead of the data.
-SKETCH_SHARDS = 32
 
 
 def cdc_snapshot(log: DataFrame) -> DataFrame:
@@ -134,408 +118,6 @@ def d_cdc_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100, 0).cast("long").alias("value_cents"),
     )
     return cdc_snapshot(log)
-
-
-# ---------------------------------------------------------------------------
-# mergeable quantile sketch (HDR-style decimal buckets)
-# ---------------------------------------------------------------------------
-
-#: Bucket = (decimal magnitude, first two significant digits), i.e.
-#: 2 significant digits -> upper/lower bound ratio <= 1.05 within a
-#: bucket (<=5% relative error on any reported quantile). Computed
-#: with string arithmetic (LENGTH / SUBSTR of the integer's decimal
-#: spelling) because that is bit-identical across engines, unlike
-#: FLOOR(LOG2(v)) whose double rounding can straddle exact powers.
-_BUCKET_SQL = (
-    "CAST(LENGTH(CAST({v} AS STRING)) AS BIGINT) * 100 + "
-    "CAST(SUBSTR(CAST({v} AS STRING), 1, 2) AS BIGINT)"
-)
-#: Inclusive bucket upper bound: (d2+1)*10^(e-2) - 1 for e >= 2, else
-#: d2 itself (single-digit values are their own bucket). POWER is
-#: exact in a double up to 10^15; price cents stay far below.
-#: {b} / 100 in the >=10 branch always has fraction in [.10, .99]
-#: (d2 >= 10 there), so FLOOR of the double quotient can never sit on
-#: an integer boundary — engine-safe without div/// dialect splits.
-_BUCKET_UB_SQL = (
-    "CASE WHEN {b} % 100 >= 10 THEN "
-    "CAST(({b} % 100 + 1) * POWER(10, FLOOR({b} / 100) - 2) AS BIGINT) - 1 "
-    "ELSE {b} % 100 END"
-)
-
-
-def _quantile_sketch_oracle() -> str:
-    b = _BUCKET_SQL.format(v="cents")
-    ub = _BUCKET_UB_SQL.format(b="bucket")
-    return f"""
-    WITH vals AS (
-        SELECT l_returnflag AS flag,
-               l_orderkey % {SKETCH_SHARDS} AS shard,
-               CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS cents
-        FROM lineitem
-    ),
-    shard_sketch AS (
-        SELECT flag, shard, {b} AS bucket,
-               CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM vals GROUP BY flag, shard, bucket
-    ),
-    merged AS (
-        SELECT flag, bucket, CAST(SUM(cnt) AS BIGINT) AS cnt
-        FROM shard_sketch GROUP BY flag, bucket
-    ),
-    cdf AS (
-        SELECT flag, bucket, cnt,
-               SUM(cnt) OVER (PARTITION BY flag ORDER BY bucket) AS cum,
-               SUM(cnt) OVER (PARTITION BY flag) AS n
-        FROM merged
-    ),
-    qs AS (
-        SELECT flag, q,
-               MIN(bucket) AS qbucket
-        FROM cdf
-        CROSS JOIN (VALUES (50), (90), (99)) AS t(q)
-        WHERE cum * 100 >= q * n
-        GROUP BY flag, q
-    )
-    SELECT flag, CAST(q AS BIGINT) AS q,
-           CAST({ub.replace("bucket", "qbucket")} AS BIGINT)
-               AS quantile_ub_cents,
-           (SELECT CAST(MAX(n) AS BIGINT) FROM cdf c WHERE c.flag = qs.flag)
-               AS n_values,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM merged m
-            WHERE m.flag = qs.flag) AS n_buckets
-    FROM qs
-    ORDER BY flag, q
-    """
-
-
-@register(
-    "a_hdr_quantile_sketch",
-    oracle=_quantile_sketch_oracle(),
-    survey_ids=("A1", "A3", "W3", "F5"),
-)
-def a_hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable approximate quantiles — the 100 TB serving tier next
-    to the exact `a_percentiles_approx`: per-shard HDR-style decimal
-    bucket sketches (2 significant digits, <=5% relative error bound)
-    merged EXACTLY by summing bucket counts, then p50/p90/p99 read off
-    the merged CDF. The two-stage shape is the point: stage 1 is an
-    executor-local partial sketch (map-side combine does it for free),
-    stage 2 moves <= |buckets| rows per shard — never the data — and
-    bucket-count addition is associative+commutative, so the merged
-    sketch is bit-identical to a single-pass histogram (which is what
-    makes the result hash-checkable rather than
-    implementation-defined, unlike t-digest whose centroids depend on
-    merge order). Bucketing is integer/string arithmetic, identical
-    in both engines."""
-    vals = t(spark, sf_dir, "lineitem").select(
-        F.col("l_returnflag").alias("flag"),
-        (F.col("l_orderkey") % SKETCH_SHARDS).alias("shard"),
-        F.round(F.col("l_extendedprice") * 100, 0)
-        .cast("long")
-        .alias("cents"),
-    )
-    shard_sketch = vals.groupBy(
-        "flag", "shard", F.expr(_BUCKET_SQL.format(v="cents")).alias("bucket")
-    ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    merged = shard_sketch.groupBy("flag", "bucket").agg(
-        F.sum("cnt").cast("long").alias("cnt")
-    )
-    w_cum = Window.partitionBy("flag").orderBy("bucket")
-    w_all = Window.partitionBy("flag")
-    cdf = merged.select(
-        "flag",
-        "bucket",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(w_all).alias("n"),
-        F.count(F.lit(1)).over(w_all).cast("long").alias("n_buckets"),
-    )
-    qtargets = spark.createDataFrame([(50,), (90,), (99,)], "q long")
-    qs = (
-        cdf.crossJoin(F.broadcast(qtargets))
-        .filter(F.col("cum") * 100 >= F.col("q") * F.col("n"))
-        .groupBy("flag", "q")
-        .agg(
-            F.min("bucket").alias("qbucket"),
-            F.max("n").cast("long").alias("n_values"),
-            F.max("n_buckets").cast("long").alias("n_buckets"),
-        )
-    )
-    return qs.select(
-        "flag",
-        "q",
-        F.expr(_BUCKET_UB_SQL.format(b="qbucket"))
-        .cast("long")
-        .alias("quantile_ub_cents"),
-        "n_values",
-        "n_buckets",
-    ).orderBy("flag", "q")
-
-
-# ---------------------------------------------------------------------------
-# sketch resolution sweep (the quantile sketch's tuning curve)
-# ---------------------------------------------------------------------------
-
-#: Sweep resolutions: significant decimal digits per bucket. r=1 is
-#: ~tens-of-percent error with a handful of buckets; r=3 is <=0.5%
-#: with ~x100 the buckets — the sketch's size-vs-accuracy knob.
-SKETCH_RESOLUTIONS = (1, 2, 3)
-
-
-def _sketch_sweep_oracle() -> str:
-    res = ", ".join(f"({r})" for r in SKETCH_RESOLUTIONS)
-    return f"""
-    WITH vals AS (
-        SELECT CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS cents
-        FROM lineitem
-    ),
-    rb AS (
-        SELECT r, CAST(LENGTH(CAST(cents AS VARCHAR)) AS BIGINT) * 1000
-                   + CAST(SUBSTR(CAST(cents AS VARCHAR), 1, r) AS BIGINT)
-                   AS bucket,
-               CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM vals CROSS JOIN (VALUES {res}) AS t(r)
-        GROUP BY r, bucket
-    ),
-    cdf AS (
-        SELECT r, bucket, cnt,
-               SUM(cnt) OVER (PARTITION BY r ORDER BY bucket) AS cum,
-               SUM(cnt) OVER (PARTITION BY r) AS n,
-               COUNT(*) OVER (PARTITION BY r) AS n_buckets
-        FROM rb
-    ),
-    sk AS (
-        SELECT r, q, MIN(bucket) AS qbucket,
-               CAST(MAX(n_buckets) AS BIGINT) AS n_buckets
-        FROM cdf CROSS JOIN (VALUES (50), (90), (99)) AS t(q)
-        WHERE cum * 100 >= q * n
-        GROUP BY r, q
-    ),
-    ecdf AS (
-        SELECT cents,
-               SUM(cnt) OVER (ORDER BY cents) AS cum,
-               SUM(cnt) OVER () AS n
-        FROM (SELECT cents, CAST(COUNT(*) AS BIGINT) AS cnt
-              FROM vals GROUP BY cents)
-    ),
-    exact AS (
-        SELECT q, CAST(MIN(cents) AS BIGINT) AS exact_cents
-        FROM ecdf CROSS JOIN (VALUES (50), (90), (99)) AS t(q)
-        WHERE cum * 100 >= q * n
-        GROUP BY q
-    )
-    SELECT CAST(s.r AS BIGINT) AS r, CAST(s.q AS BIGINT) AS q,
-           CAST(CASE WHEN s.qbucket // 1000 > s.r THEN
-                    (s.qbucket % 1000 + 1)
-                    * POWER(10, s.qbucket // 1000 - s.r) - 1
-                ELSE s.qbucket % 1000 END AS BIGINT) AS sketch_ub_cents,
-           e.exact_cents,
-           CAST((CAST(CASE WHEN s.qbucket // 1000 > s.r THEN
-                    (s.qbucket % 1000 + 1)
-                    * POWER(10, s.qbucket // 1000 - s.r) - 1
-                ELSE s.qbucket % 1000 END AS BIGINT) - e.exact_cents)
-                * 1000000 // e.exact_cents AS BIGINT) AS rel_err_e6,
-           s.n_buckets
-    FROM sk s JOIN exact e ON e.q = s.q
-    ORDER BY r, q
-    """
-
-
-@register(
-    "a_sketch_resolution_sweep",
-    oracle=_sketch_sweep_oracle(),
-    survey_ids=("A1", "A3", "W3", "F5"),
-)
-def a_sketch_resolution_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The quantile sketch's tuning curve: p50/p90/p99 upper bounds at
-    1, 2, and 3 significant-digit bucket resolutions, each against the
-    EXACT quantile (relative error e6) and the bucket count it paid
-    for — the size-vs-accuracy knob a production sketch is sized with
-    (the decontam-n-gram-sweep discipline applied to A3). One scan:
-    the value relation is exploded across resolutions (one keyed
-    rollup reads it three times logically, never three scans), and the
-    exact tier reuses the identical CDF-walk machinery at infinite
-    resolution (bucket = the value itself), so the sweep's exactness
-    argument is the sketch's own. Sketch UB must always sit >= exact
-    with error shrinking ~10x per digit — pinned by pytest."""
-    res = spark.createDataFrame(
-        [(r,) for r in SKETCH_RESOLUTIONS], "r long"
-    )
-    vals = t(spark, sf_dir, "lineitem").select(
-        F.round(F.col("l_extendedprice") * 100, 0)
-        .cast("long")
-        .alias("cents")
-    )
-    rb = (
-        vals.crossJoin(F.broadcast(res))
-        .groupBy(
-            "r",
-            F.expr(
-                "CAST(LENGTH(CAST(cents AS STRING)) AS BIGINT) * 1000"
-                " + CAST(SUBSTR(CAST(cents AS STRING), 1, r) AS BIGINT)"
-            ).alias("bucket"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    w_cum = Window.partitionBy("r").orderBy("bucket")
-    w_all = Window.partitionBy("r")
-    cdf = rb.select(
-        "r",
-        "bucket",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(w_all).alias("n"),
-        F.count(F.lit(1)).over(w_all).cast("long").alias("n_buckets"),
-    )
-    qtargets = spark.createDataFrame([(50,), (90,), (99,)], "q long")
-    sk = (
-        cdf.crossJoin(F.broadcast(qtargets))
-        .filter(F.col("cum") * 100 >= F.col("q") * F.col("n"))
-        .groupBy("r", "q")
-        .agg(
-            F.min("bucket").alias("qbucket"),
-            F.max("n_buckets").cast("long").alias("n_buckets"),
-        )
-    )
-    # exact tier: value-TYPE relation (distinct cents — domain-bounded)
-    # with the de-globalized prefix scan, never a SinglePartition window
-    from .analytics_ext import global_running
-
-    dist = vals.groupBy("cents").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    tot = dist.agg(F.sum("cnt").alias("n"))
-    ecdf = global_running(dist, ["cents"], "cnt", "sum", "cum").crossJoin(
-        F.broadcast(tot)
-    )
-    exact = (
-        ecdf.crossJoin(F.broadcast(qtargets))
-        .filter(F.col("cum") * 100 >= F.col("q") * F.col("n"))
-        .groupBy("q")
-        .agg(F.min("cents").cast("long").alias("exact_cents"))
-    )
-    ub = (
-        "CAST(CASE WHEN qbucket div 1000 > r THEN"
-        " (qbucket % 1000 + 1) * POWER(10, qbucket div 1000 - r) - 1"
-        " ELSE qbucket % 1000 END AS BIGINT)"
-    )
-    return (
-        sk.join(exact, "q")
-        .select(
-            "r",
-            "q",
-            F.expr(ub).alias("sketch_ub_cents"),
-            "exact_cents",
-            F.expr(
-                f"({ub} - exact_cents) * 1000000 div exact_cents"
-            )
-            .cast("long")
-            .alias("rel_err_e6"),
-            "n_buckets",
-        )
-        .orderBy("r", "q")
-    )
-
-
-# ---------------------------------------------------------------------------
-# labeler agreement (Cohen's kappa on the lang-ID confusion matrix)
-# ---------------------------------------------------------------------------
-
-def _kappa_oracle() -> str:
-    from .textops import LANGID_CONFUSION_SQL
-
-    # LANGID_CONFUSION_SQL is a complete `WITH ... SELECT` statement;
-    # nest it as a derived relation and aggregate kappa on top.
-    return f"""
-    WITH conf AS ({LANGID_CONFUSION_SQL}),
-    totals AS (
-        SELECT CAST(SUM(n_docs) AS BIGINT) AS n,
-               CAST(SUM(n_docs) FILTER (WHERE actual = predicted)
-                    AS BIGINT) AS agree
-        FROM conf
-    ),
-    rows_ AS (
-        SELECT actual AS label, CAST(SUM(n_docs) AS BIGINT) AS r
-        FROM conf GROUP BY actual
-    ),
-    cols_ AS (
-        SELECT predicted AS label, CAST(SUM(n_docs) AS BIGINT) AS c
-        FROM conf GROUP BY predicted
-    ),
-    chance AS (
-        SELECT CAST(COALESCE(SUM(r.r * c.c), 0) AS BIGINT) AS s
-        FROM rows_ r JOIN cols_ c ON c.label = r.label
-    )
-    SELECT t.n AS n_docs, t.agree AS n_agree,
-           CAST(t.agree * 1000000 // t.n AS BIGINT) AS po_e6,
-           CAST(ch.s * 1000000 // (t.n * t.n) AS BIGINT) AS pe_e6,
-           CAST((t.n * t.agree - ch.s) * 1000000
-                // NULLIF(t.n * t.n - ch.s, 0) AS BIGINT) AS kappa_e6
-    FROM totals t CROSS JOIN chance ch
-    """
-
-
-@register(
-    "x4_labeler_agreement_kappa",
-    oracle=_kappa_oracle(),
-    survey_ids=("X4", "A2", "F6"),
-)
-def x4_labeler_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa between the fixture's declared language labels
-    and the trigram naive-Bayes classifier's predictions — the
-    inter-annotator-agreement number a labeling pipeline reports
-    (metadata vs content-classifier agreement, chance-corrected; raw
-    accuracy over-credits skewed label distributions). Kappa is a pure
-    rational of confusion-matrix integers, so the fixed point is EXACT
-    with no logs: kappa = (n·trace − Σ rᵢcᵢ) / (n² − Σ rᵢcᵢ), emitted
-    as e6 via integer division (truncating identically in both
-    engines; n ≤ ~10^6 keeps n²·10^6 inside int64 — per-shard kappa
-    merge is the >10^6-doc path since confusion matrices sum). Builds
-    on the registered confusion relation (one extra |labels|-bounded
-    rollup). NULLIF(n² − Σ rᵢcᵢ, 0) on BOTH engines pins the
-    degenerate single-class matrix (s = n², kappa undefined) to NULL
-    instead of a DuckDB divide-by-zero vs Spark-NULL divergence."""
-    from .textops import x4_trigram_langid_confusion
-
-    # |langs|^2-bounded: pin it so the three rollups (totals, row
-    # marginals, column marginals) read the matrix, not the corpus 3x
-    conf = x4_trigram_langid_confusion(spark, sf_dir).localCheckpoint(
-        eager=True
-    )
-    totals = conf.agg(
-        F.sum("n_docs").cast("long").alias("n"),
-        F.sum(
-            F.when(F.col("actual") == F.col("predicted"), F.col("n_docs"))
-        )
-        .cast("long")
-        .alias("agree"),
-    )
-    rows_ = conf.groupBy(F.col("actual").alias("label")).agg(
-        F.sum("n_docs").alias("r")
-    )
-    cols_ = conf.groupBy(F.col("predicted").alias("label")).agg(
-        F.sum("n_docs").alias("c")
-    )
-    chance = (
-        rows_.join(cols_, "label")
-        .agg(
-            F.coalesce(F.sum(F.col("r") * F.col("c")), F.lit(0))
-            .cast("long")
-            .alias("s")
-        )
-    )
-    return (
-        totals.crossJoin(F.broadcast(chance))
-        .select(
-            F.col("n").alias("n_docs"),
-            F.col("agree").alias("n_agree"),
-            F.expr("agree * 1000000 div n").cast("long").alias("po_e6"),
-            F.expr("s * 1000000 div (n * n)").cast("long").alias("pe_e6"),
-            F.expr(
-                "(n * agree - s) * 1000000 div nullif(n * n - s, 0)"
-            )
-            .cast("long")
-            .alias("kappa_e6"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -664,7 +246,6 @@ def x4_packing_context_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("context_len")
     )
-
 
 
 # ---------------------------------------------------------------------------
@@ -854,219 +435,6 @@ def x4_doremi_weight_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-# ---------------------------------------------------------------------------
-# Bloom-filter FPR sweep (the join-pruning knob)
-# ---------------------------------------------------------------------------
-
-#: Position widths swept: h hex chars -> m = 16^h buckets per hash.
-BLOOM_SWEEP_HEX = (2, 3, 4)
-
-
-def _bloom_sweep_oracle() -> str:
-    from .skew import BLOOM_HASHES
-
-    hs = ", ".join(f"({h})" for h in BLOOM_SWEEP_HEX)
-    dim_pos = " UNION ALL ".join(
-        f"SELECT {i} AS hash_id,"
-        f" SUBSTR(MD5('b{i}|' || CAST(c_custkey AS VARCHAR)), 1, 4)"
-        " AS pos4 FROM dim"
-        for i in range(BLOOM_HASHES)
-    )
-    probe_pos = " UNION ALL ".join(
-        f"SELECT o_custkey, {i} AS hash_id,"
-        f" SUBSTR(MD5('b{i}|' || CAST(o_custkey AS VARCHAR)), 1, 4)"
-        " AS pos4 FROM fact_keys"
-        for i in range(BLOOM_HASHES)
-    )
-    return f"""
-    WITH dim AS (
-        SELECT DISTINCT c_custkey FROM customer
-        WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 0
-    ),
-    fact_keys AS (SELECT DISTINCT o_custkey FROM orders),
-    dim4 AS ({dim_pos}),
-    probe4 AS ({probe_pos}),
-    hh AS (SELECT h FROM (VALUES {hs}) AS t(h)),
-    bits AS (
-        SELECT DISTINCT hh.h, d.hash_id, SUBSTR(d.pos4, 1, hh.h) AS pos
-        FROM dim4 d CROSS JOIN hh
-    ),
-    hits AS (
-        SELECT p.o_custkey, hh.h
-        FROM probe4 p
-        CROSS JOIN hh
-        JOIN bits b ON b.h = hh.h AND b.hash_id = p.hash_id
-                   AND b.pos = SUBSTR(p.pos4, 1, hh.h)
-        GROUP BY p.o_custkey, hh.h
-        HAVING COUNT(*) = {BLOOM_HASHES}
-    ),
-    match_keys AS (
-        SELECT o_custkey FROM fact_keys
-        WHERE o_custkey IN (SELECT c_custkey FROM dim)
-    ),
-    per_h AS (
-        SELECT h.h,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM bits b
-                 WHERE b.h = h.h) AS n_filter_entries,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM hits t
-                 WHERE t.h = h.h) AS n_pass_keys,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM hits t
-                 WHERE t.h = h.h
-                   AND t.o_custkey NOT IN
-                       (SELECT o_custkey FROM match_keys)) AS n_false_pos,
-               (SELECT COUNT(*) FROM match_keys m
-                 WHERE m.o_custkey NOT IN
-                       (SELECT o_custkey FROM hits t WHERE t.h = h.h)) = 0
-                   AS zero_false_neg
-        FROM hh h
-    )
-    SELECT CAST(h AS BIGINT) AS hex_chars,
-           CAST(POWER(16, h) AS BIGINT) AS m_buckets,
-           n_filter_entries, n_pass_keys, n_false_pos,
-           CAST(n_false_pos * 1000000 // GREATEST(
-               (SELECT COUNT(*) FROM fact_keys)
-               - (SELECT COUNT(*) FROM match_keys), 1) AS BIGINT)
-               AS fp_ppm,
-           zero_false_neg
-    FROM per_h
-    ORDER BY hex_chars
-    """
-
-
-@register(
-    "j_bloom_fpr_sweep",
-    oracle=_bloom_sweep_oracle(),
-    survey_ids=("J5", "J6", "P6", "A1"),
-)
-def j_bloom_fpr_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Bloom prejoin's tuning curve: measured false-positive rate
-    vs filter size (m = 16^h buckets per hash for h hex chars of the
-    md5 position — 256 / 4096 / 65536), on the SAME dim/fact key sets
-    `j_bloom_prejoin_prune` serves at its fixed 4096. Sizing a scan-
-    side filter is bits-per-key vs wasted-shuffle-rows — the knob a
-    100 TB fact join pins with a measured curve, not the asymptotic
-    (1-e^(-kn/m))^k formula. One md5 pass: h-char positions are
-    PREFIXES of the 4-char position (SUBSTR prefix property), so the
-    sweep derives every width from one hashed relation — never one
-    hash pass per width. Zero-false-negatives holds at every width by
-    construction (a Bloom filter can only over-admit); pinned per row
-    and by pytest, with monotone FPR decay as m grows."""
-    from .skew import BLOOM_HASHES
-
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
-    dim = (
-        cust.filter(
-            (F.col("c_mktsegment") == "BUILDING") & (F.col("c_acctbal") > 0)
-        )
-        .select("c_custkey")
-        .distinct()
-    )
-    fact_keys, (n_fact,) = checkpoint_with(
-        orders.select("o_custkey").distinct(), F.count(F.lit(1))
-    )
-
-    def pos4(col: str, src: DataFrame, out: str) -> DataFrame:
-        structs = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("hash_id"),
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit(f"b{i}|"), F.col(col).cast("string")
-                            )
-                        ),
-                        1,
-                        4,
-                    ).alias("pos4"),
-                )
-                for i in range(BLOOM_HASHES)
-            ]
-        )
-        return src.select(
-            F.col(col).alias(out), F.explode(structs).alias("p")
-        ).select(out, "p.hash_id", "p.pos4")
-
-    hh = spark.createDataFrame([(h,) for h in BLOOM_SWEEP_HEX], "h long")
-    bits = (
-        pos4("c_custkey", dim, "k")
-        .crossJoin(F.broadcast(hh))
-        .select("h", "hash_id", F.expr("substr(pos4, 1, h)").alias("pos"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    probes = (
-        pos4("o_custkey", fact_keys, "o_custkey")
-        .crossJoin(F.broadcast(hh))
-        .select(
-            "o_custkey",
-            "h",
-            "hash_id",
-            F.expr("substr(pos4, 1, h)").alias("pos"),
-        )
-    )
-    hits = (
-        probes.join(bits, ["h", "hash_id", "pos"])
-        .groupBy("o_custkey", "h")
-        .agg(F.count(F.lit(1)).alias("k_hit"))
-        .filter(F.col("k_hit") == BLOOM_HASHES)
-        .select("o_custkey", "h")
-        .localCheckpoint(eager=True)
-    )
-    match_keys, (n_match,) = checkpoint_with(
-        fact_keys.join(
-            dim.withColumnRenamed("c_custkey", "o_custkey"),
-            "o_custkey",
-            "left_semi",
-        ),
-        F.count(F.lit(1)),
-    )
-    fp = hits.join(match_keys, "o_custkey", "left_anti")
-    missed = (
-        match_keys.crossJoin(F.broadcast(hh))
-        .join(hits, ["o_custkey", "h"], "left_anti")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("n_missed"))
-    )
-    per_h = (
-        hh.join(
-            bits.groupBy("h").agg(
-                F.count(F.lit(1)).cast("long").alias("n_filter_entries")
-            ),
-            "h",
-        )
-        .join(
-            hits.groupBy("h").agg(
-                F.count(F.lit(1)).cast("long").alias("n_pass_keys")
-            ),
-            "h",
-        )
-        .join(
-            fp.groupBy("h").agg(
-                F.count(F.lit(1)).cast("long").alias("n_false_pos")
-            ),
-            "h",
-            "left",
-        )
-        .join(missed, "h", "left")
-    )
-    denom = max(n_fact - n_match, 1)
-    return per_h.select(
-        F.col("h").alias("hex_chars"),
-        F.expr("CAST(POWER(16, h) AS BIGINT)").alias("m_buckets"),
-        "n_filter_entries",
-        "n_pass_keys",
-        F.coalesce(F.col("n_false_pos"), F.lit(0))
-        .cast("long")
-        .alias("n_false_pos"),
-        F.call_function("div", F.coalesce("n_false_pos", F.lit(0)) * 1_000_000, F.lit(denom))
-        .cast("long")
-        .alias("fp_ppm"),
-        F.col("n_missed").isNull().alias("zero_false_neg"),
-    ).orderBy("hex_chars")
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,7 @@
 """Round-12 surfaces: the ExactSubstr removal→rematerialize pipeline,
-DSIR importance resampling, corpus-law fits (Zipf / Heaps), the
-t-closeness privacy audit, and the Matryoshka prefix-dim recall sweep.
+DSIR importance resampling, the t-closeness and DP-sensitivity
+audits, CDC chunking, the perplexity filter, the session-gap sweep
+and the LM interpolation sweep.
 
 Reference parity: the reference (HYUNJOON94/etl-generator-demo)
 delegates all execution to PostgreSQL/MySQL behind an LLM
@@ -505,220 +506,6 @@ def x4_dsir_importance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dsir_scored(spark, sf_dir)
         .orderBy(F.desc("dsir_lr_e6"), "doc_id")
         .limit(DSIR_BUDGET)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Zipf rank-frequency fit
-# ---------------------------------------------------------------------------
-
-#: Terms fitted (the head of the rank-frequency curve; Zipf holds on
-#: the head, the tail bends — standard practice fits top-N).
-ZIPF_TOP_N = 100
-
-
-@register(
-    "x4_zipf_alpha_fit",
-    oracle=f"""
-    WITH tok AS (
-        SELECT UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM documents
-    ),
-    freq AS (
-        SELECT tk, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM tok GROUP BY tk
-        ORDER BY cnt DESC, tk
-        LIMIT {ZIPF_TOP_N}
-    ),
-    ranked AS (
-        SELECT cnt,
-               CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, tk) AS BIGINT) AS rk
-        FROM freq
-    ),
-    xy AS (
-        SELECT CAST(FLOOR(LN(rk) * 1000000) AS BIGINT) AS x,
-               CAST(FLOOR(LN(cnt) * 1000000) AS BIGINT) AS y
-        FROM ranked
-    ),
-    s AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-               CAST(SUM(x * y) AS BIGINT) AS sxy,
-               CAST(SUM(x * x) AS BIGINT) AS sxx
-        FROM xy
-    )
-    SELECT n AS n_terms,
-           CAST(-((n * sxy - sx * sy)
-                  // ((n * sxx - sx * sx) // 1000000)) AS BIGINT) AS alpha_e6,
-           CAST((sy // n)
-                - (((n * sxy - sx * sy)
-                    // ((n * sxx - sx * sx) // 1000000)) * (sx // n))
-                  // 1000000 AS BIGINT) AS intercept_e6
-    FROM s
-    """,
-    survey_ids=("X4", "A1", "O4", "F6"),
-)
-def x4_zipf_alpha_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf's-law exponent of the corpus: OLS fit of ln(freq) on
-    ln(rank) over the top-{N} terms — the first sanity statistic of
-    any scraped corpus (natural text gives alpha ≈ 1; alpha far off
-    flags boilerplate or synthetic data). Per the ln-floor discipline
-    both coordinates floor to e6 integers FIRST, so the regression
-    moments are exact int64 sums and the slope/intercept are integer
-    divisions truncating identically in both engines (negative slope:
-    both truncate toward zero). Overflow audit: x ≤ ln(100)·1e6,
-    y ≤ ln(corpus)·1e6 ≈ 1.5e7 ⇒ n·Σxy ≤ ~7e17 < 2^63.
-
-    Plan: one token scan → map-combined term count → top-N
-    (TakeOrderedAndProject) → a 100-row moment aggregate. The fit
-    relation is N-bounded regardless of corpus size."""
-    docs = t(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(F.split("text", " ")).alias("tk"))
-    freq = (
-        tok.groupBy("tk")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .orderBy(F.desc("cnt"), "tk")
-        .limit(ZIPF_TOP_N)
-    )
-    ranked = freq.select(
-        "cnt",
-        F.row_number()
-        .over(Window.orderBy(F.desc("cnt"), "tk"))
-        .cast("long")
-        .alias("rk"),
-    )
-    xy = ranked.select(
-        F.floor(F.log("rk") * 1_000_000).cast("long").alias("x"),
-        F.floor(F.log("cnt") * 1_000_000).cast("long").alias("y"),
-    )
-    s = xy.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    slope = "((n * sxy - sx * sy) div ((n * sxx - sx * sx) div 1000000))"
-    return s.select(
-        F.col("n").alias("n_terms"),
-        F.expr(f"-{slope}").cast("long").alias("alpha_e6"),
-        F.expr(f"(sy div n) - ({slope} * (sx div n)) div 1000000")
-        .cast("long")
-        .alias("intercept_e6"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Heaps-law vocabulary-growth fit
-# ---------------------------------------------------------------------------
-
-@register(
-    "x4_heaps_law_fit",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id,
-               UNNEST(STRING_SPLIT(text, ' ')) AS tk
-        FROM documents
-    ),
-    nt AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS ntok
-        FROM tok GROUP BY doc_id
-    ),
-    firsts AS (SELECT tk, MIN(doc_id) AS fd FROM tok GROUP BY tk),
-    newv AS (SELECT fd AS doc_id, CAST(COUNT(*) AS BIGINT) AS nv
-             FROM firsts GROUP BY fd),
-    lattice AS (
-        SELECT nt.doc_id, nt.ntok, COALESCE(newv.nv, 0) AS nv
-        FROM nt LEFT JOIN newv USING (doc_id)
-    ),
-    cum AS (
-        SELECT doc_id,
-               SUM(ntok) OVER (ORDER BY doc_id
-                               ROWS UNBOUNDED PRECEDING) AS cumn,
-               SUM(nv) OVER (ORDER BY doc_id
-                             ROWS UNBOUNDED PRECEDING) AS cumv
-        FROM lattice
-    ),
-    xy AS (
-        SELECT CAST(FLOOR(LN(cumn) * 1000) AS BIGINT) AS x,
-               CAST(FLOOR(LN(cumv) * 1000) AS BIGINT) AS y
-        FROM cum
-    ),
-    s AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-               CAST(SUM(x * y) AS BIGINT) AS sxy,
-               CAST(SUM(x * x) AS BIGINT) AS sxx
-        FROM xy
-    )
-    SELECT n AS n_checkpoints,
-           CAST((n * sxy - sx * sy)
-                // ((n * sxx - sx * sx) // 1000000) AS BIGINT) AS beta_e6,
-           CAST(((sy // n) * 1000)
-                - (((n * sxy - sx * sy)
-                    // ((n * sxx - sx * sx) // 1000000)) * ((sx // n) * 1000))
-                  // 1000000 AS BIGINT) AS lnk_e6
-    FROM s
-    """,
-    survey_ids=("X4", "A1", "W3", "F6"),
-)
-def x4_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps'-law fit V(n) ≈ K·n^β: cumulative vocabulary size vs
-    cumulative token count at every document boundary (doc_id order),
-    OLS on the ln-ln curve — the second corpus-law sanity statistic
-    next to `x4_zipf_alpha_fit` (natural text: β ≈ 0.5–0.8; β near 1
-    means the vocabulary never saturates — an OCR/noise flag; β near 0
-    flags template text).
-
-    The cumulative curves are distributed prefix scans
-    (`global_running` — range-partitioned two-phase, no
-    single-partition window) over the per-doc lattice: cumn = running
-    Σ tokens, cumv = running Σ first-occurrence counts (a term's first
-    occurrence attributed to its MIN doc_id — order-free). Coordinates
-    floor to e3 (5000 checkpoints at sf0.1: e3 keeps n·Σx² ≈ 5.5e15
-    inside int64 where e6 would overflow); the fit is then exact
-    integer math truncating identically in both engines."""
-    from etl_generator_demo_spark.operators.analytics_ext import global_running
-
-    docs = t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tk")
-    )
-    nt = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("ntok")
-    )
-    newv = (
-        tok.groupBy("tk")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("nv"))
-    )
-    lattice = nt.join(newv, "doc_id", "left").select(
-        "doc_id", "ntok", F.coalesce("nv", F.lit(0)).cast("long").alias("nv")
-    )
-    cum = global_running(
-        lattice, [F.col("doc_id").asc()], "ntok", kind="sum", out_col="cumn"
-    )
-    cum = global_running(
-        cum, [F.col("doc_id").asc()], "nv", kind="sum", out_col="cumv"
-    )
-    xy = cum.select(
-        F.floor(F.log("cumn") * 1_000).cast("long").alias("x"),
-        F.floor(F.log("cumv") * 1_000).cast("long").alias("y"),
-    )
-    s = xy.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    slope = "((n * sxy - sx * sy) div ((n * sxx - sx * sx) div 1000000))"
-    return s.select(
-        F.col("n").alias("n_checkpoints"),
-        F.expr(slope).cast("long").alias("beta_e6"),
-        F.expr(f"((sy div n) * 1000) - ({slope} * ((sx div n) * 1000)) div 1000000")
-        .cast("long")
-        .alias("lnk_e6"),
     )
 
 
@@ -1296,282 +1083,6 @@ def st_session_gap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_session_events",
         )
         .orderBy("gap_min")
-    )
-
-
-# ---------------------------------------------------------------------------
-# ranker agreement: BM25 vs QL-Dirichlet (Spearman over the hit set)
-# ---------------------------------------------------------------------------
-
-def _ranker_agreement_oracle() -> str:
-    from .retrieval import BM25_B, BM25_K1, BM25_QUERY_TERMS
-    from .surfaces_r11 import QL_MU
-
-    terms = ", ".join(f"'{x}'" for x in BM25_QUERY_TERMS)
-    uterms = " UNION ALL ".join(
-        f"SELECT '{x}' AS term" for x in BM25_QUERY_TERMS
-    )
-    return f"""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-    ),
-    dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok GROUP BY doc_id),
-    stats AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(dl) AS BIGINT) AS total_len
-        FROM dl
-    ),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM tok WHERE term IN ({terms}) GROUP BY doc_id, term
-    ),
-    dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term),
-    bm25 AS (
-        SELECT tf.doc_id,
-               CAST(SUM(CAST(FLOOR(
-                   (LN(1 + (stats.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5))
-                    * (tf.tf * {BM25_K1 + 1}))
-                   / (tf.tf + {BM25_K1} * (1 - {BM25_B}
-                      + {BM25_B} * dl.dl
-                        / (CAST(stats.total_len AS DOUBLE) / stats.n_docs)))
-                   * 1000000) AS BIGINT)) AS BIGINT) AS bm25_e6
-        FROM tf
-        JOIN dfreq USING (term)
-        JOIN dl USING (doc_id)
-        CROSS JOIN stats
-        GROUP BY tf.doc_id
-    ),
-    q AS ({uterms}),
-    ctf AS (
-        SELECT q.term, CAST(COUNT(tok.term) AS BIGINT) AS ctf
-        FROM q LEFT JOIN tok ON tok.term = q.term GROUP BY q.term
-    ),
-    ql AS (
-        SELECT d.doc_id,
-               CAST(SUM(CAST(FLOOR(LN(
-                   (COALESCE(t.tf, 0)
-                    + {QL_MU} * (c.ctf * 1.0 / s.total_len))
-                   / (d.dl + {QL_MU})
-               ) * 1000000) AS BIGINT)) AS BIGINT) AS ql_e6
-        FROM dl d
-        CROSS JOIN ctf c
-        CROSS JOIN stats s
-        LEFT JOIN tf t ON t.doc_id = d.doc_id AND t.term = c.term
-        WHERE c.ctf > 0
-        GROUP BY d.doc_id
-    ),
-    common AS (
-        SELECT b.doc_id, b.bm25_e6, ql.ql_e6
-        FROM bm25 b JOIN ql USING (doc_id)
-    ),
-    ranked AS (
-        SELECT doc_id,
-               CAST(ROW_NUMBER() OVER (ORDER BY bm25_e6, doc_id) AS BIGINT) AS ra,
-               CAST(ROW_NUMBER() OVER (ORDER BY ql_e6, doc_id) AS BIGINT) AS rb
-        FROM common
-    ),
-    s2 AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM((ra - rb) * (ra - rb)) AS BIGINT) AS sum_d2
-        FROM ranked
-    )
-    SELECT n AS n_common, sum_d2,
-           CAST(FLOOR((1 - 6.0 * sum_d2 / (n * (n * n - 1.0)))
-                      * 1000000) AS BIGINT) AS spearman_e6
-    FROM s2
-    """
-
-
-@register(
-    "x4_ranker_agreement",
-    oracle=_ranker_agreement_oracle(),
-    survey_ids=("X4", "W1", "A2", "J1"),
-)
-def x4_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-ranker agreement: Spearman rank correlation between BM25
-    and query-likelihood-Dirichlet over the documents that match the
-    shared fixed query — the eval a retrieval stack runs before
-    fusing rankers (RRF is only worth its cost when the rankers
-    DISAGREE; ρ near 1 says one ranker suffices). Both scores reuse
-    the registered scorers' exact spellings (per-term ln-floored e6,
-    order-free integer per-doc sums); ranks are ROW_NUMBER
-    permutations under (score, doc_id) total orders, and the Spearman
-    closed form runs on exact BIGINT sums with the identical
-    float-then-floor sequence both engines (the
-    `x4_spearman_rank_corr` precedent).
-
-    Scale: tf filters to query terms at the explode; the hit-doc
-    relation is what both rankings permute — both run through the
-    distributed `global_row_number`, never a single-partition window;
-    the rank join keys on doc_id."""
-    from etl_generator_demo_spark.operators.analytics_ext import (
-        global_row_number,
-    )
-
-    from .retrieval import BM25_B, BM25_K1, BM25_QUERY_TERMS
-    from .surfaces_r11 import QL_MU
-
-    docs = t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_len"),
-    )
-    tf = (
-        tok.filter(F.col("term").isin(*BM25_QUERY_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    avgdl = F.col("total_len").cast("double") / F.col("n_docs")
-    idf = F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    term_score = (idf * (F.col("tf") * (BM25_K1 + 1))) / (
-        F.col("tf")
-        + BM25_K1 * (F.lit(1) - BM25_B + BM25_B * F.col("dl") / avgdl)
-    )
-    bm25 = (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.floor(term_score * 1_000_000).cast("long").alias("ts_e6"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("ts_e6").cast("long").alias("bm25_e6"))
-    )
-    qterms = spark.createDataFrame(
-        [(x,) for x in BM25_QUERY_TERMS], "term string"
-    )
-    ctf = (
-        qterms.join(tok, "term", "left")
-        .groupBy("term")
-        .agg(F.count("doc_id").cast("long").alias("ctf"))
-        .filter(F.col("ctf") > 0)
-    )
-    ql = (
-        dl.crossJoin(F.broadcast(ctf))
-        .crossJoin(F.broadcast(stats))
-        .join(tf, ["doc_id", "term"], "left")
-        .select(
-            "doc_id",
-            F.floor(
-                F.log(
-                    (
-                        F.coalesce(F.col("tf"), F.lit(0))
-                        + QL_MU * (F.col("ctf") * F.lit(1.0) / F.col("total_len"))
-                    )
-                    / (F.col("dl") + QL_MU)
-                )
-                * 1_000_000
-            )
-            .cast("long")
-            .alias("lp_e6"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("lp_e6").cast("long").alias("ql_e6"))
-    )
-    common = bm25.join(ql, "doc_id")
-    ra, _ = global_row_number(
-        common.select("doc_id", "bm25_e6"),
-        [F.col("bm25_e6").asc(), F.col("doc_id").asc()],
-        rn_col="ra",
-    )
-    rb, _ = global_row_number(
-        common.select("doc_id", "ql_e6"),
-        [F.col("ql_e6").asc(), F.col("doc_id").asc()],
-        rn_col="rb",
-    )
-    d = ra.select("doc_id", "ra").join(rb.select("doc_id", "rb"), "doc_id")
-    dd = (F.col("ra") - F.col("rb")) * (F.col("ra") - F.col("rb"))
-    return d.agg(
-        F.count(F.lit(1)).cast("long").alias("n_common"),
-        F.sum(dd).cast("long").alias("sum_d2"),
-    ).select(
-        "n_common",
-        "sum_d2",
-        F.floor(
-            (
-                1
-                - 6.0
-                * F.col("sum_d2")
-                / (F.col("n_common") * (F.col("n_common") * F.col("n_common") - 1.0))
-            )
-            * 1_000_000
-        )
-        .cast("long")
-        .alias("spearman_e6"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# per-source token entropy
-# ---------------------------------------------------------------------------
-
-@register(
-    "x4_entropy_per_source",
-    oracle="""
-    WITH tok AS (
-        SELECT source, UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM documents
-    ),
-    cnt AS (
-        SELECT source, tk, CAST(COUNT(*) AS BIGINT) AS c
-        FROM tok GROUP BY source, tk
-    ),
-    nn AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n FROM cnt GROUP BY source),
-    lp AS (
-        SELECT cnt.source, cnt.c,
-               CAST(FLOOR(LN(cnt.c * 1.0 / nn.n) * 1000000) AS BIGINT) AS lp_e6
-        FROM cnt JOIN nn USING (source)
-    )
-    SELECT lp.source,
-           nn.n AS n_tokens,
-           CAST(COUNT(*) AS BIGINT) AS n_types,
-           CAST(-SUM(lp.c * lp.lp_e6) // nn.n AS BIGINT) AS entropy_e6
-    FROM lp JOIN nn USING (source)
-    GROUP BY lp.source, nn.n
-    ORDER BY lp.source
-    """,
-    survey_ids=("X4", "A1", "F6"),
-)
-def x4_entropy_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shannon entropy of each source's unigram distribution (nats,
-    e6) — the lexical-diversity number a mixture designer reads next
-    to the Gini/Zipf stats: low-entropy sources are templated or
-    boilerplate-heavy and earn a down-weight regardless of volume.
-    H = −Σ p ln p computed as −(Σ c·floor(1e6·ln(c/N))) div N — one
-    ln-floor per (source, type), exact integer sums, truncating
-    division identical both engines. Plan: one token scan → two
-    map-combined rollups keyed on source — linear, |sources|-bounded
-    output."""
-    docs = t(spark, sf_dir, "documents")
-    tok = docs.select("source", F.explode(F.split("text", " ")).alias("tk"))
-    cnt = tok.groupBy("source", "tk").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    nn = cnt.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
-    lp = cnt.join(nn, "source").select(
-        "source",
-        "c",
-        "n",
-        F.floor(F.log(F.col("c") * F.lit(1.0) / F.col("n")) * 1_000_000)
-        .cast("long")
-        .alias("lp_e6"),
-    )
-    return (
-        lp.groupBy("source", "n")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_types"),
-            F.expr("CAST(-SUM(c * lp_e6) div n AS LONG)").alias("entropy_e6"),
-        )
-        .select(
-            "source",
-            F.col("n").alias("n_tokens"),
-            "n_types",
-            "entropy_e6",
-        )
-        .orderBy("source")
     )
 
 

@@ -12,13 +12,7 @@ join graph) but that Spark either spells differently or must rewrite:
 - null-safe equality joins (``<=>`` vs ``IS NOT DISTINCT FROM``);
 - ``IGNORE NULLS`` window navigation (``nth_value``);
 - calendar interval arithmetic (end-of-month clamping);
-- nearest as-of join (backward + forward pick-closest);
-- OLS regression slope in overflow-safe fixed point;
-- Jensen-Shannon source divergence on the documents table.
-
-All scores integer fixed-point or exact integer sums (e9-floored-log
-idiom); squared/products carried as DECIMAL(38,0) per the round-7
-overflow advice so the identical plan survives 100 TB group sizes.
+- nearest as-of join (backward + forward pick-closest).
 """
 
 from __future__ import annotations
@@ -338,236 +332,3 @@ def j8_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("f_ts"))
         .alias("nearest_click_ts"),
     ).orderBy("event_id")
-
-
-@register(
-    "a_regr_slope_revenue",
-    oracle="""
-    WITH day AS (
-        SELECT CAST(date_diff('day', DATE '1995-01-01',
-                              CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
-               CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS y
-        FROM orders GROUP BY 1
-    ),
-    s AS (
-        SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-               CAST(SUM(CAST(x AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sx,
-               CAST(SUM(CAST(y AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sy,
-               CAST(SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0)))
-                    AS DECIMAL(38,0)) AS sxx,
-               CAST(SUM(CAST(x AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0)))
-                    AS DECIMAL(38,0)) AS sxy
-        FROM day
-    )
-    SELECT CAST(n AS BIGINT) AS n_days,
-           CAST(FLOOR(CAST(n * sxy - sx * sy AS DOUBLE) * 1000000.0
-                      / CAST(n * sxx - sx * sx AS DOUBLE)) AS BIGINT)
-               AS slope_cents_per_day_e6,
-           CAST(FLOOR(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) AS BIGINT)
-               AS mean_daily_cents,
-           CAST(FLOOR(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) AS BIGINT)
-               AS mean_day_index
-    FROM s
-    """,
-    survey_ids=("A2", "F6"),
-)
-def a_regr_slope_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OLS regression slope of daily revenue over time — the trend
-    monitor joining Mann-Kendall/CUSUM in the monitoring kit, as the
-    closed-form least-squares line. Spark/DuckDB both ship
-    ``regr_slope``, but its float accumulation is summation-order
-    dependent (hash-unstable); instead the five sufficient statistics
-    (n, Σx, Σy, Σx², Σxy) are EXACT integer sums carried as
-    DECIMAL(38,0) — the r7-advice overflow discipline: x ≈ 2.5e3
-    (day index from a fixed 1995 origin), y = daily cents, so n·Σxy
-    overflows int64 at sf≥1 but sits far inside decimal38. One
-    map-side-combinable global aggregate; the only floats are the two
-    final exact-decimal→double divisions, identical in both engines.
-    Slope is shift-invariant, so the fixed origin changes nothing."""
-    dec = "decimal(38,0)"
-    day = (
-        t(spark, sf_dir, "orders")
-        .groupBy(
-            F.datediff(F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date"))
-            .cast("long")
-            .alias("x")
-        )
-        .agg(F.sum(F.floor(F.col("o_totalprice") * 100).cast("long")).cast("long").alias("y"))
-    )
-    x_d, y_d = F.col("x").cast(dec), F.col("y").cast(dec)
-    s = day.agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum(x_d).cast(dec).alias("sx"),
-        F.sum(y_d).cast(dec).alias("sy"),
-        F.sum(x_d * x_d).cast(dec).alias("sxx"),
-        F.sum(x_d * y_d).cast(dec).alias("sxy"),
-    )
-    n, sx, sy, sxx, sxy = (F.col(c) for c in ("n", "sx", "sy", "sxx", "sxy"))
-    return s.select(
-        n.cast("long").alias("n_days"),
-        F.floor(
-            (n * sxy - sx * sy).cast("double") * 1_000_000.0
-            / (n * sxx - sx * sx).cast("double")
-        )
-        .cast("long")
-        .alias("slope_cents_per_day_e6"),
-        F.floor(sy.cast("double") / n.cast("double")).cast("long").alias("mean_daily_cents"),
-        F.floor(sx.cast("double") / n.cast("double")).cast("long").alias("mean_day_index"),
-    )
-
-
-@register(
-    "x4_js_divergence_sources",
-    oracle="""
-    WITH h AS (
-        SELECT source, CAST(n_chars // 100 AS BIGINT) AS bin,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM documents GROUP BY 1, 2
-    ),
-    tot AS (SELECT source, CAST(SUM(n) AS BIGINT) AS t FROM h GROUP BY 1),
-    pairs AS (
-        SELECT ta.source AS sa, tb.source AS sb, ta.t AS p_tot, tb.t AS q_tot
-        FROM tot ta JOIN tot tb ON ta.source < tb.source
-    ),
-    kl_p AS (
-        SELECT pr.sa, pr.sb,
-               CAST(SUM(CAST(ha.n AS DECIMAL(38,0))
-                        * CAST(CAST(FLOOR(LN(ha.n) * 1000000000) AS BIGINT)
-                               - CAST(FLOOR(LN(ha.n * pr.q_tot
-                                             + COALESCE(hb.n, 0) * pr.p_tot)
-                                            * 1000000000) AS BIGINT)
-                               AS DECIMAL(38,0)))
-                    AS DECIMAL(38,0)) AS num_e9
-        FROM pairs pr
-        JOIN h ha ON ha.source = pr.sa
-        LEFT JOIN h hb ON hb.source = pr.sb AND hb.bin = ha.bin
-        GROUP BY pr.sa, pr.sb
-    ),
-    kl_q AS (
-        SELECT pr.sa, pr.sb,
-               CAST(SUM(CAST(hb.n AS DECIMAL(38,0))
-                        * CAST(CAST(FLOOR(LN(hb.n) * 1000000000) AS BIGINT)
-                               - CAST(FLOOR(LN(hb.n * pr.p_tot
-                                             + COALESCE(ha.n, 0) * pr.q_tot)
-                                            * 1000000000) AS BIGINT)
-                               AS DECIMAL(38,0)))
-                    AS DECIMAL(38,0)) AS num_e9
-        FROM pairs pr
-        JOIN h hb ON hb.source = pr.sb
-        LEFT JOIN h ha ON ha.source = pr.sa AND ha.bin = hb.bin
-        GROUP BY pr.sa, pr.sb
-    )
-    SELECT pr.sa AS source_a, pr.sb AS source_b,
-           CAST(FLOOR((
-               (CAST(p.num_e9 AS DOUBLE) / (pr.p_tot * 1000000000.0)
-                + LN(2.0) + LN(CAST(pr.q_tot AS DOUBLE)))
-             + (CAST(q.num_e9 AS DOUBLE) / (pr.q_tot * 1000000000.0)
-                + LN(2.0) + LN(CAST(pr.p_tot AS DOUBLE)))
-           ) * 500000.0) AS BIGINT) AS jsd_nats_e6
-    FROM pairs pr
-    JOIN kl_p p ON p.sa = pr.sa AND p.sb = pr.sb
-    JOIN kl_q q ON q.sa = pr.sa AND q.sb = pr.sb
-    ORDER BY source_a, source_b
-    """,
-    survey_ids=("X4", "A1", "J1"),
-)
-def x4_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jensen-Shannon divergence between every pair of sources'
-    document-length distributions (100-char bins) — the drift/overlap
-    matrix in nats that complements the KS statistic (which sees only
-    the max gap) and the χ² (which explodes on sparse bins). Uses the
-    counts-form identity: with integer bin counts p_i (total P), q_i
-    (total Q) and integer mixture m_i = p_i·Q + q_i·P,
-    D(P‖M) = (Σ p_i·[L(p_i) − L(m_i)])/(P·1e9) + ln2 + lnQ with
-    L = FLOOR(1e9·ln·) — every ln argument an integer, every sum an
-    exact integer sum (order-independent), products carried as
-    DECIMAL(38,0) per the r7 overflow advice. Histograms are
-    bin-bounded; the pair relation is sources², never documents²."""
-    docs = t(spark, sf_dir, "documents")
-    dec = "decimal(38,0)"
-    h = (
-        docs.groupBy(
-            "source", (F.col("n_chars") / 100).cast("long").alias("bin")
-        ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    ).localCheckpoint(eager=True)
-    tot = h.groupBy("source").agg(F.sum("n").cast("long").alias("t"))
-    pairs = (
-        tot.alias("ta")
-        .join(tot.alias("tb"), F.col("ta.source") < F.col("tb.source"))
-        .select(
-            F.col("ta.source").alias("sa"),
-            F.col("tb.source").alias("sb"),
-            F.col("ta.t").alias("p_tot"),
-            F.col("tb.t").alias("q_tot"),
-        )
-    )
-
-    def _kl(own: str, other: str, own_tot: str, other_tot: str):
-        """Σ n_own·[L(n_own) − L(n_own·tot_other + n_other·tot_own)]."""
-        # distinct column names on the two h copies: ha/hb share lineage,
-        # and an `ha["bin"] == hb["bin"]` predicate on a self-join is
-        # ambiguous to the analyzer (it can resolve both sides to the
-        # same attribute, degenerating into a cross join over bins)
-        ha = h.select(
-            F.col("source").alias(f"_{own}"),
-            F.col("bin").alias("bin_own"),
-            F.col("n").alias("n_own"),
-        )
-        hb = h.select(
-            F.col("source").alias(f"_{other}"),
-            F.col("bin").alias("bin_oth"),
-            F.col("n").alias("n_oth"),
-        )
-        joined = (
-            pairs.join(ha, F.col(f"_{own}") == F.col(own))
-            .join(
-                hb,
-                (F.col(f"_{other}") == F.col(other))
-                & (F.col("bin_own") == F.col("bin_oth")),
-                "left",
-            )
-        )
-        m = F.col("n_own") * F.col(other_tot) + F.coalesce(F.col("n_oth"), F.lit(0)) * F.col(
-            own_tot
-        )
-        term = (
-            F.floor(F.log("n_own") * 1_000_000_000).cast("long")
-            - F.floor(F.log(m) * 1_000_000_000).cast("long")
-        ).cast(dec)
-        return joined.groupBy("sa", "sb").agg(
-            F.sum(F.col("n_own").cast(dec) * term).cast(dec).alias(f"num_e9_{own}")
-        )
-
-    klp = _kl("sa", "sb", "p_tot", "q_tot")
-    klq = _kl("sb", "sa", "q_tot", "p_tot")
-    ln2 = 0.6931471805599453
-    out = (
-        pairs.join(klp, ["sa", "sb"])
-        .join(klq, ["sa", "sb"])
-        .select(
-            F.col("sa").alias("source_a"),
-            F.col("sb").alias("source_b"),
-            F.floor(
-                (
-                    (
-                        F.col("num_e9_sa").cast("double")
-                        / (F.col("p_tot") * 1_000_000_000.0)
-                        + F.lit(ln2)
-                        + F.log(F.col("q_tot").cast("double"))
-                    )
-                    + (
-                        F.col("num_e9_sb").cast("double")
-                        / (F.col("q_tot") * 1_000_000_000.0)
-                        + F.lit(ln2)
-                        + F.log(F.col("p_tot").cast("double"))
-                    )
-                )
-                * 500_000.0
-            )
-            .cast("long")
-            .alias("jsd_nats_e6"),
-        )
-        .orderBy("source_a", "source_b")
-    )
-    return out

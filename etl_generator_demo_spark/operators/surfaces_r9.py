@@ -4,11 +4,6 @@
   QUALIFY clause; the engine rewrite is window-then-filter. Pinned
   hash-exact against DuckDB's native QUALIFY text, with the comparison
   carried in exact integer cents so a float average can never flip it.
-- Poisson/multiplier bootstrap confidence interval: the one-pass
-  distributed bootstrap (Chamandy et al. / Google's "Estimating
-  Uncertainty for Massive Data Streams"): B resample replicates via
-  deterministic per-(replicate,row) integer weights — never B passes
-  over the data, never a per-row RNG the oracle can't replay.
 - BFS hop distance from the hub part: exact single-source shortest
   hops over the co-purchase graph — frontier expansion with min-hop
   aggregation, fixed unrolled oracle rounds (the LPA/WCC idiom).
@@ -82,142 +77,6 @@ def w_qualify_above_customer_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("price_c2").cast("long").alias("sum_above_c2"),
         )
         .orderBy("o_orderpriority")
-    )
-
-
-#: Bootstrap replicates and the deterministic weight law. Weight of row
-#: r in replicate b = (md5(b||'_'||event_id) mod 4) with mean 1 shifted
-#: to {0,1,2,3}·(1/?)... — we use the simple integer multiplier
-#: bootstrap: w ∈ {0,1,2,3} uniform (mean 1.5) would bias totals, so
-#: weights are drawn from {0,1,2} with P(0)=P(2)=1/4, P(1)=1/2 via two
-#: md5 bits (mean exactly 1, variance 1/2 — a valid multiplier
-#: bootstrap law); everything integer, replayable by the oracle.
-BOOT_B = 32
-
-
-@register(
-    "x4_poisson_bootstrap_ci",
-    oracle=f"""
-    WITH reps AS (SELECT UNNEST(GENERATE_SERIES(0, {BOOT_B - 1})) AS b),
-    w AS (
-        SELECT r.b,
-               -- (first-8-hex-digits AS integer) % 4 depends only on the
-               -- 8th hex digit (16 ≡ 0 mod 4), so read that one digit via
-               -- STRPOS — version-stable core SQL, no hex-string cast
-               -- (r9 advice: the '0x'||... AS BIGINT cast is
-               -- DuckDB-version-sensitive)
-               CASE ((STRPOS('0123456789abcdef',
-                             SUBSTRING(MD5(CAST(r.b AS VARCHAR) || '_'
-                                           || CAST(e.event_id AS VARCHAR)), 8, 1))
-                      - 1) % 4)
-                    WHEN 0 THEN 0 WHEN 1 THEN 1 WHEN 2 THEN 1 ELSE 2 END AS wt,
-               CAST(FLOOR(e.value * 100) AS BIGINT) AS v_c2
-        FROM events e CROSS JOIN reps r
-        WHERE e.event_type = 'purchase'
-    ),
-    totals AS (
-        SELECT b, CAST(SUM(wt * v_c2) AS BIGINT) AS total_c2
-        FROM w GROUP BY b
-    ),
-    ranked AS (
-        SELECT total_c2,
-               ROW_NUMBER() OVER (ORDER BY total_c2) AS rn,
-               COUNT(*) OVER () AS n
-        FROM totals
-    ),
-    base AS (
-        SELECT CAST(SUM(CAST(FLOOR(value * 100) AS BIGINT)) AS BIGINT) AS point_c2
-        FROM events WHERE event_type = 'purchase'
-    )
-    SELECT base.point_c2,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM totals) AS n_replicates,
-           (SELECT total_c2 FROM ranked WHERE rn = 2) AS ci_lo_c2,
-           (SELECT total_c2 FROM ranked WHERE rn = n - 1) AS ci_hi_c2,
-           (SELECT CAST(MIN(total_c2) AS BIGINT) FROM totals) AS boot_min_c2,
-           (SELECT CAST(MAX(total_c2) AS BIGINT) FROM totals) AS boot_max_c2
-    FROM base
-    """,
-    survey_ids=("X4", "A2", "W1"),
-)
-def x4_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass distributed bootstrap CI for total purchase revenue —
-    the multiplier-bootstrap trick that makes resampling feasible at
-    100 TB (Chamandy et al.): instead of B passes drawing B resamples,
-    each row contributes to all B replicates at once with a
-    deterministic integer weight (two md5 bits → {0,1,2} with
-    P(0)=P(2)=1/4, P(1)=1/2: mean exactly 1, so replicate totals are
-    unbiased). The replicate grid is a B-row broadcast; the only
-    shuffle is the B-key aggregate (map-side combined: each task emits
-    at most B partial rows regardless of input size). The CI is the
-    2nd/(B-1)th order statistic of the 32 replicate totals (~93%
-    interval) — order statistics over a B-row relation, trivially
-    driver-safe. Weights and totals are all exact integers, so the
-    oracle replays the identical resampling."""
-    ev = t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    reps = spark.range(BOOT_B).select(F.col("id").alias("b"))
-    wted = ev.crossJoin(F.broadcast(reps)).select(
-        "b",
-        (
-            F.when(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws("_", F.col("b"), F.col("event_id"))), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % 4
-                == 0,
-                0,
-            )
-            .when(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws("_", F.col("b"), F.col("event_id"))), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % 4
-                == 3,
-                2,
-            )
-            .otherwise(1)
-        ).alias("wt"),
-        F.floor(F.col("value") * 100).cast("long").alias("v_c2"),
-    )
-    totals = wted.groupBy("b").agg(
-        F.sum(F.col("wt") * F.col("v_c2")).cast("long").alias("total_c2")
-    )
-    wr = Window.orderBy("total_c2")  # B rows: bounded window
-    ranked = totals.select(
-        "total_c2",
-        F.row_number().over(wr).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
-    )
-    point = ev.agg(
-        F.sum(F.floor(F.col("value") * 100).cast("long"))
-        .cast("long")
-        .alias("point_c2")
-    )
-    stats = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("n_replicates"),
-        F.max(F.when(F.col("rn") == 2, F.col("total_c2")))
-        .cast("long")
-        .alias("ci_lo_c2"),
-        F.max(F.when(F.col("rn") == F.col("n") - 1, F.col("total_c2")))
-        .cast("long")
-        .alias("ci_hi_c2"),
-        F.min("total_c2").cast("long").alias("boot_min_c2"),
-        F.max("total_c2").cast("long").alias("boot_max_c2"),
-    )
-    return point.crossJoin(F.broadcast(stats)).select(
-        "point_c2",
-        "n_replicates",
-        "ci_lo_c2",
-        "ci_hi_c2",
-        "boot_min_c2",
-        "boot_max_c2",
     )
 
 

@@ -919,102 +919,6 @@ def winnowing_fingerprints(d: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus diagnostics: Zipf slope of the vocabulary
-# ---------------------------------------------------------------------------
-ZIPF_TOP_TERMS = 1000
-
-
-@register(
-    "x4_zipf_slope",
-    oracle=f"""
-    WITH freq AS (
-        SELECT tk, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM documents)
-        GROUP BY tk
-    ),
-    ranked AS (
-        SELECT f, ROW_NUMBER() OVER (ORDER BY f DESC, tk) AS rnk FROM freq
-    ),
-    pts AS (
-        SELECT CAST(FLOOR(LN(CAST(rnk AS DOUBLE)) * 1000) AS BIGINT) AS x,
-               CAST(FLOOR(LN(CAST(f AS DOUBLE)) * 1000) AS BIGINT)   AS y
-        FROM ranked WHERE rnk <= {ZIPF_TOP_TERMS}
-    ),
-    s AS (
-        SELECT CAST(COUNT(*) AS BIGINT)    AS n,
-               CAST(SUM(x) AS BIGINT)      AS sx,
-               CAST(SUM(y) AS BIGINT)      AS sy,
-               CAST(SUM(x * y) AS BIGINT)  AS sxy,
-               CAST(SUM(x * x) AS BIGINT)  AS sxx
-        FROM pts
-    )
-    SELECT n AS n_terms,
-           CAST(FLOOR(
-               CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE)
-               * 1000000) AS BIGINT) AS slope_e6
-    FROM s
-    """,
-    survey_ids=("X4",),
-)
-def x4_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf's-law fit over the corpus vocabulary: least-squares slope
-    of ln(freq) on ln(rank) for the top-1000 terms. Natural text sits
-    near −1; a corpus drifting toward 0 (too flat) or below −1.5 (too
-    peaked) flags template spam or vocabulary collapse — a cheap
-    corpus-health gate next to the quality and repetition scores.
-
-    Determinism: each (x, y) point is floor-scaled to integer
-    milli-units BEFORE the regression sums, so n/Σx/Σy/Σxy/Σxx are
-    exact BIGINTs (magnitudes ≤ ~2·10¹⁴ — exact in double too); the
-    slope is then ONE identically-shaped float division. Aggregation
-    order cannot move the result.
-
-    Scale: term frequencies are one map-combined groupBy; the head is
-    bounded FIRST via orderBy().limit() (TakeOrderedAndProject — a
-    per-partition top-N, no global sort), so the ranking window runs
-    over at most {ZIPF_TOP_TERMS} rows instead of the full vocabulary.
-    The r12 spelling windowed the unbounded vocabulary relation
-    (WindowExec with no partition spec — single-partition sort of
-    every distinct token); at web scale that is a 10⁹-row
-    single-task sort. Bounded-head spelling per surfaces_r12.py
-    x4_zipf_alpha_fit."""
-    from pyspark.sql import Window
-
-    docs = t(spark, sf_dir, "documents")
-    freq = (
-        docs.select(F.explode(F.split("text", " ")).alias("tk"))
-        .groupBy("tk")
-        .agg(F.count(F.lit(1)).cast("long").alias("f"))
-        .orderBy(F.desc("f"), "tk")
-        .limit(ZIPF_TOP_TERMS)
-    )
-    ranked = freq.select(
-        "f", F.row_number().over(Window.orderBy(F.desc("f"), "tk")).alias("rnk")
-    )
-    pts = ranked.select(
-        F.floor(F.log(F.col("rnk").cast("double")) * 1000).cast("long").alias("x"),
-        F.floor(F.log(F.col("f").cast("double")) * 1000).cast("long").alias("y"),
-    )
-    s = pts.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    return s.select(
-        F.col("n").alias("n_terms"),
-        F.floor(
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-            / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-            * 1000000
-        )
-        .cast("long")
-        .alias("slope_e6"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # CCNet-style per-language quality buckets over the bigram-LM score
 # ---------------------------------------------------------------------------
 @register(
@@ -2234,9 +2138,12 @@ def x4_ks_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     lattice points, so |grid| ≤ 10⁴ regardless of corpus size); per-
     value counts are one map-combined groupBy, the cumulative sums
     one ordered window over the grid relation, and both CDF fractions
-    floor to e6 BEFORE the max so D hashes exactly. Documents cross
-    the wire once; everything after is grid-sized."""
+    floor to e6 BEFORE the max so D hashes exactly; a source with no
+    documents gives NULL (``stats.denom``). Documents cross the wire
+    once; everything after is grid-sized."""
     from pyspark.sql import Window
+
+    from .stats import denom
 
     scored = (
         t(spark, sf_dir, "documents")
@@ -2259,12 +2166,12 @@ def x4_ks_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c1").over(w).alias("k1"),
     )
     d = F.abs(
-        F.floor(F.col("k0") * 1_000_000.0 / F.col("n0")).cast("long")
-        - F.floor(F.col("k1") * 1_000_000.0 / F.col("n1")).cast("long")
+        F.floor(F.col("k0") * 1_000_000.0 / denom(F.col("n0"))).cast("long")
+        - F.floor(F.col("k1") * 1_000_000.0 / denom(F.col("n1"))).cast("long")
     )
     thr = F.floor(
         1_358_000
-        * F.sqrt((F.col("n0") + F.col("n1")) * 1.0 / (F.col("n0") * F.col("n1")))
+        * F.sqrt((F.col("n0") + F.col("n1")) * 1.0 / denom(F.col("n0") * F.col("n1")))
     ).cast("long")
     return (
         cum.crossJoin(F.broadcast(tot))

@@ -1,6 +1,6 @@
-"""Time-series operators over the daily purchase-revenue series.
+"""Time-series operators over the events table.
 
-Both reduce the events table to one row per calendar day (one
+The first two reduce the events table to one row per calendar day (one
 map-combined rollup, the only full-data pass) and then work on that
 |days|-bounded lattice:
 
@@ -26,6 +26,8 @@ map-combined rollup, the only full-data pass) and then work on that
   ``pmod(numerator, divisor)`` first so every division is an exact
   multiple — floor and truncate then agree. Do NOT "simplify" the
   pmod away as redundant; without it the oracle diverges on negatives.
+- ``x4_hour_dow_seasonality``: the 7×24 hour-of-week activity profile
+  with full grid completion.
 
 Exactness: every output is an integer fixed-point value (e2 or cents)
 computed from exact integer sums, so the DuckDB oracles replay them
@@ -247,7 +249,8 @@ def x4_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recursion then runs over the CALENDAR lattice (|days| rows —
     ten years is ~3.7k steps), an inherently sequential scan that is
     collected and solved driver-side exactly like the Markov/k-means
-    bounded model fetch (stats_r8.py:193 idiom — the bound is the
+    bounded model fetch (`x4_markov_attribution`'s transition-matrix
+    collect in stats.py — the bound is the
     calendar, not the data). The oracle replays the identical
     recursion as a recursive CTE; tests/test_forecast_holt.py anchors
     the recursion closed-form."""
@@ -272,4 +275,74 @@ def x4_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     level, trend = holt_linear(series)
     return spark.createDataFrame(
         [(len(series), level, trend, level + HOLT_H * trend)], schema=schema
+    )
+
+
+# ---------------------------------------------------------------------------
+# Hour-of-week seasonality profile
+# ---------------------------------------------------------------------------
+
+@register(
+    "x4_hour_dow_seasonality",
+    oracle="""
+    WITH obs AS (
+        SELECT CAST(ISODOW(ts) - 1 AS BIGINT) AS dow,
+               CAST(EXTRACT(HOUR FROM ts) AS BIGINT) AS hour,
+               CAST(COUNT(*) AS BIGINT) AS n_events
+        FROM events GROUP BY 1, 2
+    ),
+    tot AS (SELECT CAST(SUM(n_events) AS BIGINT) AS total FROM obs),
+    grid AS (
+        SELECT CAST(d AS BIGINT) AS dow, CAST(h AS BIGINT) AS hour
+        FROM UNNEST(GENERATE_SERIES(0, 6)) t1(d),
+             UNNEST(GENERATE_SERIES(0, 23)) t2(h)
+    )
+    SELECT g.dow, g.hour,
+           COALESCE(o.n_events, 0) AS n_events,
+           COALESCE(o.n_events, 0) * 1000000 // tot.total AS share_e6
+    FROM grid g LEFT JOIN obs o ON o.dow = g.dow AND o.hour = g.hour
+    CROSS JOIN tot
+    ORDER BY g.dow, g.hour
+    """,
+    survey_ids=("X4", "A1", "F4"),
+)
+def x4_hour_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hour-of-week activity profile (7×24 heatmap): event share per
+    (ISO weekday, hour) cell with FULL grid completion — absent cells
+    emit 0, so a monitoring consumer always sees 168 rows (the
+    grid-completion idiom: cross-join two bounded lattices, left-join
+    observed counts). Weekday numbering pinned to ISO-Monday=0 via
+    Spark `weekday()` == DuckDB `ISODOW−1` (both engines' default DOW
+    builtins disagree on numbering — same pin as the STL seasonal
+    component). Shares are e6 integer-floored against the global
+    total."""
+    ev = t(spark, sf_dir, "events")
+    obs = (
+        ev.groupBy(
+            F.weekday("ts").cast("long").alias("dow"),
+            F.hour("ts").cast("long").alias("hour"),
+        )
+        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
+        .localCheckpoint()  # ≤168 cells
+    )
+    tot = obs.agg(F.sum("n_events").cast("long").alias("total"))
+    grid = (
+        spark.range(7)
+        .select(F.col("id").alias("dow"))
+        .crossJoin(spark.range(24).select(F.col("id").alias("hour")))
+    )
+    return (
+        grid.join(F.broadcast(obs), ["dow", "hour"], "left")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "dow",
+            "hour",
+            F.coalesce(F.col("n_events"), F.lit(0)).cast("long").alias(
+                "n_events"
+            ),
+            F.expr(
+                "CAST(coalesce(n_events, 0) * 1000000 div total AS BIGINT)"
+            ).alias("share_e6"),
+        )
+        .orderBy("dow", "hour")
     )

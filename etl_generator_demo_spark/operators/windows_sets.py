@@ -803,3 +803,59 @@ def o_topk_explicit_null_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("pri_or_null").asc_nulls_first(), "o_orderkey")
         .limit(25)
     )
+
+
+# ---------------------------------------------------------------------------
+# Trailing-window COUNT DISTINCT
+# ---------------------------------------------------------------------------
+
+@register(
+    "w_sliding_distinct_users",
+    oracle="""
+    WITH ud AS (
+        SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events
+    ),
+    days AS (SELECT DISTINCT d FROM ud),
+    x AS (
+        SELECT CAST(UNNEST(GENERATE_SERIES(d, d + 6, INTERVAL 1 DAY)) AS DATE)
+                   AS day,
+               user_id
+        FROM ud
+    )
+    SELECT x.day, CAST(COUNT(DISTINCT x.user_id) AS BIGINT) AS users_7d
+    FROM x JOIN days ON days.d = x.day
+    GROUP BY x.day ORDER BY x.day
+    """,
+    survey_ids=("W3", "A3"),
+)
+def w_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing 7-day distinct active users per day — the windowed
+    COUNT(DISTINCT) Spark window frames cannot express (and a naive
+    range self-join would re-scan the fact table per day). Scalable
+    spelling: collapse to distinct (day, user) once, explode each
+    activity day to the ≤7 target days it contributes to, then ONE
+    distinct aggregate — the shuffle carries (day, user) pairs with a
+    constant ×7 fan-out, independent of event volume per user-day.
+    Target days are restricted to the observed day grid (semi join
+    against the |days|-bounded lattice)."""
+    ev = t(spark, sf_dir, "events")
+    ud = (
+        ev.select(F.col("ts").cast("date").alias("d"), "user_id").distinct()
+    )
+    days = ud.select("d").distinct()
+    x = ud.select(
+        F.explode(
+            F.sequence(
+                F.col("d"), F.date_add(F.col("d"), 6), F.expr("interval 1 day")
+            )
+        ).alias("day"),
+        "user_id",
+    )
+    return (
+        x.join(
+            F.broadcast(days.withColumnRenamed("d", "day")), "day", "semi"
+        )
+        .groupBy("day")
+        .agg(F.count_distinct("user_id").cast("long").alias("users_7d"))
+        .orderBy("day")
+    )

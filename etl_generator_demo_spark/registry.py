@@ -68,8 +68,7 @@ def load_all() -> dict[str, RegisteredQuery]:
     import etl_generator_demo_spark.operators.tpch_ext  # noqa: F401
     import etl_generator_demo_spark.operators.graph  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r8  # noqa: F401
-    import etl_generator_demo_spark.operators.stats_r8  # noqa: F401
-    import etl_generator_demo_spark.operators.robust_r8  # noqa: F401
+    import etl_generator_demo_spark.operators.stats  # noqa: F401
     import etl_generator_demo_spark.streaming.dedup  # noqa: F401
     import etl_generator_demo_spark.operators.exact_r8  # noqa: F401
     import etl_generator_demo_spark.operators.dedup_substr  # noqa: F401

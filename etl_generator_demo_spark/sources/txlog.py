@@ -504,9 +504,12 @@ class TxTable:
         """MERGE: matched keys replaced by the source row, unmatched
         inserted (WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT
         *). Duplicate source keys rejected, like ANSI MERGE's
-        cardinality error."""
-        n_src = source.count()
-        if source.select(*key_cols).distinct().count() != n_src:
+        cardinality error: one aggregate counts source rows and distinct
+        keys (NULL fields count once, as DISTINCT does)."""
+        n_src, n_keys = source.agg(
+            F.count(F.lit(1)), F.count_distinct(F.struct(*key_cols))
+        ).first()
+        if n_keys != n_src:
             raise ValueError("merge source has duplicate keys")
 
         def transform(snap: DataFrame) -> DataFrame:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import datetime
+
 
 def test_approx_percentiles_rank_accuracy(spark, sf_dir):
     """The sketch's guarantee is on RANK, not value (adjacent order
@@ -76,3 +78,23 @@ def test_weighted_median_crossing_invariant(spark, sf_dir):
             if 2 * cw >= tw:
                 assert got[grp] == (v, tw, cw), grp
                 break
+
+
+def test_mode_tie_breaks_to_smallest_value(spark, tmp_path):
+    """Two priorities tied for most frequent → MIN(value) wins, and
+    mode_count reports the tied count."""
+    from etl_generator_demo_spark.operators.aggregates_ext import a_mode_orderpriority
+
+    rows = (
+        [(i, 1, "O", 1.0, datetime.datetime(2024, 1, 1), "2-HIGH") for i in range(3)]
+        + [(10 + i, 1, "O", 1.0, datetime.datetime(2024, 1, 1), "1-URGENT") for i in range(3)]
+        + [(20, 1, "O", 1.0, datetime.datetime(2024, 1, 1), "5-LOW")]
+        + [(30 + i, 1, "F", 1.0, datetime.datetime(2024, 1, 1), "5-LOW") for i in range(2)]
+    )
+    spark.createDataFrame(
+        rows,
+        "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double, o_orderdate timestamp, o_orderpriority string",
+    ).write.parquet(f"{tmp_path}/orders.parquet")
+    d = str(tmp_path)
+    got = {r["status"]: (r["mode_priority"], r["mode_count"]) for r in a_mode_orderpriority(spark, d).collect()}
+    assert got == {"O": ("1-URGENT", 3), "F": ("5-LOW", 2)}

@@ -106,3 +106,28 @@ def test_streaming_pipeline_is_streaming(spark):
     sdf = streaming_pipeline(spark)
     assert sdf.isStreaming
     assert "window" in dict(sdf.dtypes)
+
+
+def test_asof_tolerance_boundary_inclusive(spark, tmp_path):
+    """A click exactly 1 hour before the purchase is still attributed
+    (boundary inclusive); 1h + 1µs is rejected to NULL."""
+    from etl_generator_demo_spark.operators.asof import j8_asof_tolerance_click
+
+    base = dt.datetime(2024, 1, 1, 12, 0, 0)
+    rows = [
+        # user 1: click exactly -1h
+        (1, base - dt.timedelta(hours=1), 1, "click", 0.0, "{}"),
+        (2, base, 1, "purchase", 5.0, "{}"),
+        # user 2: click 1h + 1µs before -> stale
+        (3, base - dt.timedelta(hours=1, microseconds=1), 2, "click", 0.0, "{}"),
+        (4, base, 2, "purchase", 5.0, "{}"),
+        # user 3: no click at all
+        (5, base, 3, "purchase", 5.0, "{}"),
+    ]
+    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+    spark.createDataFrame(rows, schema).write.parquet(f"{tmp_path}/events.parquet")
+    d = str(tmp_path)
+    got = {r["event_id"]: r for r in j8_asof_tolerance_click(spark, d).collect()}
+    assert got[2]["attributed"] == 1 and got[2]["asof_click_ts"] is not None
+    assert got[4]["attributed"] == 0 and got[4]["asof_click_ts"] is None
+    assert got[5]["attributed"] == 0 and got[5]["asof_click_ts"] is None

@@ -8,11 +8,11 @@ from etl_generator_demo_spark.operators.surfaces_r10 import (
     x4_item_item_recs,
     x4_stratified_proportional_sample,
 )
+from etl_generator_demo_spark.operators.stats import x4_ndcg_eval
 from etl_generator_demo_spark.operators.surfaces_r10b import (
     _morton_expr,
     x4_bpe_encode_corpus,
     x4_curriculum_shards,
-    x4_ndcg_eval,
 )
 
 SF = "/root/testdata/sf0.001"

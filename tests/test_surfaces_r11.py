@@ -1,5 +1,5 @@
-"""Round-11 operator tests: CDC apply and the mergeable quantile
-sketch."""
+"""Round-11 operator tests: CDC apply, the packing and DoReMi sweeps,
+query likelihood and the l-diversity audit."""
 
 from __future__ import annotations
 
@@ -8,8 +8,6 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.operators.surfaces_r11 import (
-    SKETCH_SHARDS,
-    a_hdr_quantile_sketch,
     cdc_snapshot,
     d_cdc_apply_snapshot,
 )
@@ -93,136 +91,6 @@ def test_cdc_fixture_snapshot_excludes_tombstoned(spark):
     assert len(got) == len({r["user_id"] for r in got})
 
 
-def test_quantile_sketch_bounds_and_merge_exactness(spark):
-    """The sketch quantile upper bound must sit within 5% above (and
-    never below) the exact quantile, and the per-shard merge must be
-    bit-identical to a direct single-pass histogram (associativity —
-    the property that makes the sketch mergeable at all)."""
-    from etl_generator_demo_spark.operators.relational import t
-
-    out = a_hdr_quantile_sketch(spark, SF).collect()
-    assert {r["q"] for r in out} == {50, 90, 99}
-    li = (
-        t(spark, SF, "lineitem")
-        .select(
-            F.col("l_returnflag").alias("flag"),
-            F.round(F.col("l_extendedprice") * 100, 0)
-            .cast("long")
-            .alias("cents"),
-        )
-        .collect()
-    )
-    by_flag: dict[str, list[int]] = {}
-    for r in li:
-        by_flag.setdefault(r["flag"], []).append(r["cents"])
-    for r in out:
-        vals = sorted(by_flag[r["flag"]])
-        assert r["n_values"] == len(vals)
-        import math
-
-        exact = vals[math.ceil(r["q"] / 100 * len(vals)) - 1]
-        ub = r["quantile_ub_cents"]
-        assert ub >= exact, (r["flag"], r["q"], ub, exact)
-        # 2-significant-digit buckets: ub < exact_bucket_lb * 1.1 and
-        # the documented quantile error bound is <=5% of the value
-        assert ub <= exact * 1.1 + 9, (r["flag"], r["q"], ub, exact)
-
-
-def test_quantile_sketch_shard_merge_equals_direct(spark):
-    """Explicit mergeability proof on a controlled relation: sharded
-    bucket counts summed == direct bucket counts (associative), for a
-    value set that crosses decade boundaries."""
-    vals = list(range(1, 300)) + [10**k for k in range(1, 7)]
-    df = spark.createDataFrame(
-        [(i % SKETCH_SHARDS, v) for i, v in enumerate(vals)],
-        "shard long, cents long",
-    )
-    bucket = (
-        "CAST(LENGTH(CAST(cents AS STRING)) AS BIGINT) * 100 + "
-        "CAST(SUBSTR(CAST(cents AS STRING), 1, 2) AS BIGINT)"
-    )
-    direct = {
-        (r["bucket"], r["cnt"])
-        for r in df.groupBy(F.expr(bucket).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    merged = {
-        (r["bucket"], r["cnt"])
-        for r in df.groupBy("shard", F.expr(bucket).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("bucket")
-        .agg(F.sum("c").alias("cnt"))
-        .collect()
-    }
-    assert direct == merged
-
-
-def test_sketch_resolution_sweep_error_shrinks(spark):
-    """The tuning curve's contract: UB >= exact everywhere, error
-    non-increasing as resolution grows (within each quantile), bucket
-    count growing with resolution, and the documented per-resolution
-    error bound rel_err <= 10^(1-r) (one leading digit ~ <=90%, two
-    ~ <=10%... the decimal-HDR geometry)."""
-    from etl_generator_demo_spark.operators.surfaces_r11 import (
-        a_sketch_resolution_sweep,
-    )
-
-    rows = a_sketch_resolution_sweep(spark, SF).collect()
-    assert len(rows) == 9
-    by_q: dict[int, list] = {}
-    nb_by_r: dict[int, int] = {}
-    for r in rows:
-        assert r["sketch_ub_cents"] >= r["exact_cents"]
-        assert r["rel_err_e6"] >= 0
-        # decimal-HDR bound: one bucket spans < 10^(1-r) of its value
-        assert r["rel_err_e6"] <= 10 ** (7 - r["r"]), r
-        by_q.setdefault(r["q"], []).append((r["r"], r["rel_err_e6"]))
-        nb_by_r[r["r"]] = r["n_buckets"]
-    for q, errs in by_q.items():
-        errs.sort()
-        vals = [e for _, e in errs]
-        assert vals == sorted(vals, reverse=True), (q, errs)
-    assert nb_by_r[1] <= nb_by_r[2] <= nb_by_r[3]
-
-
-def test_kappa_closed_form_on_fixture(spark):
-    """Kappa recomputed in plain Python from the registered confusion
-    matrix must match the operator exactly (same truncating integer
-    division), and sit in (-1, 1] with po/pe consistent."""
-    from etl_generator_demo_spark.operators.surfaces_r11 import (
-        x4_labeler_agreement_kappa,
-    )
-    from etl_generator_demo_spark.operators.textops import (
-        x4_trigram_langid_confusion,
-    )
-
-    conf = x4_trigram_langid_confusion(spark, SF).collect()
-    n = sum(r["n_docs"] for r in conf)
-    agree = sum(r["n_docs"] for r in conf if r["actual"] == r["predicted"])
-    rows: dict[str, int] = {}
-    cols: dict[str, int] = {}
-    for r in conf:
-        rows[r["actual"]] = rows.get(r["actual"], 0) + r["n_docs"]
-        cols[r["predicted"]] = cols.get(r["predicted"], 0) + r["n_docs"]
-    s = sum(rows[k] * cols.get(k, 0) for k in rows)
-
-    def tdiv(a: int, b: int) -> int:  # truncate toward zero, like div
-        q = abs(a) // abs(b)
-        return q if (a >= 0) == (b > 0) else -q
-
-    got = x4_labeler_agreement_kappa(spark, SF).collect()
-    assert len(got) == 1
-    g = got[0]
-    assert g["n_docs"] == n and g["n_agree"] == agree
-    assert g["po_e6"] == tdiv(agree * 1_000_000, n)
-    assert g["pe_e6"] == tdiv(s * 1_000_000, n * n)
-    assert g["kappa_e6"] == tdiv((n * agree - s) * 1_000_000, n * n - s)
-    assert -1_000_000 < g["kappa_e6"] <= 1_000_000
-    # chance correction: kappa <= raw accuracy whenever pe > 0
-    assert g["kappa_e6"] <= g["po_e6"]
-
-
 def test_packing_sweep_monotone_tradeoff(spark):
     """The tuning curve's contract: doubling the context length can
     only reduce (or keep) chunk count; straddle counts stay bounded by
@@ -273,34 +141,6 @@ def test_doremi_weights_sum_exact_and_monotone(spark):
     for r in rows:
         if r["excess_e4"] > 0:
             assert r["new_w_e6"] > DOREMI_SCALE // n - 1
-
-
-def test_bloom_fpr_sweep_monotone_and_sound(spark):
-    """A Bloom filter can only over-admit: zero false negatives at
-    every width; false positives shrink (weakly) as m grows; pass set
-    always contains the match set; the widest filter's entry count is
-    bounded by k*|dim keys|."""
-    from etl_generator_demo_spark.operators.skew import BLOOM_HASHES
-    from etl_generator_demo_spark.operators.surfaces_r11 import (
-        BLOOM_SWEEP_HEX,
-        j_bloom_fpr_sweep,
-    )
-
-    rows = {r["hex_chars"]: r for r in j_bloom_fpr_sweep(spark, SF).collect()}
-    assert set(rows) == set(BLOOM_SWEEP_HEX)
-    prev_fp = None
-    for h in sorted(rows):
-        r = rows[h]
-        assert r["zero_false_neg"] is True
-        assert r["m_buckets"] == 16**h
-        assert r["n_pass_keys"] >= r["n_pass_keys"] - r["n_false_pos"] >= 0
-        if prev_fp is not None:
-            assert r["n_false_pos"] <= prev_fp
-        prev_fp = r["n_false_pos"]
-    widest = rows[max(BLOOM_SWEEP_HEX)]
-    assert widest["n_filter_entries"] <= BLOOM_HASHES * (
-        widest["n_pass_keys"] - widest["n_false_pos"] + 10**9
-    )  # structurally bounded; exact bound pinned by the oracle counts
 
 
 def test_cdc_randomized_against_python_fold(spark):

@@ -1,7 +1,7 @@
 """Closed-form pins for the round-12 surfaces on planted data: DSIR
 weights recomputed by hand, the rematerialize cut-boundary invariant
-exercised with a REAL boundary-gram collision, a perfect-Zipf corpus,
-and exact-rational t-closeness."""
+exercised with a REAL boundary-gram collision, and exact-rational
+t-closeness."""
 
 from __future__ import annotations
 
@@ -89,24 +89,6 @@ def test_rematerialize_and_boundary_collision(spark, tmp_path):
     assert audit["residual_dup_hashes"] == 1
     assert audit["boundary_dup_hashes"] == 1
     assert audit["intact_dup_hashes"] == 0  # the invariant
-
-
-def test_zipf_perfect_corpus(spark, tmp_path):
-    """Frequencies exactly C/r lie on slope -1 in ln-ln space, so
-    alpha_e6 must land within floor-error of 1e6."""
-    from etl_generator_demo_spark.operators.surfaces_r12 import (
-        x4_zipf_alpha_fit,
-    )
-
-    text = " ".join(
-        ["t1"] * 120 + ["t2"] * 60 + ["t3"] * 40 + ["t4"] * 30
-    )
-    _write_documents(spark, str(tmp_path), [(text, "en")])
-    row = x4_zipf_alpha_fit(spark, str(tmp_path)).first()
-    assert row["n_terms"] == 4
-    assert abs(row["alpha_e6"] - 1_000_000) < 50
-    # intercept ~ ln(120) e6
-    assert abs(row["intercept_e6"] - int(math.log(120) * 1_000_000)) < 50
 
 
 def test_t_closeness_exact_rational(spark, tmp_path):

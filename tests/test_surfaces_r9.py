@@ -1,21 +1,16 @@
-"""Round-9 surface/analytics pins beyond the oracle gate: the QUALIFY
-rewrite against a hand-computed leave-in comparison, the bootstrap
-weight law (deterministic, mean-1, replayable), and the EXCLUDE
-rewrite's empty-peer NULL semantics.
+"""Round-9 surface pins beyond the oracle gate: the QUALIFY rewrite
+against a hand-computed leave-in comparison, and the EXCLUDE rewrite's
+empty-peer NULL semantics.
 """
 
 from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import functions as F
-
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.operators.surfaces_r9 import (
-    BOOT_B,
     w_frame_exclude_current,
     w_qualify_above_customer_avg,
-    x4_poisson_bootstrap_ci,
 )
 
 
@@ -51,38 +46,3 @@ def test_exclude_current_single_order_customer_is_null(spark, sf_dir):
         assert r.peer_sum_c2 is None and r.above_peers is None
     for r in multis[:50]:
         assert r.peer_sum_c2 is not None and r.above_peers is not None
-
-
-class TestBootstrap:
-    def test_weight_law_and_determinism(self, spark, sf_dir):
-        """The two-md5-bit weight law must be {0:1/4, 1:1/2, 2:1/4}
-        (mean EXACTLY 1 in expectation) and fully deterministic —
-        the whole point vs a per-row RNG."""
-        import hashlib
-
-        ev = t(spark, sf_dir, "events").filter(
-            F.col("event_type") == "purchase"
-        )
-        ids = [r.event_id for r in ev.select("event_id").collect()]
-        counts: Counter = Counter()
-        for b in range(4):  # a few replicates suffice for the law
-            for eid in ids:
-                h = hashlib.md5(f"{b}_{eid}".encode()).hexdigest()[:8]
-                m = int(h, 16) % 4
-                counts[0 if m == 0 else 2 if m == 3 else 1] += 1
-        total = sum(counts.values())
-        assert abs(counts[1] / total - 0.5) < 0.05
-        assert abs(counts[0] / total - 0.25) < 0.05
-        assert abs(counts[2] / total - 0.25) < 0.05
-        # determinism: two runs, identical record
-        a = x4_poisson_bootstrap_ci(spark, sf_dir).first()
-        b2 = x4_poisson_bootstrap_ci(spark, sf_dir).first()
-        assert a == b2
-
-    def test_ci_brackets_point_estimate(self, spark, sf_dir):
-        r = x4_poisson_bootstrap_ci(spark, sf_dir).first()
-        assert r.n_replicates == BOOT_B
-        assert r.boot_min_c2 <= r.ci_lo_c2 <= r.ci_hi_c2 <= r.boot_max_c2
-        # mean-1 weights: the point estimate sits inside the bootstrap
-        # range on any non-degenerate sample
-        assert r.boot_min_c2 <= r.point_c2 <= r.boot_max_c2

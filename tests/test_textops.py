@@ -4,6 +4,8 @@ is actually exercised), quality scoring monotonicity, fingerprints."""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.operators.textops import (
@@ -377,3 +379,42 @@ def test_corpus_report_card_on_empty_documents_matches_oracle(
     empty = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(0)
     d = replace_table("documents", empty)
     assert oracle_mismatches(d, ["x4_corpus_report_card"]) == {}
+
+
+def test_coverage_curve_monotone_and_saturating(spark, sf_dir):
+    """Coverage at larger k dominates smaller k, and every point is a
+    valid e6 fraction; cum_tokens is consistent with coverage."""
+    from etl_generator_demo_spark.operators.textops import x4_ngram_coverage_topk
+
+    rows = x4_ngram_coverage_topk(spark, sf_dir).collect()
+    assert [r["k"] for r in rows] == [5, 10, 25]
+    cov = [r["covered_e6"] for r in rows]
+    assert cov == sorted(cov) and all(0 < c <= 1_000_000 for c in cov)
+    cums = [r["cum_tokens"] for r in rows]
+    assert cums == sorted(cums)
+
+
+def test_simpson_and_entropy_extremes(spark, tmp_path):
+    """Single-token corpus → Simpson diversity 0 AND entropy 0;
+    all-distinct corpus → Simpson 1e6 (every pair differs) and
+    entropy = ln(N) exactly."""
+    import math
+
+    from etl_generator_demo_spark.operators.textops import (
+        x4_shannon_entropy_lang,
+        x4_token_simpson_diversity,
+    )
+
+    rows = [(1, "a a a a a a a a", "mono", "mono", 15)]
+    rows.append((2, "t0 t1 t2 t3 t4 t5 t6 t7", "multi", "multi", 23))
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).write.parquet(f"{tmp_path}/documents.parquet")
+    d = str(tmp_path)
+    simp = {r["source"]: r for r in x4_token_simpson_diversity(spark, d).collect()}
+    assert simp["mono"]["simpson_e6"] == 0 and simp["mono"]["vocab"] == 1
+    assert simp["multi"]["simpson_e6"] == 1_000_000 and simp["multi"]["vocab"] == 8
+    ent = {r["lang"]: r for r in x4_shannon_entropy_lang(spark, d).collect()}
+    assert ent["mono"]["entropy_nats_e6"] == 0
+    want = int(math.floor(math.log(8) * 1_000_000))
+    assert abs(ent["multi"]["entropy_nats_e6"] - want) <= 1

@@ -71,6 +71,31 @@ def test_merge_duplicate_source_keys_raise(spark, tmp_path):
         )
 
 
+def test_merge_duplicate_null_source_keys_raise(spark, tmp_path):
+    """NULL keys count as one value, as DISTINCT counts them: two NULL
+    keys are a duplicate, one NULL key merges as an insert."""
+    tab = _mk(spark, tmp_path)
+    with pytest.raises(ValueError, match="duplicate keys"):
+        tab.merge(
+            spark.createDataFrame([(None, 1), (None, 2)], "k long, v long"), ["k"]
+        )
+    tab.merge(spark.createDataFrame([(None, 1)], "k long, v long"), ["k"])
+    assert tab.read().filter(F.col("k").isNull()).count() == 1
+
+
+#: Jobs of one ``TxTable.merge`` on a 100-row table (4 cores). The
+#: source check is one aggregate; two separate counts made it 9.
+MERGE_JOBS = 7
+
+
+def test_merge_job_count_pinned(spark, tmp_path, job_delta):
+    tab = _mk(spark, tmp_path, rows=[(k, k * 10) for k in range(100)])
+    src = spark.createDataFrame([(0, 999), (100, 1000)], "k long, v long")
+    n, _ = job_delta(lambda: tab.merge(src, ["k"]))
+    assert n <= MERGE_JOBS, n
+    assert tab.read().count() == 101
+
+
 def test_concurrent_appends_all_commit_without_lock(spark, tmp_path):
     """8 threads append concurrently with NO external serialization:
     every commit lands (dense versions), no rows lost."""
@@ -181,9 +206,9 @@ def test_registered_query_matches_mutation_layer(spark, sf_dir):
 
 
 #: Spark job-id delta of one d_txlog_time_travel build on the sf0.001
-#: fixture: the five commits, then one union-and-group rollup of the
-#: five snapshots.
-TIME_TRAVEL_JOBS = 13
+#: fixture: the five commits (the MERGE's source check is one
+#: aggregate), then one union-and-group rollup of the five snapshots.
+TIME_TRAVEL_JOBS = 11
 
 
 def test_time_travel_job_count_pinned(spark, sf_dir, job_delta):

@@ -426,7 +426,7 @@ EXPECTATIONS: dict[str, dict] = {
     # monthly rollup + lattice-bounded month-grid window + ordering
     "f_yoy_mom_growth": {"max_exchanges": 2},
     # one map-combined global moment pass, shared across three pairs
-    "a_corr_matrix_lineitem": {"max_exchanges": 3},
+    "a_corr_matrix_lineitem": {"max_exchanges": 1},
     "a_approx_distinct": {"max_exchanges": 2},
     "a_approx_distinct_by_group": {"max_exchanges": 3},
     "a_argmax_top_customer_per_segment": {"max_exchanges": 2},
