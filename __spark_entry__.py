@@ -69,9 +69,7 @@ _REWRITTEN_SINCE_GREEN = (
     "x2_jaccard_threshold_sweep",
     "x2_lsh_band_tuning_curve",
     "x2_simhash_neardup_pairs",
-    "x2_source_overlap_matrix",
     "x2_token_overlap_join",
-    "x2_edit_distance_pairs",
     "x2_shingle_containment_pairs",
     "x2_bbit_minhash_estimates",
     "x2_dedup_methods_agreement",
@@ -84,7 +82,6 @@ _REWRITTEN_SINCE_GREEN = (
     # and fixed-eval variants share x3_semantic_decontam_indexed's
     # kernel, the tier lattice and x4_decontaminate the funnel's; their
     # plans are unchanged)
-    "x4_decontam_ngram_sweep",
     "x4_fuzzy_decontam",
     "x3_semantic_decontam",
     "x3_semantic_decontam_indexed",
@@ -118,6 +115,13 @@ _REWRITTEN_SINCE_GREEN = (
     # one zero-denominator rule (operators/stats.py)
     "a_corr_matrix_lineitem",
     "x4_ranker_agreement",
+    # corpus-curation, privacy and media queries on shared kernels:
+    # one bigram relation and count model (operators/ngram_lm.py), one
+    # BM25 and one query-likelihood term (retrieval.py), one
+    # quasi-identifier class builder (operators/privacy.py)
+    "x4_doc_perplexity_filter",
+    "x4_query_likelihood_topk",
+    "x4_t_closeness_audit",
 )
 
 

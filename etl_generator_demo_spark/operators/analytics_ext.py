@@ -7,7 +7,7 @@ fixtures, each with a DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.operators.relational import t
@@ -452,6 +452,8 @@ def funnel_counts(ev: DataFrame) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("p_ts"))
     )
+    from .stats import denom
+
     counts = (
         v.agg(F.count(F.lit(1)).alias("n_view"))
         .crossJoin(c.agg(F.count(F.lit(1)).alias("n_view_click")))
@@ -461,7 +463,7 @@ def funnel_counts(ev: DataFrame) -> DataFrame:
         "n_view",
         "n_view_click",
         "n_view_click_purchase",
-        (F.floor(F.col("n_view_click") * 10000.0 / F.col("n_view")) / 10000).alias(
+        (F.floor(F.col("n_view_click") * 10000.0 / denom(F.col("n_view"))) / 10000).alias(
             "click_rate"
         ),
         (
@@ -1570,106 +1572,6 @@ def x4_journey_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("n_sessions").desc(), "signature")
         .limit(20)
     )
-
-
-# ---------------------------------------------------------------------------
-# GDPR erasure-impact audit — deletion cascade planning over the FK graph
-# ---------------------------------------------------------------------------
-@register(
-    "d_gdpr_erasure_audit",
-    oracle="""
-    WITH forget AS (
-        SELECT c_custkey AS k FROM customer WHERE c_custkey % 97 = 0
-    ),
-    rows_per_table AS (
-        SELECT 'customer' AS table_name,
-               COUNT(*) AS n_rows,
-               SUM(CASE WHEN c_custkey IN (SELECT k FROM forget)
-                        THEN 1 ELSE 0 END) AS n_to_erase
-        FROM customer
-        UNION ALL
-        SELECT 'events', COUNT(*),
-               SUM(CASE WHEN user_id IN (SELECT k FROM forget)
-                        THEN 1 ELSE 0 END)
-        FROM events
-        UNION ALL
-        SELECT 'lineitem', COUNT(*),
-               SUM(CASE WHEN l_orderkey IN (
-                       SELECT o_orderkey FROM orders
-                       WHERE o_custkey IN (SELECT k FROM forget))
-                        THEN 1 ELSE 0 END)
-        FROM lineitem
-        UNION ALL
-        SELECT 'orders', COUNT(*),
-               SUM(CASE WHEN o_custkey IN (SELECT k FROM forget)
-                        THEN 1 ELSE 0 END)
-        FROM orders
-    )
-    SELECT table_name,
-           CAST(n_rows AS BIGINT) AS n_rows,
-           CAST(n_to_erase AS BIGINT) AS n_to_erase,
-           CAST(FLOOR(n_to_erase * 10000.0 / n_rows) AS BIGINT) AS pct_e4
-    FROM rows_per_table
-    ORDER BY table_name
-    """,
-    survey_ids=("J5", "A2", "U2"),
-)
-def d_gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Right-to-be-forgotten impact audit: for a deterministic forget
-    set (every 97th customer key, standing in for a deletion-request
-    batch), count the rows each table would lose — including the
-    TWO-HOP cascade customer → orders → lineitem that the FK graph
-    implies. The counting sibling of the DML layer's
-    ``merge_parquet``/staged-overwrite erasure executors
-    (`sources/mutations.py`): plan first, rewrite once. Completes the
-    governance trio: `x4_pii_scrub` (direct identifiers),
-    `x4_k_anonymity_ladder` (indirect), erasure (deletion).
-
-    Shape: the forget-key relation and its one-hop order-key expansion
-    both aggregate BEFORE broadcasting (keys only, never fact rows);
-    every per-table count is one scan with a broadcast hit marker —
-    four scans, zero fact-fact shuffles, output is 4 rows no matter
-    the corpus size."""
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    ev = t(spark, sf_dir, "events")
-    forget = cust.filter(F.col("c_custkey") % 97 == 0).select(
-        F.col("c_custkey").alias("k")
-    )
-    forget_orders = (
-        orders.join(F.broadcast(forget), orders["o_custkey"] == F.col("k"))
-        .select(F.col("o_orderkey").alias("k"))
-        .distinct()
-    )
-
-    def impact(name: str, base: DataFrame, key: str, keys: DataFrame) -> DataFrame:
-        marked = base.join(
-            F.broadcast(keys.withColumn("_hit", F.lit(1))),
-            base[key] == keys["k"],
-            "left",
-        )
-        return marked.agg(
-            F.lit(name).alias("table_name"),
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0))).cast("long").alias("n_to_erase"),
-        )
-
-    out = impact("customer", cust, "c_custkey", forget)
-    for part in (
-        impact("events", ev, "user_id", forget),
-        impact("lineitem", li, "l_orderkey", forget_orders),
-        impact("orders", orders, "o_custkey", forget),
-    ):
-        out = out.unionByName(part)
-    return out.select(
-        "table_name",
-        "n_rows",
-        "n_to_erase",
-        F.floor(F.col("n_to_erase") * 10000.0 / F.col("n_rows"))
-        .cast("long")
-        .alias("pct_e4"),
-    ).orderBy("table_name")
 
 
 # ---------------------------------------------------------------------------
@@ -3231,4 +3133,236 @@ def d_incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
             (inc == F.col("rev_recomputed")).alias("ivm_ok"),
         )
         .orderBy("segment")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Z-order (Morton) clustering audit
+# ---------------------------------------------------------------------------
+
+#: Z-order grid bits per dimension (256×256 cells) and bucket count.
+Z_BITS = 8
+Z_BUCKETS_SHIFT = 8  # top 8 of the 16 interleaved bits -> 256 buckets
+
+
+def _morton_expr(px: str, py: str, div_op: str) -> str:
+    """Bit interleave of two Z_BITS-wide non-negative ints, spelled as
+    pure arithmetic (div/mod/multiply) so the SAME formula runs on
+    Spark (`div`) and DuckDB (`//`) — no engine-specific bit operators."""
+    terms = []
+    for i in range(Z_BITS):
+        terms.append(f"((({px}) {div_op} {1 << i}) % 2) * {1 << (2 * i)}")
+        terms.append(f"((({py}) {div_op} {1 << i}) % 2) * {1 << (2 * i + 1)}")
+    return " + ".join(terms)
+
+
+def _zorder_oracle() -> str:
+    morton = _morton_expr("px", "py", "//")
+    return f"""
+    WITH keyed AS (
+        SELECT o_custkey AS ck,
+               CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS dd
+        FROM orders
+    ),
+    bounds AS (
+        SELECT MIN(ck) AS ck_min, MAX(ck) AS ck_max,
+               MIN(dd) AS dd_min, MAX(dd) AS dd_max
+        FROM keyed
+    ),
+    cells AS (
+        SELECT ck, dd,
+               ({1 << Z_BITS} * (ck - ck_min)) // (ck_max - ck_min + 1) AS px,
+               ({1 << Z_BITS} * (dd - dd_min)) // (dd_max - dd_min + 1) AS py
+        FROM keyed CROSS JOIN bounds
+    ),
+    coded AS (
+        SELECT ck, dd, ({morton}) // {1 << Z_BUCKETS_SHIFT} AS bucket
+        FROM cells
+    )
+    SELECT CAST(bucket AS BIGINT) AS bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(MAX(ck) - MIN(ck) AS BIGINT) AS cust_span,
+           CAST(MAX(dd) - MIN(dd) AS BIGINT) AS date_span_days
+    FROM coded
+    GROUP BY bucket ORDER BY bucket
+    """
+
+
+@register(
+    "d_zorder_clustering_keys",
+    oracle=_zorder_oracle(),
+    survey_ids=("D1", "F6", "A1", "X4"),
+)
+def d_zorder_clustering_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-order (Morton) clustering audit over orders keyed by
+    (custkey, orderdate): rank-normalize both keys to a 256×256 grid,
+    interleave the bits, bucket by the top 8 interleaved bits (the
+    file-assignment a Delta/Iceberg ``OPTIMIZE ZORDER BY`` performs),
+    and report each bucket's span on BOTH dimensions — the
+    data-skipping audit: z-order buckets are tight on custkey AND
+    date simultaneously, where a 1-D sort is tight on one and spans
+    everything on the other.
+
+    Scale: the bounds are one broadcast scalar row; the Morton code is
+    pure per-row arithmetic (div/mod — stays in whole-stage codegen,
+    the identical formula text the oracle runs); the audit is one
+    map-combined rollup over ≤256 buckets. This is the PLANNING
+    operator — the actual rewrite is `etl.py` load with
+    ``partition_by`` on the bucket column."""
+    o = t(spark, sf_dir, "orders")
+    keyed = o.select(
+        F.col("o_custkey").alias("ck"),
+        F.datediff(
+            F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
+        ).alias("dd"),
+    )
+    bounds = keyed.agg(
+        F.min("ck").alias("ck_min"),
+        F.max("ck").alias("ck_max"),
+        F.min("dd").alias("dd_min"),
+        F.max("dd").alias("dd_max"),
+    )
+    from .stats import div
+
+    def cell(c: str) -> Column:
+        lo, hi = F.col(f"{c}_min"), F.col(f"{c}_max")
+        return div((1 << Z_BITS) * (F.col(c) - lo), hi - lo + 1)
+
+    cells = keyed.crossJoin(F.broadcast(bounds)).select(
+        "ck", "dd", cell("ck").alias("px"), cell("dd").alias("py")
+    )
+    morton = F.expr(_morton_expr("px", "py", "div"))
+    coded = cells.select(
+        "ck", "dd", div(morton, F.lit(1 << Z_BUCKETS_SHIFT)).alias("bucket")
+    )
+    return (
+        coded.groupBy(F.col("bucket").cast("long").alias("bucket"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            (F.max("ck") - F.min("ck")).cast("long").alias("cust_span"),
+            (F.max("dd") - F.min("dd")).cast("long").alias("date_span_days"),
+        )
+        .orderBy("bucket")
+    )
+
+
+# ---------------------------------------------------------------------------
+# ANALYZE TABLE: per-column statistics in one scan
+# ---------------------------------------------------------------------------
+
+#: (column, kind) pairs for the lineitem stats sweep. `kind` fixes the
+#: canonical BIGINT encoding so min/max/NDV are engine-exact: ints
+#: as-is, dates as days-since-epoch, doubles as floor-cents, strings
+#: carry NDV only (no total order is asserted across collations).
+_ANALYZE_COLS = (
+    ("l_orderkey", "int"),
+    ("l_partkey", "int"),
+    ("l_suppkey", "int"),
+    ("l_linenumber", "int"),
+    ("l_quantity", "cents"),
+    ("l_extendedprice", "cents"),
+    ("l_discount", "cents"),
+    ("l_tax", "cents"),
+    ("l_returnflag", "str"),
+    ("l_linestatus", "str"),
+    ("l_shipdate", "date"),
+)
+
+
+def _analyze_oracle() -> str:
+    arms = []
+    for c, kind in _ANALYZE_COLS:
+        if kind == "int":
+            ival, sval = f"CAST({c} AS BIGINT)", "NULL"
+        elif kind == "cents":
+            ival, sval = f"CAST(FLOOR({c} * 100) AS BIGINT)", "NULL"
+        elif kind == "date":
+            ival = f"CAST(CAST({c} AS DATE) - DATE '1970-01-01' AS BIGINT)"
+            sval = "NULL"
+        else:
+            ival, sval = "NULL", c
+        arms.append(
+            f"SELECT '{c}' AS column_name, {ival} AS ival,"
+            f" CAST({sval} AS VARCHAR) AS sval FROM lineitem"
+        )
+    return f"""
+    WITH unpivoted AS ({" UNION ALL ".join(arms)})
+    SELECT column_name,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(COUNT(*) FILTER (WHERE ival IS NULL AND sval IS NULL)
+                AS BIGINT) AS n_nulls,
+           CAST(COUNT(DISTINCT COALESCE(CAST(ival AS VARCHAR), sval))
+                AS BIGINT) AS n_distinct,
+           CAST(MIN(ival) AS BIGINT) AS min_encoded,
+           CAST(MAX(ival) AS BIGINT) AS max_encoded
+    FROM unpivoted
+    GROUP BY column_name
+    ORDER BY column_name
+    """
+
+
+@register(
+    "d_analyze_table_stats",
+    oracle=_analyze_oracle(),
+    survey_ids=("S5", "A3", "A2", "F3"),
+)
+def d_analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANALYZE TABLE lineitem: per-column row count, null count, exact
+    NDV, and min/max under a canonical BIGINT encoding (ints as-is,
+    dates as epoch days, monetary doubles as floor-cents; strings
+    report NDV only) — the statistics a cost-based optimizer feeds on,
+    and the freshness-audit a lakehouse runs after large loads.
+
+    Plan: the table unpivots at the scan into (column, encoded-value)
+    pairs — ONE pass over the data regardless of column count (vs the
+    naive 11 COUNT(DISTINCT) aggregates whose Expand plan was
+    documented at `a_multi_distinct`) — then one column-keyed
+    aggregate; the shuffle carries one row per (column, value) for the
+    distinct and partial min/max/counts beside it. At 100 TB the NDV
+    tier swaps to HLL per column (`a_approx_distinct`'s sketch path),
+    same plan shape."""
+    li = t(spark, sf_dir, "lineitem")
+    arms = []
+    for c, kind in _ANALYZE_COLS:
+        if kind == "int":
+            ival, sval = F.col(c).cast("long"), F.lit(None).cast("string")
+        elif kind == "cents":
+            ival = F.floor(F.col(c) * 100).cast("long")
+            sval = F.lit(None).cast("string")
+        elif kind == "date":
+            ival = F.datediff(
+                F.col(c).cast("date"), F.lit("1970-01-01").cast("date")
+            ).cast("long")
+            sval = F.lit(None).cast("string")
+        else:
+            ival = F.lit(None).cast("long")
+            sval = F.col(c).cast("string")
+        arms.append(
+            F.struct(
+                F.lit(c).alias("column_name"),
+                ival.alias("ival"),
+                sval.alias("sval"),
+            )
+        )
+    unpivoted = li.select(
+        F.explode(F.array(*arms)).alias("u")
+    ).select("u.column_name", "u.ival", "u.sval")
+    return (
+        unpivoted.groupBy("column_name")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.count(
+                F.when(F.col("ival").isNull() & F.col("sval").isNull(), 1)
+            )
+            .cast("long")
+            .alias("n_nulls"),
+            F.count_distinct(
+                F.coalesce(F.col("ival").cast("string"), F.col("sval"))
+            )
+            .cast("long")
+            .alias("n_distinct"),
+            F.min("ival").cast("long").alias("min_encoded"),
+            F.max("ival").cast("long").alias("max_encoded"),
+        )
+        .orderBy("column_name")
     )

@@ -239,3 +239,85 @@ def x4_bpe_merge_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors and by the unrolled oracle."""
     docs = t(spark, sf_dir, "documents")
     return bpe_trainer(vocabulary(corpus_words(docs)))
+
+
+# ---------------------------------------------------------------------------
+# tokenizer application: the corpus encoded with the learned merges
+# ---------------------------------------------------------------------------
+
+def _bpe_encode_oracle() -> str:
+    steps = "".join("," + _bpe_step_sql(k) for k in range(1, BPE_STEPS + 1))
+    return f"""
+    WITH docword AS (
+        SELECT source, UNNEST(STRING_SPLIT(text, ' ')) AS word FROM documents
+    ),
+    vocab AS (
+        SELECT word, CAST(COUNT(*) AS BIGINT) AS wcount FROM docword
+        WHERE word <> '' GROUP BY word
+    ),
+    s0 AS MATERIALIZED (
+        SELECT word, wcount,
+               GENERATE_SUBSCRIPTS(STRING_SPLIT(word, ''), 1) AS pos,
+               UNNEST(STRING_SPLIT(word, '')) AS sym
+        FROM vocab
+    )
+    {steps},
+    enc AS (
+        SELECT word, CAST(COUNT(*) AS BIGINT) AS n_syms
+        FROM s{BPE_STEPS} GROUP BY word
+    )
+    SELECT dw.source,
+           CAST(COUNT(*) AS BIGINT) AS n_words,
+           CAST(SUM(LENGTH(dw.word)) AS BIGINT) AS n_chars,
+           CAST(SUM(e.n_syms) AS BIGINT) AS n_bpe_tokens,
+           CAST((SUM(LENGTH(dw.word)) * 1000000) // SUM(e.n_syms) AS BIGINT)
+               AS chars_per_token_e6
+    FROM docword dw JOIN enc e ON e.word = dw.word
+    WHERE dw.word <> ''
+    GROUP BY dw.source ORDER BY dw.source
+    """
+
+
+@register(
+    "x4_bpe_encode_corpus",
+    oracle=_bpe_encode_oracle(),
+    survey_ids=("X4", "W2", "A1", "J1"),
+)
+def x4_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer APPLICATION: encode the corpus with the merges the
+    BPE trainer learned (``x4_bpe_merge_steps`` — same
+    vocabulary, same 3 merge rounds) and report per-source encoded
+    token counts and compression (chars per BPE token, e6) — the
+    serving half of tokenizer training, and the number a data-mixture
+    designer actually budgets with (token counts under the REAL
+    tokenizer, not whitespace estimates).
+
+    Scale: merges train on the VOCABULARY relation (distinct words —
+    heavy-tailed, corpus-size independent) in the one-task trainer
+    (:func:`bpe_trainer`), which also returns each word's final symbols; encoding
+    never touches character state again — each corpus word occurrence
+    joins the |vocab|-keyed ``(word, n_syms)`` relation, so the
+    corpus-sized path is one broadcast join + one map-combined rollup."""
+    docword = corpus_words(t(spark, sf_dir, "documents"), "source")
+    enc = bpe_trainer(vocabulary(docword), words=True).select(
+        "word", F.size("syms").cast("long").alias("n_syms")
+    )
+    return (
+        docword.join(F.broadcast(enc), "word")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_words"),
+            F.sum(F.length("word")).cast("long").alias("n_chars"),
+            F.sum("n_syms").cast("long").alias("n_bpe_tokens"),
+        )
+        .select(
+            "source",
+            "n_words",
+            "n_chars",
+            "n_bpe_tokens",
+            F.expr("(n_chars * 1000000) div n_bpe_tokens").alias(
+                "chars_per_token_e6"
+            ),
+        )
+        .orderBy("source")
+    )

@@ -1537,3 +1537,130 @@ def x2_jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("r.tau_e2", "r.n_pairs", "r.n_docs_in_pairs")
         .orderBy("tau_e2")
     )
+
+
+# ---------------------------------------------------------------------------
+# content-defined chunking (CDC) dedup — the shift-resistant tier
+# ---------------------------------------------------------------------------
+
+#: Boundary modulus: a position starts a new chunk when the local
+#: 2-gram hash ≡ 0 (mod CDC_MOD) ⇒ expected chunk length ≈ CDC_MOD
+#: tokens (fixture docs run 40–130 tokens ⇒ ~5–16 chunks/doc).
+CDC_MOD = 8
+
+
+@register(
+    "x2_cdc_chunk_dedup",
+    oracle=f"""
+    WITH tok AS (
+        SELECT doc_id,
+               UNNEST(STRING_SPLIT(text, ' ')) AS tk,
+               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
+        FROM documents
+    ),
+    marked AS (
+        SELECT doc_id, pos, tk,
+               CASE WHEN LAG(tk) OVER w IS NULL THEN 1
+                    WHEN CAST(('0x' || SUBSTR(MD5(LAG(tk) OVER w
+                                              || '|' || tk), 1, 8))
+                              AS BIGINT) % {CDC_MOD} = 0 THEN 1
+                    ELSE 0 END AS is_boundary
+        FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
+    ),
+    numbered AS (
+        SELECT doc_id, pos, tk,
+               SUM(is_boundary) OVER (PARTITION BY doc_id ORDER BY pos
+                                      ROWS UNBOUNDED PRECEDING) AS chunk_no
+        FROM marked
+    ),
+    chunks AS (
+        SELECT doc_id, chunk_no,
+               MD5(STRING_AGG(tk, ' ' ORDER BY pos)) AS chunk_h,
+               CAST(COUNT(*) AS BIGINT) AS chunk_tokens
+        FROM numbered GROUP BY doc_id, chunk_no
+    )
+    SELECT chunk_h,
+           CAST(MAX(chunk_tokens) AS BIGINT) AS chunk_tokens,
+           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
+           CAST(COUNT(*) AS BIGINT) AS n_occurrences,
+           MIN(doc_id) AS owner_doc
+    FROM chunks
+    GROUP BY chunk_h
+    HAVING COUNT(DISTINCT doc_id) >= 2
+    ORDER BY n_docs DESC, chunk_h
+    """,
+    survey_ids=("X2", "W3", "A1", "F6"),
+)
+def x2_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Content-defined-chunking dedup — the SHIFT-RESISTANT tier the
+    fixed-block detector (`x4_chunk_level_dedup`, disjoint 16-token
+    blocks) cannot provide: a one-token insertion shifts every later
+    fixed block and kills all matches, while CDC boundaries depend
+    only on LOCAL content (new chunk when the 2-gram hash of
+    (prev, cur) ≡ 0 mod CDC_MOD), so chunking RESYNCHRONIZES right after
+    an edit and shared tails still dedup — the rsync/LBFS/backup-dedup
+    argument, applied to corpus boilerplate. Shift-resistance is
+    pinned by tests/test_dedup.py on a planted shifted pair
+    (fixed blocks: 0 matches; CDC: the shared suffix chunks match).
+
+    Emits cross-document duplicated chunks with a deterministic
+    canonical owner. Plan: one token scan → two per-doc windows
+    (boundary mark, prefix-sum chunk number) → per-chunk hash rollup →
+    one groupBy(chunk_h) with a HAVING prune — linear, keyed doc_id
+    then chunk_h; the chunk relation is ~tokens/CDC_MOD rows. The boundary
+    hash reuses the md5-hex→int idiom shared with the shard router."""
+    docs = t(spark, sf_dir, "documents")
+    tok = docs.select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tk")
+    )
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    prev = F.lag("tk").over(w)
+    h2 = F.conv(
+        F.substring(F.md5(F.concat(prev, F.lit("|"), F.col("tk"))), 1, 8),
+        16,
+        10,
+    ).cast("long")
+    marked = tok.select(
+        "doc_id",
+        "pos",
+        "tk",
+        F.when(prev.isNull(), 1)
+        .when(h2 % CDC_MOD == 0, 1)
+        .otherwise(0)
+        .alias("is_boundary"),
+    )
+    numbered = marked.select(
+        "doc_id",
+        "pos",
+        "tk",
+        F.sum("is_boundary")
+        .over(
+            Window.partitionBy("doc_id")
+            .orderBy("pos")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        .alias("chunk_no"),
+    )
+    chunks = numbered.groupBy("doc_id", "chunk_no").agg(
+        F.md5(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "tk"))),
+                    lambda s: s["tk"],
+                ),
+                " ",
+            )
+        ).alias("chunk_h"),
+        F.count(F.lit(1)).cast("long").alias("chunk_tokens"),
+    )
+    return (
+        chunks.groupBy("chunk_h")
+        .agg(
+            F.max("chunk_tokens").cast("long").alias("chunk_tokens"),
+            F.count_distinct("doc_id").cast("long").alias("n_docs"),
+            F.count(F.lit(1)).cast("long").alias("n_occurrences"),
+            F.min("doc_id").alias("owner_doc"),
+        )
+        .filter(F.col("n_docs") >= 2)
+        .orderBy(F.desc("n_docs"), "chunk_h")
+    )

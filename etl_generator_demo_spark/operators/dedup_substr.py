@@ -673,3 +673,401 @@ def x2_exact_substr_spans_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _verified_span_pairs(docs, fps.join(keep, "fp")).orderBy(
         "doc_a", "doc_b"
     )
+
+
+# ---------------------------------------------------------------------------
+# removal -> rematerialize: the corpus after ExactSubstr dedup
+# ---------------------------------------------------------------------------
+
+def removed_positions(kg: DataFrame) -> DataFrame:
+    """(doc_id, pos) for every token position the keep-first ExactSubstr
+    policy deletes: each cross-doc duplicated K-gram hash is owned by
+    its minimum doc_id; all K positions of every non-owner occurrence
+    are removed (`x2_dup_span_removal` counts these; here the explicit
+    position SET feeds the rebuild). Linear: ≤ K rows per removal
+    start, keyed h then doc_id."""
+    own = (
+        kg.groupBy("h")
+        .agg(
+            F.count_distinct("doc_id").alias("nd"),
+            F.min("doc_id").alias("owner"),
+        )
+        .filter(F.col("nd") >= 2)
+        .select("h", "owner")
+    )
+    starts = (
+        kg.join(own, "h")
+        .filter(F.col("doc_id") != F.col("owner"))
+        .select("doc_id", "pos")
+    )
+    return starts.select(
+        "doc_id",
+        F.explode(
+            F.sequence(F.col("pos"), F.col("pos") + F.lit(SPAN_K - 1))
+        ).alias("pos"),
+    ).distinct()
+
+
+def rematerialized_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, pos, tk) of the corpus AFTER removal — original token
+    positions, removed ones anti-joined away. The shared head of both
+    rematerialize queries."""
+    tok = docs.select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tk")
+    )
+    rp = removed_positions(_kgrams(docs))
+    return tok.join(rp, ["doc_id", "pos"], "left_anti")
+
+
+#: Shared oracle CTE chain: kept = post-removal (doc_id, pos, tk).
+_DUCK_KEPT = f"""
+    {_DUCK_KGRAMS},
+    own AS (
+        SELECT h, MIN(doc_id) AS owner
+        FROM kg GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
+    ),
+    rs AS (
+        SELECT kg.doc_id, kg.pos
+        FROM kg JOIN own USING (h)
+        WHERE kg.doc_id <> own.owner
+    ),
+    rp AS (
+        SELECT DISTINCT rs.doc_id, rs.pos + g.g AS pos
+        FROM rs CROSS JOIN generate_series(0, {SPAN_K - 1}) AS g(g)
+    ),
+    kept AS (
+        SELECT tok.doc_id, tok.pos, tok.tk
+        FROM tok ANTI JOIN rp ON rp.doc_id = tok.doc_id AND rp.pos = tok.pos
+    )
+"""
+
+
+@register(
+    "x2_removal_rematerialize",
+    oracle=f"""
+    WITH {_DUCK_KEPT},
+    ka AS (
+        SELECT doc_id,
+               CAST(COUNT(*) AS BIGINT) AS n_kept_tokens,
+               STRING_AGG(tk, ' ' ORDER BY pos) AS kept_text
+        FROM kept GROUP BY doc_id
+    ),
+    nt AS (
+        SELECT doc_id,
+               CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens
+        FROM documents
+    )
+    SELECT nt.doc_id, nt.n_tokens,
+           COALESCE(ka.n_kept_tokens, 0) AS n_kept_tokens,
+           ka.kept_text
+    FROM nt LEFT JOIN ka USING (doc_id)
+    ORDER BY nt.doc_id
+    """,
+    survey_ids=("X2", "J5", "A1", "F6"),
+)
+def x2_removal_rematerialize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ExactSubstr dedup APPLY → REBUILD: the re-materialized corpus a
+    training pipeline actually writes out (Lee et al. 2022 cut the
+    duplicated spans, then re-join what survives). Per document: the
+    original token count, the post-removal count, and the rebuilt text
+    (kept tokens re-joined in original order; NULL when removal
+    consumed the whole document — the caller's drop signal).
+
+    Composes `x2_dup_span_removal`'s keep-first policy with the
+    rebuild: removed POSITIONS are the K-expansion of every non-owner
+    occurrence start, materialized once (≤ K rows per start, distinct).
+
+    Decide with small rows, move big rows once: the decisions are just
+    the removed-position set (doc-keyed and removal-sized), so only
+    THAT is aggregated (collect_set per doc) and joined back to the
+    document relation, and the rebuild is map-side array arithmetic
+    over the original split: kept positions = array_except(sequence(0,
+    n-1), removed), kept_text = the re-join of those elements. Token
+    bytes never enter an exchange (exploding the corpus into
+    (doc_id, pos, tk) rows and re-aggregating would shuffle every
+    token twice); array_except is membership-based, so collect_set
+    order cannot matter, and a fully removed doc yields size 0 → NULL
+    kept_text. The boundary audit
+    (`x2_rematerialize_boundary_audit`) still proves removal
+    completeness on the token relation spelling."""
+    docs = t(spark, sf_dir, "documents")
+    rem = (
+        removed_positions(_kgrams(docs))
+        .groupBy("doc_id")
+        .agg(F.collect_set("pos").alias("_rem"))
+    )
+    toks = F.split("text", " ")
+    kept_pos = F.array_except(
+        F.sequence(F.lit(0), F.size("_toks") - 1),
+        F.coalesce(F.col("_rem"), F.array().cast("array<int>")),
+    )
+    kept_toks = F.transform(kept_pos, lambda i: F.element_at(F.col("_toks"), i + 1))
+    return (
+        docs.select("doc_id", toks.alias("_toks"))
+        .join(rem, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.size("_toks").cast("long").alias("n_tokens"),
+            kept_toks.alias("_kept"),
+        )
+        .select(
+            "doc_id",
+            "n_tokens",
+            F.size("_kept").cast("long").alias("n_kept_tokens"),
+            F.when(F.size("_kept") > 0, F.array_join("_kept", " ")).alias(
+                "kept_text"
+            ),
+        )
+        .orderBy("doc_id")
+    )
+
+
+def _rema_gram_tail(k: int) -> str:
+    """Oracle tail: K-grams over the REBUILT corpus with the original
+    positional span of each gram window carried along."""
+    leads = "".join(f"|| '_' || LEAD(tk, {i}) OVER w " for i in range(1, k))
+    return f"""
+    kept2 AS (
+        SELECT doc_id, pos AS opos, tk,
+               ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS np
+        FROM kept
+    ),
+    rg0 AS (
+        SELECT doc_id,
+               MD5(tk {leads}) AS h2,
+               LEAD(opos, {k - 1}) OVER w - opos AS ospan
+        FROM kept2 WINDOW w AS (PARTITION BY doc_id ORDER BY np)
+    ),
+    rg AS (SELECT doc_id, h2, ospan FROM rg0 WHERE h2 IS NOT NULL),
+    dup AS (
+        SELECT h2,
+               MAX(CASE WHEN ospan > {k - 1} THEN 1 ELSE 0 END) AS any_boundary
+        FROM rg GROUP BY h2 HAVING COUNT(DISTINCT doc_id) >= 2
+    )
+    """
+
+
+@register(
+    "x2_rematerialize_boundary_audit",
+    oracle=f"""
+    WITH {_DUCK_KEPT},
+    {_rema_gram_tail(SPAN_K).strip().rstrip()}
+    ,
+    cut AS (SELECT COUNT(DISTINCT doc_id) AS n_docs_cut FROM rp),
+    tot AS (
+        SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
+               CAST(COUNT(*) AS BIGINT) AS n_tokens_total
+        FROM tok
+    ),
+    kt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_kept_total FROM kept),
+    dd AS (
+        SELECT CAST(COUNT(*) AS BIGINT) AS residual_dup_hashes,
+               CAST(COALESCE(SUM(any_boundary), 0) AS BIGINT)
+                   AS boundary_dup_hashes
+        FROM dup
+    )
+    SELECT tot.n_docs, CAST(cut.n_docs_cut AS BIGINT) AS n_docs_cut,
+           tot.n_tokens_total, kt.n_kept_total,
+           dd.residual_dup_hashes, dd.boundary_dup_hashes,
+           dd.residual_dup_hashes - dd.boundary_dup_hashes
+               AS intact_dup_hashes
+    FROM tot CROSS JOIN cut CROSS JOIN kt CROSS JOIN dd
+    """,
+    survey_ids=("X2", "A2", "W3"),
+)
+def x2_rematerialize_boundary_audit(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Cut-boundary invariant of the rematerialized corpus — the PROOF
+    that the removal pass did its job. Re-runs K-gram extraction over
+    the REBUILT corpus and classifies every residual cross-doc
+    duplicated gram by its ORIGINAL positional span: a gram whose K
+    kept tokens were originally adjacent (span K-1) is an "intact"
+    survivor; a wider span means the gram straddles a cut (tokens made
+    adjacent by deletion — a boundary artifact, expected and benign).
+
+    Invariant: ``intact_dup_hashes = 0``. Proof sketch: an intact
+    residual gram is an ORIGINAL gram with all K positions kept; every
+    non-owner occurrence of a cross-doc duplicated hash has all K
+    positions removed by construction, so a hash can survive intact in
+    at most its one owner doc — never in two. Residual cross-doc dups
+    can therefore only involve a boundary gram. Pinned both by this
+    oracle row and by tests/test_dedup_substr.py on planted data.
+
+    Plan: the kept relation flows into one per-doc renumber window +
+    the same gram window as `_kgrams` (carrying the original-position
+    span), then a groupBy(h2) rollup — linear in kept tokens, output
+    one row."""
+    docs = t(spark, sf_dir, "documents")
+    tok = docs.select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tk")
+    )
+    rp = removed_positions(_kgrams(docs))
+    kept = tok.join(rp, ["doc_id", "pos"], "left_anti")
+
+    wnp = Window.partitionBy("doc_id").orderBy("pos")
+    kept2 = kept.select(
+        "doc_id",
+        F.col("pos").alias("opos"),
+        "tk",
+        F.row_number().over(wnp).alias("np"),
+    )
+    w = Window.partitionBy("doc_id").orderBy("np")
+    gram = F.concat_ws(
+        "_", F.col("tk"), *[F.lead("tk", i).over(w) for i in range(1, SPAN_K)]
+    )
+    rg = kept2.select(
+        "doc_id",
+        F.when(
+            F.lead("tk", SPAN_K - 1).over(w).isNotNull(), F.md5(gram)
+        ).alias("h2"),
+        (F.lead("opos", SPAN_K - 1).over(w) - F.col("opos")).alias("ospan"),
+    ).filter(F.col("h2").isNotNull())
+    dup = (
+        rg.groupBy("h2")
+        .agg(
+            F.count_distinct("doc_id").alias("nd"),
+            F.max(
+                F.when(F.col("ospan") > SPAN_K - 1, 1).otherwise(0)
+            ).alias("any_boundary"),
+        )
+        .filter(F.col("nd") >= 2)
+    )
+
+    tot = tok.agg(
+        F.count_distinct("doc_id").cast("long").alias("n_docs"),
+        F.count(F.lit(1)).cast("long").alias("n_tokens_total"),
+    )
+    cut = rp.agg(
+        F.count_distinct("doc_id").cast("long").alias("n_docs_cut")
+    )
+    kt = kept.agg(F.count(F.lit(1)).cast("long").alias("n_kept_total"))
+    dd = dup.agg(
+        F.count(F.lit(1)).cast("long").alias("residual_dup_hashes"),
+        F.coalesce(F.sum("any_boundary"), F.lit(0))
+        .cast("long")
+        .alias("boundary_dup_hashes"),
+    )
+    return (
+        tot.crossJoin(F.broadcast(cut))
+        .crossJoin(F.broadcast(kt))
+        .crossJoin(F.broadcast(dd))
+        .select(
+            "n_docs",
+            "n_docs_cut",
+            "n_tokens_total",
+            "n_kept_total",
+            "residual_dup_hashes",
+            "boundary_dup_hashes",
+            (
+                F.col("residual_dup_hashes") - F.col("boundary_dup_hashes")
+            ).alias("intact_dup_hashes"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# what dedup did to the corpus: unigram distribution shift
+# ---------------------------------------------------------------------------
+
+def _dedup_shift_oracle() -> str:
+    return f"""
+    WITH {_DUCK_KEPT},
+    pre AS (
+        SELECT tk, CAST(COUNT(*) AS BIGINT) AS c_pre FROM tok GROUP BY tk
+    ),
+    post AS (
+        SELECT tk, CAST(COUNT(*) AS BIGINT) AS c_post FROM kept GROUP BY tk
+    ),
+    np AS (SELECT CAST(SUM(c_pre) AS BIGINT) AS n_pre FROM pre),
+    nq AS (SELECT CAST(SUM(c_post) AS BIGINT) AS n_post FROM post),
+    kl AS (
+        SELECT CAST(SUM(post.c_post * CAST(FLOOR(LN(
+                   (post.c_post * 1.0 * np.n_pre)
+                   / (pre.c_pre * 1.0 * nq.n_post)
+               ) * 1000000) AS BIGINT)) AS BIGINT) AS kl_num
+        FROM post JOIN pre USING (tk) CROSS JOIN np CROSS JOIN nq
+    )
+    SELECT np.n_pre AS n_tokens_pre,
+           nq.n_post AS n_tokens_post,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM pre) AS n_types_pre,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM post) AS n_types_post,
+           CAST(GREATEST(kl.kl_num, 0) // nq.n_post AS BIGINT) AS kl_post_pre_e6
+    FROM np CROSS JOIN nq CROSS JOIN kl
+    """
+
+
+@register(
+    "x2_dedup_distribution_shift",
+    oracle=_dedup_shift_oracle(),
+    survey_ids=("X2", "X4", "A1", "F6"),
+)
+def x2_dedup_distribution_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """What dedup DID to the corpus: the unigram-distribution shift
+    across the ExactSubstr removal (`x2_removal_rematerialize`'s kept
+    tokens vs the original), reported as KL(post || pre) in nats e6 —
+    the audit that catches a dedup pass silently skewing the token
+    distribution (duplicated boilerplate is exactly the high-frequency
+    mass removal deletes, so some shift is EXPECTED; a large one means
+    the dedup policy rewrote the corpus's statistics, which downstream
+    LM quality scores inherit). Kept tokens are a subset of the
+    original, so every post type exists in pre — KL is finite by
+    construction, no smoothing needed.
+
+    Per-type ln floored to e6 then exact integer sums (the
+    `x4_entropy_per_source` discipline); one token scan feeds both
+    distributions (the kept side reuses the rematerialize pipeline's
+    anti-join). Output: one row — token/type counts both sides + the
+    divergence."""
+    docs = t(spark, sf_dir, "documents")
+    tok = docs.select(F.explode(F.split("text", " ")).alias("tk"))
+    pre = tok.groupBy("tk").agg(F.count(F.lit(1)).cast("long").alias("c_pre"))
+    post = (
+        rematerialized_tokens(docs)
+        .groupBy("tk")
+        .agg(F.count(F.lit(1)).cast("long").alias("c_post"))
+    )
+    np_ = pre.agg(
+        F.sum("c_pre").cast("long").alias("n_pre"),
+        F.count(F.lit(1)).cast("long").alias("n_types_pre"),
+    )
+    nq_ = post.agg(
+        F.sum("c_post").cast("long").alias("n_post"),
+        F.count(F.lit(1)).cast("long").alias("n_types_post"),
+    )
+    kl = (
+        post.join(pre, "tk")
+        .crossJoin(F.broadcast(np_.select("n_pre")))
+        .crossJoin(F.broadcast(nq_.select("n_post")))
+        .select(
+            (
+                F.col("c_post")
+                * F.floor(
+                    F.log(
+                        (F.col("c_post") * F.lit(1.0) * F.col("n_pre"))
+                        / (F.col("c_pre") * F.lit(1.0) * F.col("n_post"))
+                    )
+                    * 1_000_000
+                ).cast("long")
+            ).alias("term")
+        )
+        .agg(F.sum("term").cast("long").alias("kl_num"))
+    )
+    return (
+        np_.crossJoin(nq_)
+        .crossJoin(F.broadcast(kl))
+        .select(
+            F.col("n_pre").alias("n_tokens_pre"),
+            F.col("n_post").alias("n_tokens_post"),
+            "n_types_pre",
+            "n_types_post",
+            # GREATEST(kl_num, 0): the per-type ln floors can push the
+            # numerator slightly negative when the true KL ≈ 0, and
+            # Spark's `div` truncates toward zero while DuckDB's `//`
+            # floors — clamping at the mathematical lower bound (KL ≥ 0)
+            # makes the spellings identical in both engines.
+            F.expr("CAST(GREATEST(kl_num, 0) div n_post AS LONG)").alias(
+                "kl_post_pre_e6"
+            ),
+        )
+    )

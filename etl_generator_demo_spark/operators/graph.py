@@ -1662,3 +1662,129 @@ def g_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return top_a.unionByName(top_h).orderBy("kind", "rnk")
+
+
+# ---------------------------------------------------------------------------
+# item-item co-occurrence recommendations
+# ---------------------------------------------------------------------------
+
+#: Anchor parts for the item-item serving table (top by basket support).
+RECS_ANCHORS = 50
+RECS_PER_ITEM = 3
+
+
+@register(
+    "x4_item_item_recs",
+    oracle=f"""
+    WITH bi AS (
+        SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
+        FROM lineitem
+    ),
+    support AS (
+        SELECT item, CAST(COUNT(*) AS BIGINT) AS n_baskets FROM bi
+        GROUP BY item
+    ),
+    anchors AS (
+        SELECT item, n_baskets FROM support
+        ORDER BY n_baskets DESC, item LIMIT {RECS_ANCHORS}
+    ),
+    pairs AS (
+        SELECT a.item AS item_a, b.item AS item_b,
+               CAST(COUNT(*) AS BIGINT) AS cooc
+        FROM bi a JOIN bi b
+          ON a.basket = b.basket AND a.item <> b.item
+        GROUP BY a.item, b.item
+        HAVING COUNT(*) >= 2
+    ),
+    scored AS (
+        SELECT an.item, an.n_baskets, p.item_b AS rec, p.cooc,
+               (p.cooc * p.cooc * 1000000) // (an.n_baskets * sb.n_baskets)
+                   AS score_e6
+        FROM anchors an
+        JOIN pairs p ON p.item_a = an.item
+        JOIN support sb ON sb.item = p.item_b
+    ),
+    topk AS (
+        SELECT *,
+               ROW_NUMBER() OVER (PARTITION BY item
+                                  ORDER BY score_e6 DESC, cooc DESC, rec)
+                   AS rnk
+        FROM scored
+    )
+    SELECT item, n_baskets, rec, cooc, score_e6, CAST(rnk AS BIGINT) AS rnk
+    FROM topk WHERE rnk <= {RECS_PER_ITEM}
+    ORDER BY item, rnk
+    """,
+    survey_ids=("X4", "J3", "A1", "W4", "O4"),
+)
+def x4_item_item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Item-item collaborative-filtering serving table: for each of the
+    top-RECS_ANCHORS (50) parts by basket support, the top-3
+    co-purchased parts ranked by squared-cosine over baskets —
+    ``cooc²·10⁶ // (n_a·n_b)``, the sqrt-free fixed-point monotone of
+    cosine similarity, so ranks are exact and the oracle hashes.
+
+    Scale: basket→item pairs are generated per basket (baskets are
+    bounded — an order has a handful of parts, so the self-join blowup
+    is per-key C(k,2), never corpus²); supports are map-combined; the
+    anchor restriction (|anchors| = 50 rows, broadcast semi-join) is
+    pushed BELOW the basket self-join — per-pair cooc is unchanged by
+    it, so the pair shuffle only ever carries anchor pairs; cooc≥2
+    HAVING prunes the tail; top-k per item is one keyed window over
+    the already-pruned pair relation."""
+    li = t(spark, sf_dir, "lineitem")
+    bi = li.select(
+        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
+    ).distinct()
+    support = bi.groupBy("item").agg(
+        F.count(F.lit(1)).cast("long").alias("n_baskets")
+    )
+    anchors = support.orderBy(F.desc("n_baskets"), "item").limit(RECS_ANCHORS)
+    # Anchor pushdown: cooc(item_a, item_b) is computed per pair, so
+    # restricting item_a to the 50 anchors BEFORE the basket self-join
+    # is semantics-preserving — and shrinks the join's left side from
+    # the full corpus to the anchor rows, which is the difference
+    # between a corpus-pair shuffle and an anchor-pair one at 100 TB.
+    # One broadcast inner join carries n_baskets along (it is a
+    # function of item_a, so adding it to the groupBy key is free) —
+    # anchors is computed once, not once per use.
+    a = bi.select(F.col("basket"), F.col("item").alias("item_a")).join(
+        F.broadcast(
+            anchors.select(F.col("item").alias("item_a"), "n_baskets")
+        ),
+        "item_a",
+    )
+    b = bi.select(F.col("basket"), F.col("item").alias("item_b"))
+    pairs = (
+        a.join(b, "basket")
+        .filter(F.col("item_a") != F.col("item_b"))
+        .groupBy("item_a", "n_baskets", "item_b")
+        .agg(F.count(F.lit(1)).cast("long").alias("cooc"))
+        .filter(F.col("cooc") >= 2)
+    )
+    scored = (
+        pairs.join(
+            support.select(
+                F.col("item").alias("item_b"),
+                F.col("n_baskets").alias("nb_b"),
+            ),
+            "item_b",
+        )
+        .select(
+            F.col("item_a").alias("item"),
+            "n_baskets",
+            F.col("item_b").alias("rec"),
+            "cooc",
+            F.expr("(cooc * cooc * 1000000) div (n_baskets * nb_b)").alias(
+                "score_e6"
+            ),
+        )
+    )
+    w_top = Window.partitionBy("item").orderBy(
+        F.desc("score_e6"), F.desc("cooc"), "rec"
+    )
+    return (
+        scored.withColumn("rnk", F.row_number().over(w_top).cast("long"))
+        .filter(F.col("rnk") <= RECS_PER_ITEM)
+        .orderBy("item", "rnk")
+    )

@@ -17,7 +17,7 @@ below does all three.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -28,6 +28,9 @@ from pyspark.sql.types import (
 )
 
 from etl_generator_demo_spark.operators.relational import t
+from etl_generator_demo_spark.operators.similarity import _as_double, _dot, cosine
+from etl_generator_demo_spark.operators.skew import _HEX
+from etl_generator_demo_spark.operators.stats import div
 from etl_generator_demo_spark.registry import register
 
 #: Canonical multimodal schema: payload + typed sidecar metadata.
@@ -991,4 +994,547 @@ def x5_modality_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("reweight_e6"),
         )
         .orderBy("media_type")
+    )
+
+
+# ---------------------------------------------------------------------------
+# perceptual-hash near-dup and scene cuts over frame embeddings
+# ---------------------------------------------------------------------------
+
+#: 64-bit pHash split into 4 bands of 16 bits (4 hex chars) — a
+#: re-encode that moves <= PHASH_HAM_TAU bits leaves >= 1 band intact
+#: whenever the flipped bits hit <= 3 bands, so banding recalls small
+#: perturbations while random 64-bit pairs collide on a 16-bit band
+#: with p = 4 * 2^-16.
+PHASH_BANDS = 4
+#: Exact-verify acceptance: Hamming distance <= 8 of 64 bits (random
+#: pairs concentrate at 32).
+PHASH_HAM_TAU = 8
+
+
+def phash_relation(docs: DataFrame) -> DataFrame:
+    """(media_id, phash) for the corpus PLUS a simulated re-encode
+    batch: every 5th item re-keyed (+1_000_000) with its 64-bit
+    fingerprint perturbed by exactly one bit (the low bit of nibble
+    ``media_id % 16`` xor-flipped) — a re-encode/resize changes a few
+    DCT coefficients, not the whole hash.
+
+    The fingerprint itself is the md5 of the BINARY payload column (a
+    deterministic stand-in; a real deployment swaps in a DCT pHash
+    over decoded pixels via the :func:`decode_media` Pandas-UDF path
+    and keeps every plan below unchanged). Spark md5(payload) and DuckDB MD5(text)
+    hash the same utf-8 bytes — the `x5_payload_dedup` parity."""
+    media = as_media_table(docs)
+    orig = media.select(
+        "media_id", F.substring(F.md5("payload"), 1, 16).alias("phash")
+    )
+    pos = (F.col("media_id") % 16 + 1).cast("int")
+    flipped = F.lower(
+        F.hex(F.conv(F.col("phash").substr(pos, F.lit(1)), 16, 10).cast("int").bitwiseXOR(1))
+    )
+    re_enc = orig.filter(F.col("media_id") % 5 == 0).select(
+        (F.col("media_id") + 1_000_000).alias("media_id"),
+        F.concat(
+            F.col("phash").substr(F.lit(1), pos - 1),
+            flipped,
+            F.col("phash").substr(pos + 1, 16 - pos),
+        ).alias("phash"),
+    )
+    return orig.unionByName(re_enc)
+
+
+#: Oracle twin of :func:`phash_relation` and the banded Hamming verify:
+#: CTE chain ending at ``ham(media_a, media_b, hamming)``.
+_DUCK_PHASH_HAM = f"""orig AS (
+        SELECT doc_id AS media_id, SUBSTR(MD5(text), 1, 16) AS phash
+        FROM documents
+    ),
+    re AS (
+        SELECT media_id + 1000000 AS media_id,
+               SUBSTR(phash, 1, pos - 1)
+               || SUBSTR('{_HEX}',
+                         xor(instr('{_HEX}', SUBSTR(phash, pos, 1)) - 1, 1) + 1,
+                         1)
+               || SUBSTR(phash, pos + 1, 16 - pos) AS phash
+        FROM (
+            SELECT media_id, phash,
+                   CAST(media_id % 16 + 1 AS INT) AS pos
+            FROM orig WHERE media_id % 5 = 0
+        )
+    ),
+    m AS (SELECT * FROM orig UNION ALL SELECT * FROM re),
+    bands AS (
+        SELECT media_id, g.b AS band_id,
+               SUBSTR(phash, g.b * 4 + 1, 4) AS band_key
+        FROM m CROSS JOIN (SELECT UNNEST(RANGE(0, {PHASH_BANDS})) AS b) g
+    ),
+    cand AS (
+        SELECT DISTINCT a.media_id AS media_a, c.media_id AS media_b
+        FROM bands a
+        JOIN bands c
+          ON a.band_id = c.band_id AND a.band_key = c.band_key
+         AND a.media_id < c.media_id
+    ),
+    ham AS (
+        SELECT cand.media_a, cand.media_b,
+               CAST(SUM(bit_count(xor(
+                   instr('{_HEX}', SUBSTR(ma.phash, p.p, 1)) - 1,
+                   instr('{_HEX}', SUBSTR(mb.phash, p.p, 1)) - 1
+               ))) AS BIGINT) AS hamming
+        FROM cand
+        JOIN m ma ON ma.media_id = cand.media_a
+        JOIN m mb ON mb.media_id = cand.media_b
+        CROSS JOIN (SELECT UNNEST(RANGE(1, 17)) AS p) p
+        GROUP BY cand.media_a, cand.media_b
+    )"""
+
+
+@register(
+    "x5_phash_hamming_neardup",
+    oracle=f"""
+    WITH {_DUCK_PHASH_HAM}
+    SELECT media_a, media_b, hamming
+    FROM ham WHERE hamming <= {PHASH_HAM_TAU}
+    ORDER BY media_a, media_b
+    """,
+    survey_ids=("X5", "X2", "J1", "A1"),
+)
+def x5_phash_hamming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perceptual-hash near-dup detection for media payloads — the
+    image analogue of SimHash text dedup: byte-identical blobs are
+    caught by `x5_payload_dedup`, but a re-encode/resize/watermark
+    changes every byte while moving only a few bits of the perceptual
+    fingerprint, so the dedup that actually deflates a crawled image
+    corpus is Hamming-radius search over 64-bit pHashes.
+
+    Pipeline (each stage linear): fingerprint scan -> 4x16-bit band
+    explode -> candidate pairs from ONE self-join on (band_id,
+    band_key) -> exact Hamming distance over the 16 nibbles (explode +
+    xor + bit_count, all JVM-side) -> accept at <= PHASH_HAM_TAU bits.
+    Random pairs share a band with p = 4/65536 and verify at ~32 bits,
+    so output = the planted one-bit re-encodes. At 100 TB the shuffle
+    carries (media_id, 4-char band_key) rows — never payloads — and
+    the verify join touches only candidates, the `x2_neardup_verified`
+    shape on the media fingerprint domain."""
+    ph = phash_relation(t(spark, sf_dir, "documents"))
+    bands = ph.select(
+        "media_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).cast("long").alias("band_id"),
+                        F.substring("phash", b * 4 + 1, 4).alias("band_key"),
+                    )
+                    for b in range(PHASH_BANDS)
+                ]
+            )
+        ).alias("bk"),
+    ).select("media_id", "bk.band_id", "bk.band_key")
+    cand = (
+        bands.alias("a")
+        .join(
+            bands.select(
+                F.col("media_id").alias("media_b"), "band_id", "band_key"
+            ).alias("c"),
+            ["band_id", "band_key"],
+        )
+        .filter(F.col("a.media_id") < F.col("media_b"))
+        .select(F.col("a.media_id").alias("media_a"), "media_b")
+        .distinct()
+    )
+
+    def nib(c):
+        return F.conv(F.col(c).substr(F.col("p"), F.lit(1)), 16, 10).cast("int")
+
+    ham = (
+        cand.join(ph.select(F.col("media_id").alias("media_a"), F.col("phash").alias("ph_a")), "media_a")
+        .join(ph.select(F.col("media_id").alias("media_b"), F.col("phash").alias("ph_b")), "media_b")
+        .select("media_a", "media_b", F.explode(F.sequence(F.lit(1), F.lit(16))).alias("p"), "ph_a", "ph_b")
+        .groupBy("media_a", "media_b")
+        .agg(
+            F.sum(
+                F.bit_count(nib("ph_a").bitwiseXOR(nib("ph_b")))
+            )
+            .cast("long")
+            .alias("hamming")
+        )
+    )
+    return (
+        ham.filter(F.col("hamming") <= PHASH_HAM_TAU)
+        .select("media_a", "media_b", "hamming")
+        .orderBy("media_a", "media_b")
+    )
+
+
+# ---------------------------------------------------------------------------
+# scene-cut detection over per-clip frame embeddings
+# ---------------------------------------------------------------------------
+
+#: Frames per clip in the fixture adaptation (vec_id div 16 = clip).
+CLIP_FRAMES = 16
+#: A transition is a CUT when adjacent-frame cosine drops below this
+#: (e6 fixed point). The fixture's vectors are uniform random, so
+#: most transitions are near-orthogonal; real frame features sit near
+#: 1.0 within a shot — the threshold's sign, not its exact value, is
+#: the operator.
+CUT_TAU_E6 = 250_000
+
+
+@register(
+    "x5_scene_cut_detection",
+    oracle=f"""
+    WITH f AS (
+        SELECT vec_id // {CLIP_FRAMES} AS clip_id,
+               vec_id % {CLIP_FRAMES} AS frame_idx,
+               embedding::DOUBLE[] AS v
+        FROM embeddings
+    ),
+    tr AS (
+        SELECT a.clip_id,
+               CAST(FLOOR(LIST_DOT_PRODUCT(a.v, b.v)
+                    / (SQRT(LIST_DOT_PRODUCT(a.v, a.v))
+                       * SQRT(LIST_DOT_PRODUCT(b.v, b.v))) * 1000000)
+                    AS BIGINT) AS cos_e6
+        FROM f a
+        JOIN f b ON b.clip_id = a.clip_id AND b.frame_idx = a.frame_idx + 1
+    )
+    SELECT clip_id,
+           CAST(COUNT(*) AS BIGINT) AS n_transitions,
+           CAST(SUM(CASE WHEN cos_e6 < {CUT_TAU_E6} THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_cuts,
+           CAST(SUM(CASE WHEN cos_e6 < {CUT_TAU_E6} THEN 1 ELSE 0 END) + 1
+                AS BIGINT) AS n_segments,
+           CAST(MIN(cos_e6) AS BIGINT) AS min_cos_e6,
+           CAST(SUM(cos_e6) AS BIGINT) AS sum_cos_e6
+    FROM tr GROUP BY clip_id ORDER BY clip_id
+    """,
+    survey_ids=("X5", "X3", "J1", "A1"),
+)
+def x5_scene_cut_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scene-cut detection — the video-curation primitive that turns a
+    clip into shots before frame sampling: adjacent-frame feature
+    cosine drops below a threshold at a hard cut. The fixture's
+    `embeddings` stand in for per-frame features (vec_id div 16 =
+    clip, vec_id mod 16 = frame index); a real deployment feeds
+    decoded frame features through the same plan.
+
+    Plan: one embedding scan -> self-join keyed on (clip_id,
+    frame_idx + 1) — per-clip state is CLIP_FRAMES-bounded, so the
+    join partitions by clip and never widens — -> per-clip rollup.
+    Cosines are floored to e6 BIGINTs with the exact
+    LIST_DOT_PRODUCT spelling `x3_cosine_topk` pins; the rollup
+    reports the sum (exact integer), not a mean, so no float or
+    signed-division drift crosses engines. At 100 TB: clips hash
+    across executors, every stage is linear in frames."""
+    f = t(spark, sf_dir, "embeddings").select(
+        div(F.col("vec_id"), F.lit(CLIP_FRAMES)).alias("clip_id"),
+        (F.col("vec_id") % CLIP_FRAMES).alias("frame_idx"),
+        _as_double("embedding").alias("v"),
+    )
+    a = f.select("clip_id", "frame_idx", F.col("v").alias("va"))
+    b = f.select(
+        "clip_id",
+        (F.col("frame_idx") - 1).alias("frame_idx"),
+        F.col("v").alias("vb"),
+    )
+    tr = a.join(b, ["clip_id", "frame_idx"]).select(
+        "clip_id",
+        F.floor(cosine(F.col("va"), F.col("vb")) * 1_000_000)
+        .cast("long")
+        .alias("cos_e6"),
+    )
+    cut = F.when(F.col("cos_e6") < CUT_TAU_E6, 1).otherwise(0)
+    return (
+        tr.groupBy("clip_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_transitions"),
+            F.sum(cut).cast("long").alias("n_cuts"),
+            (F.sum(cut) + 1).cast("long").alias("n_segments"),
+            F.min("cos_e6").cast("long").alias("min_cos_e6"),
+            F.sum("cos_e6").cast("long").alias("sum_cos_e6"),
+        )
+        .orderBy("clip_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# keyframe selection per scene segment
+# ---------------------------------------------------------------------------
+
+@register(
+    "x5_keyframe_selection",
+    oracle=f"""
+    WITH f AS (
+        SELECT vec_id // {CLIP_FRAMES} AS clip_id,
+               vec_id % {CLIP_FRAMES} AS frame_idx,
+               embedding::DOUBLE[] AS v
+        FROM embeddings
+    ),
+    lagd AS (
+        SELECT clip_id, frame_idx, v,
+               LAG(v) OVER (PARTITION BY clip_id ORDER BY frame_idx) AS pv
+        FROM f
+    ),
+    seg AS (
+        SELECT clip_id, frame_idx,
+               CAST(FLOOR(LIST_DOT_PRODUCT(v, v) * 1000000) AS BIGINT)
+                   AS norm_e6,
+               SUM(CASE WHEN pv IS NOT NULL
+                         AND CAST(FLOOR(LIST_DOT_PRODUCT(pv, v)
+                              / (SQRT(LIST_DOT_PRODUCT(pv, pv))
+                                 * SQRT(LIST_DOT_PRODUCT(v, v))) * 1000000)
+                              AS BIGINT) < {CUT_TAU_E6}
+                        THEN 1 ELSE 0 END)
+                   OVER (PARTITION BY clip_id ORDER BY frame_idx)
+                   AS segment_id
+        FROM lagd
+    ),
+    smax AS (
+        SELECT clip_id, segment_id,
+               CAST(COUNT(*) AS BIGINT) AS n_frames,
+               MAX(norm_e6) AS key_norm_e6
+        FROM seg GROUP BY clip_id, segment_id
+    )
+    SELECT s.clip_id, CAST(s.segment_id AS BIGINT) AS segment_id,
+           s.n_frames,
+           CAST(MIN(g.frame_idx) AS BIGINT) AS keyframe_idx,
+           CAST(s.key_norm_e6 AS BIGINT) AS key_norm_e6
+    FROM smax s
+    JOIN seg g ON g.clip_id = s.clip_id AND g.segment_id = s.segment_id
+              AND g.norm_e6 = s.key_norm_e6
+    GROUP BY s.clip_id, s.segment_id, s.n_frames, s.key_norm_e6
+    ORDER BY s.clip_id, s.segment_id
+    """,
+    survey_ids=("X5", "W2", "A1"),
+)
+def x5_keyframe_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Keyframe selection per scene segment — the step after
+    `x5_scene_cut_detection` that turns shots into the frame table a
+    vision pipeline actually embeds: segment frames at the cuts
+    (running cut count per clip), then keep ONE representative frame
+    per segment — the max-feature-norm frame (the sharpness proxy;
+    swap in a real sharpness score via the decode UDF path), ties to
+    the earliest frame.
+
+    Plan: one scan -> per-clip lag + running-sum windows (bounded:
+    CLIP_FRAMES rows per partition) -> segment rollup -> argmax via a max-norm
+    equi-join back (deterministic, no engine-specific arg_max). At
+    100 TB clips hash across executors; every stage is linear."""
+    w = Window.partitionBy("clip_id").orderBy("frame_idx")
+    f = t(spark, sf_dir, "embeddings").select(
+        div(F.col("vec_id"), F.lit(CLIP_FRAMES)).alias("clip_id"),
+        (F.col("vec_id") % CLIP_FRAMES).alias("frame_idx"),
+        _as_double("embedding").alias("v"),
+    )
+    lagd = f.withColumn("pv", F.lag("v").over(w))
+    cos_e6 = F.floor(cosine(F.col("pv"), F.col("v")) * 1_000_000).cast("long")
+    seg = lagd.select(
+        "clip_id",
+        "frame_idx",
+        F.floor(_dot(F.col("v"), F.col("v")) * 1_000_000)
+        .cast("long")
+        .alias("norm_e6"),
+        F.sum(
+            F.when(F.col("pv").isNotNull() & (cos_e6 < CUT_TAU_E6), 1).otherwise(0)
+        )
+        .over(w)
+        .cast("long")
+        .alias("segment_id"),
+    )
+    smax = seg.groupBy("clip_id", "segment_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_frames"),
+        F.max("norm_e6").alias("key_norm_e6"),
+    )
+    return (
+        smax.join(
+            seg.select(
+                "clip_id",
+                "segment_id",
+                F.col("norm_e6").alias("key_norm_e6"),
+                "frame_idx",
+            ),
+            ["clip_id", "segment_id", "key_norm_e6"],
+        )
+        .groupBy("clip_id", "segment_id", "n_frames", "key_norm_e6")
+        .agg(F.min("frame_idx").cast("long").alias("keyframe_idx"))
+        .select("clip_id", "segment_id", "n_frames", "keyframe_idx", "key_norm_e6")
+        .orderBy("clip_id", "segment_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# media curation attrition (the composed X5 funnel)
+# ---------------------------------------------------------------------------
+
+def _media_attrition_oracle() -> str:
+    return f"""
+    WITH pop AS (
+        SELECT doc_id AS media_id, text AS body FROM documents
+        UNION ALL
+        SELECT doc_id + 1000000, text || ' re' FROM documents
+        WHERE doc_id % 5 = 0
+        UNION ALL
+        SELECT doc_id + 2000000, text FROM documents WHERE doc_id % 7 = 0
+    ),
+    sized AS (
+        SELECT media_id, body,
+               CAST(OCTET_LENGTH(ENCODE(body)) AS BIGINT) AS n_bytes
+        FROM pop
+    ),
+    exact_keep AS (
+        SELECT MIN(media_id) AS media_id FROM sized GROUP BY MD5(body)
+    ),
+    s2 AS (
+        SELECT s.media_id, s.n_bytes FROM sized s
+        JOIN exact_keep k ON k.media_id = s.media_id
+    ),
+    {_DUCK_PHASH_HAM},
+    phash_drop AS (
+        SELECT DISTINCT media_b AS media_id FROM ham
+        WHERE hamming <= {PHASH_HAM_TAU}
+    ),
+    s3 AS (
+        SELECT s2.media_id, s2.n_bytes FROM s2
+        ANTI JOIN phash_drop d ON d.media_id = s2.media_id
+    ),
+    img AS (
+        SELECT doc_id AS media_id, text FROM documents WHERE doc_id % 3 = 0
+    ),
+    tok AS (
+        SELECT media_id, UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM img
+    ),
+    txt AS (
+        SELECT media_id,
+               CAST(('0x' || SUBSTR(MD5(tk), 1, 4)) AS BIGINT)
+                   % {X5_TXT_DIM} AS dim,
+               CAST(COUNT(*) AS BIGINT) AS w
+        FROM tok GROUP BY media_id, dim
+    ),
+    tn AS (
+        SELECT media_id, CAST(SUM(w * w) AS BIGINT) AS nt2
+        FROM txt GROUP BY media_id
+    ),
+    iv AS (
+        SELECT vec_id, GENERATE_SUBSCRIPTS(embedding, 1) - 1 AS dim,
+               CAST(FLOOR(UNNEST(embedding::DOUBLE[]) * 1000000) AS BIGINT)
+                   AS v6
+        FROM embeddings
+    ),
+    inorm AS (
+        SELECT vec_id, CAST(SUM(v6 * v6) AS BIGINT) AS ni2
+        FROM iv GROUP BY vec_id
+    ),
+    dots AS (
+        SELECT t.media_id, CAST(SUM(t.w * iv.v6) AS BIGINT) AS dot6
+        FROM txt t JOIN iv ON iv.vec_id = t.media_id AND iv.dim = t.dim
+        GROUP BY t.media_id
+    ),
+    clip_drop AS (
+        SELECT d.media_id
+        FROM dots d
+        JOIN tn ON tn.media_id = d.media_id
+        JOIN inorm ON inorm.vec_id = d.media_id
+        WHERE CAST(FLOOR(d.dot6 * 1.0
+                   / (SQRT(CAST(tn.nt2 AS DOUBLE))
+                      * SQRT(CAST(inorm.ni2 AS DOUBLE))) * 1000000) AS BIGINT)
+              < {X5_CLIP_TAU_E6}
+    ),
+    s4 AS (
+        SELECT s3.media_id, s3.n_bytes FROM s3
+        ANTI JOIN clip_drop d ON d.media_id = s3.media_id
+    )
+    SELECT * FROM (
+        SELECT 1 AS stage_no, 'total' AS stage,
+               CAST(COUNT(*) AS BIGINT) AS n_items,
+               CAST(SUM(n_bytes) AS BIGINT) AS n_bytes FROM sized
+        UNION ALL
+        SELECT 2, 'after_exact_payload_dedup',
+               CAST(COUNT(*) AS BIGINT), CAST(SUM(n_bytes) AS BIGINT) FROM s2
+        UNION ALL
+        SELECT 3, 'after_phash_neardup',
+               CAST(COUNT(*) AS BIGINT), CAST(SUM(n_bytes) AS BIGINT) FROM s3
+        UNION ALL
+        SELECT 4, 'after_clip_gate',
+               CAST(COUNT(*) AS BIGINT), CAST(SUM(n_bytes) AS BIGINT) FROM s4
+    ) ORDER BY stage_no
+    """
+
+
+@register(
+    "x5_media_curation_attrition",
+    oracle=_media_attrition_oracle(),
+    survey_ids=("X5", "X1", "X2", "X3"),
+)
+def x5_media_curation_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The composed X5 curation funnel — the media sibling of
+    `x4_pipeline_attrition`: item and byte counts surviving each stage
+    of a crawled-media ingest. Population = corpus + a re-encode batch
+    (every 5th item, different bytes, near-identical fingerprint) + a
+    mirror batch (every 7th, byte-identical). Stages: total → exact
+    payload dedup (kills the mirrors — md5 digest groupBy, the
+    `x5_payload_dedup` tier) → pHash near-dup (kills the re-encodes —
+    the `x5_phash_hamming_neardup` banded pipeline, higher id of each
+    accepted pair drops) → CLIP caption gate (drops scored images
+    below τ — the `x5_crossmodal_clip_gate` towers). The bytes column
+    prices each tier before anything is rewritten — the number a
+    100 TB media ingest reads to decide which tier pays for itself.
+
+    Every stage reuses the registered component's exact spelling, so
+    the funnel always describes the pipeline as shipped (the
+    `x4_pipeline_attrition` shared-builder argument)."""
+    docs = t(spark, sf_dir, "documents")
+    pop = (
+        docs.select(F.col("doc_id").alias("media_id"), F.col("text").alias("body"))
+        .unionByName(
+            docs.filter(F.col("doc_id") % 5 == 0).select(
+                (F.col("doc_id") + 1_000_000).alias("media_id"),
+                F.concat(F.col("text"), F.lit(" re")).alias("body"),
+            )
+        )
+        .unionByName(
+            docs.filter(F.col("doc_id") % 7 == 0).select(
+                (F.col("doc_id") + 2_000_000).alias("media_id"),
+                F.col("text").alias("body"),
+            )
+        )
+    )
+    sized = pop.select(
+        "media_id",
+        "body",
+        F.length(F.col("body").cast("binary")).cast("long").alias("n_bytes"),
+    ).localCheckpoint(eager=True)  # population consumed by every stage
+    exact_keep = sized.groupBy(F.md5("body")).agg(
+        F.min("media_id").alias("media_id")
+    ).select("media_id")
+    s2 = sized.join(exact_keep, "media_id", "left_semi").select(
+        "media_id", "n_bytes"
+    )
+    phash_drop = (
+        x5_phash_hamming_neardup(spark, sf_dir)
+        .select(F.col("media_b").alias("media_id"))
+        .distinct()
+    )
+    s3 = s2.join(phash_drop, "media_id", "left_anti")
+    clip_drop = (
+        x5_crossmodal_clip_gate(spark, sf_dir)
+        .filter(F.col("clip_cos6") < X5_CLIP_TAU_E6)
+        .select("media_id")
+    )
+    s4 = s3.join(clip_drop, "media_id", "left_anti")
+
+    def stage(no, name, df):
+        return df.agg(
+            F.lit(no).cast("long").alias("stage_no"),
+            F.lit(name).alias("stage"),
+            F.count(F.lit(1)).cast("long").alias("n_items"),
+            F.sum("n_bytes").cast("long").alias("n_bytes"),
+        )
+
+    return (
+        stage(1, "total", sized.select("media_id", "n_bytes"))
+        .unionByName(stage(2, "after_exact_payload_dedup", s2))
+        .unionByName(stage(3, "after_phash_neardup", s3))
+        .unionByName(stage(4, "after_clip_gate", s4))
+        .orderBy("stage_no")
     )

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.operators.relational import t
+from etl_generator_demo_spark.operators.skew import _HEX
+from etl_generator_demo_spark.operators.stats import div
 from etl_generator_demo_spark.registry import register
 
 CHUNK_TOKENS = 512
@@ -675,4 +677,366 @@ def x4_chunk_level_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "keep_start",
         )
         .orderBy("block_hash")
+    )
+
+
+# ---------------------------------------------------------------------------
+# packing context-length sweep
+# ---------------------------------------------------------------------------
+
+#: Context lengths swept (tokens per training sequence).
+PACK_SWEEP_LENGTHS = (64, 128, 256, 512)
+
+
+def _pack_sweep_oracle() -> str:
+    lens = ", ".join(f"({v})" for v in PACK_SWEEP_LENGTHS)
+    return f"""
+    WITH sized AS (
+        SELECT doc_id, source,
+               CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens
+        FROM documents
+    ),
+    cum AS (
+        SELECT doc_id, source, n_tokens,
+               SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                                   ROWS UNBOUNDED PRECEDING) - n_tokens
+                   AS tok_before
+        FROM sized
+    ),
+    src_tot AS (
+        SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS src_tokens
+        FROM sized GROUP BY source
+    ),
+    per_l AS (
+        SELECT l.l, c.doc_id,
+               (c.tok_before + c.n_tokens - 1
+                >= (c.tok_before // l.l + 1) * l.l) AS straddles
+        FROM cum c CROSS JOIN (VALUES {lens}) AS l(l)
+    ),
+    chunks AS (
+        SELECT l.l,
+               CAST(SUM((s.src_tokens + l.l - 1) // l.l) AS BIGINT)
+                   AS n_chunks
+        FROM src_tot s CROSS JOIN (VALUES {lens}) AS l(l)
+        GROUP BY l.l
+    )
+    SELECT CAST(p.l AS BIGINT) AS context_len,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(COUNT(*) FILTER (WHERE p.straddles) AS BIGINT)
+               AS n_straddling_docs,
+           CAST(COUNT(*) FILTER (WHERE p.straddles) * 1000000 // COUNT(*)
+                AS BIGINT) AS straddle_rate_e6,
+           CAST(MAX(c.n_chunks) AS BIGINT) AS n_chunks
+    FROM per_l p JOIN chunks c ON c.l = p.l
+    GROUP BY p.l
+    ORDER BY context_len
+    """
+
+
+@register(
+    "x4_packing_context_sweep",
+    oracle=_pack_sweep_oracle(),
+    survey_ids=("X4", "W3", "A1"),
+)
+def x4_packing_context_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The packing family's tuning curve: for each training context
+    length, how many documents the concat-and-chunk layout
+    (`x4_sequence_packing`'s model) splits across a sequence boundary
+    — the boundary-breakage vs sequence-count tradeoff that picks a
+    context length for a corpus (longer sequences -> fewer chunks but
+    every straddled doc leaks attention across an EOD boundary). One
+    sized+prefix-sum relation exploded across the four lengths (never
+    four scans — the Jaccard-sweep discipline); the per-source prefix
+    sum is the packing operator's own deterministic concat order."""
+    sized = t(spark, sf_dir, "documents").select(
+        "doc_id",
+        "source",
+        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+    )
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    cum = sized.select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias("tok_before"),
+    )
+    lens = spark.createDataFrame(
+        [(v,) for v in PACK_SWEEP_LENGTHS], "l long"
+    )
+    per_l = cum.crossJoin(F.broadcast(lens)).select(
+        "l",
+        (
+            F.col("tok_before") + F.col("n_tokens") - 1
+            >= (F.expr("tok_before div l") + 1) * F.col("l")
+        ).alias("straddles"),
+    )
+    src_tot = sized.groupBy("source").agg(
+        F.sum("n_tokens").cast("long").alias("src_tokens")
+    )
+    chunks = (
+        src_tot.crossJoin(F.broadcast(lens))
+        .groupBy("l")
+        .agg(
+            F.sum(F.expr("(src_tokens + l - 1) div l"))
+            .cast("long")
+            .alias("n_chunks")
+        )
+    )
+    return (
+        per_l.groupBy("l")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.count(F.when(F.col("straddles"), 1))
+            .cast("long")
+            .alias("n_straddling_docs"),
+        )
+        .join(chunks, "l")
+        .select(
+            F.col("l").alias("context_len"),
+            "n_docs",
+            "n_straddling_docs",
+            F.expr("n_straddling_docs * 1000000 div n_docs")
+            .cast("long")
+            .alias("straddle_rate_e6"),
+            "n_chunks",
+        )
+        .orderBy("context_len")
+    )
+
+
+# ---------------------------------------------------------------------------
+# data-constrained repeats audit (epochs + repeated-data value decay)
+# ---------------------------------------------------------------------------
+
+#: Token budget for the repeats audit — 10x the mixture sampler's
+#: budget, deliberately larger than several languages' supply so the
+#: epoch arithmetic is exercised (at bigger SFs supply grows and the
+#: flags clear — the audit is data-derived, not baked in).
+EPOCHS_BUDGET_TOKENS = 80_000
+#: Repeated-epoch value-decay constant (Muennighoff et al. 2023,
+#: "Scaling Data-Constrained Language Models": past ~4 epochs repeated
+#: tokens lose most value; R* parametrizes the exponential decay).
+EPOCHS_R_STAR = 15
+#: Flag threshold: repeats beyond 4 epochs are the paper's
+#: diminishing-returns cliff.
+EPOCHS_FLAG = 4
+
+
+def _epochs_oracle() -> str:
+    alloc = " ".join(
+        f"WHEN '{lang}' THEN {int(EPOCHS_BUDGET_TOKENS * w)}"
+        for lang, w in MIXTURE_WEIGHTS.items()
+    )
+    eff = (
+        f"CASE WHEN ep <= 1.0 THEN ep"
+        f" ELSE 1.0 + {EPOCHS_R_STAR} * (1.0 - EXP(-(ep - 1.0) / {EPOCHS_R_STAR})) END"
+    )
+    return f"""
+    WITH supply AS (
+        SELECT lang,
+               CAST(SUM(LEN(STRING_SPLIT(text, ' '))) AS BIGINT)
+                   AS avail_tokens,
+               CAST(CASE lang {alloc} ELSE 0 END AS BIGINT) AS alloc_tokens
+        FROM documents GROUP BY lang
+    ),
+    ep AS (
+        SELECT lang, avail_tokens, alloc_tokens,
+               CAST(alloc_tokens AS DOUBLE) / avail_tokens AS ep
+        FROM supply
+    )
+    SELECT lang, avail_tokens, alloc_tokens,
+           CAST(alloc_tokens * 1000000 // avail_tokens AS BIGINT)
+               AS epochs_e6,
+           CAST(FLOOR(({eff}) * 1000000) AS BIGINT) AS eff_epochs_e6,
+           CAST(avail_tokens * CAST(FLOOR(({eff}) * 1000000) AS BIGINT)
+                // 1000000 AS BIGINT) AS effective_tokens,
+           alloc_tokens > {EPOCHS_FLAG} * avail_tokens AS over_4_epochs
+    FROM ep
+    ORDER BY lang
+    """
+
+
+@register(
+    "x4_epochs_repeat_audit",
+    oracle=_epochs_oracle(),
+    survey_ids=("X4", "A1"),
+)
+def x4_epochs_repeat_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Data-constrained repeats audit — the mixture-family member the
+    budget/temperature/DoReMi/DSIR quartet still lacked: when the
+    token budget times a language's weight EXCEEDS its supply, the
+    sampler must repeat data, and repeated epochs decay in value
+    (Muennighoff et al. 2023: roughly exponential with constant R*,
+    negligible return past ~4 epochs). Per language: supply,
+    allocation, raw epochs (e6), EFFECTIVE epochs under the decay
+    (1 + R*(1 - e^{-(ep-1)/R*}) past one epoch), the effective token
+    count that actually buys loss, and the >4-epoch flag that tells a
+    mixture designer to re-weight before training, not after.
+
+    One per-lang rollup (map-combined) + scan-side arithmetic —
+    |langs|-bounded output, linear at any corpus size."""
+    alloc = F.lit(0)
+    for lang, w in reversed(MIXTURE_WEIGHTS.items()):
+        alloc = F.when(F.col("lang") == lang, int(EPOCHS_BUDGET_TOKENS * w)).otherwise(alloc)
+    ep = F.col("ep")
+    eff = F.when(ep <= 1.0, ep).otherwise(
+        1.0 + EPOCHS_R_STAR * (1.0 - F.exp(-(ep - 1.0) / EPOCHS_R_STAR))
+    )
+    eff_e6 = F.floor(eff * 1000000).cast("long")
+    supply = (
+        t(spark, sf_dir, "documents")
+        .groupBy("lang")
+        .agg(F.sum(F.size(F.split("text", " "))).cast("long").alias("avail_tokens"))
+        .withColumn("alloc_tokens", alloc.cast("long"))
+    )
+    return supply.withColumn(
+        "ep", F.col("alloc_tokens").cast("double") / F.col("avail_tokens")
+    ).select(
+        "lang",
+        "avail_tokens",
+        "alloc_tokens",
+        div(F.col("alloc_tokens") * 1000000, F.col("avail_tokens")).alias("epochs_e6"),
+        eff_e6.alias("eff_epochs_e6"),
+        div(F.col("avail_tokens") * eff_e6, F.lit(1000000)).alias("effective_tokens"),
+        (F.col("alloc_tokens") > EPOCHS_FLAG * F.col("avail_tokens")).alias(
+            "over_4_epochs"
+        ),
+    ).orderBy("lang")
+
+
+# ---------------------------------------------------------------------------
+# span-corruption plan (T5-style masking, deterministic)
+# ---------------------------------------------------------------------------
+
+#: Span start rate: a span starts at token p when the first 2 md5 hex
+#: chars of 'span|doc|p' read below this bound (13/256 ~ 5% of
+#: positions; with 3-token spans that targets ~15% corruption, the T5
+#: noise density).
+SPAN_START_BOUND = 13
+#: Tokens masked per span start.
+SPAN_LEN = 3
+
+
+@register(
+    "x4_span_corruption_plan",
+    oracle=f"""
+    WITH tok AS (
+        SELECT doc_id,
+               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) - 1 AS pos,
+               LEN(STRING_SPLIT(text, ' ')) AS n_tokens
+        FROM documents
+    ),
+    starts AS (
+        SELECT doc_id, pos, n_tokens
+        FROM tok
+        WHERE (instr('{_HEX}', SUBSTR(MD5('span|' || CAST(doc_id AS VARCHAR)
+                    || '|' || CAST(pos AS VARCHAR)), 1, 1)) - 1) * 16
+              + instr('{_HEX}', SUBSTR(MD5('span|' || CAST(doc_id AS VARCHAR)
+                    || '|' || CAST(pos AS VARCHAR)), 2, 1)) - 1
+              < {SPAN_START_BOUND}
+    ),
+    masked AS (
+        SELECT DISTINCT s.doc_id, s.pos + g.g AS mpos
+        FROM starts s CROSS JOIN generate_series(0, {SPAN_LEN - 1}) AS g(g)
+        JOIN tok t ON t.doc_id = s.doc_id AND t.pos = s.pos + g.g
+    ),
+    runs AS (
+        SELECT m.doc_id,
+               CAST(COUNT(*) AS BIGINT) AS n_masked,
+               CAST(SUM(CASE WHEN p.mpos IS NULL THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_spans
+        FROM masked m
+        LEFT JOIN masked p
+          ON p.doc_id = m.doc_id AND p.mpos = m.mpos - 1
+        GROUP BY m.doc_id
+    ),
+    nt AS (
+        SELECT doc_id, CAST(MAX(n_tokens) AS BIGINT) AS n_tokens
+        FROM tok GROUP BY doc_id
+    )
+    SELECT nt.doc_id, nt.n_tokens,
+           COALESCE(r.n_spans, 0) AS n_spans,
+           COALESCE(r.n_masked, 0) AS n_masked,
+           CAST(COALESCE(r.n_masked, 0) * 1000000 // nt.n_tokens AS BIGINT)
+               AS corruption_e6
+    FROM nt LEFT JOIN runs r ON r.doc_id = nt.doc_id
+    ORDER BY nt.doc_id
+    """,
+    survey_ids=("X4", "A1", "F6"),
+)
+def x4_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T5-style span-corruption PLAN: which token spans each document
+    masks for a denoising objective — deterministic (md5-gated span
+    starts at ~5% of positions x 3-token spans ~ the 15% noise
+    density), so every retraining and both engines pick identical
+    spans, the same reproducibility argument as the md5 train/test
+    split. Overlapping spans merge (distinct masked positions);
+    reported spans are the MERGED maximal runs (a masked position
+    opens a span iff position-1 is unmasked — counted with one keyed
+    self-join, no window). Output per doc: tokens, spans, masked
+    count, achieved corruption rate e6 — the objective-prep relation
+    a pretraining pipeline materializes next to packing.
+
+    Plan: one token explode -> md5 gate (scan-side) -> bounded
+    SPAN_LEN× span explode -> distinct + keyed self-join + per-doc
+    rollup. Linear; no all-pairs, no global window."""
+    docs = t(spark, sf_dir, "documents")
+    tok = docs.select(
+        "doc_id",
+        F.posexplode(F.split("text", " ")).alias("pos", "tk"),
+        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+    )
+    # the first two md5 hex digits of 'span|doc|pos' as an integer
+    gate = F.conv(
+        F.substring(
+            F.md5(F.concat_ws("|", F.lit("span"), F.col("doc_id").cast("string"), F.col("pos").cast("string"))),
+            1,
+            2,
+        ),
+        16,
+        10,
+    ).cast("long")
+    starts = tok.filter(gate < SPAN_START_BOUND).select("doc_id", "pos")
+    masked = (
+        starts.select(
+            "doc_id",
+            F.explode(
+                F.sequence(F.col("pos"), F.col("pos") + F.lit(SPAN_LEN - 1))
+            ).alias("mpos"),
+        )
+        .join(
+            tok.select("doc_id", F.col("pos").alias("mpos")), ["doc_id", "mpos"]
+        )
+        .distinct()
+    )
+    prev = masked.select("doc_id", (F.col("mpos") + 1).alias("mpos"), F.lit(1).alias("has_prev"))
+    runs = (
+        masked.join(prev, ["doc_id", "mpos"], "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_masked"),
+            F.sum(F.when(F.col("has_prev").isNull(), 1).otherwise(0))
+            .cast("long")
+            .alias("n_spans"),
+        )
+    )
+    nt = docs.select(
+        "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
+    )
+    return (
+        nt.join(runs, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_tokens",
+            F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
+            F.coalesce("n_masked", F.lit(0)).cast("long").alias("n_masked"),
+            div(F.coalesce("n_masked", F.lit(0)) * 1000000, F.col("n_tokens")).alias(
+                "corruption_e6"
+            ),
+        )
+        .orderBy("doc_id")
     )

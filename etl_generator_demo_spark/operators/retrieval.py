@@ -1,6 +1,7 @@
-"""Full-text retrieval primitives over the documents corpus: BM25
-scoring and PMI co-occurrence — the query-side counterpart of the
-text-analysis suite (SURVEY §2.12 X4; the reference's corpora live in
+"""Full-text retrieval primitives over the documents corpus: BM25 and
+Dirichlet query-likelihood scoring (one term score each, with its
+DuckDB twin beside it) and PMI co-occurrence — the query-side
+counterpart of the text-analysis suite (SURVEY §2.12 X4; the reference's corpora live in
 PostgreSQL where this is `ts_rank`/pg_trgm territory, reimagined
 Spark-first for a 100 TB corpus).
 
@@ -21,7 +22,7 @@ a top-K vocabulary (≤ C(K,2) pairs per doc, linear in corpus size).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.operators.ann_index import (
@@ -47,6 +48,56 @@ BM25_TOP_K = 20
 #: document-frequency terms, bounding per-doc pair fan-out at C(K,2).
 PMI_VOCAB_K = 20
 
+#: Dirichlet pseudo-count. The textbook 2000 assumes ~500-token web
+#: docs; fixture docs average ~45 tokens, so mu is set near avgdl
+#: (the standard mu ~ avgdl rule) to keep the smoothing meaningful.
+QL_MU = 50
+
+
+def bm25_term_e6() -> Column:
+    """floor(1e6 · BM25 term score) over the columns ``tf``, ``df``,
+    ``dl``, ``n_docs`` and ``total_len``: idf in the +1 'BM25+' form
+    ln(1 + (N − df + 0.5)/(df + 0.5)), saturation k1, length
+    normalization b against avgdl = total_len / n_docs."""
+    avgdl = F.col("total_len").cast("double") / F.col("n_docs")
+    idf = F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
+    score = (idf * (F.col("tf") * (BM25_K1 + 1))) / (
+        F.col("tf")
+        + BM25_K1 * (F.lit(1) - BM25_B + BM25_B * F.col("dl") / avgdl)
+    )
+    return F.floor(score * 1000000).cast("long")
+
+
+def _duck_bm25_term_e6(tf: str, df: str, dl: str, n_docs: str, total_len: str) -> str:
+    """Oracle twin of :func:`bm25_term_e6` over the named columns."""
+    return f"""CAST(FLOOR(
+                   (LN(1 + ({n_docs} - {df} + 0.5) / ({df} + 0.5))
+                    * ({tf} * {BM25_K1 + 1}))
+                   / ({tf} + {BM25_K1} * (1 - {BM25_B}
+                      + {BM25_B} * {dl} / (CAST({total_len} AS DOUBLE) / {n_docs})))
+                   * 1000000) AS BIGINT)"""
+
+
+def ql_term_e6() -> Column:
+    """floor(1e6 · ln p(t|d)) under Dirichlet smoothing over the
+    columns ``tf`` (NULL when the term is absent from the document),
+    ``ctf``, ``total_len`` (collection length) and ``dl``:
+    p(t|d) = (tf + μ·ctf/|C|) / (dl + μ)."""
+    tf = F.coalesce(F.col("tf"), F.lit(0))
+    p_coll = F.col("ctf") * F.lit(1.0) / F.col("total_len")
+    return F.floor(
+        F.log((tf + QL_MU * p_coll) / (F.col("dl") + QL_MU)) * 1_000_000
+    ).cast("long")
+
+
+def _duck_ql_term_e6(tf: str, ctf: str, total_len: str, dl: str) -> str:
+    """Oracle twin of :func:`ql_term_e6` over the named columns."""
+    return f"""CAST(FLOOR(LN(
+                   (COALESCE({tf}, 0)
+                    + {QL_MU} * ({ctf} * 1.0 / {total_len}))
+                   / ({dl} + {QL_MU})
+               ) * 1000000) AS BIGINT)"""
+
 
 def _bm25_oracle() -> str:
     terms = ", ".join(f"'{x}'" for x in BM25_QUERY_TERMS)
@@ -67,12 +118,8 @@ def _bm25_oracle() -> str:
     dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term),
     scored AS (
         SELECT tf.doc_id,
-               CAST(FLOOR(
-                   (LN(1 + (stats.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5))
-                    * (tf.tf * {BM25_K1 + 1}))
-                   / (tf.tf + {BM25_K1} * (1 - {BM25_B}
-                      + {BM25_B} * dl.dl / (CAST(stats.total_len AS DOUBLE) / stats.n_docs)))
-                   * 1000000) AS BIGINT) AS term_score_e6
+               {_duck_bm25_term_e6("tf.tf", "dfreq.df", "dl.dl", "stats.n_docs", "stats.total_len")}
+                   AS term_score_e6
         FROM tf
         JOIN dfreq USING (term)
         JOIN dl USING (doc_id)
@@ -116,20 +163,11 @@ def x4_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    avgdl = F.col("total_len").cast("double") / F.col("n_docs")
-    idf = F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    term_score = (idf * (F.col("tf") * (BM25_K1 + 1))) / (
-        F.col("tf")
-        + BM25_K1 * (F.lit(1) - BM25_B + BM25_B * F.col("dl") / avgdl)
-    )
     scored = (
         tf.join(F.broadcast(dfreq), "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.floor(term_score * 1000000).cast("long").alias("term_score_e6"),
-        )
+        .select("doc_id", bm25_term_e6().alias("term_score_e6"))
     )
     return (
         scored.groupBy("doc_id")
@@ -473,12 +511,8 @@ def _bm25_rank_sql(tf_src: str, limit: int) -> str:
     dfx AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM {tf_src} GROUP BY term),
     scoredx AS (
         SELECT s.doc_id,
-               CAST(FLOOR(
-                   (LN(1 + (stats.n_docs - dfx.df + 0.5) / (dfx.df + 0.5))
-                    * (s.tf * {BM25_K1 + 1}))
-                   / (s.tf + {BM25_K1} * (1 - {BM25_B}
-                      + {BM25_B} * dl.dl / (CAST(stats.total_len AS DOUBLE) / stats.n_docs)))
-                   * 1000000) AS BIGINT) AS term_score_e6
+               {_duck_bm25_term_e6("s.tf", "dfx.df", "dl.dl", "stats.n_docs", "stats.total_len")}
+                   AS term_score_e6
         FROM {tf_src} s
         JOIN dfx USING (term)
         JOIN dl USING (doc_id)
@@ -514,12 +548,8 @@ def _prf_common_sql() -> str:
     df0 AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf0 GROUP BY term),
     scored0 AS (
         SELECT tf0.doc_id,
-               CAST(FLOOR(
-                   (LN(1 + (stats.n_docs - df0.df + 0.5) / (df0.df + 0.5))
-                    * (tf0.tf * {BM25_K1 + 1}))
-                   / (tf0.tf + {BM25_K1} * (1 - {BM25_B}
-                      + {BM25_B} * dl.dl / (CAST(stats.total_len AS DOUBLE) / stats.n_docs)))
-                   * 1000000) AS BIGINT) AS term_score_e6
+               {_duck_bm25_term_e6("tf0.tf", "df0.df", "dl.dl", "stats.n_docs", "stats.total_len")}
+                   AS term_score_e6
         FROM tf0
         JOIN df0 USING (term)
         JOIN dl USING (doc_id)
@@ -626,20 +656,11 @@ def x4_prf_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     dfx = tfx.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    avgdl = F.col("total_len").cast("double") / F.col("n_docs")
-    idf = F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    term_score = (idf * (F.col("tf") * (BM25_K1 + 1))) / (
-        F.col("tf")
-        + BM25_K1 * (F.lit(1) - BM25_B + BM25_B * F.col("dl") / avgdl)
-    )
     scored = (
         tfx.join(F.broadcast(dfx), "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.floor(term_score * 1000000).cast("long").alias("term_score_e6"),
-        )
+        .select("doc_id", bm25_term_e6().alias("term_score_e6"))
     )
     return (
         scored.groupBy("doc_id")
@@ -649,4 +670,119 @@ def x4_prf_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("bm25_e6"), "doc_id")
         .limit(PRF_TOP_K)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Query-likelihood retrieval (Dirichlet smoothing)
+# ---------------------------------------------------------------------------
+
+
+def _ql_oracle() -> str:
+    terms = " UNION ALL ".join(
+        f"SELECT '{x}' AS term" for x in BM25_QUERY_TERMS
+    )
+    return f"""
+    WITH tok AS (
+        SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        FROM documents
+    ),
+    dl AS (
+        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok
+        GROUP BY doc_id
+    ),
+    coll AS (SELECT CAST(COUNT(*) AS BIGINT) AS c_len FROM tok),
+    q AS ({terms}),
+    ctf AS (
+        SELECT q.term, CAST(COUNT(tok.term) AS BIGINT) AS ctf
+        FROM q LEFT JOIN tok ON tok.term = q.term GROUP BY q.term
+    ),
+    tf AS (
+        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
+        FROM tok JOIN q USING (term) GROUP BY doc_id, term
+    ),
+    scored AS (
+        SELECT d.doc_id, c.term,
+               COALESCE(t.tf, 0) AS tf,
+               {_duck_ql_term_e6("t.tf", "c.ctf", "cl.c_len", "d.dl")} AS term_lp_e6
+        FROM dl d
+        CROSS JOIN ctf c
+        CROSS JOIN coll cl
+        LEFT JOIN tf t ON t.doc_id = d.doc_id AND t.term = c.term
+        WHERE c.ctf > 0
+    )
+    SELECT doc_id,
+           CAST(SUM(term_lp_e6) AS BIGINT) AS ql_e6,
+           CAST(COUNT(*) FILTER (WHERE tf > 0) AS BIGINT) AS n_terms_hit
+    FROM scored
+    GROUP BY doc_id
+    ORDER BY ql_e6 DESC, doc_id
+    LIMIT {BM25_TOP_K}
+    """
+
+
+@register(
+    "x4_query_likelihood_topk",
+    oracle=_ql_oracle(),
+    survey_ids=("X4", "A1", "F6", "O4"),
+)
+def x4_query_likelihood_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Query-likelihood retrieval with Dirichlet smoothing (Ponte &
+    Croft / Zhai & Lafferty): score(d) = Σ_t ln((tf + μ·p(t|C)) /
+    (dl + μ)) over the same fixed query `x4_bm25_topk` serves —
+    completing the classic lexical trio (BM25, QL-Dirichlet, TF-IDF)
+    that feeds rank fusion. The structural difference from BM25: EVERY
+    query term scores every document (a zero-tf term still contributes
+    its smoothed collection probability), so the score relation is the
+    doc-length relation × a 3-row broadcast query — never a corpus
+    fan-out; tf joins in where it exists. Per-term log-probs floor to
+    e6 integers BEFORE the per-doc sum (order-free; the ln-floor
+    discipline). Top-k compiles to TakeOrderedAndProject."""
+    docs = t(spark, sf_dir, "documents")
+    tok = docs.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("term")
+    )
+    dl = tok.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("dl")
+    )
+    coll = tok.agg(F.count(F.lit(1)).cast("long").alias("total_len"))
+    qterms = spark.createDataFrame(
+        [(x,) for x in BM25_QUERY_TERMS], "term string"
+    )
+    ctf = (
+        qterms.join(tok, "term", "left")
+        .groupBy("term")
+        .agg(F.count("doc_id").cast("long").alias("ctf"))
+    )
+    tf = (
+        tok.join(F.broadcast(qterms), "term")
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+    )
+    # OOV guard: a query term absent from the whole collection has
+    # p(t|C) = 0, so its smoothed log-prob is ln(0) — DuckDB raises,
+    # Spark's F.log yields NULL and silently drops the term from the
+    # sum. Both engines filter ctf=0 terms identically (the standard
+    # drop-OOV-terms convention), so the score relation stays a
+    # deterministic doc x in-vocabulary-term lattice.
+    scored = (
+        dl.crossJoin(F.broadcast(ctf.filter(F.col("ctf") > 0)))
+        .crossJoin(F.broadcast(coll))
+        .join(tf, ["doc_id", "term"], "left")
+        .select(
+            "doc_id",
+            F.coalesce(F.col("tf"), F.lit(0)).alias("tf"),
+            ql_term_e6().alias("term_lp_e6"),
+        )
+    )
+    return (
+        scored.groupBy("doc_id")
+        .agg(
+            F.sum("term_lp_e6").cast("long").alias("ql_e6"),
+            F.count(F.when(F.col("tf") > 0, 1))
+            .cast("long")
+            .alias("n_terms_hit"),
+        )
+        .orderBy(F.desc("ql_e6"), "doc_id")
+        .limit(BM25_TOP_K)
     )

@@ -339,3 +339,255 @@ def j_bloom_prejoin_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_false_pos long, zero_false_neg boolean, fp_ppm long, "
         "n_fact_rows long, n_rows_after_prune long",
     )
+
+
+# ---------------------------------------------------------------------------
+# interval-join bin-width sweep (the temporal-join bucketing knob)
+# ---------------------------------------------------------------------------
+
+#: Pair window: ordered same-user event pairs with 0 < gap <= 1 hour.
+PAIR_DELTA_US = 3_600 * 1_000_000
+#: Swept bucket widths, minutes. 60 = the window itself; 15 trades 4x
+#: left-side replication for tight candidates; 1440 buckets by day.
+BIN_W_SWEEP_MIN = (15, 60, 240, 1440)
+
+
+def _bin_sweep_oracle() -> str:
+    widths = ", ".join(str(m) for m in BIN_W_SWEEP_MIN)
+    return f"""
+    WITH w AS (SELECT UNNEST([{widths}]::BIGINT[]) AS bin_w_min),
+    e AS (
+        SELECT event_id, user_id,
+               EPOCH_US(CAST(ts AS TIMESTAMP)) AS ts_us
+        FROM events
+    ),
+    a AS (
+        SELECT w.bin_w_min, e.event_id AS ea, e.user_id, e.ts_us AS ts_a,
+               UNNEST(GENERATE_SERIES(
+                   e.ts_us // (w.bin_w_min * 60000000),
+                   (e.ts_us + {PAIR_DELTA_US}) // (w.bin_w_min * 60000000)
+               )) AS b
+        FROM e CROSS JOIN w
+    ),
+    fan AS (
+        SELECT bin_w_min, CAST(COUNT(*) AS BIGINT) AS n_fanout_rows
+        FROM a GROUP BY bin_w_min
+    ),
+    cand AS (
+        SELECT a.bin_w_min, a.ea, e2.event_id AS eb, a.ts_a,
+               e2.ts_us AS ts_b
+        FROM a JOIN e e2
+          ON e2.user_id = a.user_id
+         AND e2.ts_us // (a.bin_w_min * 60000000) = a.b
+         AND e2.event_id <> a.ea
+    ),
+    agg AS (
+        SELECT bin_w_min,
+               CAST(COUNT(DISTINCT (ea, eb)) AS BIGINT) AS n_candidates,
+               CAST(COUNT(DISTINCT CASE
+                   WHEN ts_b > ts_a AND ts_b - ts_a <= {PAIR_DELTA_US}
+                   THEN (ea, eb) END) AS BIGINT) AS n_true_pairs
+        FROM cand GROUP BY bin_w_min
+    )
+    SELECT f.bin_w_min, f.n_fanout_rows, agg.n_candidates, agg.n_true_pairs
+    FROM fan f JOIN agg USING (bin_w_min)
+    ORDER BY f.bin_w_min
+    """
+
+
+@register(
+    "j_range_bin_width_sweep",
+    oracle=_bin_sweep_oracle(),
+    survey_ids=("J7", "A1", "X4"),
+)
+def j_range_bin_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bucket-width knob curve for the interval-join decomposition
+    `j_theta_banded_bucketed` pins: same-user event pairs within one
+    hour, rewritten as an EQUI join on (user, time bucket) with the
+    left side exploded across the buckets its window covers. Per
+    width: `n_fanout_rows` (left-side replication the shuffle pays),
+    `n_candidates` (equi-join output the residual filter pays), and
+    `n_true_pairs` — CONSTANT across widths because a true pair's
+    right bucket always lies inside the left row's covered range
+    (floor is monotone), the no-lost-pairs invariant that makes the
+    rewrite safe. Small buckets replicate more but filter less; day
+    buckets replicate nothing and pay ~9x candidate blowup — the
+    curve is the number a temporal-join tuner reads before picking W.
+
+    Plan: ONE event scan serves all four widths (widths explode onto
+    it); both join sides key on (width, user, bucket), so density is
+    per-user bounded and no stage is all-pairs. At 100 TB this is the
+    standard windowed-self-join shape, shuffle-partitioned by user."""
+    ev = t(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+    )
+    from .stats import div
+
+    widths = F.array(*[F.lit(m).cast("long") for m in BIN_W_SWEEP_MIN])
+    bin_us = F.col("bin_w_min") * 60_000_000
+    a = ev.select(
+        F.explode(widths).alias("bin_w_min"),
+        F.col("event_id").alias("ea"),
+        "user_id",
+        F.col("ts_us").alias("ts_a"),
+    ).select(
+        "bin_w_min",
+        "ea",
+        "user_id",
+        "ts_a",
+        F.explode(
+            F.sequence(
+                div(F.col("ts_a"), bin_us),
+                div(F.col("ts_a") + PAIR_DELTA_US, bin_us),
+            )
+        ).alias("b"),
+    )
+    fan = a.groupBy("bin_w_min").agg(
+        F.count(F.lit(1)).cast("long").alias("n_fanout_rows")
+    )
+    e2 = ev.select(
+        F.col("event_id").alias("eb"),
+        F.col("user_id").alias("user_b"),
+        F.col("ts_us").alias("ts_b"),
+    )
+    cand = a.join(
+        e2,
+        (F.col("user_id") == F.col("user_b"))
+        & (div(F.col("ts_b"), bin_us) == F.col("b"))
+        & (F.col("eb") != F.col("ea")),
+    ).select("bin_w_min", "ea", "eb", "ts_a", "ts_b")
+    true_flag = (F.col("ts_b") > F.col("ts_a")) & (
+        F.col("ts_b") - F.col("ts_a") <= PAIR_DELTA_US
+    )
+    agg = (
+        cand.select("bin_w_min", "ea", "eb", true_flag.alias("is_true"))
+        .groupBy("bin_w_min", "ea", "eb")
+        .agg(F.max("is_true").alias("is_true"))
+        .groupBy("bin_w_min")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_candidates"),
+            F.sum(F.when(F.col("is_true"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_true_pairs"),
+        )
+    )
+    return (
+        fan.join(agg, "bin_w_min")
+        .select("bin_w_min", "n_fanout_rows", "n_candidates", "n_true_pairs")
+        .orderBy("bin_w_min")
+    )
+
+
+# ---------------------------------------------------------------------------
+# salt-factor sweep (pricing the hot-key remedy)
+# ---------------------------------------------------------------------------
+
+#: Hex digit alphabet: the oracles decode md5 hex digits as
+#: ``instr(_HEX, digit) - 1``.
+_HEX = "0123456789abcdef"
+#: Swept salt factors (1 = unsalted baseline).
+SALT_FACTOR_SWEEP = (1, 4, 16, 64)
+#: Deterministic hot key: 3 of 4 event rows collapse onto user 0 —
+#: the planted-skew convention (the raw fixture's keys are uniform,
+#: max share 0.9%, which motivates nothing).
+_HOT_KEY_CASE = "CASE WHEN user_id % 4 = 0 THEN user_id ELSE 0 END"
+
+
+def _salt_sweep_oracle() -> str:
+    factors = ", ".join(str(s) for s in SALT_FACTOR_SWEEP)
+    return f"""
+    WITH ev AS (
+        SELECT event_id, {_HOT_KEY_CASE} AS k FROM events
+    ),
+    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS total FROM ev),
+    nk AS (SELECT CAST(COUNT(DISTINCT k) AS BIGINT) AS n_keys FROM ev),
+    s AS (SELECT UNNEST([{factors}]::BIGINT[]) AS salt_factor),
+    salted AS (
+        SELECT s.salt_factor, ev.k,
+               (instr('{_HEX}', SUBSTR(MD5('salt|' || CAST(ev.event_id AS VARCHAR)), 1, 1)) - 1) * 16
+               + instr('{_HEX}', SUBSTR(MD5('salt|' || CAST(ev.event_id AS VARCHAR)), 2, 1)) - 1
+                   AS h
+        FROM ev CROSS JOIN s
+    ),
+    per_key AS (
+        SELECT salt_factor, k, h % salt_factor AS salt,
+               CAST(COUNT(*) AS BIGINT) AS rows_in_key
+        FROM salted GROUP BY salt_factor, k, h % salt_factor
+    )
+    SELECT p.salt_factor,
+           CAST(COUNT(*) AS BIGINT) AS n_shuffle_keys,
+           CAST(MAX(p.rows_in_key) AS BIGINT) AS max_key_rows,
+           CAST(MAX(p.rows_in_key) * 1000000 // MAX(n.total) AS BIGINT)
+               AS max_share_ppm,
+           CAST(MAX(nk.n_keys) * p.salt_factor AS BIGINT)
+               AS replication_rows
+    FROM per_key p CROSS JOIN n CROSS JOIN nk
+    GROUP BY p.salt_factor
+    ORDER BY p.salt_factor
+    """
+
+
+@register(
+    "j_salt_factor_sweep",
+    oracle=_salt_sweep_oracle(),
+    survey_ids=("J6", "A1", "X4"),
+)
+def j_salt_factor_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Salt-factor knob curve for the hot-key join remedy: per factor
+    s (1/4/16/64), the shuffle-key relation's straggler bound
+    (max rows landing on one (key, salt) shuffle key — the biggest
+    task a skewed join must finish) against the price (small side
+    replicated s times: `replication_rows` = |dim keys| x s). The
+    skew audit `x4_key_skew_audit` DIAGNOSES the hot key; this curve
+    prices :func:`salted_join`'s factor argument. Skew is
+    planted deterministically (3/4 of rows collapse onto key 0; the
+    raw fixture is uniform); the salt is md5-derived from the row id
+    — the reproducible-everywhere hash family every LSH operator here
+    uses, NOT `rand()`, so both engines bucket identically.
+
+    Plan: ONE event scan x 4 broadcast factors -> one (factor, key,
+    salt) map-combined rollup -> one factor rollup. Linear; the sweep
+    relation is |factors| x |keys|-bounded."""
+    ev = t(spark, sf_dir, "events").select(
+        "event_id", F.expr(_HOT_KEY_CASE).alias("k")
+    )
+    total = ev.groupBy().agg(F.count(F.lit(1)).cast("long").alias("total"))
+    nkeys = ev.groupBy().agg(
+        F.count_distinct("k").cast("long").alias("n_keys")
+    )
+    factors = F.array(*[F.lit(s).cast("long") for s in SALT_FACTOR_SWEEP])
+    # the first two md5 hex digits as an integer in [0, 256)
+    h = F.conv(
+        F.substring(F.md5(F.concat(F.lit("salt|"), F.col("event_id").cast("string"))), 1, 2),
+        16,
+        10,
+    ).cast("long")
+    salted = ev.select(
+        "k", h.alias("h"), F.explode(factors).alias("salt_factor")
+    )
+    per_key = salted.groupBy(
+        "salt_factor", "k", (F.col("h") % F.col("salt_factor")).alias("salt")
+    ).agg(F.count(F.lit(1)).cast("long").alias("rows_in_key"))
+    return (
+        per_key.groupBy("salt_factor")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_shuffle_keys"),
+            F.max("rows_in_key").cast("long").alias("max_key_rows"),
+        )
+        .crossJoin(F.broadcast(total))
+        .crossJoin(F.broadcast(nkeys))
+        .select(
+            "salt_factor",
+            "n_shuffle_keys",
+            "max_key_rows",
+            F.expr("CAST(max_key_rows * 1000000 div total AS LONG)").alias(
+                "max_share_ppm"
+            ),
+            (F.col("n_keys") * F.col("salt_factor"))
+            .cast("long")
+            .alias("replication_rows"),
+        )
+        .orderBy("salt_factor")
+    )

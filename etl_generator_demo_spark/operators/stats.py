@@ -27,9 +27,15 @@ from ..registry import register
 from ..session import checkpoint_with
 from .analytics_ext import global_row_number, global_running
 from .relational import t
-from .retrieval import BM25_B, BM25_K1, BM25_QUERY_TERMS, x4_bm25_topk
+from .retrieval import (
+    BM25_QUERY_TERMS,
+    _duck_bm25_term_e6,
+    _duck_ql_term_e6,
+    bm25_term_e6,
+    ql_term_e6,
+    x4_bm25_topk,
+)
 from .skew import BLOOM_HASHES
-from .surfaces_r11 import QL_MU
 
 
 # ---------------------------------------------------------------------------
@@ -563,13 +569,8 @@ def _ranker_agreement_oracle() -> str:
     dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term),
     bm25 AS (
         SELECT tf.doc_id,
-               CAST(SUM(CAST(FLOOR(
-                   (LN(1 + (stats.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5))
-                    * (tf.tf * {BM25_K1 + 1}))
-                   / (tf.tf + {BM25_K1} * (1 - {BM25_B}
-                      + {BM25_B} * dl.dl
-                        / (CAST(stats.total_len AS DOUBLE) / stats.n_docs)))
-                   * 1000000) AS BIGINT)) AS BIGINT) AS bm25_e6
+               CAST(SUM({_duck_bm25_term_e6("tf.tf", "dfreq.df", "dl.dl", "stats.n_docs", "stats.total_len")})
+                    AS BIGINT) AS bm25_e6
         FROM tf
         JOIN dfreq USING (term)
         JOIN dl USING (doc_id)
@@ -583,11 +584,8 @@ def _ranker_agreement_oracle() -> str:
     ),
     ql AS (
         SELECT d.doc_id,
-               CAST(SUM(CAST(FLOOR(LN(
-                   (COALESCE(t.tf, 0)
-                    + {QL_MU} * (c.ctf * 1.0 / s.total_len))
-                   / (d.dl + {QL_MU})
-               ) * 1000000) AS BIGINT)) AS BIGINT) AS ql_e6
+               CAST(SUM({_duck_ql_term_e6("t.tf", "c.ctf", "s.total_len", "d.dl")})
+                    AS BIGINT) AS ql_e6
         FROM dl d
         CROSS JOIN ctf c
         CROSS JOIN stats s
@@ -649,20 +647,11 @@ def x4_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    avgdl = F.col("total_len").cast("double") / F.col("n_docs")
-    idf = F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    term_score = (idf * (F.col("tf") * (BM25_K1 + 1))) / (
-        F.col("tf")
-        + BM25_K1 * (F.lit(1) - BM25_B + BM25_B * F.col("dl") / avgdl)
-    )
     bm25 = (
         tf.join(F.broadcast(dfreq), "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.floor(term_score * 1_000_000).cast("long").alias("ts_e6"),
-        )
+        .select("doc_id", bm25_term_e6().alias("ts_e6"))
         .groupBy("doc_id")
         .agg(F.sum("ts_e6").cast("long").alias("bm25_e6"))
     )
@@ -679,21 +668,7 @@ def x4_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         dl.crossJoin(F.broadcast(ctf))
         .crossJoin(F.broadcast(stats))
         .join(tf, ["doc_id", "term"], "left")
-        .select(
-            "doc_id",
-            F.floor(
-                F.log(
-                    (
-                        F.coalesce(F.col("tf"), F.lit(0))
-                        + QL_MU * (F.col("ctf") * F.lit(1.0) / F.col("total_len"))
-                    )
-                    / (F.col("dl") + QL_MU)
-                )
-                * 1_000_000
-            )
-            .cast("long")
-            .alias("lp_e6"),
-        )
+        .select("doc_id", ql_term_e6().alias("lp_e6"))
         .groupBy("doc_id")
         .agg(F.sum("lp_e6").cast("long").alias("ql_e6"))
     )
@@ -2450,12 +2425,8 @@ def _ndcg_oracle() -> str:
     dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term),
     scored AS (
         SELECT tf.doc_id,
-               CAST(FLOOR(
-                   (LN(1 + (stats.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5))
-                    * (tf.tf * {BM25_K1 + 1}))
-                   / (tf.tf + {BM25_K1} * (1 - {BM25_B}
-                      + {BM25_B} * dl.dl / (CAST(stats.total_len AS DOUBLE) / stats.n_docs)))
-                   * 1000000) AS BIGINT) AS term_score_e6
+               {_duck_bm25_term_e6("tf.tf", "dfreq.df", "dl.dl", "stats.n_docs", "stats.total_len")}
+                   AS term_score_e6
         FROM tf
         JOIN dfreq USING (term)
         JOIN dl USING (doc_id)

@@ -102,128 +102,6 @@ def u_values_inline_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ANALYZE TABLE: per-column statistics in one scan
-# ---------------------------------------------------------------------------
-
-#: (column, kind) pairs for the lineitem stats sweep. `kind` fixes the
-#: canonical BIGINT encoding so min/max/NDV are engine-exact: ints
-#: as-is, dates as days-since-epoch, doubles as floor-cents, strings
-#: carry NDV only (no total order is asserted across collations).
-_ANALYZE_COLS = (
-    ("l_orderkey", "int"),
-    ("l_partkey", "int"),
-    ("l_suppkey", "int"),
-    ("l_linenumber", "int"),
-    ("l_quantity", "cents"),
-    ("l_extendedprice", "cents"),
-    ("l_discount", "cents"),
-    ("l_tax", "cents"),
-    ("l_returnflag", "str"),
-    ("l_linestatus", "str"),
-    ("l_shipdate", "date"),
-)
-
-
-def _analyze_oracle() -> str:
-    arms = []
-    for c, kind in _ANALYZE_COLS:
-        if kind == "int":
-            ival, sval = f"CAST({c} AS BIGINT)", "NULL"
-        elif kind == "cents":
-            ival, sval = f"CAST(FLOOR({c} * 100) AS BIGINT)", "NULL"
-        elif kind == "date":
-            ival = f"CAST(CAST({c} AS DATE) - DATE '1970-01-01' AS BIGINT)"
-            sval = "NULL"
-        else:
-            ival, sval = "NULL", c
-        arms.append(
-            f"SELECT '{c}' AS column_name, {ival} AS ival,"
-            f" CAST({sval} AS VARCHAR) AS sval FROM lineitem"
-        )
-    return f"""
-    WITH unpivoted AS ({" UNION ALL ".join(arms)})
-    SELECT column_name,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(COUNT(*) FILTER (WHERE ival IS NULL AND sval IS NULL)
-                AS BIGINT) AS n_nulls,
-           CAST(COUNT(DISTINCT COALESCE(CAST(ival AS VARCHAR), sval))
-                AS BIGINT) AS n_distinct,
-           CAST(MIN(ival) AS BIGINT) AS min_encoded,
-           CAST(MAX(ival) AS BIGINT) AS max_encoded
-    FROM unpivoted
-    GROUP BY column_name
-    ORDER BY column_name
-    """
-
-
-@register(
-    "d_analyze_table_stats",
-    oracle=_analyze_oracle(),
-    survey_ids=("S5", "A3", "A2", "F3"),
-)
-def d_analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANALYZE TABLE lineitem: per-column row count, null count, exact
-    NDV, and min/max under a canonical BIGINT encoding (ints as-is,
-    dates as epoch days, monetary doubles as floor-cents; strings
-    report NDV only) — the statistics a cost-based optimizer feeds on,
-    and the freshness-audit a lakehouse runs after large loads.
-
-    Plan: the table unpivots at the scan into (column, encoded-value)
-    pairs — ONE pass over the data regardless of column count (vs the
-    naive 11 COUNT(DISTINCT) aggregates whose Expand plan was
-    documented at `a_multi_distinct`) — then one column-keyed
-    aggregate; the shuffle carries one row per (column, value) for the
-    distinct and partial min/max/counts beside it. At 100 TB the NDV
-    tier swaps to HLL per column (`a_approx_distinct`'s sketch path),
-    same plan shape."""
-    li = t(spark, sf_dir, "lineitem")
-    arms = []
-    for c, kind in _ANALYZE_COLS:
-        if kind == "int":
-            ival, sval = F.col(c).cast("long"), F.lit(None).cast("string")
-        elif kind == "cents":
-            ival = F.floor(F.col(c) * 100).cast("long")
-            sval = F.lit(None).cast("string")
-        elif kind == "date":
-            ival = F.datediff(
-                F.col(c).cast("date"), F.lit("1970-01-01").cast("date")
-            ).cast("long")
-            sval = F.lit(None).cast("string")
-        else:
-            ival = F.lit(None).cast("long")
-            sval = F.col(c).cast("string")
-        arms.append(
-            F.struct(
-                F.lit(c).alias("column_name"),
-                ival.alias("ival"),
-                sval.alias("sval"),
-            )
-        )
-    unpivoted = li.select(
-        F.explode(F.array(*arms)).alias("u")
-    ).select("u.column_name", "u.ival", "u.sval")
-    return (
-        unpivoted.groupBy("column_name")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.count(
-                F.when(F.col("ival").isNull() & F.col("sval").isNull(), 1)
-            )
-            .cast("long")
-            .alias("n_nulls"),
-            F.count_distinct(
-                F.coalesce(F.col("ival").cast("string"), F.col("sval"))
-            )
-            .cast("long")
-            .alias("n_distinct"),
-            F.min("ival").cast("long").alias("min_encoded"),
-            F.max("ival").cast("long").alias("max_encoded"),
-        )
-        .orderBy("column_name")
-    )
-
-
-# ---------------------------------------------------------------------------
 # arbitrary-interval time bucketing (date_bin / time_bucket surface)
 # ---------------------------------------------------------------------------
 

@@ -15,10 +15,16 @@ while the driver queries verify the deterministic computations.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_generator_demo_spark.operators.analytics_ext import global_row_number
 from etl_generator_demo_spark.operators.dedup import doc_shingles
+from etl_generator_demo_spark.operators.ngram_lm import (
+    _DUCK_LM_QUALITY,
+    _duck_bigrams,
+    x4_bigram_lm_quality,
+)
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.registry import register
 from etl_generator_demo_spark.session import checkpoint_with
@@ -394,22 +400,11 @@ def x4_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_repetition_scores",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id,
-               UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
-    ),
-    bg AS (
-        SELECT doc_id,
-               tk || '_' || LEAD(tk, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS bigram
-        FROM tok
-    ),
+    oracle=f"""
+    WITH {_duck_bigrams()},
     counts AS (
-        SELECT doc_id, bigram, COUNT(*) AS c
-        FROM bg WHERE bigram IS NOT NULL
-        GROUP BY doc_id, bigram
+        SELECT doc_id, a || '_' || b AS bigram, COUNT(*) AS c
+        FROM bgn GROUP BY doc_id, bigram
     )
     SELECT doc_id,
            MAX(c)                                   AS top_bigram_n,
@@ -668,170 +663,6 @@ def x4_token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "x4_bigram_lm_quality",
-    oracle="""
-    WITH """
-    + (_BIGRAM_PERDOC_CHAIN := """tok AS (
-        SELECT doc_id,
-               UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
-    ),
-    big AS (
-        SELECT doc_id, tk,
-               LEAD(tk) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
-        FROM tok
-    ),
-    bigrams AS (SELECT doc_id, tk, nxt FROM big WHERE nxt IS NOT NULL),
-    c_bigram AS (
-        SELECT tk, nxt, COUNT(*) AS cb FROM bigrams GROUP BY tk, nxt
-    ),
-    c_prefix AS (
-        SELECT tk, COUNT(*) AS cp FROM bigrams GROUP BY tk
-    ),
-    scored AS (
-        SELECT b.doc_id,
-               LN(cb * 1.0 / cp) AS lp
-        FROM bigrams b
-        JOIN c_bigram cb ON cb.tk = b.tk AND cb.nxt = b.nxt
-        JOIN c_prefix cp ON cp.tk = b.tk
-    ),
-    per_doc AS (
-        SELECT doc_id,
-               COUNT(*) AS n_bigrams,
-               FLOOR(AVG(lp) * 10000) / 10000 AS avg_logprob
-        FROM scored GROUP BY doc_id
-    )""")
-    + """
-    SELECT doc_id, n_bigrams, avg_logprob,
-           avg_logprob < -3.9 AS low_quality
-    FROM per_doc
-    ORDER BY doc_id
-    """,
-    survey_ids=("X4",),
-)
-def x4_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical-LM quality score (perplexity proxy): train corpus
-    bigram MLE counts in-plan, score every document by its mean bigram
-    log-probability ln(c(a,b)/c(a·)), flag the improbable tail — the
-    classic cheap quality gate between heuristics and a neural scorer.
-    No smoothing needed: every scored bigram is in the counts by
-    construction (cb, cp >= 1). Plan: one doc_id-partitioned window
-    for adjacency, two map-combined count aggregates (vocab-bounded
-    relations), two co-keyed joins back, one per-doc aggregate —
-    linear scans + vocab²-bounded intermediates; nothing pairwise,
-    nothing collected. Score floor-scaled at 1e-4 (mean of logs is
-    summation-order sensitive at ~1e-15; the coarse grid absorbs it),
-    and the low_quality flag thresholds the FLOORED value so the
-    boundary is engine-identical."""
-    from pyspark.sql import Window
-
-    d = t(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tk"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    bigrams = (
-        tok.withColumn("nxt", F.lead("tk").over(w))
-        .filter(F.col("nxt").isNotNull())
-        .select("doc_id", "tk", "nxt")
-    )
-    c_bigram = bigrams.groupBy("tk", "nxt").agg(F.count(F.lit(1)).alias("cb"))
-    c_prefix = bigrams.groupBy("tk").agg(F.count(F.lit(1)).alias("cp"))
-    scored = (
-        bigrams.join(c_bigram, ["tk", "nxt"])
-        .join(c_prefix, "tk")
-        .select("doc_id", F.log(F.col("cb") * 1.0 / F.col("cp")).alias("lp"))
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        (F.floor(F.avg("lp") * 10000) / 10000).alias("avg_logprob"),
-    )
-    return per_doc.select(
-        "doc_id",
-        "n_bigrams",
-        "avg_logprob",
-        (F.col("avg_logprob") < -3.9).alias("low_quality"),
-    ).orderBy("doc_id")
-
-
-#: Quality-gate thresholds swept (mean bigram log-prob; the committed
-#: production flag in x4_bigram_lm_quality cuts at -3.9).
-QUALITY_SWEEP_TAUS = (-3.5, -3.9, -4.3)
-
-
-def _quality_sweep_oracle() -> str:
-    rows = []
-    for tau in QUALITY_SWEEP_TAUS:
-        rows.append(f"""
-    SELECT CAST({int(tau * 10)} AS BIGINT) AS tau_e1,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM per_doc) AS n_scored,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM per_doc
-            WHERE avg_logprob >= {tau}) AS n_kept,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM per_doc
-            WHERE avg_logprob >= {tau}) * 1000000
-             // (SELECT COUNT(*) FROM per_doc) AS keep_rate_e6""")
-    return f"""
-    WITH {_BIGRAM_PERDOC_CHAIN}
-    SELECT * FROM ({" UNION ALL ".join(rows)})
-    ORDER BY tau_e1 DESC
-    """
-
-
-@register(
-    "x4_quality_threshold_sweep",
-    oracle=_quality_sweep_oracle(),
-    survey_ids=("X4", "A2", "P6"),
-)
-def x4_quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus keep-rate at LM quality-gate thresholds -3.5/-3.9/-4.3
-    (mean bigram log-prob) — the tuning curve for the cheapest quality
-    cut, beside the band/Jaccard/n_probe/decontamination sweeps: each
-    pipeline knob ships with a measured curve, not a folklore constant.
-    The committed production flag (`x4_bigram_lm_quality`) cuts at
-    -3.9 — this shows what loosening/tightening by 0.4 nats releases.
-
-    Exactness: scores are on the scorer's 1e-4 floor grid and the
-    threshold literals parse to identical doubles in both engines (the
-    established `low_quality` comparison); keep rates are integer
-    floor ratios, NULL on an empty corpus (nothing scored). Scale: the
-    score relation is computed once (localCheckpoint) and the whole
-    sweep is ONE aggregate over docs — a count plus one conditional
-    count per threshold — unpivoted into a row per threshold."""
-    per_doc = (
-        x4_bigram_lm_quality(spark, sf_dir)
-        .select("doc_id", "avg_logprob")
-        .localCheckpoint(eager=True)
-    )
-    counts = per_doc.agg(
-        F.count(F.lit(1)).alias("n_scored"),
-        *[
-            F.count(F.when(F.col("avg_logprob") >= tau, 1)).alias(f"k{i}")
-            for i, tau in enumerate(QUALITY_SWEEP_TAUS)
-        ],
-    )
-    rows = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(int(tau * 10)).cast("long").alias("tau_e1"),
-                    F.col(f"k{i}").alias("n_kept"),
-                )
-                for i, tau in enumerate(QUALITY_SWEEP_TAUS)
-            ]
-        )
-    )
-    return (
-        counts.select("n_scored", rows.alias("r"))
-        .select(
-            "r.tau_e1",
-            "n_scored",
-            "r.n_kept",
-            F.expr("r.n_kept * 1000000 div nullif(n_scored, 0)").alias("keep_rate_e6"),
-        )
-        .orderBy(F.desc("tau_e1"))
-    )
-
-
 WINNOW_K, WINNOW_W = 5, 4  # k-gram size, winnowing window
 
 
@@ -923,10 +754,8 @@ def winnowing_fingerprints(d: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "x4_quality_buckets",
-    oracle="""
-    WITH """
-    + _BIGRAM_PERDOC_CHAIN
-    + """,
+    oracle=f"""
+    WITH {_DUCK_LM_QUALITY},
     lang_scored AS (
         SELECT d.lang, p.doc_id, p.avg_logprob
         FROM per_doc p JOIN documents d USING (doc_id)
@@ -1154,25 +983,17 @@ DSIR_TARGET_LANG = "en"
 #: Shared CTE chain ending at `imp(doc_id, importance_e6)` — reused by
 #: the importance query and the resampled-mixture composition.
 _DSIR_CTES = f"""
-    tok AS (
-        SELECT doc_id, lang,
-               UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
+    {_duck_bigrams("lang")},
+    hb AS (
+        SELECT doc_id, lang, SUBSTR(MD5(a || '_' || b), 1, 2) AS feat
+        FROM bgn
     ),
-    bg AS (
-        SELECT doc_id, lang,
-               SUBSTR(MD5(tk || '_' || LEAD(tk) OVER (
-                   PARTITION BY doc_id ORDER BY pos)), 1, 2) AS feat
-        FROM tok
-        QUALIFY LEAD(tk) OVER (PARTITION BY doc_id ORDER BY pos) IS NOT NULL
-    ),
-    src AS (SELECT feat, COUNT(*) AS cs FROM bg GROUP BY feat),
-    tgt AS (SELECT feat, COUNT(*) AS ct FROM bg
+    src AS (SELECT feat, COUNT(*) AS cs FROM hb GROUP BY feat),
+    tgt AS (SELECT feat, COUNT(*) AS ct FROM hb
             WHERE lang = '{DSIR_TARGET_LANG}' GROUP BY feat),
     tot AS (
-        SELECT (SELECT COUNT(*) FROM bg) AS ns,
-               (SELECT COUNT(*) FROM bg WHERE lang = '{DSIR_TARGET_LANG}') AS nt
+        SELECT (SELECT COUNT(*) FROM hb) AS ns,
+               (SELECT COUNT(*) FROM hb WHERE lang = '{DSIR_TARGET_LANG}') AS nt
     ),
     w AS (
         SELECT s.feat,
@@ -1183,11 +1004,11 @@ _DSIR_CTES = f"""
         FROM src s LEFT JOIN tgt t ON t.feat = s.feat CROSS JOIN tot
     ),
     imp AS (
-        SELECT bg.doc_id,
+        SELECT hb.doc_id,
                COUNT(*) AS n_feats,
                SUM(w.w_e6) AS importance_e6
-        FROM bg JOIN w ON w.feat = bg.feat
-        GROUP BY bg.doc_id
+        FROM hb JOIN w ON w.feat = hb.feat
+        GROUP BY hb.doc_id
     )
 """
 
@@ -1243,41 +1064,13 @@ def dsir_importance_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "x4_dsir_importance",
     oracle=f"""
-    WITH tok AS (
-        SELECT doc_id, lang,
-               UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
-    ),
-    bg AS (
-        SELECT doc_id, lang,
-               SUBSTR(MD5(tk || '_' || LEAD(tk) OVER (
-                   PARTITION BY doc_id ORDER BY pos)), 1, 2) AS feat
-        FROM tok
-        QUALIFY LEAD(tk) OVER (PARTITION BY doc_id ORDER BY pos) IS NOT NULL
-    ),
-    src AS (SELECT feat, COUNT(*) AS cs FROM bg GROUP BY feat),
-    tgt AS (SELECT feat, COUNT(*) AS ct FROM bg
-            WHERE lang = '{DSIR_TARGET_LANG}' GROUP BY feat),
-    tot AS (
-        SELECT (SELECT COUNT(*) FROM bg) AS ns,
-               (SELECT COUNT(*) FROM bg WHERE lang = '{DSIR_TARGET_LANG}') AS nt
-    ),
-    w AS (
-        SELECT s.feat,
-               CAST(FLOOR(LN(
-                   (COALESCE(t.ct, 0) + 1.0) * (tot.ns + {DSIR_BUCKETS})
-                   / ((s.cs + 1.0) * (tot.nt + {DSIR_BUCKETS}))
-               ) * 1000000) AS BIGINT) AS w_e6
-        FROM src s LEFT JOIN tgt t ON t.feat = s.feat CROSS JOIN tot
-    )
-    SELECT bg.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_feats,
-           CAST(SUM(w.w_e6) AS BIGINT) AS importance_e6,
-           SUM(w.w_e6) > 0 AS target_like
-    FROM bg JOIN w ON w.feat = bg.feat
-    GROUP BY bg.doc_id
-    ORDER BY bg.doc_id
+    WITH {_DSIR_CTES}
+    SELECT doc_id,
+           CAST(n_feats AS BIGINT) AS n_feats,
+           CAST(importance_e6 AS BIGINT) AS importance_e6,
+           importance_e6 > 0 AS target_like
+    FROM imp
+    ORDER BY doc_id
     """,
     survey_ids=("X4",),
 )
@@ -1398,46 +1191,55 @@ def x4_seqlen_cap_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     `chosen` marks the smallest cap retaining ≥ 99% of corpus tokens.
     All-integer mass arithmetic (LEAST of BIGINTs, exact rational
     threshold), so the decision itself is engine-identical. Cost: one
-    length scan exploded by |caps| (map-side) + one grouped agg —
-    corpus-linear, caps-constant."""
-    docs = t(spark, sf_dir, "documents")
-    lens = docs.select(
-        "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
+    length scan into ONE global aggregate (the corpus total and every
+    cap's kept mass and truncation count), unpivoted into a row per
+    cap with the chosen cap read off the same row — corpus-linear,
+    caps-constant, no driver-side job. An empty corpus yields no rows,
+    as in the oracle."""
+    from .stats import denom
+
+    lens = t(spark, sf_dir, "documents").select(
+        F.size(F.split("text", " ")).cast("long").alias("n_tokens")
     )
-    tot = lens.agg(F.sum("n_tokens")).first()[0]
-    caps = F.explode(F.array(*[F.lit(c) for c in SEQLEN_CAPS])).alias("cap")
-    mass = (
-        lens.select("n_tokens", caps)
-        .groupBy("cap")
-        .agg(
-            F.sum(F.least(F.col("n_tokens"), F.col("cap"))).alias("kept_tokens"),
-            F.sum(F.when(F.col("n_tokens") > F.col("cap"), 1).otherwise(0)).alias(
-                "n_truncated"
-            ),
-        )
+    n = F.col("n_tokens")
+    one = lens.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(n).alias("tot"),
+        *[
+            F.struct(
+                F.lit(c).cast("long").alias("cap"),
+                F.sum(F.least(n, F.lit(c))).alias("kept_tokens"),
+                F.sum(F.when(n > c, 1).otherwise(0)).cast("long").alias("n_truncated"),
+            ).alias(f"c{c}")
+            for c in SEQLEN_CAPS
+        ],
     )
-    meets = SEQLEN_KEEP_DEN * F.col("kept_tokens") >= SEQLEN_KEEP_NUM * F.lit(tot)
-    scored = mass.select(
-        F.col("cap").cast("long").alias("cap"),
-        F.col("kept_tokens").cast("long").alias("kept_tokens"),
-        F.col("n_truncated").cast("long").alias("n_truncated"),
-        F.floor(F.col("kept_tokens") * 1_000_000.0 / F.lit(float(tot)))
+
+    def meets(kept: Column) -> Column:
+        return SEQLEN_KEEP_DEN * kept >= SEQLEN_KEEP_NUM * F.col("tot")
+
+    chosen = F.least(
+        *[F.when(meets(F.col(f"c{c}.kept_tokens")), c) for c in SEQLEN_CAPS]
+    )
+    return one.filter(F.col("n_docs") > 0).select(
+        "tot",
+        chosen.alias("chosen_cap"),
+        F.explode(F.array(*[F.col(f"c{c}") for c in SEQLEN_CAPS])).alias("m"),
+    ).select(
+        "m.cap",
+        "m.kept_tokens",
+        "m.n_truncated",
+        F.floor(F.col("m.kept_tokens") * 1_000_000.0 / denom(F.col("tot")))
         .cast("long")
         .alias("kept_e6"),
-        meets.alias("meets_target"),
-    )
-    chosen_cap = (
-        scored.filter(F.col("meets_target"))
-        .agg(F.min("cap"))
-        .first()[0]
-    )
-    return scored.withColumn(
-        "chosen", F.col("cap") == F.lit(chosen_cap)
+        meets(F.col("m.kept_tokens")).alias("meets_target"),
+        (F.col("m.cap") == F.col("chosen_cap")).alias("chosen"),
     ).orderBy("cap")
 
 
 #: Shared by x4_trigram_langid_confusion and the kappa aggregate
-#: (surfaces_r11): the naive-Bayes lang-ID confusion matrix.
+#: (stats.x4_labeler_agreement_kappa): the naive-Bayes lang-ID
+#: confusion matrix.
 LANGID_CONFUSION_SQL = """
     WITH tri AS (
         SELECT d.doc_id, d.lang, SUBSTR(LOWER(d.text), g.i, 3) AS tri
@@ -1789,81 +1591,6 @@ def x4_corpus_report_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_dup_rate_e6",
         "email_doc_rate_e6",
         "mean_tokens_e2",
-    )
-
-
-# ---------------------------------------------------------------------------
-# k-anonymity generalization ladder — release-gating governance
-# ---------------------------------------------------------------------------
-K_ANON = 5
-
-
-@register(
-    "x4_k_anonymity_ladder",
-    oracle=f"""
-    WITH l0 AS (
-        SELECT lang, source,
-               CAST(n_chars // 100 AS BIGINT) AS len_bucket,
-               CAST(COUNT(*) AS BIGINT) AS class_size
-        FROM documents
-        GROUP BY lang, source, n_chars // 100
-    ),
-    l1 AS (
-        SELECT lang, source, CAST(SUM(class_size) AS BIGINT) AS coarse_size
-        FROM l0 GROUP BY lang, source
-    )
-    SELECT l0.lang, l0.source, len_bucket, class_size, coarse_size,
-           CASE WHEN coarse_size >= {K_ANON} THEN 'generalize'
-                ELSE 'suppress' END AS action
-    FROM l0 JOIN l1 ON l0.lang = l1.lang AND l0.source = l1.source
-    WHERE class_size < {K_ANON}
-    ORDER BY l0.lang, l0.source, len_bucket
-    """,
-    survey_ids=("A1", "A4", "W3"),
-)
-def x4_k_anonymity_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity release gate with a generalization ladder: a
-    document is re-identifiable when its quasi-identifier class
-    (lang, source, length bucket) holds fewer than k=5 members. For
-    each risky class the query decides the cheapest remedy — drop the
-    length bucket ('generalize') if the coarser (lang, source) class
-    clears k, else 'suppress'. The privacy sibling of the PII scrub
-    (``x4_pii_scrub`` removes direct identifiers; this bounds indirect
-    ones before a corpus release).
-
-    Shape: one map-combined groupBy to the fine classes, then a window
-    SUM over the coarser key instead of a second aggregate + self-join
-    — class relations are tiny (|classes| << |docs|), so both shuffles
-    move class counts, never documents. Scales to any corpus whose
-    quasi-identifier cardinality fits a shuffle — i.e. all of them."""
-    from pyspark.sql import Window
-
-    l0 = (
-        t(spark, sf_dir, "documents")
-        .groupBy(
-            "lang",
-            "source",
-            F.floor(F.col("n_chars") / 100).cast("long").alias("len_bucket"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("class_size"))
-    )
-    coarse = Window.partitionBy("lang", "source")
-    return (
-        l0.withColumn(
-            "coarse_size", F.sum("class_size").over(coarse).cast("long")
-        )
-        .filter(F.col("class_size") < K_ANON)
-        .select(
-            "lang",
-            "source",
-            "len_bucket",
-            "class_size",
-            "coarse_size",
-            F.when(F.col("coarse_size") >= K_ANON, "generalize")
-            .otherwise("suppress")
-            .alias("action"),
-        )
-        .orderBy("lang", "source", "len_bucket")
     )
 
 
@@ -2432,3 +2159,382 @@ def x4_shannon_entropy_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("entropy_nats_e6"),
     ).orderBy("lang")
+
+
+# ---------------------------------------------------------------------------
+# Gopher quality-rule audit matrix
+# ---------------------------------------------------------------------------
+
+_STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
+
+
+@register(
+    "x4_gopher_quality_rules",
+    oracle=f"""
+    WITH tok AS (
+        SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS w FROM documents
+    ),
+    agg AS (
+        SELECT doc_id,
+               CAST(COUNT(*) FILTER (WHERE w <> '') AS BIGINT) AS words,
+               CAST(COALESCE(SUM(LENGTH(w)) FILTER (WHERE w <> ''), 0)
+                    AS BIGINT) AS wchars,
+               CAST(COUNT(*) FILTER (WHERE REGEXP_MATCHES(w, '^[A-Za-z]+$'))
+                    AS BIGINT) AS alpha_words,
+               CAST(COUNT(DISTINCT CASE WHEN LOWER(w) IN ({_STOP_SQL})
+                                        THEN LOWER(w) END) AS BIGINT)
+                   AS stop_hits
+        FROM tok GROUP BY doc_id
+    ),
+    per_doc AS (
+        SELECT d.source,
+               COALESCE(a.words, 0) AS words,
+               COALESCE(a.wchars, 0) AS wchars,
+               COALESCE(a.alpha_words, 0) AS alpha_words,
+               COALESCE(a.stop_hits, 0) AS stop_hits,
+               LENGTH(d.text)
+                 - LENGTH(REGEXP_REPLACE(d.text, '[0-9]', '', 'g'))
+                   AS digit_chars,
+               LENGTH(d.text) AS chars
+        FROM documents d LEFT JOIN agg a USING (doc_id)
+    ),
+    verdicts AS (
+        SELECT source,
+               (words BETWEEN 5 AND 1000) AS r1,
+               (2 * words <= wchars AND wchars <= 12 * words AND words > 0)
+                   AS r2,
+               (2 * alpha_words >= words AND words > 0) AS r3,
+               (stop_hits >= 2) AS r4,
+               (5 * digit_chars <= chars) AS r5
+        FROM per_doc
+    )
+    SELECT source,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(COUNT(*) FILTER (WHERE r1) AS BIGINT) AS pass_word_count,
+           CAST(COUNT(*) FILTER (WHERE r2) AS BIGINT) AS pass_mean_word_len,
+           CAST(COUNT(*) FILTER (WHERE r3) AS BIGINT) AS pass_alpha_fraction,
+           CAST(COUNT(*) FILTER (WHERE r4) AS BIGINT) AS pass_stopwords,
+           CAST(COUNT(*) FILTER (WHERE r5) AS BIGINT) AS pass_digit_fraction,
+           CAST(COUNT(*) FILTER (WHERE r1 AND r2 AND r3 AND r4 AND r5)
+                AS BIGINT) AS keep_all
+    FROM verdicts
+    GROUP BY source ORDER BY source
+    """,
+    survey_ids=("X4", "F5", "A1", "J4"),
+)
+def x4_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-rule quality audit matrix per source: for each of five
+    curation rules (word count 5–1000; mean word length 2–12; ≥50%
+    alphabetic tokens; ≥2 distinct stopwords; ≤20% digit characters),
+    how many docs pass — plus the all-rules keep count. The per-rule
+    view is what tunes thresholds BEFORE an expensive corpus-wide
+    filter commit (the combined gate is ``x4_quality_and_lang``).
+
+    Scale: one explode → one map-combined per-doc aggregate → one
+    per-source rollup; every rule is an integer cross-multiplication
+    (``2·words ≤ wchars``, ``5·digit_chars ≤ chars``) so there is no
+    float division anywhere and the oracle hashes bit-exact. Docs
+    whose token list is empty survive via the LEFT JOIN back to the
+    corpus (words=0 fails r1/r2/r3 by definition, not by absence)."""
+    docs = t(spark, sf_dir, "documents")
+    tok = docs.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("w")
+    )
+    stop = [w.lower() for w in STOPWORDS_EN]
+    agg = tok.groupBy("doc_id").agg(
+        F.count(F.when(F.col("w") != "", 1)).cast("long").alias("words"),
+        F.coalesce(
+            F.sum(F.when(F.col("w") != "", F.length("w"))), F.lit(0)
+        )
+        .cast("long")
+        .alias("wchars"),
+        F.count(F.when(F.col("w").rlike("^[A-Za-z]+$"), 1))
+        .cast("long")
+        .alias("alpha_words"),
+        F.count_distinct(
+            F.when(F.lower("w").isin(stop), F.lower("w"))
+        )
+        .cast("long")
+        .alias("stop_hits"),
+    )
+    per_doc = (
+        docs.join(agg, "doc_id", "left")
+        .select(
+            "source",
+            F.coalesce("words", F.lit(0)).alias("words"),
+            F.coalesce("wchars", F.lit(0)).alias("wchars"),
+            F.coalesce("alpha_words", F.lit(0)).alias("alpha_words"),
+            F.coalesce("stop_hits", F.lit(0)).alias("stop_hits"),
+            (
+                F.length("text")
+                - F.length(F.regexp_replace("text", "[0-9]", ""))
+            ).alias("digit_chars"),
+            F.length("text").alias("chars"),
+        )
+    )
+    v = per_doc.select(
+        "source",
+        F.col("words").between(5, 1000).alias("r1"),
+        (
+            (2 * F.col("words") <= F.col("wchars"))
+            & (F.col("wchars") <= 12 * F.col("words"))
+            & (F.col("words") > 0)
+        ).alias("r2"),
+        ((2 * F.col("alpha_words") >= F.col("words")) & (F.col("words") > 0))
+        .alias("r3"),
+        (F.col("stop_hits") >= 2).alias("r4"),
+        (5 * F.col("digit_chars") <= F.col("chars")).alias("r5"),
+    )
+    return (
+        v.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.count(F.when(F.col("r1"), 1)).cast("long").alias("pass_word_count"),
+            F.count(F.when(F.col("r2"), 1))
+            .cast("long")
+            .alias("pass_mean_word_len"),
+            F.count(F.when(F.col("r3"), 1))
+            .cast("long")
+            .alias("pass_alpha_fraction"),
+            F.count(F.when(F.col("r4"), 1)).cast("long").alias("pass_stopwords"),
+            F.count(F.when(F.col("r5"), 1))
+            .cast("long")
+            .alias("pass_digit_fraction"),
+            F.count(
+                F.when(
+                    F.col("r1") & F.col("r2") & F.col("r3") & F.col("r4")
+                    & F.col("r5"),
+                    1,
+                )
+            )
+            .cast("long")
+            .alias("keep_all"),
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# stratified proportional sample
+# ---------------------------------------------------------------------------
+
+#: Fixed-size sample target for the stratified draw (eval-set scale).
+SAMPLE_N = 100
+
+
+@register(
+    "x4_stratified_proportional_sample",
+    oracle=f"""
+    WITH strata AS (
+        SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents
+        GROUP BY lang
+    ),
+    tot AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS total FROM strata),
+    alloc AS (
+        SELECT lang, n_docs,
+               ({SAMPLE_N} * n_docs) // total AS base_quota,
+               ({SAMPLE_N} * n_docs) % total AS remainder
+        FROM strata CROSS JOIN tot
+    ),
+    ranked AS (
+        SELECT *,
+               ROW_NUMBER() OVER (ORDER BY remainder DESC, lang) AS rem_rank,
+               {SAMPLE_N} - SUM(base_quota) OVER () AS extras
+        FROM alloc
+    ),
+    quotas AS (
+        SELECT lang, n_docs,
+               base_quota + CASE WHEN rem_rank <= extras THEN 1 ELSE 0 END
+                   AS quota
+        FROM ranked
+    ),
+    picked AS (
+        SELECT d.lang, d.doc_id,
+               ROW_NUMBER() OVER (
+                   PARTITION BY d.lang
+                   ORDER BY MD5(CAST(d.doc_id AS VARCHAR)), d.doc_id
+               ) AS rnk,
+               q.quota
+        FROM documents d JOIN quotas q USING (lang)
+    )
+    SELECT p.lang,
+           CAST(q.n_docs AS BIGINT) AS n_docs,
+           CAST(q.quota AS BIGINT) AS quota,
+           CAST(COUNT(*) AS BIGINT) AS n_selected,
+           CAST(SUM(p.doc_id) AS BIGINT) AS sum_selected_ids,
+           CAST(MIN(p.doc_id) AS BIGINT) AS min_selected_id
+    FROM picked p JOIN quotas q USING (lang)
+    WHERE p.rnk <= p.quota
+    GROUP BY p.lang, q.n_docs, q.quota
+    ORDER BY p.lang
+    """,
+    survey_ids=("X4", "W1", "A1", "J1"),
+)
+def x4_stratified_proportional_sample(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Fixed-size (SAMPLE_N=100) eval/audit sample whose language strata
+    mirror corpus composition: Hamilton largest-remainder allocation
+    (floor quotas, then +1 to the strata with the largest remainders
+    until the target is hit — the apportionment rule that cannot
+    overshoot), then within-stratum selection by md5(doc_id) rank —
+    order-free, partition-free, replayable by the oracle. Output is
+    the per-stratum audit row (quota vs selected, id checksum), not
+    the sample itself, so the result stays |langs|-bounded.
+
+    Scale: allocation operates on the |langs|-bounded strata relation
+    (broadcast); selection is one keyed window over the corpus — rank
+    within lang by a hash nothing upstream can bias. Exact integers
+    throughout (``(N·n_i) // total`` and ``%`` — never a float share).
+    """
+    docs = t(spark, sf_dir, "documents")
+    strata = docs.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs")
+    )
+    from .stats import div
+
+    tot = strata.agg(F.sum("n_docs").cast("long").alias("total"))
+    alloc = strata.crossJoin(F.broadcast(tot)).select(
+        "lang",
+        "n_docs",
+        div(F.lit(SAMPLE_N) * F.col("n_docs"), F.col("total")).alias("base_quota"),
+        ((F.lit(SAMPLE_N) * F.col("n_docs")) % F.col("total")).alias(
+            "remainder"
+        ),
+    )
+    w_rem = Window.orderBy(F.desc("remainder"), "lang")
+    ranked = alloc.select(
+        "lang",
+        "n_docs",
+        "base_quota",
+        F.row_number().over(w_rem).alias("rem_rank"),
+        (F.lit(SAMPLE_N) - F.sum("base_quota").over(Window.partitionBy()))
+        .alias("extras"),
+    )
+    quotas = ranked.select(
+        "lang",
+        "n_docs",
+        (
+            F.col("base_quota")
+            + F.when(F.col("rem_rank") <= F.col("extras"), 1).otherwise(0)
+        ).alias("quota"),
+    )
+    w_pick = Window.partitionBy("lang").orderBy(
+        F.md5(F.col("doc_id").cast("string")), "doc_id"
+    )
+    picked = (
+        docs.select("lang", "doc_id")
+        .join(F.broadcast(quotas), "lang")
+        .select(
+            "lang",
+            "doc_id",
+            "n_docs",
+            "quota",
+            F.row_number().over(w_pick).alias("rnk"),
+        )
+        .filter(F.col("rnk") <= F.col("quota"))
+    )
+    return (
+        picked.groupBy("lang", "n_docs", "quota")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_selected"),
+            F.sum("doc_id").cast("long").alias("sum_selected_ids"),
+            F.min("doc_id").cast("long").alias("min_selected_id"),
+        )
+        .select(
+            "lang",
+            F.col("n_docs").cast("long"),
+            F.col("quota").cast("long"),
+            "n_selected",
+            "sum_selected_ids",
+            "min_selected_id",
+        )
+        .orderBy("lang")
+    )
+
+
+# ---------------------------------------------------------------------------
+# curriculum shards
+# ---------------------------------------------------------------------------
+
+#: Curriculum shards (training-file fan-out).
+N_SHARDS = 8
+
+
+@register(
+    "x4_curriculum_shards",
+    oracle=f"""
+    WITH tok AS (
+        SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS w FROM documents
+    ),
+    tier AS (
+        SELECT doc_id,
+               CAST(COUNT(DISTINCT CASE WHEN LOWER(w) IN ({_STOP_SQL})
+                                        THEN LOWER(w) END) AS BIGINT) AS tier
+        FROM tok GROUP BY doc_id
+    ),
+    ordered AS (
+        SELECT d.doc_id, d.lang, d.n_chars, COALESCE(t.tier, 0) AS tier,
+               ROW_NUMBER() OVER (
+                   ORDER BY COALESCE(t.tier, 0) DESC, d.n_chars DESC, d.doc_id
+               ) AS rn
+        FROM documents d LEFT JOIN tier t USING (doc_id)
+    )
+    SELECT CAST((rn - 1) % {N_SHARDS} AS BIGINT) AS shard,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
+           CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
+           CAST(SUM(tier) AS BIGINT) AS sum_tier,
+           CAST(MIN(rn) AS BIGINT) AS first_rn,
+           CAST(MAX(rn) AS BIGINT) AS last_rn
+    FROM ordered
+    GROUP BY shard ORDER BY shard
+    """,
+    survey_ids=("X4", "W1", "A1", "O1"),
+)
+def x4_curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Curriculum shard assignment: docs globally ordered by
+    (quality tier DESC, length DESC, doc_id) — quality tier = distinct
+    stopword hits, the cheap fluency proxy — then dealt round-robin
+    into N_SHARDS training shards; output is the per-shard composition
+    audit (docs, chars, language spread, tier mass, rank range). The
+    round-robin deal guarantees every shard sees the full curriculum
+    spectrum (first_rn/last_rn make that visible).
+
+    Scale: the global order comes from :func:`global_row_number` — a
+    range shuffle + per-partition rebase, never a single-partition
+    window; everything after is one map-combined rollup over
+    N_SHARDS keys."""
+    docs = t(spark, sf_dir, "documents")
+    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
+    stop = [w.lower() for w in STOPWORDS_EN]
+    tier = tok.groupBy("doc_id").agg(
+        F.count_distinct(F.when(F.lower("w").isin(stop), F.lower("w")))
+        .cast("long")
+        .alias("tier")
+    )
+    base = docs.join(tier, "doc_id", "left").select(
+        "doc_id",
+        "lang",
+        "n_chars",
+        F.coalesce("tier", F.lit(0)).alias("tier"),
+    )
+    ordered, _n = global_row_number(
+        base,
+        [F.desc("tier"), F.desc("n_chars"), F.asc("doc_id")],
+        rn_col="rn",
+    )
+    return (
+        ordered.groupBy(
+            ((F.col("rn") - 1) % N_SHARDS).cast("long").alias("shard")
+        )
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("sum_chars"),
+            F.count_distinct("lang").cast("long").alias("n_langs"),
+            F.sum("tier").cast("long").alias("sum_tier"),
+            F.min("rn").cast("long").alias("first_rn"),
+            F.max("rn").cast("long").alias("last_rn"),
+        )
+        .orderBy("shard")
+    )

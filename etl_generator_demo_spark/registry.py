@@ -74,16 +74,13 @@ def load_all() -> dict[str, RegisteredQuery]:
     import etl_generator_demo_spark.operators.dedup_substr  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r9  # noqa: F401
     import etl_generator_demo_spark.operators.bpe  # noqa: F401
-    import etl_generator_demo_spark.operators.surfaces_r10  # noqa: F401
-    import etl_generator_demo_spark.operators.surfaces_r10b  # noqa: F401
     import etl_generator_demo_spark.operators.surfaces_r10d  # noqa: F401
     import etl_generator_demo_spark.operators.timeseries  # noqa: F401
-    import etl_generator_demo_spark.operators.surfaces_r11  # noqa: F401
     import etl_generator_demo_spark.operators.unigram_lm  # noqa: F401
     import etl_generator_demo_spark.streaming.cdc  # noqa: F401
-    import etl_generator_demo_spark.operators.surfaces_r12  # noqa: F401
-    import etl_generator_demo_spark.operators.surfaces_r12b  # noqa: F401
     import etl_generator_demo_spark.operators.decontam  # noqa: F401
+    import etl_generator_demo_spark.operators.ngram_lm  # noqa: F401
+    import etl_generator_demo_spark.operators.privacy  # noqa: F401
     import etl_generator_demo_spark.sources.txlog  # noqa: F401
 
     return REGISTRY

@@ -13,7 +13,7 @@ snapshot (one struct per live key — the exact size of the MERGE INTO
 target it replaces), so no watermark eviction applies; this is
 inherent to the operator, not a leak. At 100 TB/day the state is
 |distinct keys|, not |events| — the same reason the batch twin
-(`d_cdc_apply_snapshot`, surfaces_r11) reduces before joining.
+(`d_cdc_apply_snapshot`, below) reduces before joining.
 
 Batch twin `st_cdc_running_snapshot` runs the SAME function on the
 batch relation (the aggregate spelling is mode-agnostic) and is
@@ -30,10 +30,111 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from etl_generator_demo_spark.operators.relational import t
-from etl_generator_demo_spark.operators.surfaces_r11 import _CDC_OP_SQL
 from etl_generator_demo_spark.registry import register
+
+#: Deterministic event_type -> CDC op mapping: signup is the row
+#: birth, error is the tombstone, every other interaction upserts.
+_CDC_OP_SQL = (
+    "CASE event_type WHEN 'signup' THEN 'I' WHEN 'error' THEN 'D' "
+    "ELSE 'U' END"
+)
+
+
+def cdc_snapshot(log: DataFrame) -> DataFrame:
+    """Apply an ordered CDC log (user_id, event_id, ts, op IN I/U/D,
+    value_cents) to its current snapshot: latest op per key wins
+    (ordered by ts then event_id — the log sequence number), a last
+    op of 'D' removes the key, and an I/U after a D legitimately
+    re-creates it. Replay-idempotent by construction: ops are counted
+    with COUNT(DISTINCT event_id), so re-delivering the same log
+    section (at-least-once transport) changes nothing — pinned by
+    pytest.
+
+    Scale: one shuffle on user_id shared by the ranking window and
+    the per-key op counts (same key -> same exchange); no self-join,
+    no driver collect. The snapshot is what a MERGE INTO target would
+    hold after draining the stream."""
+    w = Window.partitionBy("user_id").orderBy(
+        F.desc("ts"), F.desc("event_id")
+    )
+    ranked = log.withColumn("rn", F.row_number().over(w))
+    stats = log.groupBy("user_id").agg(
+        F.countDistinct("event_id").cast("long").alias("n_ops"),
+        F.countDistinct(
+            F.when(F.col("op") == "D", F.col("event_id"))
+        )
+        .cast("long")
+        .alias("n_tombstones"),
+    )
+    return (
+        ranked.filter((F.col("rn") == 1) & (F.col("op") != "D"))
+        .join(stats, "user_id")
+        .select(
+            "user_id",
+            F.col("op").alias("last_op"),
+            F.col("value_cents").alias("last_value_cents"),
+            F.col("ts").alias("last_ts"),
+            "n_ops",
+            "n_tombstones",
+        )
+        .orderBy("user_id")
+    )
+
+
+@register(
+    "d_cdc_apply_snapshot",
+    oracle=f"""
+    WITH log AS (
+        SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
+               {_CDC_OP_SQL} AS op,
+               CAST(ROUND(value * 100, 0) AS BIGINT) AS value_cents
+        FROM events
+    ),
+    ranked AS (
+        SELECT *, ROW_NUMBER() OVER (
+            PARTITION BY user_id ORDER BY ts DESC, event_id DESC
+        ) AS rn
+        FROM log
+    ),
+    stats AS (
+        SELECT user_id,
+               CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_ops,
+               CAST(COUNT(DISTINCT CASE WHEN op = 'D' THEN event_id END)
+                    AS BIGINT) AS n_tombstones
+        FROM log GROUP BY user_id
+    )
+    SELECT r.user_id, r.op AS last_op, r.value_cents AS last_value_cents,
+           r.ts AS last_ts, s.n_ops, s.n_tombstones
+    FROM ranked r JOIN stats s USING (user_id)
+    WHERE r.rn = 1 AND r.op <> 'D'
+    ORDER BY r.user_id
+    """,
+    survey_ids=("D1", "W1", "A1", "F7"),
+)
+def d_cdc_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CDC apply: the events feed read as an insert/update/delete
+    change log (signup=I, error=D tombstone, other=U), reduced to the
+    current snapshot — latest op per user wins, tombstoned users
+    absent, post-tombstone activity re-creates the row. The at-scale
+    spelling of the reference's D1 DML commit (db_connector.py:
+    244-251): a 100 TB pipeline consumes the statement stream as a
+    log and folds it into state with one keyed shuffle, never
+    row-at-a-time execute+commit. Value cents are exact integers
+    (2-decimal doubles scale to within 1e-10 of an integer, so
+    ROUND's half-mode can never matter)."""
+    log = t(spark, sf_dir, "events").select(
+        "user_id",
+        "event_id",
+        F.col("ts").cast("timestamp").alias("ts"),
+        F.expr(_CDC_OP_SQL).alias("op"),
+        F.round(F.col("value") * 100, 0).cast("long").alias("value_cents"),
+    )
+    return cdc_snapshot(log)
+
+
 
 
 def stream_cdc_running_state(log: DataFrame) -> DataFrame:

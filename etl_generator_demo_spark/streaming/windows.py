@@ -950,3 +950,116 @@ def st_batch_size_drop_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.orderBy("batch_size")
+
+
+# ---------------------------------------------------------------------------
+# session-gap sweep (the sessionization knob's measured curve)
+# ---------------------------------------------------------------------------
+
+#: Inactivity gaps swept (minutes).
+SESSION_GAP_SWEEP_MIN = (5, 15, 30, 60)
+
+
+def _gap_sweep_oracle() -> str:
+    gaps = ", ".join(f"({g})" for g in SESSION_GAP_SWEEP_MIN)
+    return f"""
+    WITH gaps(g) AS (VALUES {gaps}),
+    ev AS (
+        SELECT user_id, EPOCH_US(CAST(ts AS TIMESTAMP)) AS ts_us
+        FROM events
+    ),
+    marked AS (
+        SELECT g, user_id, ts_us,
+               CASE WHEN LAG(ts_us) OVER w IS NULL
+                         OR ts_us - LAG(ts_us) OVER w > CAST(g AS BIGINT) * 60000000
+                    THEN 1 ELSE 0 END AS new_session
+        FROM ev CROSS JOIN gaps
+        WINDOW w AS (PARTITION BY g, user_id ORDER BY ts_us)
+    ),
+    islands AS (
+        SELECT g, user_id,
+               SUM(new_session) OVER (PARTITION BY g, user_id ORDER BY ts_us
+                                      ROWS UNBOUNDED PRECEDING) AS session_no
+        FROM marked
+    ),
+    sessions AS (
+        SELECT g, user_id, session_no, CAST(COUNT(*) AS BIGINT) AS n_events
+        FROM islands GROUP BY g, user_id, session_no
+    )
+    SELECT CAST(g AS BIGINT) AS gap_min,
+           CAST(COUNT(*) AS BIGINT) AS n_sessions,
+           CAST(SUM(n_events) * 1000000 // COUNT(*) AS BIGINT)
+               AS mean_events_e6,
+           CAST(MAX(n_events) AS BIGINT) AS max_session_events
+    FROM sessions
+    GROUP BY g
+    ORDER BY gap_min
+    """
+
+
+@register(
+    "st_session_gap_sweep",
+    oracle=_gap_sweep_oracle(),
+    survey_ids=("§2.11", "W1", "W3", "A1"),
+)
+def st_session_gap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sessionization knob's measured curve: session count, mean
+    size, and largest session at 5/15/30/60-minute inactivity gaps —
+    the number that justifies `st_session_windows`' 30-minute gap
+    instead of folklore (where the curve flattens, the gap stops
+    mattering). Spelled gaps-and-islands over (gap × events) so ONE
+    scan serves all four gaps; per-(gap, user) windows shuffle the
+    events relation once on the compound key — hot users spread
+    4-ways for free. Microsecond integer arithmetic end-to-end; ties
+    in ts cannot flip any boundary flag (diff 0 is never > gap), so
+    the per-gap session multiset is total-order-free."""
+    ev = t(spark, sf_dir, "events").select(
+        "user_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+    )
+    gaps = spark.createDataFrame(
+        [(g,) for g in SESSION_GAP_SWEEP_MIN], "g int"
+    )
+    w = Window.partitionBy("g", "user_id").orderBy("ts_us")
+    marked = ev.crossJoin(F.broadcast(gaps)).select(
+        "g",
+        "user_id",
+        "ts_us",
+        F.when(
+            F.lag("ts_us").over(w).isNull()
+            | (
+                F.col("ts_us") - F.lag("ts_us").over(w)
+                > F.col("g").cast("long") * 60_000_000
+            ),
+            1,
+        )
+        .otherwise(0)
+        .alias("new_session"),
+    )
+    islands = marked.select(
+        "g",
+        "user_id",
+        F.sum("new_session")
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .alias("session_no"),
+    )
+    sessions = islands.groupBy("g", "user_id", "session_no").agg(
+        F.count(F.lit(1)).cast("long").alias("n_events")
+    )
+    return (
+        sessions.groupBy("g")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_sessions"),
+            F.expr("sum(n_events) * 1000000 div count(1)")
+            .cast("long")
+            .alias("mean_events_e6"),
+            F.max("n_events").cast("long").alias("max_session_events"),
+        )
+        .select(
+            F.col("g").cast("long").alias("gap_min"),
+            "n_sessions",
+            "mean_events_e6",
+            "max_session_events",
+        )
+        .orderBy("gap_min")
+    )

@@ -15,6 +15,7 @@ from etl_generator_demo_spark.operators.bpe import (
     WORDS_SCHEMA,
     bpe_train,
     bpe_trainer,
+    x4_bpe_encode_corpus,
 )
 
 
@@ -145,3 +146,80 @@ class TestEdges:
         enc = REGISTRY["x4_bpe_encode_corpus"].fn(spark, str(tmp_path))
         assert enc.collect() == []
         assert "n_bpe_tokens" in enc.columns
+
+
+def test_bpe_encode_compresses(spark, sf_dir):
+    out = x4_bpe_encode_corpus(spark, sf_dir).collect()
+    assert out
+    for r in out:
+        # merges only shrink: chars >= bpe tokens >= words
+        assert r["n_chars"] >= r["n_bpe_tokens"] >= r["n_words"]
+        assert r["chars_per_token_e6"] >= 1_000_000
+
+
+def test_bpe_winner_materialization_matches_wrapper(spark):
+    """The one-task mapInPandas trainer must equal the pure-Python
+    trainer it wraps, on both the winner rows and the final symbol
+    state — including the x == y run-parity path."""
+    from etl_generator_demo_spark.operators.bpe import bpe_train, bpe_trainer
+
+    words = [("aaab", 3), ("abab", 2)]
+    vocab = spark.createDataFrame(words, "word string, wcount long")
+    merges, states = bpe_train([(list(w), c) for w, c in words])
+    got = bpe_trainer(vocab).collect()
+    assert [tuple(r) for r in got] == [(k, *m) for k, m in enumerate(merges, 1)]
+    got_words = bpe_trainer(vocab, words=True).collect()
+    assert {r.word: list(r.syms) for r in got_words} == {
+        w: s for (w, _), s in zip(words, states)
+    }
+
+
+def test_bpe_training_resumes_from_materialized_state():
+    """Training k + 1 steps at once equals training k steps, keeping the
+    state, and training one more step from it: a winner depends only on
+    the state it is counted over."""
+    from etl_generator_demo_spark.operators.bpe import bpe_train
+
+    words = [(list("aaab"), 3), (list("abab"), 2), (list("aabaa"), 1)]
+    both, final = bpe_train(words, 2)
+    first, mid = bpe_train(words, 1)
+    second, final2 = bpe_train([(s, c) for s, (_, c) in zip(mid, words)], 1)
+    assert both == first + second
+    assert final == final2
+
+
+def test_bpe_last_apply_skipped_rows_identical(spark):
+    """x4_bpe_merge_steps skips the dead final apply (the state after the
+    last winner feeds nothing). Its winner rows must match the trainer
+    that applies every step, on a corpus where merges cascade (the
+    step-2 winner only exists after step 1 applied)."""
+    from etl_generator_demo_spark.operators.bpe import (
+        BPE_STEPS,
+        bpe_train,
+        bpe_trainer,
+        corpus_words,
+        vocabulary,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, "abab abc abab cab") for i in range(3)], "doc_id long, text string"
+    )
+    vocab = vocabulary(corpus_words(docs))
+    words = [(list(r.word), r.wcount) for r in vocab.collect()]
+    with_last_apply, _ = bpe_train(words, BPE_STEPS)
+    assert len(with_last_apply) == BPE_STEPS
+    got = bpe_trainer(vocab).collect()
+    assert [tuple(r) for r in got] == [
+        (k, *m) for k, m in enumerate(with_last_apply, 1)
+    ]
+
+
+def test_bpe_last_apply_skipped_pure():
+    """The same invariant on the pure-Python trainer."""
+    from etl_generator_demo_spark.operators.bpe import BPE_STEPS, bpe_train
+
+    words = [(list("abab"), 6), (list("abc"), 3), (list("cab"), 3)]
+    skipped, none = bpe_train(words, BPE_STEPS, final_state=False)
+    applied, states = bpe_train(words, BPE_STEPS)
+    assert none is None and states
+    assert skipped == applied

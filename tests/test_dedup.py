@@ -679,6 +679,38 @@ def test_degenerate_corpus_matches_oracle(
     family = {f"etl_generator_demo_spark.operators.{m}" for m in _FAMILY_MODULES}
     names = [n for n, rq in load_all().items() if rq.fn.__module__ in family]
     names.append("x4_quality_threshold_sweep")
-    assert len(names) == 28
+    assert len(names) == 29
     bad = oracle_mismatches(d, names)
     assert not bad, bad
+
+
+def _write_documents(spark, path, rows):
+    spark.createDataFrame(
+        [(i, text, lang, "srcT", len(text)) for i, (text, lang) in enumerate(rows)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/documents.parquet")
+
+
+def test_cdc_chunking_is_shift_resistant(spark, tmp_path):
+    """The CDC argument, demonstrated: a single token prepended to a
+    40-token document kills every fixed-16-block match
+    (x4_chunk_level_dedup finds nothing) while CDC boundaries
+    resynchronize right after the edit and the shared suffix chunks
+    still dedup."""
+    from etl_generator_demo_spark.operators.packing import (
+        x4_chunk_level_dedup,
+    )
+    from etl_generator_demo_spark.operators.dedup import (
+        x2_cdc_chunk_dedup,
+    )
+
+    base = " ".join(f"w{i}" for i in range(40))
+    _write_documents(
+        spark, str(tmp_path), [(base, "en"), ("xnew " + base, "en")]
+    )
+    cdc = x2_cdc_chunk_dedup(spark, str(tmp_path)).collect()
+    assert len(cdc) >= 5  # resynchronized shared chunks found
+    assert all(r["n_docs"] == 2 and r["owner_doc"] == 0 for r in cdc)
+    # >=70% of tokens recovered as duplicated content despite the shift
+    assert sum(r["chunk_tokens"] for r in cdc) >= 28
+    assert x4_chunk_level_dedup(spark, str(tmp_path)).count() == 0

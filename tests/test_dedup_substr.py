@@ -159,3 +159,97 @@ class TestKgramRelation:
     def test_short_doc_yields_no_grams(self, spark):
         d = _docs(spark, [(0, _words("t", SPAN_K - 1))])
         assert _kgrams(d).count() == 0
+
+
+def _write_documents(spark, path, rows):
+    spark.createDataFrame(
+        [(i, text, lang, "srcT", len(text)) for i, (text, lang) in enumerate(rows)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/documents.parquet")
+
+
+def test_rematerialize_and_boundary_collision(spark, tmp_path):
+    """doc0 owns the shared 5-token span; doc1 loses it, and the cut
+    makes 'p1 p2 p3 p4 q1' adjacent — which doc2 contains verbatim.
+    The audit must classify that residual duplicate as a BOUNDARY
+    artifact (original positional span > K-1) and report zero intact
+    survivors — the removal-completeness invariant."""
+    from etl_generator_demo_spark.operators.dedup_substr import (
+        x2_rematerialize_boundary_audit,
+        x2_removal_rematerialize,
+    )
+
+    span = "s1 s2 s3 s4 s5"
+    _write_documents(
+        spark,
+        str(tmp_path),
+        [
+            (span, "en"),  # doc0: owner, kept intact
+            (f"p1 p2 p3 p4 {span} q1 q2 q3 q4", "en"),  # doc1: cut
+            ("p1 p2 p3 p4 q1", "en"),  # doc2: matches the boundary gram
+        ],
+    )
+    rows = {
+        r["doc_id"]: r
+        for r in x2_removal_rematerialize(spark, str(tmp_path)).collect()
+    }
+    assert rows[0]["kept_text"] == span
+    assert rows[1]["kept_text"] == "p1 p2 p3 p4 q1 q2 q3 q4"
+    assert rows[1]["n_kept_tokens"] == 8 and rows[1]["n_tokens"] == 13
+    assert rows[2]["kept_text"] == "p1 p2 p3 p4 q1"
+
+    audit = x2_rematerialize_boundary_audit(spark, str(tmp_path)).first()
+    assert audit["n_docs"] == 3 and audit["n_docs_cut"] == 1
+    assert audit["n_tokens_total"] == 23 and audit["n_kept_total"] == 18
+    assert audit["residual_dup_hashes"] == 1
+    assert audit["boundary_dup_hashes"] == 1
+    assert audit["intact_dup_hashes"] == 0  # the invariant
+
+
+def test_dedup_shift_zero_on_dupfree_corpus(spark, tmp_path):
+    """A corpus with no cross-doc duplicated K-grams removes nothing:
+    post == pre, KL exactly 0, token/type counts equal."""
+    from etl_generator_demo_spark.operators.dedup_substr import (
+        x2_dedup_distribution_shift,
+    )
+
+    texts = [
+        " ".join(f"a{i}w{j}" for j in range(20)) for i in range(4)
+    ]
+    spark.createDataFrame(
+        [(i, t, "en", "srcT", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
+    r = x2_dedup_distribution_shift(spark, str(tmp_path)).first()
+    assert r["n_tokens_pre"] == r["n_tokens_post"] == 80
+    assert r["n_types_pre"] == r["n_types_post"] == 80
+    assert r["kl_post_pre_e6"] == 0
+
+
+def test_rematerialize_fully_removed_doc_is_null(spark, tmp_path):
+    """The array-based rebuild must keep the left-join NULL
+    contract of the exploded spelling: a doc whose every token is
+    removed yields n_kept_tokens 0 and kept_text NULL; a doc with no
+    removals rebuilds to its original text byte-for-byte."""
+    from etl_generator_demo_spark.operators.dedup_substr import (
+        x2_removal_rematerialize,
+    )
+
+    span = "s1 s2 s3 s4 s5"
+    _write_documents(
+        spark,
+        str(tmp_path),
+        [
+            (span, "en"),          # doc0: owner, kept intact
+            (span, "en"),          # doc1: loses ALL tokens -> NULL
+            ("u1 u2 u3", "en"),    # doc2: untouched -> identity rebuild
+        ],
+    )
+    rows = {
+        r["doc_id"]: r
+        for r in x2_removal_rematerialize(spark, str(tmp_path)).collect()
+    }
+    assert rows[0]["kept_text"] == span and rows[0]["n_kept_tokens"] == 5
+    assert rows[1]["n_kept_tokens"] == 0 and rows[1]["kept_text"] is None
+    assert rows[1]["n_tokens"] == 5
+    assert rows[2]["kept_text"] == "u1 u2 u3" and rows[2]["n_kept_tokens"] == 3

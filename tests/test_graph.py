@@ -27,6 +27,7 @@ from etl_generator_demo_spark.operators.graph import (
     sssp_copurchase_edges,
     triangle_stats,
     wcc_components,
+    x4_item_item_recs,
 )
 from etl_generator_demo_spark.operators.hierarchy import ancestor_pairs, ancestor_walk
 from etl_generator_demo_spark.operators.relational import t
@@ -303,7 +304,7 @@ def test_degenerate_graph_matches_oracle(
 
     d = replace_table("lineitem", _one_order_lineitem(spark, sf_dir, n_parts))
     names = [n for n, rq in load_all().items() if rq.fn.__module__ == graph.__name__]
-    assert len(names) == 17
+    assert len(names) == 18
     bad = oracle_mismatches(d, names)
     assert not bad, bad
 
@@ -417,3 +418,18 @@ def test_checkpoint_with_empty_zero_partition_frame(spark):
     cp, values = checkpoint_with(empty, F.sum("x"), F.count(F.lit(1)), F.max("x"))
     assert values == (None, 0, None)
     assert cp.collect() == [] and cp.dtypes == [("x", "bigint")]
+
+
+def test_item_item_recs_invariants(spark, sf_dir):
+    out = x4_item_item_recs(spark, sf_dir).collect()
+    assert out, "fixture produces co-purchase pairs"
+    by_item = {}
+    for r in out:
+        by_item.setdefault(r["item"], []).append(r)
+        assert r["cooc"] >= 2
+        assert 0 <= r["score_e6"] <= 1_000_000  # cosine^2 in [0, 1]
+    for item, rows in by_item.items():
+        ranks = sorted(r["rnk"] for r in rows)
+        assert ranks == list(range(1, len(rows) + 1))
+        scores = [r["score_e6"] for r in sorted(rows, key=lambda r: r["rnk"])]
+        assert scores == sorted(scores, reverse=True)

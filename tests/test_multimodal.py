@@ -6,10 +6,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.operators.multimodal import (
+    CUT_TAU_E6,
     DECODED_SCHEMA,
+    PHASH_HAM_TAU,
     as_media_table,
     decode_media,
     _fake_decode,
+    phash_relation,
+    x5_phash_hamming_neardup,
+    x5_scene_cut_detection,
 )
 
 
@@ -108,3 +113,116 @@ def test_image_tiling_invariants(spark, sf_dir):
     dec = {r["media_id"]: (r["width"], r["height"]) for r in decode_media(media).collect()}
     got = {r["media_id"]: (r["width"], r["height"]) for r in rows if r["media_id"] in dec}
     assert got == dec
+
+
+def _write_documents(spark, path, n):
+    spark.createDataFrame(
+        [(i, f"doc {i} body tok{i % 7} tok{i % 3}", "en", "srcT", 20) for i in range(n)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/documents.parquet")
+
+
+def test_phash_finds_exactly_the_planted_reencodes(spark, tmp_path):
+    """10 docs -> every 5th (ids 0 and 5) gets a re-encoded twin whose
+    64-bit fingerprint differs by exactly ONE bit. The banded join +
+    exact verify must return exactly those two pairs at hamming=1 —
+    random md5 pairs sit at ~32 bits and nearly never share a 16-bit
+    band, so anything else in the output is a bug."""
+    _write_documents(spark, str(tmp_path), 10)
+    got = {
+        (r["media_a"], r["media_b"]): r["hamming"]
+        for r in x5_phash_hamming_neardup(spark, str(tmp_path)).collect()
+    }
+    assert got == {(0, 1_000_000): 1, (5, 1_000_005): 1}
+
+
+def test_phash_perturbation_is_one_bit(spark, tmp_path):
+    """The re-encode twin's fingerprint XORs exactly one bit (the low
+    bit of nibble media_id % 16) — the precedence regression pin:
+    Spark parses `v ^ 1 + 1` as `v ^ 2`, which silently turns the
+    planted perturbation into a 2-bit flip."""
+    _write_documents(spark, str(tmp_path), 10)
+    docs = spark.read.parquet(f"{tmp_path}/documents.parquet")
+    ph = {r["media_id"]: r["phash"] for r in phash_relation(docs).collect()}
+    for base in (0, 5):
+        a, b = ph[base], ph[base + 1_000_000]
+        diffs = [
+            (i, ca, cb) for i, (ca, cb) in enumerate(zip(a, b)) if ca != cb
+        ]
+        assert len(diffs) == 1
+        i, ca, cb = diffs[0]
+        assert i == base % 16
+        assert int(ca, 16) ^ int(cb, 16) == 1
+
+
+def test_scene_cut_segments_planted_clip(spark, tmp_path):
+    """Clip 0: frames [1,0],[1,0],[0,1],[0,1] -> adjacent cosines
+    1.0, 0.0, 1.0 -> exactly one cut (0 < tau) -> two segments."""
+    assert 0 < CUT_TAU_E6 < 1_000_000 and PHASH_HAM_TAU < 32
+    rows = [
+        (0, [1.0, 0.0], 0),
+        (1, [1.0, 0.0], 0),
+        (2, [0.0, 1.0], 1),
+        (3, [0.0, 1.0], 1),
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
+    out = x5_scene_cut_detection(spark, str(tmp_path)).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert (
+        r["clip_id"],
+        r["n_transitions"],
+        r["n_cuts"],
+        r["n_segments"],
+        r["min_cos_e6"],
+        r["sum_cos_e6"],
+    ) == (0, 3, 1, 2, 0, 2_000_000)
+
+
+def test_keyframe_selection_planted_clip(spark, tmp_path):
+    """Frames [1,0],[2,0],[0,1],[0,3]: cut only at frame 2 (cosine 0),
+    so segments {0,1} and {2,3}; keyframes are the max-norm frames
+    (1 with norm 4e6, 3 with norm 9e6)."""
+    from etl_generator_demo_spark.operators.multimodal import (
+        x5_keyframe_selection,
+    )
+
+    rows = [
+        (0, [1.0, 0.0], 0),
+        (1, [2.0, 0.0], 0),
+        (2, [0.0, 1.0], 1),
+        (3, [0.0, 3.0], 1),
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
+    got = [
+        (r["segment_id"], r["n_frames"], r["keyframe_idx"], r["key_norm_e6"])
+        for r in x5_keyframe_selection(spark, str(tmp_path)).collect()
+    ]
+    assert got == [(0, 2, 1, 4_000_000), (1, 2, 3, 9_000_000)]
+
+
+@pytest.mark.slow
+def test_media_attrition_planted_funnel(spark, tmp_path):
+    """10 docs -> +2 re-encodes (ids 0,5) +2 mirrors (ids 0,7): total
+    14; mirrors die at exact dedup (12); re-encodes die at the pHash
+    tier (10); with all-positive embeddings every scored image keeps
+    (text-tower weights and image components both positive), so the
+    CLIP gate drops nothing (10)."""
+    from etl_generator_demo_spark.operators.multimodal import (
+        x5_media_curation_attrition,
+    )
+
+    _write_documents(spark, str(tmp_path), 10)
+    spark.createDataFrame(
+        [(i, [0.5, 0.25], 0) for i in range(10)],
+        "vec_id long, embedding array<float>, label int",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
+    got = [
+        (r["stage_no"], r["n_items"])
+        for r in x5_media_curation_attrition(spark, str(tmp_path)).collect()
+    ]
+    assert got == [(1, 14), (2, 12), (3, 10), (4, 10)]

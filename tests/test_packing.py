@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -250,3 +251,96 @@ def test_chunk_with_overlap_spans_cover_every_token(spark, sf_dir):
             assert end == min(r["start_tok"] + CHUNK_LEN, n)
             covered.update(range(r["start_tok"], end))
         assert covered == set(range(n))
+
+
+def _write_documents(spark, path, n):
+    spark.createDataFrame(
+        [(i, f"doc {i} body tok{i % 7} tok{i % 3}", "en", "srcT", 20) for i in range(n)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/documents.parquet")
+
+
+def test_packing_sweep_monotone_tradeoff(spark, sf_dir):
+    """The tuning curve's contract: doubling the context length can
+    only reduce (or keep) chunk count; straddle counts stay bounded by
+    doc count; and the L -> infinity limit (one chunk per source, zero
+    interior boundaries) is approached monotonically in chunks."""
+    from etl_generator_demo_spark.operators.packing import (
+        PACK_SWEEP_LENGTHS,
+        x4_packing_context_sweep,
+    )
+
+    rows = {r["context_len"]: r for r in
+            x4_packing_context_sweep(spark, sf_dir).collect()}
+    assert set(rows) == set(PACK_SWEEP_LENGTHS)
+    prev_chunks = None
+    for L in sorted(rows):
+        r = rows[L]
+        assert 0 <= r["n_straddling_docs"] <= r["n_docs"]
+        assert r["straddle_rate_e6"] == (
+            r["n_straddling_docs"] * 1_000_000 // r["n_docs"]
+        )
+        if prev_chunks is not None:
+            assert r["n_chunks"] <= prev_chunks
+        prev_chunks = r["n_chunks"]
+
+
+def test_epochs_repeat_audit_closed_form(spark, tmp_path):
+    """One lang with supply 10 tokens: en weight 0.5 x budget 80000
+    -> alloc 40000 -> epochs 4000x, flagged; effective epochs saturate
+    at 1 + R* = 16 exactly (exp(-huge) -> 0)."""
+    from etl_generator_demo_spark.operators.packing import (
+        EPOCHS_R_STAR,
+        x4_epochs_repeat_audit,
+    )
+
+    spark.createDataFrame(
+        [(0, " ".join(f"w{i}" for i in range(10)), "en", "srcT", 40)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
+    out = x4_epochs_repeat_audit(spark, str(tmp_path)).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert (r["avail_tokens"], r["alloc_tokens"]) == (10, 40_000)
+    assert r["epochs_e6"] == 4_000 * 1_000_000
+    assert r["over_4_epochs"] is True
+    # decay saturation: eff -> 1 + R*
+    assert r["eff_epochs_e6"] == (1 + EPOCHS_R_STAR) * 1_000_000
+    assert r["effective_tokens"] == 10 * (1 + EPOCHS_R_STAR)
+
+
+@pytest.mark.slow
+def test_span_corruption_matches_python_recompute(spark, tmp_path):
+    """The md5 span gate recomputed in pure Python must reproduce the
+    plan exactly: same starts, same merged-masked set, same run
+    count."""
+    import hashlib
+
+    from etl_generator_demo_spark.operators.packing import (
+        SPAN_LEN,
+        SPAN_START_BOUND,
+        x4_span_corruption_plan,
+    )
+
+    texts = [
+        " ".join(f"t{j}" for j in range(60)),
+        " ".join(f"u{j}" for j in range(25)),
+    ]
+    _write_documents(spark, str(tmp_path), len(texts))
+    spark.createDataFrame(
+        [(i, t, "en", "srcT", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
+
+    got = {r["doc_id"]: r for r in x4_span_corruption_plan(spark, str(tmp_path)).collect()}
+    for did, text in enumerate(texts):
+        n = len(text.split(" "))
+        masked = set()
+        for p in range(n):
+            h = hashlib.md5(f"span|{did}|{p}".encode()).hexdigest()
+            if int(h[:2], 16) < SPAN_START_BOUND:
+                masked.update(q for q in range(p, p + SPAN_LEN) if q < n)
+        spans = sum(1 for q in masked if q - 1 not in masked)
+        r = got[did]
+        assert (r["n_tokens"], r["n_spans"], r["n_masked"]) == (n, spans, len(masked))
+        assert r["corruption_e6"] == len(masked) * 1_000_000 // n

@@ -204,3 +204,50 @@ class TestMMRAndPRF:
         for r in terms:
             assert r.term not in BM25_QUERY_TERMS
             assert r.df_fb >= 1
+
+
+def test_query_likelihood_closed_form(spark, sf_dir):
+    """QL recomputed in plain Python over the collected corpus (same
+    mu, same e6 floors) must match the operator's top-k exactly, and
+    every doc's score must be <= 0 (log-probs)."""
+    import math
+
+    from etl_generator_demo_spark.operators.relational import t
+    from etl_generator_demo_spark.operators.retrieval import (
+        BM25_QUERY_TERMS,
+        BM25_TOP_K,
+    )
+    from etl_generator_demo_spark.operators.retrieval import (
+        QL_MU,
+        x4_query_likelihood_topk,
+    )
+
+    docs = {
+        r["doc_id"]: r["text"].split(" ")
+        for r in t(spark, sf_dir, "documents").select("doc_id", "text").collect()
+    }
+    c_len = sum(len(v) for v in docs.values())
+    ctf = {
+        q: sum(toks.count(q) for toks in docs.values())
+        for q in BM25_QUERY_TERMS
+    }
+    want = []
+    for did, toks in docs.items():
+        dl = len(toks)
+        score = 0
+        hits = 0
+        for q in BM25_QUERY_TERMS:
+            tf = toks.count(q)
+            hits += tf > 0
+            score += math.floor(
+                math.log((tf + QL_MU * (ctf[q] / c_len)) / (dl + QL_MU))
+                * 1_000_000
+            )
+        want.append((did, score, hits))
+    want.sort(key=lambda x: (-x[1], x[0]))
+    got = [
+        (r["doc_id"], r["ql_e6"], r["n_terms_hit"])
+        for r in x4_query_likelihood_topk(spark, sf_dir).collect()
+    ]
+    assert got == want[:BM25_TOP_K]
+    assert all(s < 0 for _, s, _ in got)

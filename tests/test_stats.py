@@ -34,6 +34,7 @@ from etl_generator_demo_spark.operators.stats import (
     j_bloom_fpr_sweep,
     moments,
     x4_labeler_agreement_kappa,
+    x4_ndcg_eval,
     x4_poisson_bootstrap_ci,
     x4_theil_sen_trend,
     x4_zipf_alpha_fit,
@@ -532,3 +533,8 @@ def test_zipf_perfect_corpus(spark, tmp_path):
     assert abs(row["intercept_e6"] - int(math.log(120) * 1_000_000)) < 50
 
 
+def test_ndcg_bounded_and_consistent(spark, sf_dir):
+    r = x4_ndcg_eval(spark, sf_dir).collect()[0]
+    assert 0 < r["ndcg_e6"] <= 1_000_000
+    assert r["dcg_e6"] <= r["idcg_e6"]
+    assert r["n_ranked"] <= 20

@@ -128,3 +128,78 @@ def test_bloom_prune_no_false_negatives_planted(spark):
     assert set(range(100, 150)) <= passed  # zero false negatives
     # blocked-bloom FP rate at this load is ~(50/4096)^3 — expect none
     assert len(passed - set(range(100, 150))) <= 2
+
+
+@pytest.mark.slow
+def test_bin_width_sweep_true_pairs_invariant(spark, tmp_path):
+    """3 events for one user at t=0s, 30min, 90min: within-1h ordered
+    pairs = (a,b) and (b,c) -> n_true_pairs = 2 at EVERY width (the
+    no-lost-pairs invariant); day-wide buckets also catch the 90min
+    (a,c) gap plus the reversed orders as candidates."""
+    import datetime as dt
+
+    from etl_generator_demo_spark.operators.skew import (
+        j_range_bin_width_sweep,
+    )
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+    rows = [
+        (0, t0, 7, "view", 1.0, "{}"),
+        (1, t0 + dt.timedelta(minutes=30), 7, "view", 1.0, "{}"),
+        (2, t0 + dt.timedelta(minutes=90), 7, "view", 1.0, "{}"),
+    ]
+    spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
+    out = {r["bin_w_min"]: r for r in j_range_bin_width_sweep(spark, str(tmp_path)).collect()}
+    assert set(out) == {15, 60, 240, 1440}
+    for w in out:
+        assert out[w]["n_true_pairs"] == 2
+    # all three events share the day bucket: candidates = all 6
+    # ordered distinct pairs
+    assert out[1440]["n_candidates"] == 6
+    # replication shrinks as buckets widen: 1h window over 15-min
+    # buckets explodes each left row to 5 buckets
+    assert out[15]["n_fanout_rows"] == 15
+    assert (
+        out[15]["n_fanout_rows"] > out[60]["n_fanout_rows"]
+        > out[240]["n_fanout_rows"] >= out[1440]["n_fanout_rows"]
+    )
+
+
+def test_salt_factor_sweep_closed_form(spark, tmp_path):
+    """8 events, users 0..7: the planted hot-key case sends all but
+    user 4 to key 0 (7 rows) and keeps key 4 (1 row). Unsalted row is
+    exact; salting must never increase the straggler bound and pays
+    |keys| x s replication."""
+    import datetime as dt
+
+    from etl_generator_demo_spark.operators.skew import (
+        j_salt_factor_sweep,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (i, t0 + dt.timedelta(minutes=i), i, "view", 1.0, "{}")
+        for i in range(8)
+    ]
+    spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
+    out = {r["salt_factor"]: r for r in j_salt_factor_sweep(spark, str(tmp_path)).collect()}
+    assert set(out) == {1, 4, 16, 64}
+    assert (
+        out[1]["n_shuffle_keys"],
+        out[1]["max_key_rows"],
+        out[1]["max_share_ppm"],
+        out[1]["replication_rows"],
+    ) == (2, 7, 875_000, 2)
+    last = out[1]["max_key_rows"]
+    for s in (4, 16, 64):
+        assert out[s]["max_key_rows"] <= last
+        last = out[s]["max_key_rows"]
+        assert out[s]["replication_rows"] == 2 * s

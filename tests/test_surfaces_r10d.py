@@ -61,26 +61,6 @@ def test_ivf_nprobe_sweep_monotone_and_exhaustive(spark):
     assert rec[-1] == IVF_SWEEP_K  # exhaustive probe row is exact
 
 
-def test_analyze_stats_hand_checks(spark):
-    from etl_generator_demo_spark.operators.surfaces_r10d import (
-        d_analyze_table_stats,
-    )
-
-    rows = {r["column_name"]: r for r in d_analyze_table_stats(spark, SF).collect()}
-    n = t(spark, SF, "lineitem").count()
-    assert all(r["n_rows"] == n for r in rows.values())
-    # fixture lineitem has no nulls in these columns
-    assert all(r["n_nulls"] == 0 for r in rows.values())
-    # flags are tiny domains; keys are near-unique
-    assert rows["l_returnflag"]["n_distinct"] <= 3
-    assert rows["l_linestatus"]["n_distinct"] <= 2
-    assert rows["l_orderkey"]["n_distinct"] <= n
-    # string columns carry no encoded min/max by contract
-    assert rows["l_returnflag"]["min_encoded"] is None
-    # discount in [0, 0.1] -> cents in [0, 10]
-    assert 0 <= rows["l_discount"]["min_encoded"] <= rows["l_discount"]["max_encoded"] <= 10
-
-
 def test_time_bucket_alignment_and_totals(spark):
     """15-minute buckets anchor on the epoch grid (minute in
     {0,15,30,45}, seconds 0) and bucket totals re-add to the plain

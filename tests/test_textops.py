@@ -9,8 +9,12 @@ import math
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.operators.textops import (
+    SAMPLE_N,
     lang_id_expr,
     quality_score_expr,
+    x4_curriculum_shards,
+    x4_gopher_quality_rules,
+    x4_stratified_proportional_sample,
 )
 
 SNIPPETS = [
@@ -150,7 +154,7 @@ def test_bigram_lm_quality_invariants(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from etl_generator_demo_spark.operators.relational import t
-    from etl_generator_demo_spark.operators.textops import x4_bigram_lm_quality
+    from etl_generator_demo_spark.operators.ngram_lm import x4_bigram_lm_quality
 
     out = x4_bigram_lm_quality(spark, sf_dir)
     rows = {r["doc_id"]: r for r in out.collect()}
@@ -360,7 +364,7 @@ def test_corpus_report_card_consistency(spark, sf_dir):
 def test_quality_sweep_monotone_in_tau(spark, sf_dir):
     """Loosening the quality gate can only keep more docs; keep rate
     is the exact floor ratio of the counts."""
-    from etl_generator_demo_spark.operators.textops import x4_quality_threshold_sweep
+    from etl_generator_demo_spark.operators.ngram_lm import x4_quality_threshold_sweep
 
     rows = x4_quality_threshold_sweep(spark, sf_dir).collect()  # tau desc
     kept = [r["n_kept"] for r in rows]
@@ -418,3 +422,82 @@ def test_simpson_and_entropy_extremes(spark, tmp_path):
     assert ent["mono"]["entropy_nats_e6"] == 0
     want = int(math.floor(math.log(8) * 1_000_000))
     assert abs(ent["multi"]["entropy_nats_e6"] - want) <= 1
+
+
+def _write_docs(spark, path, rows):
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/documents.parquet")
+
+
+def test_gopher_rules_hand_fixture(spark, tmp_path):
+    good = "the quick brown fox and the lazy dog sit in a field of grass"
+    short = "too short"  # 2 words: fails word-count + stopword rules
+    digits = "the " * 6 + "1234567890 " * 12  # digit-heavy
+    _write_docs(
+        spark,
+        str(tmp_path),
+        [
+            (1, good, "en", "web", len(good)),
+            (2, short, "en", "web", len(short)),
+            (3, digits.strip(), "en", "web", len(digits.strip())),
+        ],
+    )
+    rows = {r["source"]: r for r in x4_gopher_quality_rules(spark, str(tmp_path)).collect()}
+    w = rows["web"]
+    assert w["n_docs"] == 3
+    assert w["pass_word_count"] == 2  # 'too short' (2 words) fails 5..1000
+    # good has {'the','and','a','of','in'}; digits doc has only {'the'}
+    assert w["pass_stopwords"] == 1
+    assert w["pass_digit_fraction"] == 2  # digit doc fails
+    assert w["keep_all"] == 1  # only the good doc passes everything
+
+
+def test_stratified_quotas_sum_to_target_and_cap_at_stratum(spark, tmp_path):
+    rows = []
+    for i in range(5):
+        rows.append((i, "aa bb", "en", "s", 5))
+    for i in range(5, 8):
+        rows.append((i, "cc dd", "ko", "s", 5))
+    for i in range(8, 10):
+        rows.append((i, "ee ff", "de", "s", 5))
+    _write_docs(spark, str(tmp_path), rows)
+    out = x4_stratified_proportional_sample(spark, str(tmp_path)).collect()
+    quotas = {r["lang"]: r["quota"] for r in out}
+    # Hamilton on (5,3,2)/10 at N=100 -> exactly (50,30,20)
+    assert quotas == {"en": 50, "ko": 30, "de": 20}
+    assert sum(quotas.values()) == SAMPLE_N
+    # quota > stratum size: selection takes the whole stratum
+    for r in out:
+        assert r["n_selected"] == r["n_docs"]
+
+
+def test_curriculum_shards_balanced(spark, sf_dir):
+    out = x4_curriculum_shards(spark, sf_dir).collect()
+    sizes = [r["n_docs"] for r in out]
+    assert max(sizes) - min(sizes) <= 1  # round-robin deal
+    assert len(out) <= 8
+    total = sum(sizes)
+    assert sorted(r["shard"] for r in out) == list(range(len(out)))
+    # rank ranges cover 1..total across shards
+    assert min(r["first_rn"] for r in out) == 1
+    assert max(r["last_rn"] for r in out) == total
+
+
+def test_seqlen_cap_selection_builds_without_jobs(spark, sf_dir, job_delta):
+    """The corpus total and the chosen cap are computed in the plan:
+    building the query starts no Spark job."""
+    from etl_generator_demo_spark.operators.textops import x4_seqlen_cap_selection
+
+    jobs, _ = job_delta(lambda: x4_seqlen_cap_selection(spark, sf_dir))
+    assert jobs == 0
+
+
+def test_seqlen_cap_selection_empty_corpus_matches_oracle(
+    spark, sf_dir, replace_table, oracle_mismatches
+):
+    """An empty corpus has no total to divide by: no rows, as in DuckDB."""
+    from etl_generator_demo_spark.operators.relational import t
+
+    d = replace_table("documents", t(spark, sf_dir, "documents").limit(0))
+    assert not oracle_mismatches(d, ["x4_seqlen_cap_selection"])

@@ -248,8 +248,9 @@ EXPECTATIONS: dict[str, dict] = {
     "u_lateral_topn_per_nation": {"max_exchanges": 2, "min_broadcast": 1},
     # first-owner min + co-keyed join back + per-doc agg
     "x4_shingle_novelty": {"max_exchanges": 3, "max_exchanges_cold": 4},
-    # length scan × |caps| explode (map-side) + one grouped agg
-    "x4_seqlen_cap_selection": {"max_exchanges": 2},
+    # one global aggregate over the length scan (total + every cap's
+    # mass), unpivoted; the sort runs on its single partition
+    "x4_seqlen_cap_selection": {"max_exchanges": 1},
     # windowed counts + per-window rank + output order
     "st_hourly_top_events": {"max_exchanges": 3},
     # trigram explode × |langs| + vocab-keyed profile joins + argmax window
@@ -889,9 +890,9 @@ EXPECTATIONS: dict[str, dict] = {
     "x5_crossmodal_clip_gate": {"max_exchanges": 7, "min_broadcast": 2},
     # one token scan -> two per-doc windows -> chunk rollup -> h rollup
     "x2_cdc_chunk_dedup": {"max_exchanges": 3},
-    # ONE corpus window pass (checkpointed per-doc bigram counts),
+    # ONE corpus window pass (checkpointed bigram relation),
     # vocab-bounded LM rollups + bigram-keyed lp join + doc rollup
-    "x4_doc_perplexity_filter": {"max_exchanges": 7, "min_broadcast": 2},
+    "x4_doc_perplexity_filter": {"max_exchanges": 6, "min_broadcast": 2},
     # one scored pass cut to max(budgets) (TakeOrdered), rank over the
     # bounded head, broadcast budgets join
     "x4_dsir_budget_sweep": {"max_exchanges": 9, "min_broadcast": 2,

@@ -6,13 +6,15 @@ Usage:
 
 The round directory defaults to r17; override with SPARK_GRAFT_PLAN_ROUND.
 
-With no query names, dumps every bench.py HEADLINE entry. The judge
-reads these files to check plan claims (Exchange counts, join
-strategies, PushedFilters) against the code, so the capture is the
-plain `df.explain("formatted")` text, unedited. Queries that run
-eager side work (txlog commits, localCheckpoint rounds) execute it
-here exactly as the bench does; the captured plan is the final
-DataFrame's."""
+With no query names, dumps every bench.py HEADLINE entry. These files
+are read to check plan claims (Exchange counts, join strategies,
+PushedFilters) against the code, so the capture is the plain
+`df.explain("formatted")` text with one edit: the checkout's absolute
+path is written as `<checkout>`, so the same query's plans from two
+checkouts (a copy of the parent commit and the working tree) diff
+clean up to expression and plan ids. Queries that run eager side work
+(txlog commits, localCheckpoint rounds) execute it here exactly as
+the bench does; the captured plan is the final DataFrame's."""
 
 from __future__ import annotations
 
@@ -21,7 +23,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, CHECKOUT)
 
 ROUND = os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r17")
 
@@ -41,11 +44,7 @@ def main() -> None:
     if not names:
         names = [n for n in bench.HEADLINE if n in registry]
 
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        ROUND,
-    )
+    out_dir = os.path.join(CHECKOUT, "plans", ROUND)
     os.makedirs(out_dir, exist_ok=True)
 
     for name in names:
@@ -55,7 +54,7 @@ def main() -> None:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
-            text = buf.getvalue()
+            text = buf.getvalue().replace(CHECKOUT, "<checkout>")
         except Exception as exc:  # capture the failure, don't abort the sweep
             text = f"ERROR building {name}: {exc!r}\n"
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
