@@ -54,10 +54,7 @@ _REWRITTEN_SINCE_GREEN = (
     "g_jaccard_link_prediction",
     "g_community_sizes",
     "g_modularity_lpa",
-    "g_kcore_membership",
     "g_bfs_hop_histogram",
-    "g_personalized_pagerank",
-    "g_sssp_weighted",
     # near-dup pair family on one overlap kernel (dedup.overlap_pairs),
     # LSH pairs through pairs_from_banded / doc_lsh_pairs, sweeps moved
     # into dedup.py and textops.py
@@ -122,6 +119,12 @@ _REWRITTEN_SINCE_GREEN = (
     "x4_doc_perplexity_filter",
     "x4_query_likelihood_topk",
     "x4_t_closeness_audit",
+    # the unigram-LM Viterbi as one in-row lattice kernel (the encode
+    # query runs both the trainer and the serving pass), and the DSIR
+    # and PMI corpus totals as in-plan rows instead of eager build-time counts
+    "x4_unigram_encode_corpus",
+    "x4_dsir_importance",
+    "x4_pmi_cooccurrence",
 )
 
 

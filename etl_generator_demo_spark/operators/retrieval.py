@@ -99,6 +99,29 @@ def _duck_ql_term_e6(tf: str, ctf: str, total_len: str, dl: str) -> str:
                ) * 1000000) AS BIGINT)"""
 
 
+def bm25_collection(docs: DataFrame):
+    """``(tok, dl, stats)``: the BM25 collection statistics of ``docs`` —
+    one ``(doc_id, term)`` row per space-separated token, the document
+    lengths ``(doc_id, dl)`` and the one-row ``(n_docs, total_len)``."""
+    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    stats = dl.agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_len"))
+    return tok, dl, stats
+
+
+def bm25_term_scores(tf: DataFrame, dl: DataFrame, stats: DataFrame) -> DataFrame:
+    """``(doc_id, term_score_e6)`` for each ``(doc_id, term, tf)`` row:
+    df is counted over ``tf`` (query-sized, broadcast), the document
+    length joins on doc_id and the collection row is broadcast."""
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    return (
+        tf.join(F.broadcast(dfreq), "term")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .select("doc_id", bm25_term_e6().alias("term_score_e6"))
+    )
+
+
 def _bm25_oracle() -> str:
     terms = ", ".join(f"'{x}'" for x in BM25_QUERY_TERMS)
     return f"""
@@ -151,26 +174,15 @@ def x4_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, stats is one scalar row; the only corpus-keyed shuffle
     joins tf to doc lengths on doc_id. Top-k compiles to
     TakeOrderedAndProject."""
-    docs = t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_len")
-    )
+    tok, dl, stats = bm25_collection(t(spark, sf_dir, "documents"))
     tf = (
         tok.filter(F.col("term").isin(*BM25_QUERY_TERMS))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", bm25_term_e6().alias("term_score_e6"))
-    )
     return (
-        scored.groupBy("doc_id")
+        bm25_term_scores(tf, dl, stats)
+        .groupBy("doc_id")
         .agg(
             F.sum("term_score_e6").cast("long").alias("bm25_e6"),
             F.count(F.lit(1)).cast("long").alias("n_terms_hit"),
@@ -216,37 +228,40 @@ def x4_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     The pair stage is bounded, not quadratic: only the top-{PMI_VOCAB_K}
     document-frequency terms participate (vocab broadcast), so each doc
     emits at most C({PMI_VOCAB_K},2) pairs — linear in corpus size, and
-    the self-join is co-keyed on doc_id (no shuffle beyond the distinct)."""
+    the self-join is co-keyed on doc_id (no shuffle beyond the distinct).
+    Each side of the self-join carries its term's df from the vocab
+    broadcast, and the document count N is one in-plan row."""
     docs = t(spark, sf_dir, "documents")
     dt = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("term")
     ).distinct()
-    n_docs = dt.select("doc_id").distinct().count()  # scalar, one job
+    n = dt.agg(F.count_distinct("doc_id").alias("n_docs"))
     dfreq = dt.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     vocab = dfreq.orderBy(F.desc("df"), "term").limit(PMI_VOCAB_K)
-    dv = dt.join(F.broadcast(vocab.select("term")), "term").select("doc_id", "term")
-    a = dv.select("doc_id", F.col("term").alias("term_a"))
-    b = dv.select("doc_id", F.col("term").alias("term_b"))
+
+    def side(s: str) -> DataFrame:
+        v = vocab.select(F.col("term").alias(f"term_{s}"), F.col("df").alias(f"df_{s}"))
+        return dt.withColumnRenamed("term", f"term_{s}").join(F.broadcast(v), f"term_{s}")
+
     pairs = (
-        a.join(b, ["doc_id"])
+        side("a")
+        .join(side("b"), ["doc_id"])
         .filter(F.col("term_a") < F.col("term_b"))
-        .groupBy("term_a", "term_b")
+        .groupBy("term_a", "term_b", "df_a", "df_b")
         .agg(F.count(F.lit(1)).alias("n_ab"))
     )
-    va = vocab.select(F.col("term").alias("term_a"), F.col("df").alias("df_a"))
-    vb = vocab.select(F.col("term").alias("term_b"), F.col("df").alias("df_b"))
     pmi = F.log(
-        (F.col("n_ab") * F.lit(n_docs)) / (F.col("df_a") * F.col("df_b")).cast("double")
+        (F.col("n_ab") * F.col("n_docs")) / (F.col("df_a") * F.col("df_b")).cast("double")
     )
     return (
-        pairs.join(F.broadcast(va), "term_a")
-        .join(F.broadcast(vb), "term_b")
+        pairs.crossJoin(F.broadcast(n))
         .select(
             "term_a",
             "term_b",
             "n_ab",
             F.floor(pmi * 1000000).cast("long").alias("pmi_e6"),
         )
+        .coalesce(1)  # at most C(PMI_VOCAB_K, 2) rows: sorted in place
         .orderBy("term_a", "term_b")
     )
 
@@ -578,12 +593,7 @@ def _prf_common_sql() -> str:
 
 def _prf_first_pass(spark: SparkSession, sf_dir: str):
     """Spark twins of the shared CTEs; returns (tok, dl, stats, expt)."""
-    docs = t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_len")
-    )
+    tok, dl, stats = bm25_collection(t(spark, sf_dir, "documents"))
     fb = (
         x4_bm25_topk(spark, sf_dir)
         .orderBy(F.desc("bm25_e6"), "doc_id")
@@ -655,15 +665,9 @@ def x4_prf_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    dfx = tfx.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
-        tfx.join(F.broadcast(dfx), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", bm25_term_e6().alias("term_score_e6"))
-    )
     return (
-        scored.groupBy("doc_id")
+        bm25_term_scores(tfx, dl, stats)
+        .groupBy("doc_id")
         .agg(
             F.sum("term_score_e6").cast("long").alias("bm25_e6"),
             F.count(F.lit(1)).cast("long").alias("n_terms_hit"),

@@ -31,7 +31,8 @@ from .retrieval import (
     BM25_QUERY_TERMS,
     _duck_bm25_term_e6,
     _duck_ql_term_e6,
-    bm25_term_e6,
+    bm25_collection,
+    bm25_term_scores,
     ql_term_e6,
     x4_bm25_topk,
 )
@@ -634,26 +635,16 @@ def x4_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: tf filters to query terms at the explode; the hit-doc
     relation is what both rankings permute, through the distributed
     ranking of :func:`spearman`; the rank join keys on doc_id."""
-    docs = t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_len"),
-    )
+    tok, dl, stats = bm25_collection(t(spark, sf_dir, "documents"))
     tf = (
         tok.filter(F.col("term").isin(*BM25_QUERY_TERMS))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
     bm25 = (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", bm25_term_e6().alias("ts_e6"))
+        bm25_term_scores(tf, dl, stats)
         .groupBy("doc_id")
-        .agg(F.sum("ts_e6").cast("long").alias("bm25_e6"))
+        .agg(F.sum("term_score_e6").cast("long").alias("bm25_e6"))
     )
     qterms = spark.createDataFrame(
         [(x,) for x in BM25_QUERY_TERMS], "term string"

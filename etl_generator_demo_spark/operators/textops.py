@@ -1030,21 +1030,24 @@ def dsir_importance_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bigram"),
     ).select("doc_id", "lang", F.substring(F.md5("bigram"), 1, 2).alias("feat"))
-    src = bg.groupBy("feat").agg(F.count(F.lit(1)).alias("cs"))
-    tgt = (
-        bg.filter(F.col("lang") == DSIR_TARGET_LANG)
-        .groupBy("feat")
-        .agg(F.count(F.lit(1)).alias("ct"))
+    feats = bg.groupBy("feat").agg(
+        F.count(F.lit(1)).alias("cs"),
+        F.count_if(F.col("lang") == DSIR_TARGET_LANG).alias("ct"),
     )
-    ns = bg.count()
-    nt = bg.filter(F.col("lang") == DSIR_TARGET_LANG).count()
-    w = src.join(tgt, "feat", "left").select(
-        "feat",
+    # the bucket-bounded model in one in-plan row, beside the smoothed
+    # source and target totals its weights divide by
+    model = feats.agg(
+        F.collect_list(F.struct("feat", "cs", "ct")).alias("f"),
+        (F.sum("cs") + DSIR_BUCKETS).cast("double").alias("ns"),
+        (F.sum("ct") + DSIR_BUCKETS).cast("double").alias("nt"),
+    )
+    w = model.select(F.explode("f").alias("f"), "ns", "nt").select(
+        "f.feat",
         F.floor(
             F.log(
-                (F.coalesce(F.col("ct"), F.lit(0)) + F.lit(1.0))
-                * F.lit(float(ns + DSIR_BUCKETS))
-                / ((F.col("cs") + F.lit(1.0)) * F.lit(float(nt + DSIR_BUCKETS)))
+                (F.col("f.ct") + F.lit(1.0))
+                * F.col("ns")
+                / ((F.col("f.cs") + F.lit(1.0)) * F.col("nt"))
             )
             * 1_000_000
         )
@@ -1085,8 +1088,10 @@ def x4_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     double ratio of integer counts, floored to 1e-6 BIGINT BEFORE the
     per-doc sum — so document scores are order-independent integer
     sums, immune to float-summation wobble. The 256-row weight model
-    broadcasts; corpus cost is one bigram explode + two vocab-sized
-    groupBys + one per-doc agg (shared builder: `dsir_importance_rel`)."""
+    broadcasts; corpus cost is one bigram explode + one feature-keyed
+    groupBy (source and target counts together) + one per-doc agg, and
+    the corpus totals ride the model's one-row aggregate, so the build
+    runs no job (shared builder: `dsir_importance_rel`)."""
     return (
         dsir_importance_rel(spark, sf_dir)
         .withColumn("target_like", F.col("importance_e6") > 0)

@@ -1,9 +1,7 @@
-"""Unigram-LM (SentencePiece-style) tokenizer training, relational
-(round 11) — the missing sibling of the BPE pair (`x4_bpe_merge_steps`
-trains merges, `x4_bpe_encode_corpus` applies them; this trains a
-unigram vocabulary à la Kudo 2018).
-
-The algorithm, re-expressed as bounded relational passes:
+"""Unigram-LM (SentencePiece-style) tokenizer training and serving —
+the sibling of the BPE pair (`x4_bpe_merge_steps` trains merges,
+`x4_bpe_encode_corpus` applies them; this trains a unigram vocabulary
+à la Kudo 2018).
 
 1. **Candidate vocabulary**: every substring of length 1..UNI_MAXTOK
    of every word type, weighted by corpus occurrences; keep the top
@@ -16,42 +14,48 @@ The algorithm, re-expressed as bounded relational passes:
    cost(tok) = floor(UNI_SCALE · ln(total_weight / weight(tok))) —
    the e6-floored negative log-probability, so path comparison is an
    INTEGER sum (order-free, hash-exact; the only float is the ln
-   before the floor, the Adamic-Adar discipline that has held
-   hash-exact across engines since round 7). M-step: re-estimate
-   weights from Viterbi token counts with add-one smoothing over the
-   fixed vocabulary (no ln(0); classic fixed-vocab EM — SentencePiece
-   additionally prunes, a config this operator pins off).
-3. **Viterbi as bounded shortest-path** (the x4_holt recursion
-   discipline): the segmentation lattice is a DAG layered by
-   character position, so forward costs f[j] are computed in ONE pass
-   of UNI_MAXWORD position steps (topological order — no fixpoint
-   needed), backward costs b[i] symmetrically, and the E-step counts
-   every lattice edge lying on a co-optimal path via the classic
-   f[i] + cost + b[j] == f[len] membership test — no path walk, no
-   recursion, ties counted deterministically as "all co-optimal
-   edges".
+   before the floor). M-step: re-estimate weights from Viterbi token
+   counts with add-one smoothing over the fixed vocabulary (no ln(0);
+   classic fixed-vocab EM — SentencePiece additionally prunes, a
+   config this operator pins off).
+3. **Viterbi in the word row** (:func:`viterbi`): the segmentation
+   lattice of a word depends only on that word and the
+   vocabulary-sized cost model, so it is per-row work. The cost
+   relation is collapsed into one map (:func:`cost_map`) and
+   cross-joined onto the word types as a broadcast; one `aggregate`
+   over the positions, with an inner `transform` over token lengths,
+   is the min-plus pass, forward (f[j]) or backward (b[i]). The
+   E-step counts every lattice edge on a co-optimal path through the
+   classic f[i] + cost + b[j] == f[len] test — no path walk, ties
+   counted deterministically as "all co-optimal edges". Serving runs
+   the forward pass on the metric 16·cost + 1, so the low four bits of
+   f[len] are the token count of the cheapest segmentation.
 
-Scale: everything after the initial word count operates on the WORD
-TYPE relation (distinct words × counts) — corpus-size independent,
-the same boundedness argument as the BPE trainer. The lattice
-relation is |word types| × O(UNI_MAXWORD · UNI_MAXTOK) rows; every DP
-step is one keyed join+aggregate on it. At 100 TB the word count is
-the only corpus-wide pass (one map-combined aggregate); training cost
-does not grow with corpus size at all, only with vocabulary.
+Scale: everything after the corpus word count operates on the word
+TYPE relation (distinct words × counts), the same boundedness argument
+as the BPE trainer: at 100 TB the word count is the only corpus-wide
+pass, and training cost grows with the vocabulary, not the corpus.
+Only the word types and the vocabulary-sized model relations (the
+candidates, each iteration's counts and costs) are checkpointed.
+
+The DuckDB oracles spell the same lattice independently, as unrolled
+position-layered CTE chains over an edge relation.
 
 Reference grounding: tokenizer training is the canonical corpus job
 of the LLM-data pipeline this engine targets; the reference (an
 LLM→SQL web shim, sql_generator.py) has no corpus operators at all.
-Word extraction follows bpe.py exactly (documents.text split on
-single spaces).
+Word extraction is bpe.py's (`corpus_words`, `vocabulary`:
+documents.text split on single spaces).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..registry import register
+from .bpe import corpus_words, vocabulary
 from .relational import t
 
 #: Max word length admitted to training (SentencePiece's
@@ -301,178 +305,137 @@ def _unigram_encode_oracle() -> str:
 # Spark implementation
 # ---------------------------------------------------------------------------
 
-def _uni_costs(vocab0: DataFrame, counts: DataFrame | None) -> DataFrame:
-    """(tok, cost) from candidate weights (counts=None, initial model)
-    or from smoothed Viterbi counts (M-step)."""
-    if counts is None:
-        w = vocab0.select("tok", "w")
-    else:
-        w = vocab0.select("tok").join(counts, "tok", "left").select(
-            "tok", (F.coalesce(F.col("cnt"), F.lit(0)) + 1).alias("w")
+def _tok(i: Column, l: Column) -> Column:
+    """The lattice edge word[i : i + l] of the current word row."""
+    return F.col("word").substr(i + 1, l)
+
+
+def _lengths(room: Column) -> Column:
+    """Token lengths 1..min(UNI_MAXTOK, room)."""
+    return F.sequence(F.lit(1), F.least(F.lit(UNI_MAXTOK), room))
+
+
+def _edges(fn) -> Column:
+    """``fn(i, l)`` over every lattice edge of the word row, flattened:
+    0 <= i < wlen, 1 <= l <= min(UNI_MAXTOK, wlen - i)."""
+    n = F.col("wlen")
+    return F.flatten(
+        F.transform(
+            F.sequence(F.lit(0), n - 1),
+            lambda i: F.transform(_lengths(n - i), lambda l: fn(i, l)),
         )
+    )
+
+
+def viterbi(cm: Column, backward: bool = False) -> Column:
+    """The min-plus lattice pass over one word row, as an array over
+    positions 0..wlen: forward, f[j] = the cheapest segmentation of
+    word[:j]; backward, b[i] = the cheapest of word[i:]. ``cm`` maps a
+    token to its cost; a token outside the model looks up NULL, and
+    ``array_min`` skips it."""
+    n = F.col("wlen")
+    if backward:  # prepend b[p] to b[p+1..wlen]
+        def step(acc, p):
+            best = F.array_min(
+                F.transform(_lengths(n - p), lambda l: cm[_tok(p, l)] + acc[l - 1])
+            )
+            return F.concat(F.array(best), acc)
+
+        positions = F.sequence(n - 1, F.lit(0), F.lit(-1))
+    else:  # append f[p] to f[0..p-1]
+        def step(acc, p):
+            best = F.array_min(
+                F.transform(_lengths(p), lambda l: acc[p - l] + cm[_tok(p - l, l)])
+            )
+            return F.concat(acc, F.array(best))
+
+        positions = F.sequence(F.lit(1), n)
+    return F.aggregate(positions, F.array(F.lit(0).cast("long")), step)
+
+
+def cost_map(costs: DataFrame, value: Column) -> DataFrame:
+    """``(cm)``: the cost relation as one row holding one map, token ->
+    ``value``, to cross-join onto the word rows as a broadcast."""
+    entries = F.collect_list(F.struct("tok", value.alias("cost")))
+    return costs.agg(F.map_from_entries(entries).alias("cm"))
+
+
+def _costs(w: DataFrame) -> DataFrame:
+    """``(tok, cost)`` from ``(tok, w)``: cost = floor(UNI_SCALE ·
+    ln(Σw / w)), checkpointed."""
     tot = w.agg(F.sum("w").alias("tw"))
-    return w.crossJoin(F.broadcast(tot)).select(
-        "tok",
-        F.floor(
-            UNI_SCALE * F.log(F.col("tw").cast("double") / F.col("w"))
+    return (
+        w.crossJoin(F.broadcast(tot))
+        .select(
+            "tok",
+            F.floor(UNI_SCALE * F.log(F.col("tw").cast("double") / F.col("w")))
+            .cast("long")
+            .alias("cost"),
         )
-        .cast("long")
-        .alias("cost"),
+        .localCheckpoint(eager=True)
     )
 
 
 def train_unigram(words: DataFrame):
-    """Run candidate selection + UNI_EM_ITERS Viterbi-EM iterations on
-    a (word, wcount) word-type relation. Returns (words, edges,
-    counts, costs): the capped word relation, the lattice edge
-    relation, the final iteration's Viterbi counts, and the final
-    smoothed costs over the ENTIRE candidate vocabulary (the model the
-    encode pass serves with — zero-count tokens keep their smoothed
-    cost so coverage survives). Every DP step is one keyed
-    join+aggregate, checkpointed so 2 × 2 × UNI_MAXWORD unrolled steps
-    never compound the plan."""
+    """Candidate selection and UNI_EM_ITERS Viterbi-EM iterations on a
+    ``(word, wcount)`` word-type relation. Returns ``(words, counts,
+    costs)``: the capped word relation with ``wlen``, the last
+    iteration's Viterbi counts ``(tok, cnt)``, and the smoothed costs
+    ``(tok, cost)`` over the whole candidate vocabulary (the model the
+    encode pass serves with: zero-count tokens keep their smoothed
+    cost, so coverage survives)."""
     words = (
-        words.filter(
-            (F.col("word") != "") & (F.length("word") <= UNI_MAXWORD)
-        )
+        words.filter((F.col("word") != "") & (F.length("word") <= UNI_MAXWORD))
         .withColumn("wlen", F.length("word").cast("long"))
         .localCheckpoint(eager=True)
     )
-    subs = (
-        words.select(
-            "word",
-            "wcount",
-            "wlen",
-            F.explode(F.sequence(F.lit(0), F.col("wlen") - 1)).alias("i"),
-        )
-        .select(
-            "word",
-            "wcount",
-            "wlen",
-            "i",
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    F.least(F.lit(UNI_MAXTOK), F.col("wlen") - F.col("i")),
-                )
-            ).alias("l"),
-        )
-        .select(
-            "word",
-            "wcount",
-            F.col("i").cast("long").alias("i"),
-            (F.col("i") + F.col("l")).cast("long").alias("j"),
-            F.expr("substr(word, i + 1, l)").alias("tok"),
-        )
+    cand = (
+        words.select("wcount", F.explode(_edges(_tok)).alias("tok"))
+        .groupBy("tok")
+        .agg(F.sum("wcount").cast("long").alias("w"))
     )
-    cand = subs.groupBy("tok").agg(F.sum("wcount").cast("long").alias("w"))
-    singles = cand.filter(F.length("tok") == 1)
     multi = (
         cand.filter(F.length("tok") >= 2)
         .orderBy(F.desc("w"), "tok")
         .limit(UNI_MULTI_VOCAB)
     )
-    vocab0 = singles.unionByName(multi).localCheckpoint(eager=True)
-    edges = (
-        subs.select("word", "i", "j", "tok")
-        .distinct()
-        .join(vocab0.select("tok"), "tok")
+    vocab0 = (
+        cand.filter(F.length("tok") == 1)
+        .unionByName(multi)
         .localCheckpoint(eager=True)
     )
-
-    costs = _uni_costs(vocab0, None).localCheckpoint(eager=True)
+    costs = _costs(vocab0)
     counts = None
+    f, b, cm, n = F.col("f"), F.col("b"), F.col("cm"), F.col("wlen")
+    on_path = _edges(  # the co-optimal edges f[i] + cost + b[i + l] == f[wlen]
+        lambda i, l: F.when(f[i] + cm[_tok(i, l)] + b[i + l] == f[n], _tok(i, l))
+    )
     for _ in range(UNI_EM_ITERS):
-        ecost = edges.join(costs, "tok").select(
-            "word", "i", "j", "tok", "cost"
-        ).localCheckpoint(eager=True)
-        # forward DP in topological (position) order
-        fwd = words.select(
-            "word", F.lit(0).cast("long").alias("pos"),
-            F.lit(0).cast("long").alias("cost"),
+        lattice = words.crossJoin(F.broadcast(cost_map(costs, F.col("cost")))).select(
+            "word", "wlen", "wcount", "cm",
+            viterbi(cm).alias("f"), viterbi(cm, backward=True).alias("b"),
         )
-        for j in range(1, UNI_MAXWORD + 1):
-            step = (
-                ecost.filter(F.col("j") == j)
-                .join(
-                    fwd.select(
-                        "word",
-                        F.col("pos").alias("i"),
-                        F.col("cost").alias("fc"),
-                    ),
-                    ["word", "i"],
-                )
-                .groupBy("word")
-                .agg(F.min(F.col("fc") + F.col("cost")).alias("cost"))
-                .select(
-                    "word", F.lit(j).cast("long").alias("pos"),
-                    F.col("cost").cast("long").alias("cost"),
-                )
-            )
-            fwd = fwd.unionByName(step).localCheckpoint(eager=True)
-        # backward DP, descending position
-        bwd = words.select(
-            "word", F.col("wlen").alias("pos"),
-            F.lit(0).cast("long").alias("cost"),
-        )
-        for i in range(UNI_MAXWORD - 1, -1, -1):
-            step = (
-                ecost.filter(F.col("i") == i)
-                .join(
-                    bwd.select(
-                        "word",
-                        F.col("pos").alias("j"),
-                        F.col("cost").alias("bc"),
-                    ),
-                    ["word", "j"],
-                )
-                .groupBy("word")
-                .agg(F.min(F.col("cost") + F.col("bc")).alias("cost"))
-                .select(
-                    "word", F.lit(i).cast("long").alias("pos"),
-                    F.col("cost").cast("long").alias("cost"),
-                )
-            )
-            bwd = bwd.unionByName(step).localCheckpoint(eager=True)
-        tot = fwd.join(
-            words.select("word", F.col("wlen").alias("pos")),
-            ["word", "pos"],
-        ).select("word", F.col("cost").alias("total"))
         counts = (
-            ecost.join(
-                fwd.select(
-                    "word", F.col("pos").alias("i"), F.col("cost").alias("fc")
-                ),
-                ["word", "i"],
-            )
-            .join(
-                bwd.select(
-                    "word", F.col("pos").alias("j"), F.col("cost").alias("bc")
-                ),
-                ["word", "j"],
-            )
-            .join(tot, "word")
-            .filter(
-                F.col("fc") + F.col("cost") + F.col("bc") == F.col("total")
-            )
-            .join(words.select("word", "wcount"), "word")
+            lattice.select("wcount", F.explode(on_path).alias("tok"))
+            .filter(F.col("tok").isNotNull())
             .groupBy("tok")
             .agg(F.sum("wcount").cast("long").alias("cnt"))
             .localCheckpoint(eager=True)
         )
-        costs = _uni_costs(vocab0, counts).localCheckpoint(eager=True)
-    return words, edges, counts, costs
+        costs = _costs(
+            vocab0.select("tok")
+            .join(counts, "tok", "left")
+            .select("tok", (F.coalesce(F.col("cnt"), F.lit(0)) + 1).alias("w"))
+        )
+    return words, counts, costs
 
 
 def unigram_lm_train(words: DataFrame) -> DataFrame:
     """Top-UNI_TOPK trained vocabulary (token, n_chars, viterbi_count,
     cost_e6, rnk) — the training-facing output; `train_unigram` holds
     the algorithm."""
-    _, _, counts, costs = train_unigram(words)
-    final = counts.join(costs.select("tok", F.col("cost").alias("cost_e6")),
-                        "tok")
-    from pyspark.sql.window import Window
-
+    _, counts, costs = train_unigram(words)
+    final = counts.join(costs.select("tok", F.col("cost").alias("cost_e6")), "tok")
     return (
         final.select(
             F.col("tok").alias("token"),
@@ -500,85 +463,60 @@ def x4_unigram_lm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SentencePiece-style unigram-LM tokenizer training over the
     documents corpus (module docstring has the full algorithm): 2
     Viterbi-EM iterations over a 64+chars candidate vocabulary in e6
-    integer fixed point, Viterbi as a position-layered shortest path
-    (forward + backward pass, co-optimal edge membership — never a
-    path walk). Output: the trained top-40 vocabulary with final
-    Viterbi counts and e6 costs."""
+    integer fixed point, Viterbi as the in-row min-plus lattice pass
+    (forward + backward, co-optimal edge membership — never a path
+    walk). Output: the trained top-40 vocabulary with final Viterbi
+    counts and e6 costs."""
     docs = t(spark, sf_dir, "documents")
-    words = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("wcount"))
+    return unigram_lm_train(vocabulary(corpus_words(docs)))
+
+
+def _encoded(words: DataFrame, cm: DataFrame) -> DataFrame:
+    """``words`` × ``cm`` with ``ntok``, the tokens per word. The
+    forward pass runs on the metric 16·cost + 1 per edge (the values
+    of ``cm``), so it minimizes total cost first and token count
+    second (ntok <= UNI_MAXWORD < 16 can never flip a cost
+    comparison); ntok is the low four bits of f[wlen]."""
+    return words.crossJoin(F.broadcast(cm)).withColumn(
+        "ntok", viterbi(F.col("cm"))[F.col("wlen")] % 16
     )
-    return unigram_lm_train(words)
+
+
+def _budget(enc: DataFrame, key, weight: str) -> DataFrame:
+    """Per ``key``: words, chars and tokens, each word type weighted by
+    its ``weight`` count, with fertility_e6 (tokens per word) and
+    chars_per_token_e6."""
+    c = F.col(weight)
+    return (
+        enc.groupBy(key)
+        .agg(
+            F.sum(c).cast("long").alias("n_words"),
+            F.sum(c * F.col("wlen")).cast("long").alias("n_chars"),
+            F.sum(c * F.col("ntok")).cast("long").alias("n_tokens"),
+        )
+        .withColumn("fertility_e6", F.expr("n_tokens * 1000000 div n_words").cast("long"))
+        .withColumn("chars_per_token_e6", F.expr("n_chars * 1000000 div n_tokens").cast("long"))
+    )
 
 
 def unigram_encode_stats(
     words: DataFrame,
-    edges: DataFrame,
     costs: DataFrame,
     swords: DataFrame,
     dsrc: DataFrame,
 ) -> DataFrame:
     """Serving pass: Viterbi-segment every word type with the trained
-    costs and roll token counts up per source. The DP minimizes the
-    combined metric 16*cost + 1 per lattice edge — total cost first,
-    token count second (ntok <= UNI_MAXWORD < 16 can never flip a cost
-    comparison), so tokens-per-word is a deterministic scalar, no path
-    walk. One forward pass of UNI_MAXWORD keyed steps on the word-type
-    relation; the corpus-wide work is only the per-source word count
-    (`swords`) and the final broadcast-joinable rollup."""
-    ecost = (
-        edges.join(costs, "tok")
-        .select("word", "i", "j", (F.col("cost") * 16 + 1).alias("em"))
-        .localCheckpoint(eager=True)
-    )
-    g = words.select(
-        "word",
-        F.lit(0).cast("long").alias("pos"),
-        F.lit(0).cast("long").alias("m"),
-    )
-    for j in range(1, UNI_MAXWORD + 1):
-        step = (
-            ecost.filter(F.col("j") == j)
-            .join(
-                g.select(
-                    "word", F.col("pos").alias("i"), F.col("m").alias("gm")
-                ),
-                ["word", "i"],
-            )
-            .groupBy("word")
-            .agg(F.min(F.col("gm") + F.col("em")).alias("m"))
-            .select(
-                "word",
-                F.lit(j).cast("long").alias("pos"),
-                F.col("m").cast("long").alias("m"),
-            )
-        )
-        g = g.unionByName(step).localCheckpoint(eager=True)
-    enc = g.join(
-        words.select("word", F.col("wlen").alias("pos")), ["word", "pos"]
-    ).select("word", (F.col("m") % 16).alias("ntok"))
-    agg = (
-        swords.join(words.select("word", "wlen"), "word")
-        .join(enc, "word")
-        .groupBy("source")
-        .agg(
-            F.sum("wc").cast("long").alias("n_words"),
-            F.sum(F.col("wc") * F.col("wlen")).cast("long").alias("n_chars"),
-            F.sum(F.col("wc") * F.col("ntok"))
-            .cast("long")
-            .alias("n_tokens"),
-        )
-    )
+    costs and roll token counts up per source. The corpus-wide work is
+    only the per-source word count (`swords`) and the final
+    broadcast-joinable rollup."""
+    enc = _encoded(words, cost_map(costs, F.col("cost") * 16 + 1)).select("word", "wlen", "ntok")
     skipped = (
         swords.filter(F.length("word") > UNI_MAXWORD)
         .groupBy("source")
         .agg(F.sum("wc").cast("long").alias("n_skipped"))
     )
     return (
-        dsrc.join(agg, "source")
+        dsrc.join(_budget(swords.join(enc, "word"), "source", "wc"), "source")
         .join(skipped, "source", "left")
         .select(
             "source",
@@ -586,15 +524,9 @@ def unigram_encode_stats(
             "n_words",
             "n_chars",
             "n_tokens",
-            F.expr("n_tokens * 1000000 div n_words")
-            .cast("long")
-            .alias("fertility_e6"),
-            F.expr("n_chars * 1000000 div n_tokens")
-            .cast("long")
-            .alias("chars_per_token_e6"),
-            F.coalesce(F.col("n_skipped"), F.lit(0))
-            .cast("long")
-            .alias("n_skipped_words"),
+            "fertility_e6",
+            "chars_per_token_e6",
+            F.coalesce(F.col("n_skipped"), F.lit(0)).cast("long").alias("n_skipped_words"),
         )
         .orderBy("source")
     )
@@ -613,29 +545,19 @@ def x4_unigram_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     budgets (words, chars, tokens, fertility = tokens-per-word e6,
     chars-per-token e6, plus over-cap skipped words for honesty).
     Token budgeting with the ACTUAL tokenizer is how a 100 TB mixture
-    is sized; the per-word DP runs on word types, so serving cost is
+    is sized; the per-word pass runs on word types, so serving cost is
     vocabulary-bounded while the corpus contributes one per-source
     word count."""
     docs = t(spark, sf_dir, "documents")
-    words = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("wcount"))
-    )
-    wcap, edges, _, costs = train_unigram(words)
-    swords = (
-        docs.select(
-            "source", F.explode(F.split("text", " ")).alias("word")
-        )
-        .filter(F.col("word") != "")
-        .groupBy("source", "word")
-        .agg(F.count(F.lit(1)).cast("long").alias("wc"))
+    docword = corpus_words(docs, "source")
+    wcap, _, costs = train_unigram(vocabulary(docword))
+    swords = docword.groupBy("source", "word").agg(
+        F.count(F.lit(1)).cast("long").alias("wc")
     )
     dsrc = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
-    return unigram_encode_stats(wcap, edges, costs, swords, dsrc)
+    return unigram_encode_stats(wcap, costs, swords, dsrc)
 
 
 #: Serving-vocab sweep sizes (multi-char tokens kept, by final
@@ -721,99 +643,28 @@ def x4_unigram_vocab_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus under each. Embedding-table size vs sequence-length is
     THE vocab-size tradeoff every tokenizer config pins; smaller
     serving vocab → monotonically higher fertility (pinned by pytest).
-    One (word, v)-keyed DP over an exploded lattice — never one DP
-    chain per size (the sweep discipline). Word-type-bounded like the
-    trainer."""
+    One aggregate ranks the multi-char tokens (count desc, token asc)
+    and cuts one served cost map per size; the encode pass then runs
+    once per (word, size) row — word-type-bounded like the trainer."""
     docs = t(spark, sf_dir, "documents")
-    words = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("wcount"))
+    wcap, counts, costs = train_unigram(vocabulary(corpus_words(docs)))
+    entry = F.struct("tok", (F.col("cost") * 16 + 1).alias("cost"))
+    multi = (F.length("tok") >= 2) & F.col("cnt").isNotNull()
+    ranked = costs.join(counts, "tok", "left").agg(
+        F.collect_list(F.when(F.length("tok") == 1, entry)).alias("singles"),
+        F.sort_array(
+            F.collect_list(F.when(multi, F.struct((-F.col("cnt")).alias("k"), entry.alias("e"))))
+        ).alias("multi"),
     )
-    wcap, edges, counts, costs = train_unigram(words)
-    from pyspark.sql.window import Window as W
-
-    ranked_multi = (
-        counts.filter(F.length("tok") >= 2)
-        .select(
-            "tok",
-            F.row_number()
-            .over(W.orderBy(F.desc("cnt"), "tok"))
-            .alias("rk"),
-        )
-    )
-    vsizes = spark.createDataFrame(
-        [(v,) for v in UNI_SWEEP_VOCABS], "v long"
-    )
-    serve = (
-        costs.crossJoin(F.broadcast(vsizes))
-        .join(ranked_multi, "tok", "left")
-        .filter(
-            (F.length("tok") == 1)
-            | (F.col("rk").isNotNull() & (F.col("rk") <= F.col("v")))
-        )
-        .select("v", "tok", "cost")
-    )
-    edgv = (
-        edges.join(serve, "tok")
-        .select("word", "i", "j", "v", (F.col("cost") * 16 + 1).alias("em"))
-        .localCheckpoint(eager=True)
-    )
-    g = wcap.crossJoin(F.broadcast(vsizes)).select(
-        "word",
+    sizes = F.array(*(F.lit(v).cast("long") for v in UNI_SWEEP_VOCABS))
+    serve = ranked.select("singles", "multi", F.explode(sizes).alias("v")).select(
         "v",
-        F.lit(0).cast("long").alias("pos"),
-        F.lit(0).cast("long").alias("m"),
+        F.map_from_entries(
+            F.concat("singles", F.transform(F.slice("multi", 1, F.col("v")), lambda x: x["e"]))
+        ).alias("cm"),
     )
-    for j in range(1, UNI_MAXWORD + 1):
-        step = (
-            edgv.filter(F.col("j") == j)
-            .join(
-                g.select(
-                    "word",
-                    "v",
-                    F.col("pos").alias("i"),
-                    F.col("m").alias("gm"),
-                ),
-                ["word", "v", "i"],
-            )
-            .groupBy("word", "v")
-            .agg(F.min(F.col("gm") + F.col("em")).alias("m"))
-            .select(
-                "word",
-                "v",
-                F.lit(j).cast("long").alias("pos"),
-                F.col("m").cast("long").alias("m"),
-            )
-        )
-        g = g.unionByName(step).localCheckpoint(eager=True)
-    enc = g.join(
-        wcap.select("word", F.col("wlen").alias("pos")), ["word", "pos"]
-    ).select("word", "v", (F.col("m") % 16).alias("ntok"))
     return (
-        enc.join(wcap.select("word", "wcount", "wlen"), "word")
-        .groupBy(F.col("v").alias("vocab_multi"))
-        .agg(
-            F.sum("wcount").cast("long").alias("n_words"),
-            F.sum(F.col("wcount") * F.col("wlen"))
-            .cast("long")
-            .alias("n_chars"),
-            F.sum(F.col("wcount") * F.col("ntok"))
-            .cast("long")
-            .alias("n_tokens"),
-        )
-        .select(
-            "vocab_multi",
-            "n_words",
-            "n_chars",
-            "n_tokens",
-            F.expr("n_tokens * 1000000 div n_words")
-            .cast("long")
-            .alias("fertility_e6"),
-            F.expr("n_chars * 1000000 div n_tokens")
-            .cast("long")
-            .alias("chars_per_token_e6"),
-        )
+        _budget(_encoded(wcap, serve), F.col("v").alias("vocab_multi"), "wcount")
+        .coalesce(1)  # one row per sweep size: sorted in place
         .orderBy("vocab_multi")
     )

@@ -204,11 +204,11 @@ def test_unigram_encode_matches_python_reference(spark):
     dsrc = spark.createDataFrame(
         [("a", 10), ("b", 20)], "source string, n_docs long"
     )
-    wcap, edges, _, costs = train_unigram(words)
+    wcap, _, costs = train_unigram(words)
     got = {
         r["source"]: r
         for r in unigram_encode_stats(
-            wcap, edges, costs, swords, dsrc
+            wcap, costs, swords, dsrc
         ).collect()
     }
     _, py_costs = _py_train(corpus)
@@ -263,3 +263,42 @@ def test_vocab_sweep_fertility_monotone(spark):
         assert r["fertility_e6"] == (
             r["n_tokens"] * 1_000_000 // r["n_words"]
         )
+
+
+#: Spark job-id delta of one build on the sf0.001 fixture (4 cores).
+#: The unigram queries check out only the word types, the candidate
+#: vocabulary and each EM iteration's counts and costs; the DSIR weight
+#: model and the PMI document count are in-plan rows, so their builders
+#: run no job.
+BUILD_JOBS = {
+    "x4_unigram_lm_vocab": 24,
+    "x4_unigram_encode_corpus": 24,
+    "x4_unigram_vocab_sweep": 24,
+    "x4_dsir_importance": 0,
+    "x4_dsir_resampled_mixture": 0,
+    "x4_pmi_cooccurrence": 0,
+}
+
+
+@pytest.mark.parametrize("rows", [0, 1])
+def test_degenerate_input_matches_oracle(
+    spark, sf_dir, replace_table, oracle_mismatches, rows
+):
+    """An empty corpus and a one-document corpus: the in-row lattice
+    pass over zero or a handful of word types, and the one-row in-plan
+    totals over zero or one document, still match the oracles."""
+    from etl_generator_demo_spark.operators.relational import t
+
+    frame = t(spark, sf_dir, "documents").orderBy("doc_id").limit(rows)
+    bad = oracle_mismatches(replace_table("documents", frame), sorted(BUILD_JOBS))
+    assert not bad, bad
+
+
+@pytest.mark.parametrize("name", sorted(BUILD_JOBS))
+def test_build_job_count_pinned(spark, sf_dir, job_delta, name):
+    from etl_generator_demo_spark.registry import load_all
+
+    fn = load_all()[name].fn
+    fn(spark, sf_dir).collect()  # warm the session
+    n, _ = job_delta(lambda: fn(spark, sf_dir))
+    assert n <= BUILD_JOBS[name], n

@@ -133,7 +133,9 @@ EXPECTATIONS: dict[str, dict] = {
     # the doc_id join repartition, and the final per-doc agg — every
     # one keyed and linear, none all-pairs
     "x4_bm25_topk": {"max_exchanges": 7, "min_broadcast": 2, "take_ordered": True},
-    # vocab broadcasts; pairs are generated per-doc (co-keyed self-join)
+    # vocab broadcasts; pairs are generated per-doc (co-keyed self-join);
+    # the document count is one in-plan row (doc_id distinct + single
+    # partition); the <= C(K,2) result rows sort in one partition
     "x4_pmi_cooccurrence": {"max_exchanges": 7, "min_broadcast": 3},
     # final Lloyd assignment: centroid model broadcast, one groupBy per
     # assignment + label rejoin + output order (earlier rounds run in
@@ -229,7 +231,8 @@ EXPECTATIONS: dict[str, dict] = {
     # boundary relation, so the user_id pushdown happens in the
     # checkpointed job; visible shuffles = pid window + day agg + order
     "x4_concurrent_sessions": {"max_exchanges": 3},
-    # bigram explode + two vocab groupBys; 256-row weight model broadcast
+    # bigram explode + one feature groupBy gathered into the one-row
+    # model with its totals; 256-row weight model broadcast
     "x4_dsir_importance": {"max_exchanges": 4, "min_broadcast": 1},
     # one cumulative-weight window on the group key; totals broadcast
     "a_weighted_median": {"max_exchanges": 3, "min_broadcast": 1},
@@ -789,13 +792,13 @@ EXPECTATIONS: dict[str, dict] = {
     # two sketch rollups (shard then merge), CDF windows, broadcast
     # quantile targets
     "a_hdr_quantile_sketch": {"max_exchanges": 4},
-    # unigram-LM trainer: 40 unrolled DP steps behind localCheckpoint
-    # (the HITS/WCC pattern); visible tail is the final count-cost
-    # join + rank window
-    "x4_unigram_lm_vocab": {"max_exchanges": 3, "min_broadcast": 1},
-    # encode: per-source word count + rollup joins on the checkpointed
-    # model relations (AQE broadcasts the word-type sides)
-    "x4_unigram_encode_corpus": {"max_exchanges": 6, "min_broadcast": 2},
+    # unigram-LM trainer: the in-row Viterbi passes run in the
+    # checkpointed EM iterations' jobs; visible tail is the final
+    # count-cost join + rank window
+    "x4_unigram_lm_vocab": {"max_exchanges": 2, "min_broadcast": 1},
+    # encode: the cost map (one-row aggregate, broadcast onto the
+    # checkpointed word types) + per-source word count + rollup joins
+    "x4_unigram_encode_corpus": {"max_exchanges": 5, "min_broadcast": 2},
     # resolution sweep: exploded rollup + per-r CDF windows + the
     # de-globalized exact prefix scan (range repartition counts as
     # exchanges)
@@ -817,9 +820,10 @@ EXPECTATIONS: dict[str, dict] = {
     # IVF staleness: two Arrow assignment scans over the checkpointed
     # quantized relation + one per-list rollup + 1-row cost joins
     "x3_ivf_staleness_audit": {"max_exchanges": 5},
-    # unigram vocab sweep: 50 DP steps behind localCheckpoint; visible
-    # tail is the enc join + rollup
-    "x4_unigram_vocab_sweep": {"max_exchanges": 3, "min_broadcast": 1},
+    # unigram vocab sweep: one aggregate ranks the trained tokens into
+    # the per-size cost maps (broadcast onto the checkpointed word
+    # types) + the per-size rollup; its 3 rows sort in one partition
+    "x4_unigram_vocab_sweep": {"max_exchanges": 2, "min_broadcast": 1},
     # bloom FPR sweep: one hashed relation, width-prefix explode,
     # keyed hit rollups + small left joins on h
     "j_bloom_fpr_sweep": {"max_exchanges": 6, "min_broadcast": 2},
