@@ -3,8 +3,8 @@
 The reference appends ``LIMIT {n}`` to any SELECT/WITH statement whose
 text lacks the substring "LIMIT" (``db_connector.py:216-224``) — a
 check with false positives on identifiers containing "limit". Here the
-decision is made on Catalyst's *analyzed logical plan*: if the plan
-already contains a GlobalLimit node, leave it alone; otherwise wrap
+decision is made on Catalyst's *analyzed logical plan*: if the plan's
+root is a GlobalLimit node, leave it alone; otherwise wrap
 ``df.limit(n)``. Catalyst then pushes the new Limit down
 (LimitPushDown / TakeOrderedAndProject), so at scale the executors
 stop early instead of materializing the full result.
@@ -21,10 +21,16 @@ def plan_has_limit(df: DataFrame) -> bool:
     subquery, not the statement's result — ``SELECT * FROM (SELECT ...
     LIMIT 1000000) x`` must still be capped at the serialization edge,
     or the one sanctioned collect() materializes a million rows on the
-    driver (a substring/anywhere check had exactly that hole)."""
-    plan = df._jdf.queryExecution().analyzed().toString()
-    root = plan.splitlines()[0].lstrip("'") if plan else ""
-    return root.startswith("GlobalLimit") or root.startswith("CollectLimit")
+    driver (a substring/anywhere check had exactly that hole). The
+    root's node name is read from the plan object, without rendering
+    the plan as text. A ``WITH`` statement's root is ``WithCTE``, whose
+    ``plan`` is the statement's own query: its limit counts, a limit
+    inside a CTE body does not."""
+    root = df._jdf.queryExecution().analyzed()
+    name = root.nodeName()
+    if name == "WithCTE":
+        name = root.plan().nodeName()
+    return name == "GlobalLimit"
 
 
 def apply_auto_limit(df: DataFrame, limit: int) -> DataFrame:

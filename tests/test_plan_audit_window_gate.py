@@ -180,3 +180,21 @@ def test_forced_fallback_env_raises_and_counts(monkeypatch):
     _fallback.warn_fallback_once("test.site", RuntimeError("x"))
     _fallback.warn_fallback_once("test.site", RuntimeError("x"))
     assert _fallback.events() == n0 + 2  # every occurrence, not just first
+
+
+def test_reused_exchange_is_not_a_shuffle():
+    """A ``ReusedExchange`` line names the exchange it reuses but moves
+    no data: a relation shuffled once and read twice is one shuffle."""
+    from plan_audit import audit, shuffle_count
+
+    plan = (
+        "*(5) SortMergeJoin [a#1], [a#9], Inner\n"
+        ":- *(2) Sort [a#1 ASC NULLS FIRST], false, 0\n"
+        ":  +- Exchange hashpartitioning(a#1, 32), ENSURE_REQUIREMENTS, [plan_id=10]\n"
+        ":     +- *(1) FileScan parquet [a#1]\n"
+        "+- *(4) Sort [a#9 ASC NULLS FIRST], false, 0\n"
+        "   +- ReusedExchange [a#9], Exchange hashpartitioning(a#1, 32), "
+        "ENSURE_REQUIREMENTS, [plan_id=10]\n"
+    )
+    assert shuffle_count(plan) == 1
+    assert audit("q", plan, {"max_exchanges": 1}) == []

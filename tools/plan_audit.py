@@ -1216,9 +1216,21 @@ def unbounded_global_windows(plan: str) -> list[str]:
     return bad
 
 
+_SHUFFLE = re.compile(r"Exchange (?:hash|range|SinglePartition)")
+
+
+def shuffle_count(plan: str) -> int:
+    """Shuffle exchanges in an executed plan. A ``ReusedExchange``
+    line names the exchange it reuses (``ReusedExchange [...], Exchange
+    hashpartitioning(...)``) but shuffles nothing, so it is skipped."""
+    return sum(
+        len(_SHUFFLE.findall(ln)) for ln in plan.splitlines() if "ReusedExchange" not in ln
+    )
+
+
 def audit(name: str, plan: str, exp: dict, cold: bool = False) -> list[str]:
     problems = []
-    n_ex = len(re.findall(r"Exchange (?:hash|range|SinglePartition)", plan))
+    n_ex = shuffle_count(plan)
     # BroadcastNestedLoopJoin is the broadcast form for non-equi joins
     # (e.g. the batched-retrieval bounded fan-out)
     n_bc = plan.count("BroadcastHashJoin") + plan.count("BroadcastNestedLoopJoin")
@@ -1334,7 +1346,7 @@ def main() -> int:
         # is the inline (cold) shape — audit it against the cold budget
         cold = args.cold or _fallback.events() > ev0
         problems = audit(name, plan, EXPECTATIONS.get(name, {}), cold=cold)
-        n_ex = len(re.findall(r"Exchange (?:hash|range|SinglePartition)", plan))
+        n_ex = shuffle_count(plan)
         codegen_stages = len(set(re.findall(r"\*\((\d+)\)", plan)))
         summary = (
             f"state={'cold' if cold else 'warm'} shuffles={n_ex} "
