@@ -71,7 +71,6 @@ _REWRITTEN_SINCE_GREEN = (
     "x2_bbit_minhash_estimates",
     "x2_dedup_methods_agreement",
     "x4_corpus_pipeline",
-    "x4_pipeline_attrition",
     "x4_quality_threshold_sweep",
     # decontamination family moved into operators/decontam.py: one flag
     # builder per tier, one rollup, funnel and tier lattice composed
@@ -125,6 +124,11 @@ _REWRITTEN_SINCE_GREEN = (
     "x4_unigram_encode_corpus",
     "x4_dsir_importance",
     "x4_pmi_cooccurrence",
+    # the token relation in operators/tokens.py keeps every caller's
+    # plan; these two plans change on purpose: PMI's (doc_id, term)
+    # distinct shares one exchange (x4_pmi_cooccurrence above), TF-IDF
+    # counts its documents in-plan and rolls df up from tf
+    "x4_tfidf_top_terms",
 )
 
 

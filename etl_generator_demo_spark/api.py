@@ -42,7 +42,9 @@ class AppState:
     job's scheduling costs more than AQE's re-planning saves: measured
     per request at sf 0.005, aggregation and grouping go from 2 jobs to
     1 and an n-table join from n + 1 to n. ``catalog`` is copied onto
-    that session and its views are registered there only, once. The
+    that session and its views are registered there only, once; the
+    copy shares the caller's metadata document, so the schemas are
+    walked once for both. The
     caller's session (the registry's, the ETL executor's) keeps its
     conf and its views; the connect, status and disconnect endpoints
     act on the front door's."""

@@ -219,7 +219,11 @@ class Catalog:
     #: pre-flight rewrite — no JVM extension needed, and Catalyst pushes
     #: the injected Filter into the parquet scan.
     table_filters: dict[str, list[str]] = field(default_factory=dict)
-    _metadata_cache: dict[str, Any] | None = field(default=None, repr=False)
+    #: Holds the metadata document under ``"doc"``. A copy made with
+    #: ``dataclasses.replace`` (the front door's, on its own session)
+    #: shares this holder, so one schema walk serves both catalogs and
+    #: an invalidation reaches both.
+    _metadata_cache: dict[str, Any] = field(default_factory=dict, repr=False)
 
     def path(self, name: str) -> str:
         return f"{self.sf_dir}/{name}.parquet"
@@ -245,8 +249,8 @@ class Catalog:
         Shape parity with ``db_connector.py:155-167``: ``{db_type,
         db_version, schema_summary: {tables, relationships}, constraints}``.
         """
-        if self._metadata_cache is not None:
-            return self._metadata_cache
+        if "doc" in self._metadata_cache:
+            return self._metadata_cache["doc"]
 
         tables = []
         relationships: list[str] = []
@@ -277,10 +281,10 @@ class Catalog:
             "schema_summary": {"tables": tables, "relationships": relationships},
             "constraints": self.constraints,
         }
-        self._metadata_cache = doc
+        self._metadata_cache["doc"] = doc
         return doc
 
     def invalidate(self) -> None:
         """Drop the cached document (reference resets on reconnect/DDL,
         ``db_connector.py:55,88``)."""
-        self._metadata_cache = None
+        self._metadata_cache.clear()

@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.operators.relational import t
+from etl_generator_demo_spark.operators.tokens import _duck_ws_split, ws_split
 from etl_generator_demo_spark.registry import register
 
 
@@ -282,8 +283,8 @@ def j_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "f_array_ops",
-    oracle="""
-    WITH toks AS (SELECT doc_id, STRING_SPLIT(text, ' ') AS tk FROM documents
+    oracle=f"""
+    WITH toks AS (SELECT doc_id, {_duck_ws_split()} AS tk FROM documents
                   WHERE doc_id < 100)
     SELECT doc_id,
            CAST(LEN(tk) AS INT)                       AS n_tokens,
@@ -304,7 +305,7 @@ def f_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     a string (the driver's canonicalizer rejects array-typed cells —
     registered queries never return arrays)."""
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    tk = F.split("text", " ")
+    tk = ws_split()
     return d.select(
         "doc_id",
         F.size(tk).alias("n_tokens"),

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from .relational import t
+from .tokens import _duck_tokens, doc_tokens
 
 #: Merge steps trained. Three steps exercise every code path (the
 #: x == y run logic fires whenever a doubled character wins).
@@ -114,7 +115,7 @@ def _bpe_oracle() -> str:
     return f"""
     WITH vocab AS (
         SELECT word, CAST(COUNT(*) AS BIGINT) AS wcount FROM (
-            SELECT UNNEST(STRING_SPLIT(text, ' ')) AS word FROM documents
+            SELECT {_duck_tokens("word")} FROM documents
         ) WHERE word <> '' GROUP BY word
     ),
     s0 AS MATERIALIZED (
@@ -210,9 +211,7 @@ def bpe_trainer(vocab: DataFrame, words: bool = False) -> DataFrame:
 def corpus_words(docs: DataFrame, *keep: str) -> DataFrame:
     """One row per non-empty space-separated word of ``docs.text``,
     with the ``keep`` columns alongside."""
-    return docs.select(*keep, F.explode(F.split("text", " ")).alias("word")).filter(
-        F.col("word") != ""
-    )
+    return doc_tokens(docs, *keep, tk="word").filter(F.col("word") != "")
 
 
 def vocabulary(words: DataFrame) -> DataFrame:
@@ -249,7 +248,7 @@ def _bpe_encode_oracle() -> str:
     steps = "".join("," + _bpe_step_sql(k) for k in range(1, BPE_STEPS + 1))
     return f"""
     WITH docword AS (
-        SELECT source, UNNEST(STRING_SPLIT(text, ' ')) AS word FROM documents
+        SELECT source, {_duck_tokens("word")} FROM documents
     ),
     vocab AS (
         SELECT word, CAST(COUNT(*) AS BIGINT) AS wcount FROM docword

@@ -59,6 +59,11 @@ from etl_generator_demo_spark.operators.dedup import (
 )
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.operators.similarity import _as_double, _dot, _duck_cos_e6, _norm
+from etl_generator_demo_spark.operators.tokens import (
+    _duck_n_tokens,
+    _duck_token_positions,
+    n_tokens,
+)
 from etl_generator_demo_spark.registry import register
 from etl_generator_demo_spark.session import column_memo
 
@@ -201,11 +206,7 @@ def _decontam_sweep_oracle() -> str:
     )""")
     union = " UNION ALL ".join(f"SELECT * FROM row{n}" for n in DECONTAM_SWEEP_NS)
     return f"""
-    WITH tok AS (
-        SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
-    ),
+    WITH tok AS ({_duck_token_positions("doc_id")}),
     {",".join(per_n)}
     SELECT * FROM ({union}) ORDER BY ngram_n
     """
@@ -595,7 +596,7 @@ def _tiers(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict[str, DataF
     pop = (
         t(spark, sf_dir, "documents")
         .filter(~is_eval())
-        .select("doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tok"))
+        .select("doc_id", n_tokens().cast("long").alias("n_tok"))
     )
     return pop, {
         "exact": x4_decontaminate(spark, sf_dir).select("doc_id"),
@@ -615,7 +616,7 @@ def _duck_tiers() -> str:
     return f"""
     {_DUCK_SHINGLES},
     pop AS (
-        SELECT doc_id, CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tok
+        SELECT doc_id, CAST({_duck_n_tokens()} AS BIGINT) AS n_tok
         FROM documents WHERE NOT ({_duck_is_eval()})
     ),{_duck_exact_hits()},
     exact_flag AS (SELECT doc_id FROM exact_hits),{_DUCK_FUZZY_HITS},

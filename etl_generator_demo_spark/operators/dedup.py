@@ -44,6 +44,12 @@ from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.catalog import read_parquet_known
 from etl_generator_demo_spark.operators.relational import t
+from etl_generator_demo_spark.operators.tokens import (
+    _duck_n_tokens,
+    _duck_token_positions,
+    doc_token_positions,
+    n_tokens,
+)
 from etl_generator_demo_spark.registry import register
 from etl_generator_demo_spark.session import checkpoint_with, column_memo
 
@@ -389,13 +395,8 @@ def exact_dedup(df: DataFrame, key_cols: list[str]) -> DataFrame:
 # Window-lead formulation: DuckDB's range() table function does not
 # accept lateral column parameters, so shingles come from LEAD over
 # token position instead of slicing.
-_DUCK_SHINGLES = """
-    WITH tok AS (
-        SELECT doc_id,
-               UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
-    ),
+_DUCK_SHINGLES = f"""
+    WITH tok AS ({_duck_token_positions("doc_id")}),
     sh AS (
         SELECT doc_id,
                tk || '_' || LEAD(tk, 1) OVER w || '_' || LEAD(tk, 2) OVER w
@@ -695,10 +696,10 @@ def x1_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x2_softdedup_weights",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT doc_id, MD5(text) AS h,
-               CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens
+               CAST({_duck_n_tokens()} AS BIGINT) AS n_tokens
         FROM documents
     ),
     g AS (SELECT h, CAST(COUNT(*) AS BIGINT) AS n_copies FROM d GROUP BY h)
@@ -728,7 +729,7 @@ def x2_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select(
         "doc_id",
         F.md5("text").alias("h"),
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+        n_tokens().cast("long").alias("n_tokens"),
     )
     g = d.groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("n_copies"))
     return (
@@ -1552,12 +1553,7 @@ CDC_MOD = 8
 @register(
     "x2_cdc_chunk_dedup",
     oracle=f"""
-    WITH tok AS (
-        SELECT doc_id,
-               UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
-    ),
+    WITH tok AS ({_duck_token_positions("doc_id")}),
     marked AS (
         SELECT doc_id, pos, tk,
                CASE WHEN LAG(tk) OVER w IS NULL THEN 1
@@ -1610,9 +1606,7 @@ def x2_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     then chunk_h; the chunk relation is ~tokens/CDC_MOD rows. The boundary
     hash reuses the md5-hex→int idiom shared with the shard router."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tk")
-    )
+    tok = doc_token_positions(docs, "doc_id")
     w = Window.partitionBy("doc_id").orderBy("pos")
     prev = F.lag("tk").over(w)
     h2 = F.conv(

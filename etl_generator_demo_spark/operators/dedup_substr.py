@@ -54,6 +54,16 @@ from pyspark.sql.window import Window
 from ..registry import register
 from .relational import t
 from .textops import WINNOW_K, WINNOW_W, winnowing_fingerprints
+from .tokens import (
+    _DUCK_KGRAMS,
+    _duck_n_tokens,
+    _duck_token_counts,
+    doc_token_positions,
+    kgram_hashes,
+    n_tokens,
+    token_counts,
+    ws_split,
+)
 
 #: K-gram size shared with the winnowing index (textops.WINNOW_K): the
 #: coverage query counts positions inside cross-doc shared K-grams.
@@ -61,42 +71,6 @@ SPAN_K = WINNOW_K
 #: Minimum reported span length in tokens. K + W - 1 is exactly the
 #: winnowing recall guarantee, making fingerprint candidates lossless.
 SPAN_T = WINNOW_K + WINNOW_W - 1
-
-#: Shared DuckDB K-gram CTE: (doc_id, pos, h) for every full K-gram.
-#: Positions are 1-based (GENERATE_SUBSCRIPTS) vs Spark's 0-based
-#: posexplode — harmless, since only position DIFFERENCES are used.
-_DUCK_KGRAMS = f"""
-    tok AS (
-        SELECT doc_id,
-               UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
-    ),
-    kg0 AS (
-        SELECT doc_id, pos,
-               MD5(tk {"".join(f"|| '_' || LEAD(tk, {i}) OVER w " for i in range(1, WINNOW_K))}) AS h
-        FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-    ),
-    kg AS (SELECT doc_id, pos, h FROM kg0 WHERE h IS NOT NULL)
-"""
-
-
-def _kgrams(d: DataFrame) -> DataFrame:
-    """(doc_id, pos, h): md5 of each full K-token gram, 0-based pos.
-    Same tokenization and gram shape as textops.winnowing_fingerprints
-    (concat_ws skips NULLs, so tail grams are gated on the furthest
-    lead instead)."""
-    tok = d.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tk"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    kgram = F.concat_ws(
-        "_", F.col("tk"), *[F.lead("tk", i).over(w) for i in range(1, WINNOW_K)]
-    )
-    return tok.select(
-        "doc_id",
-        "pos",
-        F.when(F.lead("tk", WINNOW_K - 1).over(w).isNotNull(), F.md5(kgram)).alias("h"),
-    ).filter(F.col("h").isNotNull())
-
 
 #: Full spans oracle, shared: the cross-source rollup embeds it as a
 #: derived table.
@@ -175,7 +149,7 @@ def _verified_span_pairs(docs: DataFrame, fps: DataFrame) -> DataFrame:
         .union(cand.select("db"))
         .distinct()
     )
-    kg = _kgrams(docs).join(cand_docs, "doc_id", "semi")
+    kg = kgram_hashes(docs).join(cand_docs, "doc_id", "semi")
     m = (
         kg.select(F.col("doc_id").alias("da"), F.col("pos").alias("pa"), "h")
         .join(
@@ -220,21 +194,39 @@ _DUCK_COVERAGE = f"""
         FROM cov GROUP BY doc_id
     ),
     nt AS (
-        SELECT doc_id, CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens
+        SELECT doc_id, CAST({_duck_n_tokens()} AS BIGINT) AS n_tokens
         FROM documents
     )
 """
+
+
+def _covered_tokens(docs: DataFrame, starts: DataFrame, name: str) -> DataFrame:
+    """(doc_id, name, n_tokens): per doc, the token positions covered by
+    the K-gram ``starts`` (doc_id, pos) — the interval union of their
+    fixed-length-K intervals, sum of min(K, next_start - start) with
+    the last interval paying K, one sorted window per doc — beside the
+    doc's token count."""
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    covered = F.least(
+        F.lit(SPAN_K), F.coalesce(F.lead("pos").over(w) - F.col("pos"), F.lit(SPAN_K))
+    )
+    per_doc = (
+        starts.select("doc_id", covered.alias("covered"))
+        .groupBy("doc_id")
+        .agg(F.sum("covered").cast("long").alias(name))
+    )
+    ntok = docs.select("doc_id", n_tokens().cast("long").alias("n_tokens"))
+    return per_doc.join(ntok, "doc_id")
 
 
 def _coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_tokens, n_dup_tokens) for every doc with >= 1
     cross-doc shared K-gram. A position is duplicated iff covered by a
     K-gram whose hash occurs in >= 2 distinct docs; coverage is the
-    interval union of the fixed-length-K intervals over shared starts:
-    sum of min(K, next_start - start) with the last interval paying K
-    — one sorted window per doc, no pair enumeration anywhere."""
+    interval union over the shared starts — no pair enumeration
+    anywhere."""
     docs = t(spark, sf_dir, "documents")
-    kg = _kgrams(docs)
+    kg = kgram_hashes(docs)
     hf = (
         kg.groupBy("h")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -242,21 +234,7 @@ def _coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("h")
     )
     shared = kg.join(hf, "h")  # keyed on h: linear, map-combined upstream
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    cov = shared.select(
-        "doc_id",
-        F.least(
-            F.lit(SPAN_K),
-            F.coalesce(F.lead("pos").over(w) - F.col("pos"), F.lit(SPAN_K)),
-        ).alias("covered"),
-    )
-    per_doc = cov.groupBy("doc_id").agg(
-        F.sum("covered").cast("long").alias("n_dup_tokens")
-    )
-    ntok = docs.select(
-        "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
-    )
-    return per_doc.join(ntok, "doc_id")
+    return _covered_tokens(docs, shared, "n_dup_tokens")
 
 
 @register(
@@ -328,7 +306,7 @@ def x2_exact_substr_corpus_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cov = _coverage(spark, sf_dir)
     tot = docs.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size(F.split("text", " "))).cast("long").alias("total_tokens"),
+        F.sum(n_tokens()).cast("long").alias("total_tokens"),
     )
     dup = cov.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs_with_dup"),
@@ -372,7 +350,7 @@ def x2_exact_substr_corpus_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM cov GROUP BY doc_id
     ),
     nt AS (
-        SELECT doc_id, CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens
+        SELECT doc_id, CAST({_duck_n_tokens()} AS BIGINT) AS n_tokens
         FROM documents
     )
     SELECT pd.doc_id, nt.n_tokens, pd.n_removed_tokens,
@@ -404,7 +382,7 @@ def x2_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; the interval union is the same per-doc sorted window.
     All stages linear in corpus tokens, keyed h then doc_id."""
     docs = t(spark, sf_dir, "documents")
-    kg = _kgrams(docs)
+    kg = kgram_hashes(docs)
     own = (
         kg.groupBy("h")
         .agg(
@@ -420,22 +398,8 @@ def x2_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "pos")
         .distinct()
     )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    cov = rem.select(
-        "doc_id",
-        F.least(
-            F.lit(SPAN_K),
-            F.coalesce(F.lead("pos").over(w) - F.col("pos"), F.lit(SPAN_K)),
-        ).alias("covered"),
-    )
-    per_doc = cov.groupBy("doc_id").agg(
-        F.sum("covered").cast("long").alias("n_removed_tokens")
-    )
-    ntok = docs.select(
-        "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
-    )
     return (
-        per_doc.join(ntok, "doc_id")
+        _covered_tokens(docs, rem, "n_removed_tokens")
         .select(
             "doc_id",
             "n_tokens",
@@ -712,11 +676,8 @@ def rematerialized_tokens(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, tk) of the corpus AFTER removal — original token
     positions, removed ones anti-joined away. The shared head of both
     rematerialize queries."""
-    tok = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tk")
-    )
-    rp = removed_positions(_kgrams(docs))
-    return tok.join(rp, ["doc_id", "pos"], "left_anti")
+    rp = removed_positions(kgram_hashes(docs))
+    return doc_token_positions(docs, "doc_id").join(rp, ["doc_id", "pos"], "left_anti")
 
 
 #: Shared oracle CTE chain: kept = post-removal (doc_id, pos, tk).
@@ -754,7 +715,7 @@ _DUCK_KEPT = f"""
     ),
     nt AS (
         SELECT doc_id,
-               CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens
+               CAST({_duck_n_tokens()} AS BIGINT) AS n_tokens
         FROM documents
     )
     SELECT nt.doc_id, nt.n_tokens,
@@ -792,11 +753,11 @@ def x2_removal_rematerialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     completeness on the token relation spelling."""
     docs = t(spark, sf_dir, "documents")
     rem = (
-        removed_positions(_kgrams(docs))
+        removed_positions(kgram_hashes(docs))
         .groupBy("doc_id")
         .agg(F.collect_set("pos").alias("_rem"))
     )
-    toks = F.split("text", " ")
+    toks = ws_split()
     kept_pos = F.array_except(
         F.sequence(F.lit(0), F.size("_toks") - 1),
         F.coalesce(F.col("_rem"), F.array().cast("array<int>")),
@@ -895,14 +856,12 @@ def x2_rematerialize_boundary_audit(
     oracle row and by tests/test_dedup_substr.py on planted data.
 
     Plan: the kept relation flows into one per-doc renumber window +
-    the same gram window as `_kgrams` (carrying the original-position
+    the same gram window as `kgram_hashes` (carrying the original-position
     span), then a groupBy(h2) rollup — linear in kept tokens, output
     one row."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tk")
-    )
-    rp = removed_positions(_kgrams(docs))
+    tok = doc_token_positions(docs, "doc_id")
+    rp = removed_positions(kgram_hashes(docs))
     kept = tok.join(rp, ["doc_id", "pos"], "left_anti")
 
     wnp = Window.partitionBy("doc_id").orderBy("pos")
@@ -974,7 +933,7 @@ def _dedup_shift_oracle() -> str:
     return f"""
     WITH {_DUCK_KEPT},
     pre AS (
-        SELECT tk, CAST(COUNT(*) AS BIGINT) AS c_pre FROM tok GROUP BY tk
+        SELECT tk, n AS c_pre FROM ({_duck_token_counts()})
     ),
     post AS (
         SELECT tk, CAST(COUNT(*) AS BIGINT) AS c_post FROM kept GROUP BY tk
@@ -1020,8 +979,7 @@ def x2_dedup_distribution_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join). Output: one row — token/type counts both sides + the
     divergence."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(F.split("text", " ")).alias("tk"))
-    pre = tok.groupBy("tk").agg(F.count(F.lit(1)).cast("long").alias("c_pre"))
+    pre = token_counts(docs).withColumnRenamed("n", "c_pre")
     post = (
         rematerialized_tokens(docs)
         .groupBy("tk")

@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from .relational import t
+from .tokens import ws_split
 
 
 # ---------------------------------------------------------------------------
@@ -282,7 +283,7 @@ def u_posexplode_ordinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.col("text"), " ")).alias("pos0", "tok"),
+        F.posexplode(ws_split()).alias("pos0", "tok"),
     ).select("doc_id", "tok", (F.col("pos0") + 1).alias("ord"))
     return (
         toks.filter(F.col("ord") <= 10)

@@ -31,6 +31,7 @@ from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.operators.similarity import _as_double, _dot, cosine
 from etl_generator_demo_spark.operators.skew import _HEX
 from etl_generator_demo_spark.operators.stats import div
+from etl_generator_demo_spark.operators.tokens import _duck_tokens, doc_tokens
 from etl_generator_demo_spark.registry import register
 
 #: Canonical multimodal schema: payload + typed sidecar metadata.
@@ -791,7 +792,7 @@ X5_TXT_DIM = 64
         FROM documents WHERE doc_id % 3 = 0
     ),
     tok AS (
-        SELECT media_id, UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM img
+        SELECT media_id, {_duck_tokens()} FROM img
     ),
     txt AS (
         SELECT media_id,
@@ -858,10 +859,7 @@ def x5_crossmodal_clip_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast needed when both sides are corpus-sized."""
     docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
     emb = t(spark, sf_dir, "embeddings")
-    tok = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.explode(F.split("text", " ")).alias("tk"),
-    )
+    tok = doc_tokens(docs, F.col("doc_id").alias("media_id"))
     txt = tok.groupBy(
         "media_id",
         (
@@ -1402,7 +1400,7 @@ def _media_attrition_oracle() -> str:
         SELECT doc_id AS media_id, text FROM documents WHERE doc_id % 3 = 0
     ),
     tok AS (
-        SELECT media_id, UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM img
+        SELECT media_id, {_duck_tokens()} FROM img
     ),
     txt AS (
         SELECT media_id,

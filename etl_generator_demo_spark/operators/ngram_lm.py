@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from .relational import t
+from .tokens import _duck_token_positions, doc_token_positions, doc_tokens, token_counts
 
 
 def doc_bigrams(docs: DataFrame, *keep: str) -> DataFrame:
@@ -36,9 +37,7 @@ def doc_bigrams(docs: DataFrame, *keep: str) -> DataFrame:
     the token explode."""
     w = Window.partitionBy("doc_id").orderBy("pos")
     return (
-        docs.select(
-            "doc_id", *keep, F.posexplode(F.split("text", " ")).alias("pos", "a")
-        )
+        doc_token_positions(docs, "doc_id", *keep, tk="a")
         .withColumn("b", F.lead("a").over(w))
         .filter(F.col("b").isNotNull())
         .drop("pos")
@@ -49,11 +48,7 @@ def _duck_bigrams(*keep: str) -> str:
     """Oracle twin of :func:`doc_bigrams`: CTEs ``tok(doc_id, *keep,
     tk, pos)`` and ``bgn(doc_id, *keep, a, b)`` over ``documents``."""
     cols = "".join(f"{c}, " for c in keep)
-    return f"""tok AS (
-        SELECT doc_id, {cols}UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
-    ),
+    return f"""tok AS ({_duck_token_positions("doc_id", *keep)}),
     bg AS (
         SELECT doc_id, {cols}tk AS a,
                LEAD(tk) OVER (PARTITION BY doc_id ORDER BY pos) AS b
@@ -408,13 +403,9 @@ def x4_lm_interpolation_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bg = doc_bigrams(docs, "is_train")
     tr_ab, tr_a = bigram_counts(bg.filter(F.col("is_train")))
-    tok = docs.select("is_train", F.explode(F.split("text", " ")).alias("tk"))
-    tr_u = (
-        tok.filter(F.col("is_train"))
-        .groupBy("tk")
-        .agg(F.count(F.lit(1)).cast("long").alias("cu"))
-        .withColumnRenamed("tk", "b")
-    )
+    tok = doc_tokens(docs, "is_train")
+    train = docs.filter(F.col("is_train"))
+    tr_u = token_counts(train, tk="b").withColumnRenamed("n", "cu")
     s = (
         tok.filter(F.col("is_train"))
         .agg(F.count(F.lit(1)).cast("long").alias("ntr"))

@@ -30,6 +30,13 @@ from pyspark.sql import functions as F
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.operators.skew import _HEX
 from etl_generator_demo_spark.operators.stats import div
+from etl_generator_demo_spark.operators.tokens import (
+    _duck_n_tokens,
+    _duck_token_positions,
+    _duck_ws_split,
+    n_tokens,
+    ws_split,
+)
 from etl_generator_demo_spark.registry import register
 
 CHUNK_TOKENS = 512
@@ -40,7 +47,7 @@ CHUNK_TOKENS = 512
     oracle=f"""
     WITH sized AS (
         SELECT doc_id, source,
-               CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens
+               CAST({_duck_n_tokens()} AS BIGINT) AS n_tokens
         FROM documents
     ),
     cum AS (
@@ -66,9 +73,7 @@ def x4_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     step exactly where each document's tokens land; straddling docs
     continue into chunk_id+1. One window shuffle, no UDFs."""
     docs = t(spark, sf_dir, "documents")
-    sized = docs.select(
-        "doc_id", "source", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
-    )
+    sized = docs.select("doc_id", "source", n_tokens().cast("long").alias("n_tokens"))
     w = Window.partitionBy("source").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -151,7 +156,7 @@ def _mixture_alloc_sql() -> str:
     oracle=f"""
     WITH sized AS (
         SELECT doc_id, lang,
-               CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens,
+               CAST({_duck_n_tokens()} AS BIGINT) AS n_tokens,
                MD5(CAST(doc_id AS VARCHAR)) AS shuffle_key
         FROM documents
     ),
@@ -180,7 +185,7 @@ def x4_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = docs.select(
         "doc_id",
         "lang",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+        n_tokens().cast("long").alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("shuffle_key"),
     )
     w = Window.partitionBy("lang").orderBy("shuffle_key", "doc_id").rowsBetween(
@@ -206,25 +211,20 @@ def _pipeline_chain_sql() -> str:
     # the attrition-report oracle.
     return f"""qual AS (
         SELECT doc_id, source, text,
-               CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens,
-               CAST(LEN(LIST_DISTINCT(STRING_SPLIT(text, ' '))) AS DOUBLE)
-                   / LEN(STRING_SPLIT(text, ' ')) AS diversity
+               CAST({_duck_n_tokens()} AS BIGINT) AS n_tokens,
+               CAST(LEN(LIST_DISTINCT({_duck_ws_split()})) AS DOUBLE)
+                   / {_duck_n_tokens()} AS diversity
         FROM documents
-        WHERE LEN(STRING_SPLIT(text, ' ')) >= 30
-          AND CAST(LEN(LIST_DISTINCT(STRING_SPLIT(text, ' '))) AS DOUBLE)
-                   / LEN(STRING_SPLIT(text, ' ')) >= 0.3
+        WHERE {_duck_n_tokens()} >= 30
+          AND CAST(LEN(LIST_DISTINCT({_duck_ws_split()})) AS DOUBLE)
+                   / {_duck_n_tokens()} >= 0.3
     ),
     exact AS (
         SELECT q.* FROM qual q
         JOIN (SELECT MD5(text) AS h, MIN(doc_id) AS keep_id FROM qual GROUP BY MD5(text)) k
           ON MD5(q.text) = k.h AND q.doc_id = k.keep_id
     ),
-    tok AS (
-        SELECT doc_id,
-               UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM exact
-    ),
+    tok AS ({_duck_token_positions("doc_id", src="exact")}),
     sh AS (
         SELECT doc_id,
                tk || '_' || LEAD(tk, 1) OVER w || '_' || LEAD(tk, 2) OVER w
@@ -265,7 +265,7 @@ def corpus_survivor_stages(spark: SparkSession, sf_dir: str):
     from etl_generator_demo_spark.operators.dedup import doc_lsh_pairs
 
     docs = t(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
+    toks = ws_split()
     qual = (
         docs.select(
             "doc_id",
@@ -361,7 +361,7 @@ def x4_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(LEN(STRING_SPLIT(text, ' '))) AS BIGINT) AS total_tokens,
+           CAST(SUM({_duck_n_tokens()}) AS BIGINT) AS total_tokens,
            TRUE AS no_doc_dropped,
            TRUE AS fills_within_capacity,
            TRUE AS bins_le_2opt_plus1
@@ -384,9 +384,7 @@ def x4_pack_bins_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignments and partitioning-independence are pinned in
     tests/test_packing.py."""
     docs = t(spark, sf_dir, "documents")
-    sized = docs.select(
-        "doc_id", "source", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
-    )
+    sized = docs.select("doc_id", "source", n_tokens().cast("long").alias("n_tokens"))
     packed = pack_documents_greedy(sized)
     per_bin = packed.groupBy("source", "bin_id").agg(
         F.count(F.lit(1)).alias("bin_docs"),
@@ -491,7 +489,7 @@ CHUNK_LEN, CHUNK_STRIDE = 128, 96  # 32-token overlap
     "x4_chunk_with_overlap",
     oracle=f"""
     WITH sized AS (
-        SELECT doc_id, LEN(STRING_SPLIT(text, ' ')) AS n FROM documents
+        SELECT doc_id, {_duck_n_tokens()} AS n FROM documents
     ),
     chunks AS (
         SELECT doc_id, UNNEST(RANGE(0, n, {CHUNK_STRIDE})) AS start_tok, n
@@ -520,7 +518,7 @@ def x4_chunk_with_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage reading only [start, start+len) — planning never touches
     payload bytes."""
     d = t(spark, sf_dir, "documents")
-    sized = d.select("doc_id", F.size(F.split("text", " ")).alias("n"))
+    sized = d.select("doc_id", n_tokens().alias("n"))
     chunks = sized.select(
         "doc_id",
         "n",
@@ -547,7 +545,7 @@ def x4_chunk_with_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_pipeline_chain_sql()},
     t0 AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(LEN(STRING_SPLIT(text, ' '))) AS BIGINT) AS n_tokens
+               CAST(SUM({_duck_n_tokens()}) AS BIGINT) AS n_tokens
         FROM documents
     ),
     t1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -588,7 +586,7 @@ def x4_pipeline_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(tokens_col).cast("long").alias("n_tokens"),
         )
 
-    t0 = stage(1, "total", docs.select(F.size(F.split("text", " ")).alias("nt")), "nt")
+    t0 = stage(1, "total", docs.select(n_tokens().alias("nt")), "nt")
     t1 = stage(2, "quality_pass", qual, "n_tokens")
     t2 = stage(3, "after_exact_dedup", exact, "n_tokens")
     t3 = stage(4, "after_neardup_drop", kept, "n_tokens")
@@ -602,7 +600,7 @@ BLOCK_LEN = 16  # tokens per disjoint block for chunk-level dedup
     "x4_chunk_level_dedup",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, STRING_SPLIT(text, ' ') AS ts FROM documents
+        SELECT doc_id, {_duck_ws_split()} AS ts FROM documents
     ),
     blocks AS (
         SELECT doc_id, UNNEST(RANGE(0, LEN(ts), {BLOCK_LEN})) AS s, ts
@@ -641,7 +639,7 @@ def x4_chunk_level_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~tokens/16 rows of tiny columns, and the HAVING prunes to the
     (rare) duplicated tail before anything joins back."""
     docs = t(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
+    toks = ws_split()
     blocks = docs.select(
         "doc_id",
         toks.alias("ts"),
@@ -693,7 +691,7 @@ def _pack_sweep_oracle() -> str:
     return f"""
     WITH sized AS (
         SELECT doc_id, source,
-               CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens
+               CAST({_duck_n_tokens()} AS BIGINT) AS n_tokens
         FROM documents
     ),
     cum AS (
@@ -751,7 +749,7 @@ def x4_packing_context_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = t(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+        n_tokens().cast("long").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("source")
@@ -838,7 +836,7 @@ def _epochs_oracle() -> str:
     return f"""
     WITH supply AS (
         SELECT lang,
-               CAST(SUM(LEN(STRING_SPLIT(text, ' '))) AS BIGINT)
+               CAST(SUM({_duck_n_tokens()}) AS BIGINT)
                    AS avail_tokens,
                CAST(CASE lang {alloc} ELSE 0 END AS BIGINT) AS alloc_tokens
         FROM documents GROUP BY lang
@@ -890,7 +888,7 @@ def x4_epochs_repeat_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     supply = (
         t(spark, sf_dir, "documents")
         .groupBy("lang")
-        .agg(F.sum(F.size(F.split("text", " "))).cast("long").alias("avail_tokens"))
+        .agg(F.sum(n_tokens()).cast("long").alias("avail_tokens"))
         .withColumn("alloc_tokens", alloc.cast("long"))
     )
     return supply.withColumn(
@@ -926,8 +924,8 @@ SPAN_LEN = 3
     oracle=f"""
     WITH tok AS (
         SELECT doc_id,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) - 1 AS pos,
-               LEN(STRING_SPLIT(text, ' ')) AS n_tokens
+               GENERATE_SUBSCRIPTS({_duck_ws_split()}, 1) - 1 AS pos,
+               {_duck_n_tokens()} AS n_tokens
         FROM documents
     ),
     starts AS (
@@ -987,8 +985,8 @@ def x4_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.posexplode(F.split("text", " ")).alias("pos", "tk"),
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+        F.posexplode(ws_split()).alias("pos", "tk"),
+        n_tokens().cast("long").alias("n_tokens"),
     )
     # the first two md5 hex digits of 'span|doc|pos' as an integer
     gate = F.conv(
@@ -1024,9 +1022,7 @@ def x4_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_spans"),
         )
     )
-    nt = docs.select(
-        "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
-    )
+    nt = docs.select("doc_id", n_tokens().cast("long").alias("n_tokens"))
     return (
         nt.join(runs, "doc_id", "left")
         .select(

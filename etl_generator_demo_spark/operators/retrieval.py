@@ -35,6 +35,7 @@ from etl_generator_demo_spark.operators.similarity import (
     _duck_q0,
     query_vector,
 )
+from etl_generator_demo_spark.operators.tokens import doc_tokens
 from etl_generator_demo_spark.registry import register
 
 #: BM25 hyperparameters (the Robertson/Sparck-Jones defaults).
@@ -103,7 +104,7 @@ def bm25_collection(docs: DataFrame):
     """``(tok, dl, stats)``: the BM25 collection statistics of ``docs`` —
     one ``(doc_id, term)`` row per space-separated token, the document
     lengths ``(doc_id, dl)`` and the one-row ``(n_docs, total_len)``."""
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+    tok = doc_tokens(docs, "doc_id", tk="term")
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_len"))
     return tok, dl, stats
@@ -230,11 +231,17 @@ def x4_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits at most C({PMI_VOCAB_K},2) pairs — linear in corpus size, and
     the self-join is co-keyed on doc_id (no shuffle beyond the distinct).
     Each side of the self-join carries its term's df from the vocab
-    broadcast, and the document count N is one in-plan row."""
+    broadcast, and the document count N is one in-plan row. The
+    ``doc_id IS NOT NULL`` filter is explicit, below the distinct:
+    Spark would otherwise infer it on the pair sides only, and shuffle
+    the same ``(doc_id, term)`` relation through a second exchange for
+    the df side."""
     docs = t(spark, sf_dir, "documents")
-    dt = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    ).distinct()
+    dt = (
+        doc_tokens(docs, "doc_id", tk="term")
+        .filter(F.col("doc_id").isNotNull())
+        .distinct()
+    )
     n = dt.agg(F.count_distinct("doc_id").alias("n_docs"))
     dfreq = dt.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     vocab = dfreq.orderBy(F.desc("df"), "term").limit(PMI_VOCAB_K)
@@ -742,13 +749,7 @@ def x4_query_likelihood_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out; tf joins in where it exists. Per-term log-probs floor to
     e6 integers BEFORE the per-doc sum (order-free; the ln-floor
     discipline). Top-k compiles to TakeOrderedAndProject."""
-    docs = t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    )
-    dl = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("dl")
-    )
+    tok, dl, _ = bm25_collection(t(spark, sf_dir, "documents"))
     coll = tok.agg(F.count(F.lit(1)).cast("long").alias("total_len"))
     qterms = spark.createDataFrame(
         [(x,) for x in BM25_QUERY_TERMS], "term string"

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_generator_demo_spark.operators import tokens
 from etl_generator_demo_spark.operators.dedup import (
     corpus_candidate_pairs,
     corpus_shingles,
@@ -53,13 +54,10 @@ JACCARD_NUM = 9
 JACCARD_DEN = 10
 
 
-def doc_tokens(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Distinct (id, token) pairs — whitespace tokens, duplicates
+def doc_tokens(df: DataFrame) -> DataFrame:
+    """Distinct (doc_id, token) pairs — whitespace tokens, duplicates
     collapsed (set semantics; Jaccard is over token *sets*)."""
-    return (
-        df.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("token"))
-        .distinct()
-    )
+    return tokens.doc_tokens(df, "doc_id", tk="token").distinct()
 
 
 def token_overlap_join(
@@ -124,7 +122,7 @@ def token_overlap_join(
     # the Spark-side pruning drops no qualifying pair.
     oracle=f"""
     WITH tok AS (
-        SELECT DISTINCT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS token
+        SELECT DISTINCT doc_id, {tokens._duck_tokens("token")}
         FROM documents
     ),{_duck_overlap("tok", "token")}
     SELECT doc_a, doc_b,

@@ -37,6 +37,7 @@ from .retrieval import (
     x4_bm25_topk,
 )
 from .skew import BLOOM_HASHES
+from .tokens import _duck_token_counts, _duck_tokens, doc_tokens, n_tokens, token_counts
 
 
 # ---------------------------------------------------------------------------
@@ -116,9 +117,8 @@ def rank_frequency(docs: DataFrame, top_n: int) -> DataFrame:
     (``orderBy().limit()``, a per-partition top-N), so the ranking
     window sees at most ``top_n`` rows, never the vocabulary."""
     freq = (
-        docs.select(F.explode(F.split("text", " ")).alias("tk"))
-        .groupBy("tk")
-        .agg(F.count(F.lit(1)).cast("long").alias("f"))
+        token_counts(docs)
+        .withColumnRenamed("n", "f")
         .orderBy(F.desc("f"), "tk")
         .limit(top_n)
     )
@@ -301,11 +301,7 @@ ZIPF_TOP_TERMS = 1000
 @register(
     "x4_zipf_slope",
     oracle=f"""
-    WITH freq AS (
-        SELECT tk, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM documents)
-        GROUP BY tk
-    ),
+    WITH freq AS (SELECT tk, n AS f FROM ({_duck_token_counts()})),
     ranked AS (
         SELECT f, ROW_NUMBER() OVER (ORDER BY f DESC, tk) AS rnk FROM freq
     ),
@@ -374,12 +370,8 @@ def _int_slope() -> Column:
 @register(
     "x4_zipf_alpha_fit",
     oracle=f"""
-    WITH tok AS (
-        SELECT UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM documents
-    ),
-    freq AS (
-        SELECT tk, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM tok GROUP BY tk
+    WITH freq AS (
+        SELECT tk, n AS cnt FROM ({_duck_token_counts()})
         ORDER BY cnt DESC, tk
         LIMIT {ZIPF_TOP_N}
     ),
@@ -441,10 +433,10 @@ def x4_zipf_alpha_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_heaps_law_fit",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
         SELECT doc_id,
-               UNNEST(STRING_SPLIT(text, ' ')) AS tk
+               {_duck_tokens()}
         FROM documents
     ),
     nt AS (
@@ -506,9 +498,7 @@ def x4_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside int64 where e6 would overflow); the fit is then exact
     integer math truncating identically in both engines."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tk")
-    )
+    tok = doc_tokens(docs, "doc_id")
     nt = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("ntok")
     )
@@ -727,7 +717,7 @@ def x4_kendall_tau_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         docs.select(
             (F.col("n_chars") / 200).cast("long").alias("x"),
-            (F.size(F.split("text", " ")) / 5).cast("long").alias("y"),
+            (n_tokens() / 5).cast("long").alias("y"),
         )
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -995,13 +985,9 @@ def x4_labeler_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_entropy_per_source",
-    oracle="""
-    WITH tok AS (
-        SELECT source, UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM documents
-    ),
-    cnt AS (
-        SELECT source, tk, CAST(COUNT(*) AS BIGINT) AS c
-        FROM tok GROUP BY source, tk
+    oracle=f"""
+    WITH cnt AS (
+        SELECT source, tk, n AS c FROM ({_duck_token_counts("source")})
     ),
     nn AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n FROM cnt GROUP BY source),
     lp AS (
@@ -1030,10 +1016,7 @@ def x4_entropy_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-combined rollups keyed on source — linear, |sources|-bounded
     output."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select("source", F.explode(F.split("text", " ")).alias("tk"))
-    cnt = tok.groupBy("source", "tk").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
+    cnt = token_counts(docs, "source").withColumnRenamed("n", "c")
     nn = cnt.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
     lp = cnt.join(nn, "source").select(
         "source",
@@ -2396,7 +2379,7 @@ def _ndcg_oracle() -> str:
     terms = ", ".join(f"'{x}'" for x in BM25_QUERY_TERMS)
     return f"""
     WITH tok AS (
-        SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS term FROM documents
+        SELECT doc_id, {_duck_tokens("term")} FROM documents
     ),
     rel AS (
         SELECT doc_id,
@@ -2482,7 +2465,7 @@ def x4_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderBy().limit(NDCG_K) (TakeOrderedAndProject) before its window,
     never a corpus-sized window through one task."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+    tok = doc_tokens(docs, "doc_id", tk="term")
     rel = (
         tok.filter(F.col("term").isin(*BM25_QUERY_TERMS))
         .groupBy("doc_id")

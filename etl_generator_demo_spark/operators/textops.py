@@ -19,13 +19,28 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.operators.analytics_ext import global_row_number
-from etl_generator_demo_spark.operators.dedup import doc_shingles
+from etl_generator_demo_spark.operators.dedup import _DUCK_SHINGLES, doc_shingles
 from etl_generator_demo_spark.operators.ngram_lm import (
     _DUCK_LM_QUALITY,
     _duck_bigrams,
     x4_bigram_lm_quality,
 )
 from etl_generator_demo_spark.operators.relational import t
+from etl_generator_demo_spark.operators.tokens import (
+    KGRAM_K,
+    _DUCK_KGRAMS,
+    _duck_n_tokens,
+    _duck_re_split,
+    _duck_token_counts,
+    _duck_tokens,
+    _duck_ws_split,
+    doc_tokens,
+    kgram_hashes,
+    n_tokens,
+    re_split,
+    token_counts,
+    ws_split,
+)
 from etl_generator_demo_spark.registry import register
 from etl_generator_demo_spark.session import checkpoint_with
 
@@ -43,14 +58,9 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 STOPWORDS_EN = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 
-def _tokens(text_col: str | Column) -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.split(c, r"\s+")
-
-
 def lang_score_expr(text_col: str, lang: str) -> Column:
     """Count of profile stopwords present in the text's token set."""
-    toks = F.array_distinct(_tokens(F.lower(F.col(text_col))))
+    toks = F.array_distinct(re_split(F.lower(F.col(text_col))))
     profile = F.array(*[F.lit(w) for w in LANG_PROFILES[lang]])
     return F.size(F.array_intersect(toks, profile))
 
@@ -72,7 +82,7 @@ def quality_score_expr(text_col: str) -> Column:
     """Heuristic quality in [0,1]: rewards moderate length, vocabulary
     diversity, and a sane stopword rate — the standard cheap pre-filter
     before expensive pipeline stages (C4/Gopher-style rules)."""
-    toks = _tokens(text_col)
+    toks = re_split(text_col)
     n = F.size(toks)
     diversity = F.size(F.array_distinct(toks)) / F.greatest(n, F.lit(1))
     stop = F.array(*[F.lit(w) for w in STOPWORDS_EN])
@@ -85,19 +95,30 @@ def quality_score_expr(text_col: str) -> Column:
     return F.floor((diversity + stop_ratio + len_score) / 3 * 10000) / 10000
 
 
+def _duck_quality_score(toks: str) -> str:
+    """Twin of :func:`quality_score_expr` over the token list ``toks``."""
+    stop_list = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
+    return f"""FLOOR((
+               CAST(LEN(LIST_DISTINCT({toks})) AS DOUBLE) / GREATEST(LEN({toks}), 1)
+             + CAST(LEN(LIST_INTERSECT(LIST_DISTINCT({toks}), [{stop_list}])) AS DOUBLE)
+               / {float(len(STOPWORDS_EN))}
+             + LEAST(LEN({toks}) / 100.0, 1.0)
+           ) / 3 * 10000) / 10000"""
+
+
 # ===========================================================================
 # Driver-checkable queries
 # ===========================================================================
 
 @register(
     "x4_text_stats",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT)                 AS n_tokens,
-           CAST(LEN(LIST_DISTINCT(STRING_SPLIT(text, ' '))) AS BIGINT)  AS n_distinct_tokens,
+           CAST({_duck_n_tokens()} AS BIGINT)                 AS n_tokens,
+           CAST(LEN(LIST_DISTINCT({_duck_ws_split()})) AS BIGINT)  AS n_distinct_tokens,
            CAST(LENGTH(text) AS BIGINT)                                 AS n_chars,
-           FLOOR(CAST(LEN(LIST_DISTINCT(STRING_SPLIT(text, ' '))) AS DOUBLE)
-                 / LEN(STRING_SPLIT(text, ' ')) * 10000) / 10000        AS diversity
+           FLOOR(CAST(LEN(LIST_DISTINCT({_duck_ws_split()})) AS DOUBLE)
+                 / {_duck_n_tokens()} * 10000) / 10000        AS diversity
     FROM documents
     ORDER BY doc_id
     """,
@@ -106,7 +127,7 @@ def quality_score_expr(text_col: str) -> Column:
 def x4_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token statistics (whitespace tokenization)."""
     docs = t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = ws_split()
     n_tokens = F.size(toks).cast("long")
     n_distinct = F.size(F.array_distinct(toks)).cast("long")
     return docs.select(
@@ -120,9 +141,9 @@ def x4_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_token_estimates",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT)                    AS ws_tokens,
+           CAST({_duck_n_tokens()} AS BIGINT)                    AS ws_tokens,
            CAST(LEN(REGEXP_EXTRACT_ALL(text, '[a-z0-9]+')) AS BIGINT)      AS word_tokens,
            CAST(CEIL(LENGTH(text) / 4.0) AS BIGINT)                        AS bpe_estimate
     FROM documents
@@ -137,7 +158,7 @@ def x4_token_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return docs.select(
         "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("ws_tokens"),
+        n_tokens().cast("long").alias("ws_tokens"),
         F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), 0))
         .cast("long")
         .alias("word_tokens"),
@@ -174,22 +195,11 @@ def x4_lang_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_fingerprints",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id,
-               UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id,
-               tk || '_' || LEAD(tk, 1) OVER w || '_' || LEAD(tk, 2) OVER w
-                  || '_' || LEAD(tk, 3) OVER w || '_' || LEAD(tk, 4) OVER w AS shingle
-        FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-    ),
+    oracle=f"""
+    {_DUCK_SHINGLES},
     winnow AS (
         SELECT doc_id, MIN(MD5(shingle)) AS min_shingle_fp
-        FROM sh WHERE shingle IS NOT NULL GROUP BY doc_id
+        FROM shingles GROUP BY doc_id
     )
     SELECT d.doc_id,
            MD5(d.text) AS content_fp,
@@ -295,11 +305,9 @@ def _quality_and_lang_oracle() -> str:
     heuristics are deterministic built-in-function arithmetic, so the
     oracle recomputes them exactly (list ops + IEEE doubles agree
     bit-for-bit when the expression shape matches)."""
-    stop_list = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
     score = {
         lang: (
-            "LEN(LIST_INTERSECT(LIST_DISTINCT(REGEXP_SPLIT_TO_ARRAY(LOWER(text),"
-            " '\\s+')), ["
+            f"LEN(LIST_INTERSECT(LIST_DISTINCT({_duck_re_split('LOWER(text)')}), ["
             + ", ".join(f"'{w}'" for w in words)
             + "]))"
         )
@@ -311,16 +319,11 @@ def _quality_and_lang_oracle() -> str:
     )
     return f"""
     WITH toks AS (
-        SELECT doc_id, text, REGEXP_SPLIT_TO_ARRAY(text, '\\s+') AS tk
+        SELECT doc_id, text, {_duck_re_split()} AS tk
         FROM documents
     )
     SELECT doc_id,
-           FLOOR((
-               CAST(LEN(LIST_DISTINCT(tk)) AS DOUBLE) / GREATEST(LEN(tk), 1)
-             + CAST(LEN(LIST_INTERSECT(LIST_DISTINCT(tk), [{stop_list}])) AS DOUBLE)
-               / {float(len(STOPWORDS_EN))}
-             + LEAST(LEN(tk) / 100.0, 1.0)
-           ) / 3 * 10000) / 10000 AS quality,
+           {_duck_quality_score("tk")} AS quality,
            CASE WHEN {best} = 0 THEN 'und' {lang_case} ELSE 'und' END
                AS predicted_lang
     FROM toks
@@ -423,7 +426,7 @@ def x4_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + two-level groupBy is the distributed shape — per-doc
     partial counts combine map-side, nothing is ever all-pairs."""
     docs = t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = ws_split()
     bigrams = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -452,9 +455,9 @@ def x4_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_tfidf_top_terms",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-        SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS term
+        SELECT doc_id, {_duck_tokens("term")}
         FROM documents
     ),
     tf AS (
@@ -486,22 +489,24 @@ def x4_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x4_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document. Distributed shape: term
-    frequencies and document frequencies are two groupBys with
-    map-side combine; the document-count scalar broadcasts; ranking is
-    one window shuffle on doc_id. Scores are floor-scaled to 1e-6 and
-    ranked on the SCALED value (term as tiebreak) so both engines rank
-    identical keys despite summation-order float wobble."""
-    from pyspark.sql import Window
-
+    frequencies are one groupBy with map-side combine, and document
+    frequencies roll up from them as the documents with tf > 0 (no
+    distinct aggregate; reading ``tf`` keeps both branches on one
+    exchange); the document
+    count N is one in-plan row, broadcast; ranking is one window
+    shuffle on doc_id. Scores are
+    floor-scaled to 1e-6 and ranked on the SCALED value (term as
+    tiebreak) so both engines rank identical keys despite
+    summation-order float wobble."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+    tok = doc_tokens(docs, "doc_id", tk="term")
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = tok.groupBy("term").agg(F.count_distinct("doc_id").alias("df"))
-    n_docs = docs.count()  # scalar: one job, broadcast as a literal
-    scored = tf.join(dfreq, "term").select(
+    dfreq = tf.groupBy("term").agg(F.count_if(F.col("tf") > 0).alias("df"))
+    n = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
+    scored = tf.join(dfreq, "term").crossJoin(F.broadcast(n)).select(
         "doc_id",
         "term",
-        (F.floor(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")) * 1e6) / 1e6).alias(
+        (F.floor(F.col("tf") * F.log(F.col("n_docs") / F.col("df")) * 1e6) / 1e6).alias(
             "tfidf"
         ),
     )
@@ -566,10 +571,9 @@ def x4_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_heavy_hitter_tokens",
-    oracle="""
-    SELECT tk AS token, COUNT(*) AS n
-    FROM (SELECT UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM documents)
-    GROUP BY tk
+    oracle=f"""
+    SELECT tk AS token, n
+    FROM ({_duck_token_counts()})
     ORDER BY n DESC, token
     LIMIT 20
     """,
@@ -583,9 +587,7 @@ def x4_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle to the vocabulary size, not the corpus."""
     docs = t(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
+        token_counts(docs, tk="token")
         .orderBy(F.desc("n"), "token")
         .limit(20)
     )
@@ -628,12 +630,12 @@ def x4_balanced_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_token_length_histogram",
-    oracle="""
-    SELECT CAST(FLOOR(LEN(STRING_SPLIT(text, ' ')) / 25) AS BIGINT) AS bin,
-           CAST(FLOOR(LEN(STRING_SPLIT(text, ' ')) / 25) AS BIGINT) * 25 AS bin_lo,
+    oracle=f"""
+    SELECT CAST(FLOOR({_duck_n_tokens()} / 25) AS BIGINT) AS bin,
+           CAST(FLOOR({_duck_n_tokens()} / 25) AS BIGINT) * 25 AS bin_lo,
            COUNT(*) AS n_docs,
-           MIN(CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT)) AS min_tokens,
-           MAX(CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT)) AS max_tokens
+           MIN(CAST({_duck_n_tokens()} AS BIGINT)) AS min_tokens,
+           MAX(CAST({_duck_n_tokens()} AS BIGINT)) AS max_tokens
     FROM documents
     GROUP BY 1, 2
     ORDER BY bin
@@ -646,7 +648,7 @@ def x4_token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-width binning needs no global min/max pass, so the whole
     histogram is ONE map-combined groupBy over the scan."""
     docs = t(spark, sf_dir, "documents")
-    n = F.size(F.split("text", " ")).cast("long")
+    n = n_tokens().cast("long")
     bin_col = F.floor(n / 25).cast("long")
     return (
         docs.select(n.alias("n_tokens"), bin_col.alias("bin"))
@@ -663,28 +665,17 @@ def x4_token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-WINNOW_K, WINNOW_W = 5, 4  # k-gram size, winnowing window
+WINNOW_K, WINNOW_W = KGRAM_K, 4  # k-gram size, winnowing window
 
 
 @register(
     "x4_winnowing_fingerprints",
     oracle=f"""
-    WITH tok AS (
-        SELECT doc_id,
-               UNNEST(STRING_SPLIT(text, ' ')) AS tk,
-               GENERATE_SUBSCRIPTS(STRING_SPLIT(text, ' '), 1) AS pos
-        FROM documents
-    ),
-    kg AS (
-        SELECT doc_id, pos,
-               MD5(tk || '_' || LEAD(tk, 1) OVER w || '_' || LEAD(tk, 2) OVER w
-                   || '_' || LEAD(tk, 3) OVER w || '_' || LEAD(tk, 4) OVER w) AS h
-        FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-    ),
+    WITH {_DUCK_KGRAMS},
     hashes AS (
         SELECT doc_id, pos, h,
                COUNT(*) OVER (PARTITION BY doc_id) AS n_kgrams
-        FROM kg WHERE h IS NOT NULL
+        FROM kg
     ),
     wins AS (
         SELECT doc_id,
@@ -718,20 +709,7 @@ def x4_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def winnowing_fingerprints(d: DataFrame) -> DataFrame:
     """Library form over any (doc_id, text) relation: the distinct
     winnowing-selected (doc_id, fp) fingerprint set."""
-    from pyspark.sql import Window
-
-    tok = d.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tk"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    kgram = F.concat_ws(
-        "_", F.col("tk"), *[F.lead("tk", i).over(w) for i in range(1, WINNOW_K)]
-    )
-    # concat_ws skips NULLs, so tail positions would yield short grams:
-    # gate on the furthest lead instead
-    kg = tok.select(
-        "doc_id",
-        "pos",
-        F.when(F.lead("tk", WINNOW_K - 1).over(w).isNotNull(), F.md5(kgram)).alias("h"),
-    ).filter(F.col("h").isNotNull())
+    kg = kgram_hashes(d)
     n = Window.partitionBy("doc_id")
     win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WINNOW_W - 1)
     wins = kg.select(
@@ -818,7 +796,7 @@ CMS_WIDTH_HEX = 2  # bucket id = first 2 md5 hex chars -> 256 buckets
     "x4_heavy_hitters_cms",
     oracle=f"""
     WITH tok AS (
-        SELECT UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM documents
+        SELECT {_duck_tokens()} FROM documents
     ),
     rb AS (
         SELECT tk, r.r AS r,
@@ -867,7 +845,7 @@ def x4_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the verdict needs ground truth (same pattern as the ANN
     recall verdicts)."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(F.split("text", " ")).alias("tk"))
+    tok = doc_tokens(docs)
 
     def bucket(r, col):
         return F.substring(
@@ -923,10 +901,10 @@ def x4_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_vocab_growth",
-    oracle="""
+    oracle=f"""
     WITH firsts AS (
         SELECT tk, MIN(doc_id) AS first_doc
-        FROM (SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM documents)
+        FROM (SELECT doc_id, {_duck_tokens()} FROM documents)
         GROUP BY tk
     ),
     b AS (
@@ -951,11 +929,9 @@ def x4_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences are one map-combined groupBy (vocabulary-sized
     output); the cumulative sum is a window over the bucket relation
     only."""
-    from pyspark.sql import Window
-
     docs = t(spark, sf_dir, "documents")
     firsts = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("tk"))
+        doc_tokens(docs, "doc_id")
         .groupBy("tk")
         .agg(F.min("doc_id").alias("first_doc"))
     )
@@ -1099,9 +1075,6 @@ def x4_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from etl_generator_demo_spark.operators.dedup import _DUCK_SHINGLES
-
-
 @register(
     "x4_shingle_novelty",
     oracle=f"""
@@ -1163,7 +1136,7 @@ SEQLEN_KEEP_NUM, SEQLEN_KEEP_DEN = 99, 100  # keep >= 99% of token mass
     "x4_seqlen_cap_selection",
     oracle=f"""
     WITH lens AS (
-        SELECT doc_id, CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens
+        SELECT doc_id, CAST({_duck_n_tokens()} AS BIGINT) AS n_tokens
         FROM documents
     ),
     total AS (SELECT SUM(n_tokens) AS tot FROM lens),
@@ -1203,9 +1176,7 @@ def x4_seqlen_cap_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     as in the oracle."""
     from .stats import denom
 
-    lens = t(spark, sf_dir, "documents").select(
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens")
-    )
+    lens = t(spark, sf_dir, "documents").select(n_tokens().cast("long").alias("n_tokens"))
     n = F.col("n_tokens")
     one = lens.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1450,7 +1421,7 @@ DSIR_MIX_BUDGET = 1500  # tokens per language
     WITH {_DSIR_CTES},
     sized AS (
         SELECT d.doc_id, d.lang,
-               CAST(LEN(STRING_SPLIT(d.text, ' ')) AS BIGINT) AS n_tokens,
+               CAST({_duck_n_tokens("d.text")} AS BIGINT) AS n_tokens,
                i.importance_e6
         FROM documents d JOIN imp i ON i.doc_id = d.doc_id
     ),
@@ -1486,7 +1457,7 @@ def x4_dsir_resampled_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents")
     sized = docs.select(
-        "doc_id", "lang", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
+        "doc_id", "lang", n_tokens().cast("long").alias("n_tokens")
     ).join(dsir_importance_rel(spark, sf_dir).select("doc_id", "importance_e6"), "doc_id")
     w = (
         W.partitionBy("lang")
@@ -1505,12 +1476,12 @@ def x4_dsir_resampled_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_corpus_report_card",
-    oracle=r"""
+    oracle=fr"""
     WITH base AS (
         SELECT doc_id, text, lang,
-               CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens,
+               CAST({_duck_n_tokens()} AS BIGINT) AS n_tokens,
                LEN(REGEXP_EXTRACT_ALL(text,
-                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) > 0
+                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{{2,}}')) > 0
                    AS has_email
         FROM documents
     ),
@@ -1558,7 +1529,7 @@ def x4_corpus_report_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "text",
             "lang",
-            F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+            n_tokens().cast("long").alias("n_tokens"),
             (F.regexp_count("text", F.lit(PII_PATTERNS["email"])) > 0).alias("has_email"),
         ),
         F.count(F.lit(1)),
@@ -1702,19 +1673,10 @@ def x4_chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Quantile normalization — align per-source score distributions
 # ---------------------------------------------------------------------------
 def _quantile_normalize_oracle() -> str:
-    stop_list = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
     return f"""
     WITH scored AS (
         SELECT doc_id, source,
-               FLOOR((
-                   CAST(LEN(LIST_DISTINCT(REGEXP_SPLIT_TO_ARRAY(text, '\\s+')))
-                        AS DOUBLE)
-                   / GREATEST(LEN(REGEXP_SPLIT_TO_ARRAY(text, '\\s+')), 1)
-                 + CAST(LEN(LIST_INTERSECT(
-                       LIST_DISTINCT(REGEXP_SPLIT_TO_ARRAY(text, '\\s+')),
-                       [{stop_list}])) AS DOUBLE) / {float(len(STOPWORDS_EN))}
-                 + LEAST(LEN(REGEXP_SPLIT_TO_ARRAY(text, '\\s+')) / 100.0, 1.0)
-               ) / 3 * 10000) / 10000 AS q
+               {_duck_quality_score(_duck_re_split())} AS q
         FROM documents
     ),
     ranked AS (
@@ -1808,19 +1770,10 @@ def x4_quantile_normalize_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Two-sample Kolmogorov–Smirnov — continuous distribution drift
 # ---------------------------------------------------------------------------
 def _ks_oracle() -> str:
-    stop_list = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
     return f"""
     WITH scored AS (
         SELECT source,
-               FLOOR((
-                   CAST(LEN(LIST_DISTINCT(REGEXP_SPLIT_TO_ARRAY(text, '\\s+')))
-                        AS DOUBLE)
-                   / GREATEST(LEN(REGEXP_SPLIT_TO_ARRAY(text, '\\s+')), 1)
-                 + CAST(LEN(LIST_INTERSECT(
-                       LIST_DISTINCT(REGEXP_SPLIT_TO_ARRAY(text, '\\s+')),
-                       [{stop_list}])) AS DOUBLE) / {float(len(STOPWORDS_EN))}
-                 + LEAST(LEN(REGEXP_SPLIT_TO_ARRAY(text, '\\s+')) / 100.0, 1.0)
-               ) / 3 * 10000) / 10000 AS q
+               {_duck_quality_score(_duck_re_split())} AS q
         FROM documents WHERE source IN ('src0', 'src1')
     ),
     grid AS (
@@ -1922,13 +1875,8 @@ def x4_ks_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_token_simpson_diversity",
-    oracle="""
-    WITH c AS (
-        SELECT source, tk, CAST(COUNT(*) AS BIGINT) AS n
-        FROM (SELECT source, UNNEST(STRING_SPLIT(text, ' ')) AS tk
-              FROM documents)
-        GROUP BY source, tk
-    )
+    oracle=f"""
+    WITH c AS ({_duck_token_counts("source")})
     SELECT source,
            CAST(SUM(n) AS BIGINT) AS n_tokens,
            CAST(COUNT(*) AS BIGINT) AS vocab,
@@ -1954,11 +1902,7 @@ def x4_token_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary size, not corpus size. (At 100-TB token counts Σn(n−1)
     wants DECIMAL(38,0); identical plan.)"""
     docs = t(spark, sf_dir, "documents")
-    c = (
-        docs.select("source", F.explode(F.split("text", " ")).alias("tk"))
-        .groupBy("source", "tk")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
+    c = token_counts(docs, "source")
     s = c.groupBy("source").agg(
         F.sum("n").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("vocab"),
@@ -1976,13 +1920,8 @@ def x4_token_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_type_token_ratio",
-    oracle="""
-    WITH c AS (
-        SELECT source, tk, CAST(COUNT(*) AS BIGINT) AS n
-        FROM (SELECT source, UNNEST(STRING_SPLIT(text, ' ')) AS tk
-              FROM documents)
-        GROUP BY source, tk
-    )
+    oracle=f"""
+    WITH c AS ({_duck_token_counts("source")})
     SELECT source,
            CAST(SUM(n) AS BIGINT) AS n_tokens,
            CAST(COUNT(*) AS BIGINT) AS vocab,
@@ -2009,11 +1948,7 @@ def x4_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     index (the two stay separate queries because curation pipelines
     gate on them independently)."""
     docs = t(spark, sf_dir, "documents")
-    c = (
-        docs.select("source", F.explode(F.split("text", " ")).alias("tk"))
-        .groupBy("source", "tk")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
+    c = token_counts(docs, "source")
     s = c.groupBy("source").agg(
         F.sum("n").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("vocab"),
@@ -2031,12 +1966,8 @@ def x4_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_ngram_coverage_topk",
-    oracle="""
-    WITH c AS (
-        SELECT tk, CAST(COUNT(*) AS BIGINT) AS n
-        FROM (SELECT UNNEST(STRING_SPLIT(text, ' ')) AS tk FROM documents)
-        GROUP BY tk
-    ),
+    oracle=f"""
+    WITH c AS ({_duck_token_counts()}),
     r AS (
         SELECT n,
                ROW_NUMBER() OVER (ORDER BY n DESC, tk) AS rn,
@@ -2072,11 +2003,7 @@ def x4_ngram_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = t(spark, sf_dir, "documents")
-    c = (
-        docs.select(F.explode(F.split("text", " ")).alias("tk"))
-        .groupBy("tk")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
+    c = token_counts(docs)
     ranked, _n = global_row_number(
         c, [F.col("n").desc(), F.col("tk").asc()], rn_col="rn"
     )
@@ -2098,13 +2025,8 @@ def x4_ngram_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_shannon_entropy_lang",
-    oracle="""
-    WITH c AS (
-        SELECT lang, tk, CAST(COUNT(*) AS BIGINT) AS n
-        FROM (SELECT lang, UNNEST(STRING_SPLIT(text, ' ')) AS tk
-              FROM documents)
-        GROUP BY lang, tk
-    ),
+    oracle=f"""
+    WITH c AS ({_duck_token_counts("lang")}),
     s AS (
         SELECT lang,
                CAST(SUM(n) AS BIGINT) AS tot,
@@ -2135,11 +2057,7 @@ def x4_shannon_entropy_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same vocabulary-bounded two-level aggregate as the diversity
     suite."""
     docs = t(spark, sf_dir, "documents")
-    c = (
-        docs.select("lang", F.explode(F.split("text", " ")).alias("tk"))
-        .groupBy("lang", "tk")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
+    c = token_counts(docs, "lang")
     s = c.groupBy("lang").agg(
         F.sum("n").cast("long").alias("tot"),
         F.count(F.lit(1)).cast("long").alias("vocab"),
@@ -2171,13 +2089,23 @@ def x4_shannon_entropy_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
+#: Twin of :func:`_stop_hits`.
+_DUCK_STOP_HITS = (
+    f"CAST(COUNT(DISTINCT CASE WHEN LOWER(w) IN ({_STOP_SQL}) THEN LOWER(w) END) AS BIGINT)"
+)
+
+
+def _stop_hits() -> Column:
+    """Distinct stopwords among a document's ``w`` tokens."""
+    stop = [w.lower() for w in STOPWORDS_EN]
+    return F.count_distinct(F.when(F.lower("w").isin(stop), F.lower("w"))).cast("long")
 
 
 @register(
     "x4_gopher_quality_rules",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS w FROM documents
+        SELECT doc_id, {_duck_tokens("w")} FROM documents
     ),
     agg AS (
         SELECT doc_id,
@@ -2186,9 +2114,7 @@ _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
                     AS BIGINT) AS wchars,
                CAST(COUNT(*) FILTER (WHERE REGEXP_MATCHES(w, '^[A-Za-z]+$'))
                     AS BIGINT) AS alpha_words,
-               CAST(COUNT(DISTINCT CASE WHEN LOWER(w) IN ({_STOP_SQL})
-                                        THEN LOWER(w) END) AS BIGINT)
-                   AS stop_hits
+               {_DUCK_STOP_HITS} AS stop_hits
         FROM tok GROUP BY doc_id
     ),
     per_doc AS (
@@ -2242,10 +2168,7 @@ def x4_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose token list is empty survive via the LEFT JOIN back to the
     corpus (words=0 fails r1/r2/r3 by definition, not by absence)."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    )
-    stop = [w.lower() for w in STOPWORDS_EN]
+    tok = doc_tokens(docs, "doc_id", tk="w")
     agg = tok.groupBy("doc_id").agg(
         F.count(F.when(F.col("w") != "", 1)).cast("long").alias("words"),
         F.coalesce(
@@ -2256,11 +2179,7 @@ def x4_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("w").rlike("^[A-Za-z]+$"), 1))
         .cast("long")
         .alias("alpha_words"),
-        F.count_distinct(
-            F.when(F.lower("w").isin(stop), F.lower("w"))
-        )
-        .cast("long")
-        .alias("stop_hits"),
+        _stop_hits().alias("stop_hits"),
     )
     per_doc = (
         docs.join(agg, "doc_id", "left")
@@ -2470,12 +2389,11 @@ N_SHARDS = 8
     "x4_curriculum_shards",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS w FROM documents
+        SELECT doc_id, {_duck_tokens("w")} FROM documents
     ),
     tier AS (
         SELECT doc_id,
-               CAST(COUNT(DISTINCT CASE WHEN LOWER(w) IN ({_STOP_SQL})
-                                        THEN LOWER(w) END) AS BIGINT) AS tier
+               {_DUCK_STOP_HITS} AS tier
         FROM tok GROUP BY doc_id
     ),
     ordered AS (
@@ -2511,13 +2429,8 @@ def x4_curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     window; everything after is one map-combined rollup over
     N_SHARDS keys."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-    stop = [w.lower() for w in STOPWORDS_EN]
-    tier = tok.groupBy("doc_id").agg(
-        F.count_distinct(F.when(F.lower("w").isin(stop), F.lower("w")))
-        .cast("long")
-        .alias("tier")
-    )
+    tok = doc_tokens(docs, "doc_id", tk="w")
+    tier = tok.groupBy("doc_id").agg(_stop_hits().alias("tier"))
     base = docs.join(tier, "doc_id", "left").select(
         "doc_id",
         "lang",

@@ -57,6 +57,7 @@ from pyspark.sql.window import Window
 from ..registry import register
 from .bpe import corpus_words, vocabulary
 from .relational import t
+from .tokens import _duck_tokens
 
 #: Max word length admitted to training (SentencePiece's
 #: max_sentencepiece_length analogue, applied to words). Fixture
@@ -159,7 +160,7 @@ def _uni_training_ctes() -> str:
     forward/backward DP + counts (cnt1..cntN, vocab1..vocabN)."""
     body = [f"""
     WITH wtok AS (
-        SELECT UNNEST(STRING_SPLIT(text, ' ')) AS word FROM documents
+        SELECT {_duck_tokens("word")} FROM documents
     ),
     words AS MATERIALIZED (
         SELECT word, CAST(COUNT(*) AS BIGINT) AS wcount,
@@ -264,7 +265,7 @@ def _unigram_encode_oracle() -> str:
     ),
     swords AS (
         SELECT source, word, CAST(COUNT(*) AS BIGINT) AS wc FROM (
-            SELECT source, UNNEST(STRING_SPLIT(text, ' ')) AS word
+            SELECT source, {_duck_tokens("word")}
             FROM documents
         ) WHERE word <> '' GROUP BY source, word
     ),

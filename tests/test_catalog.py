@@ -33,3 +33,32 @@ def test_schema_memo_serves_and_invalidates(spark, tmp_path):
     c = read_parquet_known(spark, p)
     assert dict(c.dtypes)["v"] == "string" and "extra" in c.columns
     assert c.count() == 3
+
+
+def test_front_door_shares_the_callers_metadata_walk(spark, sf_dir, monkeypatch):
+    """The caller's ``metadata_document()`` and the front door's first
+    ``metadata_endpoint`` walk the table schemas once between them: the
+    front door's catalog copy shares the caller's document, and an
+    invalidation on either side drops it for both."""
+    from collections import Counter
+
+    from etl_generator_demo_spark.api import AppState, metadata_endpoint
+    from etl_generator_demo_spark.catalog import TABLES, Catalog
+
+    catalog = Catalog(spark, sf_dir)
+    state = AppState(spark, catalog)  # registers the front door's views
+    calls: Counter[str] = Counter()
+    table = Catalog.table
+
+    def counting(self, name):
+        calls[name] += 1
+        return table(self, name)
+
+    monkeypatch.setattr(Catalog, "table", counting)
+    doc = catalog.metadata_document()
+    assert metadata_endpoint(state) is doc
+    assert calls == Counter({name: 1 for name in TABLES})
+
+    state.catalog.invalidate()
+    assert catalog.metadata_document() is not doc
+    assert metadata_endpoint(state) is catalog.metadata_document()

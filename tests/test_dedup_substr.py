@@ -16,12 +16,12 @@ from etl_generator_demo_spark.operators.dedup_substr import (
     SPAN_K,
     SPAN_T,
     _coverage,
-    _kgrams,
     x2_duplicated_token_fraction,
     x2_exact_substr_corpus_rate,
     x2_exact_substr_spans,
 )
 from etl_generator_demo_spark.operators.textops import winnowing_fingerprints
+from etl_generator_demo_spark.operators.tokens import kgram_hashes
 
 
 def _docs(spark, rows):
@@ -151,14 +151,14 @@ class TestCoverage:
 class TestKgramRelation:
     def test_full_grams_only(self, spark):
         d = _docs(spark, [(0, _words("t", SPAN_K + 2))])
-        kg = _kgrams(d).collect()
+        kg = kgram_hashes(d).collect()
         # n - K + 1 full K-grams, 0-based start positions
         assert sorted(r.pos for r in kg) == [0, 1, 2]
         assert all(len(r.h) == 32 for r in kg)
 
     def test_short_doc_yields_no_grams(self, spark):
         d = _docs(spark, [(0, _words("t", SPAN_K - 1))])
-        assert _kgrams(d).count() == 0
+        assert kgram_hashes(d).count() == 0
 
 
 def _write_documents(spark, path, rows):

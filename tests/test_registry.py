@@ -391,6 +391,58 @@ def test_driver_built_sql_text_only_shrinks():
     assert n <= SQL_TEXT_FSTRING_CALLS, n
 
 
+#: Token spellings kept outside ``operators/tokens.py``: (module, top-level
+#: name) -> why it keeps its own spelling. Empty: every whitespace split
+#: of a text column, and every ``STRING_SPLIT`` / ``REGEXP_SPLIT_TO_ARRAY``
+#: over ``text`` in oracle SQL, goes through the kernels and their twins.
+#: The set may only shrink, like ``SQL_TEXT_FSTRING_CALLS``.
+TOKENIZATION_SPELLED_ELSEWHERE: dict[tuple[str, str], str] = {}
+
+
+def test_tokenization_spelled_once():
+    """What counts as a token is decided in one module: outside
+    ``operators/tokens.py`` no package source calls ``F.split`` on a
+    whitespace separator (``" "`` or ``\\s+``) or spells
+    ``STRING_SPLIT`` / ``REGEXP_SPLIT_TO_ARRAY`` over a ``text``
+    column, except the named sites above."""
+    import ast
+    import glob
+    import re
+
+    sql_split = re.compile(r"(STRING_SPLIT|REGEXP_SPLIT_TO_ARRAY)\(\s*(LOWER\()?(\w+\.)?text\b")
+    pkg = os.path.join(ROOT, "etl_generator_demo_spark")
+    kernel = os.path.join(pkg, "operators", "tokens.py")
+
+    def spells_split(node: ast.AST) -> bool:
+        if isinstance(node, ast.Call) and len(node.args) == 2:
+            f, sep = node.func, node.args[1]
+            return (
+                isinstance(f, ast.Attribute)
+                and f.attr == "split"
+                and isinstance(f.value, ast.Name)
+                and f.value.id == "F"
+                and isinstance(sep, ast.Constant)
+                and sep.value in (" ", r"\s+")
+            )
+        return isinstance(node, ast.Constant) and isinstance(node.value, str) and bool(
+            sql_split.search(node.value)
+        )
+
+    sites = set()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if path == kernel:
+            continue
+        tree = ast.parse(open(path, encoding="utf-8").read())
+        for top in tree.body:
+            if any(spells_split(node) for node in ast.walk(top)):
+                targets = getattr(top, "targets", None) or [top]
+                name = getattr(top, "name", None) or getattr(targets[0], "id", "?")
+                sites.add((os.path.relpath(path, pkg), name))
+    assert sites <= set(TOKENIZATION_SPELLED_ELSEWHERE), sorted(
+        sites - set(TOKENIZATION_SPELLED_ELSEWHERE)
+    )
+
+
 def test_no_hardcoded_checkout_path():
     """Every script, test and the driver contract derives the checkout
     from its own ``__file__``: a string literal naming an absolute

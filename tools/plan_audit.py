@@ -72,6 +72,8 @@ EXPECTATIONS: dict[str, dict] = {
     # 4-stage composition stays one distributed plan: quality is
     # scan-side, each groupBy/window is one exchange
     "x4_corpus_pipeline": {"max_exchanges": 9},
+    # tf groupBy (df rolls up from the same exchange), df, the in-plan
+    # document count's SinglePartition, the doc_id window, output order
     "x4_tfidf_top_terms": {"max_exchanges": 5},
     "x4_sequence_packing": {"max_exchanges": 2},
     "st_stream_stream_attribution": {"max_exchanges": 3, "pushed": True},
@@ -135,8 +137,10 @@ EXPECTATIONS: dict[str, dict] = {
     "x4_bm25_topk": {"max_exchanges": 7, "min_broadcast": 2, "take_ordered": True},
     # vocab broadcasts; pairs are generated per-doc (co-keyed self-join);
     # the document count is one in-plan row (doc_id distinct + single
-    # partition); the <= C(K,2) result rows sort in one partition
-    "x4_pmi_cooccurrence": {"max_exchanges": 7, "min_broadcast": 3},
+    # partition); the <= C(K,2) result rows sort in one partition. The
+    # (doc_id, term) distinct is shuffled once: the explicit doc_id
+    # filter makes the pair sides and df read the same exchange
+    "x4_pmi_cooccurrence": {"max_exchanges": 5, "min_broadcast": 3},
     # final Lloyd assignment: centroid model broadcast, one groupBy per
     # assignment + label rejoin + output order (earlier rounds run in
     # their own jobs behind the driver-side model collect)
